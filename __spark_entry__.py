@@ -1427,42 +1427,16 @@ def _q_corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Queries kept OFF the driver gate (it caps at 50 verdict rows; round 2
-# left 5 queries silently unverdicted).  Everything here still runs
-# against its DuckDB oracle in tests/test_entry_parity.py with the same
-# compare (rows + schema + values) — this is the overflow registry, not a
-# weaker gate.  Two kinds of members:
-# * retired (subsumed by a stronger sibling that stays driver-gated):
-#     doc_minhash            -> doc_minhash_candidates (same signature exprs)
-#     doc_simhash (16-bit)   -> doc_simhash_candidates (64-bit + Hamming)
-#     emb_srp_buckets        -> emb_bucket_pairs (same SRP signature, + pairs)
-#     emb_ivf_cells          -> emb_ivf_cells_trained (seed assign is its CTE)
-#     events_session_windows -> events_sessions (equality pinned in pytest)
-# * rotation benches (round-4 slate rotation, VERDICT r3 #1): long-stable
-#   queries (green in CORRECTNESS r01-r03) parked here so the former
-#   overflow ops (seq_shard_manifest, seq_exact_dedup,
-#   seq_token_contamination, events_value_anomalies) get driver-issued
-#   verdicts.  Every op gets a driver verdict at least once across rounds;
-#   parked queries stay pytest-parity-gated.
+# Queries kept off the driver's 50-row verdict surface: each still runs
+# against its DuckDB twin, with the driver's rows + schema + values compare,
+# in tests/test_entry_parity.py (``retired_queries``).
 _PYTEST_ONLY = frozenset({
-    # wave-5c: built after the cap filled with r5-new ops each awaiting
-    # a FIRST driver verdict — these two enter the pytest-parity registry
-    # directly (same rows+schema+values compare at sf0.01)
     "seq_sft_loss_mask",
     "seq_corpus_datacard",
     "seq_packed_sft",
-    # wave-5b swap: three ops built late in round 5 (seq_gram_novelty,
-    # seq_packed_segments, doc_gopher_rules) take driver slots; three
-    # queries driver-green in 3-4 consecutive rounds park in exchange,
-    # each leaving an active relative on the gate (seq_exact_dedup for
-    # the exact-dedup family, corpus_training_batches/seq_packed_segments
-    # for packing, doc_clean_lines/doc_strip_boilerplate for curation)
     "doc_exact_dedup",
     "seq_packing_offsets",
     "doc_passage_dedup",
-    # r5 rotation (VERDICT r4 #1): the six r4-new ops + the flagship
-    # composition take driver slots; seven long-stable queries (green in
-    # CORRECTNESS r01-r04) park here under the same pytest-parity gate
     "doc_ngram_jaccard",
     "emb_ivf_cells_trained",
     "events_range_join",
@@ -1470,11 +1444,6 @@ _PYTEST_ONLY = frozenset({
     "events_windowed_deltas",
     "doc_profile",
     "doc_length_quantiles",
-    # final r5 rotation (this is the LAST round — no r6 slate exists):
-    # every r5-new op moves ONTO the driver gate so each earns a
-    # driver-issued verdict in CORRECTNESS_r05; twenty-five long-stable
-    # queries (green in CORRECTNESS r01-r04) park here in exchange,
-    # still pytest-parity-gated at sf0.01 with the driver's compare
     "doc_simhash_candidates",
     "vocab_topk",
     "bpe_top_merges",
@@ -1500,21 +1469,12 @@ _PYTEST_ONLY = frozenset({
     "doc_stratified_sample",
     "doc_quality_topk",
     "doc_token_budget_mix",
-    # three more long-stable rows park to make room for the wave-4 ops
-    # (seq_span_corruption, doc_dsir_weights, seq_source_js)
     "emb_ivf_topk",
     "doc_contamination",
     "text_quality",
-    # and three for the wave-5 ops (seq_denoiser_mix,
-    # doc_tokenizer_fertility, doc_dsir_sample): the text-side LSH rows
-    # park because the token-level twins (seq_minhash_candidates,
-    # seq_dedup_groups) share the same dedup engine and stay active
     "sanitize_event_types",
     "doc_minhash_candidates",
     "doc_dedup_groups",
-    # second r4 rotation: the three r4-new token ops take driver slots;
-    # the TPC-H join shapes (green r01-r03, plans pinned in PLANS.md)
-    # park here under the same pytest-parity gate
     "orders_shipping_priority",
     "local_supplier_volume",
     "lineitem_pricing_summary",

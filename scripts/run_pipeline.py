@@ -39,7 +39,6 @@ def main() -> None:
 
     spark = get_spark("ulp_spark-pipeline", master=args.master)
     spark.sparkContext.setLogLevel("ERROR")
-    counters = lineage.Counters(spark, ["routes_written"])
 
     t0 = time.perf_counter()
     p = pipeline.build(spark, n=args.n, checkpoint="local")
@@ -56,7 +55,6 @@ def main() -> None:
     todo_before = sum(not e["committed"] for e in m["routes"].values())
     m = manifest.resume_fanout(
         p.routed.select("doc_id", "route", "parser", "parse_error"), m, args.base)
-    counters.bump("routes_written", todo_before)
 
     lin = lineage.partition_lineage(
         p.routed, ["doc_id", "route"]).orderBy("partition_id").collect()
@@ -67,7 +65,6 @@ def main() -> None:
         "routes_written_this_run": todo_before,
         "rows_per_route": {r: e["n_rows"] for r, e in sorted(m["routes"].items())},
         "lineage_partitions": len(lin),
-        "counters": counters.snapshot(),
         "wall_sec": round(time.perf_counter() - t0, 2),
     }))
     spark.stop()

@@ -117,39 +117,16 @@ def test_route_runtime_string_types(spark):
     assert got == [e for _, e in cases]
 
 
-def test_parse_methods_identical(spark):
-    """The one-regex-execution 'replace' path must produce byte-identical
-    rows to the classic regexp_extract path, including empty groups
-    (src=), no-match quarantine nulls, and sniff codes."""
-    from ulp_spark import fixtures
-    from ulp_spark.operators import parse as parse_op
-
-    lines = fixtures.raw_lines(spark, 500)
-    a = parse_op.parse_lines(lines, method="replace")
-    b = parse_op.parse_lines(lines, method="extract")
-    assert a.columns == b.columns
-    ra = sorted(tuple(r) for r in a.collect())
-    rb = sorted(tuple(r) for r in b.collect())
-    assert ra == rb
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        parse_op.parse_lines(lines, method="nope")
-
-
 def test_parse_replace_guard_group_containing_separator(spark):
-    """ADVICE r3: \\S-class groups CAN capture a literal 0x01; the replace
-    path must detect the shifted split and fall back to regexp_extract,
-    never silently corrupting subsequent fields."""
+    """\\S-class groups CAN capture a literal 0x01; parse_lines must
+    detect the shifted split and fall back to regexp_extract, never
+    silently corrupting subsequent fields."""
     from ulp_spark.operators import parse as parse_op
 
     poisoned = f"2024-01-01T00:00:00Z INFO doc=a{parse_op.GROUP_SEP}b src=x n=5"
     clean = "2024-01-01T00:00:00Z WARN doc=plain src=y n=7"
     df = spark.createDataFrame([(poisoned,), (clean,)], "line string")
-    a = parse_op.parse_lines(df, method="replace")
-    b = parse_op.parse_lines(df, method="extract")
-    ra = sorted(tuple(r) for r in a.collect())
-    rb = sorted(tuple(r) for r in b.collect())
-    assert ra == rb
+    a = parse_op.parse_lines(df)
     row = {r["line"]: r for r in a.collect()}[poisoned]
     assert row["parser"] == "kv_plain"
     assert row["doc"] == f"a{parse_op.GROUP_SEP}b"   # intact, not shifted

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ulp_spark import fixtures
 from ulp_spark.functions import sniff
 from ulp_spark.operators import lattice, parse, route_cast
 from ulp_spark.plans import pipeline
@@ -85,17 +84,6 @@ def test_schema_ddl(spark):
     assert [f.name for f in spark.table("_ddl_check").schema.fields] == \
         ["n", "provider", "ts"]
     spark.sql("DROP TABLE _ddl_check")
-
-
-def test_parse_lines_pandas_equivalence(spark):
-    lines = fixtures.raw_lines(spark, 300)
-    a = parse.parse_lines(lines).select(
-        "doc_id", "parser", "parse_error", "ts", "level", "provider", "doc",
-        "src", "n").orderBy("doc_id").collect()
-    b = parse.parse_lines_pandas(lines).select(
-        "doc_id", "parser", "parse_error", "ts", "level", "provider", "doc",
-        "src", "n").orderBy("doc_id").collect()
-    assert a == b
 
 
 def test_cast_single_pass_missing_field_error_is_false_not_null(spark):
@@ -210,11 +198,3 @@ def test_cast_per_route_reads_seam_not_derivation(spark):
     # the fixture generator (spark.range) never re-inlines below the seam
     assert "Range (" not in plan
 
-    lazy = route_cast.cast_per_route(
-        ok, schemas, fields, keep=["doc_id"], materialize=False)
-    # analyzed (pre-optimizer) plan: running the optimizer over the
-    # unmaterialized per-route tree is itself the 100 s+ pathology this
-    # test pins, so the opt-out branch must not pay it here
-    lazy_plan = next(iter(lazy.values()))._jdf.queryExecution() \
-        .analyzed().toString()
-    assert "Range (" in lazy_plan  # opt-out keeps the lazy derivation

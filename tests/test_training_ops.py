@@ -883,33 +883,79 @@ def test_profile_table_approx_within_tolerance_and_no_expand(spark):
     assert "Expand" not in plan_appr
 
 def test_seam_upgrades_to_reliable_checkpoint(spark, tmp_path):
-    """ADVICE r3: localCheckpoint blocks die with their executor, so every
-    seam must flip to a reliable checkpoint when the session has a
-    checkpoint dir — one sc.setCheckpointDir call upgrades the whole repo."""
+    """localCheckpoint blocks die with their executor, so every seam must
+    flip to a reliable checkpoint when the session has a checkpoint dir —
+    one sc.setCheckpointDir call upgrades the whole repo, the pipeline's
+    S5 seam, the resumable fan-out and the connected-components rounds
+    included."""
+    import glob
+
+    from ulp_spark.plans import manifest, pipeline
     from ulp_spark.session import seam
 
     df = spark.range(100).withColumn("v", F.col("id") * 2)
     local = seam(df)  # no checkpoint dir in the test session
     assert local.count() == 100
+    with pytest.raises(ValueError):  # no parquet-path form beside the seam
+        pipeline.build(spark, n=10, checkpoint=str(tmp_path / "parquet"))
+
+    def rdd_dirs(name):
+        # reliable checkpoint = rdd-* block dirs under the checkpoint dir
+        return glob.glob(str(tmp_path / name / "*" / "rdd-*"))
 
     sc = spark.sparkContext
     assert sc.getCheckpointDir() is None
     try:
-        sc.setCheckpointDir(str(tmp_path / "ckpt"))
+        sc.setCheckpointDir(str(tmp_path / "seam"))
         reliable = seam(df, eager=True)
         assert reliable.count() == 100
-        # reliable checkpoint = rdd-* block dirs under the checkpoint dir
-        import glob as _glob
-        assert _glob.glob(str(tmp_path / "ckpt" / "*" / "rdd-*"))
+        assert rdd_dirs("seam")
+
+        sc.setCheckpointDir(str(tmp_path / "build"))
+        p = pipeline.build(spark, n=200, checkpoint="local")
+        assert rdd_dirs("build")
+
+        sc.setCheckpointDir(str(tmp_path / "fanout"))
+        routes = {r.route: {} for r in p.route_counts.collect()}
+        m = manifest.new_manifest("run", 200, routes)
+        m = manifest.resume_fanout(p.routed.select("doc_id", "route"), m,
+                                   str(tmp_path / "runs"))
+        assert sum(e["n_rows"] for e in m["routes"].values()) == 200
+        assert rdd_dirs("fanout")
+
+        sc.setCheckpointDir(str(tmp_path / "cc"))
+        pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)],
+                                      "id_a long, id_b long")
+        got = sorted(tuple(r) for r in
+                     dedup.connected_components(pairs).collect())
+        assert got == [(1, 1), (2, 1), (3, 1), (5, 5), (6, 5)]
+        assert rdd_dirs("cc")
     finally:
         none = getattr(getattr(sc._jvm.scala, "None$"), "MODULE$")
         getattr(sc._jsc.sc(), "checkpointDir_$eq")(none)
         assert sc.getCheckpointDir() is None  # later tests stay on local seams
 
+
+def test_seam_is_the_only_checkpoint_call():
+    """session.seam is the one materialization primitive: no other module
+    in the package checkpoints a frame itself."""
+    import pathlib
+    import re
+
+    import ulp_spark
+
+    root = pathlib.Path(ulp_spark.__file__).parent
+    offenders = [
+        str(p.relative_to(root)) for p in sorted(root.rglob("*.py"))
+        if p != root / "session.py"
+        and re.search(r"localCheckpoint\(|\.checkpoint\(", p.read_text())
+    ]
+    assert offenders == []
+
+
 def test_value_anomalies_single_scan_when_materialized(spark, tmp_path):
-    """VERDICT r3 #5: the stats pass and the probe pass must share one
-    scan of the events — the seamed projection replaces both FileScans;
-    materialize=False keeps the lazy two-scan form."""
+    """The stats pass and the probe pass must share one scan of the
+    events — the seamed projection replaces both FileScans."""
     from ulp_spark.operators import anomaly
 
     src = str(tmp_path / "ev")
@@ -921,14 +967,6 @@ def test_value_anomalies_single_scan_when_materialized(spark, tmp_path):
     plan = fused._jdf.queryExecution().executedPlan().toString()
     assert "Scan parquet" not in plan and "FileScan" not in plan
     assert "ExistingRDD" in plan
-
-    lazy = anomaly.value_anomalies(ev, materialize=False)
-    lazy_plan = lazy._jdf.queryExecution().executedPlan().toString()
-    assert lazy_plan.count("FileScan") == 2  # ("FileScan parquet" lines)
-
-    # identical answers either way
-    key = lambda r: (r.event_id, r.w_day)
-    assert sorted(map(key, fused.collect())) == sorted(map(key, lazy.collect()))
 
 def test_ivf_tuned_recall_meets_target_on_clusterable_fixture(spark):
     """VERDICT r3 #4: recall@10 >= 0.85 at frac_scanned <= 0.35.  The sf

@@ -283,41 +283,3 @@ def cast_to_int_sql(value: str, rcode: str) -> str:
       WHEN ({rcode}) = {FLOAT} THEN CAST(round(try_cast({value} AS DOUBLE)) AS BIGINT)
     END
     """
-
-
-def cast_to_float_sql(value: str, rcode: str) -> str:
-    iv = sniff.int_value_sql(value)
-    return f"""
-    CASE
-      WHEN ({rcode}) = {NULL} THEN 0.0
-      WHEN ({rcode}) = {BOOL} THEN
-        CASE WHEN lower(trim({value})) = 'true' OR ({iv}) = 1 THEN 1.0 ELSE 0.0 END
-      WHEN ({rcode}) = {INT} THEN
-        CASE WHEN ({iv}) > {I32_MAX} THEN {float(I32_MAX)}
-             WHEN ({iv}) < {I32_MIN} THEN {float(I32_MIN)}
-             ELSE CAST(({iv}) AS DOUBLE) END
-      WHEN ({rcode}) IN ({FLOAT}, {STR}) THEN
-        CASE WHEN regexp_matches({value}, '{RE_FLOAT}')
-                  AND isfinite(try_cast({value} AS DOUBLE))
-             THEN try_cast({value} AS DOUBLE) END
-    END
-    """
-
-
-def cast_to_str_sql(value: str, rcode: str) -> str:
-    # FLOAT runtime renders the PARSED double, not the raw text, matching
-    # the engine (fv.cast("string")): "2.50" -> '2.5'.  Exponent-form
-    # rendering of large magnitudes still differs between engines (Spark
-    # '1.0E20' vs DuckDB '1e+20') — pinned; parity fixtures use values
-    # below the exponent-rendering threshold.
-    iv = sniff.int_value_sql(value)
-    return f"""
-    CASE
-      WHEN ({rcode}) = {NULL} THEN 'null'
-      WHEN ({rcode}) = {BOOL} THEN
-        CASE WHEN lower(trim({value})) = 'true' OR ({iv}) = 1 THEN 'true' ELSE 'false' END
-      WHEN ({rcode}) = {INT} THEN CAST(({iv}) AS VARCHAR)
-      WHEN ({rcode}) = {FLOAT} THEN CAST(try_cast({value} AS DOUBLE) AS VARCHAR)
-      ELSE {value}
-    END
-    """

@@ -214,13 +214,6 @@ def sniff_mask(col: Column) -> Column:
     )
 
 
-def sniff_name(col: Column) -> Column:
-    """Human-readable type name for a string column."""
-    return F.element_at(
-        F.array(*[F.lit(n) for n in TYPE_NAMES]), sniff_code(col) + 1
-    )
-
-
 # --------------------------------------------------------------------------
 # Mask resolution — the canonical (commutative) merge lattice
 # --------------------------------------------------------------------------

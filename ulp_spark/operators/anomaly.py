@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ulp_spark.session import seam
+
 ROUND = 6
 Z_THRESHOLD = 3.0
 
@@ -52,25 +54,17 @@ def value_anomalies(
     df: DataFrame, ts_col: str = "ts", key_col: str = "event_type",
     val_col: str = "value", id_col: str = "event_id",
     window: str = "1 day", z: float = Z_THRESHOLD,
-    materialize: bool = True,
 ) -> DataFrame:
     """Rows whose value deviates more than ``z`` population stddevs from
     their (key, window) mean.  Returns (id, key, w_start, value, zscore)
     for anomalous rows only; constant windows (std = 0) flag nothing.
 
-    ``materialize`` seams the projected event frame so the stats pass and
-    the probe pass share ONE scan (session.seam: reliable checkpoint when
-    a checkpoint dir is set, localCheckpoint otherwise); ``False`` keeps
-    the two-scan lazy form for callers whose upstream is already
-    materialized (e.g. the pipeline's checkpointed parse output)."""
-    from ulp_spark.session import seam
-
-    evw = df.select(
+    The projected event frame is seamed (lazily, session.seam) so the
+    stats pass and the probe pass share ONE scan."""
+    evw = seam(df.select(
         F.col(id_col), F.col(key_col), F.col(val_col).cast("double").alias("v"),
         F.window(F.col(ts_col), window)["start"].alias("w_start"),
-    )
-    if materialize:
-        evw = seam(evw)
+    ))
     stats = (
         evw.groupBy(key_col, "w_start")
         .agg(

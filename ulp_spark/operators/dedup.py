@@ -465,10 +465,10 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     recursive-CTE transitive closure.  Works for STRING ids.
 
     Per-round edge frames are PINNED — persist + count (materializes
-    the cache, fixing its stats to REAL bytes) then ``localCheckpoint``
-    ON THE CACHED FRAME (truncates lineage, inheriting the real size),
-    then the cache is dropped.  Both halves are load-bearing:
-    ``localCheckpoint`` alone PROPAGATES the plan's ESTIMATED
+    the cache, fixing its stats to REAL bytes) then an eager
+    ``session.seam`` ON THE CACHED FRAME (truncates lineage, inheriting
+    the real size), then the cache is dropped.  Both halves are
+    load-bearing: a checkpoint alone PROPAGATES the plan's ESTIMATED
     sizeInBytes into its LogicalRDD, and the frame enters the next
     round's plan several times, so the BigInt estimate re-multiplies
     every round until Catalyst's SizeInBytesOnlyStatsPlanVisitor is
@@ -492,7 +492,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
         two fewer driver round-trips per round (VERDICT r5 #4)."""
         c = df.persist()
         n = c.count()
-        out = c.localCheckpoint(eager=True)
+        out = seam(c, eager=True)
         c.unpersist()
         return out, n
 

@@ -11,7 +11,6 @@ at 10^12 rows — the dimensions are KiB-sized.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 
@@ -29,11 +28,3 @@ def enrich(
     """
     return fact.join(broadcast(dim), on=on, how=how)
 
-
-def with_match_flag(
-    fact: DataFrame, dim: DataFrame, on: str, flag: str = "enrich_miss"
-) -> DataFrame:
-    """Enrich + a boolean column marking keys absent from the dimension."""
-    probe = dim.select(F.col(on), F.lit(True).alias("__hit"))
-    out = fact.join(broadcast(probe), on=on, how="left")
-    return out.withColumn(flag, F.col("__hit").isNull()).drop("__hit")

@@ -43,12 +43,6 @@ def field_masks(df: DataFrame, fields: list[str]) -> list:
     return aggs
 
 
-def global_schema(df: DataFrame, fields: list[str]) -> dict[str, int]:
-    """A1: merged type code per field over the whole frame (driver dict)."""
-    row = df.agg(*field_masks(df, fields)).collect()[0]
-    return {f: sniff.resolve_mask_py(row[f]) for f in fields}
-
-
 def route_schemas(df: DataFrame, fields: list[str], route_col: str = "route"
                   ) -> dict[str, dict[str, int]]:
     """A2: per-route merged schema (reference ``src/type_map.rs:162-172``).

@@ -1,4 +1,4 @@
-"""A3/A4/P10 — per-partition lineage records and live counters.
+"""A3/P10 — per-partition lineage records and content digests.
 
 Reference: per input file it records uuid, path, byte size, SHA256 and the
 parser used (``src/type_map.rs:111-155``), appended under the global mutex;
@@ -10,8 +10,7 @@ record row count, byte volume and an ORDER-INSENSITIVE content digest
 (sum of per-row xxhash64 in a big modulus).  Order insensitivity matters:
 partition contents are deterministic under a fixed partitioner, but row
 order within a scan is not guaranteed, and the digest must not depend on
-it.  Live counters use Spark accumulators (A4) — visible mid-job like the
-reference's worker status map (``src/workerpool.rs:391-397``).
+it.
 """
 
 from __future__ import annotations
@@ -60,16 +59,3 @@ def content_digest(df: DataFrame, cols: list[str] | None = None) -> int:
     ).collect()[0]
     return int(row.d) if row.d is not None else 0
 
-
-class Counters:
-    """A4 — named accumulators for live pipeline metrics."""
-
-    def __init__(self, spark, names: list[str]):
-        sc = spark.sparkContext
-        self.acc = {n: sc.accumulator(0) for n in names}
-
-    def bump(self, name: str, v: int = 1) -> None:
-        self.acc[name].add(v)
-
-    def snapshot(self) -> dict[str, int]:
-        return {n: a.value for n, a in self.acc.items()}

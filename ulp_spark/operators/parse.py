@@ -7,14 +7,13 @@ detection by magic bytes (``src/lib.rs:58-72``).  Here the unit is a line
 
 * detection = first matching pattern in a fixed-order registry (``rlike``
   cascade — the analog of the magic-byte sniff);
-* extraction = ``regexp_extract`` per field, JVM-side and codegen'd.
+* extraction = one ``regexp_replace`` + split per row (per-field
+  ``regexp_extract`` only as a fallback), JVM-side and codegen'd.
 
 Why not a pandas UDF: one compiled Java regex per (pattern, field) runs
 inside whole-stage codegen with zero Python/Arrow transfer; profiling at
 sf0.1 showed the built-in path beats an Arrow-batched ``re`` UDF for these
-group counts.  ``parse_lines_pandas`` below keeps the UDF variant for
-pattern sets too large for expression cascades (hundreds of grok rules),
-where one Python pass with a combined regex wins.
+group counts.
 
 No-match rows are NOT dropped: ``parser`` stays null and ``parse_error``
 is set — the quarantine path (the reference panics on unknown formats,
@@ -25,9 +24,8 @@ deviation).
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator, Sequence
+from typing import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -74,7 +72,6 @@ def parse_lines(
     df: DataFrame,
     line_col: str = "line",
     patterns: Sequence[LogPattern] = DEFAULT_PATTERNS,
-    method: str = "replace",
 ) -> DataFrame:
     """Parse a string column into typed fields + parser tag + error flag.
 
@@ -82,27 +79,21 @@ def parse_lines(
     code ``f__t`` and runtime code ``f__r`` (see functions.sniff docstrings).
     Missing field / no match -> NULL (never "").
 
-    ``method`` picks the group-extraction strategy (identical outputs,
-    pinned by test_parse_methods_identical):
-
-    * ``"replace"`` (default): ONE regex execution per row for the
-      matching pattern — ``regexp_replace`` rewrites the line to its
-      groups joined by ``GROUP_SEP`` (0x01), then a literal split +
-      ``element_at`` per field.  k fields cost one match + one split
-      instead of k full matches.  Guarded (ADVICE r3): ``\\S``-class and
-      ``[^"]*`` groups CAN capture a literal 0x01, which would shift the
-      split — so each row checks ``size(split) == len(fields)`` and
-      falls back to per-field ``regexp_extract`` on mismatch (CASE
-      branches evaluate lazily, so clean rows — the overwhelming
-      majority — still pay one match + one split; a poisoned row pays
-      the old k-match price but parses CORRECTLY instead of silently
-      shifting every subsequent field).  Any 0x01 inside a group always
-      inflates the split count (k groups joined by k-1 separators yield
-      exactly k parts only when no group contains the separator), so the
-      guard cannot miss.
-    * ``"extract"``: classic ``regexp_extract`` per field (k full regex
-      executions per row); no separator caveat, kept as the fallback and
-      as the shape mirrored by the DuckDB twin ``parse_sql``.
+    Group extraction runs ONE regex execution per row for the matching
+    pattern — ``regexp_replace`` rewrites the line to its groups joined by
+    ``GROUP_SEP`` (0x01), then a literal split + ``element_at`` per field.
+    k fields cost one match + one split instead of k full matches.
+    Guarded: ``\\S``-class and ``[^"]*`` groups CAN capture a literal
+    0x01, which would shift the split — so each row checks
+    ``size(split) == len(fields)`` and falls back to per-field
+    ``regexp_extract`` on mismatch (CASE branches evaluate lazily, so
+    clean rows — the overwhelming majority — still pay one match + one
+    split; a poisoned row pays the k-match price but parses CORRECTLY
+    instead of silently shifting every subsequent field).  Any 0x01
+    inside a group always inflates the split count (k groups joined by
+    k-1 separators yield exactly k parts only when no group contains the
+    separator), so the guard cannot miss.  The DuckDB twin
+    :func:`parse_sql` mirrors the per-field ``regexp_extract`` shape.
     """
     line = F.col(line_col)
     parser = F.lit(None).cast("string")
@@ -114,56 +105,38 @@ def parse_lines(
     # in fields instead of re-inlining the detection cascade per field.
     fields = all_fields(patterns)
     stage1 = df.select("*", parser.alias("parser"))
-    if method == "replace":
-        garr = []
-        for p in patterns:
-            repl = GROUP_SEP.join(f"${i + 1}" for i in range(len(p.fields)))
-            garr.append(
-                F.when(
-                    F.col("parser") == p.name,
-                    F.split(F.regexp_replace(line, p.regex, repl), GROUP_SEP),
-                ).alias(f"__g_{p.name}")
-            )
-        stage1 = stage1.select("*", *garr)
-        value_cols = []
-        for f in fields:
-            value = F.lit(None).cast("string")
-            for p in reversed(patterns):
-                if f in p.fields:
-                    idx = p.fields.index(f) + 1
-                    clean = F.size(F.col(f"__g_{p.name}")) == len(p.fields)
-                    value = (
-                        F.when(
-                            (F.col("parser") == p.name) & clean,
-                            F.element_at(F.col(f"__g_{p.name}"), idx),
-                        )
-                        .when(  # group contained GROUP_SEP: slow-but-correct
-                            F.col("parser") == p.name,
-                            F.regexp_extract(line, p.regex, idx),
-                        )
-                        .otherwise(value)
+    garr = []
+    for p in patterns:
+        repl = GROUP_SEP.join(f"${i + 1}" for i in range(len(p.fields)))
+        garr.append(
+            F.when(
+                F.col("parser") == p.name,
+                F.split(F.regexp_replace(line, p.regex, repl), GROUP_SEP),
+            ).alias(f"__g_{p.name}")
+        )
+    stage1 = stage1.select("*", *garr)
+    value_cols = []
+    for f in fields:
+        value = F.lit(None).cast("string")
+        for p in reversed(patterns):
+            if f in p.fields:
+                idx = p.fields.index(f) + 1
+                clean = F.size(F.col(f"__g_{p.name}")) == len(p.fields)
+                value = (
+                    F.when(
+                        (F.col("parser") == p.name) & clean,
+                        F.element_at(F.col(f"__g_{p.name}"), idx),
                     )
-            value_cols.append(value.alias(f))
-        stage2 = stage1.select(
-            "*", F.col("parser").isNull().alias("parse_error"), *value_cols
-        ).drop(*[f"__g_{p.name}" for p in patterns])
-    elif method == "extract":
-        value_cols = []
-        for f in fields:
-            value = F.lit(None).cast("string")
-            for p in reversed(patterns):
-                if f in p.fields:
-                    idx = p.fields.index(f) + 1
-                    value = F.when(
+                    .when(  # group contained GROUP_SEP: slow-but-correct
                         F.col("parser") == p.name,
                         F.regexp_extract(line, p.regex, idx),
-                    ).otherwise(value)
-            value_cols.append(value.alias(f))
-        stage2 = stage1.select(
-            "*", F.col("parser").isNull().alias("parse_error"), *value_cols
-        )
-    else:
-        raise ValueError(f"method must be 'replace' or 'extract', got {method!r}")
+                    )
+                    .otherwise(value)
+                )
+        value_cols.append(value.alias(f))
+    stage2 = stage1.select(
+        "*", F.col("parser").isNull().alias("parse_error"), *value_cols
+    ).drop(*[f"__g_{p.name}" for p in patterns])
     stage3 = stage2.select(
         "*", *[sniff.sniff_code(F.col(f)).alias(f"{f}__t") for f in fields]
     )
@@ -175,50 +148,6 @@ def parse_lines(
             for f in fields
         ],
     )
-
-
-def parse_lines_pandas(
-    df: DataFrame,
-    line_col: str = "line",
-    patterns: Sequence[LogPattern] = DEFAULT_PATTERNS,
-) -> DataFrame:
-    """Arrow-batched UDF variant for very large pattern registries.
-
-    One ``mapInPandas`` pass; each batch applies pre-compiled Python regexes
-    via ``Series.str.extract`` (vectorized in pandas).  Output schema matches
-    :func:`parse_lines` minus the sniff columns (add them after with
-    ``withColumns`` — they're plain expressions).
-    """
-    import re
-
-    fields = all_fields(patterns)
-    compiled = [(p.name, re.compile(p.regex), p.fields) for p in patterns]
-    out_schema = df.schema.simpleString()[7:-1] + \
-        ", parser string, parse_error boolean, " + \
-        ", ".join(f"{f} string" for f in fields)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            lines = pdf[line_col]
-            parser = pd.Series([None] * len(pdf), dtype=object)
-            cols = {f: pd.Series([None] * len(pdf), dtype=object) for f in fields}
-            todo = pd.Series(True, index=pdf.index)
-            for name, rx, pfields in compiled:
-                ext = lines[todo].str.extract(rx)
-                hit = ext.notna().all(axis=1)
-                hit_idx = ext.index[hit]
-                parser.loc[hit_idx] = name
-                for i, f in enumerate(pfields):
-                    cols[f].loc[hit_idx] = ext.loc[hit_idx, i]
-                todo.loc[hit_idx] = False
-            res = pdf.copy()
-            res["parser"] = parser
-            res["parse_error"] = parser.isna()
-            for f in fields:
-                res[f] = cols[f]
-            yield res
-
-    return df.mapInPandas(run, out_schema)
 
 
 def parse_ndjson(df: DataFrame, line_col: str = "line") -> DataFrame:

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ulp_spark.functions import casts, sniff
+from ulp_spark.session import seam
 
 
 def _repr_str(value: Column, rcode: Column, target: int, helpers) -> tuple[Column, Column]:
@@ -149,26 +150,21 @@ def cast_per_route(
     fields: list[str],
     route_col: str = "route",
     keep: list[str] | None = None,
-    materialize: bool = True,
 ) -> dict[str, DataFrame]:
     """Sorted {route: typed DataFrame} — each with its own native schema.
 
-    ``materialize`` (default on) puts a :func:`ulp_spark.session.seam`
-    between the input and the per-route loop — REQUIRED for an
-    unmaterialized parse derivation.  This is the same fan-out shape as
+    The input is read through a :func:`ulp_spark.session.seam` (lazy: the
+    first route's action writes it) — REQUIRED for an unmaterialized parse
+    derivation.  This is the same fan-out shape as
     ``manifest.resume_fanout``: each route's ``filter(route == r)`` is
     pushed through every projection below it, substituting the full
     derivation into the filter, and the resulting whole-stage-codegen
-    class blows Janino's 64 KB method limit (observed again in round 4
-    after the guarded replace-parse widened the tree: ONE route's collect
-    took 490 s with ``CodeGenerator: Failed to compile`` fallbacks; with
-    the seam the whole map collects in seconds).  Callers whose input is
-    already materialized (cache/checkpoint/table read) can pass False.
+    class blows Janino's 64 KB method limit (measured after the guarded
+    replace-parse widened the tree: ONE route's collect took 490 s with
+    ``CodeGenerator: Failed to compile`` fallbacks; with the seam the
+    whole map collects in seconds).
     """
-    if materialize:
-        from ulp_spark.session import seam
-
-        df = seam(df)
+    df = seam(df)
     out: dict[str, DataFrame] = {}
     for r in sorted(route_schemas):
         schema = route_schemas[r]

@@ -73,14 +73,6 @@ def brute_force_topk(
     return scored.orderBy(F.desc("cos_sim"), F.col(id_col)).limit(k)
 
 
-def dot_sql(a: str, b: str) -> str:
-    return f"list_dot_product({a}, {b})"
-
-
-def cosine_sql(a: str, b: str) -> str:
-    return f"list_cosine_similarity({a}, {b})"
-
-
 # --------------------------------------------------------------------------
 # SRP-LSH
 # --------------------------------------------------------------------------
@@ -338,17 +330,6 @@ def ivf_assign(vec: Column, centroids: list[list[float]],
             F.when(nv * s["n"] > 0, dot(vec, s["v"]) / (nv * s["n"]))
             .otherwise(F.lit(0.0)), 6))
     return (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
-
-
-def ivf_assign_sql(vec: str, centroids: list[list[float]]) -> str:
-    """DuckDB twin of :func:`ivf_assign` (same sequential fold)."""
-    best_cell, best_sim = "0", "-2.0"
-    for i, c in enumerate(centroids):
-        cc = "[" + ", ".join(str(float(x)) for x in c) + "]"
-        sim = f"round(list_cosine_similarity({vec}, {cc}), 6)"
-        best_cell = f"CASE WHEN {sim} > ({best_sim}) THEN {i} ELSE {best_cell} END"
-        best_sim = f"greatest({sim}, {best_sim})"
-    return best_cell
 
 
 def ivf_topk(

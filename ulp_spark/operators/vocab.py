@@ -128,16 +128,6 @@ def bigram_counts(df: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-def bigram_counts_sql(table: str, text_col: str) -> str:
-    from ulp_spark.operators.curation import word_grams_sql
-    toks = word_tokens_sql(text_col)
-    return f"""
-    SELECT gram, count(*)::BIGINT AS n
-    FROM (SELECT unnest({word_grams_sql(toks, 2)}) AS gram FROM {table})
-    GROUP BY gram
-    """
-
-
 def bigram_coverage(
     df: DataFrame, text_col: str, id_col: str, min_count: int = 3,
 ) -> DataFrame:

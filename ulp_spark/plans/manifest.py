@@ -27,6 +27,8 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ulp_spark.session import seam
+
 
 def manifest_path(base: str, run_id: str) -> str:
     return os.path.join(base, run_id, "manifest.json")
@@ -145,7 +147,6 @@ def resume_fanout(
     manifest: dict[str, Any],
     base: str,
     route_col: str = "route",
-    materialize: bool = True,
 ) -> dict[str, Any]:
     """Write every uncommitted route's partition; returns updated manifest.
 
@@ -165,20 +166,17 @@ def resume_fanout(
                if not manifest["routes"][r]["committed"]]
     if not pending:
         return manifest
-    if materialize:
-        # S5 seam, REQUIRED for an unmaterialized `routed`: each route's
-        # `filter(route == r)` would otherwise push the predicate down
-        # THROUGH the route derivation, re-inlining the entire
-        # parse/sniff/template tree into the filter condition — measured
-        # in round 3: whole-stage codegen grew past Janino's 64 KB method
-        # limit (1700+ references), and every route write spent ~100 s
-        # attempting and failing compilation before falling back to
-        # interpreted mode.  Freezing the lineage once makes each write a
-        # scan + tiny filter — and is the reference's own architecture
-        # (the ingest phase reads the materialized NDJSON, never
-        # re-parses; src/elastic.rs:83).  Callers that already
-        # materialized (cache/checkpoint/table read) can pass False.
-        routed = routed.localCheckpoint()
+    # S5 seam, REQUIRED for an unmaterialized `routed`: each route's
+    # `filter(route == r)` would otherwise push the predicate down THROUGH
+    # the route derivation, re-inlining the entire parse/sniff/template
+    # tree into the filter condition — measured: whole-stage codegen grew
+    # past Janino's 64 KB method limit (1700+ references), and every route
+    # write spent ~100 s attempting and failing compilation before falling
+    # back to interpreted mode.  Freezing the lineage once makes each write
+    # a scan + tiny filter — and is the reference's own architecture (the
+    # ingest phase reads the materialized NDJSON, never re-parses;
+    # src/elastic.rs:83).
+    routed = seam(routed, eager=True)
     counts = {
         r[route_col]: r["n_rows"]
         for r in routed.filter(F.col(route_col).isin(pending))

@@ -26,8 +26,9 @@ from pyspark.sql import functions as F
 
 from ulp_spark import fixtures
 from ulp_spark.functions import routes as routes_fn
-from ulp_spark.functions import sanitize
-from ulp_spark.operators import enrich, fanout, lattice, parse, route_cast
+from ulp_spark.functions import sanitize, sniff
+from ulp_spark.operators import enrich, fanout, parse
+from ulp_spark.session import seam
 
 QUARANTINE = "quarantine"
 ROUTE_TEMPLATES = {
@@ -73,17 +74,21 @@ def build(
     lines_df: DataFrame | None = None,
     checkpoint: str | None = None,
 ) -> Pipeline:
-    """``checkpoint``: None | "local" | a directory path.
+    """``checkpoint``: None | "local".
 
     The reference materializes parse output as NDJSON between its two phases
     (S5, ``src/evtx.rs:52-53`` -> ``src/elastic.rs:83``) — that seam is both
     its resume point and its plan boundary.  We keep it optional: "local"
-    truncates lineage in memory (bench/interactive), a path writes the
-    parsed+routed table as parquet and reads it back (resumable, exactly the
-    reference's architecture); None composes one lazy plan (fine for small
-    fixtures; at many-action or huge-plan scale the seam also bounds
-    codegen/optimizer cost).
+    materializes the parsed+routed table eagerly through
+    :func:`ulp_spark.session.seam` (in executor storage, or as reliable
+    checkpoint files once the session has a checkpoint dir — the durable,
+    resumable form of the reference's architecture); None composes one
+    lazy plan (fine for small fixtures; at many-action or huge-plan scale
+    the seam also bounds codegen/optimizer cost).
     """
+    if checkpoint not in (None, "local"):
+        raise ValueError(
+            f"checkpoint must be None or 'local', got {checkpoint!r}")
     seq = sequences_df if sequences_df is not None else fixtures.sequences(
         spark, n, partitions)
     lines = lines_df if lines_df is not None else fixtures.raw_lines(
@@ -102,17 +107,10 @@ def build(
         routed = routed.withColumn(
             "line", F.when(F.col("parse_error"), F.col("line"))
         ).drop(*[f"{f}__r" for f in fields])
-        if checkpoint == "local":
-            routed = routed.localCheckpoint()
-        else:
-            routed.write.mode("overwrite").parquet(checkpoint)
-            routed = spark.read.parquet(checkpoint)
-        from ulp_spark.functions import sniff as sniff_fn
-
-        routed = routed.select(
+        routed = seam(routed, eager=True).select(
             "*",
             *[
-                sniff_fn.materialized_runtime_code(F.col(f), F.col(f"{f}__t"))
+                sniff.materialized_runtime_code(F.col(f), F.col(f"{f}__t"))
                 .alias(f"{f}__r")
                 for f in fields
             ],
@@ -152,25 +150,12 @@ def build(
     )
 
 
-def infer_and_cast(p: Pipeline) -> tuple[dict[str, dict[str, int]], DataFrame]:
-    """Phase 2: per-route schema inference (A2) + single-pass cast (P7).
-
-    Returns (route_schemas, casted frame with cast_error column)."""
-    fields = parse.all_fields(parse.DEFAULT_PATTERNS)
-    ok = p.routed.filter(~F.col("parse_error"))
-    schemas = lattice.route_schemas(ok, fields)
-    casted = route_cast.cast_single_pass(ok, schemas, fields)
-    return schemas, casted
-
-
 # ---------------------------------------------------------------------------
 # DuckDB oracle: the same route derivation as one SQL string
 # ---------------------------------------------------------------------------
 
 def routed_sql(n: int) -> str:
     """DuckDB SQL producing (doc_id, parser, route) for raw_lines(n)."""
-    from ulp_spark.functions import sniff
-
     px = parse.parse_sql("line")
     provider_code = sniff.sniff_code_sql(px["provider"])
     part = routes_fn.field_part_sql(px["provider"], provider_code)

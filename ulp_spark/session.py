@@ -45,20 +45,30 @@ _DEFAULTS = {
 
 
 def seam(df, eager: bool = False):
-    """Materialization seam for a frame consumed by multiple downstream
-    jobs (the pipeline's S5 seam, generalized — dedup/similarity band
-    tables, shard assignment, anomaly stats all reuse it).
+    """The one materialization primitive: every frame in ``ulp_spark``
+    that is checkpointed goes through here (the pipeline's S5 seam,
+    generalized — dedup/similarity band tables, shard assignment, anomaly
+    stats all reuse it).
 
-    Storage tier is chosen by session config (ADVICE r3): when the
-    SparkContext has a CHECKPOINT DIR configured, use a reliable
-    ``checkpoint`` — blocks live on the checkpoint filesystem and survive
-    executor loss / dynamic-allocation deallocation, the right form on a
-    real cluster.  Otherwise fall back to ``localCheckpoint`` — blocks
-    live only in executor storage: fast and fine on local[] / static
-    single-JVM runs (this sandbox), but executor loss makes the lineage
-    unrecoverable, so cluster deployments should set
-    ``sc.setCheckpointDir(...)`` (one line) to flip every seam in the
-    repo to the durable path.
+    Callers and eagerness: ``pipeline.build(checkpoint="local")``,
+    ``manifest.resume_fanout`` and the per-round pins of
+    ``dedup.connected_components`` seam eagerly (the frame is written
+    before the call returns); every other caller seams lazily (written by
+    the first action that reads it).
+
+    Storage tier is chosen by session config: when the SparkContext has a
+    CHECKPOINT DIR configured, use a reliable ``checkpoint`` — blocks live
+    on the checkpoint filesystem and survive executor loss /
+    dynamic-allocation deallocation, the right form on a real cluster.
+    Otherwise fall back to ``localCheckpoint`` — blocks live only in
+    executor storage: fast and fine on local[] / static single-JVM runs,
+    but executor loss makes the lineage unrecoverable, so cluster
+    deployments should set ``sc.setCheckpointDir(...)``, which flips every
+    seam above — build, fan-out and connected-components rounds included —
+    to the durable path.  Nothing releases a seam explicitly yet: local
+    blocks live until Spark's ContextCleaner collects an unreferenced
+    frame, and reliable checkpoint files (the connected-components
+    rounds' among them) are never cleaned up.
     """
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is not None:
