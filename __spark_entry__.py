@@ -1327,7 +1327,8 @@ def _q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_doc_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style passage dedup: per-doc duplicated-chunk fraction vs the
-    whole corpus (window-count over the passage hash, two shuffles)."""
+    whole corpus (default ``via="join"``: the seamed passage table's
+    count > 1 hash set joined back, then a per-doc aggregate)."""
     from ulp_spark.operators import curation
 
     return curation.passage_dup_stats(_docs(spark, sf_dir), "text", "doc_id")

@@ -147,6 +147,28 @@ def test_minhash_candidates_degenerate_bucket_capped(spark):
     assert got == [(0, 1), (0, 2), (1, 2)]
 
 
+def test_bucket_pairs_cap_boundary(spark):
+    """The shared skew cap is inclusive: a bucket of exactly ``cap`` ids
+    yields all C(cap, 2) pairs, a bucket of ``cap + 1`` ids and a
+    singleton yield none.  Every pair is ordered id_a < id_b and carries
+    each payload column as ``<col>_a`` / ``<col>_b``.  The key is compound:
+    (1, "hot") is a singleton even though band 0 has a "hot" bucket."""
+    cap = 5
+    rows = ([(0, "hot", i, 10 * i) for i in range(cap)]
+            + [(0, "over", 100 + i, 0) for i in range(cap + 1)]
+            + [(1, "hot", 200, 0)])
+    keyed = spark.createDataFrame(rows, "band int, bk string, id long, p long")
+    out = dedup._bucket_pairs(keyed, ["band", "bk"], cap, payload=("p",))
+    assert sorted(out.columns) == ["band", "bk", "id_a", "id_b", "p_a", "p_b"]
+    got = sorted(tuple(r) for r in
+                 out.select("band", "bk", "id_a", "id_b", "p_a", "p_b").collect())
+    want = [(0, "hot", a, b, 10 * a, 10 * b)
+            for a in range(cap) for b in range(a + 1, cap)]
+    assert len(want) == cap * (cap - 1) // 2
+    assert got == want
+    assert all(r[2] < r[3] for r in got)
+
+
 def test_embedding_near_dup_degenerate_bucket_capped(spark):
     """Zero vectors all land in SRP bucket 0; a 3k-row bucket must be capped
     out by the count pre-filter, while the genuine near-dup pair survives."""

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ulp_spark.operators.textstats import SPLIT_WS
+from ulp_spark.session import seam
 
 PASSAGE_WORDS = 8          # words per dedup passage
 CONTAM_GRAM = 5            # words per decontamination n-gram
@@ -225,7 +226,7 @@ def passage_hashes_sql(text: str, words: int = PASSAGE_WORDS) -> str:
 
 def passage_dup_stats(
     df: DataFrame, text_col: str, id_col: str, words: int = PASSAGE_WORDS,
-    via: str = "join", materialize: bool = True,
+    via: str = "join",
 ) -> DataFrame:
     """Per-document duplicated-passage stats against the WHOLE corpus.
 
@@ -249,12 +250,11 @@ def passage_dup_stats(
     No collect, no all-pairs — a passage shared by M docs costs M rows,
     not M^2, on both paths.
 
-    ``materialize`` (join path only): the dup-key census and the probe
-    side BOTH consume the exploded (id, ph) frame; unseamed, each re-pays
-    the full text-derivation + explode — measured 17 s vs 7.4 s for the
-    single-pass window on the sf0.1 bench corpus.  session.seam
-    materializes the explode once (round-4 fix; the window path has one
-    consumer and needs no seam).
+    The join path seams the exploded (id, ph) frame (session.seam): the
+    dup-key census and the probe side BOTH consume it, and unseamed each
+    re-pays the full text-derivation + explode — measured 17 s vs 7.4 s
+    for the single-pass window on the sf0.1 bench corpus.  The window
+    path has one consumer and needs no seam.
     """
     # stage the token array (one split/lower pass), THEN chunk-hash over
     # the attribute — the inline form re-splits the text per chunk (r6)
@@ -266,9 +266,7 @@ def passage_dup_stats(
         F.explode(_passage_hashes_from_tokens(F.col("__toks"), words))
         .alias("ph"),
     )
-    if via == "join" and materialize:
-        from ulp_spark.session import seam
-
+    if via == "join":
         exploded = seam(exploded)
     if via == "window":
         cnt = F.count(F.lit(1)).over(Window.partitionBy("ph"))
@@ -519,7 +517,6 @@ def token_budget_mix_sql(
 def strip_boilerplate(
     df: DataFrame, text_col: str, id_col: str,
     words: int = PASSAGE_WORDS, min_docs: int = 2,
-    materialize: bool = True,
 ) -> DataFrame:
     """Remove every passage (``words``-word chunk, the passage_hashes
     unit) that occurs in >= ``min_docs`` DISTINCT documents, and rebuild
@@ -547,13 +544,11 @@ def strip_boilerplate(
     the row — and it moves surviving chunk TEXT once, nothing else.  No
     collect, no window over a hot passage partition.
 
-    ``materialize`` seams the exploded chunk table once (session.seam):
-    the census, the anti-join probe, the per-doc chunk totals, and the
-    rebuild all read that ONE materialization, so the full-width corpus
-    is scanned exactly once (plus one column-pruned id scan for the
-    every-doc output frame).  ``False`` keeps the lazy form, which
-    re-derives the explode per consumer — only for pipelines that seam
-    upstream themselves.
+    The exploded chunk table is seamed once (session.seam): the census,
+    the anti-join probe, the per-doc chunk totals, and the rebuild all
+    read that ONE materialization, so the full-width corpus is scanned
+    exactly once (plus one column-pruned id scan for the every-doc output
+    frame).
     """
     # null text behaves like empty text (n_chunks 0, rebuilt as '')
     toks = word_tokens(F.coalesce(F.col(text_col), F.lit("")))
@@ -583,10 +578,7 @@ def strip_boilerplate(
                 F.col("c.chunk").alias("chunk"),
                 F.md5(F.col("c.chunk")).alias("ph"))
     )
-    if materialize:
-        from ulp_spark.session import seam
-
-        ex = seam(ex)
+    ex = seam(ex)
     boiler = (
         ex.select("ph", id_col).distinct()
         .groupBy("ph").agg(F.count(F.lit(1)).alias("nd"))
@@ -607,18 +599,14 @@ def strip_boilerplate(
             F.count(F.lit(1)).alias("__n_kept"),
         )
     )
-    if materialize:
-        # per-doc chunk totals from the seam, not a second corpus scan;
-        # the every-doc output frame needs only the id column (pruned)
-        totals = ex.groupBy(id_col).agg(
-            (F.max("pos") + 1).alias("n_chunks"))
-        out = (
-            df.select(id_col)
-            .join(totals, id_col, "left")
-            .na.fill({"n_chunks": 0})
-        )
-    else:
-        out = base.select(id_col, "n_chunks")
+    # per-doc chunk totals from the seam, not a second corpus scan; the
+    # every-doc output frame needs only the id column (pruned)
+    totals = ex.groupBy(id_col).agg((F.max("pos") + 1).alias("n_chunks"))
+    out = (
+        df.select(id_col)
+        .join(totals, id_col, "left")
+        .na.fill({"n_chunks": 0})
+    )
     return (
         out.join(rebuilt, id_col, "left")
         .select(

@@ -129,37 +129,59 @@ def band_keys(mh_cols: list[Column]) -> list[Column]:
     return keys
 
 
+def _bucket_pairs(
+    keyed: DataFrame, key: list[str], cap: int, payload: tuple = (),
+) -> DataFrame:
+    """The skew-capped bucket self-join shared by every near-dup candidate
+    generator.  ``keyed`` carries ``id``, the key column(s) and the
+    ``payload`` columns; returns ``(*key, id_a, id_b, <col>_a, <col>_b ...)``
+    for every ``id_a < id_b`` pair sharing a key whose bucket holds
+    1 < n <= ``cap`` rows.
+
+    ``keyed`` is seamed lazily: it feeds the count aggregate AND both
+    self-join sides, so unseamed its derivation (md5/shingle/signature
+    work) would run three times.  Per-bucket posting lists are NEVER
+    materialized: bucket sizes come from a count aggregate (map-side
+    partial combine), hot buckets are dropped by a semi-join BEFORE the
+    pair join, and each surviving bucket contributes at most ``cap``²
+    rows.  (A ``collect_list``-then-filter shape would build the posting
+    list of a degenerate bucket — e.g. millions of empty-text docs sharing
+    one signature — in one buffer: an OOM at 100 TB.)
+    """
+    keyed = seam(keyed)
+    ok = (
+        keyed.groupBy(*key).agg(F.count(F.lit(1)).alias("n"))
+        .filter((F.col("n") > 1) & (F.col("n") <= cap))
+        .select(*key)
+    )
+    small = keyed.join(ok, key, "leftsemi")
+
+    def side(s: str) -> DataFrame:
+        return small.select(*key, F.col("id").alias(f"id_{s}"),
+                            *[F.col(c).alias(f"{c}_{s}") for c in payload])
+
+    return side("a").join(side("b"), key).filter(F.col("id_a") < F.col("id_b"))
+
+
 def minhash_candidates(
     df: DataFrame, text_col: str, id_col: str, max_bucket: int = 1000,
-    materialize: bool = True,
 ) -> DataFrame:
     """Candidate near-dup pairs (id_a < id_b) from LSH bucket collisions.
 
-    ``max_bucket`` drops degenerate buckets (boilerplate) — the skew cap.
-
-    Scale shape: per-bucket posting lists are NEVER materialized.  Bucket
-    sizes come from a plain count aggregate (map-side partial combine, a few
-    bytes per bucket), hot buckets are dropped with a semi-join BEFORE the
-    pair join, and the pair explosion is an equi-self-join on (band, key) —
-    every surviving bucket contributes at most ``max_bucket``² rows and no
-    single aggregation buffer ever holds a whole bucket.  (The previous
-    ``collect_list``-then-filter shape built the full posting list of a
-    degenerate bucket — e.g. millions of empty-text docs sharing one
-    signature — in one buffer before dropping it: an OOM at 100 TB.)
+    ``max_bucket`` drops degenerate buckets (boilerplate) — the skew cap
+    of :func:`_bucket_pairs`.
     """
     return minhash_candidates_from_hashes(
-        df, shingle_hashes(F.col(text_col)), id_col, max_bucket,
-        materialize)
+        df, shingle_hashes(F.col(text_col)), id_col, max_bucket)
 
 
 def minhash_candidates_from_hashes(
     df: DataFrame, hashes: Column, id_col: str, max_bucket: int = 1000,
-    materialize: bool = True,
 ) -> DataFrame:
     """The minhash_candidates engine over a caller-supplied shingle-hash
     set column — so token-id shingles (tokens.sequence_minhash_candidates)
-    and character shingles share one banding/bucket-cap/pair-join
-    implementation instead of drifting copies."""
+    and character shingles share one banding implementation; the bucket
+    cap and pair join are :func:`_bucket_pairs`."""
     # Stage the shingle-hash array as a REAL column before the signature
     # projection: minhash_signature(hashes) embeds a full copy of the
     # `hashes` expression (md5/shingle derivation) in EVERY one of the 16
@@ -178,25 +200,7 @@ def minhash_candidates_from_hashes(
             for b in range(BANDS)
         ])).alias("e"),
     ).select("id", "e.band", "e.bk")
-    if materialize:
-        # S5 seam: the band table feeds the count aggregate AND both sides
-        # of the pair self-join — without this seam the md5/shingle/minhash
-        # projection is recomputed three times (PLANS.md round-2 accepted
-        # cost, now closed).  session.seam: reliable checkpoint when a
-        # checkpoint dir is set (survives executor loss), localCheckpoint
-        # otherwise; at cluster scale this is the parquet signature table
-        # written once per corpus snapshot.
-        bands = seam(bands)
-    ok = (
-        bands.groupBy("band", "bk")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter((F.col("n") > 1) & (F.col("n") <= max_bucket))
-        .select("band", "bk")
-    )
-    small = bands.join(ok, ["band", "bk"], "leftsemi")
-    a = small.select("band", "bk", F.col("id").alias("id_a"))
-    b = small.select("band", "bk", F.col("id").alias("id_b"))
-    pairs = a.join(b, ["band", "bk"]).filter(F.col("id_a") < F.col("id_b"))
+    pairs = _bucket_pairs(bands, ["band", "bk"], max_bucket)
     return pairs.select("id_a", "id_b").distinct()
 
 
@@ -365,14 +369,10 @@ def simhash64_sql(table: str, text_col: str, id_col: str) -> str:
 def simhash_candidates(
     df: DataFrame, text_col: str, id_col: str,
     max_hamming: int = 3, max_bucket: int = 1000,
-    materialize: bool = True,
 ) -> DataFrame:
-    """Near-dup pairs by 64-bit simhash: 4x16-bit band collision candidates,
-    verified with the exact Hamming distance (``bit_count(xor)``).
-
-    Same scale skeleton as :func:`minhash_candidates`: bucket sizes from a
-    count aggregate, hot bands dropped by semi-join BEFORE the pair join.
-    Returns (id_a, id_b, hamming <= max_hamming).
+    """Near-dup pairs by 64-bit simhash: 4x16-bit band collision candidates
+    from :func:`_bucket_pairs`, verified with the exact Hamming distance
+    (``bit_count(xor)``).  Returns (id_a, id_b, hamming <= max_hamming).
     """
     sig = simhash64(df, text_col, id_col)
     lo, hi = F.col("sim_lo"), F.col("sim_hi")
@@ -385,25 +385,11 @@ def simhash_candidates(
             for b, v in enumerate(band_vals)
         ])).alias("e"),
     ).select("id", "sim_lo", "sim_hi", "e.band", "e.bk")
-    if materialize:
-        # same S5 seam as minhash_candidates: one signature computation,
-        # three consumers (count agg + both self-join sides)
-        bands = seam(bands)
-    ok = (
-        bands.groupBy("band", "bk").agg(F.count(F.lit(1)).alias("n"))
-        .filter((F.col("n") > 1) & (F.col("n") <= max_bucket))
-        .select("band", "bk")
-    )
-    small = bands.join(ok, ["band", "bk"], "leftsemi")
-    a = small.select("band", "bk", F.col("id").alias("id_a"),
-                     F.col("sim_lo").alias("lo_a"), F.col("sim_hi").alias("hi_a"))
-    b = small.select("band", "bk", F.col("id").alias("id_b"),
-                     F.col("sim_lo").alias("lo_b"), F.col("sim_hi").alias("hi_b"))
-    ham = (F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
-           + F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b"))))
+    ham = (F.bit_count(F.col("sim_lo_a").bitwiseXOR(F.col("sim_lo_b")))
+           + F.bit_count(F.col("sim_hi_a").bitwiseXOR(F.col("sim_hi_b"))))
     pairs = (
-        a.join(b, ["band", "bk"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        _bucket_pairs(bands, ["band", "bk"], max_bucket,
+                      payload=("sim_lo", "sim_hi"))
         .select("id_a", "id_b", ham.cast("int").alias("hamming"))
         .distinct()
     )
@@ -576,9 +562,15 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
 
 def connected_components_sql(pairs_sql: str, id_alias: str = "id") -> str:
     """DuckDB twin: exact transitive closure by recursive CTE (small-scale
-    oracle only — the closure is quadratic in cluster size)."""
+    oracle only — the closure is quadratic in cluster size).
+
+    ``pairs`` is ``MATERIALIZED``: DuckDB 1.0 inlines a plain CTE, so the
+    whole ``pairs_sql`` (for the dedup-group oracles, candidate generation
+    plus Jaccard verification) was re-evaluated inside every step of the
+    recursive closure — 582 s vs 38 s for the ``seq_dedup_groups`` oracle
+    on 4 threads, identical rows."""
     return f"""
-    WITH RECURSIVE pairs AS ({pairs_sql}),
+    WITH RECURSIVE pairs AS MATERIALIZED ({pairs_sql}),
     sym AS (
       SELECT id_a AS n, id_b AS m FROM pairs
       UNION ALL SELECT id_b, id_a FROM pairs
@@ -674,13 +666,12 @@ def winnow_fingerprints_sql(text: str, k: int = SHINGLE, w: int = 8) -> str:
 
 def winnow_candidates(
     df: DataFrame, text_col: str, id_col: str, min_shared: int = 2,
-    max_posting: int = 1000, materialize: bool = True,
+    max_posting: int = 1000,
 ) -> DataFrame:
     """Near-dup candidate pairs (id_a < id_b, n_shared fingerprints) from
     the winnowing posting table — the deterministic-recall complement to
-    minhash_candidates (same skew discipline: posting lists for
-    boilerplate fingerprints are capped via a count aggregate + semi-join
-    BEFORE the pair join ever materializes a bucket).
+    minhash_candidates (same skew discipline: :func:`_bucket_pairs` caps
+    posting lists for boilerplate fingerprints before any pair forms).
 
     The SIGMOD-2003 guarantee lives at the FINGERPRINT level: it holds
     for the candidate set only at min_shared=1 (a single shared >=
@@ -691,10 +682,8 @@ def winnow_candidates(
     max_posting to recover the full deterministic floor.
 
     Scale shape: explode to (fingerprint, id) — ~2/(w+1) x corpus grams —
-    one count aggregate with map-side combine, hot-fingerprint drop, then
-    an equi-self-join on the fingerprint and a pair-count aggregate;
-    every surviving posting contributes <= max_posting^2 rows and no
-    aggregation buffer holds a posting list.
+    then the capped self-join on the fingerprint and a pair-count
+    aggregate.
     """
     # stage the positional hash array (one md5 pass), THEN window-min over
     # the attribute — the inline Column form re-evaluates the O(n) hash
@@ -706,19 +695,8 @@ def winnow_candidates(
     post = staged.select(
         "id",
         F.explode(_winnow_from_hashes(F.col("__h"), w=8)).alias("fp"))
-    if materialize:
-        # feeds the cap aggregate AND both join sides (the fan-out rule)
-        post = seam(post)
-    ok = (
-        post.groupBy("fp").agg(F.count(F.lit(1)).alias("n"))
-        .filter((F.col("n") > 1) & (F.col("n") <= max_posting))
-        .select("fp")
-    )
-    small = post.join(ok, "fp", "leftsemi")
-    a = small.select("fp", F.col("id").alias("id_a"))
-    b = small.select("fp", F.col("id").alias("id_b"))
     return (
-        a.join(b, "fp").filter(F.col("id_a") < F.col("id_b"))
+        _bucket_pairs(post, ["fp"], max_posting)
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)

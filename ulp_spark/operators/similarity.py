@@ -22,6 +22,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ulp_spark.operators.dedup import _bucket_pairs
 from ulp_spark.session import seam
 
 NBITS = 8
@@ -520,18 +521,13 @@ def ann_recall(
 def embedding_near_dup(
     df: DataFrame, vec_col: str, id_col: str, dim: int,
     threshold: float = 0.95, nbits: int = NBITS, max_bucket: int = 1000,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine, SRP-bucketed.
 
-    Same skeleton as dedup.minhash_candidates: bucket -> bounded self-join
-    -> exact verify.  Returns (id_a, id_b, cos_sim >= threshold).
-
-    Scale shape: bucket sizes come from a count aggregate (partial combine),
-    hot buckets (e.g. the all-zero-vector bucket) are dropped by a broadcast
-    semi-join (<= 2^nbits survivor keys, KiB) BEFORE the pair join, and the
-    pair explosion is an equi-self-join on the bucket key — no
-    ``collect_list`` ever materializes a whole bucket in one buffer.
+    Same skeleton as dedup.minhash_candidates: bucket -> the capped
+    self-join of dedup._bucket_pairs (hot buckets, e.g. the all-zero-vector
+    bucket, dropped before any pair forms) -> exact verify.  Returns
+    (id_a, id_b, cos_sim >= threshold).
     """
     sig = df.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
@@ -541,24 +537,9 @@ def embedding_near_dup(
         norm(F.col(vec_col)).alias("__nv"),
         srp_signature(F.col(vec_col), dim, nbits).alias("bucket"),
     )
-    if materialize:
-        # same S5 seam as dedup.minhash_candidates: one SRP-signature
-        # computation shared by the count agg and both self-join sides
-        sig = seam(sig)
-    ok = (
-        sig.groupBy("bucket").agg(F.count(F.lit(1)).alias("n"))
-        .filter((F.col("n") > 1) & (F.col("n") <= max_bucket))
-        .select("bucket")
-    )
-    small = sig.join(F.broadcast(ok), "bucket", "leftsemi")
-    a = small.select("bucket", F.col("id").alias("id_a"),
-                     F.col("v").alias("v_a"), F.col("__nv").alias("__nv_a"))
-    b = small.select("bucket", F.col("id").alias("id_b"),
-                     F.col("v").alias("v_b"), F.col("__nv").alias("__nv_b"))
     d = F.col("__nv_a") * F.col("__nv_b")
     pairs = (
-        a.join(b, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
+        _bucket_pairs(sig, ["bucket"], max_bucket, payload=("v", "__nv"))
         .select("id_a", "id_b",
                 F.round(
                     F.when(d > 0, dot(F.col("v_a"), F.col("v_b")) / d)

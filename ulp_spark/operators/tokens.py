@@ -600,16 +600,6 @@ def incremental_sequence_dedup(
         fresh, ["fp", id_col], "left_semi").drop("fp")
 
 
-def _path_exists(spark, path: str) -> bool:
-    """Scheme-aware existence check via the Hadoop FileSystem API (the
-    same resolver Spark's own readers use), so local paths, HDFS and
-    object stores all answer correctly."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
-
-
 def _state_has_data(spark, path: str) -> bool:
     """True iff ``path`` exists AND contains at least one committed data
     file (name not starting with '_' or '.').  Bare existence is the

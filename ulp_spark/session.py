@@ -47,8 +47,10 @@ _DEFAULTS = {
 def seam(df, eager: bool = False):
     """The one materialization primitive: every frame in ``ulp_spark``
     that is checkpointed goes through here (the pipeline's S5 seam,
-    generalized — dedup/similarity band tables, shard assignment, anomaly
-    stats all reuse it).
+    generalized — shard assignment, anomaly stats and the keyed tables of
+    every near-dup candidate generator reuse it; the minhash, simhash,
+    winnowing and embedding generators seam theirs in one place,
+    ``dedup._bucket_pairs``).
 
     Callers and eagerness: ``pipeline.build(checkpoint="local")``,
     ``manifest.resume_fanout`` and the per-round pins of
