@@ -205,7 +205,7 @@ def _q_doc_winnow_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_doc_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS: connected components over the minhash candidate
     pairs; comp_id = canonical (min) doc_id per cluster. Spark side is
-    iterative min-label propagation with pointer jumping (converged fixed
+    the alternating large-star/small-star edge rewrite (converged fixed
     point); oracle is the exact recursive-CTE transitive closure — both
     yield the unique min-id-per-component labeling."""
     pairs = dedup.minhash_candidates(_docs(spark, sf_dir), "text", "doc_id")

@@ -397,26 +397,6 @@ def test_streaming_vocab_counts_match_batch(spark, tmp_path):
     assert got == exp and got["the"] == 3 and got["cat"] == 3
 
 
-def test_salted_join_matches_plain(spark):
-    """Hot-key join through salted_join is row-identical to the plain
-    join (inner and left), including null-key rows (dropped by inner
-    equi-join on both paths)."""
-    big = spark.createDataFrame(
-        [(i, "hot" if i % 10 else ("cold" if i % 2 else None), i * 3)
-         for i in range(600)],
-        "row_id long, k string, v long")
-    small = spark.createDataFrame(
-        [("hot", 1), ("cold", 2), ("unseen", 3)], "k string, dim long")
-    key = lambda t: tuple((v is None, str(v)) for v in t)  # noqa: E731
-    for how in ("inner", "left"):
-        got = sorted((tuple(r) for r in
-                      agg.salted_join(big, small, ["k"], 8, how).collect()),
-                     key=key)
-        want = sorted((tuple(r) for r in
-                       big.join(small, ["k"], how).collect()), key=key)
-        assert got == want, how
-
-
 def test_streaming_watermark_drops_late_rows(spark, tmp_path):
     """Append-mode windowed count with a 10-minute watermark: a row
     arriving in a later micro-batch but timestamped far before the

@@ -11,7 +11,8 @@ aggregates (count/sum/min/max/bit_or) the fix is classic salting:
 Both stages are map-side-combined hash aggregations, so the extra shuffle
 volume is |keys| x S rows — nothing — while the hot key's reduce work
 fans out over S tasks instead of one.  (AQE's skew handling only splits
-skewed *join* partitions; skewed aggregation keys still need salting.)
+skewed *join* partitions — on by default in ``session._DEFAULTS``, so a
+skewed join needs no salting here; skewed aggregation keys still do.)
 
 ``salted_agg`` takes (agg_col_expr, combine1, combine2) triples so any
 algebraic aggregate decomposes correctly: count -> (count, sum), avg ->
@@ -61,31 +62,3 @@ def salted_agg(
     finals = [getattr(F, fn)(n).alias(n) for n, _, fn in aggs]
     return partial.groupBy(*keys).agg(*finals)
 
-
-def salted_join(
-    big: DataFrame, small: DataFrame, keys: list[str],
-    salt_buckets: int = 16, how: str = "inner",
-    salt_on: Column | None = None,
-) -> DataFrame:
-    """Skew-resistant equi-join: a hot key on the big side fans out over
-    ``salt_buckets`` reduce tasks instead of one.
-
-    The big side gets a deterministic per-row salt (xxhash64 of the whole
-    row, mod S); the small side is replicated S ways (explode of a
-    0..S-1 sequence); the join runs on (keys + salt).  Shuffle volume
-    grows by |small| x (S - 1) — cheap when small is dimension-sized but
-    too big to broadcast.  Use when AQE's skew-join can't kick in (e.g.
-    the join is forced to shuffled-hash, or salting must compose with a
-    downstream same-key aggregation).  Results are row-identical to the
-    plain join (pytest-pinned).
-    """
-    if how not in ("inner", "left", "leftouter", "left_outer"):
-        # right/full/outer would keep each unmatched SMALL replica as its
-        # own null-extended row — S duplicates — so reject loudly.
-        raise ValueError(f"salted_join supports inner/left only, got {how!r}")
-    b = big.withColumn("__salt", _row_salt(big, salt_buckets, salt_on))
-    s = small.withColumn(
-        "__salt",
-        F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
-    )
-    return b.join(s, [*keys, "__salt"], how).drop("__salt")

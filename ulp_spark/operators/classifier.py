@@ -57,35 +57,27 @@ def synthetic_weight_centi_sql(bucket: str) -> str:
     return f"((({bucket}) * {_MIX}) % 1001 - 500)"
 
 
-def _features(text: Column) -> Column:
-    # single-Column convenience form; corpus-scale callers use
-    # _feature_rows, which stages the token array first — word_grams
-    # references its tokens inside a per-gram lambda, and Catalyst
-    # re-evaluates a non-attribute referenced expression PER ELEMENT
-    # (O(n^2) split work; the recorded reused-expression trap)
-    toks = word_tokens(F.coalesce(text, F.lit("")))
-    return F.concat(toks, word_grams(toks, 2))
-
-
 def _feature_rows(
-    frame: DataFrame, text_col: str, id_col: str, dim: int,
+    frame: DataFrame, text_col: str, id_col: str | None, dim: int,
 ) -> DataFrame:
-    """(id, bucket) feature-occurrence rows with the token array STAGED
-    as a real column, so the uni+bigram explode reads an attribute
+    """(id, bucket) feature-occurrence rows — (bucket) alone when
+    ``id_col`` is None — over hashed word uni+bigrams, with the token
+    array STAGED as a real column so the bigram lambda reads an attribute
     instead of re-splitting the text per gram (measured 14.7 s -> ~4 s
-    on the dsir bench corpus, r6).  Values identical to exploding
-    ``_features``."""
+    on the dsir bench corpus, r6).  Empty/null text yields one row with a
+    NULL bucket (explode_outer)."""
+    keep = [id_col] if id_col is not None else []
     staged = frame.select(
-        F.col(id_col),
+        *keep,
         word_tokens(F.coalesce(F.col(text_col), F.lit("")))
         .alias("__toks"))
     return (
         staged.select(
-            F.col(id_col),
+            *keep,
             F.explode_outer(
                 F.concat(F.col("__toks"), word_grams(F.col("__toks"), 2)))
             .alias("f"))
-        .select(id_col, feature_bucket(F.col("f"), dim).alias("bucket"))
+        .select(*keep, feature_bucket(F.col("f"), dim).alias("bucket"))
     )
 
 
@@ -178,7 +170,8 @@ def dsir_importance(
     Returns (id, n_feats, logratio_micro, weight) for EVERY row of
     ``df`` — empty/null text gets n_feats 0, logratio 0, weight 1.0;
     weight = round(exp(logratio_micro / 1e6), 6) is the resampling
-    weight.
+    weight.  ``target`` needs only its text column (``target_text_col``,
+    default ``text_col``).
 
     Scale shape: the bucket-weight table is bounded by ``dim`` rows
     (never corpus scale) and broadcast; the raw side is ONE explode +
@@ -189,22 +182,21 @@ def dsir_importance(
     """
     tcol = target_text_col or text_col
 
-    def feats(frame: DataFrame, col: str) -> DataFrame:
-        return _feature_rows(frame, col, id_col, dim)
-
     from ulp_spark.session import seam
 
     # the exploded corpus-feature frame feeds the bucket counts AND the
     # final per-doc sum — seam it ONCE or Catalyst re-derives the explode
     # per consumer (the recorded fan-out rule)
-    raw_feats = seam(feats(df, text_col))
+    raw_feats = seam(_feature_rows(df, text_col, id_col, dim))
     # the count frames each feed TWO consumers (the lambda join and
     # their totals) — unseamed, the target explode and the corpus-scale
     # raw aggregation re-derive per consumer (the fan-out rule's fifth
     # sighting, caught in this op's plan audit).  Both are <= dim rows.
     r_counts = seam(raw_feats.filter(F.col("bucket").isNotNull())
                     .groupBy("bucket").agg(F.count(F.lit(1)).alias("r")))
-    t_counts = seam(feats(target, tcol).filter(F.col("bucket").isNotNull())
+    # the target side needs only bucket counts, so it carries no id
+    t_counts = seam(_feature_rows(target, tcol, None, dim)
+                    .filter(F.col("bucket").isNotNull())
                     .groupBy("bucket").agg(F.count(F.lit(1)).alias("t")))
     r_tot = r_counts.agg(F.sum("r").alias("__r_all"))
     t_tot = t_counts.agg(F.sum("t").alias("__t_all"))

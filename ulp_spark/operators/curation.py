@@ -109,40 +109,19 @@ def dup_frac(grams: Column) -> Column:
     return _dup_frac(grams)
 
 
-def repetition_signals(text: Column) -> dict[str, Column]:
+def repetition_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Duplicate-n-gram fractions a-la Gopher quality filtering
     (Rae et al. 2021, arXiv:2112.11446 §A1.1): repeated word / 2-gram /
     3-gram mass signals boilerplate and degenerate generation loops.
 
     Everything is array algebra on one row — size/array_distinct over
     transform-built gram arrays — so the op is a codegen'd projection:
-    no shuffle, no UDF, cost O(n·k) per doc. A 100-TB corpus pays one
-    scan.
-    """
-    toks = word_tokens(text)
-    n = F.size(toks)
-    distinct_ratio = F.when(n == 0, F.lit(0.0)).otherwise(
-        F.round(F.size(F.array_distinct(toks)).cast("double") / n, ROUND))
-    return {
-        "n_words": n,
-        "distinct_word_ratio": distinct_ratio,
-        "dup_word_frac": _dup_frac(toks),
-        "dup_2gram_frac": _dup_frac(word_grams(toks, 2)),
-        "dup_3gram_frac": _dup_frac(word_grams(toks, 3)),
-    }
-
-
-def repetition_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Staged form of :func:`repetition_signals` — USE THIS on real data.
-
-    The Column-dict form inlines the token split and gram transforms into
-    every signal, and each ``_dup_frac`` references its gram array twice;
-    Catalyst does not CSE across those copies, so the codegen'd projection
-    grows ~20 expansions of split+transform and compiles/evaluates ~15x
-    slower (measured: 19.9 s vs 1.4 s for 5k docs x10 replicas,
-    local[32]). Staging the arrays once per projection (the
-    casts.helper_columns discipline from PLANS.md) keeps each stage's
-    expression tree flat. Identical values to the _sql twin.
+    no shuffle, no UDF, cost O(n·k) per doc.  The token and gram arrays
+    are staged as columns once: inlined, each ``_dup_frac`` references
+    its gram array twice and Catalyst does not CSE across those copies,
+    which compiled/evaluated ~15x slower (19.9 s vs 1.4 s for 5k docs
+    x10 replicas, local[32]).  Identical values to
+    :func:`repetition_signals_sql`.
     """
     toks = word_tokens(F.col(text_col))
     staged = df.select(F.col(id_col), toks.alias("toks")).select(
@@ -181,25 +160,15 @@ def repetition_signals_sql(text: str) -> dict[str, str]:
 # passage-level dedup (CCNet-style, corpus-global)
 # --------------------------------------------------------------------------
 
-def passage_hashes(text: Column, words: int = PASSAGE_WORDS) -> Column:
-    """md5 of each consecutive ``words``-word chunk (last chunk partial).
+def _passage_hashes_from_tokens(toks: Column, words: int = PASSAGE_WORDS
+                                ) -> Column:
+    """md5 of each consecutive ``words``-word chunk (last chunk partial)
+    of an ALREADY-STAGED token array column — pass an attribute so the
+    chunk lambda references cheap input.
 
     Chunking (stride = width) rather than sliding keeps the explode factor
     at n/words instead of n — the CCNet paragraph-dedup shape applied to
-    token windows.
-    """
-    # single-Column convenience form; corpus-scale callers stage the
-    # token array and use _passage_hashes_from_tokens — the per-chunk
-    # lambda references toks, and a non-attribute referenced expression
-    # re-evaluates PER ELEMENT (the recorded reused-expression trap:
-    # O(n^2/words) split work inline)
-    return _passage_hashes_from_tokens(word_tokens(text), words)
-
-
-def _passage_hashes_from_tokens(toks: Column, words: int = PASSAGE_WORDS
-                                ) -> Column:
-    """Chunk hashes over an ALREADY-STAGED token array column (pass an
-    attribute so the chunk lambda references cheap input)."""
+    token windows."""
     n = F.size(toks)
     n_chunks = F.ceil(n / F.lit(float(words))).cast("int")
     # try_element_at instead of slice+join (the word_grams allocation
@@ -518,7 +487,7 @@ def strip_boilerplate(
     df: DataFrame, text_col: str, id_col: str,
     words: int = PASSAGE_WORDS, min_docs: int = 2,
 ) -> DataFrame:
-    """Remove every passage (``words``-word chunk, the passage_hashes
+    """Remove every passage (``words``-word chunk, the passage_dup_stats
     unit) that occurs in >= ``min_docs`` DISTINCT documents, and rebuild
     each document from its surviving chunks — the CCNet boilerplate rule
     as a document REWRITE rather than a per-doc flag (reference parity:
@@ -772,6 +741,7 @@ GOPHER_MAX_ELLIPSIS_FRAC = 0.3    # lines ending with an ellipsis
 GOPHER_MIN_ALPHA_FRAC = 0.8       # words containing a letter
 GOPHER_MIN_STOPWORDS = 2          # distinct members of STOP_EN present
 _SYMBOL_RE = r"#|\.\.\.|…"
+_ALPHA_RE = r"\p{L}"             # any Unicode letter (Java and RE2 alike)
 _BULLETS = ("-", "*", "•", "‣")
 
 
@@ -780,7 +750,9 @@ def gopher_rules(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     verdicts: MassiveWeb's document-level heuristics (word count
     50..100k, mean word length 3..10, symbol-to-word ratio <= 0.1,
     bullet-started lines <= 90%, ellipsis-ended lines <= 30%, >= 80% of
-    words contain a letter, >= 2 distinct English stopwords).  Unlike
+    words contain a letter — any Unicode letter (``_ALPHA_RE``) on both
+    engines, so ``café`` and ``日本語`` count — >= 2 distinct English
+    stopwords).  Unlike
     ``quality_score`` (a soft composite for ranking) this is the
     hard-reject bundle production corpora apply first; emitting each
     rule's boolean lets curation dashboards attribute WHY a document
@@ -828,7 +800,7 @@ def gopher_rules(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         ln, lambda l: F.endswith(F.rtrim(l), F.lit("..."))
         | F.endswith(F.rtrim(l), F.lit("…"))))
     ellip_frac = F.round(ellip.cast("double") / safe_ln, ROUND)
-    alpha = F.size(F.filter(w, lambda x: x.rlike("[a-z]")))
+    alpha = F.size(F.filter(w, lambda x: x.rlike(_ALPHA_RE)))
     alpha_frac = F.round(alpha.cast("double") / safe_w, ROUND)
     n_stop = sum(
         (F.array_contains(w, s).cast("int") for s in STOP_EN),
@@ -895,7 +867,7 @@ def gopher_rules_sql(table: str, text_col: str, id_col: str) -> str:
                             OR ends_with(rtrim(l), '…')))::DOUBLE
                        / greatest(len(__ln), 1), {ROUND}) AS ellipsis_frac,
                  round(len(list_filter(__w,
-                       x -> regexp_matches(x, '[a-z]')))::DOUBLE
+                       x -> regexp_matches(x, '{_ALPHA_RE}')))::DOUBLE
                        / greatest(len(__w), 1), {ROUND}) AS alpha_frac,
                  ({stop_sum})::INT AS n_stop_present
           FROM staged

@@ -311,15 +311,6 @@ def simhash_sql(hashes_expr: str, bits: int = SIMHASH_BITS) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def hamming(a: Column, b: Column, bits: int = SIMHASH_BITS) -> Column:
-    x = a.bitwiseXOR(b)
-    return sum(
-        (F.when(x.bitwiseAND(F.lit(1 << i)) != 0, 1).otherwise(0)
-         for i in range(bits)),
-        start=F.lit(0),
-    )
-
-
 # --------------------------------------------------------------------------
 # 64-bit simhash + Hamming-banded candidate join (production shape:
 # 64 bits, Hamming <= 3, 4 x 16-bit bands — any pair within distance 3
@@ -525,7 +516,11 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     # never above the session's configured width (so cluster-scale
     # graphs keep their configured parallelism; nothing here depends on
     # the local core count).  Restored in the finally even on the
-    # non-convergence raise.
+    # non-convergence raise.  The session-global write stays until a
+    # conf-free form keeps this width: removing only the two conf.set
+    # calls (rounds at the session's 64) measured 5.4 s -> 16.4 s at
+    # 1,200 edges and 7.8 s -> 27.8 s at 60,000 edges (medians of 4,
+    # local[4] on a 4-core host), identical labels.
     conf = pairs.sparkSession.conf
     configured = conf.get("spark.sql.shuffle.partitions")
     adaptive = max(1, min(int(configured), (n_edges + 999_999) // 1_000_000))
@@ -599,38 +594,22 @@ def _positional_hashes(text: Column, size: int = SHINGLE) -> Column:
     ).otherwise(F.array().cast("array<bigint>"))
 
 
-def winnow_fingerprints(
-    text: Column, k: int = SHINGLE, w: int = 8,
-) -> Column:
-    """The MOSS fingerprint set: min k-gram hash in every w-window of the
-    positional hash sequence, distinct + sorted.  The winnowing guarantee
-    (SIGMOD 2003, thm 2): two documents sharing any substring of length
-    >= w + k - 1 share at least one fingerprint — a DETERMINISTIC recall
-    floor, where minhash/simhash recall is probabilistic.  Density is
-    ~2/(w+1) of positions, so the posting table is ~an order smaller
-    than full k-gram indexing.
+def _winnow_from_hashes(h: Column, w: int) -> Column:
+    """The MOSS fingerprint set: min k-gram hash in every w-window of an
+    ALREADY-STAGED positional-hash array column (:func:`_positional_hashes`),
+    distinct + sorted.  The winnowing guarantee (SIGMOD 2003, thm 2): two
+    documents sharing any substring of length >= w + k - 1 share at least
+    one fingerprint — a DETERMINISTIC recall floor, where minhash/simhash
+    recall is probabilistic.  Density is ~2/(w+1) of positions, so the
+    posting table is ~an order smaller than full k-gram indexing.
 
     Texts with at least one gram but fewer than w of them keep their
     global min (every non-trivial doc gets >= 1 fingerprint); empty and
-    sub-k texts yield an empty array.  All JVM expression work —
-    O(n*w) comparisons per doc inside one codegen stage, no shuffle.
-    """
-    if w < 1:
-        raise ValueError("w must be >= 1")
-    # NOTE for hot paths: this single-Column form embeds the O(n) hash
-    # array inside the per-window lambda, and Catalyst re-evaluates a
-    # referenced non-attribute expression PER ELEMENT — O(n^2) md5 work
-    # (the recorded reused-expression trap; measured 33 s vs 0.7 s on the
-    # 5k-doc bench corpus).  winnow_candidates stages the hash array as a
-    # real column and calls _winnow_from_hashes; use that shape wherever
-    # the input is corpus-scale.
-    return _winnow_from_hashes(_positional_hashes(text, k), w)
-
-
-def _winnow_from_hashes(h: Column, w: int) -> Column:
-    """Window-min fingerprint set over an ALREADY-STAGED positional-hash
-    array column (pass an attribute, not an expression, so the per-window
-    lambda references cheap input)."""
+    sub-k texts yield an empty array.  O(n*w) comparisons per doc inside
+    one codegen stage, no shuffle.  Pass an attribute, not an expression:
+    Catalyst re-evaluates a referenced non-attribute expression inside
+    the per-window lambda PER ELEMENT — O(n^2) md5 work (measured 33 s vs
+    0.7 s on the 5k-doc bench corpus)."""
     n = F.size(h)
     # least(element_at...) instead of array_min(slice...): slice allocates
     # a w-element array per window (the word_grams allocation win, r6);
@@ -686,9 +665,7 @@ def winnow_candidates(
     aggregate.
     """
     # stage the positional hash array (one md5 pass), THEN window-min over
-    # the attribute — the inline Column form re-evaluates the O(n) hash
-    # array inside every window lambda (O(n^2) md5s; 33 s -> 0.7 s on the
-    # bench corpus, r6)
+    # the attribute (see _winnow_from_hashes)
     staged = df.select(
         F.col(id_col).alias("id"),
         _positional_hashes(F.col(text_col)).alias("__h"))

@@ -7,13 +7,14 @@ row with buffered bulk POSTs and infinite retry (``src/elastic.rs:76-154``,
 * the scalable shape: ONE pass, ``partitionBy(route)`` parquet/Iceberg
   write — every route lands in its own directory/partition in a single
   shuffle-free job (:func:`write_partitioned`);
-* the exact-parity shape: per-route typed tables written in sorted route
-  order (:func:`write_per_route`) — per-sink schemas differ per route just
-  like per-index ES mappings (S8), so this is the shape a migration of the
-  reference would expose to consumers;
+* the exact-parity shape: one write per route in sorted route order (the
+  reference's BTreeMap iteration), each committed independently so a
+  crash resumes where it stopped (``plans.manifest.resume_fanout``);
 * idempotent commit: parquet/Iceberg atomic job commit replaces the
   reference's retry-forever loop (``src/elastic.rs:124-151``); re-running a
-  committed route is a no-op via the manifest check (plans.manifest).
+  committed route is a no-op via the manifest check (plans.manifest);
+* crash-safe per-route compaction (:func:`compact_route`,
+  :func:`repair_compaction`).
 
 At cluster scale ``write_partitioned`` is the default: no driver loop, AQE
 coalesces output files, and per-partition stats become lineage rows.
@@ -36,19 +37,6 @@ def write_partitioned(
         .partitionBy(route_col)
         .parquet(path)
     )
-
-
-def write_per_route(
-    tables: dict[str, DataFrame], base: str, mode: str = "overwrite"
-) -> dict[str, str]:
-    """Write each route's typed table under ``base/<route>``; returns
-    {route: path} in deterministic sorted order."""
-    out: dict[str, str] = {}
-    for route in sorted(tables):
-        path = os.path.join(base, route)
-        tables[route].write.mode(mode).parquet(path)
-        out[route] = path
-    return out
 
 
 def route_counts(df: DataFrame, route_col: str = "route") -> DataFrame:

@@ -106,40 +106,6 @@ def srp_signature_sql(vec: str, dim: int, nbits: int = NBITS) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def lsh_topk(
-    df: DataFrame, vec_col: str, id_col: str, query: list[float], k: int = 10,
-    nbits: int = NBITS, multiprobe: int = 0,
-) -> DataFrame:
-    """Approximate top-k: exact cosine *within the query's SRP bucket(s)*.
-
-    The scan prunes to the probed buckets (a partition-pruned read when
-    the table is written partitioned/bucketed by signature), then
-    re-ranks exactly.  ``multiprobe`` probes all buckets within that
-    Hamming distance of the query signature (0 = exact bucket only;
-    1 adds the nbits sign-flip neighbors — measured recall@10 0.15 ->
-    0.26 at 1.4% -> 7.8% of the table scanned, BENCH.md round 3).
-    """
-    dim = len(query)
-    sig = srp_signature(F.col(vec_col), dim, nbits)
-    # query signature computed driver-side with the same integer planes
-    qsig = 0
-    for i in range(nbits):
-        d = sum(q * w for q, w in zip(query, hyperplane(i, dim)))
-        qsig += (1 << i) if round(d, 4) > 0 else 0
-    probes = {qsig}
-    frontier = {qsig}
-    for _ in range(multiprobe):
-        frontier = {s ^ (1 << i) for s in frontier for i in range(nbits)}
-        probes |= frontier
-    q = F.array(*[F.lit(float(x)) for x in query])
-    scored = (
-        df.withColumn("bucket", sig)
-        .filter(F.col("bucket").isin(sorted(probes)))
-        .select(F.col(id_col), F.round(cosine(F.col(vec_col), q), 6).alias("cos_sim"))
-    )
-    return scored.orderBy(F.desc("cos_sim"), F.col(id_col)).limit(k)
-
-
 # --------------------------------------------------------------------------
 # IVF (inverted-file) ANN — the coarse-quantizer scale path
 # --------------------------------------------------------------------------
@@ -404,10 +370,12 @@ def ann_recall(
     frac_scanned is the mean fraction of the table each query scored —
     the cost side of the recall/cost trade a user tunes n_probe with.
 
-    Methods: ``ivf_p{n}`` (n_probe cells by centroid cosine) and ``srp``
-    (the query's SRP bucket).  Reference analog: none (engine breadth,
-    SURVEY §2.6); this is the evidence the ANN stack is useful, not just
-    self-consistent.
+    Methods: ``ivf_p{n}`` (n_probe cells by centroid cosine), ``srp``
+    (the query's SRP bucket) and ``srp_mp1`` (multi-probe: every bucket
+    within Hamming 1 of the query signature — recall@10 0.15 -> 0.26 at
+    1.4% -> 7.8% of the table scanned, BENCH.md round 3).  Reference
+    analog: none (engine breadth, SURVEY §2.6); this is the evidence the
+    ANN stack is useful, not just self-consistent.
 
     Physical shape (r6): the whole evaluation reads ONE seamed feature
     table (id, vec, row norm, ivf cell, srp bucket) — before the seam the

@@ -20,8 +20,8 @@ ended — not expressible as Catalyst column algebra over fixed offsets
 the repo's one DESIGNED Python hot path: mapInPandas over Arrow batches,
 the vocabulary dict broadcast once per executor, zero shuffles, linear
 scan per string (O(len * max_piece_len) dict probes).  ``detokenize`` is
-the inverse and IS column-expressible — its default path is a broadcast
-join + ordered re-assembly, JVM end to end.
+the inverse and IS column-expressible — a broadcast join + ordered
+re-assembly, JVM end to end.
 
 The DuckDB twin (tokenize_sql) drives the same greedy recurrence with a
 recursive CTE, so even this non-relational operator gets a full
@@ -140,36 +140,17 @@ def tokenize_sql(
 
 def detokenize(
     df: DataFrame, tokens_col: str, id_col: str, vocab: list[str],
-    unk_piece: str = "�", via: str = "join",
+    unk_piece: str = "�",
 ) -> DataFrame:
     """(id, text): inverse of tokenize — concatenate each id's piece
     (ids outside [0, len(vocab)) render as ``unk_piece``).  Lossless for
     ids produced by tokenize with the same vocab and no unks; pinned as
     the roundtrip property in pytest.
 
-    * ``via="join"`` (default): posexplode -> broadcast join against the
-      (id -> piece) dim -> ordered re-assembly.  One corpus exchange (the
-      groupBy), works for any vocab size, JVM end to end.
-    * ``via="literal"``: the vocab as an array literal indexed by
-      element_at — ZERO exchanges, but the literal is serialized into the
-      plan, so it is for small vocabs (<= ~10k pieces); guarded.
+    posexplode -> broadcast join against the (id -> piece) dim -> ordered
+    re-assembly: one corpus exchange (the groupBy), any vocab size, JVM
+    end to end.
     """
-    if via == "literal":
-        if len(vocab) > 10_000:
-            raise ValueError(
-                "via='literal' embeds the vocab in the plan; use "
-                "via='join' for vocabularies this large")
-        arr = F.array(*[F.lit(p) for p in vocab])
-        piece = lambda t: F.coalesce(  # noqa: E731
-            F.when((t >= 0) & (t < len(vocab)), F.element_at(arr, t + 1)),
-            F.lit(unk_piece))
-        return df.select(
-            F.col(id_col),
-            F.concat_ws("", F.transform(F.col(tokens_col), piece))
-            .alias("text"),
-        )
-    if via != "join":
-        raise ValueError(f"via must be 'join' or 'literal', got {via!r}")
     spark = df.sparkSession
     dim = spark.createDataFrame(
         [(i, p) for i, p in enumerate(vocab)], "tid int, piece string")
