@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ulp_spark import fixtures
-from ulp_spark.functions import casts, sanitize, sniff
+from ulp_spark.functions import casts, sanitize, sniff, sqltext
 from ulp_spark.operators import dedup, lattice, multimodal, parse, similarity, textstats
 from ulp_spark.operators import profiling as _profiling
 from ulp_spark.operators import vocab as _vocab
@@ -102,26 +102,26 @@ def _q_events_json_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_events_cast_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    v = F.get_json_object(F.col("props"), "$.k")
+    v = f"get_json_object(props, {sqltext.lit('$.k')})"
     code = sniff.sniff_code(v)
     rcode = sniff.materialized_runtime_code(v, code)
     as_int, err = casts.cast_field(v, rcode, sniff.INT)
-    return ev.select(
+    return ev.selectExpr(
         "event_id",
-        v.alias("k_raw"),
-        code.alias("k_type"),
-        as_int.alias("k_int"),
-        err.cast("int").alias("k_err"),
+        f"{v} AS k_raw",
+        f"{code} AS k_type",
+        f"{as_int} AS k_int",
+        f"CAST({err} AS INT) AS k_err",
     )
 
 
 def _q_sanitize_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return (
-        ev.select(
+        ev.selectExpr(
             sanitize.sanitize_sink_name(
-                F.concat(F.lit("Sink/"), F.col("event_type"), F.lit(" V1"))
-            ).alias("sink_name")
+                f"concat({sqltext.lit('Sink/')}, event_type,"
+                f" {sqltext.lit(' V1')})") + " AS sink_name"
         )
         .groupBy("sink_name")
         .agg(F.count(F.lit(1)).alias("n_rows"))

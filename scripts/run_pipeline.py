@@ -52,7 +52,7 @@ def main() -> None:
         m = manifest.new_manifest(args.run_id, args.n, schemas)
         manifest.save(args.base, args.run_id, m)
 
-    todo_before = sum(not e["committed"] for e in m["routes"].values())
+    todo = [r for r, e in m["routes"].items() if not e["committed"]]
     m = manifest.resume_fanout(
         p.routed.select("doc_id", "route", "parser", "parse_error"), m, args.base)
 
@@ -62,7 +62,10 @@ def main() -> None:
         "run_id": args.run_id,
         "n": args.n,
         "routes_total": len(m["routes"]),
-        "routes_written_this_run": todo_before,
+        "routes_written_this_run": len(todo),
+        # observed by the fan-out's own write: no extra Spark action
+        "rows_written_this_run": sum(m["routes"][r]["n_rows"] for r in todo),
+        "quarantined_rows": m["routes"][pipeline.QUARANTINE]["n_rows"],
         "rows_per_route": {r: e["n_rows"] for r, e in sorted(m["routes"].items())},
         "lineage_partitions": len(lin),
         "wall_sec": round(time.perf_counter() - t0, 2),

@@ -94,9 +94,10 @@ def results(spark):
     # Build one select with a value+err pair per case (grouped by target).
     cols = []
     for i, (_, _, target, _, _) in enumerate(CASES):
-        val, err = casts.cast_field(F.col("v"), F.col("rc"), target)
+        val, err = casts.cast_field("v", "rc", target)
+        val = casts.value_column(val, target, "val")
         cols.append(F.when(F.col("i") == i, val).alias(f"val_{i}"))
-        cols.append(F.when(F.col("i") == i, err).alias(f"err_{i}"))
+        cols.append(F.when(F.col("i") == i, F.expr(err)).alias(f"err_{i}"))
     out = df.select("i", *cols).orderBy("i").collect()
     for i, r in enumerate(out):
         rows.append((r[f"val_{i}"], bool(r[f"err_{i}"])))
@@ -113,5 +114,5 @@ def test_cast_matrix(results):
 
 def test_runtime_code_collapse(spark):
     df = spark.createDataFrame([(c,) for c in range(8)], "c int")
-    got = [r[0] for r in df.select(sniff.runtime_code(F.col("c"))).collect()]
+    got = [r[0] for r in df.select(F.expr(sniff.runtime_code("c"))).collect()]
     assert got == [NULL, BOOL, INT, FLOAT, STR, STR, STR, STR]

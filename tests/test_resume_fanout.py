@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from ulp_spark.operators import agg, fanout, lattice, lineage, parse
@@ -96,6 +98,78 @@ def test_resume_fanout_single_count_action(spark, tmp_path, monkeypatch):
            .agg(F.count(F.lit(1)).alias("n")).collect()}
     for route, e in done["routes"].items():
         assert e["n_rows"] == exp.get(route, 0)
+
+
+def _glob_escaped(path):
+    """Hadoop globs ``{}``/``[]`` in read paths; escape them to read a
+    sink directory by its literal name."""
+    return re.sub(r"([{}\[\]*?\\])", r"\\\1", path)
+
+
+def test_resume_fanout_after_crash_mid_commit(spark, tmp_path, monkeypatch):
+    """A crash after the 2nd route commit leaves a stale ``_staging/``, a
+    renamed-but-unrecorded 3rd sink and a half-committed manifest; the
+    next call commits every route, the sinks hold exactly the input, the
+    staging directory is gone and history has one snapshot per commit."""
+    routed = _routed(spark).select("doc_id", "route", "parser")
+    fields = parse.all_fields(parse.DEFAULT_PATTERNS)
+    schemas = lattice.route_schemas(pipeline.build(spark, n=N).routed, fields)
+    schemas["quarantine"] = {}
+    base = str(tmp_path / "runs")
+    m = manifest.new_manifest("run-003", N, schemas)
+    manifest.save(base, "run-003", m)
+    staging = os.path.join(base, "run-003", "_staging")
+
+    save = manifest.save
+    commits = {"n": 0}
+
+    def crash_after_two(*a, **kw):
+        commits["n"] += 1
+        if commits["n"] > 2:
+            raise RuntimeError("driver lost")
+        return save(*a, **kw)
+
+    monkeypatch.setattr(manifest, "save", crash_after_two)
+    with pytest.raises(RuntimeError, match="driver lost"):
+        manifest.resume_fanout(routed, m, base)
+    monkeypatch.undo()
+    assert os.path.isdir(staging)
+    loaded = manifest.load(base, "run-003")
+    routes = sorted(loaded["routes"])
+    assert [r for r in routes if loaded["routes"][r]["committed"]] == routes[:2]
+
+    done = manifest.resume_fanout(routed, loaded, base)
+    assert all(e["committed"] for e in done["routes"].values())
+    union = spark.read.parquet(
+        *[_glob_escaped(e["path"]) for e in done["routes"].values()]
+    ).select("doc_id", "route", "parser")
+    assert lineage.content_digest(union) == lineage.content_digest(routed)
+    assert union.count() == routed.count()
+    assert not os.path.exists(staging)
+    assert [h["committed"] for h in done["history"]] == [
+        routes[:k] for k in range(len(routes) + 1)]
+
+
+def test_resume_fanout_escaped_route_names_and_empty_route(spark, tmp_path):
+    """Spark %XX-escapes ``= { [`` in partition directory names; each
+    staged directory maps back to its route by unescaping.  A pending
+    route with no rows commits an empty, readable sink."""
+    rows = [("d0", "a=b"), ("d1", "a=b"), ("d2", "x{y}"), ("d3", "[z]"),
+            ("d4", "[z]"), ("d5", "[z]")]
+    routed = spark.createDataFrame(rows, "doc_id string, route string")
+    base = str(tmp_path / "runs")
+    m = manifest.new_manifest(
+        "run-004", len(rows), {r: {} for r in ("a=b", "x{y}", "[z]", "none")})
+    manifest.save(base, "run-004", m)
+    done = manifest.resume_fanout(routed, m, base)
+    for route in ("a=b", "x{y}", "[z]", "none"):
+        e = done["routes"][route]
+        exp = sorted(r for r in rows if r[1] == route)
+        assert e["committed"] and e["n_rows"] == len(exp)
+        assert e["path"] == os.path.join(base, "run-004", "sinks", route)
+        back = spark.read.parquet(_glob_escaped(e["path"]))
+        assert back.columns == ["doc_id", "route"]
+        assert sorted(tuple(r) for r in back.collect()) == exp
 
 
 def test_salted_agg_matches_plain(spark):

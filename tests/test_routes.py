@@ -29,9 +29,9 @@ def _eval_routes(spark, template, data, fields):
     safe = {n: n.replace(".", "__") for n in fields}
     schema = ", ".join(f"{safe[n]}_v string, {safe[n]}_c int" for n in fields)
     df = spark.createDataFrame(rows, schema)
-    col = routes.compile_template(
-        template, {n: (F.col(f"{safe[n]}_v"), F.col(f"{safe[n]}_c")) for n in fields}
-    )
+    col = F.expr(routes.compile_template(
+        template, {n: (f"{safe[n]}_v", f"{safe[n]}_c") for n in fields}
+    ))
     return [r[0] for r in df.select(col).collect()]
 
 
@@ -89,7 +89,7 @@ def test_sanitize_spark(spark):
     df = spark.createDataFrame([(i, s) for i, (s, _) in enumerate(SANITIZE_CASES)],
                                "i int, s string")
     got = [r[0] for r in
-           df.orderBy("i").select(sanitize.sanitize_sink_name(F.col("s"))).collect()]
+           df.orderBy("i").select(F.expr(sanitize.sanitize_sink_name("s"))).collect()]
     assert got == [e for _, e in SANITIZE_CASES]
 
 
@@ -131,3 +131,35 @@ def test_parse_replace_guard_group_containing_separator(spark):
     assert row["parser"] == "kv_plain"
     assert row["doc"] == f"a{parse_op.GROUP_SEP}b"   # intact, not shifted
     assert row["src"] == "x" and row["n"] == "5"
+
+
+def test_plan_construction_py4j_budget(spark, monkeypatch):
+    """Planning build + cast_single_pass costs a few hundred Py4J round
+    trips: each output column is one ``F.expr`` over composed SQL text.
+    The Column-DSL form paid one round trip per expression node, ~16k."""
+    import py4j.java_gateway as jg
+
+    from ulp_spark import fixtures
+    from ulp_spark.operators import lattice, parse, route_cast
+    from ulp_spark.plans import pipeline
+
+    fields = parse.all_fields(parse.DEFAULT_PATTERNS)
+    lines = fixtures.raw_lines(spark, 50)
+    seqs = fixtures.sequences(spark, 50)
+    schemas = lattice.route_schemas(
+        pipeline.build(spark, lines_df=lines, sequences_df=seqs)
+        .routed.filter(~F.col("parse_error")), fields)
+
+    calls = {"n": 0}
+    send = jg.GatewayClient.send_command
+
+    def counted(self, *a, **kw):
+        calls["n"] += 1
+        return send(self, *a, **kw)
+
+    monkeypatch.setattr(jg.GatewayClient, "send_command", counted)
+    p = pipeline.build(spark, lines_df=lines, sequences_df=seqs)
+    route_cast.cast_single_pass(
+        p.routed.filter(~F.col("parse_error")), schemas, fields)
+    monkeypatch.undo()
+    assert 0 < calls["n"] <= 1500, calls

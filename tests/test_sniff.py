@@ -79,7 +79,7 @@ CASES = [
 @pytest.fixture(scope="module")
 def sniffed(spark):
     df = spark.createDataFrame([(i, s) for i, (s, _) in enumerate(CASES)], "i int, s string")
-    rows = df.select("i", sniff.sniff_code(F.col("s")).alias("c")).orderBy("i").collect()
+    rows = df.select("i", F.expr(sniff.sniff_code("s")).alias("c")).orderBy("i").collect()
     return [r.c for r in rows]
 
 
@@ -121,7 +121,7 @@ def test_resolve_mask_py():
 def test_resolve_mask_spark_matches_py(spark):
     masks = list(range(1, 256))
     df = spark.createDataFrame([(m,) for m in masks], "m int")
-    rows = df.select("m", sniff.resolve_mask(F.col("m")).alias("c")).orderBy("m").collect()
+    rows = df.select("m", F.expr(sniff.resolve_mask("m")).alias("c")).orderBy("m").collect()
     for r in rows:
         assert r.c == sniff.resolve_mask_py(r.m), f"mask={r.m}"
 
@@ -176,7 +176,7 @@ def test_sniff_three_engine_fuzz(spark):
     py = [oracle.sniff_py(s) for s in strings]
     df = spark.createDataFrame(
         [(i, s) for i, s in enumerate(strings)], "i int, s string")
-    sp = [r.c for r in df.select("i", sniff.sniff_code(F.col("s")).alias("c"))
+    sp = [r.c for r in df.select("i", F.expr(sniff.sniff_code("s")).alias("c"))
           .orderBy("i").collect()]
     con = duckdb.connect()
     con.execute("CREATE TABLE t (i INT, s VARCHAR)")
@@ -188,3 +188,44 @@ def test_sniff_three_engine_fuzz(spark):
     for i, s in enumerate(strings):
         assert py[i] == sp[i] == dk[i], (
             f"engine drift on {s!r}: py={py[i]} spark={sp[i]} duck={dk[i]}")
+
+
+def test_sql_text_is_conf_independent(spark, sniffed):
+    """The SQL-text builders mean the same under either setting of
+    ``spark.sql.parser.escapedStringLiterals`` (the Column DSL never
+    depended on it): the sniff golden cases, a parse_lines case with a
+    separator-poisoned line (regexes with backslashes) and a date cast
+    (a format with quotes) give the default conf's rows."""
+    from ulp_spark.functions import casts
+    from ulp_spark.operators import parse as parse_op
+
+    key = "spark.sql.parser.escapedStringLiterals"
+    df = spark.createDataFrame([(i, s) for i, (s, _) in enumerate(CASES)],
+                               "i int, s string")
+    lines = spark.createDataFrame(
+        [(f"2024-01-01T00:00:00Z INFO doc=a{parse_op.GROUP_SEP}b src=x n=5",),
+         ('2024-01-01T00:00:00Z WARN provider="P \\ q" doc=d src= n=7',)],
+        "line string")
+    dates = spark.createDataFrame(
+        [("2022-03-23T10:00:00+01:00",), ("2022-03-23t10:00:00.5z",)],
+        "s string")
+
+    def run():
+        codes = [r.c for r in df.select("i", F.expr(sniff.sniff_code("s"))
+                                        .alias("c")).orderBy("i").collect()]
+        parsed = sorted(repr(tuple(r)) for r in
+                        parse_op.parse_lines(lines).collect())
+        val, _ = casts.cast_field("s", str(sniff.STR), sniff.DATE)
+        cast = [r[0] for r in dates.select(F.expr(val)).collect()]
+        return codes, parsed, cast
+
+    default = run()
+    assert default[0] == sniffed
+    assert default[2] == ["2022-03-23T09:00:00+00:00",
+                          "2022-03-23T10:00:00.5+00:00"]
+    spark.conf.set(key, "true")
+    try:
+        escaped = run()
+    finally:
+        spark.conf.unset(key)
+    assert escaped == default

@@ -104,6 +104,25 @@ def test_cast_single_pass_missing_field_error_is_false_not_null(spark):
         + out.filter(~F.col("cast_error")).count() == 2
 
 
+def test_cast_single_pass_ipv6_branch(spark):
+    """IPv6 is the one cast branch composed as a Column (its
+    canonicalization is a pandas UDF); in a field whose routes also take
+    SQL-text targets, every route still gets its own cast."""
+    from ulp_spark.functions import sniff as sn
+    from ulp_spark.operators import route_cast
+
+    df = spark.createDataFrame(
+        [("A", "0:0:0:0:0:0:0:1"), ("A", "::FFFF:1.2.3.4"),
+         ("B", "0:0:0:0:0:0:0:1"), ("C", "12")], "route string, f string")
+    df = df.select("*", F.lit(sn.STR).alias("f__r"))
+    schemas = {"A": {"f": sn.IPV6}, "B": {"f": sn.STR}, "C": {"f": sn.INT}}
+    out = route_cast.cast_single_pass(df, schemas, ["f"])
+    assert sorted(tuple(r) for r in out.select(
+        "route", "f__cast", "cast_error").collect()) == [
+        ("A", "::1", False), ("A", "::ffff:1.2.3.4", False),
+        ("B", "0:0:0:0:0:0:0:1", False), ("C", "12", False)]
+
+
 def test_ivf_trained_fewer_rows_than_k(spark):
     from ulp_spark.operators import similarity
 

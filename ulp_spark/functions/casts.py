@@ -19,8 +19,10 @@ and the target ``Types`` from the merged route map
   "::1", ``lib.rs:375-376``); -> date RFC3339 re-emitted as UTC "+00:00"
   (``lib.rs:377``)
 
-Every rule is a Column expression except IPv6 canonicalization, which is an
-Arrow-batched pandas UDF over Python ``ipaddress`` (no JVM-side equivalent).
+Every rule is Spark SQL text (see :mod:`ulp_spark.functions.sqltext`)
+except IPv6 canonicalization, which is an Arrow-batched pandas UDF over
+Python ``ipaddress`` (no JVM-side equivalent), composed as a Column around
+its one branch (:func:`value_column`).
 
 Outputs are (value, error) pairs: the reference fails the whole record on
 the first cast error (``lib.rs:389-397``); the pipeline turns the per-field
@@ -41,34 +43,35 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ulp_spark.functions import sniff
+from ulp_spark.functions import sniff, sqltext
 from ulp_spark.functions.sniff import (
     BOOL, DATE, FLOAT, INT, IPV4, IPV6, NULL, STR,
     RE_DATE, RE_FLOAT, RE_IPV4, RE_IPV6,
 )
+from ulp_spark.functions.sqltext import ident, lit
 
 I32_MAX, I32_MIN = 2147483647, -2147483648
 
 
-def _bool_value(col: Column) -> Column:
+def _bool_value(e: str) -> str:
     """str_bool (``types.rs:159-167``): true/false words, else str_int ∈ {0,1}."""
-    low = F.lower(F.trim(col))
-    iv = sniff._int_value(col)
+    low = f"lower(trim({e}))"
+    iv = sniff.int_value(e)
     return (
-        F.when(low == "true", F.lit(True))
-        .when(low == "false", F.lit(False))
-        .when(iv == 1, F.lit(True))
-        .when(iv == 0, F.lit(False))
-        .otherwise(F.lit(None).cast("boolean"))
+        f"CASE WHEN {low} = {lit('true')} THEN true"
+        f" WHEN {low} = {lit('false')} THEN false"
+        f" WHEN ({iv}) = 1 THEN true WHEN ({iv}) = 0 THEN false"
+        f" ELSE CAST(NULL AS BOOLEAN) END"
     )
 
 
-def _float_value(col: Column) -> Column:
+def _float_value(e: str) -> str:
     """f64::from_str success as double, finite only: ``Number::from_f64``
     rejects inf/NaN (``lib.rs:371-373``), and an overflowing literal like
     "1e999" parses to +inf — it must null out (-> cast error), not pass."""
-    raw = F.when(col.rlike(RE_FLOAT), col.try_cast("double"))
-    return F.when(~F.isnan(raw) & (F.abs(raw) != float("inf")), raw)
+    raw = f"CASE WHEN {e} RLIKE {lit(RE_FLOAT)} THEN try_cast({e} AS DOUBLE) END"
+    return (f"CASE WHEN (NOT isnan({raw})"
+            f" AND abs({raw}) != CAST({lit('Infinity')} AS DOUBLE)) THEN {raw} END")
 
 
 _ipv6_udf_cache: tuple = (None, None)  # (session, udf)
@@ -108,7 +111,13 @@ def ipv6_canonical(col: Column) -> Column:
     return _ipv6_udf_cache[1](col)
 
 
-def _date_canonical(col: Column, is_date: Column | None = None) -> Column:
+_RE_FRAC = r"\.[0-9]+"
+_RE_OFFSET = r"([+-][0-9]{2}:[0-9]{2})$"
+_RE_ZONE = r"(Z|[+-][0-9]{2}:[0-9]{2})$"
+_UTC_FORMAT = "yyyy-MM-dd'T'HH:mm:ss"
+
+
+def _date_canonical(e: str, is_date: str | None = None) -> str:
     """RFC3339 -> UTC RFC3339 with '+00:00' (chrono to_rfc3339, lib.rs:377).
 
     Implemented entirely on TIMESTAMP_NTZ + explicit offset arithmetic so
@@ -119,60 +128,70 @@ def _date_canonical(col: Column, is_date: Column | None = None) -> Column:
     Lowercase 't'/'z' separators (RFC3339-legal, chrono-accepted, matched
     by RE_DATE) are normalized first: in a RE_DATE-shaped string those
     letters can only be the separators, so translate() is safe."""
-    col = F.translate(col, "tz", "TZ")
-    stripped = F.regexp_replace(col, r"\.[0-9]+", "")
-    core = F.regexp_replace(stripped, r"(Z|[+-][0-9]{2}:[0-9]{2})$", "")
-    base = core.try_cast("timestamp_ntz")
-    off = F.regexp_extract(stripped, r"([+-][0-9]{2}:[0-9]{2})$", 1)
-    sign = F.when(off.startswith("-"), F.lit(-1)).otherwise(F.lit(1))
-    off_min = F.when(off == "", F.lit(0)).otherwise(
-        sign * (F.substring(off, 2, 2).cast("int") * 60
-                + F.substring(off, 5, 2).cast("int")))
-    utc = base - F.make_interval(mins=off_min)
-    frac = F.regexp_extract(col, r"(\.[0-9]+)", 1)
-    shape_ok = col.rlike(RE_DATE) if is_date is None else is_date
-    return F.when(
-        shape_ok & base.isNotNull(),
-        F.concat(F.date_format(utc, "yyyy-MM-dd'T'HH:mm:ss"), frac, F.lit("+00:00")),
+    e = f"translate({e}, {lit('tz')}, {lit('TZ')})"
+    stripped = f"regexp_replace({e}, {lit(_RE_FRAC)}, {lit('')})"
+    core = f"regexp_replace({stripped}, {lit(_RE_ZONE)}, {lit('')})"
+    base = f"try_cast({core} AS TIMESTAMP_NTZ)"
+    off = f"regexp_extract({stripped}, {lit(_RE_OFFSET)}, 1)"
+    sign = f"CASE WHEN startswith({off}, {lit('-')}) THEN -1 ELSE 1 END"
+    off_min = (f"CASE WHEN {off} = {lit('')} THEN 0"
+               f" ELSE ({sign}) * (CAST(substring({off}, 2, 2) AS INT) * 60"
+               f" + CAST(substring({off}, 5, 2) AS INT)) END")
+    utc = f"({base} - make_interval(0, 0, 0, 0, 0, {off_min}, 0))"
+    frac = f"regexp_extract({e}, {lit('(' + _RE_FRAC + ')')}, 1)"
+    shape_ok = f"{e} RLIKE {lit(RE_DATE)}" if is_date is None else is_date
+    return (
+        f"CASE WHEN ({shape_ok}) AND {base} IS NOT NULL"
+        f" THEN concat(date_format({utc}, {lit(_UTC_FORMAT)}),"
+        f" {frac}, {lit('+00:00')}) END"
     )
 
 
-def helper_columns(field: str) -> list[Column]:
-    """Shared parse helpers for one field, to be SELECTed once per frame:
-    ``<f>__iv`` (str_int view), ``<f>__bv`` (str_bool), ``<f>__fv`` (f64).
+def helper_columns(field: str) -> list[str]:
+    """Shared parse helpers for one field, as ``selectExpr`` items to be
+    SELECTed once per frame: ``<f>__iv`` (str_int view), ``<f>__bv``
+    (str_bool), ``<f>__fv`` (f64).
 
     These sub-expressions are big (regex + conv cascades); computing them as
     real columns keeps downstream cast cascades O(routes) instead of
     O(routes x |subexpr|) — without this the multi-route cast plan blows the
-    Catalyst tree (observed: JVM heap OOM at 6 fields x 6 routes).
+    Catalyst tree (observed: JVM heap OOM at 6 fields x 6 routes).  The
+    casts then read them through ``cast_field``'s ``iv``/``bv``/``fv``
+    column references.
     """
-    c = F.col(field)
+    c = ident(field)
     return [
-        sniff._int_value(c).alias(f"{field}__iv"),
-        _bool_value(c).alias(f"{field}__bv"),
-        _float_value(c).alias(f"{field}__fv"),
+        f"{sniff.int_value(c)} AS {ident(field + '__iv')}",
+        f"{_bool_value(c)} AS {ident(field + '__bv')}",
+        f"{_float_value(c)} AS {ident(field + '__fv')}",
     ]
 
 
 def cast_field(
-    value: Column,
-    rcode: Column,
+    value: str,
+    rcode: str,
     target: int,
-    iv: Column | None = None,
-    bv: Column | None = None,
-    fv: Column | None = None,
-    sniff_code: Column | None = None,
-) -> tuple[Column, Column]:
-    """Cast one field to a target type code.
+    iv: str | None = None,
+    bv: str | None = None,
+    fv: str | None = None,
+    sniff_code: str | None = None,
+) -> tuple[str, str]:
+    """Cast one field to a target type code, as SQL text.
 
     ``value`` is the field's raw string form; ``rcode`` its JSON runtime type
     (sniff.runtime_code of the sniffed code: NULL/BOOL/INT/FLOAT/STR).
-    Returns (casted-value Column of the target's native Spark type, error
-    Column).  Native types: bool->boolean, int->long, float->double,
+    Returns (casted value of the target's native Spark type, error flag),
+    both SQL text.  Native types: bool->boolean, int->long, float->double,
     null->string(null), others->string.
 
-    ``iv``/``bv``/``fv`` accept pre-computed :func:`helper_columns` to avoid
-    re-inlining the heavy sub-expressions in multi-route cascades.
+    IPV6 is the one target whose value text is not final: it is the
+    VALIDATED address, and the caller composes :func:`ipv6_canonical` — a
+    pandas UDF, which has no SQL-text form short of a session temp function
+    — around that one branch as a Column (:func:`value_column`).
+
+    ``iv``/``bv``/``fv`` accept references to pre-computed
+    :func:`helper_columns` to avoid re-inlining the heavy sub-expressions
+    in multi-route cascades.
 
     ``sniff_code`` optionally passes the field's ALREADY-SNIFFED type code
     (the parse stage's ``<f>__t``).  The DATE branch then tests
@@ -185,88 +204,91 @@ def cast_field(
     length-incompatible), and the DATE branch itself is that rlike.
     Callers without a staged sniff column omit it and keep the regex.
     """
-    iv = iv if iv is not None else sniff._int_value(value)
-    bv = bv if bv is not None else _bool_value(value)
-    fv = fv if fv is not None else _float_value(value)
-    is_null, is_bool = rcode == NULL, rcode == BOOL
-    is_int, is_float, is_str = rcode == INT, rcode == FLOAT, rcode == STR
+    iv = f"({iv if iv is not None else sniff.int_value(value)})"
+    bv = f"({bv if bv is not None else _bool_value(value)})"
+    fv = f"({fv if fv is not None else _float_value(value)})"
+    is_null, is_bool = f"({rcode}) = {NULL}", f"({rcode}) = {BOOL}"
+    is_int, is_float = f"({rcode}) = {INT}", f"({rcode}) = {FLOAT}"
+    is_str = f"({rcode}) = {STR}"
 
     if target == NULL:
         # null<-anything is allowed except str whose content isn't "null"/"0"
         # (types.rs:77-79,98-100,127-130,150-156)
-        err = is_str & ~((F.lower(F.trim(value)) == "null") | (value == "0"))
-        return F.lit(None).cast("string"), err
+        err = (f"({is_str} AND NOT (lower(trim({value})) = {lit('null')}"
+               f" OR {value} = {lit('0')}))")
+        return "CAST(NULL AS STRING)", err
 
     if target == BOOL:
         val = (
-            F.when(is_null, F.lit(False))
-            .when(is_bool, bv)
-            .when(is_int, F.when(iv.isin(0, 1), iv == 1))
-            .when(is_float, F.when(fv.isin(0.0, 1.0), fv == 1.0))
-            .when(is_str, bv)
+            f"CASE WHEN {is_null} THEN false WHEN {is_bool} THEN {bv}"
+            f" WHEN {is_int} THEN CASE WHEN {iv} IN (0, 1) THEN {iv} = 1 END"
+            f" WHEN {is_float}"
+            f" THEN CASE WHEN {fv} IN (0.0D, 1.0D) THEN {fv} = 1.0D END"
+            f" WHEN {is_str} THEN {bv} END"
         )
-        err = (
-            (is_int & ~iv.isin(0, 1))
-            | (is_float & ~fv.isin(0.0, 1.0))
-            | (is_str & bv.isNull())
-        )
+        err = (f"(({is_int} AND NOT {iv} IN (0, 1))"
+               f" OR ({is_float} AND NOT {fv} IN (0.0D, 1.0D))"
+               f" OR ({is_str} AND {bv} IS NULL))")
         return val, err
 
     if target == INT:
         val = (
-            F.when(is_null, F.lit(0).cast("bigint"))
-            .when(is_bool | is_int | is_str, iv)
-            .when(is_float, F.round(fv).cast("bigint"))
+            f"CASE WHEN {is_null} THEN CAST(0 AS BIGINT)"
+            f" WHEN ({is_bool} OR {is_int} OR {is_str}) THEN {iv}"
+            f" WHEN {is_float} THEN CAST(round({fv}) AS BIGINT) END"
         )
         # bool/null runtimes never error here; str errors when str_int misses
-        # (true/false words already yield 1/0 through _int_value)
-        err = is_str & iv.isNull()
-        return val, err
+        # (true/false words already yield 1/0 through int_value)
+        return val, f"({is_str} AND {iv} IS NULL)"
 
     if target == FLOAT:
         clamped = (
-            F.when(iv > I32_MAX, F.lit(float(I32_MAX)))
-            .when(iv < I32_MIN, F.lit(float(I32_MIN)))
-            .otherwise(iv.cast("double"))
+            f"CASE WHEN {iv} > {I32_MAX} THEN {float(I32_MAX)}D"
+            f" WHEN {iv} < {I32_MIN} THEN {float(I32_MIN)}D"
+            f" ELSE CAST({iv} AS DOUBLE) END"
         )
         val = (
-            F.when(is_null, F.lit(0.0))
-            .when(is_bool, bv.cast("int").cast("double"))
-            .when(is_int, clamped)
-            .when(is_float, fv)
-            .when(is_str, fv)
+            f"CASE WHEN {is_null} THEN 0.0D"
+            f" WHEN {is_bool} THEN CAST(CAST({bv} AS INT) AS DOUBLE)"
+            f" WHEN {is_int} THEN {clamped}"
+            f" WHEN {is_float} THEN {fv} WHEN {is_str} THEN {fv} END"
         )
-        err = is_str & fv.isNull()
-        return val, err
+        return val, f"({is_str} AND {fv} IS NULL)"
 
     if target == STR:
         val = (
-            F.when(is_null, F.lit("null"))
-            .when(is_bool, F.when(bv, "true").otherwise("false"))
-            .when(is_int, iv.cast("string"))
-            .when(is_float, fv.cast("string"))
-            .when(is_str, value)
+            f"CASE WHEN {is_null} THEN {lit('null')}"
+            f" WHEN {is_bool}"
+            f" THEN CASE WHEN {bv} THEN {lit('true')} ELSE {lit('false')} END"
+            f" WHEN {is_int} THEN CAST({iv} AS STRING)"
+            f" WHEN {is_float} THEN CAST({fv} AS STRING)"
+            f" WHEN {is_str} THEN {value} END"
         )
-        return val, F.lit(False)
+        return val, "false"
 
-    if target == IPV4:
+    if target in (IPV4, IPV6):
         # Only a runtime string can cast to IP/date (lib.rs:367-377); the
-        # parse round-trip is the identity for valid dotted-quads.
-        ok = is_str & value.rlike(RE_IPV4)
-        return F.when(ok, value), ~ok
-
-    if target == IPV6:
-        ok = is_str & value.rlike(RE_IPV6)
-        return F.when(ok, ipv6_canonical(value)), ~ok
+        # parse round-trip is the identity for valid dotted-quads, and an
+        # IPv6 address is canonicalized by value_column.
+        pattern = RE_IPV4 if target == IPV4 else RE_IPV6
+        ok = f"({is_str} AND {value} RLIKE {lit(pattern)})"
+        return f"CASE WHEN {ok} THEN {value} END", f"NOT {ok}"
 
     if target == DATE:
         canon = _date_canonical(
-            value,
-            None if sniff_code is None else sniff_code == DATE)
-        ok = is_str & canon.isNotNull()
-        return F.when(ok, canon), ~ok
+            value, None if sniff_code is None else f"({sniff_code}) = {DATE}")
+        ok = f"({is_str} AND ({canon}) IS NOT NULL)"
+        return f"CASE WHEN {ok} THEN {canon} END", f"NOT {ok}"
 
     raise ValueError(f"unknown target type code {target}")
+
+
+def value_column(value: str, target: int, name: str) -> Column:
+    """The output Column of a :func:`cast_field` value: its one ``F.expr``,
+    with :func:`ipv6_canonical` composed around it for an IPv6 target."""
+    if target == IPV6:
+        return ipv6_canonical(F.expr(value)).alias(name)
+    return sqltext.column(value, name)
 
 
 # --------------------------------------------------------------------------

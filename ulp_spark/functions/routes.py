@@ -1,5 +1,5 @@
 """P4/P5 — route templates: compile once on the driver, evaluate as a single
-``concat`` Column expression per row.
+``concat`` SQL expression per row.
 
 Reference: ``IndexPatternObject::from(&str)`` splits ``"lit_{{path}}_lit"``
 into (part, eval) pieces (``src/type_map.rs:14-35``);
@@ -23,10 +23,8 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from ulp_spark.functions import sniff
+from ulp_spark.functions.sqltext import lit
 
 _TOKEN = re.compile(r"\{\{(.+?)\}\}")
 
@@ -45,8 +43,9 @@ def split_template(template: str) -> list[tuple[str, bool]]:
     return parts
 
 
-def field_part(value: Column, type_code: Column) -> Column:
-    """Route contribution of one extracted field (P5 semantics).
+def field_part(value: str, type_code: str) -> str:
+    """Route contribution of one extracted field (P5 semantics), as SQL
+    text over the field's value and sniffed-code expressions.
 
     Evaluates on the MATERIALIZED JSON runtime type: IPv4/IPv6/Date-sniffed
     values are runtime strings (``as_str()`` succeeds in the reference), so
@@ -59,29 +58,28 @@ def field_part(value: Column, type_code: Column) -> Column:
     """
     rcode = sniff.materialized_runtime_code(value, type_code)
     return (
-        F.when(value.isNull(), F.lit("NONE"))
-        .when(rcode == sniff.STR, value)
-        .otherwise(F.lit(""))  # numeric/bool/null scalars: silent empty
+        f"CASE WHEN {value} IS NULL THEN {lit('NONE')}"
+        f" WHEN ({rcode}) = {sniff.STR} THEN {value}"
+        f" ELSE {lit('')} END"  # numeric/bool/null scalars: silent empty
     )
 
 
-def compile_template(template: str, fields: dict[str, tuple[Column, Column]]) -> Column:
-    """Compile a route template into one Column.
+def compile_template(template: str, fields: dict[str, tuple[str, str]]) -> str:
+    """Compile a route template into one SQL-text expression.
 
-    ``fields`` maps field name -> (value column, sniffed type-code column).
-    Unknown field names evaluate as missing (-> "NONE"), matching the
-    reference's get_value miss (``src/type_map.rs:44-46``).
+    ``fields`` maps field name -> (value expression, sniffed type-code
+    expression).  Unknown field names evaluate as missing (-> "NONE"),
+    matching the reference's get_value miss (``src/type_map.rs:44-46``).
     """
-    cols: list[Column] = []
+    parts: list[str] = []
     for text, is_eval in split_template(template):
         if not is_eval:
-            cols.append(F.lit(text))
+            parts.append(lit(text))
         elif text in fields:
-            value, code = fields[text]
-            cols.append(field_part(value, code))
+            parts.append(field_part(*fields[text]))
         else:
-            cols.append(F.lit("NONE"))
-    return F.concat(*cols) if cols else F.lit("")
+            parts.append(lit("NONE"))
+    return f"concat({', '.join(parts)})" if parts else lit("")
 
 
 def field_part_sql(value_expr: str, code_expr: str) -> str:

@@ -5,27 +5,26 @@ Order pinned from the reference: ASCII lowercase -> strip
 leading ``.``, then leading ``-`` (three SEQUENTIAL trims, the Rust order:
 ``-_foo`` keeps ``_foo``, it does not strip the mixed run).  Lowercasing is
 ASCII-only (``make_ascii_lowercase`` — non-ASCII bytes untouched), so
-``É`` survives as-is rather than mapping to ``é``.  Pure Column expression
-(and a DuckDB twin), no UDF.
+``É`` survives as-is rather than mapping to ``é``.  Pure SQL-text
+expression (and a separate DuckDB twin), no UDF.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from ulp_spark.functions.sqltext import lit
 
 _BAD = r'[:"*+/\\|?#%><]'
 _UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
 _LOWER = "abcdefghijklmnopqrstuvwxyz"
 
 
-def sanitize_sink_name(col: Column) -> Column:
-    out = F.translate(col, _UPPER, _LOWER)  # ASCII-only lowercase
-    out = F.regexp_replace(out, _BAD, "")
-    out = F.regexp_replace(out, " ", "_")
-    out = F.regexp_replace(out, "^_+", "")
-    out = F.regexp_replace(out, r"^\.+", "")
-    return F.regexp_replace(out, "^-+", "")
+def sanitize_sink_name(e: str) -> str:
+    """SQL text sanitizing the string expression ``e`` into a sink name."""
+    out = f"translate({e}, {lit(_UPPER)}, {lit(_LOWER)})"  # ASCII-only lowercase
+    for pattern, repl in ((_BAD, ""), (" ", "_"), ("^_+", ""),
+                          (r"^\.+", ""), ("^-+", "")):
+        out = f"regexp_replace({out}, {lit(pattern)}, {lit(repl)})"
+    return out
 
 
 def sanitize_sink_name_sql(expr: str) -> str:

@@ -17,10 +17,15 @@ accepts decimal i64, ``0x…`` hex, and the words true/false
 * float accepts ``inf``/``NaN`` (``f64::from_str``);
 * date is RFC3339 only (``types.rs:197-202``).
 
-Implementation: a single ``when``-cascade of regex/try_cast checks — pure
-Catalyst expressions, no Python in the hot path.  The same regex constants
-are emitted into DuckDB oracle SQL so both engines classify identically
-(patterns use only the Java-regex ∩ RE2 subset).
+Implementation: one SQL-text ``CASE`` cascade of regex/try_cast checks
+(:func:`sniff_code`) — pure Catalyst expressions, no Python in the hot
+path.  Every Spark-side builder here takes SQL-text operands and returns
+SQL text (see :mod:`ulp_spark.functions.sqltext`), so the cascade nests
+inside the parse, route and cast builders by string composition and its
+caller pays one ``F.expr``, not one Py4J round trip per node.  The same
+regex constants are emitted into the separate DuckDB oracle SQL (the
+``*_sql`` twins below) so both engines classify identically (patterns use
+only the Java-regex ∩ RE2 subset).
 
 Documented deviations (pinned in tests/test_sniff.py):
 * decimal-int parse uses ``try_cast(bigint)`` guarded by an untrimmed regex —
@@ -36,8 +41,7 @@ Documented deviations (pinned in tests/test_sniff.py):
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from ulp_spark.functions.sqltext import lit
 
 # Lattice codes: stable ints used everywhere (engine, oracle SQL, manifest).
 NULL, BOOL, INT, FLOAT, IPV4, IPV6, DATE, STR = range(8)
@@ -107,34 +111,36 @@ RE_DATE = (
 )
 
 
-def _is_dec_int(col: Column) -> Column:
+def _is_dec_int(e: str) -> str:
     """Rust ``i64::from_str`` success (untrimmed, range-checked)."""
-    return col.rlike(RE_INT) & col.try_cast("bigint").isNotNull()
+    return f"({e} RLIKE {lit(RE_INT)} AND try_cast({e} AS BIGINT) IS NOT NULL)"
 
 
-def _is_hex_int(col: Column) -> Column:
+def _is_hex_int(e: str) -> str:
     """Rust hex fallback: lowercase-trimmed ``0x…`` within i64 range."""
-    return F.lower(F.trim(col)).rlike(RE_HEX)
+    return f"(lower(trim({e})) RLIKE {lit(RE_HEX)})"
 
 
-def _int_value(col: Column) -> Column:
+def int_value(e: str) -> str:
     """The i64 ``str_int`` would return (null when it errors).
 
     Order per ``types.rs:168-181``: decimal, then hex, then true/false words.
     """
-    low = F.lower(F.trim(col))
+    low = f"lower(trim({e}))"
     return (
-        F.when(_is_dec_int(col), col.try_cast("bigint"))
-        .when(_is_hex_int(col),
-              F.conv(F.regexp_replace(low, "^0x", ""), 16, 10).cast("bigint"))
-        .when(low == "true", F.lit(1).cast("bigint"))
-        .when(low == "false", F.lit(0).cast("bigint"))
-        .otherwise(F.lit(None).cast("bigint"))
+        f"CASE WHEN {_is_dec_int(e)} THEN try_cast({e} AS BIGINT)"
+        f" WHEN {_is_hex_int(e)}"
+        f" THEN CAST(conv(regexp_replace({low}, {lit('^0x')}, {lit('')}),"
+        f" 16, 10) AS BIGINT)"
+        f" WHEN {low} = {lit('true')} THEN CAST(1 AS BIGINT)"
+        f" WHEN {low} = {lit('false')} THEN CAST(0 AS BIGINT)"
+        f" ELSE CAST(NULL AS BIGINT) END"
     )
 
 
-def sniff_code(col: Column) -> Column:
-    """Type code (0-7) for a string column — the fixed-order nested battery.
+def sniff_code(e: str) -> str:
+    """Type code (0-7) of a string SQL expression — the fixed-order nested
+    battery.
 
     Perf: cheap first-char / contains gates in front of each regex family.
     Every gate is a strict superset of its family's language (any i64/f64
@@ -144,40 +150,41 @@ def sniff_code(col: Column) -> Column:
     values that are plain words skip the whole numeric battery (measured
     ~2.5x on the parse stage at 1M rows).
     """
-    low = F.lower(F.trim(col))
-    iv = _int_value(col)
+    low = f"lower(trim({e}))"
+    iv = int_value(e)
     # int/float/bool-word parsers reach through trim (hex + word paths), so
     # their gate looks at the TRIMMED first char; IPv4/IPv6/Date parse the
     # raw string, so their gates look at the raw text.
-    first_t = F.substring(F.trim(col), 1, 1)
-    numericish = F.instr(F.lit("0123456789+-."), first_t) > 0
-    floatish = numericish | F.lower(first_t).isin("i", "n")
-    digit_start = F.instr(F.lit("0123456789"), F.substring(col, 1, 1)) > 0
+    first_t = f"substring(trim({e}), 1, 1)"
+    numericish = f"(instr({lit('0123456789+-.')}, {first_t}) > 0)"
+    floatish = f"({numericish} OR lower({first_t}) IN ({lit('i')}, {lit('n')}))"
+    digit_start = f"(instr({lit('0123456789')}, substring({e}, 1, 1)) > 0)"
     # every dotted-quad contains '.', so digit-start non-dotted values
     # (timestamps, plain ints) skip the IPv4 regex — same superset-gate
     # rule as the other gates, classification unchanged (r6)
-    has_dot = F.instr(col, ".") > 0
+    has_dot = f"(instr({e}, {lit('.')}) > 0)"
     # '-' is not in the IPv6 alphabet, so RFC3339 timestamps (very common in
     # log fields, always colon-bearing) must not reach the 11-alternation
     # IPv6 regex — without this gate it ran on every timestamp row and
     # dominated the whole sniff battery.
-    has_colon = (F.instr(col, ":") > 0) & (F.instr(col, "-") == 0)
+    has_colon = f"(instr({e}, {lit(':')}) > 0 AND instr({e}, {lit('-')}) = 0)"
     return (
-        F.when(col.isNull(), F.lit(NULL))
-        .when((low == "null") | (col == "0"), F.lit(NULL))
-        .when((low == "true") | (low == "false")
-              | (numericish & iv.isin(0, 1)), F.lit(BOOL))
-        .when(numericish & iv.isNotNull(), F.lit(INT))
-        .when(floatish & (col.rlike(RE_FLOAT) | col.rlike(RE_FLOAT_SPECIAL)),
-              F.lit(FLOAT))
-        .when(digit_start & has_dot & col.rlike(RE_IPV4), F.lit(IPV4))
-        .when(has_colon & col.rlike(RE_IPV6), F.lit(IPV6))
-        .when(digit_start & col.rlike(RE_DATE), F.lit(DATE))
-        .otherwise(F.lit(STR))
+        f"CASE WHEN {e} IS NULL THEN {NULL}"
+        f" WHEN ({low} = {lit('null')} OR {e} = {lit('0')}) THEN {NULL}"
+        f" WHEN ({low} = {lit('true')} OR {low} = {lit('false')}"
+        f" OR ({numericish} AND ({iv}) IN (0, 1))) THEN {BOOL}"
+        f" WHEN ({numericish} AND ({iv}) IS NOT NULL) THEN {INT}"
+        f" WHEN ({floatish} AND ({e} RLIKE {lit(RE_FLOAT)}"
+        f" OR {e} RLIKE {lit(RE_FLOAT_SPECIAL)})) THEN {FLOAT}"
+        f" WHEN ({digit_start} AND {has_dot} AND {e} RLIKE {lit(RE_IPV4)})"
+        f" THEN {IPV4}"
+        f" WHEN ({has_colon} AND {e} RLIKE {lit(RE_IPV6)}) THEN {IPV6}"
+        f" WHEN ({digit_start} AND {e} RLIKE {lit(RE_DATE)}) THEN {DATE}"
+        f" ELSE {STR} END"
     )
 
 
-def runtime_code(code: Column) -> Column:
+def runtime_code(code: str) -> str:
     """Collapse a sniffed code to its JSON *runtime* type.
 
     Sniffing types the map, not the value (``Types::get_type`` on
@@ -187,31 +194,31 @@ def runtime_code(code: Column) -> Column:
     JSON emitted by the parser (EVTX emits real numbers), which our parse
     stage mirrors by materializing sniffed scalars.
     """
-    return F.when(code.isin(IPV4, IPV6, DATE), F.lit(STR)).otherwise(code)
+    return (f"CASE WHEN ({code}) IN ({IPV4}, {IPV6}, {DATE}) THEN {STR}"
+            f" ELSE ({code}) END")
 
 
-def materialized_runtime_code(value: Column, code: Column) -> Column:
+def materialized_runtime_code(value: str, code: str) -> str:
     """Runtime type a parser would give this raw text when materializing
     typed JSON: like :func:`runtime_code`, but a Float sniff only becomes a
     runtime number when the text is a finite JSON-representable number —
     ``inf``/``NaN``/overflowing exponents can never appear as JSON numbers,
     so they stay runtime strings (and still type the map as Float, exactly
     like ``Value::String("inf")`` in the reference)."""
-    finite = value.rlike(RE_FLOAT) & ~F.isnan(value.try_cast("double")) \
-        & (F.abs(value.try_cast("double")) != float("inf"))
-    # nested when: the finite check (regex + casts) only evaluates on the
+    dbl = f"try_cast({value} AS DOUBLE)"
+    finite = (f"({value} RLIKE {lit(RE_FLOAT)} AND NOT isnan({dbl})"
+              f" AND abs({dbl}) != CAST({lit('Infinity')} AS DOUBLE))")
+    # nested CASE: the finite check (regex + casts) only evaluates on the
     # small Float-sniffed subset, not on every row
-    return F.when(
-        code == FLOAT,
-        F.when(finite, F.lit(FLOAT)).otherwise(F.lit(STR)),
-    ).otherwise(runtime_code(code))
+    return (f"CASE WHEN ({code}) = {FLOAT}"
+            f" THEN CASE WHEN {finite} THEN {FLOAT} ELSE {STR} END"
+            f" ELSE {runtime_code(code)} END")
 
 
-def sniff_mask(col: Column) -> Column:
-    """Bitmask (1 << code) — feed straight into ``bit_or`` aggregation."""
-    return F.element_at(
-        F.array(*[F.lit(b) for b in BIT[:8]]), sniff_code(col) + 1
-    )
+def code_mask(code: str) -> str:
+    """Bitmask (1 << code) of a type code — feed straight into ``bit_or``."""
+    bits = ", ".join(str(b) for b in BIT)
+    return f"element_at(array({bits}), ({code}) + 1)"
 
 
 # --------------------------------------------------------------------------
@@ -244,19 +251,18 @@ def merge_codes_py(a: int, b: int) -> int:
     return resolve_mask_py(BIT[a] | BIT[b])
 
 
-def resolve_mask(mask_col: Column) -> Column:
-    """Column-side resolution of a bit_or-merged mask to a type code."""
-    m = mask_col.bitwiseAND(F.lit(~BIT[NULL]))
-    single = m.bitwiseAND(m - 1) == 0
-    cascade = F.when(m == 0, F.lit(NULL))
-    for code in (BOOL, INT, FLOAT, IPV4, IPV6, DATE, STR, LIST, OBJECT):
-        cascade = cascade.when(single & (m == BIT[code]), F.lit(code))
+def resolve_mask(mask: str) -> str:
+    """SQL-text resolution of a bit_or-merged mask to a type code."""
+    m = f"(({mask}) & {~BIT[NULL]})"
+    single = f"(({m} & ({m} - 1)) = 0)"
+    branches = "".join(f" WHEN ({single} AND {m} = {BIT[code]}) THEN {code}"
+                       for code in (BOOL, INT, FLOAT, IPV4, IPV6, DATE, STR,
+                                    LIST, OBJECT))
     return (
-        cascade
-        .when(m.bitwiseAND(F.lit(~_NUMERIC_MASK)) == 0,
-              F.when(m.bitwiseAND(F.lit(BIT[FLOAT])) != 0, F.lit(FLOAT))
-               .otherwise(F.lit(INT)))
-        .otherwise(F.lit(STR))
+        f"CASE WHEN {m} = 0 THEN {NULL}{branches}"
+        f" WHEN ({m} & {~_NUMERIC_MASK}) = 0"
+        f" THEN CASE WHEN ({m} & {BIT[FLOAT]}) != 0 THEN {FLOAT} ELSE {INT} END"
+        f" ELSE {STR} END"
     )
 
 
@@ -265,7 +271,7 @@ def resolve_mask(mask_col: Column) -> Column:
 # --------------------------------------------------------------------------
 
 def int_value_sql(e: str) -> str:
-    """DuckDB twin of ``_int_value`` (str_int semantics)."""
+    """DuckDB twin of :func:`int_value` (str_int semantics)."""
     return f"""
     CASE
       WHEN regexp_matches({e}, '{RE_INT}')

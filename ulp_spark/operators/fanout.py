@@ -4,20 +4,22 @@ Reference: one Elasticsearch index per distinct route, docs routed row by
 row with buffered bulk POSTs and infinite retry (``src/elastic.rs:76-154``,
 ``src/workerpool.rs:104-126``).  Spark-side replacements:
 
-* the scalable shape: ONE pass, ``partitionBy(route)`` parquet/Iceberg
-  write — every route lands in its own directory/partition in a single
-  shuffle-free job (:func:`write_partitioned`);
-* the exact-parity shape: one write per route in sorted route order (the
-  reference's BTreeMap iteration), each committed independently so a
-  crash resumes where it stopped (``plans.manifest.resume_fanout``);
+* ONE pass, ``partitionBy(route)`` parquet/Iceberg write — every route
+  lands in its own directory/partition in a single shuffle-free job
+  (:func:`write_partitioned`);
+* resumable commits: ``plans.manifest.resume_fanout`` stages every pending
+  route through that one write, then commits the routes one by one in
+  sorted route order (the reference's BTreeMap iteration) — a rename into
+  ``sinks/<route>`` and a manifest save each — so a crash resumes where it
+  stopped;
 * idempotent commit: parquet/Iceberg atomic job commit replaces the
   reference's retry-forever loop (``src/elastic.rs:124-151``); re-running a
   committed route is a no-op via the manifest check (plans.manifest);
 * crash-safe per-route compaction (:func:`compact_route`,
   :func:`repair_compaction`).
 
-At cluster scale ``write_partitioned`` is the default: no driver loop, AQE
-coalesces output files, and per-partition stats become lineage rows.
+No driver loop writes per route: AQE coalesces output files, and
+per-partition stats become lineage rows.
 """
 
 from __future__ import annotations

@@ -26,20 +26,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ulp_spark.functions import sniff
+from ulp_spark.functions import sniff, sqltext
+from ulp_spark.functions.sqltext import ident, lit
 
 
 def field_masks(df: DataFrame, fields: list[str]) -> list:
     """bit_or aggregates per field; reuses parse-stage ``<f>__t`` sniff codes
     when present (one regex battery per value, total — not one per stage)."""
-    bits = F.array(*[F.lit(b) for b in sniff.BIT[:8]])
     aggs = []
     for f in fields:
-        if f"{f}__t" in df.columns:
-            mask = F.element_at(bits, F.col(f"{f}__t") + 1)
-        else:
-            mask = sniff.sniff_mask(F.col(f))
-        aggs.append(F.bit_or(mask).alias(f))
+        code = (ident(f"{f}__t") if f"{f}__t" in df.columns
+                else sniff.sniff_code(ident(f)))
+        aggs.append(sqltext.column(f"bit_or({sniff.code_mask(code)})", f))
     return aggs
 
 
@@ -62,13 +60,12 @@ def route_schema_frame(df: DataFrame, fields: list[str], route_col: str = "route
                        ) -> DataFrame:
     """A2 as a DataFrame (route, field, type_code) — oracle-comparable."""
     masks = df.groupBy(route_col).agg(*field_masks(df, fields))
-    pairs = F.array(*[
-        F.struct(F.lit(f).alias("field"),
-                 sniff.resolve_mask(F.col(f)).alias("type_code"))
-        for f in fields
-    ])
+    pairs = ", ".join(
+        f"named_struct({lit('field')}, {lit(f)},"
+        f" {lit('type_code')}, {sniff.resolve_mask(ident(f))})"
+        for f in fields)
     return (
-        masks.select(route_col, F.explode(pairs).alias("kv"))
+        masks.selectExpr(ident(route_col), f"explode(array({pairs})) AS kv")
         .select(route_col, "kv.field", "kv.type_code")
     )
 
@@ -175,38 +172,41 @@ def tree_to_spark_type(tree):
     return T.ArrayType(T.StringType(), True)
 
 
-def json_runtime_code(variant_value) -> "F.Column":
-    """JSON *runtime* type code of a VARIANT value (``Types::get_type``,
-    ``type_casting/src/types.rs:29-57``): numbers/bools/null map DIRECTLY to
-    INT/FLOAT/BOOL/NULL — they are never re-stringified and sniffed (JSON
-    number ``0`` is Int, not the ``"0"``-string Null quirk; ``1`` is Int,
-    not Bool).  Only actual JSON strings run the content battery.  Variant
-    preserves quotedness, which ``from_json(map<string,string>)`` destroyed
-    (the round-1 bias this replaces)."""
-    st = F.schema_of_variant(variant_value)
-    content = variant_value.cast("string")
+_RE_DECIMAL0 = r"^DECIMAL\([0-9]+,0\)$"
+
+
+def json_runtime_code(v: str) -> str:
+    """JSON *runtime* type code of a VARIANT expression, as SQL text
+    (``Types::get_type``, ``type_casting/src/types.rs:29-57``):
+    numbers/bools/null map DIRECTLY to INT/FLOAT/BOOL/NULL — they are never
+    re-stringified and sniffed (JSON number ``0`` is Int, not the
+    ``"0"``-string Null quirk; ``1`` is Int, not Bool).  Only actual JSON
+    strings run the content battery.  Variant preserves quotedness, which
+    ``from_json(map<string,string>)`` destroyed (the round-1 bias this
+    replaces)."""
+    st = f"schema_of_variant({v})"
     # serde_json Number rule (the reference's runtime): Int iff the value
     # fits i64 OR u64, else f64 -> Float.  Spark variant types u64-range
     # integers as DECIMAL(p,0), so a scale-0 decimal is Int exactly when
     # the VALUE lies in [i64::MIN, u64::MAX] — mirrors DuckDB's
     # BIGINT/UBIGINT/DOUBLE split at the same boundaries (verified).
-    is_dec0 = st.rlike(r"^DECIMAL\([0-9]+,0\)$")
-    dv = F.try_variant_get(variant_value, "$", "decimal(38,0)")
+    is_dec0 = f"{st} RLIKE {lit(_RE_DECIMAL0)}"
+    dv = f"try_variant_get({v}, {lit('$')}, {lit('decimal(38,0)')})"
     in_serde_int_range = (
-        (dv >= F.lit("-9223372036854775808").cast("decimal(38,0)"))
-        & (dv <= F.lit("18446744073709551615").cast("decimal(38,0)"))
-    )
+        f"{dv} >= CAST({lit('-9223372036854775808')} AS DECIMAL(38,0))"
+        f" AND {dv} <= CAST({lit('18446744073709551615')} AS DECIMAL(38,0))")
+    ints = ", ".join(lit(t) for t in ("BIGINT", "INT", "SMALLINT", "TINYINT"))
     return (
-        F.when(st == "VOID", F.lit(sniff.NULL))
-        .when(st == "BOOLEAN", F.lit(sniff.BOOL))
-        .when(st.isin("BIGINT", "INT", "SMALLINT", "TINYINT"), F.lit(sniff.INT))
-        .when(is_dec0 & in_serde_int_range, F.lit(sniff.INT))
-        .when(st.isin("DOUBLE", "FLOAT") | st.startswith("DECIMAL"),
-              F.lit(sniff.FLOAT))
-        .when(st.startswith("ARRAY"), F.lit(sniff.LIST))
-        .when(st.startswith("OBJECT") | st.startswith("STRUCT"),
-              F.lit(sniff.OBJECT))
-        .otherwise(sniff.sniff_code(content))
+        f"CASE WHEN {st} = {lit('VOID')} THEN {sniff.NULL}"
+        f" WHEN {st} = {lit('BOOLEAN')} THEN {sniff.BOOL}"
+        f" WHEN {st} IN ({ints}) THEN {sniff.INT}"
+        f" WHEN {is_dec0} AND {in_serde_int_range} THEN {sniff.INT}"
+        f" WHEN {st} IN ({lit('DOUBLE')}, {lit('FLOAT')})"
+        f" OR startswith({st}, {lit('DECIMAL')}) THEN {sniff.FLOAT}"
+        f" WHEN startswith({st}, {lit('ARRAY')}) THEN {sniff.LIST}"
+        f" WHEN startswith({st}, {lit('OBJECT')})"
+        f" OR startswith({st}, {lit('STRUCT')}) THEN {sniff.OBJECT}"
+        f" ELSE {sniff.sniff_code(f'CAST({v} AS STRING)')} END"
     )
 
 
@@ -235,14 +235,14 @@ def json_field_schema(df: DataFrame, json_col: str, key_cols: list[str] | None =
         f"WHERE ve.key IS NOT NULL",
         df=df,
     ).withColumnRenamed("__variant", "value")
-    bits = F.array(*[F.lit(b) for b in sniff.BIT])
-    mask = F.element_at(bits, json_runtime_code(F.col("value")) + 1)
+    mask = sniff.code_mask(json_runtime_code("`value`"))
     return (
         kv.groupBy(*keys, "field")
         .agg(
-            F.bit_or(mask).alias("mask"),
+            sqltext.column(f"bit_or({mask})", "mask"),
             F.count(F.lit(1)).alias("n_values"),
         )
-        .select(*keys, "field", sniff.resolve_mask(F.col("mask")).alias("type_code"),
+        .select(*keys, "field",
+                sqltext.column(sniff.resolve_mask("mask"), "type_code"),
                 "n_values")
     )

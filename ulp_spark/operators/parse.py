@@ -5,10 +5,16 @@ Reference: per-record Rust loops turning EVTX/MFT binaries into flat JSON
 detection by magic bytes (``src/lib.rs:58-72``).  Here the unit is a line
 (or any string payload column) and both steps are Column expressions:
 
-* detection = first matching pattern in a fixed-order registry (``rlike``
+* detection = first matching pattern in a fixed-order registry (``RLIKE``
   cascade — the analog of the magic-byte sniff);
 * extraction = one ``regexp_replace`` + split per row (per-field
   ``regexp_extract`` only as a fallback), JVM-side and codegen'd.
+
+Every stage is built as SQL text (patterns quoted by
+:func:`ulp_spark.functions.sqltext.lit`) and selected with one
+``selectExpr`` per stage: building the same cascades node by node with the
+Column DSL took ~9k Py4J round trips per call, the driver's largest cost
+in the route_fanout job, where the text form takes a few hundred.
 
 Why not a pandas UDF: one compiled Java regex per (pattern, field) runs
 inside whole-stage codegen with zero Python/Arrow transfer; profiling at
@@ -30,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ulp_spark.functions import sniff
+from ulp_spark.functions.sqltext import ident, lit
 
 
 @dataclass(frozen=True)
@@ -95,59 +102,57 @@ def parse_lines(
     separator), so the guard cannot miss.  The DuckDB twin
     :func:`parse_sql` mirrors the per-field ``regexp_extract`` shape.
     """
-    line = F.col(line_col)
-    parser = F.lit(None).cast("string")
+    line = ident(line_col)
+    parser = "CAST(NULL AS STRING)"
     for p in reversed(patterns):  # first match wins
-        parser = F.when(line.rlike(p.regex), F.lit(p.name)).otherwise(parser)
+        parser = (f"CASE WHEN {line} RLIKE {lit(p.regex)} THEN {lit(p.name)}"
+                  f" ELSE {parser} END")
 
     # Staged selects (not a withColumn loop): each stage's expressions
     # reference the previous stage's *attributes*, keeping the plan linear
     # in fields instead of re-inlining the detection cascade per field.
     fields = all_fields(patterns)
-    stage1 = df.select("*", parser.alias("parser"))
+    groups = {p.name: ident(f"__g_{p.name}") for p in patterns}
+    is_p = {p.name: f"`parser` = {lit(p.name)}" for p in patterns}
     garr = []
     for p in patterns:
         repl = GROUP_SEP.join(f"${i + 1}" for i in range(len(p.fields)))
         garr.append(
-            F.when(
-                F.col("parser") == p.name,
-                F.split(F.regexp_replace(line, p.regex, repl), GROUP_SEP),
-            ).alias(f"__g_{p.name}")
-        )
-    stage1 = stage1.select("*", *garr)
+            f"CASE WHEN {is_p[p.name]} THEN split(regexp_replace({line}, "
+            f"{lit(p.regex)}, {lit(repl)}), {lit(GROUP_SEP)}) END"
+            f" AS {groups[p.name]}")
+    stage1 = df.selectExpr("*", f"{parser} AS `parser`").selectExpr(
+        "*", *garr)
     value_cols = []
     for f in fields:
-        value = F.lit(None).cast("string")
+        value = "CAST(NULL AS STRING)"
         for p in reversed(patterns):
             if f in p.fields:
                 idx = p.fields.index(f) + 1
-                clean = F.size(F.col(f"__g_{p.name}")) == len(p.fields)
+                clean = f"size({groups[p.name]}) = {len(p.fields)}"
                 value = (
-                    F.when(
-                        (F.col("parser") == p.name) & clean,
-                        F.element_at(F.col(f"__g_{p.name}"), idx),
-                    )
-                    .when(  # group contained GROUP_SEP: slow-but-correct
-                        F.col("parser") == p.name,
-                        F.regexp_extract(line, p.regex, idx),
-                    )
-                    .otherwise(value)
+                    f"CASE WHEN {is_p[p.name]} AND {clean}"
+                    f" THEN element_at({groups[p.name]}, {idx})"
+                    # group contained GROUP_SEP: slow-but-correct
+                    f" WHEN {is_p[p.name]}"
+                    f" THEN regexp_extract({line}, {lit(p.regex)}, {idx})"
+                    f" ELSE {value} END"
                 )
-        value_cols.append(value.alias(f))
-    stage2 = stage1.select(
-        "*", F.col("parser").isNull().alias("parse_error"), *value_cols
+        value_cols.append(f"{value} AS {ident(f)}")
+    stage2 = stage1.selectExpr(
+        "*", "`parser` IS NULL AS parse_error", *value_cols
     ).drop(*[f"__g_{p.name}" for p in patterns])
-    stage3 = stage2.select(
-        "*", *[sniff.sniff_code(F.col(f)).alias(f"{f}__t") for f in fields]
-    )
-    return stage3.select(
-        "*",
-        *[
-            sniff.materialized_runtime_code(F.col(f), F.col(f"{f}__t"))
-            .alias(f"{f}__r")
-            for f in fields
-        ],
-    )
+    stage3 = stage2.selectExpr(
+        "*", *[f"{sniff.sniff_code(ident(f))} AS {ident(f + '__t')}"
+               for f in fields])
+    return stage3.selectExpr("*", *runtime_code_columns(fields))
+
+
+def runtime_code_columns(fields: Sequence[str]) -> list[str]:
+    """``<f>__r`` select items: the materialized runtime code of each
+    field from its value and its sniffed ``<f>__t`` code."""
+    return [f"{sniff.materialized_runtime_code(ident(f), ident(f + '__t'))}"
+            f" AS {ident(f + '__r')}" for f in fields]
 
 
 def parse_ndjson(df: DataFrame, line_col: str = "line") -> DataFrame:

@@ -24,17 +24,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ulp_spark.functions import casts, sniff
+from ulp_spark.functions import casts, sniff, sqltext
+from ulp_spark.functions.sqltext import ident, lit
 from ulp_spark.session import seam
 
 
-def _repr_str(value: Column, rcode: Column, target: int, helpers) -> tuple[Column, Column]:
+def _repr_str(value: str, rcode: str, target: int, helpers) -> tuple[str, str]:
     """Casted value rendered canonically as a string (parity form)."""
     val, err = casts.cast_field(value, rcode, target, **helpers)
     if target == sniff.BOOL:
-        return F.when(val, "true").otherwise("false"), err
+        return f"CASE WHEN {val} THEN {lit('true')} ELSE {lit('false')} END", err
     if target in (sniff.INT, sniff.FLOAT):
-        return val.cast("string"), err
+        return f"CAST({val} AS STRING)", err
     return val, err
 
 
@@ -97,42 +98,49 @@ def cast_single_pass(
     staged = (
         df.join(broadcast(dim.withColumn("__known", F.lit(True))),
                 on=route_col, how="left")
-        .select("*", *[c for f in helper_fields
-                       for c in casts.helper_columns(f)])
+        .selectExpr("*", *[c for f in helper_fields
+                           for c in casts.helper_columns(f)])
     )
-    err_any = F.coalesce(F.col("__known"), F.lit(False)) == F.lit(False)
+    err_any = "coalesce(`__known`, false) = false"
     out_cols: list[Column] = []
     for f in fields:
-        value, rcode = F.col(f), F.col(f"{f}__r")
+        value, rcode = ident(f), ident(f"{f}__r")
         # the parse stage's sniff verdict rides along so the DATE cast can
         # test it instead of re-running the calendar regex per row
         # (casts.cast_field docstring proves the predicate equivalence);
         # frames without a __t column (not the pipeline shape) keep the
         # regex path
-        sc_col = F.col(f"{f}__t") if f"{f}__t" in df.columns else None
+        helpers = dict(sniff_code=(ident(f"{f}__t")
+                                   if f"{f}__t" in df.columns else None))
         if f in helper_fields:
-            helpers = dict(iv=F.col(f"{f}__iv"), bv=F.col(f"{f}__bv"),
-                           fv=F.col(f"{f}__fv"), sniff_code=sc_col)
-        else:
-            helpers = dict(iv=None, bv=None, fv=None, sniff_code=sc_col)
-        tcol = F.col(f"{f}__target")
-        targets = field_targets[f]
-        casted = F.lit(None).cast("string")
-        for t in targets:
+            helpers.update(iv=ident(f"{f}__iv"), bv=ident(f"{f}__bv"),
+                           fv=ident(f"{f}__fv"))
+        tcol = ident(f"{f}__target")
+        casted, ipv6 = "CAST(NULL AS STRING)", None
+        for t in field_targets[f]:
             v, e = _repr_str(value, rcode, t, helpers)
-            casted = F.when(tcol == t, v).otherwise(casted)
+            if t == sniff.IPV6:
+                ipv6 = v
+            else:
+                casted = f"CASE WHEN {tcol} = {t} THEN {v} ELSE {casted} END"
             # coalesce guards three-valued logic: when this route's schema
-            # omits the field, tcol is NULL and (NULL == t) & TRUE is NULL —
-            # which would turn cast_error itself NULL (a row that BOTH
+            # omits the field, tcol is NULL and (NULL == t) AND TRUE is NULL
+            # — which would turn cast_error itself NULL (a row that BOTH
             # filter(err) and filter(~err) drop).  Absent field = no cast =
             # no error, i.e. false.
-            err_any = err_any | F.coalesce((tcol == t) & e, F.lit(False))
-        out_cols.append(casted.alias(f"{f}__cast"))
+            err_any = f"{err_any} OR coalesce({tcol} = {t} AND ({e}), false)"
+        if ipv6 is None:
+            out_cols.append(sqltext.column(casted, f"{f}__cast"))
+        else:  # the pandas-UDF branch, composed as a Column
+            out_cols.append(
+                F.when(F.expr(f"{tcol} = {sniff.IPV6}"),
+                       casts.ipv6_canonical(F.expr(ipv6)))
+                .otherwise(F.expr(casted)).alias(f"{f}__cast"))
     drop_cols = [f"{f}__{s}" for f in fields for s in ("iv", "bv", "fv", "target")]
     drop_cols.append("__known")
     return (
-        staged.select("*", *out_cols)
-        .withColumn("cast_error", err_any)
+        staged.select("*", *out_cols,
+                      sqltext.column(f"({err_any})", "cast_error"))
         .drop(*drop_cols)
     )
 
@@ -155,8 +163,8 @@ def cast_per_route(
 
     The input is read through a :func:`ulp_spark.session.seam` (lazy: the
     first route's action writes it) — REQUIRED for an unmaterialized parse
-    derivation.  This is the same fan-out shape as
-    ``manifest.resume_fanout``: each route's ``filter(route == r)`` is
+    derivation (the same barrier ``manifest.resume_fanout`` puts under
+    its route filter): each route's ``filter(route == r)`` is
     pushed through every projection below it, substituting the full
     derivation into the filter, and the resulting whole-stage-codegen
     class blows Janino's 64 KB method limit (measured after the guarded
@@ -168,24 +176,26 @@ def cast_per_route(
     out: dict[str, DataFrame] = {}
     for r in sorted(route_schemas):
         schema = route_schemas[r]
-        part = df.filter(F.col(route_col) == r).select(
+        part = df.filter(F.expr(f"{ident(route_col)} = {lit(r)}")).selectExpr(
             "*", *[c for f in fields for c in casts.helper_columns(f)]
         )
         cols: list[Column] = [F.col(c) for c in (keep or [])]
-        err = F.lit(False)
+        err = "false"
         for f in fields:
             target = schema.get(f)
             if target is None:
                 continue
             v, e = casts.cast_field(
-                F.col(f), F.col(f"{f}__r"), target,
-                iv=F.col(f"{f}__iv"), bv=F.col(f"{f}__bv"), fv=F.col(f"{f}__fv"),
-                sniff_code=(F.col(f"{f}__t")
+                ident(f), ident(f"{f}__r"), target,
+                iv=ident(f"{f}__iv"), bv=ident(f"{f}__bv"),
+                fv=ident(f"{f}__fv"),
+                sniff_code=(ident(f"{f}__t")
                             if f"{f}__t" in df.columns else None),
             )
-            cols.append(v.cast(_NATIVE[target]).alias(f))
-            err = err | e
-        out[r] = part.select(*cols, err.alias("cast_error"))
+            cols.append(casts.value_column(
+                f"CAST({v} AS {_NATIVE[target]})", target, f))
+            err = f"{err} OR ({e})"
+        out[r] = part.select(*cols, sqltext.column(f"({err})", "cast_error"))
     return out
 
 

@@ -22,11 +22,16 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from ulp_spark.functions import sqltext
+from ulp_spark.functions.sqltext import ident, lit
+from ulp_spark.operators import fanout
 from ulp_spark.session import seam
 
 
@@ -131,8 +136,6 @@ def delete_job(base: str, run_id: str, remove_sinks: bool = False) -> bool:
     manifest only; ``remove_sinks=True`` additionally removes the whole
     run directory (sink parquet included) — an explicit extension, not
     reference behavior.  Returns True if a manifest was deleted."""
-    import shutil
-
     p = manifest_path(base, run_id)
     existed = os.path.exists(p)
     if remove_sinks:
@@ -142,53 +145,95 @@ def delete_job(base: str, run_id: str, remove_sinks: bool = False) -> bool:
     return existed
 
 
+# Partition column of the staged write: a copy of the route column, so
+# the route itself stays in every sink's data files.
+_STAGE_COL = "__sink"
+
+
+def _staged_route(dirname: str) -> str:
+    """Route of a staged partition directory ``__sink=<value>``: Spark
+    writes ``%XX`` escapes for characters such as ``= { [ ^ '`` (and more)
+    in partition values, so the route is the unescaped value — never a
+    name rebuilt from the route."""
+    value = dirname.split("=", 1)[1]
+    return re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)),
+                  value)
+
+
 def resume_fanout(
     routed: DataFrame,
     manifest: dict[str, Any],
     base: str,
     route_col: str = "route",
 ) -> dict[str, Any]:
-    """Write every uncommitted route's partition; returns updated manifest.
+    """Write every uncommitted route's rows; returns the updated manifest.
 
-    Deterministic sorted route order (reference BTreeMap iteration,
-    ``src/workerpool.rs:104``); each route commits independently, so a
-    crash between routes resumes exactly where it stopped.
-
-    Row counts for ALL pending routes come from ONE aggregate action up
-    front (map-side-combined ``groupBy(route).count()``), not a
-    ``part.count()`` per route — the per-route recount doubled the scan
-    count (2R actions for R routes) at any scale.  The write itself is the
-    only per-route action left; with many routes prefer the single-pass
-    ``fanout.write_partitioned`` and use this loop for small R / resume.
+    All pending routes go out in ONE partitioned write
+    (:func:`ulp_spark.operators.fanout.write_partitioned`) into
+    ``<run>/_staging/``, and per-route row counts come from
+    ``DataFrame.observe`` on that same write — one Spark job in all, with
+    no count job and no per-route scan.  The routes then commit in
+    deterministic sorted order (reference BTreeMap iteration,
+    ``src/workerpool.rs:104``): the staged directory is renamed to
+    ``sinks/<route>`` and the manifest saved — one commit point and one
+    history snapshot per route.  A crash between commits resumes exactly
+    where it stopped: the next call re-stages only the still-pending
+    routes (the overwrite clears a stale ``_staging/``) and replaces any
+    sink directory an uncommitted route left behind.  A pending route
+    with no rows commits an empty sink with the frame's schema.
     """
     run_dir = os.path.join(base, manifest["run_id"])
+    staging = os.path.join(run_dir, "_staging")
     pending = [r for r in sorted(manifest["routes"])
                if not manifest["routes"][r]["committed"]]
     if not pending:
         return manifest
-    # S5 seam, REQUIRED for an unmaterialized `routed`: each route's
-    # `filter(route == r)` would otherwise push the predicate down THROUGH
-    # the route derivation, re-inlining the entire parse/sniff/template
-    # tree into the filter condition — measured: whole-stage codegen grew
-    # past Janino's 64 KB method limit (1700+ references), and every route
-    # write spent ~100 s attempting and failing compilation before falling
-    # back to interpreted mode.  Freezing the lineage once makes each write
-    # a scan + tiny filter — and is the reference's own architecture (the
+    route = ident(route_col)
+    # S5 seam (lazy: the staged write fills it), REQUIRED for an
+    # unmaterialized `routed`: the `isin(pending)` filter would otherwise
+    # be pushed down THROUGH the route derivation, re-inlining the entire
+    # parse/sniff/template tree into the filter condition — measured:
+    # whole-stage codegen grew past Janino's 64 KB method limit (1700+
+    # references) and each write spent ~100 s failing compilation before
+    # falling back to interpreted mode.  Freezing the lineage makes the
+    # write a scan + tiny filter — the reference's own architecture (the
     # ingest phase reads the materialized NDJSON, never re-parses;
     # src/elastic.rs:83).
-    routed = seam(routed, eager=True)
-    counts = {
-        r[route_col]: r["n_rows"]
-        for r in routed.filter(F.col(route_col).isin(pending))
-        .groupBy(route_col).agg(F.count(F.lit(1)).alias("n_rows")).collect()
-    }
-    for route in pending:
-        entry = manifest["routes"][route]
-        path = os.path.join(run_dir, "sinks", route)
-        part = routed.filter(F.col(route_col) == route)
-        part.write.mode("overwrite").parquet(path)
+    routed = seam(routed)
+    # one count_if per pending route: a comparison per route per row,
+    # negligible for the tens of sinks a run fans out to
+    observed = Observation("resume_fanout")
+    staged = (
+        routed.filter(F.expr(
+            f"{route} IN ({', '.join(lit(r) for r in pending)})"))
+        .withColumn(_STAGE_COL, F.col(route_col))
+        .observe(observed, *[sqltext.column(f"count_if({route} = {lit(r)})",
+                                            f"n{i}")
+                             for i, r in enumerate(pending)])
+    )
+    fanout.write_partitioned(staged, staging, route_col=_STAGE_COL)
+    counts = observed.get
+    staged_dirs = {_staged_route(d): os.path.join(staging, d)
+                   for d in os.listdir(staging)
+                   if d.startswith(_STAGE_COL + "=")}
+    for i, route_name in enumerate(pending):
+        entry = manifest["routes"][route_name]
+        n_rows = int(counts[f"n{i}"])
+        path = os.path.join(run_dir, "sinks", route_name)
+        # a sink left by a commit the manifest never recorded (crash
+        # between rename and save, or a rolled-back route) is replaced
+        shutil.rmtree(path, ignore_errors=True)
+        if route_name in staged_dirs:
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            os.rename(staged_dirs[route_name], path)
+        elif n_rows:
+            raise RuntimeError(f"route {route_name!r}: {n_rows} rows observed "
+                               f"but no staged directory")
+        else:
+            routed.where("false").write.mode("overwrite").parquet(path)
         entry["path"] = path
-        entry["n_rows"] = int(counts.get(route, 0))
+        entry["n_rows"] = n_rows
         entry["committed"] = True
         save(base, manifest["run_id"], manifest)  # commit point per route
+    shutil.rmtree(staging)
     return manifest

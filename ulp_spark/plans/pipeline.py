@@ -21,12 +21,13 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ulp_spark import fixtures
 from ulp_spark.functions import routes as routes_fn
 from ulp_spark.functions import sanitize, sniff
+from ulp_spark.functions.sqltext import ident, lit
 from ulp_spark.operators import enrich, fanout, parse
 from ulp_spark.session import seam
 
@@ -50,20 +51,20 @@ class Pipeline:
     source_token_hist: DataFrame  # (source, bucket, n_rows, sum_tok)
 
 
-def route_expr(parsed: DataFrame):
+def route_expr(parsed: DataFrame) -> Column:
     """Route column: per-parser template eval -> sanitize; parse errors are
     quarantined (deviation: the reference panics on unknown input,
-    ``src/lib.rs:90`` — a 10^12-row job must not)."""
-    fields = {}
-    for f in parse.all_fields(parse.DEFAULT_PATTERNS):
-        fields[f] = (F.col(f), F.col(f"{f}__t"))
-    expr = F.lit(None).cast("string")
+    ``src/lib.rs:90`` — a 10^12-row job must not).  One ``F.expr`` over
+    the composed SQL text of the template, sniff and sanitize builders."""
+    fields = {f: (ident(f), ident(f"{f}__t"))
+              for f in parse.all_fields(parse.DEFAULT_PATTERNS)}
+    expr = "CAST(NULL AS STRING)"
     for parser_name, template in ROUTE_TEMPLATES.items():
         compiled = routes_fn.compile_template(template, fields)
-        expr = F.when(F.col("parser") == parser_name, compiled).otherwise(expr)
-    return F.when(
-        F.col("parse_error"), F.lit(QUARANTINE)
-    ).otherwise(sanitize.sanitize_sink_name(expr))
+        expr = (f"CASE WHEN `parser` = {lit(parser_name)} THEN {compiled}"
+                f" ELSE {expr} END")
+    return F.expr(f"CASE WHEN parse_error THEN {lit(QUARANTINE)}"
+                  f" ELSE {sanitize.sanitize_sink_name(expr)} END")
 
 
 def build(
@@ -105,16 +106,10 @@ def build(
         # seam's write cost at every scale.
         fields = parse.all_fields(parse.DEFAULT_PATTERNS)
         routed = routed.withColumn(
-            "line", F.when(F.col("parse_error"), F.col("line"))
+            "line", F.expr("CASE WHEN parse_error THEN line END")
         ).drop(*[f"{f}__r" for f in fields])
-        routed = seam(routed, eager=True).select(
-            "*",
-            *[
-                sniff.materialized_runtime_code(F.col(f), F.col(f"{f}__t"))
-                .alias(f"{f}__r")
-                for f in fields
-            ],
-        )
+        routed = seam(routed, eager=True).selectExpr(
+            "*", *parse.runtime_code_columns(fields))
 
     route_counts = fanout.route_counts(routed)
 

@@ -52,11 +52,12 @@ def seam(df, eager: bool = False):
     winnowing and embedding generators seam theirs in one place,
     ``dedup._bucket_pairs``).
 
-    Callers and eagerness: ``pipeline.build(checkpoint="local")``,
-    ``manifest.resume_fanout`` and the per-round pins of
-    ``dedup.connected_components`` seam eagerly (the frame is written
-    before the call returns); every other caller seams lazily (written by
-    the first action that reads it).
+    Callers and eagerness: ``pipeline.build(checkpoint="local")`` and the
+    per-round pins of ``dedup.connected_components`` seam eagerly (the
+    frame is written before the call returns); every other caller —
+    ``manifest.resume_fanout``'s plan barrier included, filled by its one
+    staged write — seams lazily (written by the first action that reads
+    it).
 
     Storage tier is chosen by session config: when the SparkContext has a
     CHECKPOINT DIR configured, use a reliable ``checkpoint`` — blocks live
