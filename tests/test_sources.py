@@ -104,6 +104,26 @@ def test_cast_single_pass_missing_field_error_is_false_not_null(spark):
         + out.filter(~F.col("cast_error")).count() == 2
 
 
+def test_bool_cast_failure_is_null_in_both_cast_shapes(spark):
+    """A value that cannot become a bool is NULL with cast_error set, in
+    the single-pass string form as in the typed per-route form — never
+    rendered as 'false'."""
+    from ulp_spark.functions import sniff as sn
+    from ulp_spark.operators import route_cast
+
+    df = spark.createDataFrame(
+        [(1, "A", "1", sn.INT), (2, "A", "5", sn.INT),
+         (3, "A", "maybe", sn.STR)],
+        "doc_id long, route string, f string, f__r int")
+    schemas = {"A": {"f": sn.BOOL}}
+    typed = {r.doc_id: (r.f, r.cast_error) for r in route_cast.cast_per_route(
+        df, schemas, ["f"], keep=["doc_id"])["A"].collect()}
+    assert typed == {1: (True, False), 2: (None, True), 3: (None, True)}
+    single = {r.doc_id: (r.f__cast, r.cast_error) for r in
+              route_cast.cast_single_pass(df, schemas, ["f"]).collect()}
+    assert single == {1: ("true", False), 2: (None, True), 3: (None, True)}
+
+
 def test_cast_single_pass_ipv6_branch(spark):
     """IPv6 is the one cast branch composed as a Column (its
     canonicalization is a pandas UDF); in a field whose routes also take

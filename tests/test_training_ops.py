@@ -497,20 +497,29 @@ def test_stratified_keep_sql_escapes_quotes():
     assert rows[0] == 1
 
 
-def test_connected_components_chain_and_islands(spark):
+def _forbid_conf_writes(monkeypatch):
+    """Any session-conf write raises for the rest of the test."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    def refuse(self, key, value):
+        raise AssertionError(f"session conf write: {key} = {value}")
+
+    monkeypatch.setattr(RuntimeConfig, "set", refuse)
+
+
+def test_connected_components_chain_and_islands(spark, monkeypatch):
     """Transitivity beyond direct neighbors (a 6-node chain needs real
     propagation) plus a separate 2-node island; fixed point matches the
-    DuckDB recursive-CTE closure."""
+    DuckDB recursive-CTE closure.  The star rounds size their shuffles
+    without writing session conf."""
     from ulp_spark.operators import dedup
 
     edges = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (10, 11)]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    width = spark.conf.get("spark.sql.shuffle.partitions")
+    _forbid_conf_writes(monkeypatch)
     got = {r.id: r.comp_id
            for r in dedup.connected_components(pairs).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 6: 1, 10: 10, 11: 10}
-    # the star rounds narrow the session's shuffle width, then restore it
-    assert spark.conf.get("spark.sql.shuffle.partitions") == width
     con = duckdb.connect()
     vals = ", ".join(f"({a}, {b})" for a, b in edges)
     want = dict(con.sql(dedup.connected_components_sql(
@@ -597,17 +606,37 @@ def test_range_join_boundaries_and_bins(spark):
     assert len(got) == len(set(got))  # one row per matching pair
 
 
-def test_connected_components_raises_without_convergence(spark):
+def test_connected_components_raises_without_convergence(spark, monkeypatch):
     import pytest as _pytest
 
     from ulp_spark.operators import dedup
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "id_a long, id_b long")
-    width = spark.conf.get("spark.sql.shuffle.partitions")
+    _forbid_conf_writes(monkeypatch)
     with _pytest.raises(RuntimeError, match="did not converge"):
         dedup.connected_components(pairs, max_iter=1)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == width
+
+
+def test_connected_components_evaluates_pairs_once(spark):
+    """``pairs`` is pinned once: a plan behind it (for the dedup groups,
+    candidate generation plus Jaccard verification) runs one time, not
+    once for the nodes and again for the edges."""
+    from ulp_spark.operators import dedup
+
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def seen(x):
+        evaluated.add(1)
+        return x
+
+    edges = [(1, 2), (2, 3), (3, 3), (7, 8), (7, 8)]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long").select(
+        F.udf(seen, "long")("id_a").alias("id_a"), "id_b")
+    got = sorted(tuple(r) for r in
+                 dedup.connected_components(pairs).collect())
+    assert got == [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]
+    assert evaluated.value == len(edges)
 
 
 def test_range_join_instant_timestamps_across_dst_fold(spark):
@@ -923,6 +952,19 @@ def test_seam_upgrades_to_reliable_checkpoint(spark, tmp_path):
         none = getattr(getattr(sc._jvm.scala, "None$"), "MODULE$")
         getattr(sc._jsc.sc(), "checkpointDir_$eq")(none)
         assert sc.getCheckpointDir() is None  # later tests stay on local seams
+
+
+def test_no_session_conf_writes():
+    """No operator changes session-global config: a shuffle width or any
+    other setting is applied to the plan that needs it."""
+    import pathlib
+
+    import ulp_spark
+
+    root = pathlib.Path(ulp_spark.__file__).parent
+    offenders = [str(p.relative_to(root)) for p in sorted(root.rglob("*.py"))
+                 if "conf.set(" in p.read_text()]
+    assert offenders == []
 
 
 def test_seam_is_the_only_checkpoint_call():
@@ -3241,13 +3283,26 @@ def test_pack_sequences_extra_arrays_align(spark):
                                sep_token=0, extra_array_cols=["loss_mask"])
 
 
-def test_connected_components_scrambled_path(spark):
+def test_connected_components_scrambled_path(spark, monkeypatch):
     """Region-chain regression: a PATH whose ids are md5-scrambled has
     ~n/3 local-min regions, the structure where min-label propagation
-    moves the global min one region per round (the r5 bench wedge);
-    the alternating-star algorithm must close it within max_iter."""
+    moves the global min one region per round; the alternating-star
+    algorithm must close it within max_iter.  Every pin carries real
+    size stats: a pin's estimated size multiplying round over round
+    (19 to 25 digits here without the persist) is what once wedged
+    Catalyst's stats arithmetic."""
     from ulp_spark.operators.dedup import connected_components
+    from ulp_spark.session import seam
 
+    pins = []
+
+    def recording_seam(df, eager=False):
+        out = seam(df, eager=eager)
+        if eager:
+            pins.append(out)
+        return out
+
+    monkeypatch.setattr(dedup, "seam", recording_seam)
     n = 800
     base = spark.range(n).select(
         F.md5(F.col("id").cast("string")).alias("sid"), F.col("id"))
@@ -3259,6 +3314,9 @@ def test_connected_components_scrambled_path(spark):
     assert len(cc) == n
     root = min(order.values())
     assert {r.comp_id for r in cc} == {root}
+    sizes = [int(str(p._jdf.queryExecution().optimizedPlan().stats()
+                     .sizeInBytes())) for p in pins]
+    assert len(sizes) > 2 and max(sizes) < 10**12, sizes
 
 
 def test_incremental_dedup_marker_only_state_dir_recovers(spark, tmp_path):

@@ -26,7 +26,7 @@ either engine).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ulp_spark.session import seam
@@ -430,55 +430,58 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     closed neighborhood, small-star re-hangs the smaller neighbors —
     contracting the graph toward a forest of stars rooted at component
     minima in O(log^2 n) rounds GUARANTEED.  Edge rewriting matters:
-    min-LABEL propagation (this function's previous form, even with full
-    path compression) moves information along the ORIGINAL edges one hop
-    per round, which is Theta(#local-min regions) on region-chain graphs
-    — the r5 bench's circulant near-dup fixture needed >60 unconverged
-    rounds of it, while the star form closes the same graph in a
-    handful.  Convergence is detected exactly (edge set unchanged:
-    counts equal + exceptAll probe with a limit(1) early-out); the star
-    fixed point's roots are the component minima, unique and
-    independent of round count, hence oracle-comparable against a
+    min-LABEL propagation moves information along the ORIGINAL edges one
+    hop per round, which is Theta(#local-min regions) on region-chain
+    graphs (an md5-scrambled path has ~n/3 of them), while the star form
+    closes the same graph in a handful of rounds.  Convergence is detected
+    exactly (edge set unchanged: counts equal + an exceptAll emptiness
+    probe); the star fixed point's roots are the component minima, unique
+    and independent of round count, hence oracle-comparable against a
     recursive-CTE transitive closure.  Works for STRING ids.
 
-    Per-round edge frames are PINNED — persist + count (materializes
-    the cache, fixing its stats to REAL bytes) then an eager
-    ``session.seam`` ON THE CACHED FRAME (truncates lineage, inheriting
-    the real size), then the cache is dropped.  Both halves are
-    load-bearing: a checkpoint alone PROPAGATES the plan's ESTIMATED
-    sizeInBytes into its LogicalRDD, and the frame enters the next
-    round's plan several times, so the BigInt estimate re-multiplies
-    every round until Catalyst's SizeInBytesOnlyStatsPlanVisitor is
-    grinding 10^8-digit numbers — the driver wedges single-threaded for
-    minutes, then dies with `BigInteger would overflow supported range`
-    (found by the r5 bench's 20k input).  ``persist`` alone leaves the
-    LOGICAL tree embedding the previous round's tree severally — 3^k
-    nodes by round k, and the analyzer heap-OOMs instead.
+    The input and every round's edge frame are PINNED, one Spark action
+    each: persist, then an eager ``session.seam`` of the cached frame
+    that also fills an ``observe`` edge count (the convergence test and
+    the rounds' shuffle width read it), then the cache is dropped.  The
+    seam truncates lineage: a persist alone leaves the logical tree
+    embedding the previous round's tree severally, 3^k nodes by round k.
+    The persist fixes the pinned frame's stats to the cache's REAL bytes:
+    a seam alone carries the plan's ESTIMATED ``sizeInBytes``, and since
+    each frame enters the next round's plan several times the estimate
+    multiplies round over round — 24 to 29 digits on a 20k-sequence
+    token-dedup graph, 19 to 25 on an 800-node path, where the persisted
+    pins read 5-7 digits.
 
     Not in the reference engine (its dedup story ends at per-record ids);
     this is the standard downstream of LSH candidate generation in corpus
     pipelines — near-dup GROUPS, from which one keeps comp_id == id.
     """
-    def _pin(df: DataFrame) -> tuple[DataFrame, int]:
-        """Materialize with REAL stats and TRUNCATED lineage: cache +
-        count fixes the InMemoryRelation's sizeInBytes to actual bytes,
-        the checkpoint taken FROM the cache inherits that real size into
-        a lineage-free LogicalRDD, then the cache is dropped.  The count
-        the materialization already pays is RETURNED so the convergence
-        test never launches separate new.count()/edges.count() jobs —
-        two fewer driver round-trips per round (VERDICT r5 #4)."""
-        c = df.persist()
-        n = c.count()
-        out = seam(c, eager=True)
-        c.unpersist()
-        return out, n
-
     u, v = F.col("u"), F.col("v")
+
+    def _pin(df: DataFrame) -> tuple[DataFrame, int]:
+        """``df`` seamed with real stats, and its count of non-self
+        edges, from one job."""
+        edge_count = Observation()
+        cached = df.persist()
+        out = seam(cached.observe(edge_count, F.count_if(u != v).alias("n")),
+                   eager=True)
+        cached.unpersist()
+        return out, edge_count.get["n"]
+
+    raw, n_edges = _pin(
+        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+        .distinct())
+    edges = raw.filter(u != v)
+    # the star rounds' shuffle width: ~1M edges (~32 MB of narrow rows) per
+    # partition, never above the session's configured width
+    configured = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    width = max(1, min(configured, (n_edges + 999_999) // 1_000_000))
 
     def _large_star(e: DataFrame) -> DataFrame:
         """(v, m(u)) for every neighbor v > u, where m(u) = min of u's
         closed neighborhood — larger nodes re-hang under the local min."""
-        sym = e.select(u, v).union(e.select(v.alias("u"), u.alias("v")))
+        sym = (e.select(u, v).union(e.select(v.alias("u"), u.alias("v")))
+               .repartition(width, "u"))
         mins = (sym.groupBy("u")
                 .agg(F.least(F.min("v"), u).alias("m")))
         return (sym.join(mins, "u").filter(v > u)
@@ -488,66 +491,35 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     def _small_star(e: DataFrame) -> DataFrame:
         """Orient edges to the smaller endpoint; re-hang each node's
         smaller neighbors (and itself) under their minimum."""
-        d = e.select(F.greatest(u, v).alias("u"), F.least(u, v).alias("v"))
+        d = (e.select(F.greatest(u, v).alias("u"), F.least(u, v).alias("v"))
+             .repartition(width, "u"))
         mins = d.groupBy("u").agg(F.min("v").alias("m"))
         nbrs = (d.join(mins, "u")
                 .select(v.alias("u"), F.col("m").alias("v")))
         selfs = mins.select(u, F.col("m").alias("v"))
         return (nbrs.union(selfs)
-                .filter(F.col("u") != F.col("v"))
+                .filter(u != v)
                 .distinct())
 
-    # nodes derive from the RAW pairs (before the self-edge filter), so a
-    # node whose only edge is reflexive still gets a (node, node) row —
-    # the operator's contract is a label for EVERY node in `pairs`
-    nodes, _ = _pin(
-        pairs.select(F.col("id_a").alias("n"))
-        .union(pairs.select(F.col("id_b").alias("n"))).distinct())
-    edges, n_edges = _pin(
-        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        .filter(u != v).distinct())
-    # Scale-ADAPTIVE shuffle width for the star rounds (guide §2.2/§2.5):
-    # each round runs ~6 exchanges over the edge frame, and on a
-    # verified-edge graph (key-scale, narrow rows) the configured
-    # corpus-scale shuffle width is pure per-task scheduling overhead —
-    # measured 31 s -> 11 s for the 56k-edge bench graph at local[32]
-    # by sizing the rounds' shuffles from the MEASURED edge count (the
-    # pin already pays for it) at ~1M edge rows (~32 MB) per partition,
-    # never above the session's configured width (so cluster-scale
-    # graphs keep their configured parallelism; nothing here depends on
-    # the local core count).  Restored in the finally even on the
-    # non-convergence raise.  The session-global write stays until a
-    # conf-free form keeps this width: removing only the two conf.set
-    # calls (rounds at the session's 64) measured 5.4 s -> 16.4 s at
-    # 1,200 edges and 7.8 s -> 27.8 s at 60,000 edges (medians of 4,
-    # local[4] on a 4-core host), identical labels.
-    conf = pairs.sparkSession.conf
-    configured = conf.get("spark.sql.shuffle.partitions")
-    adaptive = max(1, min(int(configured), (n_edges + 999_999) // 1_000_000))
-    conf.set("spark.sql.shuffle.partitions", str(adaptive))
-    try:
-        for _ in range(max_iter):
-            new, n_new = _pin(_small_star(_large_star(edges)))
-            # exact fixed-point probe: same row count (free — reuses the
-            # pin counts) AND nothing in the symmetric difference
-            # (edge-scale, limit(1) early-out; only runs when the counts
-            # already agree)
-            if n_new == n_edges and \
-                    new.exceptAll(edges).limit(1).count() == 0:
-                edges = new
-                break
-            edges, n_edges = new, n_new
-        else:
-            # Kiveris et al. bound rounds by O(log^2 n) and observe single
-            # digits in practice (the adversarial 20k bench graph closes in
-            # 5); hitting max_iter means the star fixpoint was NOT reached —
-            # fail loudly rather than under-merging groups.
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} rounds")
-    finally:
-        conf.set("spark.sql.shuffle.partitions", configured)
-    # star fixpoint: every edge is (node, component-min root); roots
-    # label themselves
+    for _ in range(max_iter):
+        new, n_new = _pin(_small_star(_large_star(edges)))
+        # exact fixed-point probe: same edge count AND nothing in the
+        # difference (stops at the first row; runs only when counts agree)
+        if n_new == n_edges and new.exceptAll(edges).isEmpty():
+            edges = new
+            break
+        edges, n_edges = new, n_new
+    else:
+        # Kiveris et al. bound rounds by O(log^2 n) and observe single
+        # digits in practice; hitting max_iter means the star fixpoint was
+        # NOT reached — fail loudly rather than under-merging groups.
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds")
+    # nodes come from the raw pin (self-pairs included), so a node whose
+    # only pair is reflexive still gets a (node, node) row — the
+    # contract is a label for EVERY node in `pairs`.  At the star fixpoint
+    # every edge is (node, component-min root); roots label themselves.
+    nodes = raw.select(u.alias("n")).union(raw.select(v.alias("n"))).distinct()
     return (
         nodes.join(edges, nodes["n"] == edges["u"], "left")
         .select(F.col("n").alias("id"),

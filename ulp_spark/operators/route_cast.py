@@ -32,9 +32,7 @@ from ulp_spark.session import seam
 def _repr_str(value: str, rcode: str, target: int, helpers) -> tuple[str, str]:
     """Casted value rendered canonically as a string (parity form)."""
     val, err = casts.cast_field(value, rcode, target, **helpers)
-    if target == sniff.BOOL:
-        return f"CASE WHEN {val} THEN {lit('true')} ELSE {lit('false')} END", err
-    if target in (sniff.INT, sniff.FLOAT):
+    if target in (sniff.BOOL, sniff.INT, sniff.FLOAT):  # a failed cast stays NULL
         return f"CAST({val} AS STRING)", err
     return val, err
 

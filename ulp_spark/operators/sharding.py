@@ -45,13 +45,8 @@ def shard_manifest(
     shard_tokens: int = SHARD_TOKENS,
 ) -> DataFrame:
     """One row per shard: (shard, n_seqs, n_tokens, first_doc, last_doc)."""
-    assigned = shard_assign(df, order_col, len_col, shard_tokens)
-    return assigned.groupBy("shard").agg(
-        F.count(F.lit(1)).alias("n_seqs"),
-        F.sum(F.col(len_col).cast("bigint")).alias("n_tokens"),
-        F.min(order_col).alias("first_doc"),
-        F.max(order_col).alias("last_doc"),
-    )
+    return _manifest_agg(shard_assign(df, order_col, len_col, shard_tokens),
+                         order_col, len_col)
 
 
 def shard_manifest_sql(

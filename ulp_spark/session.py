@@ -47,17 +47,20 @@ _DEFAULTS = {
 def seam(df, eager: bool = False):
     """The one materialization primitive: every frame in ``ulp_spark``
     that is checkpointed goes through here (the pipeline's S5 seam,
-    generalized — shard assignment, anomaly stats and the keyed tables of
-    every near-dup candidate generator reuse it; the minhash, simhash,
-    winnowing and embedding generators seam theirs in one place,
-    ``dedup._bucket_pairs``).
+    generalized — any frame that several branches of a plan read).
 
-    Callers and eagerness: ``pipeline.build(checkpoint="local")`` and the
-    per-round pins of ``dedup.connected_components`` seam eagerly (the
-    frame is written before the call returns); every other caller —
-    ``manifest.resume_fanout``'s plan barrier included, filled by its one
-    staged write — seams lazily (written by the first action that reads
-    it).
+    Callers and eagerness: two callers seam eagerly (the frame is written
+    before the call returns).  ``pipeline.build(checkpoint="local")`` is
+    one.  ``dedup.connected_components`` is the other: it pins its input
+    once and each round's edges once, persisting the frame first so the
+    checkpoint carries real size stats, and the seam's one job also fills
+    an ``observe`` edge count.  Every other caller seams lazily (written
+    by the first action that reads it): ``manifest.resume_fanout``'s plan
+    barrier, filled by its one staged write; ``route_cast.cast_per_route``;
+    ``sharding.write_shards``; ``dedup._bucket_pairs``, shared by the
+    minhash, simhash, winnowing and embedding candidate generators; and
+    the fan-out frames of the tokens, curation, similarity, classifier
+    and anomaly operators.
 
     Storage tier is chosen by session config: when the SparkContext has a
     CHECKPOINT DIR configured, use a reliable ``checkpoint`` — blocks live
