@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from ulp_spark.session import get_spark
@@ -18,3 +20,25 @@ def spark():
                   extra_conf={"spark.sql.shuffle.partitions": "8"})
     yield s
     s.stop()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` -> ``(fn(), n)``, where ``n`` is the number of
+    Spark jobs ``fn`` started: it runs under a fresh job group, and the
+    group's jobs are read from the status tracker once the listener bus
+    has delivered every event.  AQE submits each shuffle map stage as a
+    job of its own, so ``n`` counts those too."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count_jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -639,6 +639,26 @@ def test_connected_components_evaluates_pairs_once(spark):
     assert evaluated.value == len(edges)
 
 
+def test_connected_components_job_budget_per_round(spark, count_jobs):
+    """Jobs per star round, pinned on a small chain graph that one or two
+    rounds cannot contract: the difference between stopping after two
+    rounds and after one is one round's jobs.  Today a round runs 10, and
+    the input pin and the first round together run 13."""
+    from ulp_spark.operators import dedup
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "id_a long, id_b long")
+
+    def rounds(k):
+        with pytest.raises(RuntimeError, match="did not converge"):
+            dedup.connected_components(pairs, max_iter=k)
+
+    _, one = count_jobs(lambda: rounds(1))
+    _, two = count_jobs(lambda: rounds(2))
+    assert one <= 13, one
+    assert two - one <= 10, (one, two)
+
+
 def test_range_join_instant_timestamps_across_dst_fold(spark):
     """TIMESTAMP (instant) inputs must go through unix_micros: casting to
     NTZ reads the session wall clock, which repeats itself across a DST
@@ -818,6 +838,51 @@ def test_shard_writer_roundtrip(spark, tmp_path):
     import os
     dirs = [d for d in os.listdir(path) if d.startswith("shard=")]
     assert len(dirs) == len(manifest)
+
+
+def test_write_shards_evaluates_input_once(spark, tmp_path):
+    """write_shards pins its input: the plan behind it runs once, not
+    once for the prefix sum's totals and again for its window."""
+    from ulp_spark.operators import sharding
+
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def seen(x):
+        evaluated.add(1)
+        return x
+
+    n = 400
+    seq = spark.range(0, n, numPartitions=3).select(
+        F.format_string("d-%04d", "id").alias("doc_id"),
+        F.udf(seen, "int")((F.col("id") % 50 + 1).cast("int"))
+        .alias("n_tok"))
+    manifest = sharding.write_shards(
+        seq, str(tmp_path / "shards"), shard_tokens=1000).collect()
+    assert sum(r.n_seqs for r in manifest) == n
+    assert evaluated.value == n
+
+
+def test_write_shards_job_budget(spark, tmp_path, count_jobs):
+    """Jobs for one write_shards call over pack_sequences output (a join
+    and a groupBy(bin_id) upstream), and for collecting its manifest.
+    With the input pinned the call runs 10 jobs; seaming the output
+    instead ran 19, because each prefix-sum pass re-ran the upstream
+    shuffles.  The manifest reads 3 (2 when the output was pinned): it
+    re-runs the window's narrow projection over the pin."""
+    from ulp_spark import fixtures
+    from ulp_spark.operators import packing, sharding
+
+    seq = fixtures.sequences(spark, 300).select("doc_id", "tokens", "n_tok")
+    packed = packing.pack_bins(seq.select("doc_id", "n_tok"),
+                               capacity=512, buckets=8)
+    rows = packing.pack_sequences(seq, packed)
+    manifest, call = count_jobs(lambda: sharding.write_shards(
+        rows, str(tmp_path / "shards"), order_col="bin_id",
+        shard_tokens=8 * 1024))
+    got, collect = count_jobs(manifest.collect)
+    assert sum(r.n_seqs for r in got) == rows.count()
+    assert call <= 10, call
+    assert call + collect <= 13, (call, collect)
 
 
 def test_token_fingerprint_collides_only_on_equal_arrays(spark):
@@ -1349,6 +1414,72 @@ def test_pack_bins_oversize_isolated_and_stats(spark):
     st = packing.bin_stats(packed, capacity=512).collect()[0]
     assert st.n_docs == 5 and st.n_oversize == 2
     assert 0 < st.fill_frac <= 1.0
+
+
+def _ffd_reference(rows, capacity):
+    """Per-bucket first-fit-decreasing over ``(doc_id, n_tok, bucket)``
+    rows: scan in (n_tok desc, doc_id asc) order, first fit, an oversize
+    doc closes a bin of its own (remaining -1)."""
+    by_bucket: dict[int, list] = {}
+    for r in rows:
+        by_bucket.setdefault(r[2], []).append(r)
+    out = []
+    for b, docs in by_bucket.items():
+        remaining: list[int] = []
+        for d, t, _ in sorted(docs, key=lambda r: (-r[1], r[0])):
+            over = t > capacity
+            slot = next((i for i, rem in enumerate(remaining)
+                         if not over and rem >= t), None)
+            if slot is None:
+                remaining.append(-1 if over else capacity - t)
+                slot = len(remaining) - 1
+            else:
+                remaining[slot] -= t
+            out.append((d, t, b, (b << 32) | slot, over))
+    return sorted(out)
+
+
+def test_pack_bins_matches_reference_ffd_across_batches(spark):
+    """pack_bins equals a pure-Python per-bucket FFD row for row, with
+    zero-token and oversize docs, many buckets per partition, and Arrow
+    batches of 7 rows so buckets straddle batch boundaries."""
+    import random
+
+    from ulp_spark.operators import packing
+
+    cap, buckets = 64, 12
+    rnd = random.Random(11)
+    docs = [(f"d{i:04d}", rnd.choice(
+        [0, 0, rnd.randint(1, cap), rnd.randint(1, cap), rnd.randint(1, 16),
+         rnd.randint(cap + 1, 3 * cap)])) for i in range(500)]
+    df = spark.createDataFrame(docs, "doc_id string, n_tok int")
+    keyed = [tuple(r) for r in df.select(
+        "doc_id", "n_tok",
+        F.pmod(F.xxhash64("doc_id"), F.lit(buckets)).cast("int")).collect()]
+    want = _ffd_reference(keyed, cap)
+    assert any(t == 0 for _, t, *_ in want)
+    assert any(over for *_, over in want)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "7")
+        for parts in (1, 13):
+            got = sorted(tuple(r) for r in packing.pack_bins(
+                df.repartition(parts), capacity=cap,
+                buckets=buckets).collect())
+            assert got == want, parts
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_pack_bins_rejects_nonpositive_capacity_and_buckets(spark):
+    from ulp_spark.operators import packing
+
+    df = spark.createDataFrame([("a", 1)], "doc_id string, n_tok int")
+    with pytest.raises(ValueError, match="capacity"):
+        packing.pack_bins(df, capacity=0)
+    with pytest.raises(ValueError, match="buckets"):
+        packing.pack_bins(df, buckets=0)
 
 
 def test_source_mixing_plan_matches_duckdb_and_budget(spark):

@@ -189,18 +189,29 @@ def pack_bins(
     documents longer than ``capacity`` (each gets a bin of its own; the
     caller decides truncate-vs-drop — this operator never mutates data).
 
-    Scale shape: ONE exchange (the groupBy(bucket) for applyInPandas);
-    each task packs ~N/buckets docs driver-free.  Packing quality is
-    bucket-local FFD — within the 11/9·OPT + 6/9 FFD bound per bucket,
-    plus at most one partial bin per bucket globally; size ``buckets`` so
-    a bucket's (id, n_tok) pairs fit a task (rows, not token payloads —
-    the token arrays never move).  Determinism: bucket choice is a pure
-    hash of the id and FFD scans docs in (n_tok desc, id) order, so the
-    assignment is a pure function of the (id, n_tok) set — pinned
-    partition-invariant in pytest.  The in-task first-fit scan is
-    O(docs·bins) pure Python on KiB-scale state; swap for a
-    best-fit tree if a bucket ever holds millions of docs.
+    Scale shape: ONE exchange (``repartition(bucket)``) plus a
+    within-partition sort by (bucket, n_tok desc, id asc) — the FFD scan
+    order — then ONE ``mapInPandas`` call per task that streams the
+    partition's Arrow batches.  A partition holds whole buckets (several
+    after AQE coalescing); the scan keeps first-fit state for the
+    current bucket only, resets it when the bucket changes, and carries
+    it across batch boundaries, so the Python boundary is crossed once
+    per batch, not once per bucket, and a bucket never has to fit in
+    memory as one frame — only its open bins' remaining capacities are
+    held.  Packing quality is bucket-local FFD — within the
+    11/9·OPT + 6/9 FFD bound per bucket, plus at most one partial bin
+    per bucket globally.  Only (id, n_tok, bucket) rows move; the token
+    arrays never do.  Determinism: bucket choice is a pure hash of the
+    id and FFD scans docs in (n_tok desc, id) order, so the assignment
+    is a pure function of the (id, n_tok) set — pinned
+    partition-invariant and against a pure-Python FFD reference in
+    pytest.  The first-fit probe is O(docs·open bins) pure Python; swap
+    for a best-fit tree if a bucket ever holds millions of docs.
     """
+    if capacity < 1:
+        raise ValueError("capacity must be >= 1")
+    if buckets < 1:
+        raise ValueError("buckets must be >= 1")
     keyed = df.select(
         F.col(id_col), F.col(len_col),
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(buckets))
@@ -215,39 +226,40 @@ def pack_bins(
         T.StructField("oversize", T.BooleanType(), False),
     ])
 
-    def pack(pdf):
-        pdf = pdf.sort_values(
-            [len_col, id_col], ascending=[False, True], kind="mergesort")
-        remaining: list[int] = []
-        assign: list[int] = []
-        oversize: list[bool] = []
-        for tok in pdf[len_col]:
-            t = int(tok)
-            if t > capacity:
-                # own bin, never co-packed; flagged for the caller.
-                # remaining = -1 (not 0) sentinels the bin as closed so a
-                # zero-token document's `rem >= t` probe can never land
-                # in it (ADVICE r4)
-                remaining.append(-1)
-                assign.append(len(remaining) - 1)
-                oversize.append(True)
-                continue
-            for i, rem in enumerate(remaining):      # first fit
-                if rem >= t:
-                    remaining[i] = rem - t
-                    assign.append(i)
-                    break
-            else:
-                remaining.append(capacity - t)
-                assign.append(len(remaining) - 1)
-            oversize.append(False)
-        pdf = pdf.assign(
-            bin_id=[(int(pdf["bucket"].iloc[0]) << 32) | a for a in assign],
-            oversize=oversize,
-        )
-        return pdf[[id_col, len_col, "bucket", "bin_id", "oversize"]]
+    def pack(batches):
+        bucket, remaining = None, []     # open bins of the current bucket
+        for pdf in batches:
+            bin_ids: list[int] = []
+            oversize: list[bool] = []
+            for b, tok in zip(pdf["bucket"].tolist(), pdf[len_col].tolist()):
+                if b != bucket:
+                    bucket, remaining = b, []
+                t = int(tok)
+                if t > capacity:
+                    # own bin, never co-packed; flagged for the caller.
+                    # remaining = -1 (not 0) sentinels the bin as closed
+                    # so a zero-token document's `rem >= t` probe can
+                    # never land in it (ADVICE r4)
+                    remaining.append(-1)
+                    slot = len(remaining) - 1
+                else:
+                    for slot, rem in enumerate(remaining):   # first fit
+                        if rem >= t:
+                            remaining[slot] = rem - t
+                            break
+                    else:
+                        remaining.append(capacity - t)
+                        slot = len(remaining) - 1
+                bin_ids.append((b << 32) | slot)
+                oversize.append(t > capacity)
+            yield pdf.assign(bin_id=bin_ids, oversize=oversize)
 
-    return keyed.groupBy("bucket").applyInPandas(pack, out_schema)
+    return (
+        keyed.repartition("bucket")
+        .sortWithinPartitions(
+            "bucket", F.col(len_col).desc(), F.col(id_col).asc())
+        .mapInPandas(pack, out_schema)
+    )
 
 
 def bin_stats(packed: DataFrame, len_col: str = "n_tok",

@@ -57,7 +57,9 @@ def seam(df, eager: bool = False):
     an ``observe`` edge count.  Every other caller seams lazily (written
     by the first action that reads it): ``manifest.resume_fanout``'s plan
     barrier, filled by its one staged write; ``route_cast.cast_per_route``;
-    ``sharding.write_shards``; ``dedup._bucket_pairs``, shared by the
+    ``sharding.write_shards``, which pins its INPUT (filled by the prefix
+    sum's first pass, so the row count, key sample, per-bucket totals and
+    window all read one pin); ``dedup._bucket_pairs``, shared by the
     minhash, simhash, winnowing and embedding candidate generators; and
     the fan-out frames of the tokens, curation, similarity, classifier
     and anomaly operators.
