@@ -45,6 +45,12 @@ CASES = [
     # float -> X
     ("2.6", FLOAT, INT, 3, False),           # round (types.rs:141-143)
     ("-2.5", FLOAT, INT, -3, False),         # half away from zero
+    ("9.2e18", FLOAT, INT, 9200000000000000000, False),
+    # a rounded float outside i64 is a cast error, not a job abort
+    ("1e308", FLOAT, INT, None, True),
+    ("-1e19", FLOAT, INT, None, True),
+    ("99999999999999999999", FLOAT, INT, None, True),  # sniffs FLOAT
+    ("1.7976931348623157e308", FLOAT, INT, None, True),
     ("2.5", FLOAT, FLOAT, 2.5, False),
     ("2.5", FLOAT, STR, "2.5", False),
     ("1.0", FLOAT, BOOL, True, False),
@@ -91,11 +97,14 @@ def results(spark):
         [(i, v, rc) for i, (v, rc, _, _, _) in enumerate(CASES)],
         "i int, v string, rc int",
     )
-    # Build one select with a value+err pair per case (grouped by target).
+    # Build one select with a value+err pair per case (grouped by target);
+    # an IPv6 value is the validated address, canonicalized by the UDF.
     cols = []
     for i, (_, _, target, _, _) in enumerate(CASES):
         val, err = casts.cast_field("v", "rc", target)
-        val = casts.value_column(val, target, "val")
+        val = F.expr(val)
+        if target == IPV6:
+            val = casts.ipv6_canonical(val)
         cols.append(F.when(F.col("i") == i, val).alias(f"val_{i}"))
         cols.append(F.when(F.col("i") == i, F.expr(err)).alias(f"err_{i}"))
     out = df.select("i", *cols).orderBy("i").collect()
@@ -110,6 +119,43 @@ def test_cast_matrix(results):
         assert got_err == exp_err, f"{label}: err {got_err} != {exp_err}"
         if not exp_err:
             assert got_val == exp_val, f"{label}: {got_val!r} != {exp_val!r}"
+
+
+def test_cast_to_int_sql_out_of_range_float_is_null():
+    """The DuckDB twin of the INT cast: a rounded float outside i64 is
+    NULL, not a ConversionException; in-range floats still round."""
+    import duckdb
+
+    values = ["9.2e18", "1e308", "-1e19", "99999999999999999999",
+              "1.7976931348623157e308", "-2.5", "-9.223372036854775808e18"]
+    rows = ", ".join(f"({i}, '{v}')" for i, v in enumerate(values))
+    got = duckdb.sql(
+        f"SELECT i, {casts.cast_to_int_sql('v', str(FLOAT))} "
+        f"FROM (VALUES {rows}) t(i, v) ORDER BY i").fetchall()
+    assert [r[1] for r in got] == [
+        9200000000000000000, None, None, None, None, -3, I64_MIN]
+
+
+def test_cast_field_has_one_package_caller():
+    """One cast implementation: ``cast_field`` is called from exactly one
+    function in ulp_spark/ — the single-pass cast's renderer; the typed
+    per-route form projects that cast instead of composing its own."""
+    import ast
+    import pathlib
+
+    import ulp_spark
+
+    root = pathlib.Path(ulp_spark.__file__).parent
+    callers = set()
+    for p in sorted(root.rglob("*.py")):
+        for top in ast.parse(p.read_text()).body:
+            for node in ast.walk(top):
+                func = getattr(node, "func", None)
+                if isinstance(node, ast.Call) and "cast_field" in (
+                        getattr(func, "attr", None), getattr(func, "id", None)):
+                    callers.add(f"{p.relative_to(root)}:"
+                                f"{getattr(top, 'name', '<module>')}")
+    assert callers == {"operators/route_cast.py:_repr_str"}
 
 
 def test_runtime_code_collapse(spark):

@@ -124,6 +124,51 @@ def test_bool_cast_failure_is_null_in_both_cast_shapes(spark):
     assert single == {1: ("true", False), 2: (None, True), 3: (None, True)}
 
 
+def test_cast_per_route_matches_single_pass_for_every_target(spark):
+    """One cast, every target: over an 8-target x 31-value grid, each
+    route's typed frame has its target's native dtype, and its rows are
+    the single-pass canonical strings CAST to that type, cast_error
+    included."""
+    from ulp_spark.functions import sniff as sn
+    from ulp_spark.functions.sqltext import ident
+
+    values = [
+        None, "null", "0", "1", "true", "False", "7", "-42",
+        "9223372036854775807", "-9223372036854775808", "0x1F", "2.5",
+        "-2.5", "0.30000000000000004", "4.9e-324", "-0.0",
+        "1.7976931348623157e308", "NaN", "inf", "-Infinity", "1e999",
+        "1.2.3.4", "256.1.1.1", "::1", "0:0:0:0:0:0:0:1", "::ffff:1.2.3.4",
+        "2001:DB8::1", "2022-03-23T10:00:00+01:00",
+        "2022-03-23T10:00:00.123-05:30", "2022-03-23t10:00:00z",
+        "hello world"]
+    # the INT cast of a float outside i64 is pinned in test_casts.CASES
+    rows = [(t * 100 + i, f"t{t}", v)
+            for t in range(8) for i, v in enumerate(values)
+            if not (t == sn.INT and v == "1.7976931348623157e308")]
+    df = spark.createDataFrame(rows, "doc_id long, route string, f string")
+    df = df.selectExpr("*", f"{sn.sniff_code(ident('f'))} AS f__t")
+    df = df.selectExpr("*", *parse.runtime_code_columns(["f"]))
+    schemas = {f"t{t}": {"f": t} for t in range(8)}
+    native = {sn.NULL: "string", sn.BOOL: "boolean", sn.INT: "bigint",
+              sn.FLOAT: "double", sn.IPV4: "string", sn.IPV6: "string",
+              sn.DATE: "string", sn.STR: "string"}
+
+    single = route_cast.cast_single_pass(df, schemas, ["f"])
+    tables = route_cast.cast_per_route(df, schemas, ["f"], keep=["doc_id"])
+    assert list(tables) == sorted(schemas)
+    for t in range(8):
+        typed = tables[f"t{t}"]
+        assert typed.dtypes == [("doc_id", "bigint"), ("f", native[t]),
+                                ("cast_error", "boolean")], t
+        want = single.filter(F.col("route") == f"t{t}").selectExpr(
+            "doc_id", f"CAST(f__cast AS {native[t]}) AS f", "cast_error")
+        got = sorted(typed.collect())
+        assert got == sorted(want.collect()), t
+        assert len(got) == len(values) - (t == sn.INT), t
+        ok = [r.f for r in got if not r.cast_error]
+        assert ok and all((v is None) == (t == sn.NULL) for v in ok), t
+
+
 def test_cast_single_pass_ipv6_branch(spark):
     """IPv6 is the one cast branch composed as a Column (its
     canonicalization is a pandas UDF); in a field whose routes also take

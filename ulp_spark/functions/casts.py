@@ -21,8 +21,9 @@ and the target ``Types`` from the merged route map
 
 Every rule is Spark SQL text (see :mod:`ulp_spark.functions.sqltext`)
 except IPv6 canonicalization, which is an Arrow-batched pandas UDF over
-Python ``ipaddress`` (no JVM-side equivalent), composed as a Column around
-its one branch (:func:`value_column`).
+Python ``ipaddress`` (no JVM-side equivalent): the caller composes
+:func:`ipv6_canonical` around the IPv6 branch as a Column.  :data:`NATIVE`
+is the one table of each target's native Spark type.
 
 Outputs are (value, error) pairs: the reference fails the whole record on
 the first cast error (``lib.rs:389-397``); the pipeline turns the per-field
@@ -34,16 +35,21 @@ Documented deviations (pinned in tests/test_casts.py):
   parity fixtures avoid whole-valued floats.
 * str -> date keeps second precision plus any explicit fractional digits
   verbatim; chrono re-renders fractions (trailing-zero handling may differ).
+* float -> int: a rounded value outside i64 is NULL with the cast error
+  set, like every other out-of-domain cast (Spark's ANSI cast would abort
+  the job instead).  The reference rounds (``types.rs:141-143``); if it
+  converts with Rust's ``as i64``, which saturates, it yields i64::MIN/MAX
+  there instead.
 """
 
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from ulp_spark.functions import sniff, sqltext
+from ulp_spark.functions import sniff
 from ulp_spark.functions.sniff import (
     BOOL, DATE, FLOAT, INT, IPV4, IPV6, NULL, STR,
     RE_DATE, RE_FLOAT, RE_IPV4, RE_IPV6,
@@ -51,6 +57,16 @@ from ulp_spark.functions.sniff import (
 from ulp_spark.functions.sqltext import ident, lit
 
 I32_MAX, I32_MIN = 2147483647, -2147483648
+I64_LIMIT = 2 ** 63  # i64 holds exactly the doubles in [-2^63, 2^63)
+
+# Target type code -> native Spark type of the cast value (IP and date
+# values stay strings: the reference emits them normalized; null casts to
+# a null string).
+NATIVE = {
+    NULL: T.StringType(), BOOL: T.BooleanType(), INT: T.LongType(),
+    FLOAT: T.DoubleType(), IPV4: T.StringType(), IPV6: T.StringType(),
+    DATE: T.StringType(), STR: T.StringType(),
+}
 
 
 def _bool_value(e: str) -> str:
@@ -180,14 +196,13 @@ def cast_field(
 
     ``value`` is the field's raw string form; ``rcode`` its JSON runtime type
     (sniff.runtime_code of the sniffed code: NULL/BOOL/INT/FLOAT/STR).
-    Returns (casted value of the target's native Spark type, error flag),
-    both SQL text.  Native types: bool->boolean, int->long, float->double,
-    null->string(null), others->string.
+    Returns (casted value of the target's :data:`NATIVE` Spark type, error
+    flag), both SQL text.
 
     IPV6 is the one target whose value text is not final: it is the
     VALIDATED address, and the caller composes :func:`ipv6_canonical` — a
     pandas UDF, which has no SQL-text form short of a session temp function
-    — around that one branch as a Column (:func:`value_column`).
+    — around that one branch as a Column.
 
     ``iv``/``bv``/``fv`` accept references to pre-computed
     :func:`helper_columns` to avoid re-inlining the heavy sub-expressions
@@ -232,14 +247,18 @@ def cast_field(
         return val, err
 
     if target == INT:
+        rounded = f"round({fv})"
+        in_i64 = f"({rounded} >= -{I64_LIMIT}D AND {rounded} < {I64_LIMIT}D)"
         val = (
             f"CASE WHEN {is_null} THEN CAST(0 AS BIGINT)"
             f" WHEN ({is_bool} OR {is_int} OR {is_str}) THEN {iv}"
-            f" WHEN {is_float} THEN CAST(round({fv}) AS BIGINT) END"
+            f" WHEN {is_float} AND {in_i64} THEN CAST({rounded} AS BIGINT) END"
         )
         # bool/null runtimes never error here; str errors when str_int misses
-        # (true/false words already yield 1/0 through int_value)
-        return val, f"({is_str} AND {iv} IS NULL)"
+        # (true/false words already yield 1/0 through int_value); a float
+        # errors when its rounded value lies outside i64
+        return val, (f"(({is_str} AND {iv} IS NULL)"
+                     f" OR ({is_float} AND {fv} IS NOT NULL AND NOT {in_i64}))")
 
     if target == FLOAT:
         clamped = (
@@ -268,8 +287,8 @@ def cast_field(
 
     if target in (IPV4, IPV6):
         # Only a runtime string can cast to IP/date (lib.rs:367-377); the
-        # parse round-trip is the identity for valid dotted-quads, and an
-        # IPv6 address is canonicalized by value_column.
+        # parse round-trip is the identity for valid dotted-quads, and the
+        # caller canonicalizes an IPv6 address with ipv6_canonical.
         pattern = RE_IPV4 if target == IPV4 else RE_IPV6
         ok = f"({is_str} AND {value} RLIKE {lit(pattern)})"
         return f"CASE WHEN {ok} THEN {value} END", f"NOT {ok}"
@@ -283,14 +302,6 @@ def cast_field(
     raise ValueError(f"unknown target type code {target}")
 
 
-def value_column(value: str, target: int, name: str) -> Column:
-    """The output Column of a :func:`cast_field` value: its one ``F.expr``,
-    with :func:`ipv6_canonical` composed around it for an IPv6 target."""
-    if target == IPV6:
-        return ipv6_canonical(F.expr(value)).alias(name)
-    return sqltext.column(value, name)
-
-
 # --------------------------------------------------------------------------
 # DuckDB oracle twins (the SQL-expressible subset; IPv6 canonicalization is
 # exercised via pytest golden cases instead)
@@ -298,10 +309,12 @@ def value_column(value: str, target: int, name: str) -> Column:
 
 def cast_to_int_sql(value: str, rcode: str) -> str:
     iv = sniff.int_value_sql(value)
+    rounded = f"round(try_cast({value} AS DOUBLE))"
     return f"""
     CASE
       WHEN ({rcode}) = {NULL} THEN 0
       WHEN ({rcode}) IN ({BOOL}, {INT}, {STR}) THEN ({iv})
-      WHEN ({rcode}) = {FLOAT} THEN CAST(round(try_cast({value} AS DOUBLE)) AS BIGINT)
+      WHEN ({rcode}) = {FLOAT} AND {rounded} >= -{I64_LIMIT}::DOUBLE
+           AND {rounded} < {I64_LIMIT}::DOUBLE THEN CAST({rounded} AS BIGINT)
     END
     """

@@ -14,17 +14,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql.functions import broadcast
 
 
-def enrich(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: str | list[str],
-    how: str = "left",
-) -> DataFrame:
-    """Broadcast-join ``dim`` onto ``fact``.
+def enrich(fact: DataFrame, dim: DataFrame, on: str | list[str]) -> DataFrame:
+    """Broadcast left join of ``dim`` onto ``fact``.
 
-    ``how='left'`` keeps unmatched fact rows (unseen key -> NULL payload —
+    The left join keeps unmatched fact rows (unseen key -> NULL payload —
     the reference *errors* on an unseen route, ``src/type_map.rs:193-196``;
     callers surface that as an error/quarantine column instead of dying).
     """
-    return fact.join(broadcast(dim), on=on, how=how)
+    return fact.join(broadcast(dim), on=on, how="left")
 

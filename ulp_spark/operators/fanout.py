@@ -30,20 +30,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def write_partitioned(
-    df: DataFrame, path: str, route_col: str = "route", mode: str = "overwrite"
-) -> None:
-    """Single-pass fan-out: directory per route under ``path``."""
+def write_partitioned(df: DataFrame, path: str, route_col: str = "route"
+                      ) -> None:
+    """Single-pass fan-out: directory per route under ``path``, replacing
+    whatever ``path`` held."""
     (
-        df.write.mode(mode)
+        df.write.mode("overwrite")
         .partitionBy(route_col)
         .parquet(path)
     )
 
 
-def route_counts(df: DataFrame, route_col: str = "route") -> DataFrame:
+def route_counts(df: DataFrame) -> DataFrame:
     """A5: rows per sink — the reference's implicit per-index doc count."""
-    return df.groupBy(route_col).agg(F.count(F.lit(1)).alias("n_rows"))
+    return df.groupBy("route").agg(F.count(F.lit(1)).alias("n_rows"))
 
 
 def repair_compaction(path: str) -> dict[str, int]:

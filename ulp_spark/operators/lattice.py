@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ulp_spark.functions import sniff, sqltext
+from ulp_spark.functions import casts, sniff, sqltext
 from ulp_spark.functions.sqltext import ident, lit
 
 
@@ -41,32 +41,31 @@ def field_masks(df: DataFrame, fields: list[str]) -> list:
     return aggs
 
 
-def route_schemas(df: DataFrame, fields: list[str], route_col: str = "route"
+def route_schemas(df: DataFrame, fields: list[str]
                   ) -> dict[str, dict[str, int]]:
     """A2: per-route merged schema (reference ``src/type_map.rs:162-172``).
 
     One groupBy over the already-parsed frame; result is |routes| rows —
-    collected to a driver dict that the cast stage compiles into
-    expressions (the re-broadcast of J1 happens inside those literals).
+    collected to a driver dict that the cast stage ships back as its
+    broadcast dimension (J1, ``route_cast.schema_dim``).
     """
-    rows = df.groupBy(route_col).agg(*field_masks(df, fields)).collect()
+    rows = df.groupBy("route").agg(*field_masks(df, fields)).collect()
     return {
-        r[route_col]: {f: sniff.resolve_mask_py(r[f]) for f in fields if r[f] is not None}
+        r["route"]: {f: sniff.resolve_mask_py(r[f]) for f in fields if r[f] is not None}
         for r in rows
     }
 
 
-def route_schema_frame(df: DataFrame, fields: list[str], route_col: str = "route"
-                       ) -> DataFrame:
+def route_schema_frame(df: DataFrame, fields: list[str]) -> DataFrame:
     """A2 as a DataFrame (route, field, type_code) — oracle-comparable."""
-    masks = df.groupBy(route_col).agg(*field_masks(df, fields))
+    masks = df.groupBy("route").agg(*field_masks(df, fields))
     pairs = ", ".join(
         f"named_struct({lit('field')}, {lit(f)},"
         f" {lit('type_code')}, {sniff.resolve_mask(ident(f))})"
         for f in fields)
     return (
-        masks.selectExpr(ident(route_col), f"explode(array({pairs})) AS kv")
-        .select(route_col, "kv.field", "kv.type_code")
+        masks.selectExpr("`route`", f"explode(array({pairs})) AS kv")
+        .select("route", "kv.field", "kv.type_code")
     )
 
 
@@ -151,17 +150,9 @@ def tree_to_spark_type(tree):
     semantics (positional per-index typing), applied one step later."""
     from pyspark.sql import types as T
 
-    from ulp_spark.functions import sniff as _sniff
-
-    _native = {
-        _sniff.NULL: T.StringType(), _sniff.BOOL: T.BooleanType(),
-        _sniff.INT: T.LongType(), _sniff.FLOAT: T.DoubleType(),
-        _sniff.IPV4: T.StringType(), _sniff.IPV6: T.StringType(),
-        _sniff.DATE: T.StringType(), _sniff.STR: T.StringType(),
-    }
     if isinstance(tree, int):
-        return _native[tree]
-    if tree["kind"] == _sniff.OBJECT:
+        return casts.NATIVE[tree]
+    if tree["kind"] == sniff.OBJECT:
         return T.StructType([
             T.StructField(k, tree_to_spark_type(v), True)
             for k, v in sorted(tree["children"].items())
@@ -210,39 +201,36 @@ def json_runtime_code(v: str) -> str:
     )
 
 
-def json_field_schema(df: DataFrame, json_col: str, key_cols: list[str] | None = None
-                      ) -> DataFrame:
+def json_field_schema(df: DataFrame, json_col: str) -> DataFrame:
     """Dynamic per-key schema of a JSON-object string column.
 
-    Output: (*key_cols, field, type_code, n_values).  The recursive-merge
-    analog for one nesting level.  Values are exploded as VARIANT so JSON
-    runtime types survive (see :func:`json_runtime_code`); nested
-    containers fold in as LIST/OBJECT codes (a container mixed with any
-    scalar canonicalizes to Str — the full-tree merge quirks live in
+    Output: (field, type_code, n_values).  The recursive-merge analog for
+    one nesting level.  Values are exploded as VARIANT so JSON runtime
+    types survive (see :func:`json_runtime_code`); nested containers fold
+    in as LIST/OBJECT codes (a container mixed with any scalar
+    canonicalizes to Str — the full-tree merge quirks live in
     :func:`json_tree_schema`).  Malformed JSON rows parse to null variants
     and contribute no key/value pairs (quarantine path).
     """
-    keys = key_cols or []
-    sel = "".join(f"src.{k}, " for k in keys)
     # table-qualified: the source frame may itself carry `key`/`value` cols.
     # `ve.key IS NOT NULL` drops top-level-ARRAY payloads (variant_explode
     # emits their elements with a null key; json_keys on the DuckDB side
     # enumerates nothing for them) — this is an OBJECT-column operator and
     # non-object payloads contribute no fields, same as malformed rows.
     kv = df.sparkSession.sql(
-        f"SELECT {sel}ve.key AS field, ve.value AS __variant FROM {{df}} src, "
+        f"SELECT ve.key AS field, ve.value AS __variant FROM {{df}} src, "
         f"LATERAL variant_explode(try_parse_json(src.{json_col})) ve "
         f"WHERE ve.key IS NOT NULL",
         df=df,
     ).withColumnRenamed("__variant", "value")
     mask = sniff.code_mask(json_runtime_code("`value`"))
     return (
-        kv.groupBy(*keys, "field")
+        kv.groupBy("field")
         .agg(
             sqltext.column(f"bit_or({mask})", "mask"),
             F.count(F.lit(1)).alias("n_values"),
         )
-        .select(*keys, "field",
+        .select("field",
                 sqltext.column(sniff.resolve_mask("mask"), "type_code"),
                 "n_values")
     )

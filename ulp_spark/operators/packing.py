@@ -44,21 +44,19 @@ from pyspark.sql import types as T
 CHUNK = 512  # training sequence length (tokens)
 
 
-def _range_boundaries(
-    df: DataFrame, order_col: str, n_part: int, per_part: int = 100,
-    seed: int = 7,
-) -> list:
+def _range_boundaries(df: DataFrame, order_col: str, n_part: int) -> list:
     """Sampled split points for a monotone ``n_part``-way bucketing of
-    ``order_col`` (ascending, deduplicated).  Empty list -> one bucket."""
+    ``order_col`` (ascending, deduplicated): about 100 keys per bucket,
+    sampled with a fixed seed.  Empty list -> one bucket."""
     if n_part <= 1:
         return []
     n = df.count()
     if n == 0:
         return []
-    frac = min(1.0, (n_part * per_part) / n)
+    frac = min(1.0, (n_part * 100) / n)
     sample = sorted(
         r[0]
-        for r in df.select(order_col).sample(False, frac, seed=seed).collect()
+        for r in df.select(order_col).sample(False, frac, seed=7).collect()
         if r[0] is not None
     )
     if not sample:
@@ -173,18 +171,18 @@ def packing_offsets_sql(
 # --------------------------------------------------------------------------
 
 def pack_bins(
-    df: DataFrame, id_col: str = "doc_id", len_col: str = "n_tok",
-    capacity: int = CHUNK, buckets: int = 256,
+    df: DataFrame, capacity: int = CHUNK, buckets: int = 256,
 ) -> DataFrame:
-    """Assign each document to exactly one ``capacity``-token training
-    bin WITHOUT splitting any document — the sample-packing form
-    (Megatron/T5-style) complementary to packing_offsets, which packs the
-    token STREAM and splits documents at chunk boundaries.
+    """Assign each ``(doc_id, n_tok)`` document to exactly one
+    ``capacity``-token training bin WITHOUT splitting any document — the
+    sample-packing form (Megatron/T5-style) complementary to
+    packing_offsets, which packs the token STREAM and splits documents at
+    chunk boundaries.
 
     Two-level scheme: documents hash deterministically into ``buckets``
     groups (xxhash64 of the id — independent of input partitioning), and
     each bucket packs its own documents with first-fit-decreasing.
-    Returns (id, n_tok, bucket, bin_id, oversize) where bin_id =
+    Returns (doc_id, n_tok, bucket, bin_id, oversize) where bin_id =
     bucket * 2^32 + local bin index (globally unique), and oversize marks
     documents longer than ``capacity`` (each gets a bin of its own; the
     caller decides truncate-vs-drop — this operator never mutates data).
@@ -213,14 +211,13 @@ def pack_bins(
     if buckets < 1:
         raise ValueError("buckets must be >= 1")
     keyed = df.select(
-        F.col(id_col), F.col(len_col),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(buckets))
+        F.col("doc_id"), F.col("n_tok"),
+        F.pmod(F.xxhash64(F.col("doc_id")), F.lit(buckets))
         .cast("int").alias("bucket"),
     )
-    id_field = keyed.schema[id_col]
     out_schema = T.StructType([
-        id_field,
-        T.StructField(len_col, keyed.schema[len_col].dataType, True),
+        keyed.schema["doc_id"],
+        T.StructField("n_tok", keyed.schema["n_tok"].dataType, True),
         T.StructField("bucket", T.IntegerType(), False),
         T.StructField("bin_id", T.LongType(), False),
         T.StructField("oversize", T.BooleanType(), False),
@@ -231,7 +228,7 @@ def pack_bins(
         for pdf in batches:
             bin_ids: list[int] = []
             oversize: list[bool] = []
-            for b, tok in zip(pdf["bucket"].tolist(), pdf[len_col].tolist()):
+            for b, tok in zip(pdf["bucket"].tolist(), pdf["n_tok"].tolist()):
                 if b != bucket:
                     bucket, remaining = b, []
                 t = int(tok)
@@ -257,18 +254,17 @@ def pack_bins(
     return (
         keyed.repartition("bucket")
         .sortWithinPartitions(
-            "bucket", F.col(len_col).desc(), F.col(id_col).asc())
+            "bucket", F.col("n_tok").desc(), F.col("doc_id").asc())
         .mapInPandas(pack, out_schema)
     )
 
 
-def bin_stats(packed: DataFrame, len_col: str = "n_tok",
-              capacity: int = CHUNK) -> DataFrame:
+def bin_stats(packed: DataFrame, capacity: int = CHUNK) -> DataFrame:
     """One-row packing-quality report over a pack_bins assignment:
     (n_docs, n_bins, n_oversize, fill_frac) where fill_frac counts only
     regular bins (oversize bins are the caller's problem by contract)."""
     per_bin = packed.groupBy("bin_id").agg(
-        F.sum(F.col(len_col).cast("bigint")).alias("toks"),
+        F.sum(F.col("n_tok").cast("bigint")).alias("toks"),
         F.count(F.lit(1)).alias("docs"),
         F.max(F.col("oversize").cast("int")).alias("over"),
     )

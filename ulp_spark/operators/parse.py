@@ -75,12 +75,9 @@ def all_fields(patterns: Sequence[LogPattern]) -> list[str]:
 GROUP_SEP = "\x01"  # separator for the one-pass group extraction
 
 
-def parse_lines(
-    df: DataFrame,
-    line_col: str = "line",
-    patterns: Sequence[LogPattern] = DEFAULT_PATTERNS,
-) -> DataFrame:
-    """Parse a string column into typed fields + parser tag + error flag.
+def parse_lines(df: DataFrame) -> DataFrame:
+    """Parse the ``line`` column with :data:`DEFAULT_PATTERNS` into typed
+    fields + parser tag + error flag.
 
     Adds per field ``f``: the raw extracted text ``f``, its sniffed map-type
     code ``f__t`` and runtime code ``f__r`` (see functions.sniff docstrings).
@@ -102,7 +99,7 @@ def parse_lines(
     separator), so the guard cannot miss.  The DuckDB twin
     :func:`parse_sql` mirrors the per-field ``regexp_extract`` shape.
     """
-    line = ident(line_col)
+    line, patterns = ident("line"), DEFAULT_PATTERNS
     parser = "CAST(NULL AS STRING)"
     for p in reversed(patterns):  # first match wins
         parser = (f"CASE WHEN {line} RLIKE {lit(p.regex)} THEN {lit(p.name)}"
@@ -187,18 +184,17 @@ def parse_ndjson(df: DataFrame, line_col: str = "line") -> DataFrame:
     )
 
 
-def parse_sql(line_expr: str, patterns: Sequence[LogPattern] = DEFAULT_PATTERNS
-              ) -> dict[str, str]:
+def parse_sql(line_expr: str) -> dict[str, str]:
     """DuckDB twins: SELECT-able SQL for parser tag and each field."""
     exprs: dict[str, str] = {}
     parser = "NULL"
-    for p in reversed(patterns):
+    for p in reversed(DEFAULT_PATTERNS):
         parser = (f"CASE WHEN regexp_matches({line_expr}, '{p.regex}') "
                   f"THEN '{p.name}' ELSE {parser} END")
     exprs["parser"] = parser
-    for f in all_fields(patterns):
+    for f in all_fields(DEFAULT_PATTERNS):
         v = "NULL"
-        for p in reversed(patterns):
+        for p in reversed(DEFAULT_PATTERNS):
             if f in p.fields:
                 idx = p.fields.index(f) + 1
                 v = (f"CASE WHEN ({parser}) = '{p.name}' THEN "

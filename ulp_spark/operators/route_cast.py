@@ -5,18 +5,21 @@ route's type map and recursively casts (``src/elastic.rs:76-99`` ->
 ``Mapping::cast_json`` ``src/type_map.rs:174-198``), erroring the record on
 the first bad field (``type_casting/src/lib.rs:389-397``).
 
-Here the route->schema dict (A2 output, driver-side, KiB) is *compiled into
-the plan*: for every field, a ``when(route == r, cast_to(type_r))`` cascade
-— the broadcast lookup becomes literal expressions, zero joins, zero
-Python.  Two shapes:
+Here the route->schema dict (A2 output, driver-side, KiB) becomes a
+broadcast dimension (J1, :func:`schema_dim`) joined onto the records — one
+broadcast hash join, no shuffle of the records, zero Python — and each
+field's cast branches over the distinct target types it takes across
+routes.  One cast implementation, two shapes:
 
 * :func:`cast_single_pass` — one DataFrame for all routes; casted values
   carried in canonical string form + per-row ``cast_error``.  Used for
   counting/parity and for a single ``partitionBy(route)`` fan-out write.
 * :func:`cast_per_route` — one *typed* DataFrame per route (int fields are
   longs, bools are booleans...), the exact per-sink schema the reference
-  PUTs as an index mapping (S8).  Driver loops routes in sorted order
-  (the reference's BTreeMap iteration, ``src/workerpool.rs:104``).
+  PUTs as an index mapping (S8): a per-route projection of
+  :func:`cast_single_pass` that casts each canonical string to its
+  target's native type.  Routes come in sorted order (the reference's
+  BTreeMap iteration, ``src/workerpool.rs:104``).
 """
 
 from __future__ import annotations
@@ -39,7 +42,6 @@ def _repr_str(value: str, rcode: str, target: int, helpers) -> tuple[str, str]:
 
 def schema_dim(
     spark, route_schemas: dict[str, dict[str, int]], fields: list[str],
-    route_col: str = "route",
 ) -> DataFrame:
     """Route -> per-field target-type dimension (KiB), the J1 broadcast dim.
 
@@ -49,7 +51,7 @@ def schema_dim(
         tuple([r] + [route_schemas[r].get(f) for f in fields])
         for r in sorted(route_schemas)
     ]
-    ddl = f"{route_col} string, " + ", ".join(f"{f}__target int" for f in fields)
+    ddl = "route string, " + ", ".join(f"{f}__target int" for f in fields)
     return spark.createDataFrame(rows, ddl)
 
 
@@ -57,7 +59,6 @@ def cast_single_pass(
     df: DataFrame,
     route_schemas: dict[str, dict[str, int]],
     fields: list[str],
-    route_col: str = "route",
 ) -> DataFrame:
     """All routes in one pass; adds ``<f>__cast`` string columns +
     ``cast_error``.  Rows whose route is absent from the schema dict get
@@ -76,7 +77,7 @@ def cast_single_pass(
     spark = df.sparkSession
     from pyspark.sql.functions import broadcast
 
-    dim = schema_dim(spark, route_schemas, fields, route_col)
+    dim = schema_dim(spark, route_schemas, fields)
     # Helper columns (str_int/str_bool/str_float regex batteries) only for
     # fields whose target set can READ them: NULL/IPV4/IPV6/DATE casts
     # never touch iv/bv/fv (cast_field embeds helpers per target branch),
@@ -95,7 +96,7 @@ def cast_single_pass(
                      if _HELPER_TARGETS & set(field_targets[f])]
     staged = (
         df.join(broadcast(dim.withColumn("__known", F.lit(True))),
-                on=route_col, how="left")
+                on="route", how="left")
         .selectExpr("*", *[c for f in helper_fields
                            for c in casts.helper_columns(f)])
     )
@@ -143,21 +144,19 @@ def cast_single_pass(
     )
 
 
-_NATIVE = {
-    sniff.NULL: "string", sniff.BOOL: "boolean", sniff.INT: "bigint",
-    sniff.FLOAT: "double", sniff.IPV4: "string", sniff.IPV6: "string",
-    sniff.DATE: "string", sniff.STR: "string",
-}
-
-
 def cast_per_route(
     df: DataFrame,
     route_schemas: dict[str, dict[str, int]],
     fields: list[str],
-    route_col: str = "route",
     keep: list[str] | None = None,
 ) -> dict[str, DataFrame]:
-    """Sorted {route: typed DataFrame} — each with its own native schema.
+    """Sorted {route: typed DataFrame} — each with its own native schema:
+    ``keep``, then every field the route's schema types, as
+    ``CAST(<f>__cast AS <native>)`` of the :func:`cast_single_pass`
+    string, then ``cast_error``.  The canonical strings round-trip
+    exactly: a BIGINT's decimal digits, a DOUBLE's Java rendering and
+    ``true``/``false`` cast back to the value they render, and a failed
+    cast stays NULL.
 
     The input is read through a :func:`ulp_spark.session.seam` (lazy: the
     first route's action writes it) — REQUIRED for an unmaterialized parse
@@ -170,34 +169,21 @@ def cast_per_route(
     ``CodeGenerator: Failed to compile`` fallbacks; with the seam the
     whole map collects in seconds).
     """
-    df = seam(df)
+    casted = cast_single_pass(seam(df), route_schemas, fields)
     out: dict[str, DataFrame] = {}
     for r in sorted(route_schemas):
         schema = route_schemas[r]
-        part = df.filter(F.expr(f"{ident(route_col)} = {lit(r)}")).selectExpr(
-            "*", *[c for f in fields for c in casts.helper_columns(f)]
-        )
-        cols: list[Column] = [F.col(c) for c in (keep or [])]
-        err = "false"
-        for f in fields:
-            target = schema.get(f)
-            if target is None:
-                continue
-            v, e = casts.cast_field(
-                ident(f), ident(f"{f}__r"), target,
-                iv=ident(f"{f}__iv"), bv=ident(f"{f}__bv"),
-                fv=ident(f"{f}__fv"),
-                sniff_code=(ident(f"{f}__t")
-                            if f"{f}__t" in df.columns else None),
-            )
-            cols.append(casts.value_column(
-                f"CAST({v} AS {_NATIVE[target]})", target, f))
-            err = f"{err} OR ({e})"
-        out[r] = part.select(*cols, sqltext.column(f"({err})", "cast_error"))
+        typed = [
+            f"CAST({ident(f + '__cast')} AS"
+            f" {casts.NATIVE[schema[f]].simpleString()}) AS {ident(f)}"
+            for f in fields if f in schema]
+        out[r] = casted.filter(F.expr(f"`route` = {lit(r)}")).selectExpr(
+            *[ident(c) for c in keep or []], *typed, "cast_error")
     return out
 
 
 def spark_schema_ddl(schema: dict[str, int]) -> str:
     """S8 analog: route type-map -> DDL column list (reference
     ``src/elastic.rs:38-66`` translates Types -> ES mapping JSON)."""
-    return ", ".join(f"{f} {_NATIVE[c].upper()}" for f, c in sorted(schema.items()))
+    return ", ".join(f"{f} {casts.NATIVE[c].simpleString().upper()}"
+                     for f, c in sorted(schema.items()))

@@ -83,12 +83,11 @@ def _manifest_agg(assigned: DataFrame, order_col: str, len_col: str
 def write_shards(
     df: DataFrame, path: str, order_col: str = "doc_id",
     len_col: str = "n_tok", shard_tokens: int = SHARD_TOKENS,
-    max_records_per_file: int = 1_000_000,
     verify: bool = False,
 ) -> DataFrame:
     """Write the corpus as shard-partitioned parquet; returns the manifest.
 
-    ``maxRecordsPerFile`` bounds individual file sizes inside a shard
+    ``maxRecordsPerFile`` (1M) bounds individual file sizes inside a shard
     directory (file-size hygiene at 100 TB: a trainer wants many
     mid-sized files per shard, not one monolith per task).
 
@@ -113,7 +112,7 @@ def write_shards(
     assigned = shard_assign(seam(df), order_col, len_col, shard_tokens)
     (
         assigned.write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
+        .option("maxRecordsPerFile", 1_000_000)
         .partitionBy("shard")
         .parquet(path)
     )

@@ -164,7 +164,6 @@ def resume_fanout(
     routed: DataFrame,
     manifest: dict[str, Any],
     base: str,
-    route_col: str = "route",
 ) -> dict[str, Any]:
     """Write every uncommitted route's rows; returns the updated manifest.
 
@@ -188,7 +187,7 @@ def resume_fanout(
                if not manifest["routes"][r]["committed"]]
     if not pending:
         return manifest
-    route = ident(route_col)
+    route = ident("route")
     # S5 seam (lazy: the staged write fills it), REQUIRED for an
     # unmaterialized `routed`: the `isin(pending)` filter would otherwise
     # be pushed down THROUGH the route derivation, re-inlining the entire
@@ -206,7 +205,7 @@ def resume_fanout(
     staged = (
         routed.filter(F.expr(
             f"{route} IN ({', '.join(lit(r) for r in pending)})"))
-        .withColumn(_STAGE_COL, F.col(route_col))
+        .withColumn(_STAGE_COL, F.col("route"))
         .observe(observed, *[sqltext.column(f"count_if({route} = {lit(r)})",
                                             f"n{i}")
                              for i, r in enumerate(pending)])

@@ -44,8 +44,7 @@ HIST_BUCKET = 64  # tokens-per-source histogram bucket width
 @dataclass
 class Pipeline:
     sequences: DataFrame
-    parsed: DataFrame          # + fields, parser, parse_error
-    routed: DataFrame          # + route
+    routed: DataFrame          # + fields, parser, parse_error, route
     route_counts: DataFrame    # (route, n_rows)
     routed_tokens: DataFrame   # route + token payload, bitwise invariant
     source_token_hist: DataFrame  # (source, bucket, n_rows, sum_tok)
@@ -137,7 +136,6 @@ def build(
 
     return Pipeline(
         sequences=seq,
-        parsed=parsed,
         routed=routed,
         route_counts=route_counts,
         routed_tokens=routed_tokens,

@@ -56,7 +56,9 @@ def seam(df, eager: bool = False):
     checkpoint carries real size stats, and the seam's one job also fills
     an ``observe`` edge count.  Every other caller seams lazily (written
     by the first action that reads it): ``manifest.resume_fanout``'s plan
-    barrier, filled by its one staged write; ``route_cast.cast_per_route``;
+    barrier, filled by its one staged write; ``route_cast.cast_per_route``,
+    whose per-route projections all filter one ``cast_single_pass`` over
+    the pin (filled by the first route's action);
     ``sharding.write_shards``, which pins its INPUT (filled by the prefix
     sum's first pass, so the row count, key sample, per-bucket totals and
     window all read one pin); ``dedup._bucket_pairs``, shared by the
