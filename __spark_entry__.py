@@ -739,9 +739,10 @@ _TOKENIZE_VOCAB = (
 
 def _q_doc_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer APPLY (text -> token ids): greedy longest-match over a
-    fixed vocabulary via mapInPandas (broadcast vocab, Arrow batches,
-    zero shuffles) — the step that produces the input_hint token table
-    from the text corpus.  Oracle: the same greedy recurrence as a
+    fixed vocabulary as one JVM projection (regexp_extract_all over a
+    longest-first alternation, then a piece -> id map; zero shuffles) —
+    the step that produces the input_hint token table from the text
+    corpus.  Oracle: the same greedy recurrence as a
     DuckDB recursive CTE."""
     from ulp_spark.operators import tokenizer
 
@@ -1215,7 +1216,7 @@ def _q_seq_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_corpus_training_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FLAGSHIP composition — the full text -> training-batches story as
-    ONE plan: tokenize (mapInPandas, broadcast vocab, zero shuffles) ->
+    ONE plan: tokenize (one JVM projection, zero shuffles) ->
     exact sequence dedup on token fingerprints -> fixed-token-budget
     shard manifest (distributed prefix sum, no SinglePartition stage).
 
@@ -2292,14 +2293,20 @@ def _all_oracle_sql() -> dict[str, str]:
         # sniff battery — Types::get_type parity (types.rs:29-57).
         "events_json_schema": lattice.json_field_schema_sql("events", "props"),
         "events_cast_props": f"""
-            SELECT event_id,
-                   json_extract_string(props, '$.k') AS k_raw,
-                   CAST({sniff.sniff_code_sql("json_extract_string(props, '$.k')")} AS INTEGER) AS k_type,
-                   {casts.cast_to_int_sql(
-                       "json_extract_string(props, '$.k')",
-                       sniff.sniff_code_sql("json_extract_string(props, '$.k')"))} AS k_int,
-                   0 AS k_err
-            FROM events
+            WITH s AS (
+              SELECT event_id, v, {sniff.sniff_code_sql("v")} AS code
+              FROM (SELECT event_id, json_extract_string(props, '$.k') AS v
+                    FROM events)
+            ),
+            r AS (
+              SELECT *, {sniff.materialized_runtime_code_sql("v", "code")} AS rc
+              FROM s
+            )
+            SELECT event_id, v AS k_raw, CAST(code AS INTEGER) AS k_type,
+                   {casts.cast_to_int_sql("v", "rc")} AS k_int,
+                   CAST({casts.cast_to_int_error_sql("v", "rc")} AS INTEGER)
+                     AS k_err
+            FROM r
         """,
         "sanitize_event_types": f"""
             SELECT {sanitize.sanitize_sink_name_sql(

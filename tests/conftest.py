@@ -42,3 +42,22 @@ def count_jobs(spark):
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture
+def count_compiles(spark):
+    """``count_compiles(fn)`` -> ``(fn(), n)``, where ``n`` is the number
+    of classes Spark's code generator compiled while ``fn`` ran (the
+    ``CodegenMetrics.METRIC_COMPILATION_TIME`` count; on local[] the
+    executors share the driver's JVM, so task-side compiles count too).
+    A class served from the codegen cache is not compiled, so a repeat of
+    the same plans reads 0 unless the cache evicted them."""
+    metric = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+              .METRIC_COMPILATION_TIME())
+
+    def run(fn):
+        before = metric.getCount()
+        out = fn()
+        return out, metric.getCount() - before
+
+    return run

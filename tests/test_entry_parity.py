@@ -86,3 +86,29 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 1
     assert set(df.columns) == {"route", "n_rows"}
+
+
+def test_events_cast_props_matches_oracle_on_crafted_values(spark, tmp_path):
+    """events_cast_props against its oracle on values the sf0.01 events
+    never hold, so the cast-error flag is compared where it is set: a
+    string whose int value misses, floats whose rounded value lies
+    outside i64, a non-finite float word, an IPv4 string, and null or
+    missing keys."""
+    import json
+
+    values = [7, 2.5, "abc", "1e308", "-1e19", "99999999999999999999",
+              "2.6", "inf", "1e999", "1.2.3.4", "0x1f", "true", "0",
+              "2024-01-01T00:00:00Z", None]
+    props = [json.dumps({"k": v}) for v in values] + ["{}"]
+    d = tmp_path / "events.parquet"
+    spark.createDataFrame(list(enumerate(props)),
+                          "event_id long, props string").write.parquet(str(d))
+    df = entrymod.queries()["events_cast_props"](spark, str(tmp_path))
+    got = _rows([c.lower() for c in df.columns], [tuple(r) for r in df.collect()])
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{d}/*.parquet'")
+    res = con.sql(entrymod.oracle_sql()["events_cast_props"])
+    exp = _rows([c.lower() for c in res.columns], res.fetchall())
+    assert got == exp
+    err = {r[0]: r[1] for r in exp}     # sorted columns: event_id, k_err, ...
+    assert [i for i in sorted(err) if err[i]] == [2, 3, 4, 5, 7, 8, 9, 13]

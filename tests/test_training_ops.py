@@ -885,6 +885,48 @@ def test_write_shards_job_budget(spark, tmp_path, count_jobs):
     assert call + collect <= 13, (call, collect)
 
 
+def test_repeat_training_iteration_does_not_recompile(
+        spark, tmp_path, count_compiles):
+    """A repeat of the tokenize -> census -> pack_bins -> pack_sequences
+    -> write_shards + manifest chain finds its generated classes in the
+    codegen cache.  One iteration makes ~90 classes; with Spark's default
+    cache of 100 (4 LRU segments of 25) this repeat recompiled 46 of
+    them, while ``session._DEFAULTS`` sizes the cache to hold them all."""
+    import random
+
+    from ulp_spark.operators import packing, sharding, tokenizer, tokens
+    from ulp_spark.session import seam
+
+    words = ["table", "value", "batch", "window", "spark", "query", "the",
+             "row", "agg", "scan", "fast", "slow", "key", "part"]
+    vocab = words + [" "] + [chr(c) for c in range(ord("a"), ord("z") + 1)]
+    rng = random.Random(400)
+    texts = [" ".join(rng.choice(words) for _ in range(rng.randint(10, 90)))
+             for _ in range(360)]
+    texts += texts[:40]                                 # exact duplicates
+    docs = spark.createDataFrame(list(enumerate(texts)),
+                                 "doc_id long, text string")
+
+    def iteration(it):
+        tok = seam(tokenizer.tokenize(docs, "text", "doc_id", vocab))
+        census = (
+            tok.groupBy(tokens.token_fingerprint(F.col("tokens")).alias("fp"))
+            .agg(F.min("doc_id").alias("doc_id"),
+                 F.min("n_tok").alias("n_tok")))
+        packed = seam(packing.pack_bins(census.select("doc_id", "n_tok"),
+                                        capacity=2048))
+        packed.count()
+        rows = packing.pack_sequences(tok, packed)
+        return sorted(sharding.write_shards(
+            rows, str(tmp_path / f"it{it}"), order_col="bin_id",
+            shard_tokens=1 << 13).collect())
+
+    first, _ = count_compiles(lambda: iteration(0))
+    second, repeat = count_compiles(lambda: iteration(1))
+    assert first == second and first
+    assert repeat <= 4, repeat
+
+
 def test_token_fingerprint_collides_only_on_equal_arrays(spark):
     from ulp_spark.operators import tokens
 
@@ -1593,40 +1635,187 @@ def test_incremental_sequence_dedup_within_batch(spark, tmp_path):
     assert kept == ["a", "c"]                   # min-id wins inside the batch
 
 
+def _greedy_ref(s, vocab, unk_id=-1, lowercase=True):
+    """Pure-Python greedy longest-match: at each position the longest
+    piece by slice probes, else ``unk_id`` and one code point."""
+    if s is None:
+        return []
+    if lowercase:
+        s = s.lower()
+    v = {p: i for i, p in enumerate(vocab)}
+    max_len = max(map(len, vocab))
+    ids, i = [], 0
+    while i < len(s):
+        ln = min(max_len, len(s) - i)
+        while ln > 0 and s[i:i + ln] not in v:
+            ln -= 1
+        if ln == 0:
+            ids.append(unk_id)
+            i += 1
+        else:
+            ids.append(v[s[i:i + ln]])
+            i += ln
+    return ids
+
+
 def test_tokenizer_matches_pure_python_reference_on_random_inputs(spark):
-    """Randomized cross-check: Spark mapInPandas output == an independent
-    per-string greedy implementation, 200 seeded strings in one job."""
+    """Randomized cross-check: Spark output == an independent per-string
+    greedy implementation, 200 seeded strings in one job."""
     import random
 
     from ulp_spark.operators import tokenizer
 
     rng = random.Random(20260817)
     vocab = ["aa", "aab", "ba", "b", "a", "c", " ", "abc", "cab"]
-    v = {p: i for i, p in enumerate(vocab)}
-    max_len = max(map(len, vocab))
-
-    def ref(s):
-        s = s.lower()
-        ids, i = [], 0
-        while i < len(s):
-            ln = min(max_len, len(s) - i)
-            while ln > 0 and s[i:i + ln] not in v:
-                ln -= 1
-            if ln == 0:
-                ids.append(-1)
-                i += 1
-            else:
-                ids.append(v[s[i:i + ln]])
-                i += ln
-        return ids
-
     rows = [(i, "".join(rng.choice("abc xyB") for _ in range(rng.randint(0, 40))))
             for i in range(200)]
     df = spark.createDataFrame(rows, "id long, t string")
     got = {r.id: list(r.tokens) for r in tokenizer.tokenize(
         df, "t", "id", vocab).collect()}
     for i, s in rows:
-        assert got[i] == ref(s), (s, got[i], ref(s))
+        assert got[i] == _greedy_ref(s, vocab), (s, got[i])
+
+
+# Pieces that are regex syntax (each metacharacter, the \Q...\E quote
+# markers, a newline), multi-code-point pieces and non-BMP pieces.
+_ADVERSARIAL_VOCAB = [
+    ".", "\\", "(", "|", "$", "\\E", "\\Q", "\n", "\r\n", "a.b", "(|",
+    "\\Q.\\E", "[a]", "{2}", "^", "*+?", "e\u0301", "i\u0307", "\u00df",
+    "\U0001F600", "\U0001F600\U0001F600", "ab", "b", "E", "Q",
+]
+
+
+def test_tokenizer_adversarial_pieces_and_texts(spark):
+    """Regex-syntax pieces match literally and the JVM regex walks code
+    points like Python: CRLF, non-BMP emoji, combining marks, dotted
+    capital I, sharp s, null and empty text, with and without
+    lowercasing, all equal the pure-Python greedy reference; the output
+    schema is the declared one."""
+    import random
+
+    from pyspark.sql import types as T
+
+    from ulp_spark.operators import tokenizer
+
+    texts = [
+        None, "", "a.b\\Q.\\E(|)$^[a]{2}*+?", "\\E\\Q\\\\E", "x\r\ny\n\r",
+        "\U0001F600\U0001F600\U0001F600 \U0001F601", "e\u0301E\u0301\u0301",
+        "\u0130stanbul \u0130", "stra\u00dfe STRA\u1E9EE \u00df\u1E9E", "AB.b",
+    ]
+    rng = random.Random(9)
+    pool = list(".\\(|$^[]{}*+?EQabe\n\r \u0301\u0130\u00df\u1E9E"
+                "\U0001F600xA")
+    texts += ["".join(rng.choice(pool) for _ in range(rng.randint(0, 30)))
+              for _ in range(200)]
+    df = spark.createDataFrame(list(enumerate(texts)), "id long, t string")
+    for lowercase in (True, False):
+        out = tokenizer.tokenize(df, "t", "id", _ADVERSARIAL_VOCAB,
+                                 unk_id=-3, lowercase=lowercase)
+        assert out.schema == T.StructType([
+            T.StructField("id", T.LongType(), True),
+            T.StructField("tokens", T.ArrayType(T.IntegerType(), False),
+                          False),
+            T.StructField("n_tok", T.IntegerType(), False),
+        ])
+        got = {r.id: (list(r.tokens), r.n_tok) for r in out.collect()}
+        assert len(got) == len(texts)
+        for i, s in enumerate(texts):
+            ref = _greedy_ref(s, _ADVERSARIAL_VOCAB, -3, lowercase)
+            assert got[i] == (ref, len(ref)), (lowercase, s, got[i], ref)
+
+
+def test_tokenizer_final_sigma_deviation_is_pinned(spark):
+    """The one documented deviation from Python lowercasing: next to a
+    case-ignorable character such as ``^`` the JVM and CPython decide
+    the final-sigma rule differently.  Java does not count ``^`` as
+    case-ignorable, so a Σ after "a^" is not word-final to it (σ) and a
+    Σ before "^b" is (ς); CPython decides the other way round both
+    times.  Away from such characters they agree."""
+    from ulp_spark.operators import tokenizer
+
+    vocab = ["\u03c3", "\u03c2", "a", "b", "^", " "]
+    rows = [(1, "a^\u03a3"), (2, "a\u03a3^b"), (3, "a\u03a3 b\u03a3a")]
+    df = spark.createDataFrame(rows, "id long, t string")
+    got = {r.id: list(r.tokens)
+           for r in tokenizer.tokenize(df, "t", "id", vocab).collect()}
+    sigma, final = vocab.index("\u03c3"), vocab.index("\u03c2")
+    assert got[1] == [2, 4, sigma]          # CPython: ς
+    assert got[2] == [2, final, 4, 3]       # CPython: σ
+    assert _greedy_ref(rows[0][1], vocab) == [2, 4, final]
+    assert _greedy_ref(rows[1][1], vocab) == [2, sigma, 4, 3]
+    assert got[3] == _greedy_ref(rows[2][1], vocab) == [
+        2, final, 5, 3, sigma, 2]
+
+
+def test_tokenize_scale_guard_large_vocab(spark, monkeypatch):
+    """A 5,000-piece vocab: planning ``tokenize`` stays a fixed handful of
+    Py4J calls (the pattern and the piece -> id map are SQL text in one
+    expression), and running it needs no codegen fallback: with
+    ``spark.sql.codegen.fallback`` off and codegen-only projections, a
+    class that failed to compile would raise, and every whole-stage
+    codegen subtree of the executed plan compiles within the huge-method
+    limit (above it Spark silently runs the subtree interpreted)."""
+    import random
+    import threading
+
+    import py4j.java_gateway as jg
+
+    from ulp_spark.operators import tokenizer
+
+    rng = random.Random(5000)
+    alphabet = "abcdefghijklmnopqrstuvwxyz.$(|\\ "
+    vocab = set()
+    while len(vocab) < 5000:
+        vocab.add("".join(rng.choice(alphabet)
+                          for _ in range(rng.randint(1, 6))))
+    vocab = sorted(vocab)
+    rows = [(i, "".join(rng.choice(alphabet) for _ in range(200)))
+            for i in range(64)]
+    df = spark.createDataFrame(rows, "id long, t string")
+
+    calls = []
+    send = jg.GatewayClient.send_command
+    this_thread = threading.get_ident()
+
+    def counted(self, command, *a, **kw):
+        if threading.get_ident() == this_thread:
+            calls.append(command.split("\n", 2)[:2])
+        return send(self, command, *a, **kw)
+
+    monkeypatch.setattr(jg.GatewayClient, "send_command", counted)
+    out = tokenizer.tokenize(df, "t", "id", vocab)
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 24, calls
+
+    jvm = spark._jvm
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen
+    conf = {"spark.sql.codegen.fallback": "false",
+            "spark.sql.codegen.factoryMode": "CODEGEN_ONLY"}
+    saved = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        got = {r.id: list(r.tokens) for r in out.collect()}
+        plan = out._jdf.queryExecution().executedPlan()
+        limit = int(spark.conf.get("spark.sql.codegen.hugeMethodLimit"))
+        stages, todo = [], [plan]
+        while todo:
+            node = todo.pop()
+            if node.getClass().getSimpleName() == "WholeStageCodegenExec":
+                code = node.doCodeGen()._2()
+                stages.append(
+                    codegen.CodeGenerator.compile(code)._2().maxMethodCodeSize())
+            kids = node.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert stages and all(size <= limit for size in stages), (stages, limit)
+    for i, s in rows[:8]:
+        assert got[i] == _greedy_ref(s, vocab), s
 
 
 def test_pack_bins_zero_token_doc_never_joins_oversize_bin(spark):

@@ -307,14 +307,39 @@ def cast_field(
 # exercised via pytest golden cases instead)
 # --------------------------------------------------------------------------
 
+def _float_value_sql(e: str) -> str:
+    """DuckDB twin of :func:`_float_value`: the finite f64 parse."""
+    dbl = f"try_cast({e} AS DOUBLE)"
+    return (f"CASE WHEN regexp_matches({e}, '{RE_FLOAT}') AND isfinite({dbl})"
+            f" THEN {dbl} END")
+
+
+def _in_i64_sql(rounded: str) -> str:
+    return (f"({rounded} >= -{I64_LIMIT}::DOUBLE"
+            f" AND {rounded} < {I64_LIMIT}::DOUBLE)")
+
+
 def cast_to_int_sql(value: str, rcode: str) -> str:
     iv = sniff.int_value_sql(value)
-    rounded = f"round(try_cast({value} AS DOUBLE))"
+    rounded = f"round({_float_value_sql(value)})"
     return f"""
     CASE
       WHEN ({rcode}) = {NULL} THEN 0
       WHEN ({rcode}) IN ({BOOL}, {INT}, {STR}) THEN ({iv})
-      WHEN ({rcode}) = {FLOAT} AND {rounded} >= -{I64_LIMIT}::DOUBLE
-           AND {rounded} < {I64_LIMIT}::DOUBLE THEN CAST({rounded} AS BIGINT)
+      WHEN ({rcode}) = {FLOAT} AND {_in_i64_sql(rounded)}
+        THEN CAST({rounded} AS BIGINT)
     END
+    """
+
+
+def cast_to_int_error_sql(value: str, rcode: str) -> str:
+    """DuckDB twin of :func:`cast_field`'s INT error flag: a runtime
+    string whose str_int misses, or a runtime float whose rounded value
+    lies outside i64."""
+    iv = sniff.int_value_sql(value)
+    fv = _float_value_sql(value)
+    return f"""
+    coalesce((({rcode}) = {STR} AND ({iv}) IS NULL)
+             OR (({rcode}) = {FLOAT} AND ({fv}) IS NOT NULL
+                 AND NOT {_in_i64_sql(f"round({fv})")}), false)
     """

@@ -304,6 +304,21 @@ def sniff_code_sql(e: str) -> str:
     """
 
 
+def materialized_runtime_code_sql(value: str, code: str) -> str:
+    """DuckDB twin of :func:`materialized_runtime_code`: a Float sniff is
+    a runtime number only when the text is a finite float literal."""
+    return f"""
+    CASE
+      WHEN ({code}) = {FLOAT} THEN
+        CASE WHEN regexp_matches({value}, '{RE_FLOAT}')
+                  AND isfinite(try_cast({value} AS DOUBLE))
+             THEN {FLOAT} ELSE {STR} END
+      WHEN ({code}) IN ({IPV4}, {IPV6}, {DATE}) THEN {STR}
+      ELSE ({code})
+    END
+    """
+
+
 def json_runtime_code_sql(jtype: str, jval: str) -> str:
     """DuckDB twin of the JSON *runtime* typing (``Types::get_type``,
     ``type_casting/src/types.rs:29-57``): ``jtype`` is a ``json_type()``/

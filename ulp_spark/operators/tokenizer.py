@@ -13,15 +13,17 @@ from true BPE on adversarial vocabularies; greedy is what WordPiece/
 unigram runtimes ship for inference and is deterministic given the piece
 set, which is the property the oracle needs.
 
-Why a Pandas UDF: the longest-match recurrence consumes a variable-length
+Why a regex: the longest-match recurrence consumes a variable-length
 prefix per step, so each output token depends on where the previous match
 ended — not expressible as Catalyst column algebra over fixed offsets
-(contrast token_grams, whose windows are position-independent).  This is
-the repo's one DESIGNED Python hot path: mapInPandas over Arrow batches,
-the vocabulary dict broadcast once per executor, zero shuffles, linear
-scan per string (O(len * max_piece_len) dict probes).  ``detokenize`` is
-the inverse and IS column-expressible — a broadcast join + ordered
-re-assembly, JVM end to end.
+(contrast token_grams, whose windows are position-independent).  But a
+leftmost-first regex alternation with the pieces ordered longest-first
+IS that recurrence, so ``tokenize`` is one JVM projection
+(``regexp_extract_all`` + a piece -> id map lookup): no Python worker,
+no Arrow round trip, zero shuffles.  ``detokenize`` is the inverse — a
+broadcast join + ordered re-assembly, JVM end to end.  ``bpe_tokenize``
+(merge-rank order depends on the whole symbol sequence) stays the one
+mapInPandas path here.
 
 The DuckDB twin (tokenize_sql) drives the same greedy recurrence with a
 recursive CTE, so even this non-relational operator gets a full
@@ -30,9 +32,17 @@ value-level SQL oracle.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ulp_spark.functions.sqltext import ident, lit
+
+# The characters a Java regex reads as syntax outside a character class
+# (no COMMENTS flag); a backslash before any of them is that character.
+_REGEX_META = re.compile(r"([\\^$.|?*+()\[\]{}])")
 
 
 def tokenize(
@@ -42,10 +52,35 @@ def tokenize(
     """(id, tokens array<int>, n_tok) by greedy longest-match over
     ``vocab`` (piece i gets id i).  Null/empty text -> empty array.
 
-    Scale shape: narrow map over Arrow batches — no shuffle, no driver
-    collect; the vocab broadcast ships once per executor.  Partitioning
-    and row order pass through untouched, so the output co-partitions
-    with the input for whatever joins follow.
+    One projection: ``regexp_extract_all(lower(text), '(?s:<pieces
+    longest-first>|.)', 0)``, each match mapped to its id through a
+    literal piece -> id map (``unk_id`` when absent).  Java alternation is
+    leftmost-first, like Python ``re``, so trying longer pieces first at
+    every position is the greedy rule; equal-length alternatives only
+    both match when they are the same string, so their order is
+    irrelevant.  The trailing ``.`` consumes one code point (line
+    terminators included) — the unk path.  The pattern and the map are
+    SQL text in one expression, so planning costs the same handful of
+    Py4J calls for any vocab size.
+
+    Scale shape: a narrow projection — no shuffle, no driver collect, no
+    Python worker.  ``transform`` has no code generation in Spark 4.1, so
+    this Project runs as a generated projection that evaluates the lambda
+    interpreted, between the whole-stage-codegen scan and ``size``; the
+    regex dominates its cost either way.  Partitioning and row order pass
+    through untouched, so the output co-partitions with the input for
+    whatever joins follow.  Per position the regex tries the
+    alternatives in turn, and the id lookup scans the map's keys, so a
+    token costs O(|vocab|) comparisons at worst — the same order as a
+    backtracking regex alternation in any engine.
+
+    Lowercasing is Spark's ``lower`` (JVM case mapping), not Python's
+    ``str.lower``.  The two agree except on the final-sigma rule when a
+    Σ sits next to a case-ignorable character such as ``^``: CPython and
+    the JVM decide "end of word" differently there, so one may give ς
+    where the other gives σ (pinned in pytest).  The DuckDB twin lowers
+    Σ to σ always, so the three implementations already disagreed on
+    that case.
     """
     if not vocab:
         raise ValueError("vocab must be non-empty")
@@ -53,53 +88,16 @@ def tokenize(
         raise ValueError("vocab has duplicate pieces")
     if "" in vocab:
         raise ValueError("vocab may not contain the empty string")
-    sc = df.sparkSession.sparkContext
-    bvocab = sc.broadcast({p: i for i, p in enumerate(vocab)})
-
-    id_field = df.schema[id_col]
-    schema = T.StructType([
-        id_field,
-        T.StructField("tokens", T.ArrayType(T.IntegerType(), False), False),
-        T.StructField("n_tok", T.IntegerType(), False),
-    ])
-
-    def run(batches):
-        import re
-
-        import pandas as pd
-
-        v = bvocab.value
-        # Greedy longest-match as ONE compiled regex scan (guide §4.2 —
-        # move the per-character Python loop into the C regex engine):
-        # alternation ordered longest-first tries longer pieces before
-        # shorter ones at every position, which IS the greedy rule, and
-        # the trailing (?s:.) consumes exactly one unmatched character
-        # (any char incl. newline) — the unk path.  Equal-length
-        # alternatives only both match when they are the same string, so
-        # the within-length order is irrelevant.  Measured 4.5x over the
-        # explicit slice-probe loop on the bench vocabulary.
-        rx = re.compile(
-            "|".join(re.escape(p)
-                     for p in sorted(v, key=len, reverse=True))
-            + "|(?s:.)")
-        findall = rx.findall
-        get = v.get
-        for pdf in batches:
-            toks = []
-            for s in pdf[text_col]:
-                if s is None:
-                    toks.append([])
-                    continue
-                if lowercase:
-                    s = s.lower()
-                toks.append([get(m, unk_id) for m in findall(s)])
-            yield pd.DataFrame({
-                id_col: pdf[id_col],
-                "tokens": toks,
-                "n_tok": [len(t) for t in toks],
-            })
-
-    return df.select(id_col, text_col).mapInPandas(run, schema)
+    text = f"coalesce({ident(text_col)}, '')"
+    if lowercase:
+        text = f"lower({text})"
+    alts = "|".join(_REGEX_META.sub(r"\\\1", p)
+                    for p in sorted(vocab, key=len, reverse=True))
+    ids = ", ".join(f"{lit(p)}, {i}" for i, p in enumerate(vocab))
+    tokens = (f"transform(regexp_extract_all({text}, {lit(f'(?s:{alts}|.)')},"
+              f" 0), m -> coalesce(element_at(map({ids}), m), {int(unk_id)}))")
+    return (df.selectExpr(ident(id_col), f"{tokens} AS tokens")
+            .selectExpr(ident(id_col), "tokens", "size(tokens) AS n_tok"))
 
 
 def tokenize_sql(

@@ -38,6 +38,13 @@ _DEFAULTS = {
     # Dimension tables here are tiny; 64 MiB broadcast headroom.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.shuffle.partitions": "64",
+    # Generated-class cache (default 100, kept in 4 LRU segments of 25).
+    # One training_chain iteration (tokenize -> census -> pack -> shard
+    # write) makes ~90 distinct classes, so at 100 a steady iteration
+    # evicted and recompiled 25-28 of them every time (CodegenMetrics
+    # compilation count); at 1000 a repeat compiles none.  Static conf:
+    # read once per JVM, when code generation first runs.
+    "spark.sql.codegen.cache.maxEntries": "1000",
     # Quieter logs in tests.
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
