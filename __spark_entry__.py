@@ -191,9 +191,9 @@ def _q_doc_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_doc_winnow_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing (MOSS) fingerprint candidates: any shared substring >=
     w+k-1 chars guarantees a shared FINGERPRINT (minhash recall is
-    probabilistic); the pair floor holds at min_shared=1, and the
-    default min_shared=2 used here trades it for precision (operator
-    docstring).  Posting lists capped before the pair join, same skew
+    probabilistic); the pair floor would hold with one shared
+    fingerprint, and the two (``dedup.WINNOW_MIN_SHARED``) required here
+    trade it for precision (operator docstring).  Posting lists capped before the pair join, same skew
     discipline as minhash.
     Repartitioned: the sf tables are single parquet files, which would
     serialize the O(n*w) fingerprint scan onto one core."""
@@ -728,7 +728,7 @@ def _q_seq_balanced_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Fixed vocabulary for the tokenizer-apply query: corpus words + space +
-# letter fallback.  Greedy longest-match; unmatched chars -> unk_id.
+# letter fallback.  Greedy longest-match; unmatched chars -> tokenizer.UNK_ID.
 _TOKENIZE_VOCAB = (
     ["table", "value", "batch", "window", "spark", "query", "the", "row",
      "agg", "scan", "fast", "slow", "key", "part", "hash", "merge",
@@ -775,8 +775,7 @@ def _q_doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """fastText-style linear classifier inference over hashed word
     uni+bigram features (integer centi-unit weights -> order-independent
     exact sums; one sigmoid per doc).  Synthetic deterministic weights
-    stand in for a trained model; the trained-weights broadcast-join
-    path is pinned equivalent in pytest."""
+    stand in for a trained model."""
     from ulp_spark.operators import classifier
 
     d = _docs(spark, sf_dir).select("doc_id", "text")

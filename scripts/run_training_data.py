@@ -5,12 +5,13 @@ the engine, as scripts/run_pipeline.py is for the parse side):
     spark-submit --py-files dist/ulp_spark.zip scripts/run_training_data.py \
         --n 100000 --out /tmp/ulp_training [--shard-tokens 262144]
 
-Chain: deterministic corpus -> tokenize (mapInPandas, broadcast vocab)
--> exact sequence dedup on token fingerprints (census form: survivor +
-n_tok ride one aggregate) -> temperature mixing plan (printed) ->
-shard-partitioned parquet write via sharding.write_shards (manifest
-aggregated from the in-hand frame, one corpus scan) -> data-loader
-resume position for a sample checkpoint.  Every stage is the same code
+Chain: deterministic pre-tokenized corpus (fixtures.sequences: doc_id,
+tokens, n_tok, source) -> exact sequence dedup on token fingerprints
+(census form: survivor + n_tok ride one aggregate) -> temperature mixing
+plan (printed) -> the survivors' full rows, token arrays included,
+written as shard-partitioned parquet via sharding.write_shards (manifest
+aggregated from the in-hand frame) -> data-loader resume position for a
+sample checkpoint.  The last line reports the manifest's token total.  Every stage is the same code
 the oracle-gated queries run; this script exists so the whole chain is
 exercisable under spark-submit on a real cluster.
 """
@@ -59,16 +60,18 @@ def main() -> None:
         print(f"  {r.source}: n_tokens={r.n_tokens} "
               f"epochs={r.n_epochs} tail={r.tail_frac}")
 
+    rows = seq.select("doc_id", "tokens", "n_tok", "source") \
+        .join(surv.select("doc_id"), "doc_id", "left_semi")
     manifest = sharding.write_shards(
-        surv.select("doc_id", "n_tok"), f"{args.out}/shards",
-        shard_tokens=args.shard_tokens)
-    n_shards = manifest.count()
+        rows, f"{args.out}/shards", shard_tokens=args.shard_tokens)
+    n_shards, n_tokens = manifest.agg(
+        F.count(F.lit(1)), F.sum("n_tokens")).collect()[0]
     pos = sharding.resume_position(manifest, global_step=100, batch_size=32)
     print("resume position @step 100:", [tuple(r) for r in pos.collect()])
 
     wall = time.perf_counter() - t0
     print(f"rows in={n_in} survivors={n_surv} shards={n_shards} "
-          f"wall={wall:.1f}s out={args.out}/shards")
+          f"tokens={n_tokens} wall={wall:.1f}s out={args.out}/shards")
     spark.stop()
 
 

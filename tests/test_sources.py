@@ -58,7 +58,7 @@ def test_cast_per_route_typed_schemas(spark):
     ok = p.routed.filter(~F.col("parse_error"))
     fields = parse.all_fields(parse.DEFAULT_PATTERNS)
     schemas = lattice.route_schemas(ok, fields)
-    tables = route_cast.cast_per_route(ok, schemas, fields, keep=["doc_id", "route"])
+    tables = route_cast.cast_per_route(ok, schemas, fields)
     r = "evtx_microsoft-windows-security-auditing"
     t = tables[r]
     dt = dict(t.dtypes)
@@ -117,7 +117,7 @@ def test_bool_cast_failure_is_null_in_both_cast_shapes(spark):
         "doc_id long, route string, f string, f__r int")
     schemas = {"A": {"f": sn.BOOL}}
     typed = {r.doc_id: (r.f, r.cast_error) for r in route_cast.cast_per_route(
-        df, schemas, ["f"], keep=["doc_id"])["A"].collect()}
+        df, schemas, ["f"])["A"].collect()}
     assert typed == {1: (True, False), 2: (None, True), 3: (None, True)}
     single = {r.doc_id: (r.f__cast, r.cast_error) for r in
               route_cast.cast_single_pass(df, schemas, ["f"]).collect()}
@@ -154,7 +154,7 @@ def test_cast_per_route_matches_single_pass_for_every_target(spark):
               sn.DATE: "string", sn.STR: "string"}
 
     single = route_cast.cast_single_pass(df, schemas, ["f"])
-    tables = route_cast.cast_per_route(df, schemas, ["f"], keep=["doc_id"])
+    tables = route_cast.cast_per_route(df, schemas, ["f"])
     assert list(tables) == sorted(schemas)
     for t in range(8):
         typed = tables[f"t{t}"]
@@ -275,7 +275,7 @@ def test_cast_per_route_reads_seam_not_derivation(spark):
     fields = parse.all_fields(parse.DEFAULT_PATTERNS)
     schemas = lattice.route_schemas(ok, fields)
 
-    tables = route_cast.cast_per_route(ok, schemas, fields, keep=["doc_id"])
+    tables = route_cast.cast_per_route(ok, schemas, fields)
     one = next(iter(tables.values()))
     plan = one._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" in plan  # reads the seam

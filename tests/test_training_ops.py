@@ -41,7 +41,7 @@ def test_minhash_candidates_find_clones(spark):
     assert got == [(0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3)]
     verified = dedup.ngram_jaccard_pairs(
         df, "text", "doc_id",
-        dedup.minhash_candidates(df, "text", "doc_id"), threshold=0.99)
+        dedup.minhash_candidates(df, "text", "doc_id"))
     assert verified.count() == 6  # identical docs: jaccard == 1.0
 
 
@@ -68,9 +68,9 @@ def test_srp_bucket_pref_matches_duckdb(spark):
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vecs)], "id long, v array<double>")
     got = {r.id: r.b for r in df.select(
-        "id", similarity.srp_signature(F.col("v"), dim=8, nbits=4).alias("b")
+        "id", similarity.srp_signature(F.col("v"), dim=8).alias("b")
     ).collect()}
-    sql = similarity.srp_signature_sql("v", 8, nbits=4)
+    sql = similarity.srp_signature_sql("v", 8)
     con = duckdb.connect()
     con.execute("CREATE TABLE t (id BIGINT, v DOUBLE[])")
     con.executemany("INSERT INTO t VALUES (?, ?)", list(enumerate(vecs)))
@@ -134,7 +134,7 @@ def test_minhash_candidates_degenerate_bucket_capped(spark):
     clones = [(i, "the quick brown fox jumps over the lazy dog") for i in range(3)]
     empties = [(1000 + i, "") for i in range(5000)]
     df = spark.createDataFrame(clones + empties, "doc_id long, text string")
-    cand = dedup.minhash_candidates(df, "text", "doc_id", max_bucket=100)
+    cand = dedup.minhash_candidates(df, "text", "doc_id")
     plan = cand._jdf.queryExecution().optimizedPlan().toString()
     assert "collect_list" not in plan
     got = sorted((r.id_a, r.id_b) for r in cand.collect())
@@ -172,7 +172,7 @@ def test_embedding_near_dup_degenerate_bucket_capped(spark):
     df = spark.createDataFrame(
         zeros + [(9001, a), (9002, b)], "vec_id long, embedding array<float>")
     pairs = similarity.embedding_near_dup(
-        df, "embedding", "vec_id", dim=8, threshold=0.95, max_bucket=1000)
+        df, "embedding", "vec_id", dim=8, threshold=0.95)
     plan = pairs._jdf.queryExecution().optimizedPlan().toString()
     assert "collect_list" not in plan
     got = [(r.id_a, r.id_b) for r in pairs.collect()]
@@ -270,6 +270,14 @@ def test_global_cumsum_partition_invariant(spark):
     got = {r.k: r.tok_offset for r in packing.global_cumsum(
         df.repartition(11), "k", "v", partitions=5).collect()}
     assert got == exp
+    # edge inputs of the boundary sampler: an empty frame, and fewer rows
+    # (50) than the sample size (8 buckets x 100 keys) — taken whole
+    assert packing.global_cumsum(
+        df.limit(0), "k", "v", partitions=8).collect() == []
+    small = df.filter(F.col("id") < 50)
+    got = {r.k: r.tok_offset for r in packing.global_cumsum(
+        small, "k", "v", partitions=8).collect()}
+    assert got == {k: v for k, v in exp.items() if int(k[2:]) < 50}
 
 
 def test_global_cumsum_single_full_data_exchange(spark):
@@ -296,7 +304,7 @@ def test_packing_offsets_chunks(spark):
     rows = [("a", 100), ("b", 412), ("c", 600), ("d", 1)]
     df = spark.createDataFrame(rows, "doc_id string, n_tok int")
     got = {r.doc_id: (r.tok_offset, r.first_chunk, r.n_chunks)
-           for r in packing.packing_offsets(df, chunk=512).collect()}
+           for r in packing.packing_offsets(df).collect()}
     # a: [0,100) chunk 0; b: [100,512) chunk 0; c: [512,1112) chunks 1-2;
     # d: [1112,1113) chunk 2
     assert got == {"a": (0, 0, 1), "b": (100, 0, 1),
@@ -865,10 +873,12 @@ def test_write_shards_evaluates_input_once(spark, tmp_path):
 def test_write_shards_job_budget(spark, tmp_path, count_jobs):
     """Jobs for one write_shards call over pack_sequences output (a join
     and a groupBy(bin_id) upstream), and for collecting its manifest.
-    With the input pinned the call runs 10 jobs; seaming the output
-    instead ran 19, because each prefix-sum pass re-ran the upstream
-    shuffles.  The manifest reads 3 (2 when the output was pinned): it
-    re-runs the window's narrow projection over the pin."""
+    With the input pinned the call runs 8 jobs (10 while the prefix sum
+    placed its range boundaries with a count and a separate sample job);
+    seaming the output instead ran 19, because each prefix-sum pass
+    re-ran the upstream shuffles.  The manifest reads 3 (2 when the
+    output was pinned): it re-runs the window's narrow projection over
+    the pin."""
     from ulp_spark import fixtures
     from ulp_spark.operators import packing, sharding
 
@@ -881,8 +891,33 @@ def test_write_shards_job_budget(spark, tmp_path, count_jobs):
         shard_tokens=8 * 1024))
     got, collect = count_jobs(manifest.collect)
     assert sum(r.n_seqs for r in got) == rows.count()
-    assert call <= 10, call
-    assert call + collect <= 13, (call, collect)
+    assert call <= 8, call
+    assert call + collect <= 11, (call, collect)
+
+
+def test_run_training_data_script_writes_token_shards(tmp_path):
+    """scripts/run_training_data.py end to end in its own process: the
+    shards carry the survivors' token arrays, and their token count is
+    the manifest's."""
+    import os
+    import re
+    import subprocess
+    import sys
+
+    import pyarrow.parquet as pq
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = str(tmp_path / "training")
+    res = subprocess.run(
+        [sys.executable, os.path.join(repo, "scripts", "run_training_data.py"),
+         "--n", "2000", "--master", "local[2]", "--out", out],
+        capture_output=True, text=True, timeout=600, cwd=repo)
+    assert res.returncode == 0, res.stderr[-3000:]
+    n_tokens = int(re.search(r" tokens=(\d+) ", res.stdout).group(1))
+    shards = pq.read_table(os.path.join(out, "shards"))
+    assert "tokens" in shards.column_names
+    assert sum(len(t) for t in shards.column("tokens").to_pylist()) \
+        == n_tokens > 0
 
 
 def test_repeat_training_iteration_does_not_recompile(
@@ -985,28 +1020,6 @@ def test_value_anomalies_flags_constructed_outlier(spark):
     assert stats["b"] == 0.0
 
 
-def test_profile_table_approx_within_tolerance_and_no_expand(spark):
-    """The 100-TB profiling form: HLL distinct within 3*rsd of exact, and
-    the physical plan drops the Expand the exact distincts force."""
-    from ulp_spark.operators import profiling
-
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    cols = ["doc_id", "lang", "source", "n_chars"]
-    exact = {r.col_name: r for r in profiling.profile_table(docs, cols).collect()}
-    appr = {r.col_name: r for r in profiling.profile_table(
-        docs, cols, approx=True, rsd=0.05).collect()}
-    for c in cols:
-        e, a = exact[c], appr[c]
-        assert a.n_rows == e.n_rows and a.n_nulls == e.n_nulls
-        assert a.min_val == e.min_val and a.max_val == e.max_val
-        assert abs(a.n_distinct - e.n_distinct) <= max(2, 0.15 * e.n_distinct)
-    plan_exact = profiling.profile_table(docs, cols)._jdf \
-        .queryExecution().executedPlan().toString()
-    plan_appr = profiling.profile_table(docs, cols, approx=True)._jdf \
-        .queryExecution().executedPlan().toString()
-    assert "Expand" in plan_exact
-    assert "Expand" not in plan_appr
-
 def test_seam_upgrades_to_reliable_checkpoint(spark, tmp_path):
     """localCheckpoint blocks die with their executor, so every seam must
     flip to a reliable checkpoint when the session has a checkpoint dir —
@@ -1091,6 +1104,13 @@ def test_seam_is_the_only_checkpoint_call():
     assert offenders == []
 
 
+def _py_files(root):
+    """The repo's .py files under ``root``, minus caches and dot-dirs."""
+    return [p for p in sorted(root.rglob("*.py"))
+            if not any(part.startswith(".") or part == "__pycache__"
+                       for part in p.relative_to(root).parts)]
+
+
 def test_every_package_def_is_referenced():
     """Dead-code guard: every top-level def/class in ulp_spark/ has a
     Name, Attribute or import reference in some repo .py file (tests
@@ -1104,11 +1124,6 @@ def test_every_package_def_is_referenced():
     pkg = pathlib.Path(ulp_spark.__file__).parent
     repo = pkg.parent
 
-    def py_files(root):
-        return [p for p in sorted(root.rglob("*.py"))
-                if not any(part.startswith(".") or part == "__pycache__"
-                           for part in p.relative_to(root).parts)]
-
     def top_name(node):
         return node.name if isinstance(
             node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
@@ -1116,7 +1131,7 @@ def test_every_package_def_is_referenced():
 
     # name -> {(file, enclosing top-level def)} of every reference
     refs: dict[str, set] = {}
-    for p in py_files(repo):
+    for p in _py_files(repo):
         for top in ast.parse(p.read_text()).body:
             for n in ast.walk(top):
                 if isinstance(n, ast.Name):
@@ -1130,11 +1145,106 @@ def test_every_package_def_is_referenced():
                 refs.setdefault(name, set()).add((p, top_name(top)))
     dead = [
         f"{p.relative_to(repo)}:{name}"
-        for p in py_files(pkg)
+        for p in _py_files(pkg)
         for name in filter(None, map(top_name, ast.parse(p.read_text()).body))
         if refs.get(name, set()) <= {(p, name)}
     ]
     assert dead == []
+
+
+# Options a non-test caller never sets, kept on purpose (reason each).
+_OPTION_ALLOW = {
+    # safety audit: re-reads the written shards against the manifest
+    "ulp_spark/operators/sharding.py:write_shards(verify)",
+    # test seams that reach a production path at test scale
+    "ulp_spark/operators/dedup.py:connected_components(max_iter)",
+    "ulp_spark/operators/packing.py:global_cumsum(partitions)",
+    "ulp_spark/fixtures.py:clustered_embeddings(partitions)",
+    "ulp_spark/fixtures.py:lined_docs(partitions)",
+    "ulp_spark/operators/tokens.py:compact_dedup_state(target_rows_per_file)",
+    "ulp_spark/operators/tokens.py:compact_dedup_state(min_files)",
+    # the cap and its coverage report only bite past 200k distinct words
+    "ulp_spark/operators/vocab.py:bpe_train(max_words)",
+    # describe input from outside the program
+    "ulp_spark/sources/registry.py:read_tables(csv_header)",
+    "ulp_spark/operators/profiling.py:profile_table_sql(float_cols)",
+}
+
+
+def test_every_option_has_a_non_test_caller():
+    """Knob guard: every optional parameter of a public top-level
+    function in ulp_spark/ is set by some call outside tests/ — in
+    ulp_spark/, __spark_entry__.py, bench.py, bench_extra.py, scripts/
+    or perfbench/ — or sits on the allow-list above.  A call sets a
+    parameter by keyword, by position, or through ``*args``/``**kwargs``
+    (which set them all); calls inside string constants that parse as
+    Python (the child scripts scaling_bench formats) count too.  An
+    option nobody sets is a configuration no traffic exercises: make it
+    a constant."""
+    import ast
+    import pathlib
+    import re
+
+    import ulp_spark
+
+    pkg = pathlib.Path(ulp_spark.__file__).parent
+    repo = pkg.parent
+
+    options = []   # (module:function(param), function, param, position)
+    for p in _py_files(pkg):
+        for top in ast.parse(p.read_text()).body:
+            if not isinstance(top, ast.FunctionDef) or top.name[0] == "_":
+                continue
+            a = top.args
+            pos = a.posonlyargs + a.args
+            first_opt = len(pos) - len(a.defaults)
+            opts = [(x.arg, i) for i, x in enumerate(pos) if i >= first_opt]
+            opts += [(x.arg, None)
+                     for x, d in zip(a.kwonlyargs, a.kw_defaults)
+                     if d is not None]
+            options += [(f"{p.relative_to(repo)}:{top.name}({n})",
+                         top.name, n, i) for n, i in opts]
+
+    set_by: dict[str, set] = {}   # callee name -> params/positions/"*"
+
+    def scan(tree):
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                f = n.func
+                name = getattr(f, "id", None) or getattr(f, "attr", None)
+                keys = set_by.setdefault(name, set())
+                keys |= {"*" if isinstance(x, ast.Starred) else i
+                         for i, x in enumerate(n.args)}
+                keys |= {"*" if k.arg is None else k.arg for k in n.keywords}
+            elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+                # str.format templates: {name} fields become names, {{ }}
+                # braces literal, so a child-script source parses
+                src = re.sub(r"(?<!\{)\{(\w+)(![rsa])?\}(?!\})", r"\1",
+                             n.value).replace("{{", "{").replace("}}", "}")
+                try:
+                    scan(ast.parse(src))
+                except (SyntaxError, ValueError):
+                    pass
+
+    callers = (_py_files(pkg) + _py_files(repo / "scripts")
+               + _py_files(repo / "perfbench")
+               + [repo / f for f in ("__spark_entry__.py", "bench.py",
+                                     "bench_extra.py")])
+    for p in callers:
+        scan(ast.parse(p.read_text()))
+
+    def is_set(fn, param, i):
+        keys = set_by.get(fn, set())
+        return "*" in keys or param in keys or (i is not None and i in keys)
+
+    unset = [tag for tag, fn, param, i in options if not is_set(fn, param, i)]
+    print(f"{len(options)} optional parameters, "
+          f"{len(options) - len(unset)} set by non-test callers, "
+          f"{len(_OPTION_ALLOW)} allow-listed")
+    offenders = [tag for tag in unset if tag not in _OPTION_ALLOW]
+    assert offenders == [], "\n".join(offenders)
+    # an allow-list entry must still name an option no caller sets
+    assert sorted(_OPTION_ALLOW - set(unset)) == []
 
 
 def test_value_anomalies_single_scan_when_materialized(spark, tmp_path):
@@ -1233,30 +1343,31 @@ def test_source_token_drift_identical_null_and_skewed(spark):
 
 
 def test_duplicate_gram_coverage_hand_computed(spark):
-    """Constructed corpus, k=3: shared windows count, unique ones don't,
-    intra-doc repeats collapse to one distinct gram, short rows vanish."""
+    """Constructed corpus, GRAM=8 windows: shared windows count, unique
+    ones don't, intra-doc repeats collapse to one distinct gram, short
+    rows vanish."""
     from ulp_spark.operators import tokens
 
+    assert tokens.GRAM == 8
     rows = [
-        # doc 1: windows (1,2,3),(2,3,4),(3,4,5) — (1,2,3) shared w/ doc 2
-        (1, [1, 2, 3, 4, 5]),
-        # doc 2: intra-doc repeat (9,9,9)x2 collapses; (1,2,3) shared
-        (2, [9, 9, 9, 9, 1, 2, 3]),
+        # doc 1: windows (1..8),(2..9),(3..10) — (1..8) shared w/ doc 2
+        (1, list(range(1, 11))),
+        # doc 2: intra-doc repeat (9 x8) twice collapses; (1..8) shared
+        (2, [9] * 9 + list(range(1, 9))),
         # doc 3: all-unique windows
-        (3, [100, 101, 102, 103, 104]),
-        # doc 4: shorter than k -> no windows, omitted from output
+        (3, list(range(100, 110))),
+        # doc 4: shorter than GRAM -> no windows, omitted from output
         (4, [1, 2]),
     ]
     df = spark.createDataFrame(rows, "doc_id long, tokens array<int>")
     got = {r.doc_id: r for r in
-           tokens.duplicate_gram_coverage(df, "tokens", "doc_id", k=3)
-           .collect()}
+           tokens.duplicate_gram_coverage(df, "tokens", "doc_id").collect()}
     assert set(got) == {1, 2, 3}
     assert (got[1].n_grams, got[1].n_dup_grams) == (3, 1)
     assert got[1].dup_frac == round(1 / 3, 6)
-    # doc 2 windows: (9,9,9)x2, (9,9,1), (9,1,2), (1,2,3) -> 4 distinct,
-    # only (1,2,3) crosses documents
-    assert (got[2].n_grams, got[2].n_dup_grams) == (4, 1)
+    # doc 2: 10 windows, (9 x8) twice -> 9 distinct, only (1..8)
+    # crosses documents
+    assert (got[2].n_grams, got[2].n_dup_grams) == (9, 1)
     assert (got[3].n_grams, got[3].n_dup_grams) == (3, 0)
     assert got[3].dup_frac == 0.0
 
@@ -1301,7 +1412,7 @@ def test_strip_boilerplate_drops_shared_chunk_only(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r.doc_id: (r.text, r.n_chunks, r.n_dropped)
            for r in curation.strip_boilerplate(
-               df, "text", "doc_id", min_docs=2).collect()}
+               df, "text", "doc_id").collect()}
     # the shared 8-word chunk vanishes from docs 1 and 2; tails survive
     assert got[1] == ("alpha beta", 2, 1)
     assert got[2] == ("gamma", 2, 1)
@@ -1318,9 +1429,10 @@ def test_strip_boilerplate_identity_when_threshold_unreachable(spark):
         [(1, "  The   QUICK  brown fox "), (2, "lorem ipsum")],
         "doc_id long, text string")
     got = {r.doc_id: r.text for r in curation.strip_boilerplate(
-        df, "text", "doc_id", min_docs=10**9).collect()}
-    # nothing qualifies as boilerplate -> every doc comes back as its
-    # lowercased whitespace-normalized self
+        df, "text", "doc_id").collect()}
+    # no passage is shared by two docs, so nothing qualifies as
+    # boilerplate -> every doc comes back as its lowercased
+    # whitespace-normalized self
     assert got == {1: "the quick brown fox", 2: "lorem ipsum"}
 
 
@@ -1364,10 +1476,10 @@ def test_tokenizer_greedy_longest_match_and_unk(spark):
     vocab = ["ab", "abc", "c", "x"]
     df = spark.createDataFrame([(1, "abcx"), (2, "abq")], "id long, t string")
     got = {r.id: list(r.tokens) for r in tokenizer.tokenize(
-        df, "t", "id", vocab, unk_id=-7).collect()}
+        df, "t", "id", vocab).collect()}
     # greedy takes "abc" (longest), not "ab"+"c"
     assert got[1] == [vocab.index("abc"), vocab.index("x")]
-    assert got[2] == [vocab.index("ab"), -7]
+    assert got[2] == [vocab.index("ab"), tokenizer.UNK_ID]
 
 
 def test_tokenizer_roundtrip_and_detok_paths_agree(spark):
@@ -1569,8 +1681,9 @@ def test_pack_sequences_boundaries_and_conservation(spark):
     assert seen_docs == 300                      # every doc packed exactly once
 
 
-def test_linear_classifier_empty_and_trained_weights(spark):
-    from pyspark.sql import functions as F
+def test_linear_classifier_scores_every_row(spark):
+    import math
+
     from ulp_spark.operators import classifier
 
     df = spark.createDataFrame(
@@ -1578,26 +1691,11 @@ def test_linear_classifier_empty_and_trained_weights(spark):
         "doc_id long, text string")
     got = {r.doc_id: (r.score_centi, r.prob)
            for r in classifier.linear_quality_score(
-               df, "text", "doc_id", bias_centi=25).collect()}
+               df, "text", "doc_id").collect()}
     assert set(got) == {1, 2, 3}                  # every row comes back
-    assert got[2] == (25, round(1/(1+__import__("math").exp(-0.25)), 6))
+    bias = classifier.BIAS_CENTI
+    assert got[2] == (bias, round(1 / (1 + math.exp(-bias / 100)), 6))
     assert got[3] == got[2]                       # null == empty == bias only
-    # a trained-weights table that encodes the synthetic formula must
-    # reproduce the formula path exactly (join vs expression equivalence)
-    wtab = spark.range(0, classifier.HASH_DIM).select(
-        F.col("id").alias("bucket"),
-        classifier.synthetic_weight_centi(F.col("id")).alias("w_centi"))
-    via_join = {r.doc_id: (r.score_centi, r.prob)
-                for r in classifier.linear_quality_score(
-                    df, "text", "doc_id", weights=wtab,
-                    bias_centi=25).collect()}
-    assert via_join == got
-    # sparse trained weights: missing buckets weigh zero
-    empty_w = wtab.filter(F.lit(False))
-    sparse = {r.doc_id: r.score_centi
-              for r in classifier.linear_quality_score(
-                  df, "text", "doc_id", weights=empty_w).collect()}
-    assert sparse == {1: 0, 2: 0, 3: 0}
 
 
 def test_incremental_sequence_dedup_across_runs(spark, tmp_path):
@@ -1635,13 +1733,13 @@ def test_incremental_sequence_dedup_within_batch(spark, tmp_path):
     assert kept == ["a", "c"]                   # min-id wins inside the batch
 
 
-def _greedy_ref(s, vocab, unk_id=-1, lowercase=True):
-    """Pure-Python greedy longest-match: at each position the longest
-    piece by slice probes, else ``unk_id`` and one code point."""
+def _greedy_ref(s, vocab):
+    """Pure-Python greedy longest-match over the lowercased text: at each
+    position the longest piece by slice probes, else -1 (the unk id) and
+    one code point."""
     if s is None:
         return []
-    if lowercase:
-        s = s.lower()
+    s = s.lower()
     v = {p: i for i, p in enumerate(vocab)}
     max_len = max(map(len, vocab))
     ids, i = [], 0
@@ -1650,7 +1748,7 @@ def _greedy_ref(s, vocab, unk_id=-1, lowercase=True):
         while ln > 0 and s[i:i + ln] not in v:
             ln -= 1
         if ln == 0:
-            ids.append(unk_id)
+            ids.append(-1)
             i += 1
         else:
             ids.append(v[s[i:i + ln]])
@@ -1677,20 +1775,22 @@ def test_tokenizer_matches_pure_python_reference_on_random_inputs(spark):
 
 
 # Pieces that are regex syntax (each metacharacter, the \Q...\E quote
-# markers, a newline), multi-code-point pieces and non-BMP pieces.
+# markers in both cases, a newline), multi-code-point pieces and non-BMP
+# pieces.  Text is lowercased before matching, so the lowercase quote
+# markers are the ones that match.
 _ADVERSARIAL_VOCAB = [
     ".", "\\", "(", "|", "$", "\\E", "\\Q", "\n", "\r\n", "a.b", "(|",
     "\\Q.\\E", "[a]", "{2}", "^", "*+?", "e\u0301", "i\u0307", "\u00df",
     "\U0001F600", "\U0001F600\U0001F600", "ab", "b", "E", "Q",
+    "\\e", "\\q", "\\q.\\e", "e", "q",
 ]
 
 
 def test_tokenizer_adversarial_pieces_and_texts(spark):
     """Regex-syntax pieces match literally and the JVM regex walks code
     points like Python: CRLF, non-BMP emoji, combining marks, dotted
-    capital I, sharp s, null and empty text, with and without
-    lowercasing, all equal the pure-Python greedy reference; the output
-    schema is the declared one."""
+    capital I, sharp s, null and empty text all equal the pure-Python
+    greedy reference; the output schema is the declared one."""
     import random
 
     from pyspark.sql import types as T
@@ -1708,20 +1808,17 @@ def test_tokenizer_adversarial_pieces_and_texts(spark):
     texts += ["".join(rng.choice(pool) for _ in range(rng.randint(0, 30)))
               for _ in range(200)]
     df = spark.createDataFrame(list(enumerate(texts)), "id long, t string")
-    for lowercase in (True, False):
-        out = tokenizer.tokenize(df, "t", "id", _ADVERSARIAL_VOCAB,
-                                 unk_id=-3, lowercase=lowercase)
-        assert out.schema == T.StructType([
-            T.StructField("id", T.LongType(), True),
-            T.StructField("tokens", T.ArrayType(T.IntegerType(), False),
-                          False),
-            T.StructField("n_tok", T.IntegerType(), False),
-        ])
-        got = {r.id: (list(r.tokens), r.n_tok) for r in out.collect()}
-        assert len(got) == len(texts)
-        for i, s in enumerate(texts):
-            ref = _greedy_ref(s, _ADVERSARIAL_VOCAB, -3, lowercase)
-            assert got[i] == (ref, len(ref)), (lowercase, s, got[i], ref)
+    out = tokenizer.tokenize(df, "t", "id", _ADVERSARIAL_VOCAB)
+    assert out.schema == T.StructType([
+        T.StructField("id", T.LongType(), True),
+        T.StructField("tokens", T.ArrayType(T.IntegerType(), False), False),
+        T.StructField("n_tok", T.IntegerType(), False),
+    ])
+    got = {r.id: (list(r.tokens), r.n_tok) for r in out.collect()}
+    assert len(got) == len(texts)
+    for i, s in enumerate(texts):
+        ref = _greedy_ref(s, _ADVERSARIAL_VOCAB)
+        assert got[i] == (ref, len(ref)), (s, got[i], ref)
 
 
 def test_tokenizer_final_sigma_deviation_is_pinned(spark):
@@ -1923,13 +2020,13 @@ def test_compact_dedup_state_preserves_antijoin(spark, tmp_path):
         fresh, "tokens", "doc_id", state).count() == 1
 
 
-def _bpe_ref(s, merges, vocab, unk_id=-1, lowercase=True):
-    """Independent pure-Python merge-loop oracle (Sennrich 2016): lowest
-    rank present wins each iteration, all occurrences merged L->R."""
+def _bpe_ref(s, merges, vocab):
+    """Independent pure-Python merge-loop oracle (Sennrich 2016) over the
+    lowercased text: lowest rank present wins each iteration, all
+    occurrences merged L->R; an unknown symbol maps to -1."""
     if s is None:
         return []
-    if lowercase:
-        s = s.lower()
+    s = s.lower()
     ranks = {tuple(m): i for i, m in enumerate(merges)}
     big = len(ranks) + 1
     word = list(s)
@@ -1952,7 +2049,7 @@ def _bpe_ref(s, merges, vocab, unk_id=-1, lowercase=True):
                 i += 1
         word = out
     vm = {p: i for i, p in enumerate(vocab)}
-    return [vm.get(w, unk_id) for w in word]
+    return [vm.get(w, -1) for w in word]
 
 
 _BPE_MERGES = [("b", "c"), ("a", "b"), ("bc", "d")]
@@ -2203,7 +2300,7 @@ def test_length_bucket_stats_power_of_two_edges_match_duckdb(spark):
 
 
 def test_unigram_scores_hand_computed_and_partition_invariant(spark):
-    """Two docs over a 3-token vocab: logp_micro and the exact bigint
+    """Two docs over three token ids: logp_micro and the exact bigint
     sums are hand-derivable; repartitioning must not move a single
     micro-nat (the integer-sum determinism contract)."""
     import math
@@ -2213,9 +2310,8 @@ def test_unigram_scores_hand_computed_and_partition_invariant(spark):
         [("a", [0, 0, 1]), ("b", [1, 2])],
         "doc_id string, tokens array<int>")
     out = {r.doc_id: (r.n_tok, r.logp_micro_sum, r.ce_nats)
-           for r in tokens.sequence_unigram_scores(
-               df, vocab_size=3, alpha=0.5).collect()}
-    N, V, a = 5, 3, 0.5
+           for r in tokens.sequence_unigram_scores(df).collect()}
+    N, V, a = 5, tokens.VOCAB_SIZE, tokens.LM_ALPHA
     lp = {t: round(math.log((c + a) / (N + a * V)) * 1e6)
           for t, c in {0: 2, 1: 2, 2: 1}.items()}
     exp_a = 2 * lp[0] + lp[1]
@@ -2224,26 +2320,8 @@ def test_unigram_scores_hand_computed_and_partition_invariant(spark):
     assert out["b"] == (2, exp_b, round(-exp_b / 2e6, 6))
     again = {r.doc_id: r.logp_micro_sum
              for r in tokens.sequence_unigram_scores(
-                 df.repartition(5), vocab_size=3, alpha=0.5).collect()}
+                 df.repartition(5)).collect()}
     assert again == {k: v[1] for k, v in out.items()}
-
-
-def test_unigram_scores_frozen_table_and_missing_token_raises(spark):
-    from ulp_spark.operators import tokens
-
-    train = spark.createDataFrame(
-        [("t", [0, 1, 1])], "doc_id string, tokens array<int>")
-    probs = tokens.unigram_logprob_table(train, vocab_size=4, alpha=0.5)
-    new = spark.createDataFrame(
-        [("n1", [0, 1])], "doc_id string, tokens array<int>")
-    scored = tokens.sequence_unigram_scores(new, probs=probs).collect()
-    assert len(scored) == 1 and scored[0].n_tok == 2
-    bad = spark.createDataFrame(
-        [("n2", [0, 3])], "doc_id string, tokens array<int>")  # 3 unseen
-    with pytest.raises(Exception, match="absent from probs"):
-        tokens.sequence_unigram_scores(bad, probs=probs).collect()
-    with pytest.raises(ValueError):
-        tokens.unigram_logprob_table(train, vocab_size=0)
 
 
 def test_unigram_scores_separates_repetitive_from_rare(spark):
@@ -2277,7 +2355,7 @@ def test_winnow_guarantee_and_edges(spark):
     staged = df.select(
         "id", dedup._positional_hashes(F.col("text")).alias("h"))
     fps = {r.id: set(r.f) for r in staged.select(
-        "id", dedup._winnow_from_hashes(F.col("h"), 8).alias("f")).collect()}
+        "id", dedup._winnow_from_hashes(F.col("h")).alias("f")).collect()}
     assert fps[1] & fps[2]            # the guarantee
     assert not (fps[1] & fps[3])
     assert fps[4] == set() and fps[5] == set()
@@ -2333,8 +2411,6 @@ def test_repeated_suffix_hand_computed(spark):
         "one":  (1, 0, 1, 0),
         "empty": (0, 0, 1, 0),
     }
-    with pytest.raises(ValueError):
-        tokens.repeated_suffix(df, max_period=0)
 
 
 def test_repeated_suffix_matches_duckdb_on_random_arrays(spark):
@@ -2491,9 +2567,8 @@ def test_bigram_scores_hand_computed_and_order_sensitivity(spark):
     rows = [(f"c{i}", [1, 2, 3]) for i in range(10)] + [("rev", [3, 2, 1])]
     df = spark.createDataFrame(rows, "doc_id string, tokens array<int>")
     out = {r.doc_id: (r.n_bigrams, r.logp_micro_sum, r.ce_nats)
-           for r in tokens.sequence_bigram_scores(
-               df, vocab_size=4, alpha=0.5).collect()}
-    a, V = 0.5, 4
+           for r in tokens.sequence_bigram_scores(df).collect()}
+    a, V = tokens.LM_ALPHA, tokens.VOCAB_SIZE
     # pair counts: (1,2)x10 (2,3)x10 (3,2)x1 (2,1)x1; prev totals:
     # n_1(1)=10, n_1(2)=11 (ten (2,3) + one (2,1)), n_1(3)=1
     lp = {(1, 2): (10, 10), (2, 3): (10, 11), (3, 2): (1, 1),
@@ -2512,7 +2587,7 @@ def test_bigram_scores_hand_computed_and_order_sensitivity(spark):
     assert out["rev"][2] > out["c0"][2]        # order sensitivity
     # unigram CANNOT separate them: same token multiset
     uni = {r.doc_id: r.ce_nats for r in tokens.sequence_unigram_scores(
-        df, vocab_size=4, alpha=0.5).collect()}
+        df).collect()}
     assert uni["rev"] == uni["c0"]
     # short rows have no transitions and are omitted
     short = spark.createDataFrame(
@@ -2531,55 +2606,32 @@ def test_bigram_scores_partition_invariant(spark):
     assert a == b and len(a) > 0
 
 
-def test_pack_sequences_sep_token_boundaries(spark):
-    """sep_token appends EOS after EVERY document: total tokens = sum
-    n_tok + n_docs, each doc_start points at its document's first token,
-    and the token right before every non-first start IS the separator."""
-    from ulp_spark.operators import packing
-
-    seq = spark.createDataFrame(
-        [("a", [1, 2]), ("b", [3]), ("c", [4, 5, 6])],
-        "doc_id string, tokens array<int>")
-    packed = spark.createDataFrame(
-        [("a", 0, False), ("b", 0, False), ("c", 1, False)],
-        "doc_id string, bin_id long, oversize boolean")
-    rows = {r.bin_id: r for r in packing.pack_sequences(
-        seq, packed, sep_token=99).collect()}
-    assert list(rows[0].tokens) == [1, 2, 99, 3, 99]   # ascending id order
-    assert list(rows[0].doc_starts) == [0, 3]
-    assert rows[0].n_docs == 2 and rows[0].n_tok == 5
-    assert list(rows[1].tokens) == [4, 5, 6, 99]
-    assert list(rows[1].doc_starts) == [0]
-    # default path unchanged: no separators
-    plain = {r.bin_id: list(r.tokens) for r in packing.pack_sequences(
-        seq, packed).collect()}
-    assert plain[0] == [1, 2, 3] and plain[1] == [4, 5, 6]
-
-
 def test_remove_duplicate_spans_hand_computed(spark):
-    """Constructed corpus, k=3: the keeper occurrence survives, the
-    other occurrence's span is cut, within-doc repeats are cut too,
-    short rows pass through untouched."""
+    """Constructed corpus, GRAM=8 windows: the keeper occurrence
+    survives, the other occurrence's span is cut, within-doc repeats are
+    cut too, short rows pass through untouched."""
     from ulp_spark.operators import tokens
 
+    assert tokens.GRAM == 8
+    head = list(range(1, 9))
     rows = [
-        # keeper of (1,2,3) — lexicographically smallest (id, pos) key
-        ("a", [1, 2, 3, 4, 5]),
-        # (1,2,3) at pos 0 duplicates doc a's -> positions 0..2 removed
-        ("b", [1, 2, 3, 9, 9]),
-        # (7,7,7) x3 within one doc: pos 0 keeps, pos 1+2 cut -> [7]
-        ("c", [7, 7, 7, 7, 7]),
-        # shorter than k: no windows, unchanged
+        # keeper of (1..8) — lexicographically smallest (id, pos) key
+        ("a", head + [40, 50]),
+        # (1..8) at pos 0 duplicates doc a's -> positions 0..7 removed
+        ("b", head + [9, 9]),
+        # (7 x8) x3 within one doc: pos 0 keeps, pos 1+2 cut -> [7]
+        ("c", [7] * 10),
+        # shorter than GRAM: no windows, unchanged
         ("d", [1, 2]),
     ]
     df = spark.createDataFrame(rows, "doc_id string, tokens array<int>")
     got = {r.doc_id: r for r in
-           tokens.remove_duplicate_spans(df, "tokens", "doc_id", k=3)
-           .collect()}
+           tokens.remove_duplicate_spans(df, "tokens", "doc_id").collect()}
     assert set(got) == {"a", "b", "c", "d"}
-    assert (got["a"].n_removed, list(got["a"].tokens_clean)) == (0, [1, 2, 3, 4, 5])
-    assert (got["b"].n_removed, list(got["b"].tokens_clean)) == (3, [9, 9])
-    assert (got["c"].n_removed, list(got["c"].tokens_clean)) == (4, [7])
+    assert (got["a"].n_removed, list(got["a"].tokens_clean)) == \
+        (0, head + [40, 50])
+    assert (got["b"].n_removed, list(got["b"].tokens_clean)) == (8, [9, 9])
+    assert (got["c"].n_removed, list(got["c"].tokens_clean)) == (9, [7])
     assert (got["d"].n_removed, list(got["d"].tokens_clean)) == (0, [1, 2])
     assert all(r.n_tok_clean == len(r.tokens_clean) for r in got.values())
 
@@ -2613,8 +2665,7 @@ def test_clean_lines_hand_computed(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id string, text string")
     got = {r.doc_id: r for r in
-           curation.clean_lines(df, "text", "doc_id", min_words=3,
-                                min_lines=2).collect()}
+           curation.clean_lines(df, "text", "doc_id").collect()}
     # a: line 2 lacks terminal punct; lines 1+3 survive -> keep_doc
     assert got["a"].text_clean == "one two three.\nfour five six!"
     assert (got["a"].n_lines, got["a"].n_kept, got["a"].keep_doc) == (3, 2, True)
@@ -2710,7 +2761,7 @@ def test_bpe_merge_loop_matches_naive_randomized():
             for _ in range(n_words)})
         rows = [(w, rng.randint(1, 9)) for w in rows]
         n_merges = rng.randint(0, 12)
-        got = bpe_merge_loop(rows, n_merges, min_count=2)
+        got = bpe_merge_loop(rows, n_merges)
         exp = _naive_bpe_train(rows, n_merges, min_count=2)
         assert got == exp, f"trial {trial}: {rows} x{n_merges}"
 
@@ -2917,18 +2968,19 @@ def test_cross_source_dup_matrix_hand_computed(spark):
 
 
 def test_contamination_frac_hand_computed(spark):
-    """k=2 windows: train row 'x' shares 2 of its 3 windows with eval;
+    """GRAM=8 windows: train row 'x' shares 2 of its 3 windows with eval;
     'y' shares none; 'z' is too short for any window (frac = 0.0)."""
     from ulp_spark.operators import tokens
 
+    assert tokens.GRAM == 8
     df = spark.createDataFrame(
-        [("e1", [1, 2, 3], "eval"),       # eval grams: (1,2), (2,3)
-         ("x", [1, 2, 3, 9], "train"),    # (1,2) (2,3) (3,9) -> 2/3
-         ("y", [7, 8, 7], "train"),
+        [("e1", list(range(1, 10)), "eval"),    # eval: (1..8), (2..9)
+         ("x", list(range(1, 10)) + [99], "train"),  # 3 windows -> 2/3
+         ("y", list(range(70, 80)), "train"),
          ("z", [5], "train")],
         "doc_id string, tokens array<int>, source string")
     got = {r.doc_id: r for r in tokens.contamination_coverage(
-        df, "tokens", "doc_id", F.col("source") == "eval", k=2).collect()}
+        df, "tokens", "doc_id", F.col("source") == "eval").collect()}
     assert set(got) == {"x", "y", "z"}
     assert (got["x"].n_windows, got["x"].n_contaminated) == (3, 2)
     assert got["x"].contamination_frac == round(2 / 3, 6)
@@ -3004,9 +3056,6 @@ def test_curriculum_stages_hand_computed(spark):
     # ascending order: d(-5) b(10) e(10) c(20) a(30) f(40); tie b<e by id
     assert got == {"d": (0, 0), "b": (1, 0), "e": (2, 1),
                    "c": (3, 1), "a": (4, 2), "f": (5, 2)}
-    desc = {r.doc_id: r.curriculum_rank for r in tokens.curriculum_stages(
-        df, "score", "doc_id", 3, ascending=False).collect()}
-    assert desc["f"] == 0 and desc["d"] == 5
 
 
 def test_curriculum_stages_partition_invariant_and_validation(spark):
@@ -3080,7 +3129,7 @@ def test_sequence_dedup_groups_verify_kills_false_positives(spark):
         [("a", base), ("b", base), ("c", near), ("x", x)],
         "doc_id string, tokens array<int>")
     got = {r.doc_id: r.comp_id for r in
-           tokens.sequence_dedup_groups(df, threshold=0.8).collect()}
+           tokens.sequence_dedup_groups(df).collect()}
     assert got.get("a") == "a" and got.get("b") == "a"
     assert "x" not in got or got["x"] == "x"  # never welded into a's cluster
     if "c" in got:
@@ -3274,8 +3323,7 @@ def test_dsir_importance_target_needs_only_text(spark):
     tgt = docs.filter("lang = 'en'")
     full = classifier.dsir_importance(docs, "text", "doc_id", tgt)
     text_only = classifier.dsir_importance(
-        docs, "text", "doc_id", tgt.select(F.col("text").alias("body")),
-        target_text_col="body")
+        docs, "text", "doc_id", tgt.select("text"))
     assert sorted(map(tuple, text_only.collect())) == \
         sorted(map(tuple, full.collect()))
 
@@ -3576,7 +3624,6 @@ def test_corpus_datacard_dup_and_null_buckets(spark):
 
 
 def test_pack_sequences_extra_arrays_align(spark):
-    import pytest as _pytest
     from ulp_spark import fixtures
     from ulp_spark.operators import packing, tokens
     from ulp_spark.operators.sampling import hash_bucket
@@ -3598,9 +3645,6 @@ def test_pack_sequences_extra_arrays_align(spark):
         assert r.tokens == exp_toks
         assert r.loss_mask == exp_mask
         assert len(r.loss_mask) == len(r.tokens)
-    with _pytest.raises(ValueError):
-        packing.pack_sequences(masked, pk, "doc_id", "tokens",
-                               sep_token=0, extra_array_cols=["loss_mask"])
 
 
 def test_connected_components_scrambled_path(spark, monkeypatch):
@@ -3686,12 +3730,11 @@ def test_clean_lines_vertical_tab_parity(spark):
 
     text = "one\x0btwo three.\nshort."
     df = spark.createDataFrame([("d1", text)], "doc_id string, text string")
-    got = curation.clean_lines(df, "text", "doc_id", min_words=3).collect()[0]
+    got = curation.clean_lines(df, "text", "doc_id").collect()[0]
     con = duckdb.connect()
     lit = text.replace("\x0b", "' || chr(11) || '").replace("\n", "' || chr(10) || '")
     sql = curation.clean_lines_sql(
-        f"(SELECT 'd1' AS doc_id, '{lit}' AS text)", "text", "doc_id",
-        min_words=3)
+        f"(SELECT 'd1' AS doc_id, '{lit}' AS text)", "text", "doc_id")
     exp = con.sql(sql).fetchall()[0]
     assert got.text_clean == "one\x0btwo three."
     assert (got.text_clean, got.n_lines, got.n_kept, got.keep_doc) == \

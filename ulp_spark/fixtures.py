@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 TOKEN_VOCAB = 50257          # GPT-2-ish vocab size; tokens in [0, 50257)
 MAX_TOKENS = 512             # n_tok in [1, 512]
 EPOCH = "2022-03-23 00:00:00"  # matches reference date-sniff fixtures
+NOISE_MICRO = 4800           # clustered_embeddings noise, millionths
 
 PROVIDERS = [
     "Microsoft-Windows-Security-Auditing",
@@ -70,7 +71,7 @@ def sequences(spark: SparkSession, n: int, partitions: int | None = None) -> Dat
 
 def clustered_embeddings(
     spark: SparkSession, n: int, dim: int = 64, clusters: int = 20,
-    noise_micro: int = 4800, partitions: int | None = None,
+    partitions: int | None = None,
 ) -> DataFrame:
     """T4: deterministic CLUSTERABLE embeddings (vec_id, embedding, label).
 
@@ -79,8 +80,8 @@ def clustered_embeddings(
     carries no geometric signal), which bounds ANY partition-and-probe
     ANN at recall ~= frac_scanned.  This fixture provides the clusterable
     regime: vector = integer-grid centroid of ``id % clusters`` plus
-    deterministic per-(id, dim) uniform noise (``noise_micro``/1e6 per
-    component, default 0.0048 x 1000 = +-4.8 against centroid components
+    deterministic per-(id, dim) uniform noise (``NOISE_MICRO``/1e6 per
+    component, 0.0048 x 1000 = +-4.8 against centroid components
     in [-11, 11]), giving within-cluster cosine ~0.85, across ~0, and
     top-10 neighbors 100% within-cluster at n=2000 — the regime where an
     IVF index should shine and where recall targets are meaningful.
@@ -96,7 +97,7 @@ def clustered_embeddings(
         F.expr(
             f"transform(sequence(0, {dim - 1}), j -> cast("
             f" ((id % {clusters})*41 + j*17) % 23 - 11"
-            f" + (((id*96557 + j*40503) % 2000) - 1000) * {noise_micro}/1000000.0"
+            f" + (((id*96557 + j*40503) % 2000) - 1000) * {NOISE_MICRO}/1000000.0"
             f" as float))"
         ).alias("embedding"),
         (F.col("id") % clusters).cast("int").alias("label"),
@@ -208,7 +209,7 @@ def sequences_sql(n: int) -> str:
 
 
 def clustered_embeddings_sql(
-    n: int, dim: int = 64, clusters: int = 20, noise_micro: int = 4800,
+    n: int, dim: int = 64, clusters: int = 20,
 ) -> str:
     """DuckDB SQL producing exactly `clustered_embeddings(spark, n, ...)`
     (bitwise: integer grid + exact-integer noise scaled by one
@@ -217,7 +218,7 @@ def clustered_embeddings_sql(
     SELECT i AS vec_id,
            [CAST(((i % {clusters})*41 + j*17) % 23 - 11
                  + (((i*96557 + j*40503) % 2000) - 1000)
-                   * {noise_micro}/1000000.0 AS FLOAT)
+                   * {NOISE_MICRO}/1000000.0 AS FLOAT)
             FOR j IN range(0, {dim})] AS embedding,
            CAST(i % {clusters} AS INT) AS label
     FROM range(0, {n}) t(i)

@@ -24,25 +24,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _row_salt(df: DataFrame, buckets: int,
-              salt_on: Column | None = None) -> Column:
-    """Deterministic per-row salt in [0, buckets): caller-supplied column
-    hash, else xxhash64 of the whole row (pass ``salt_on`` when the row
-    contains unhashable types like MapType)."""
-    base = (salt_on if salt_on is not None
-            else F.xxhash64(*[F.col(c) for c in df.columns]))
-    return F.pmod(base, F.lit(buckets))
+SALT_BUCKETS = 32
 
 
 def salted_agg(
     df: DataFrame,
     keys: list[str],
     aggs: list[tuple[str, Column, str]],
-    salt_buckets: int = 32,
-    salt_on: Column | None = None,
 ) -> DataFrame:
-    """Two-level aggregation with a salt on the first level.
+    """Two-level aggregation with a salt on the first level: a
+    deterministic per-row salt in [0, SALT_BUCKETS), xxhash64 of the
+    whole row (so every column must be hashable — no MapType).
 
     ``aggs``: (output name, partial aggregate over raw rows, final combine
     fn name); the final fn re-aggregates the partials, e.g.::
@@ -53,7 +45,8 @@ def salted_agg(
             ("max_tok", F.max("n_tok"), "max"),
         ])
     """
-    salt = _row_salt(df, salt_buckets, salt_on)
+    salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]),
+                  F.lit(SALT_BUCKETS))
     partial = (
         df.withColumn("__salt", salt)
         .groupBy(*keys, "__salt")

@@ -30,89 +30,82 @@ ROUND = 6
 Z_THRESHOLD = 3.0
 
 
-def window_stats(
-    df: DataFrame, ts_col: str = "ts", key_col: str = "event_type",
-    val_col: str = "value", window: str = "1 day",
-) -> DataFrame:
-    """Per-(key, window) population mean/stddev/count of ``val_col``."""
+def window_stats(df: DataFrame) -> DataFrame:
+    """Per-(event_type, 1-day window) population mean/stddev/count of
+    ``value``."""
     return (
         df.groupBy(
-            F.col(key_col),
-            F.window(F.col(ts_col), window).alias("w"),
+            F.col("event_type"),
+            F.window(F.col("ts"), "1 day").alias("w"),
         )
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.round(F.avg(F.col(val_col).cast("double")), ROUND).alias("mean"),
-            F.round(F.stddev_pop(F.col(val_col).cast("double")), ROUND)
+            F.round(F.avg(F.col("value").cast("double")), ROUND).alias("mean"),
+            F.round(F.stddev_pop(F.col("value").cast("double")), ROUND)
             .alias("std"),
         )
-        .select(key_col, F.col("w.start").alias("w_start"), "n", "mean", "std")
+        .select("event_type", F.col("w.start").alias("w_start"), "n", "mean",
+                "std")
     )
 
 
-def value_anomalies(
-    df: DataFrame, ts_col: str = "ts", key_col: str = "event_type",
-    val_col: str = "value", id_col: str = "event_id",
-    window: str = "1 day", z: float = Z_THRESHOLD,
-) -> DataFrame:
-    """Rows whose value deviates more than ``z`` population stddevs from
-    their (key, window) mean.  Returns (id, key, w_start, value, zscore)
-    for anomalous rows only; constant windows (std = 0) flag nothing.
+def value_anomalies(df: DataFrame) -> DataFrame:
+    """Events whose ``value`` deviates more than ``Z_THRESHOLD`` population
+    stddevs from their (event_type, 1-day window) mean.  Returns
+    (event_id, event_type, w_day, value, zscore) for anomalous rows only;
+    constant windows (std = 0) flag nothing.
 
     The projected event frame is seamed (lazily, session.seam) so the
     stats pass and the probe pass share ONE scan."""
     evw = seam(df.select(
-        F.col(id_col), F.col(key_col), F.col(val_col).cast("double").alias("v"),
-        F.window(F.col(ts_col), window)["start"].alias("w_start"),
+        F.col("event_id"), F.col("event_type"),
+        F.col("value").cast("double").alias("v"),
+        F.window(F.col("ts"), "1 day")["start"].alias("w_start"),
     ))
     stats = (
-        evw.groupBy(key_col, "w_start")
+        evw.groupBy("event_type", "w_start")
         .agg(
             F.round(F.avg("v"), ROUND).alias("mean"),
             F.round(F.stddev_pop("v"), ROUND).alias("std"),
         )
     )
-    joined = evw.join(F.broadcast(stats), [key_col, "w_start"])
+    joined = evw.join(F.broadcast(stats), ["event_type", "w_start"])
     zscore = F.round(
         (F.col("v") - F.col("mean")) / F.col("std"), ROUND)
     return (
         joined.filter(F.col("std") > 0)
         .withColumn("zscore", zscore)
-        .filter(F.abs(F.col("zscore")) > z)
+        .filter(F.abs(F.col("zscore")) > Z_THRESHOLD)
         .select(
-            id_col, key_col,
+            "event_id", "event_type",
             # rendered as a date string (repo TZ-safety convention for
             # window boundaries, same as events_tumbling_counts)
             F.date_format("w_start", "yyyy-MM-dd").alias("w_day"),
-            F.col("v").alias(val_col), "zscore")
+            F.col("v").alias("value"), "zscore")
     )
 
 
-def value_anomalies_sql(
-    table: str, ts_col: str = "ts", key_col: str = "event_type",
-    val_col: str = "value", id_col: str = "event_id",
-    window_sql: str = "INTERVAL '1 day'", z: float = Z_THRESHOLD,
-) -> str:
+def value_anomalies_sql(table: str) -> str:
     """DuckDB twin (time_bucket == Spark's epoch-aligned tumbling window
     for day-granularity windows under UTC)."""
     return f"""
         WITH evw AS (
-          SELECT {id_col}, {key_col},
-                 CAST({val_col} AS DOUBLE) AS v,
-                 time_bucket({window_sql}, {ts_col}) AS w_start
+          SELECT event_id, event_type,
+                 CAST(value AS DOUBLE) AS v,
+                 time_bucket(INTERVAL '1 day', ts) AS w_start
           FROM {table}
         ),
         stats AS (
-          SELECT {key_col}, w_start,
+          SELECT event_type, w_start,
                  round(avg(v), {ROUND}) AS mean,
                  round(stddev_pop(v), {ROUND}) AS std
-          FROM evw GROUP BY {key_col}, w_start
+          FROM evw GROUP BY event_type, w_start
         )
-        SELECT e.{id_col}, e.{key_col},
+        SELECT e.event_id, e.event_type,
                strftime(e.w_start, '%Y-%m-%d') AS w_day,
-               e.v AS {val_col},
+               e.v AS value,
                round((e.v - s.mean) / s.std, {ROUND}) AS zscore
-        FROM evw e JOIN stats s USING ({key_col}, w_start)
+        FROM evw e JOIN stats s USING (event_type, w_start)
         WHERE s.std > 0
-          AND abs(round((e.v - s.mean) / s.std, {ROUND})) > {z}
+          AND abs(round((e.v - s.mean) / s.std, {ROUND})) > {Z_THRESHOLD}
     """

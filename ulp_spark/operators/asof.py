@@ -27,9 +27,8 @@ def asof_lookup(
     ts: str,
     right_seq: str,
     right_vals: list[str],
-    prefix: str = "asof_",
 ) -> DataFrame:
-    """Left frame + ``prefix<col>`` columns from the as-of right match
+    """Left frame + ``asof_<col>`` columns from the as-of right match
     (NULL when no right row precedes)."""
     # deterministic right side: one row per (keys, ts) — max seq wins
     w_dedup = Window.partitionBy(*keys, ts).orderBy(F.desc(right_seq))
@@ -60,7 +59,7 @@ def asof_lookup(
     filled = unioned.select(
         "*",
         *[
-            F.last(f"__v_{v}", ignorenulls=True).over(w).alias(f"{prefix}{v}")
+            F.last(f"__v_{v}", ignorenulls=True).over(w).alias(f"asof_{v}")
             for v in [right_seq, *right_vals]
         ],
     )

@@ -3,7 +3,7 @@ the fastText-style model-based filter stage (DCLM / FineWeb-Edu style)
 that sits beside the surface-statistics scorer (textstats.quality_score):
 score = sigmoid((bias + sum of per-feature weights) / SCALE) over hashed
 word unigrams + bigrams (the hashing trick: feature -> md5 -> bucket in
-[0, dim)).
+[0, HASH_DIM)).
 
 Numeric determinism: weights are INTEGER centi-units, so the per-doc sum
 is exact integer arithmetic in any aggregation order on any engine; the
@@ -11,13 +11,12 @@ single float op (sigmoid) happens once per document on an identical
 integer, then rounds to 6 dp.  A float-weighted sum would depend on
 Spark's partial-aggregation order and could flap last-bit vs the oracle.
 
-Weights come either from a (bucket, w_centi) DataFrame (a TRAINED model;
-broadcast join, the real-deployment shape) or, by default, from a
-deterministic synthetic formula standing in for training (this repo
-ships no labeled data; the formula keeps every gate value-checkable).
+Weights come from a deterministic synthetic formula standing in for
+training (this repo ships no labeled data; the formula keeps every gate
+value-checkable).
 
-Scale shape: explode features -> pure-expression bucket/weight (or
-broadcast weight join) -> one groupBy(id) sum.  The explode factor is
+Scale shape: explode features -> pure-expression bucket/weight -> one
+groupBy(id) sum.  The explode factor is
 ~2x the word count (unigrams + bigrams); the aggregate collapses
 map-side.  No UDF, no collect, no global state.
 """
@@ -32,19 +31,21 @@ from ulp_spark.operators.curation import (
 
 HASH_DIM = 4096     # feature buckets
 SCALE = 100.0       # centi-units -> logits
+BIAS_CENTI = 0      # classifier-head bias, centi-units
+DSIR_ALPHA = 1.0    # add-alpha smoothing of the DSIR bucket models
 _MIX = 2654435761   # Knuth multiplicative constant (synthetic weights)
 
 
-def feature_bucket(feature: Column, dim: int = HASH_DIM) -> Column:
-    """Portable hashing trick: first 8 md5 hex digits -> int -> mod dim.
-    (md5 is the repo's cross-engine hash; Spark conv(hex) == DuckDB
-    '0x..'::BIGINT on the same digest.)"""
+def feature_bucket(feature: Column) -> Column:
+    """Portable hashing trick: first 8 md5 hex digits -> int -> mod
+    HASH_DIM.  (md5 is the repo's cross-engine hash; Spark conv(hex) ==
+    DuckDB '0x..'::BIGINT on the same digest.)"""
     return F.conv(F.substring(F.md5(feature), 1, 8), 16, 10) \
-        .cast("bigint") % dim
+        .cast("bigint") % HASH_DIM
 
 
-def feature_bucket_sql(feature: str, dim: int = HASH_DIM) -> str:
-    return f"(('0x' || substr(md5({feature}), 1, 8))::BIGINT % {dim})"
+def feature_bucket_sql(feature: str) -> str:
+    return f"(('0x' || substr(md5({feature}), 1, 8))::BIGINT % {HASH_DIM})"
 
 
 def synthetic_weight_centi(bucket: Column) -> Column:
@@ -58,7 +59,7 @@ def synthetic_weight_centi_sql(bucket: str) -> str:
 
 
 def _feature_rows(
-    frame: DataFrame, text_col: str, id_col: str | None, dim: int,
+    frame: DataFrame, text_col: str, id_col: str | None,
 ) -> DataFrame:
     """(id, bucket) feature-occurrence rows — (bucket) alone when
     ``id_col`` is None — over hashed word uni+bigrams, with the token
@@ -77,49 +78,35 @@ def _feature_rows(
             F.explode_outer(
                 F.concat(F.col("__toks"), word_grams(F.col("__toks"), 2)))
             .alias("f"))
-        .select(*keep, feature_bucket(F.col("f"), dim).alias("bucket"))
+        .select(*keep, feature_bucket(F.col("f")).alias("bucket"))
     )
 
 
 def linear_quality_score(
-    df: DataFrame, text_col: str, id_col: str, dim: int = HASH_DIM,
-    weights: DataFrame | None = None, bias_centi: int = 0,
+    df: DataFrame, text_col: str, id_col: str,
 ) -> DataFrame:
-    """(id, score_centi, prob) — the classifier head.
-
-    ``weights``: optional (bucket bigint, w_centi bigint) trained-model
-    table; broadcast-joined on the hashed bucket (missing buckets weigh
-    0).  Default: the synthetic formula — zero joins, pure expressions.
-    Every input row comes back (empty/null text scores the bias alone).
+    """(id, score_centi, prob) — the classifier head over the synthetic
+    weight formula: zero joins, pure expressions.  Every input row comes
+    back (empty/null text scores the bias alone).
     """
-    feats = _feature_rows(df, text_col, id_col, dim)
-    if weights is None:
-        weighted = feats.select(
-            id_col,
-            F.when(F.col("bucket").isNull(), F.lit(0))  # explode_outer pad
-            .otherwise(synthetic_weight_centi(F.col("bucket")))
-            .alias("w_centi"))
-    else:
-        weighted = (
-            feats.join(F.broadcast(weights), "bucket", "left")
-            .select(id_col,
-                    F.coalesce(F.col("w_centi"), F.lit(0)).alias("w_centi"))
-        )
+    feats = _feature_rows(df, text_col, id_col)
+    weighted = feats.select(
+        id_col,
+        F.when(F.col("bucket").isNull(), F.lit(0))  # explode_outer pad
+        .otherwise(synthetic_weight_centi(F.col("bucket")))
+        .alias("w_centi"))
     scored = weighted.groupBy(id_col).agg(
-        (F.sum("w_centi") + F.lit(bias_centi)).cast("bigint")
+        (F.sum("w_centi") + F.lit(BIAS_CENTI)).cast("bigint")
         .alias("score_centi"))
     prob = F.round(
         F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("score_centi") / SCALE)), 6)
     return scored.select(id_col, "score_centi", prob.alias("prob"))
 
 
-def linear_quality_score_sql(
-    table: str, text_col: str, id_col: str, dim: int = HASH_DIM,
-    bias_centi: int = 0,
-) -> str:
-    """DuckDB twin of the default (synthetic-weight) path."""
+def linear_quality_score_sql(table: str, text_col: str, id_col: str) -> str:
+    """DuckDB twin of :func:`linear_quality_score`."""
     toks = word_tokens_sql(f"coalesce({text_col}, '')")
-    bucket = feature_bucket_sql("f", dim)
+    bucket = feature_bucket_sql("f")
     return f"""
         WITH feats AS (
           SELECT {id_col},
@@ -132,8 +119,8 @@ def linear_quality_score_sql(
           FROM feats GROUP BY {id_col}
         )
         SELECT t.{id_col},
-               (coalesce(sc.s, 0) + {bias_centi})::BIGINT AS score_centi,
-               round(1.0 / (1.0 + exp(-(coalesce(sc.s, 0) + {bias_centi})
+               (coalesce(sc.s, 0) + {BIAS_CENTI})::BIGINT AS score_centi,
+               round(1.0 / (1.0 + exp(-(coalesce(sc.s, 0) + {BIAS_CENTI})
                                       / {SCALE})), 6) AS prob
         FROM (SELECT {id_col} FROM {table}) t
         LEFT JOIN scored sc USING ({id_col})
@@ -142,8 +129,6 @@ def linear_quality_score_sql(
 
 def dsir_importance(
     df: DataFrame, text_col: str, id_col: str, target: DataFrame,
-    target_text_col: str | None = None, dim: int = HASH_DIM,
-    alpha: float = 1.0,
 ) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): per-document log
@@ -153,14 +138,14 @@ def dsir_importance(
     target domain (compose with sampling.weighted_sample on
     exp(logratio) for the paper's resampling step).
 
-    Model: both corpora are reduced to counts over the same ``dim``
+    Model: both corpora are reduced to counts over the same ``HASH_DIM``
     hashed word uni+bigram buckets (classifier.feature_bucket — the
     hashing trick, md5-portable across engines); per-bucket weight
     lambda_b = ln((t_b + alpha) / (T + alpha*dim))
              - ln((r_b + alpha) / (R + alpha*dim))
-    (add-alpha smoothing, so buckets unseen in the target get a finite
-    negative weight); per-doc logratio = sum of lambda over the doc's
-    feature occurrences.
+    (add-alpha smoothing with alpha = ``DSIR_ALPHA``, so buckets unseen in
+    the target get a finite negative weight); per-doc logratio = sum of
+    lambda over the doc's feature occurrences.
 
     Numeric determinism: lambda is materialized in INTEGER micro-nats
     (round(1e6 * ln-ratio) on identical integer inputs — the
@@ -170,32 +155,29 @@ def dsir_importance(
     Returns (id, n_feats, logratio_micro, weight) for EVERY row of
     ``df`` — empty/null text gets n_feats 0, logratio 0, weight 1.0;
     weight = round(exp(logratio_micro / 1e6), 6) is the resampling
-    weight.  ``target`` needs only its text column (``target_text_col``,
-    default ``text_col``).
+    weight.  ``target`` needs only its ``text_col`` column.
 
-    Scale shape: the bucket-weight table is bounded by ``dim`` rows
+    Scale shape: the bucket-weight table is bounded by ``HASH_DIM`` rows
     (never corpus scale) and broadcast; the raw side is ONE explode +
     two map-side-combined aggregates (bucket counts, then the per-doc
     sum); the target corpus (small by DSIR's construction) contributes
     one bounded aggregate.  Corpus text never shuffles — only (id,
     bucket) pairs move.  No UDF, no collect, no driver state.
     """
-    tcol = target_text_col or text_col
-
     from ulp_spark.session import seam
 
     # the exploded corpus-feature frame feeds the bucket counts AND the
     # final per-doc sum — seam it ONCE or Catalyst re-derives the explode
     # per consumer (the recorded fan-out rule)
-    raw_feats = seam(_feature_rows(df, text_col, id_col, dim))
+    raw_feats = seam(_feature_rows(df, text_col, id_col))
     # the count frames each feed TWO consumers (the lambda join and
     # their totals) — unseamed, the target explode and the corpus-scale
     # raw aggregation re-derive per consumer (the fan-out rule's fifth
-    # sighting, caught in this op's plan audit).  Both are <= dim rows.
+    # sighting, caught in this op's plan audit).  Both are <= HASH_DIM rows.
     r_counts = seam(raw_feats.filter(F.col("bucket").isNotNull())
                     .groupBy("bucket").agg(F.count(F.lit(1)).alias("r")))
     # the target side needs only bucket counts, so it carries no id
-    t_counts = seam(_feature_rows(target, tcol, None, dim)
+    t_counts = seam(_feature_rows(target, text_col, None)
                     .filter(F.col("bucket").isNotNull())
                     .groupBy("bucket").agg(F.count(F.lit(1)).alias("t")))
     r_tot = r_counts.agg(F.sum("r").alias("__r_all"))
@@ -207,13 +189,13 @@ def dsir_importance(
             "bucket",
             F.round(F.lit(1e6) * (
                 F.log((F.coalesce(F.col("t"), F.lit(0)).cast("double")
-                       + F.lit(alpha))
+                       + F.lit(DSIR_ALPHA))
                       / (F.coalesce(F.col("__t_all"), F.lit(0)).cast("double")
-                         + F.lit(alpha * dim)))
+                         + F.lit(DSIR_ALPHA * HASH_DIM)))
                 - F.log((F.coalesce(F.col("r"), F.lit(0)).cast("double")
-                         + F.lit(alpha))
+                         + F.lit(DSIR_ALPHA))
                         / (F.coalesce(F.col("__r_all"), F.lit(0)).cast("double")
-                           + F.lit(alpha * dim)))
+                           + F.lit(DSIR_ALPHA * HASH_DIM)))
             )).cast("bigint").alias("lam_micro"))
     )
     weighted = (
@@ -236,13 +218,12 @@ def dsir_importance(
 
 def dsir_importance_sql(
     table: str, text_col: str, id_col: str, target_pred: str,
-    dim: int = HASH_DIM, alpha: float = 1.0,
 ) -> str:
     """DuckDB twin; ``target_pred`` is a WHERE predicate over ``table``
     selecting the target corpus (the driver query's shape — target as a
     filtered view of the same raw table)."""
     toks = word_tokens_sql(f"coalesce({text_col}, '')")
-    bucket = feature_bucket_sql("f", dim)
+    bucket = feature_bucket_sql("f")
     return f"""
         WITH raw_feats AS (
           SELECT {id_col},
@@ -267,10 +248,10 @@ def dsir_importance_sql(
         lam AS (
           SELECT coalesce(rc.bucket, tc.bucket) AS bucket,
                  CAST(round(1e6 * (
-                   ln((coalesce(tc.t, 0)::DOUBLE + {alpha})
-                      / (tot.T::DOUBLE + {alpha * dim}))
-                   - ln((coalesce(rc.r, 0)::DOUBLE + {alpha})
-                        / (tot.R::DOUBLE + {alpha * dim}))
+                   ln((coalesce(tc.t, 0)::DOUBLE + {DSIR_ALPHA})
+                      / (tot.T::DOUBLE + {DSIR_ALPHA * HASH_DIM}))
+                   - ln((coalesce(rc.r, 0)::DOUBLE + {DSIR_ALPHA})
+                        / (tot.R::DOUBLE + {DSIR_ALPHA * HASH_DIM}))
                  )) AS BIGINT) AS lam_micro
           FROM rc FULL OUTER JOIN tc USING (bucket) CROSS JOIN tot
         ),

@@ -31,6 +31,7 @@ from ulp_spark.session import seam
 
 PASSAGE_WORDS = 8          # words per dedup passage
 CONTAM_GRAM = 5            # words per decontamination n-gram
+BOILER_MIN_DOCS = 2        # distinct docs that make a passage boilerplate
 ROUND = 6                  # decimal places for ratio outputs
 
 
@@ -160,15 +161,16 @@ def repetition_signals_sql(text: str) -> dict[str, str]:
 # passage-level dedup (CCNet-style, corpus-global)
 # --------------------------------------------------------------------------
 
-def _passage_hashes_from_tokens(toks: Column, words: int = PASSAGE_WORDS
-                                ) -> Column:
-    """md5 of each consecutive ``words``-word chunk (last chunk partial)
+def _passage_hashes_from_tokens(toks: Column) -> Column:
+    """md5 of each consecutive ``PASSAGE_WORDS``-word chunk (last chunk
+    partial)
     of an ALREADY-STAGED token array column — pass an attribute so the
     chunk lambda references cheap input.
 
     Chunking (stride = width) rather than sliding keeps the explode factor
     at n/words instead of n — the CCNet paragraph-dedup shape applied to
     token windows."""
+    words = PASSAGE_WORDS
     n = F.size(toks)
     n_chunks = F.ceil(n / F.lit(float(words))).cast("int")
     # try_element_at instead of slice+join (the word_grams allocation
@@ -184,8 +186,9 @@ def _passage_hashes_from_tokens(toks: Column, words: int = PASSAGE_WORDS
         ))
 
 
-def passage_hashes_sql(text: str, words: int = PASSAGE_WORDS) -> str:
+def passage_hashes_sql(text: str) -> str:
     toks = word_tokens_sql(text)
+    words = PASSAGE_WORDS
     return (
         f"CASE WHEN len({toks}) = 0 THEN []::VARCHAR[] ELSE "
         f"list_transform(range(0, CAST(ceil(len({toks}) / {words}.0) AS INT)), "
@@ -194,10 +197,10 @@ def passage_hashes_sql(text: str, words: int = PASSAGE_WORDS) -> str:
 
 
 def passage_dup_stats(
-    df: DataFrame, text_col: str, id_col: str, words: int = PASSAGE_WORDS,
-    via: str = "join",
+    df: DataFrame, text_col: str, id_col: str, via: str = "join",
 ) -> DataFrame:
-    """Per-document duplicated-passage stats against the WHOLE corpus.
+    """Per-document duplicated-passage stats against the WHOLE corpus
+    (passages of ``PASSAGE_WORDS`` words).
 
     Two physical strategies, identical results (equality pinned on a
     degenerate 20k-docs-one-boilerplate corpus in pytest):
@@ -232,7 +235,7 @@ def passage_dup_stats(
         word_tokens(F.col(text_col)).alias("__toks"),
     ).select(
         F.col(id_col),
-        F.explode(_passage_hashes_from_tokens(F.col("__toks"), words))
+        F.explode(_passage_hashes_from_tokens(F.col("__toks")))
         .alias("ph"),
     )
     if via == "join":
@@ -261,13 +264,11 @@ def passage_dup_stats(
     )
 
 
-def passage_dup_stats_sql(
-    table: str, text_col: str, id_col: str, words: int = PASSAGE_WORDS,
-) -> str:
+def passage_dup_stats_sql(table: str, text_col: str, id_col: str) -> str:
     return f"""
         WITH p AS (
             SELECT {id_col},
-                   unnest({passage_hashes_sql(text_col, words)}) AS ph
+                   unnest({passage_hashes_sql(text_col)}) AS ph
             FROM {table}
         ),
         c AS (SELECT ph, count(*) AS ph_count FROM p GROUP BY ph)
@@ -285,10 +286,10 @@ def passage_dup_stats_sql(
 # --------------------------------------------------------------------------
 
 def contamination_flags(
-    df: DataFrame, text_col: str, id_col: str,
-    eval_pred: Column, k: int = CONTAM_GRAM,
+    df: DataFrame, text_col: str, id_col: str, eval_pred: Column,
 ) -> DataFrame:
-    """Flag train docs sharing any word ``k``-gram with the eval split.
+    """Flag train docs sharing any word ``CONTAM_GRAM``-gram with the
+    eval split.
 
     The standard decontamination shape (GPT-3 App. C / PaLM §6.1-style
     n-gram overlap): build the eval split's distinct n-gram set, mark any
@@ -308,7 +309,7 @@ def contamination_flags(
         F.col(id_col), eval_pred.alias("is_eval"),
         word_tokens(F.col(text_col)).alias("__toks"),
     ).select(F.col(id_col), F.col("is_eval"),
-             F.explode(word_grams(F.col("__toks"), k)).alias("gram"))
+             F.explode(word_grams(F.col("__toks"), CONTAM_GRAM)).alias("gram"))
     eval_grams = sides.filter("is_eval").select("gram").distinct()
     train = sides.filter(~F.col("is_eval"))
     hits = (
@@ -322,14 +323,13 @@ def contamination_flags(
 
 
 def contamination_sql(
-    table: str, text_col: str, id_col: str,
-    eval_pred_sql: str, k: int = CONTAM_GRAM,
+    table: str, text_col: str, id_col: str, eval_pred_sql: str,
 ) -> str:
     toks = word_tokens_sql(text_col)
     return f"""
         WITH g AS (
             SELECT {id_col}, ({eval_pred_sql}) AS is_eval,
-                   unnest({word_grams_sql(toks, k)}) AS gram
+                   unnest({word_grams_sql(toks, CONTAM_GRAM)}) AS gram
             FROM {table}
         ),
         ev AS (SELECT DISTINCT gram FROM g WHERE is_eval),
@@ -355,27 +355,25 @@ PII_RULES: list[tuple[str, str, str]] = [
 ]
 
 
-def redact(text: Column, rules=None) -> tuple[Column, dict[str, Column]]:
-    """Apply redaction rules in order; returns (redacted, {name: n_hits}).
+def redact(text: Column) -> tuple[Column, dict[str, Column]]:
+    """Apply ``PII_RULES`` in order; returns (redacted, {name: n_hits}).
 
     Hit counts are measured on the text as each rule sees it (post prior
     redactions), matching what was actually replaced. Pure regexp_replace /
     regexp_count — codegen'd, no UDF.
     """
-    rules = rules if rules is not None else PII_RULES
     counts: dict[str, Column] = {}
     out = text
-    for name, pat, repl in rules:
+    for name, pat, repl in PII_RULES:
         counts[name] = F.regexp_count(out, F.lit(pat))
         out = F.regexp_replace(out, pat, repl)
     return out, counts
 
 
-def redact_sql(text: str, rules=None) -> tuple[str, dict[str, str]]:
-    rules = rules if rules is not None else PII_RULES
+def redact_sql(text: str) -> tuple[str, dict[str, str]]:
     counts: dict[str, str] = {}
     out = text
-    for name, pat, repl in rules:
+    for name, pat, repl in PII_RULES:
         sp, sr = pat.replace("'", "''"), repl.replace("'", "''")
         counts[name] = f"len(regexp_extract_all({out}, '{sp}'))"
         out = f"regexp_replace({out}, '{sp}', '{sr}', 'g')"
@@ -485,10 +483,10 @@ def token_budget_mix_sql(
 
 def strip_boilerplate(
     df: DataFrame, text_col: str, id_col: str,
-    words: int = PASSAGE_WORDS, min_docs: int = 2,
 ) -> DataFrame:
-    """Remove every passage (``words``-word chunk, the passage_dup_stats
-    unit) that occurs in >= ``min_docs`` DISTINCT documents, and rebuild
+    """Remove every passage (``PASSAGE_WORDS``-word chunk, the
+    passage_dup_stats unit) that occurs in >= ``BOILER_MIN_DOCS``
+    DISTINCT documents, and rebuild
     each document from its surviving chunks — the CCNet boilerplate rule
     as a document REWRITE rather than a per-doc flag (reference parity:
     ulp only routes/aggregates; this is LLM-pipeline breadth like the
@@ -505,7 +503,7 @@ def strip_boilerplate(
     Scale shape: chunking explodes to n/words rows (stride = width, the
     passage_dup_stats factor); the census aggregates DISTINCT (ph, id)
     pairs — map-side partial distinct collapses intra-doc repeats — down
-    to passage-key scale, and the boiler set (count >= min_docs) is far
+    to passage-key scale, and the boiler set (count >= BOILER_MIN_DOCS) is far
     smaller still, so AQE broadcasts the anti-join on realistic corpora
     and skew-splits a sort-merge join on adversarial ones (same trade as
     passage_dup_stats via="join").  The one corpus-scale exchange is the
@@ -520,6 +518,7 @@ def strip_boilerplate(
     frame).
     """
     # null text behaves like empty text (n_chunks 0, rebuilt as '')
+    words = PASSAGE_WORDS
     toks = word_tokens(F.coalesce(F.col(text_col), F.lit("")))
     n_chunks = F.ceil(F.size(toks) / F.lit(float(words))).cast("int")
     chunk = F.struct(
@@ -551,7 +550,7 @@ def strip_boilerplate(
     boiler = (
         ex.select("ph", id_col).distinct()
         .groupBy("ph").agg(F.count(F.lit(1)).alias("nd"))
-        .filter(F.col("nd") >= min_docs)
+        .filter(F.col("nd") >= BOILER_MIN_DOCS)
         .select("ph")
     )
     kept = ex.join(boiler, "ph", "left_anti")
@@ -588,15 +587,13 @@ def strip_boilerplate(
     )
 
 
-def strip_boilerplate_sql(
-    table: str, text_col: str, id_col: str,
-    words: int = PASSAGE_WORDS, min_docs: int = 2,
-) -> str:
+def strip_boilerplate_sql(table: str, text_col: str, id_col: str) -> str:
     """DuckDB twin: same chunk -> distinct census -> anti-join -> ordered
     string_agg rebuild.  range(0, 0) is empty, so zero-chunk docs drop out
     of the unnest exactly like Spark's explode; they re-enter as '' via
     the final left join."""
     toks = word_tokens_sql(f"coalesce({text_col}, '')")
+    words = PASSAGE_WORDS
     return f"""
         WITH base AS (
           SELECT {id_col}, {toks} AS toks,
@@ -616,7 +613,7 @@ def strip_boilerplate_sql(
           SELECT ph FROM (
             SELECT md5(chunk) AS ph, count(DISTINCT {id_col}) AS nd
             FROM ch GROUP BY 1)
-          WHERE nd >= {min_docs}
+          WHERE nd >= {BOILER_MIN_DOCS}
         ),
         kept AS (
           SELECT c.* FROM ch c LEFT JOIN boiler b ON md5(c.chunk) = b.ph
@@ -642,34 +639,33 @@ def strip_boilerplate_sql(
 
 C4_TERMINAL_CHARS = (".", "!", "?", '"', "”")
 C4_LINE_BLACKLIST = ("javascript", "lorem ipsum", "cookie policy")
+C4_MIN_WORDS = 3           # whitespace words a kept line needs
+C4_MIN_LINES = 2           # kept lines a document needs for keep_doc
 
 
-def _line_keep(line: Column, min_words: int, blacklist) -> Column:
+def _line_keep(line: Column) -> Column:
     t = F.trim(line)
     low = F.lower(t)
     black = F.lit(False)
-    for phrase in blacklist:
+    for phrase in C4_LINE_BLACKLIST:
         black = black | F.contains(low, F.lit(phrase))
     return (
         (F.length(t) > 0)
         & F.substring(t, -1, 1).isin(*C4_TERMINAL_CHARS)
-        & (F.size(F.split(t, r"\s+")) >= min_words)
+        & (F.size(F.split(t, r"\s+")) >= C4_MIN_WORDS)
         & ~black
     )
 
 
-def clean_lines(
-    df: DataFrame, text_col: str, id_col: str,
-    min_words: int = 3, min_lines: int = 2,
-    blacklist=C4_LINE_BLACKLIST,
-) -> DataFrame:
+def clean_lines(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """C4's line-level cleaning as a document REWRITE: keep only lines
     that (a) end in a terminal punctuation mark, (b) have at least
-    ``min_words`` whitespace words, and (c) contain no blacklist phrase
-    (C4 dropped any line with the word "javascript"); rebuild the text
-    from survivors and flag documents keeping fewer than ``min_lines``
-    lines (C4 dropped pages with < 3 sentences — reported as a flag here
-    so callers choose drop vs inspect).  Complements strip_boilerplate
+    ``C4_MIN_WORDS`` whitespace words, and (c) contain no
+    ``C4_LINE_BLACKLIST`` phrase (C4 dropped any line with the word
+    "javascript"); rebuild the text from survivors and flag documents
+    keeping fewer than ``C4_MIN_LINES`` lines (C4 dropped pages with < 3
+    sentences — reported as a flag here so callers choose drop vs
+    inspect).  Complements strip_boilerplate
     (census-based, corpus-global) with the rule-based, corpus-free
     member of the curation family.
 
@@ -682,30 +678,26 @@ def clean_lines(
     census; co-partitions with the input at any scale.
     """
     lines = F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
-    kept = F.filter(lines, lambda l: _line_keep(l, min_words, blacklist))
+    kept = F.filter(lines, _line_keep)
     nonblank = F.filter(lines, lambda l: F.length(F.trim(l)) > 0)
     return df.select(
         F.col(id_col),
         F.array_join(kept, "\n").alias("text_clean"),
         F.size(nonblank).cast("int").alias("n_lines"),
         F.size(kept).cast("int").alias("n_kept"),
-        (F.size(kept) >= min_lines).alias("keep_doc"),
+        (F.size(kept) >= C4_MIN_LINES).alias("keep_doc"),
     )
 
 
-def clean_lines_sql(
-    table: str, text_col: str, id_col: str,
-    min_words: int = 3, min_lines: int = 2,
-    blacklist=C4_LINE_BLACKLIST,
-) -> str:
+def clean_lines_sql(table: str, text_col: str, id_col: str) -> str:
     """DuckDB twin: identical rules over string_split/list_filter."""
     terminals = ", ".join(
         "'" + c.replace("'", "''") + "'" for c in C4_TERMINAL_CHARS)
     black = " OR ".join(
-        f"contains(lower(trim(x)), '{p}')" for p in blacklist)
+        f"contains(lower(trim(x)), '{p}')" for p in C4_LINE_BLACKLIST)
     ok = (
         f"length(trim(x)) > 0 AND right(trim(x), 1) IN ({terminals}) "
-        f"AND len(string_split_regex(trim(x), '{SPLIT_WS}')) >= {min_words} "
+        f"AND len(string_split_regex(trim(x), '{SPLIT_WS}')) >= {C4_MIN_WORDS} "
         f"AND NOT ({black})"
     )
     return f"""
@@ -718,7 +710,7 @@ def clean_lines_sql(
                len(list_filter(string_split(coalesce({text_col}, ''), chr(10)),
                    x -> {ok}))::INT AS n_kept,
                len(list_filter(string_split(coalesce({text_col}, ''), chr(10)),
-                   x -> {ok})) >= {min_lines} AS keep_doc
+                   x -> {ok})) >= {C4_MIN_LINES} AS keep_doc
         FROM {table}
     """
 

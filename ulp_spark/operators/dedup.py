@@ -16,7 +16,7 @@ Scale notes (the design constraints, not this box):
 * minhash signatures are k=|HASHES| ints per doc: 10^12 docs x 16 x 8B is
   shuffle-heavy but column-pruned to exactly the signature;
 * hot buckets (boilerplate shingles) are the skew risk: cap bucket size
-  (``max_bucket``) like production dedup pipelines cap posting lists.
+  (``MAX_BUCKET``) like production dedup pipelines cap posting lists.
 
 Portability: the shingle hash is the first 8 hex chars of md5 (identical in
 Spark and DuckDB), folded by (a*h + b) % P with P prime < 2^31 and h
@@ -39,6 +39,10 @@ HASHES: list[tuple[int, int]] = [
 ]
 BANDS, ROWS_PER_BAND = 4, 4  # 16 = BANDS * ROWS_PER_BAND
 SIMHASH_BITS = 16
+MAX_BUCKET = 1000     # skew cap: larger LSH buckets / postings form no pairs
+JACCARD_MIN = 0.8     # verified near-dup threshold on shingle sets
+WINNOW_W = 8          # winnowing window, in k-grams
+WINNOW_MIN_SHARED = 2  # fingerprints a winnow candidate pair must share
 
 
 # --------------------------------------------------------------------------
@@ -57,8 +61,9 @@ def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
 # shingles + minhash
 # --------------------------------------------------------------------------
 
-def _grams(text: Column, size: int = SHINGLE) -> Column:
-    """Distinct character ``size``-grams (the shingle SET, pre-hash)."""
+def _grams(text: Column) -> Column:
+    """Distinct character ``SHINGLE``-grams (the shingle SET, pre-hash)."""
+    size = SHINGLE
     end = F.greatest(F.length(text) - (size - 1), F.lit(0))
     grams = F.when(
         end >= 1,
@@ -67,7 +72,8 @@ def _grams(text: Column, size: int = SHINGLE) -> Column:
     return F.array_distinct(grams)
 
 
-def _grams_sql(text: str, size: int = SHINGLE) -> str:
+def _grams_sql(text: str) -> str:
+    size = SHINGLE
     return (
         f"list_distinct([substr({text}, i, {size}) "
         f"FOR i IN range(1, greatest(len({text}) - {size - 1}, 0) + 1)])"
@@ -82,19 +88,21 @@ def _md5_bigint(col: Column, start: int = 1) -> Column:
     return F.conv(F.substring(F.md5(col), start, 8), 16, 10).cast("bigint")
 
 
-def shingle_hashes(text: Column, size: int = SHINGLE) -> Column:
-    """Distinct 32-bit hashes of character ``size``-grams (sorted array).
+def shingle_hashes(text: Column) -> Column:
+    """Distinct 32-bit hashes of character ``SHINGLE``-grams (sorted
+    array).
 
     Empty/short texts yield an empty array.  All JVM-side: sequence +
     transform + md5; identical results in the DuckDB twin.  (Distinct runs
     on the gram set AND on the hash values — a 32-bit collision between
     two distinct grams dedups either way, so the value set is identical.)
     """
-    hashes = F.transform(_grams(text, size), lambda g: _md5_bigint(g))
+    hashes = F.transform(_grams(text), lambda g: _md5_bigint(g))
     return F.array_sort(F.array_distinct(hashes))
 
 
-def shingle_hashes_sql(text: str, size: int = SHINGLE) -> str:
+def shingle_hashes_sql(text: str) -> str:
+    size = SHINGLE
     return (
         f"list_sort(list_distinct([CAST(('0x' || substr(md5(substr({text}, i, {size})), 1, 8)) AS BIGINT) "
         f"FOR i IN range(1, greatest(len({text}) - {size - 1}, 0) + 1)]))"
@@ -164,19 +172,19 @@ def _bucket_pairs(
 
 
 def minhash_candidates(
-    df: DataFrame, text_col: str, id_col: str, max_bucket: int = 1000,
+    df: DataFrame, text_col: str, id_col: str,
 ) -> DataFrame:
     """Candidate near-dup pairs (id_a < id_b) from LSH bucket collisions.
 
-    ``max_bucket`` drops degenerate buckets (boilerplate) — the skew cap
-    of :func:`_bucket_pairs`.
+    Buckets over ``MAX_BUCKET`` rows (boilerplate) are dropped — the skew
+    cap of :func:`_bucket_pairs`.
     """
     return minhash_candidates_from_hashes(
-        df, shingle_hashes(F.col(text_col)), id_col, max_bucket)
+        df, shingle_hashes(F.col(text_col)), id_col)
 
 
 def minhash_candidates_from_hashes(
-    df: DataFrame, hashes: Column, id_col: str, max_bucket: int = 1000,
+    df: DataFrame, hashes: Column, id_col: str,
 ) -> DataFrame:
     """The minhash_candidates engine over a caller-supplied shingle-hash
     set column — so token-id shingles (tokens.sequence_minhash_candidates)
@@ -200,7 +208,7 @@ def minhash_candidates_from_hashes(
             for b in range(BANDS)
         ])).alias("e"),
     ).select("id", "e.band", "e.bk")
-    pairs = _bucket_pairs(bands, ["band", "bk"], max_bucket)
+    pairs = _bucket_pairs(bands, ["band", "bk"], MAX_BUCKET)
     return pairs.select("id_a", "id_b").distinct()
 
 
@@ -216,16 +224,14 @@ def band_keys_sql(sig_exprs: list[str]) -> list[str]:
     return keys
 
 
-def minhash_candidates_sql(
-    table: str, text_col: str, id_col: str, max_bucket: int = 1000
-) -> str:
+def minhash_candidates_sql(table: str, text_col: str, id_col: str) -> str:
     """DuckDB twin of :func:`minhash_candidates` (band self-join)."""
     return minhash_candidates_from_hashes_sql(
-        table, shingle_hashes_sql(text_col), id_col, max_bucket)
+        table, shingle_hashes_sql(text_col), id_col)
 
 
 def minhash_candidates_from_hashes_sql(
-    table: str, hashes_sql: str, id_col: str, max_bucket: int = 1000
+    table: str, hashes_sql: str, id_col: str,
 ) -> str:
     """DuckDB twin of :func:`minhash_candidates_from_hashes`."""
     sig_exprs = minhash_signature_sql("hashes")
@@ -240,7 +246,7 @@ def minhash_candidates_from_hashes_sql(
     bands AS ({bands_sel}),
     ok AS (
       SELECT band, bk FROM bands GROUP BY band, bk
-      HAVING count(*) > 1 AND count(*) <= {max_bucket}
+      HAVING count(*) > 1 AND count(*) <= {MAX_BUCKET}
     )
     SELECT DISTINCT a.id AS id_a, b.id AS id_b
     FROM bands a JOIN ok USING (band, bk)
@@ -269,9 +275,9 @@ def jaccard_distinct(a: Column, b: Column) -> Column:
 
 def ngram_jaccard_pairs(
     df: DataFrame, text_col: str, id_col: str, pairs: DataFrame,
-    threshold: float = 0.8,
 ) -> DataFrame:
-    """Verify candidate pairs with exact shingle-set Jaccard."""
+    """Verify candidate pairs with exact shingle-set Jaccard: keeps the
+    pairs at or above ``JACCARD_MIN``."""
     sh = df.select(F.col(id_col).alias("id"),
                    shingle_hashes(F.col(text_col)).alias("sh"))
     j = (
@@ -284,7 +290,7 @@ def ngram_jaccard_pairs(
                 # cheaper inclusion-exclusion form applies (r6)
                 jaccard_distinct(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
     )
-    return j.filter(F.col("jaccard") >= threshold)
+    return j.filter(F.col("jaccard") >= JACCARD_MIN)
 
 
 # --------------------------------------------------------------------------
@@ -358,8 +364,7 @@ def simhash64_sql(table: str, text_col: str, id_col: str) -> str:
 
 
 def simhash_candidates(
-    df: DataFrame, text_col: str, id_col: str,
-    max_hamming: int = 3, max_bucket: int = 1000,
+    df: DataFrame, text_col: str, id_col: str, max_hamming: int = 3,
 ) -> DataFrame:
     """Near-dup pairs by 64-bit simhash: 4x16-bit band collision candidates
     from :func:`_bucket_pairs`, verified with the exact Hamming distance
@@ -379,7 +384,7 @@ def simhash_candidates(
     ham = (F.bit_count(F.col("sim_lo_a").bitwiseXOR(F.col("sim_lo_b")))
            + F.bit_count(F.col("sim_hi_a").bitwiseXOR(F.col("sim_hi_b"))))
     pairs = (
-        _bucket_pairs(bands, ["band", "bk"], max_bucket,
+        _bucket_pairs(bands, ["band", "bk"], MAX_BUCKET,
                       payload=("sim_lo", "sim_hi"))
         .select("id_a", "id_b", ham.cast("int").alias("hamming"))
         .distinct()
@@ -388,8 +393,7 @@ def simhash_candidates(
 
 
 def simhash_candidates_sql(
-    table: str, text_col: str, id_col: str,
-    max_hamming: int = 3, max_bucket: int = 1000,
+    table: str, text_col: str, id_col: str, max_hamming: int = 3,
 ) -> str:
     """DuckDB twin of :func:`simhash_candidates`."""
     band_vals = ["sim_lo & 65535", "sim_lo >> 16", "sim_hi & 65535", "sim_hi >> 16"]
@@ -402,7 +406,7 @@ def simhash_candidates_sql(
     bands AS ({bands_sel}),
     ok AS (
       SELECT band, bk FROM bands GROUP BY band, bk
-      HAVING count(*) > 1 AND count(*) <= {max_bucket}
+      HAVING count(*) > 1 AND count(*) <= {MAX_BUCKET}
     ),
     pairs AS (
       SELECT DISTINCT a.id AS id_a, b.id AS id_b,
@@ -555,9 +559,10 @@ def connected_components_sql(pairs_sql: str, id_alias: str = "id") -> str:
 # winnowing fingerprints (Schleimer, Wilkerson & Aiken, SIGMOD 2003)
 # --------------------------------------------------------------------------
 
-def _positional_hashes(text: Column, size: int = SHINGLE) -> Column:
-    """Per-POSITION k-gram hashes (no distinct — winnowing needs the
-    positional sequence, unlike the minhash shingle SET)."""
+def _positional_hashes(text: Column) -> Column:
+    """Per-POSITION ``SHINGLE``-gram hashes (no distinct — winnowing
+    needs the positional sequence, unlike the minhash shingle SET)."""
+    size = SHINGLE
     end = F.greatest(F.length(text) - (size - 1), F.lit(0))
     return F.when(
         end >= 1,
@@ -566,13 +571,14 @@ def _positional_hashes(text: Column, size: int = SHINGLE) -> Column:
     ).otherwise(F.array().cast("array<bigint>"))
 
 
-def _winnow_from_hashes(h: Column, w: int) -> Column:
-    """The MOSS fingerprint set: min k-gram hash in every w-window of an
-    ALREADY-STAGED positional-hash array column (:func:`_positional_hashes`),
-    distinct + sorted.  The winnowing guarantee (SIGMOD 2003, thm 2): two
-    documents sharing any substring of length >= w + k - 1 share at least
-    one fingerprint — a DETERMINISTIC recall floor, where minhash/simhash
-    recall is probabilistic.  Density is ~2/(w+1) of positions, so the
+def _winnow_from_hashes(h: Column) -> Column:
+    """The MOSS fingerprint set: min k-gram hash in every w-window
+    (w = ``WINNOW_W``) of an ALREADY-STAGED positional-hash array column
+    (:func:`_positional_hashes`), distinct + sorted.  The winnowing
+    guarantee (SIGMOD 2003, thm 2): two documents sharing any substring
+    of length >= w + k - 1 share at least one fingerprint — a
+    DETERMINISTIC recall floor, where minhash/simhash recall is
+    probabilistic.  Density is ~2/(w+1) of positions, so the
     posting table is ~an order smaller than full k-gram indexing.
 
     Texts with at least one gram but fewer than w of them keep their
@@ -582,6 +588,7 @@ def _winnow_from_hashes(h: Column, w: int) -> Column:
     Catalyst re-evaluates a referenced non-attribute expression inside
     the per-window lambda PER ELEMENT — O(n^2) md5 work (measured 33 s vs
     0.7 s on the 5k-doc bench corpus)."""
+    w = WINNOW_W
     n = F.size(h)
     # least(element_at...) instead of array_min(slice...): slice allocates
     # a w-element array per window (the word_grams allocation win, r6);
@@ -598,7 +605,8 @@ def _winnow_from_hashes(h: Column, w: int) -> Column:
     return F.array_sort(F.array_distinct(wins))
 
 
-def winnow_fingerprints_sql(text: str, k: int = SHINGLE, w: int = 8) -> str:
+def winnow_fingerprints_sql(text: str) -> str:
+    k, w = SHINGLE, WINNOW_W
     # compute the O(n) positional hash list ONCE via a scalar subquery
     # (five verbatim interpolations would lean on DuckDB CSE to avoid a
     # 5x md5 scan per row)
@@ -615,22 +623,18 @@ def winnow_fingerprints_sql(text: str, k: int = SHINGLE, w: int = 8) -> str:
     )
 
 
-def winnow_candidates(
-    df: DataFrame, text_col: str, id_col: str, min_shared: int = 2,
-    max_posting: int = 1000,
-) -> DataFrame:
+def winnow_candidates(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Near-dup candidate pairs (id_a < id_b, n_shared fingerprints) from
     the winnowing posting table — the deterministic-recall complement to
     minhash_candidates (same skew discipline: :func:`_bucket_pairs` caps
     posting lists for boilerplate fingerprints before any pair forms).
 
-    The SIGMOD-2003 guarantee lives at the FINGERPRINT level: it holds
-    for the candidate set only at min_shared=1 (a single shared >=
-    w+k-1-char substring yields exactly one shared fingerprint).  The
-    default min_shared=2 deliberately trades that floor for precision on
-    boilerplate-dense corpora; max_posting likewise drops guaranteed
-    pairs inside capped postings.  Set min_shared=1 and raise
-    max_posting to recover the full deterministic floor.
+    The SIGMOD-2003 guarantee lives at the FINGERPRINT level: it would
+    hold for the candidate set only with one shared fingerprint enough
+    (a single shared >= w+k-1-char substring yields exactly one).
+    Requiring ``WINNOW_MIN_SHARED`` = 2 deliberately trades that floor
+    for precision on boilerplate-dense corpora; the ``MAX_BUCKET``
+    posting cap likewise drops guaranteed pairs inside capped postings.
 
     Scale shape: explode to (fingerprint, id) — ~2/(w+1) x corpus grams —
     then the capped self-join on the fingerprint and a pair-count
@@ -643,19 +647,16 @@ def winnow_candidates(
         _positional_hashes(F.col(text_col)).alias("__h"))
     post = staged.select(
         "id",
-        F.explode(_winnow_from_hashes(F.col("__h"), w=8)).alias("fp"))
+        F.explode(_winnow_from_hashes(F.col("__h"))).alias("fp"))
     return (
-        _bucket_pairs(post, ["fp"], max_posting)
+        _bucket_pairs(post, ["fp"], MAX_BUCKET)
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+        .filter(F.col("n_shared") >= WINNOW_MIN_SHARED)
     )
 
 
-def winnow_candidates_sql(
-    table: str, text_col: str, id_col: str, min_shared: int = 2,
-    max_posting: int = 1000,
-) -> str:
+def winnow_candidates_sql(table: str, text_col: str, id_col: str) -> str:
     fps = winnow_fingerprints_sql(text_col)
     return f"""
         WITH post AS (
@@ -663,7 +664,7 @@ def winnow_candidates_sql(
         ),
         ok AS (
           SELECT fp FROM post GROUP BY fp
-          HAVING count(*) > 1 AND count(*) <= {max_posting}
+          HAVING count(*) > 1 AND count(*) <= {MAX_BUCKET}
         ),
         small AS (SELECT * FROM post WHERE fp IN (SELECT fp FROM ok))
         SELECT a.id AS id_a, b.id AS id_b,
@@ -671,5 +672,5 @@ def winnow_candidates_sql(
         FROM small a JOIN small b USING (fp)
         WHERE a.id < b.id
         GROUP BY a.id, b.id
-        HAVING count(*) >= {min_shared}
+        HAVING count(*) >= {WINNOW_MIN_SHARED}
     """

@@ -37,6 +37,7 @@ FEATURE_SCHEMA = (
     "doc_id bigint, n_bytes int, byte_mean double, byte_hist array<int>"
 )
 FRAME_SCHEMA = "doc_id bigint, frame_no int, frame binary"
+N_HIST = 4  # byte-histogram buckets in extract_features
 
 
 def synth_binary_column(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -67,12 +68,13 @@ def decode_image(blob: bytes):  # pragma: no cover - real-codec path
     return Image.open(io.BytesIO(blob))
 
 
-def extract_features(df: DataFrame, n_hist: int = 4) -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 
-    Fake-but-deterministic kernel: byte count, mean byte value, ``n_hist``
-    coarse byte histogram.  The batch shape (pandas DataFrame in/out via
-    ``mapInPandas``) is exactly what a real decoder uses.
+    Fake-but-deterministic kernel: byte count, mean byte value, a
+    ``N_HIST``-bucket coarse byte histogram.  The batch shape (pandas
+    DataFrame in/out via ``mapInPandas``) is exactly what a real decoder
+    uses.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -84,13 +86,13 @@ def extract_features(df: DataFrame, n_hist: int = 4) -> DataFrame:
             out["byte_mean"] = blobs.map(
                 lambda b: round(sum(b) / len(b), 6) if b else 0.0
             )
-            bucket = 256 // n_hist
+            bucket = 256 // N_HIST
 
             def hist(b):
-                h = [0] * n_hist
+                h = [0] * N_HIST
                 if b:
                     for x in b:
-                        h[min(x // bucket, n_hist - 1)] += 1
+                        h[min(x // bucket, N_HIST - 1)] += 1
                 return h
 
             out["byte_hist"] = blobs.map(hist)

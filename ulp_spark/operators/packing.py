@@ -47,16 +47,16 @@ CHUNK = 512  # training sequence length (tokens)
 def _range_boundaries(df: DataFrame, order_col: str, n_part: int) -> list:
     """Sampled split points for a monotone ``n_part``-way bucketing of
     ``order_col`` (ascending, deduplicated): about 100 keys per bucket,
-    sampled with a fixed seed.  Empty list -> one bucket."""
+    drawn in ONE job as a seeded random top-k (``orderBy(rand(7))
+    .limit(k)`` plans as TakeOrderedAndProject: per-partition k-row heaps,
+    one driver merge), so a frame smaller than the sample is taken
+    whole.  Empty list -> one bucket."""
     if n_part <= 1:
         return []
-    n = df.count()
-    if n == 0:
-        return []
-    frac = min(1.0, (n_part * 100) / n)
     sample = sorted(
         r[0]
-        for r in df.select(order_col).sample(False, frac, seed=7).collect()
+        for r in df.select(order_col).orderBy(F.rand(7))
+        .limit(n_part * 100).collect()
         if r[0] is not None
     )
     if not sample:
@@ -128,40 +128,35 @@ def global_cumsum(
     )
 
 
-def packing_offsets(
-    df: DataFrame, order_col: str = "doc_id", len_col: str = "n_tok",
-    chunk: int = CHUNK,
-) -> DataFrame:
-    """Per document: global start offset, first chunk id, and how many
-    ``chunk``-token training sequences it touches."""
-    out = global_cumsum(df, order_col, len_col, out_col="tok_offset")
-    start, length = F.col("tok_offset"), F.col(len_col).cast("bigint")
-    first = F.floor(start / chunk)
-    last = F.floor((start + length - 1) / chunk)
+def packing_offsets(df: DataFrame) -> DataFrame:
+    """Per document (``doc_id``, ``n_tok``), in doc_id order: global
+    start offset, first chunk id, and how many ``CHUNK``-token training
+    sequences it touches."""
+    out = global_cumsum(df, "doc_id", "n_tok", out_col="tok_offset")
+    start, length = F.col("tok_offset"), F.col("n_tok").cast("bigint")
+    first = F.floor(start / CHUNK)
+    last = F.floor((start + length - 1) / CHUNK)
     return out.select(
-        order_col, len_col, "tok_offset",
+        "doc_id", "n_tok", "tok_offset",
         first.cast("bigint").alias("first_chunk"),
         (last - first + 1).cast("bigint").alias("n_chunks"),
     )
 
 
-def packing_offsets_sql(
-    table: str, order_col: str = "doc_id", len_col: str = "n_tok",
-    chunk: int = CHUNK,
-) -> str:
+def packing_offsets_sql(table: str) -> str:
     """DuckDB twin: plain window cumsum (single node — the point of the
     Spark version is precisely NOT doing it this way)."""
     return f"""
     WITH c AS (
-      SELECT {order_col}, {len_col},
-             (sum({len_col}) OVER (ORDER BY {order_col})
-              - {len_col})::BIGINT AS tok_offset
+      SELECT doc_id, n_tok,
+             (sum(n_tok) OVER (ORDER BY doc_id)
+              - n_tok)::BIGINT AS tok_offset
       FROM {table}
     )
-    SELECT {order_col}, {len_col}, tok_offset,
-           CAST(floor(tok_offset / {chunk}) AS BIGINT) AS first_chunk,
-           CAST(floor((tok_offset + {len_col} - 1) / {chunk})
-                - floor(tok_offset / {chunk}) + 1 AS BIGINT) AS n_chunks
+    SELECT doc_id, n_tok, tok_offset,
+           CAST(floor(tok_offset / {CHUNK}) AS BIGINT) AS first_chunk,
+           CAST(floor((tok_offset + n_tok - 1) / {CHUNK})
+                - floor(tok_offset / {CHUNK}) + 1 AS BIGINT) AS n_chunks
     FROM c
     """
 
@@ -286,7 +281,6 @@ def bin_stats(packed: DataFrame, capacity: int = CHUNK) -> DataFrame:
 def pack_sequences(
     seq: DataFrame, packed: DataFrame,
     id_col: str = "doc_id", tokens_col: str = "tokens",
-    sep_token: int | None = None,
     extra_array_cols: list[str] | None = None,
 ) -> DataFrame:
     """Materialize the training rows for a pack_bins assignment: one row
@@ -307,52 +301,29 @@ def pack_sequences(
     invariants (flatten length == sum n_tok, starts == exclusive prefix
     sums, every doc exactly once) are pinned in pytest instead.
 
-    ``sep_token`` (e.g. the EOS id) is appended AFTER EACH document —
-    the GPT-style packing convention, so a model never sees two docs
-    fused without a boundary token even if the attention mask is lost
-    downstream.  doc_starts then point at each document's first token
-    (separators included in the offset math), and n_tok counts the
-    separators; a caller packing with separators should budget
-    pack_bins with n_tok + 1 upstream.
-
     ``extra_array_cols`` packs ADDITIONAL per-document arrays (e.g. the
     sft_loss_mask output) positionally alongside the tokens: each named
     column is concatenated in the SAME ascending-id order, so
     out[extra][p] annotates out[tokens][p] exactly — the packed-SFT
-    recipe (mask the docs, pack once, train on the packed pair).  Only
-    supported with ``sep_token=None``: a separator's annotation value is
-    a per-use policy this op refuses to guess (raises ValueError).
+    recipe (mask the docs, pack once, train on the packed pair).
     Callers must guarantee each extra array is length-aligned with its
     document's tokens (sft_loss_mask output is by construction).
     """
     extras = list(extra_array_cols or [])
-    if extras and sep_token is not None:
-        raise ValueError(
-            "extra_array_cols requires sep_token=None: a separator's "
-            "annotation value is caller policy — append it upstream")
     j = seq.select(id_col, tokens_col, *extras).join(
         packed.select(id_col, "bin_id"), id_col)
     grouped = j.groupBy("bin_id").agg(
         F.array_sort(F.collect_list(F.struct(id_col, tokens_col, *extras)))
         .alias("__arr"))
     arr = F.col("__arr")
-    if sep_token is None:
-        def doc_toks(s):
-            return s[tokens_col]
-    else:
-        sep = F.array(F.lit(int(sep_token)).cast("int"))
-
-        def doc_toks(s):
-            return F.concat(s[tokens_col].cast("array<int>"), sep)
-    toks = F.flatten(F.transform(arr, doc_toks))
+    toks = F.flatten(F.transform(arr, lambda s: s[tokens_col]))
     starts = F.aggregate(
         arr,
         F.struct(F.array().cast("array<int>").alias("st"),
                  F.lit(0).alias("off")),
         lambda acc, s: F.struct(
             F.concat(acc["st"], F.array(acc["off"])).alias("st"),
-            (acc["off"] + F.size(s[tokens_col])
-             + F.lit(0 if sep_token is None else 1)).alias("off")),
+            (acc["off"] + F.size(s[tokens_col])).alias("off")),
         lambda acc: acc["st"],
     )
     def _field(c):
@@ -451,10 +422,7 @@ def length_bucket_stats_sql(
     """
 
 
-def pack_segments(
-    packed: DataFrame, tokens_col: str = "tokens",
-    starts_col: str = "doc_starts",
-) -> DataFrame:
+def pack_segments(packed: DataFrame) -> DataFrame:
     """Per-position SEGMENT IDS and IN-DOCUMENT POSITIONS for packed
     training rows — the two arrays a trainer derives from (tokens,
     doc_starts) to build the block-diagonal attention mask and the
@@ -475,7 +443,7 @@ def pack_segments(
     O(n_tok x n_docs) per-position filter), one codegen span, no
     shuffle; co-partitions with the input.
     """
-    toks, starts = F.col(tokens_col), F.col(starts_col)
+    toks, starts = F.col("tokens"), F.col("doc_starts")
     nd = F.size(starts)
     n = F.size(toks)
     # gate nd = 0: sequence(0, -1) counts DOWN in Spark (the recorded

@@ -152,8 +152,9 @@ def runtime_code_columns(fields: Sequence[str]) -> list[str]:
             f" AS {ident(f + '__r')}" for f in fields]
 
 
-def parse_ndjson(df: DataFrame, line_col: str = "line") -> DataFrame:
-    """S3/S6 analog — dynamic two-pass NDJSON parse.
+def parse_ndjson(df: DataFrame) -> DataFrame:
+    """S3/S6 analog — dynamic two-pass NDJSON parse of the ``line``
+    column.
 
     Pass 1 infers the merged type tree over the whole column
     (lattice.json_tree_schema — the distributed Mapping::map_json fold);
@@ -166,7 +167,7 @@ def parse_ndjson(df: DataFrame, line_col: str = "line") -> DataFrame:
 
     from ulp_spark.operators import lattice
 
-    tree = lattice.json_tree_schema(df, line_col)
+    tree = lattice.json_tree_schema(df, "line")
     spark_type = lattice.tree_to_spark_type(tree)
     # Standard Spark JSON quarantine: a corrupt-record column inside the
     # struct marks malformed lines (PERMISSIVE from_json otherwise yields an
@@ -175,7 +176,7 @@ def parse_ndjson(df: DataFrame, line_col: str = "line") -> DataFrame:
     with_corrupt = T.StructType(
         list(spark_type.fields) + [T.StructField("_corrupt_record", T.StringType())]
     )
-    rec = F.from_json(F.col(line_col), with_corrupt,
+    rec = F.from_json(F.col("line"), with_corrupt,
                       {"columnNameOfCorruptRecord": "_corrupt_record"})
     return (
         df.withColumn("rec", rec)

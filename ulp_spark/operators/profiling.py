@@ -7,9 +7,8 @@ Scale shape: ONE scan.  All per-column aggregates go into a single
 ``agg`` (partial aggregation map-side); the exact ``count(DISTINCT c)``
 aggregates make Catalyst plan an Expand (one duplicated stream per
 distinct aggregate), which is the exact-answer cost — bounded and
-documented.  At 100 TB swap ``F.approx_count_distinct`` (HLL) for the
-exact count; the oracle then gates everything except n_distinct (DuckDB's
-HLL differs), which is why the exact form is the gated default here.
+documented.  An HLL ``approx_count_distinct`` would drop the Expand, but
+DuckDB's HLL sketches differ, so only the exact count can be oracle-gated.
 The wide single-row result is reshaped to one row per column driver-side
 free (it is ONE row), via an explode of per-column structs.
 """
@@ -35,27 +34,16 @@ def _render(col: Column, is_float: bool) -> Column:
     return col.cast("string")
 
 
-def profile_table(
-    df: DataFrame, cols: list[str], approx: bool = False, rsd: float = 0.05,
-) -> DataFrame:
+def profile_table(df: DataFrame, cols: list[str]) -> DataFrame:
     """(col_name, n_rows, n_nulls, n_distinct, min_val, max_val) per column;
-    min/max rendered as strings so the output schema is uniform.
-
-    ``approx=True`` is the 100-TB form: HLL ``approx_count_distinct``
-    (relative error ``rsd``) replaces the exact distinct — the plan loses
-    its Expand (no duplicated stream per distinct aggregate) and becomes
-    a plain partial+final aggregation.  The exact form stays the
-    oracle-gated default (DuckDB's HLL sketches differ, so approx counts
-    cannot hash-match an oracle); the approx form is pinned by a
-    tolerance test instead."""
+    min/max rendered as strings so the output schema is uniform; the
+    distinct count is exact."""
     aggs = [F.count(F.lit(1)).alias("__n")]
     for c in cols:
         is_f = df.schema[c].dataType.typeName() in FLOAT_TYPES
-        nd = (F.approx_count_distinct(F.col(c), rsd) if approx
-              else F.count_distinct(F.col(c)))
         aggs += [
             F.count(F.col(c)).alias(f"{c}__nn"),
-            nd.alias(f"{c}__nd"),
+            F.count_distinct(F.col(c)).alias(f"{c}__nd"),
             _render(F.min(F.col(c)), is_f).alias(f"{c}__min"),
             _render(F.max(F.col(c)), is_f).alias(f"{c}__max"),
         ]
@@ -97,10 +85,8 @@ def profile_table_sql(table: str, cols: list[str],
     return " UNION ALL ".join(parts)
 
 
-def corpus_datacard(
-    df: DataFrame, tokens_col: str = "tokens", source_col: str = "source",
-) -> DataFrame:
-    """Per-source DATASET-CARD summary over the input_hint table: the
+def corpus_datacard(df: DataFrame) -> DataFrame:
+    """Per-source DATASET-CARD summary over a (tokens, source) table: the
     one-page accounting a corpus release ships (sources, sizes, exact
     duplication) — one row per source with n_seqs, total_tokens,
     n_unique (distinct token-array fingerprints), dup_frac
@@ -112,17 +98,16 @@ def corpus_datacard(
     projection (16-byte key; token arrays never shuffle) and all
     aggregates share a single groupBy(source) with map-side partials;
     count(DISTINCT fp) adds the exact-answer Expand like profile_table,
-    swappable for approx_count_distinct at 10^12 rows (documented
-    trade; exact is the oracle-gated default).  Output is |sources|
-    rows — driver-scale by definition.
+    exact because only the exact count can be oracle-gated.  Output is
+    |sources| rows — driver-scale by definition.
     """
     from ulp_spark.operators.tokens import token_fingerprint
 
-    src = F.coalesce(F.col(source_col), F.lit("__null__"))
-    n = F.size(F.col(tokens_col))
+    src = F.coalesce(F.col("source"), F.lit("__null__"))
+    n = F.size(F.col("tokens"))
     staged = df.select(
         src.alias("source"),
-        token_fingerprint(F.col(tokens_col)).alias("__fp"),
+        token_fingerprint(F.col("tokens")).alias("__fp"),
         n.alias("__n"))
     return (
         staged.groupBy("source")
@@ -141,13 +126,11 @@ def corpus_datacard(
     )
 
 
-def corpus_datacard_sql(
-    table: str, tokens_col: str = "tokens", source_col: str = "source",
-) -> str:
+def corpus_datacard_sql(table: str) -> str:
     """DuckDB twin: same staged fingerprint + one grouped aggregate."""
     from ulp_spark.operators.tokens import token_fingerprint_sql
 
-    fp = token_fingerprint_sql(tokens_col)
+    fp = token_fingerprint_sql("tokens")
     return f"""
         SELECT source,
                count(*)::BIGINT AS n_seqs,
@@ -158,8 +141,8 @@ def corpus_datacard_sql(
                round(avg(CAST(n AS DOUBLE)), 6) AS mean_tok,
                min(n)::INT AS min_tok,
                max(n)::INT AS max_tok
-        FROM (SELECT coalesce({source_col}, '__null__') AS source,
-                     {fp} AS fp, len({tokens_col}) AS n
+        FROM (SELECT coalesce(source, '__null__') AS source,
+                     {fp} AS fp, len(tokens) AS n
               FROM {table})
         GROUP BY source
     """

@@ -148,10 +148,9 @@ def cast_per_route(
     df: DataFrame,
     route_schemas: dict[str, dict[str, int]],
     fields: list[str],
-    keep: list[str] | None = None,
 ) -> dict[str, DataFrame]:
     """Sorted {route: typed DataFrame} — each with its own native schema:
-    ``keep``, then every field the route's schema types, as
+    ``doc_id``, then every field the route's schema types, as
     ``CAST(<f>__cast AS <native>)`` of the :func:`cast_single_pass`
     string, then ``cast_error``.  The canonical strings round-trip
     exactly: a BIGINT's decimal digits, a DOUBLE's Java rendering and
@@ -178,7 +177,7 @@ def cast_per_route(
             f" {casts.NATIVE[schema[f]].simpleString()}) AS {ident(f)}"
             for f in fields if f in schema]
         out[r] = casted.filter(F.expr(f"`route` = {lit(r)}")).selectExpr(
-            *[ident(c) for c in keep or []], *typed, "cast_error")
+            "doc_id", *typed, "cast_error")
     return out
 
 

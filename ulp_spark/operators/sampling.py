@@ -18,7 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-DEFAULT_SPLITS: list[tuple[str, int]] = [("train", 90), ("val", 5), ("test", 5)]
+# (name, percent) in bucket order; the percents sum to 100
+SPLITS: list[tuple[str, int]] = [("train", 90), ("val", 5), ("test", 5)]
 
 
 def hash_bucket(id_col: Column, buckets: int = 100) -> Column:
@@ -34,50 +35,43 @@ def hash_bucket_sql(id_expr: str, buckets: int = 100) -> str:
     )
 
 
-def split_label(
-    id_col: Column, splits: list[tuple[str, int]] | None = None,
-) -> Column:
-    """Named split from cumulative percentage weights (must sum to 100)."""
-    splits = splits or DEFAULT_SPLITS
-    assert sum(w for _, w in splits) == 100, "split weights must sum to 100"
+def split_label(id_col: Column) -> Column:
+    """Named split from the cumulative percentage weights of ``SPLITS``."""
     b = hash_bucket(id_col, 100)
     out = None
     hi = 0
-    for name, w in splits:
+    for name, w in SPLITS:
         hi += w
         out = F.when(b < hi, F.lit(name)) if out is None else out.when(
             b < hi, F.lit(name))
     return out
 
 
-def split_label_sql(
-    id_expr: str, splits: list[tuple[str, int]] | None = None,
-) -> str:
-    splits = splits or DEFAULT_SPLITS
+def split_label_sql(id_expr: str) -> str:
     b = hash_bucket_sql(id_expr, 100)
     hi, cases = 0, []
-    for name, w in splits:
+    for name, w in SPLITS:
         hi += w
         cases.append(f"WHEN ({b}) < {hi} THEN '{name}'")
     return "CASE " + " ".join(cases) + " END"
 
 
-def deterministic_sample(df, id_col: str, rate_pct: int, buckets: int = 100):
+def deterministic_sample(df, id_col: str, rate_pct: int):
     """Reproducible ``rate_pct``%% sample: bucket < rate — a scan predicate."""
-    return df.filter(hash_bucket(F.col(id_col), buckets) < rate_pct)
+    return df.filter(hash_bucket(F.col(id_col)) < rate_pct)
 
 
 def stratified_keep(
     id_col: Column, strat_col: Column, rates_pct: dict[str, int],
-    default_pct: int = 0,
 ) -> Column:
     """Per-stratum deterministic sampling predicate: keep iff
-    hash_bucket(id) < rate(stratum). The standard corpus re-balancing move
+    hash_bucket(id) < rate(stratum); a stratum missing from ``rates_pct``
+    keeps nothing. The standard corpus re-balancing move
     (downsample the over-represented language/domain) expressed as a pure
     scan filter: no shuffle, no rand(), identical membership at any
     parallelism — the property a 100-TB resample actually needs."""
     b = hash_bucket(id_col, 100)
-    rate = F.lit(default_pct)
+    rate = F.lit(0)
     for key, pct in rates_pct.items():
         rate = F.when(strat_col == key, F.lit(pct)).otherwise(rate)
     return b < rate
@@ -85,10 +79,9 @@ def stratified_keep(
 
 def stratified_keep_sql(
     id_expr: str, strat_expr: str, rates_pct: dict[str, int],
-    default_pct: int = 0,
 ) -> str:
     b = hash_bucket_sql(id_expr, 100)
-    rate = str(default_pct)
+    rate = "0"
     for key, pct in rates_pct.items():
         sk = key.replace("'", "''")
         rate = f"CASE WHEN {strat_expr} = '{sk}' THEN {pct} ELSE {rate} END"

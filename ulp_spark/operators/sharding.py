@@ -96,8 +96,8 @@ def write_shards(
     written parquet — a full second scan of the corpus per shard write,
     and partition-column inference downcast ``shard`` to int).  The
     INPUT is seamed, not the assigned output: the prefix sum reads its
-    input four times (the row count and key sample that place the range
-    boundaries, the per-bucket totals, and the window itself), so a
+    input three times (the key sample that places the range boundaries,
+    the per-bucket totals, and the window itself), so a
     seam on the output would still run the caller's plan — for training
     shards, pack_sequences' join and groupBy(bin_id) — once per prefix
     pass.  Pinned first, that plan runs once, and the manifest re-runs

@@ -7,7 +7,7 @@ Two tiers, as a production ANN pipeline would stage them:
   then a global top-k (``orderBy ... limit`` = Spark's TakeOrdered, which
   is a per-partition heap + driver merge, NOT a full sort/shuffle);
 * LSH (random-hyperplane / SRP) bucketing — the scale path: each vector
-  gets a ``nbits``-bit signature; candidates = same-bucket rows, exact
+  gets a ``NBITS``-bit signature; candidates = same-bucket rows, exact
   cosine re-ranked within the bucket.  At 10^12 rows the bucket key is the
   shuffle key and the per-bucket fan-in is bounded by signature length.
 
@@ -22,7 +22,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ulp_spark.operators.dedup import _bucket_pairs
+from ulp_spark.operators.dedup import MAX_BUCKET, _bucket_pairs
 from ulp_spark.session import seam
 
 NBITS = 8
@@ -83,10 +83,10 @@ def hyperplane(i: int, dim: int) -> list[int]:
     return [((i * 31 + j * 17) % 19) - 9 for j in range(dim)]
 
 
-def srp_signature(vec: Column, dim: int, nbits: int = NBITS) -> Column:
-    """Sign-random-projection bucket id in [0, 2^nbits)."""
+def srp_signature(vec: Column, dim: int) -> Column:
+    """Sign-random-projection bucket id in [0, 2^NBITS)."""
     sig = F.lit(0)
-    for i in range(nbits):
+    for i in range(NBITS):
         w = F.array(*[F.lit(float(x)) for x in hyperplane(i, dim)])
         # rounded before the sign test so float-vs-double summation order
         # can't flip a borderline bit between engines
@@ -95,9 +95,9 @@ def srp_signature(vec: Column, dim: int, nbits: int = NBITS) -> Column:
     return sig
 
 
-def srp_signature_sql(vec: str, dim: int, nbits: int = NBITS) -> str:
+def srp_signature_sql(vec: str, dim: int) -> str:
     terms = []
-    for i in range(nbits):
+    for i in range(NBITS):
         w = "[" + ", ".join(f"{float(x)}" for x in hyperplane(i, dim)) + "]"
         terms.append(
             f"CASE WHEN round(list_dot_product({vec}, {w}), 4) > 0 "
@@ -233,9 +233,9 @@ def ivf_train_spherical(
 def tune_n_probe(
     df: DataFrame, vec_col: str, id_col: str, query_ids: list[int],
     centroids: list[list[float]], dim: int, target_recall: float = 0.85,
-    k: int = 10, max_probe: int | None = None, nbits: int = NBITS,
+    max_probe: int | None = None,
 ) -> dict:
-    """Smallest ``n_probe`` whose measured recall@k meets
+    """Smallest ``n_probe`` whose measured recall@10 meets
     ``target_recall`` on the given query set — the auto-tuner a user
     points at their own corpus instead of guessing the recall/cost trade.
 
@@ -247,7 +247,7 @@ def tune_n_probe(
     """
     depths = tuple(range(1, (max_probe or len(centroids)) + 1))
     rows = ann_recall(df, vec_col, id_col, query_ids, centroids, dim,
-                      k=k, n_probes=depths, nbits=nbits).collect()
+                      k=10, n_probes=depths).collect()
     ivf = sorted(
         (int(r.method[len("ivf_p"):]), r.recall_at_k, r.frac_scanned)
         for r in rows if r.method.startswith("ivf_p"))
@@ -359,7 +359,7 @@ def _topk_per_query(scored: DataFrame, k: int, n_salt: int = 32) -> DataFrame:
 def ann_recall(
     df: DataFrame, vec_col: str, id_col: str, query_ids: list[int],
     centroids: list[list[float]], dim: int, k: int = 10,
-    n_probes: tuple[int, ...] = (1, 2, 4), nbits: int = NBITS,
+    n_probes: tuple[int, ...] = (1, 2, 4),
 ) -> DataFrame:
     """Measured recall@k of each ANN variant against brute-force truth.
 
@@ -402,7 +402,7 @@ def ann_recall(
     feat = feat.select(
         "id", "v", "__nv",
         ivf_assign(F.col("v"), centroids, F.col("__nv")).alias("cell"),
-        srp_signature(F.col("v"), dim, nbits).alias("bucket"))
+        srp_signature(F.col("v"), dim).alias("bucket"))
     feat = seam(feat)
 
     qdf = df.sparkSession.createDataFrame(
@@ -467,13 +467,13 @@ def ann_recall(
     qsigs: list[tuple[int, int]] = []
     for q_id, vec in queries:
         qsig = 0
-        for i in range(nbits):
+        for i in range(NBITS):
             d = sum(q * w for q, w in zip(vec, hyperplane(i, dim)))
             qsig += (1 << i) if round(d, 4) > 0 else 0
         qsigs.append((q_id, qsig))
     for method, expand in (
         ("srp", lambda s: [s]),
-        ("srp_mp1", lambda s: [s] + [s ^ (1 << i) for i in range(nbits)]),
+        ("srp_mp1", lambda s: [s] + [s ^ (1 << i) for i in range(NBITS)]),
     ):
         srp_rows = [(q_id, int(b)) for q_id, s in qsigs for b in expand(s)]
         bdf = df.sparkSession.createDataFrame(srp_rows, "q_id int, bucket int")
@@ -488,13 +488,14 @@ def ann_recall(
 
 def embedding_near_dup(
     df: DataFrame, vec_col: str, id_col: str, dim: int,
-    threshold: float = 0.95, nbits: int = NBITS, max_bucket: int = 1000,
+    threshold: float = 0.95,
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine, SRP-bucketed.
 
     Same skeleton as dedup.minhash_candidates: bucket -> the capped
-    self-join of dedup._bucket_pairs (hot buckets, e.g. the all-zero-vector
-    bucket, dropped before any pair forms) -> exact verify.  Returns
+    self-join of dedup._bucket_pairs (buckets over ``MAX_BUCKET`` rows,
+    e.g. the all-zero-vector bucket, dropped before any pair forms) ->
+    exact verify.  Returns
     (id_a, id_b, cos_sim >= threshold).
     """
     sig = df.select(
@@ -503,11 +504,11 @@ def embedding_near_dup(
         # join, so each verified pair costs one dot product instead of
         # re-folding both norms (bit-identical rounded cosines)
         norm(F.col(vec_col)).alias("__nv"),
-        srp_signature(F.col(vec_col), dim, nbits).alias("bucket"),
+        srp_signature(F.col(vec_col), dim).alias("bucket"),
     )
     d = F.col("__nv_a") * F.col("__nv_b")
     pairs = (
-        _bucket_pairs(sig, ["bucket"], max_bucket, payload=("v", "__nv"))
+        _bucket_pairs(sig, ["bucket"], MAX_BUCKET, payload=("v", "__nv"))
         .select("id_a", "id_b",
                 F.round(
                     F.when(d > 0, dot(F.col("v_a"), F.col("v_b")) / d)

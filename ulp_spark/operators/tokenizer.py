@@ -6,12 +6,13 @@ this module APPLIES a finished vocabulary.
 
 Algorithm: greedy longest-match (WordPiece-style inference without the
 continuation-prefix convention): at each position take the longest
-vocabulary piece matching; if none matches, emit ``unk_id`` and advance
-one character.  This is NOT iterative BPE merge-rank application — for a
-merge list learned by vocab.bpe_top_merges the greedy result can differ
-from true BPE on adversarial vocabularies; greedy is what WordPiece/
-unigram runtimes ship for inference and is deterministic given the piece
-set, which is the property the oracle needs.
+vocabulary piece matching; if none matches, emit ``UNK_ID`` and advance
+one character.  Text is lowercased first.  This is NOT iterative BPE
+merge-rank application — for a merge list learned by
+vocab.bpe_top_merges the greedy result can differ from true BPE on
+adversarial vocabularies; greedy is what WordPiece/unigram runtimes ship
+for inference and is deterministic given the piece set, which is the
+property the oracle needs.
 
 Why a regex: the longest-match recurrence consumes a variable-length
 prefix per step, so each output token depends on where the previous match
@@ -44,17 +45,19 @@ from ulp_spark.functions.sqltext import ident, lit
 # (no COMMENTS flag); a backslash before any of them is that character.
 _REGEX_META = re.compile(r"([\\^$.|?*+()\[\]{}])")
 
+# The id a character no vocabulary piece covers becomes.
+UNK_ID = -1
+
 
 def tokenize(
     df: DataFrame, text_col: str, id_col: str, vocab: list[str],
-    unk_id: int = -1, lowercase: bool = True,
 ) -> DataFrame:
     """(id, tokens array<int>, n_tok) by greedy longest-match over
     ``vocab`` (piece i gets id i).  Null/empty text -> empty array.
 
     One projection: ``regexp_extract_all(lower(text), '(?s:<pieces
     longest-first>|.)', 0)``, each match mapped to its id through a
-    literal piece -> id map (``unk_id`` when absent).  Java alternation is
+    literal piece -> id map (``UNK_ID`` when absent).  Java alternation is
     leftmost-first, like Python ``re``, so trying longer pieces first at
     every position is the greedy rule; equal-length alternatives only
     both match when they are the same string, so their order is
@@ -88,21 +91,18 @@ def tokenize(
         raise ValueError("vocab has duplicate pieces")
     if "" in vocab:
         raise ValueError("vocab may not contain the empty string")
-    text = f"coalesce({ident(text_col)}, '')"
-    if lowercase:
-        text = f"lower({text})"
+    text = f"lower(coalesce({ident(text_col)}, ''))"
     alts = "|".join(_REGEX_META.sub(r"\\\1", p)
                     for p in sorted(vocab, key=len, reverse=True))
     ids = ", ".join(f"{lit(p)}, {i}" for i, p in enumerate(vocab))
     tokens = (f"transform(regexp_extract_all({text}, {lit(f'(?s:{alts}|.)')},"
-              f" 0), m -> coalesce(element_at(map({ids}), m), {int(unk_id)}))")
+              f" 0), m -> coalesce(element_at(map({ids}), m), {UNK_ID}))")
     return (df.selectExpr(ident(id_col), f"{tokens} AS tokens")
             .selectExpr(ident(id_col), "tokens", "size(tokens) AS n_tok"))
 
 
 def tokenize_sql(
     table: str, text_col: str, id_col: str, vocab: list[str],
-    unk_id: int = -1, lowercase: bool = True,
 ) -> str:
     """DuckDB twin: the greedy recurrence as a recursive CTE.  One
     recursion step consumes one token (longest piece matching at the
@@ -112,7 +112,7 @@ def tokenize_sql(
     # VALUES list with SQL escaping ('' for ')
     pieces = ", ".join(
         "({}, '{}')".format(i, p.replace("'", "''")) for i, p in enumerate(vocab))
-    text = f"lower({text_col})" if lowercase else text_col
+    text = f"lower({text_col})"
     return f"""
         WITH RECURSIVE v(tid, piece) AS (VALUES {pieces}),
         src AS (
@@ -123,7 +123,7 @@ def tokenize_sql(
           UNION ALL
           SELECT {id_col}, s,
                  pos + coalesce(m.len, 1),
-                 ids || [coalesce(m.tid, {unk_id})]
+                 ids || [coalesce(m.tid, {UNK_ID})]
           FROM step LEFT JOIN LATERAL (
             SELECT v.tid, length(v.piece) AS len FROM v
             WHERE substr(step.s, step.pos, length(v.piece)) = v.piece
@@ -138,10 +138,10 @@ def tokenize_sql(
 
 def detokenize(
     df: DataFrame, tokens_col: str, id_col: str, vocab: list[str],
-    unk_piece: str = "�",
 ) -> DataFrame:
     """(id, text): inverse of tokenize — concatenate each id's piece
-    (ids outside [0, len(vocab)) render as ``unk_piece``).  Lossless for
+    (ids outside [0, len(vocab)) render as U+FFFD, the replacement
+    character).  Lossless for
     ids produced by tokenize with the same vocab and no unks; pinned as
     the roundtrip property in pytest.
 
@@ -159,7 +159,7 @@ def detokenize(
         id_col, "pos",
         F.coalesce(
             F.when(F.col("pos").isNotNull(), F.coalesce(
-                F.col("piece"), F.lit(unk_piece))),
+                F.col("piece"), F.lit("\ufffd"))),
             F.lit("")).alias("piece"),
     )
     return (
@@ -179,7 +179,6 @@ def detokenize(
 def bpe_tokenize(
     df: DataFrame, text_col: str, id_col: str,
     merges: list[tuple[str, str]], vocab: list[str],
-    unk_id: int = -1, lowercase: bool = True,
 ) -> DataFrame:
     """(id, tokens array<int>, n_tok) by ITERATIVE merge-rank BPE — the
     faithful GPT-2/Llama-style apply, not greedy longest-match: start
@@ -187,16 +186,18 @@ def bpe_tokenize(
     LOWEST merge rank present and merge ALL its occurrences left-to-right
     (non-overlapping), until no adjacent pair is in the merge table;
     then map final symbols to ids via ``vocab`` (absent symbol ->
-    ``unk_id``).  ``tokenize``'s docstring concedes greedy can diverge
-    from this on adversarial vocabularies; the divergence is pinned as a
-    pytest case.  ``merges[i]`` has rank i — exactly the order
+    ``UNK_ID``).  Text is lowercased first (Python ``str.lower``).
+    ``tokenize``'s docstring concedes greedy can diverge from this on
+    adversarial vocabularies; the divergence is pinned as a pytest
+    case.  ``merges[i]`` has rank i — exactly the order
     ``vocab.bpe_top_merges`` emits (see ``merges_from_pairs``).
 
-    Scale shape: identical to ``tokenize`` — the merge recurrence is
-    variable-length and order-dependent (each step depends on the whole
-    current symbol sequence), so it is the same designed mapInPandas
-    path: ranks+vocab broadcast once per executor, Arrow batches, zero
-    shuffles, partitioning passed through.  Per-string cost is
+    Scale shape: the one mapInPandas path in this module (``tokenize``
+    is a JVM projection) — the merge recurrence is variable-length and
+    order-dependent (each step depends on the whole current symbol
+    sequence), which no regex alternation expresses: ranks+vocab
+    broadcast once per executor, Arrow batches, zero shuffles,
+    partitioning passed through.  Per-string cost is
     O(len^2) worst case (each merge pass scans the symbols; symbol count
     strictly decreases), in practice O(len * applied_merges).
     """
@@ -251,17 +252,12 @@ def bpe_tokenize(
                         out.append(word[i])
                         i += 1
                 word = out
-            return [v.get(sym, unk_id) for sym in word]
+            return [v.get(sym, UNK_ID) for sym in word]
 
         for pdf in batches:
             toks = []
             for s in pdf[text_col]:
-                if s is None:
-                    toks.append([])
-                    continue
-                if lowercase:
-                    s = s.lower()
-                toks.append(bpe(s))
+                toks.append([] if s is None else bpe(s.lower()))
             yield pd.DataFrame({
                 id_col: pdf[id_col],
                 "tokens": toks,
@@ -289,7 +285,6 @@ _SEP = "\x01"
 def bpe_tokenize_sql(
     table: str, text_col: str, id_col: str,
     merges: list[tuple[str, str]], vocab: list[str],
-    unk_id: int = -1, lowercase: bool = True,
 ) -> str:
     """DuckDB twin of ``bpe_tokenize`` as a recursive CTE.  One recursion
     step applies ONE full merge: symbols ride as a chr(1)-joined string,
@@ -313,7 +308,7 @@ def bpe_tokenize_sql(
         f"({i}, {q(l)}, {q(r)})" for i, (l, r) in enumerate(merges))
     vkeys = ", ".join(q(p) for p in vocab)
     vids = ", ".join(str(i) for i in range(len(vocab)))
-    text = f"lower({text_col})" if lowercase else text_col
+    text = f"lower({text_col})"
     # string_split('', SEP) yields [''], so empty text needs the guard
     return f"""
         WITH RECURSIVE m(rank, l, r) AS (VALUES {mrows}),
@@ -351,7 +346,7 @@ def bpe_tokenize_sql(
                    string_split(s, chr(1)),
                    sym -> coalesce(
                      map_extract(map([{vkeys}], [{vids}]), sym)[1],
-                     {unk_id})::INT)
+                     {UNK_ID})::INT)
                END AS tokens,
                CASE WHEN s = '' THEN 0 ELSE
                  len(string_split(s, chr(1))) END::INT AS n_tok
@@ -359,14 +354,13 @@ def bpe_tokenize_sql(
     """
 
 
-def fertility_stats(
-    docs: DataFrame, tok: DataFrame, text_col: str = "text",
-    id_col: str = "doc_id", source_col: str = "source", unk_id: int = -1,
-) -> DataFrame:
+def fertility_stats(docs: DataFrame, tok: DataFrame) -> DataFrame:
     """Tokenizer fertility report per source — the standard tokenizer-
     evaluation table (how many tokens the tokenizer spends per char /
     per word, and how much of the stream falls to UNK) computed over a
-    (docs, tokenized) pair, e.g. ``tokenize``/``bpe_tokenize`` output:
+    (docs, tokenized) pair joined on ``doc_id``: ``docs`` carries
+    ``text`` and ``source``, ``tok`` is ``tokenize``/``bpe_tokenize``
+    output:
 
     (source, n_docs, n_tokens, n_unk, n_chars, n_words,
      chars_per_token, tokens_per_word, unk_frac)
@@ -389,22 +383,22 @@ def fertility_stats(
     """
     from ulp_spark.operators.curation import word_tokens
 
-    txt = F.coalesce(F.col(text_col), F.lit(""))
+    txt = F.coalesce(F.col("text"), F.lit(""))
     d = docs.select(
-        F.col(id_col),
-        F.coalesce(F.col(source_col), F.lit("__null__")).alias("__src"),
+        F.col("doc_id"),
+        F.coalesce(F.col("source"), F.lit("__null__")).alias("__src"),
         F.length(txt).cast("bigint").alias("__chars"),
         F.size(word_tokens(txt)).cast("bigint").alias("__words"),
     )
     t = tok.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("n_tok").cast("bigint").alias("__ntok"),
         F.size(F.filter(F.col("tokens"),
-                        lambda x: x == F.lit(unk_id))).cast("bigint")
+                        lambda x: x == F.lit(UNK_ID))).cast("bigint")
         .alias("__nunk"),
     )
     g = (
-        d.join(t, id_col)
+        d.join(t, "doc_id")
         .groupBy(F.col("__src").alias("source"))
         .agg(F.count(F.lit(1)).alias("n_docs"),
              F.sum("__ntok").alias("n_tokens"),
@@ -429,26 +423,23 @@ def fertility_stats(
     )
 
 
-def fertility_stats_sql(
-    docs_table: str, tok_sql: str, text_col: str = "text",
-    id_col: str = "doc_id", source_col: str = "source", unk_id: int = -1,
-) -> str:
-    """DuckDB twin; ``tok_sql`` is a subquery yielding (id, tokens,
+def fertility_stats_sql(docs_table: str, tok_sql: str) -> str:
+    """DuckDB twin; ``tok_sql`` is a subquery yielding (doc_id, tokens,
     n_tok) — e.g. tokenize_sql(...)."""
     from ulp_spark.operators.curation import word_tokens_sql
 
-    txt = f"coalesce({text_col}, '')"
+    txt = "coalesce(text, '')"
     return f"""
         WITH d AS (
-          SELECT {id_col},
-                 coalesce({source_col}, '__null__') AS source,
+          SELECT doc_id,
+                 coalesce(source, '__null__') AS source,
                  length({txt})::BIGINT AS chars,
                  len({word_tokens_sql(txt)})::BIGINT AS words
           FROM {docs_table}
         ),
         t AS (
-          SELECT {id_col}, n_tok::BIGINT AS ntok,
-                 len(list_filter(tokens, x -> x = {unk_id}))::BIGINT AS nunk
+          SELECT doc_id, n_tok::BIGINT AS ntok,
+                 len(list_filter(tokens, x -> x = {UNK_ID}))::BIGINT AS nunk
           FROM ({tok_sql})
         ),
         g AS (
@@ -458,7 +449,7 @@ def fertility_stats_sql(
                  sum(t.nunk) AS n_unk,
                  sum(d.chars) AS n_chars,
                  sum(d.words) AS n_words
-          FROM d JOIN t USING ({id_col})
+          FROM d JOIN t USING (doc_id)
           GROUP BY d.source
         )
         SELECT source, n_docs::BIGINT AS n_docs,

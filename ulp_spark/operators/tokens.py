@@ -18,6 +18,13 @@ from pyspark.sql import functions as F
 from ulp_spark.session import seam
 
 GRAM = 8  # contamination n-gram length, in tokens
+MAX_PERIOD = 8  # longest repeating block the suffix detector tries
+VOCAB_SIZE = 50257  # V of the add-alpha token LMs (the fixtures' vocab)
+LM_ALPHA = 0.5  # add-alpha smoothing of the token LMs
+MIX_SEED = "mix0"  # md5 seed of apply_mixing_plan's tail draw
+# UL2 denoiser_mix mode tokens and its S-mode sentinel (outside the vocab)
+UL2_R_ID, UL2_X_ID, UL2_S_ID = 52000, 52001, 52002
+UL2_SENTINEL = 51000
 
 
 def token_fingerprint(tokens: Column) -> Column:
@@ -58,11 +65,14 @@ def sequence_exact_dedup_sql(table: str, tokens_col: str, id_col: str) -> str:
     """
 
 
-def token_grams(tokens: Column, k: int = GRAM) -> Column:
-    """md5 keys of all consecutive ``k``-token windows (empty if shorter).
+def token_grams(tokens: Column) -> Column:
+    """md5 keys of all consecutive ``GRAM``-token windows (empty if
+    shorter).
 
-    Hashing each window keeps the join key 16 bytes regardless of k and
-    sidesteps array-equality join keys on both engines."""
+    Hashing each window keeps the join key 16 bytes regardless of the
+    window length and sidesteps array-equality join keys on both
+    engines."""
+    k = GRAM
     n = F.size(tokens)
     # element_at instead of slice+transform (the word_grams allocation
     # win, r6): windows are full by the sequence bound, identical md5 keys
@@ -78,7 +88,8 @@ def token_grams(tokens: Column, k: int = GRAM) -> Column:
     return windows
 
 
-def token_grams_sql(tokens: str, k: int = GRAM) -> str:
+def token_grams_sql(tokens: str) -> str:
+    k = GRAM
     return (
         f"[md5(array_to_string({tokens}[j:j+{k - 1}], ',')) "
         f"FOR j IN range(1, greatest(len({tokens}) - {k - 1}, 0) + 1)]"
@@ -86,10 +97,9 @@ def token_grams_sql(tokens: str, k: int = GRAM) -> str:
 
 
 def token_contamination(
-    df: DataFrame, tokens_col: str, id_col: str,
-    eval_pred: Column, k: int = GRAM,
+    df: DataFrame, tokens_col: str, id_col: str, eval_pred: Column,
 ) -> DataFrame:
-    """Flag train sequences sharing any token ``k``-gram with the eval
+    """Flag train sequences sharing any token ``GRAM``-gram with the eval
     split — decontamination AFTER tokenization, where an n-gram is an
     exact token-id window rather than a whitespace heuristic.
 
@@ -98,7 +108,7 @@ def token_contamination(
     shuffled — one broadcast LEFT SEMI on the exploded grams, re-collapsed
     to one row per sequence.  Returns (id, is_contaminated) for TRAIN
     rows only."""
-    grams = token_grams(F.col(tokens_col), k)
+    grams = token_grams(F.col(tokens_col))
     sides = df.select(F.col(id_col), eval_pred.alias("is_eval"),
                       F.explode(grams).alias("gk"))
     eval_grams = sides.filter("is_eval").select("gk").distinct()
@@ -114,10 +124,9 @@ def token_contamination(
 
 
 def token_contamination_sql(
-    table: str, tokens_col: str, id_col: str,
-    eval_pred_sql: str, k: int = GRAM,
+    table: str, tokens_col: str, id_col: str, eval_pred_sql: str,
 ) -> str:
-    grams = token_grams_sql(tokens_col, k)
+    grams = token_grams_sql(tokens_col)
     return f"""
         WITH sides AS (
           SELECT {id_col}, ({eval_pred_sql}) AS is_eval,
@@ -136,9 +145,9 @@ def token_contamination_sql(
     """
 
 def duplicate_gram_coverage(
-    df: DataFrame, tokens_col: str, id_col: str, k: int = GRAM,
+    df: DataFrame, tokens_col: str, id_col: str,
 ) -> DataFrame:
-    """Per-sequence fraction of its distinct token ``k``-gram windows that
+    """Per-sequence fraction of its distinct token ``GRAM``-gram windows that
     also occur in at least one OTHER sequence — the ExactSubstr dedup
     signal (Lee et al. 2021, "Deduplicating Training Data Makes Language
     Models Better") at window granularity, on token ids.  Where
@@ -148,7 +157,7 @@ def duplicate_gram_coverage(
     so a curation pass can drop or de-weight high-coverage rows.
 
     Returns (id, n_grams, n_dup_grams, dup_frac) for every sequence with
-    at least one full window (rows shorter than ``k`` tokens have no
+    at least one full window (rows shorter than ``GRAM`` tokens have no
     windows and are omitted — same rule on both engines).
 
     Scale shape: explode to DISTINCT (id, gram-md5) pairs (map-side
@@ -161,7 +170,7 @@ def duplicate_gram_coverage(
     """
     pairs = (
         df.select(F.col(id_col),
-                  F.explode(token_grams(F.col(tokens_col), k)).alias("gk"))
+                  F.explode(token_grams(F.col(tokens_col))).alias("gk"))
         .distinct()
     )
     pairs = seam(pairs)  # feeds the census AND the per-doc rollup
@@ -182,10 +191,10 @@ def duplicate_gram_coverage(
 
 
 def duplicate_gram_coverage_sql(
-    table: str, tokens_col: str, id_col: str, k: int = GRAM,
+    table: str, tokens_col: str, id_col: str,
 ) -> str:
     """DuckDB twin: same distinct-pair -> census -> rollup derivation."""
-    grams = token_grams_sql(tokens_col, k)
+    grams = token_grams_sql(tokens_col)
     return f"""
         WITH pairs AS (
           SELECT DISTINCT {id_col}, gk FROM (
@@ -466,12 +475,13 @@ def balanced_writers(
         id_col, n_tok_col, writer.cast("int").alias("writer"))
 
 
-def writer_loads(assigned: DataFrame, n_tok_col: str = "n_tok") -> DataFrame:
-    """Per-writer load summary of a balanced_writers assignment:
-    (writer, n_seqs, n_tokens) — the skew report a 100-TB job watches."""
+def writer_loads(assigned: DataFrame) -> DataFrame:
+    """Per-writer load summary of a balanced_writers assignment over
+    ``n_tok``: (writer, n_seqs, n_tokens) — the skew report a 100-TB job
+    watches."""
     return assigned.groupBy("writer").agg(
         F.count(F.lit(1)).alias("n_seqs"),
-        F.sum(F.col(n_tok_col).cast("bigint")).alias("n_tokens"))
+        F.sum(F.col("n_tok").cast("bigint")).alias("n_tokens"))
 
 
 def balanced_writer_loads_sql(
@@ -724,11 +734,11 @@ def chunk_sequences_sql(
 
 def unigram_logprob_table(
     df: DataFrame, tokens_col: str = "tokens",
-    vocab_size: int = 50257, alpha: float = 0.5,
 ) -> DataFrame:
     """Additively-smoothed corpus unigram log-probs: one row per observed
     token id — (t, n_t, logp_micro) with logp_micro = round(ln((n_t +
-    alpha) / (N + alpha*V)) * 1e6) as BIGINT.  Micro-nat INTEGERS are the
+    alpha) / (N + alpha*V)) * 1e6) as BIGINT (alpha = ``LM_ALPHA``,
+    V = ``VOCAB_SIZE``).  Micro-nat INTEGERS are the
     cross-engine determinism move (classifier.py precedent): downstream
     sums of bigints are exact in any aggregation order, where summing
     raw doubles would drift by partition layout.
@@ -738,8 +748,6 @@ def unigram_logprob_table(
     corpus total comes from a second aggregate OVER THOSE COUNTS (vocab
     scale, never a rescan).
     """
-    if vocab_size < 1 or alpha <= 0:
-        raise ValueError("vocab_size must be >= 1 and alpha > 0")
     cnt = (
         df.select(F.explode(F.col(tokens_col)).alias("t"))
         .groupBy("t").agg(F.count(F.lit(1)).alias("n_t"))
@@ -751,12 +759,12 @@ def unigram_logprob_table(
     # build — an AQE localCheckpoint property shared by every seam here)
     tot = cnt.agg(F.coalesce(F.sum("n_t"), F.lit(0)).cast("double")
                   .alias("__n_all"))
-    denom = F.col("__n_all") + F.lit(alpha * vocab_size)
+    denom = F.col("__n_all") + F.lit(LM_ALPHA * VOCAB_SIZE)
     return (
         cnt.crossJoin(F.broadcast(tot))
         .select(
             "t", "n_t",
-            F.round(F.log((F.col("n_t") + F.lit(alpha)) / denom) * 1e6)
+            F.round(F.log((F.col("n_t") + F.lit(LM_ALPHA)) / denom) * 1e6)
             .cast("bigint").alias("logp_micro"),
         )
     )
@@ -764,8 +772,6 @@ def unigram_logprob_table(
 
 def sequence_unigram_scores(
     df: DataFrame, tokens_col: str = "tokens", id_col: str = "doc_id",
-    probs: DataFrame | None = None, vocab_size: int = 50257,
-    alpha: float = 0.5,
 ) -> DataFrame:
     """Per-sequence unigram cross-entropy — the CCNet-style perplexity
     quality signal expressed on token ids: (id, n_tok, logp_micro_sum,
@@ -773,12 +779,9 @@ def sequence_unigram_scores(
     stereotyped/repetitive token stream; high ce = rare-token soup —
     both tails are what a perplexity band-pass filter drops.
 
-    ``probs`` defaults to the corpus's own unigram table (self-scoring,
-    every token observed by construction); pass a frozen
-    unigram_logprob_table from a reference corpus to score new batches
-    against it — such a table must cover every token the batch emits
-    (a silent zero-cost for unseen tokens would corrupt the ranking, so
-    missing tokens raise instead).
+    The probabilities are the corpus's own unigram table
+    (self-scoring: every token is observed by construction, so the join
+    below is lossless).
 
     Scale shape: the explode keeps its partitioning; the vocab-scale
     probs side broadcast-joins (AQE), and the groupBy(id) partial-
@@ -786,23 +789,13 @@ def sequence_unigram_scores(
     only document-scale shuffle.  The bigint sum is the exact anchor;
     the one double division per row is IEEE-identical in any engine.
     """
-    p = probs if probs is not None else unigram_logprob_table(
-        df, tokens_col, vocab_size=vocab_size, alpha=alpha)
+    p = unigram_logprob_table(df, tokens_col)
     ex = df.select(F.col(id_col), F.explode(F.col(tokens_col)).alias("t"))
     joined = ex.join(F.broadcast(p.select("t", "logp_micro")), "t", "left")
     agg = joined.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_tok"),
-        F.sum("logp_micro").alias("logp_micro_sum"),
-        F.sum(F.col("logp_micro").isNull().cast("int")).alias("__miss"),
+        F.sum("logp_micro").cast("bigint").alias("logp_micro_sum"),
     )
-    # a frozen probs table that misses tokens would silently zero their
-    # cost; fail loudly instead (self-scoring never trips this)
-    agg = agg.withColumn(
-        "logp_micro_sum",
-        F.when(F.col("__miss") > 0,
-               F.raise_error(F.lit("sequence_unigram_scores: token absent "
-                                   "from probs table")))
-        .otherwise(F.col("logp_micro_sum")).cast("bigint"))
     return agg.select(
         id_col,
         F.col("n_tok").cast("int").alias("n_tok"),
@@ -814,7 +807,6 @@ def sequence_unigram_scores(
 
 def sequence_unigram_scores_sql(
     table: str, tokens_col: str = "tokens", id_col: str = "doc_id",
-    vocab_size: int = 50257, alpha: float = 0.5,
 ) -> str:
     """DuckDB twin of the SELF-SCORING form (probs derived from the same
     table, same micro-nat quantization)."""
@@ -825,8 +817,8 @@ def sequence_unigram_scores_sql(
         cnt AS (SELECT t, count(*) AS n_t FROM ex GROUP BY t),
         tot AS (SELECT sum(n_t)::DOUBLE AS n FROM cnt),
         lp AS (
-          SELECT t, CAST(round(ln((n_t + {alpha}) /
-                                  (tot.n + {alpha} * {vocab_size})) * 1e6)
+          SELECT t, CAST(round(ln((n_t + {LM_ALPHA}) /
+                                  (tot.n + {LM_ALPHA} * {VOCAB_SIZE})) * 1e6)
                          AS BIGINT) AS logp_micro
           FROM cnt CROSS JOIN tot
         )
@@ -842,11 +834,10 @@ def sequence_unigram_scores_sql(
 
 def repeated_suffix(
     df: DataFrame, tokens_col: str = "tokens", id_col: str = "doc_id",
-    max_period: int = 8,
 ) -> DataFrame:
     """Trailing-repetition detector on token ids — the degenerate-loop
     signal (model-generated or scraper-mangled text that ends in
-    `... A B A B A B`): for each period p <= max_period, measure the
+    `... A B A B A B`): for each period p <= MAX_PERIOD, measure the
     longest suffix L(p) where tokens[i] == tokens[i-p], and report the
     best period — (id, n_tok, period, n_copies, trim_tokens) with
     n_copies = floor(L/p) + 1 complete copies of the final p-block and
@@ -855,15 +846,13 @@ def repeated_suffix(
     trim_tokens resolve to the SMALLEST period (the fundamental one —
     `A A A A` is period 1, not 2).
 
-    Scale shape: pure per-row JVM expression work — max_period
-    O(n)-scans inside one codegen stage (max_period is a small constant),
+    Scale shape: pure per-row JVM expression work — MAX_PERIOD
+    O(n)-scans inside one codegen stage,
     no shuffle, no UDF; output co-partitions with the input.
     """
-    if max_period < 1:
-        raise ValueError("max_period must be >= 1")
     toks = F.col(tokens_col)
     n = F.size(toks)
-    best = _best_repeat(toks, max_period)
+    best = _best_repeat(toks)
     return df.select(
         F.col(id_col),
         n.cast("int").alias("n_tok"),
@@ -873,7 +862,7 @@ def repeated_suffix(
     )
 
 
-def _best_repeat(toks: Column, max_period: int) -> Column:
+def _best_repeat(toks: Column) -> Column:
     """Struct column (trim_tokens, neg_p, period, n_copies) for the best
     trailing repeat of ``toks`` — the shared core of the
     ``repeated_suffix`` detector and the ``trim_repeated_suffix``
@@ -906,18 +895,18 @@ def _best_repeat(toks: Column, max_period: int) -> Column:
             (F.floor(L / p) + 1).cast("int").alias("n_copies"))
 
     best = F.array_max(F.array(*[stats_for(p)
-                                 for p in range(1, max_period + 1)]))
+                                 for p in range(1, MAX_PERIOD + 1)]))
     none = F.struct(F.lit(0).cast("int").alias("trim_tokens"),
                     F.lit(0).alias("neg_p"), F.lit(0).alias("period"),
                     F.lit(1).cast("int").alias("n_copies"))
     return F.when(best["trim_tokens"] > 0, best).otherwise(none)
 
 
-def _best_repeat_sql(tokens_col: str, max_period: int) -> str:
+def _best_repeat_sql(tokens_col: str) -> str:
     """DuckDB expression for _best_repeat's struct (pre-fallback)."""
     n = f"len({tokens_col})"
     cands = []
-    for p in range(1, max_period + 1):
+    for p in range(1, MAX_PERIOD + 1):
         cmp = (f"[CASE WHEN {tokens_col}[{n} - i + 1] = "
                f"{tokens_col}[{n} - i + 1 - {p}] THEN 1 ELSE 0 END "
                f"FOR i IN range(1, greatest({n} - {p}, 0) + 1)]")
@@ -935,13 +924,12 @@ def _best_repeat_sql(tokens_col: str, max_period: int) -> str:
 
 def repeated_suffix_sql(
     table: str, tokens_col: str = "tokens", id_col: str = "doc_id",
-    max_period: int = 8,
 ) -> str:
     """DuckDB twin: same L(p) run-length via list_position of the first
     mismatch, same (trim desc, period asc) tie-break via a sorted struct
     list (struct comparison is field-order lexicographic in both
     engines)."""
-    best = _best_repeat_sql(tokens_col, max_period)
+    best = _best_repeat_sql(tokens_col)
     return f"""
         SELECT {id_col},
                CAST(len({tokens_col}) AS INT) AS n_tok,
@@ -957,10 +945,10 @@ def repeated_suffix_sql(
 
 def bigram_logprob_table(
     df: DataFrame, tokens_col: str = "tokens",
-    vocab_size: int = 50257, alpha: float = 0.5,
 ) -> DataFrame:
     """Smoothed conditional bigram log-probs: (t_prev, t, n_2, logp_micro)
-    with logp_micro = round(ln((n_2 + alpha) / (n_1 + alpha*V)) * 1e6) —
+    with logp_micro = round(ln((n_2 + alpha) / (n_1 + alpha*V)) * 1e6)
+    (alpha = ``LM_ALPHA``, V = ``VOCAB_SIZE``) —
     the same integer micro-nat quantization as the unigram table so every
     downstream sum is exact in any aggregation order.
 
@@ -971,8 +959,6 @@ def bigram_logprob_table(
     corpus-bounded (distinct bigrams), not vocab-bounded — the honest
     KenLM-shaped cost a conditional LM carries.
     """
-    if vocab_size < 1 or alpha <= 0:
-        raise ValueError("vocab_size must be >= 1 and alpha > 0")
     toks = F.col(tokens_col)
     n = F.size(toks)
     pairs = df.select(F.explode(F.when(
@@ -990,15 +976,14 @@ def bigram_logprob_table(
         cnt2.join(cnt1, "t_prev")
         .select(
             "t_prev", "t", "n_2",
-            F.round(F.log((F.col("n_2") + F.lit(alpha))
-                          / (F.col("n_1") + F.lit(alpha * vocab_size)))
+            F.round(F.log((F.col("n_2") + F.lit(LM_ALPHA))
+                          / (F.col("n_1") + F.lit(LM_ALPHA * VOCAB_SIZE)))
                     * 1e6).cast("bigint").alias("logp_micro"))
     )
 
 
 def sequence_bigram_scores(
     df: DataFrame, tokens_col: str = "tokens", id_col: str = "doc_id",
-    vocab_size: int = 50257, alpha: float = 0.5,
 ) -> DataFrame:
     """Per-sequence CONDITIONAL cross-entropy under the corpus's own
     smoothed bigram LM — the next step up from sequence_unigram_scores
@@ -1014,8 +999,7 @@ def sequence_bigram_scores(
     aggregates map-side.  Self-scoring means every probe bigram exists
     in the dim; the inner join is therefore lossless by construction.
     """
-    probs = bigram_logprob_table(df, tokens_col, vocab_size=vocab_size,
-                                 alpha=alpha)
+    probs = bigram_logprob_table(df, tokens_col)
     toks = F.col(tokens_col)
     n = F.size(toks)
     ex = df.select(
@@ -1042,7 +1026,6 @@ def sequence_bigram_scores(
 
 def sequence_bigram_scores_sql(
     table: str, tokens_col: str = "tokens", id_col: str = "doc_id",
-    vocab_size: int = 50257, alpha: float = 0.5,
 ) -> str:
     """DuckDB twin of the self-scoring form (same micro-nat quantization,
     same n>=2 omission rule)."""
@@ -1057,8 +1040,8 @@ def sequence_bigram_scores_sql(
         cnt1 AS (SELECT t_prev, sum(n_2) AS n_1 FROM cnt2 GROUP BY t_prev),
         lp AS (
           SELECT cnt2.t_prev, cnt2.t,
-                 CAST(round(ln((cnt2.n_2 + {alpha})
-                               / (cnt1.n_1 + {alpha * vocab_size})) * 1e6)
+                 CAST(round(ln((cnt2.n_2 + {LM_ALPHA})
+                               / (cnt1.n_1 + {LM_ALPHA * VOCAB_SIZE})) * 1e6)
                       AS BIGINT) AS logp_micro
           FROM cnt2 JOIN cnt1 USING (t_prev)
         )
@@ -1076,19 +1059,19 @@ def sequence_bigram_scores_sql(
 # --------------------------------------------------------------------------
 
 def remove_duplicate_spans(
-    df: DataFrame, tokens_col: str, id_col: str, k: int = GRAM,
+    df: DataFrame, tokens_col: str, id_col: str,
 ) -> DataFrame:
     """Remove cross- and within-corpus duplicated token spans, keeping one
     occurrence — the ExactSubstr *rewrite* (Lee et al. 2021 remove all but
-    one occurrence of any duplicated >=k-token substring; their suffix
-    array becomes a distributed k-token-window census here).  Where
+    one occurrence of any duplicated >=GRAM-token substring; their suffix
+    array becomes a distributed GRAM-token-window census here).  Where
     ``duplicate_gram_coverage`` only SCORES partial duplication, this
     rewrites the sequences: every token covered by a duplicated window
     occurrence that is not that window's designated keeper is dropped,
     and the array is rebuilt from the survivors.
 
     Keeper rule (deterministic at any partitioning, portable to the
-    DuckDB twin): for each duplicated k-gram the occurrence with the
+    DuckDB twin): for each duplicated GRAM-gram the occurrence with the
     lexicographically smallest ``id || \\x01 || zero-padded(pos)`` key
     keeps its tokens; every other occurrence of that gram is a duplicate
     span.  A token survives iff NO duplicate occurrence covers its
@@ -1098,13 +1081,13 @@ def remove_duplicate_spans(
 
     Returns every input row as
     ``(id, n_tok_clean, n_removed, tokens_clean)`` — rows shorter than
-    ``k`` have no windows and pass through unchanged.
+    ``GRAM`` have no windows and pass through unchanged.
 
     Scale shape: posexplode to (id, pos, gram-md5) occurrences, seamed
     ONCE to feed both the gram census (count + min-key aggregate on the
     16-byte key) and the probe side; the join back is key-only (AQE
     broadcasts the census when it fits, skew-splits otherwise).  Dup
-    occurrences explode to at most k removed positions each, collapse to
+    occurrences explode to at most GRAM removed positions each, collapse to
     a per-doc sorted position list, and ONLY docs with duplicates carry a
     row into the final left join — token arrays move once, in that join,
     and never through the census.  No posting lists, no pair
@@ -1113,7 +1096,7 @@ def remove_duplicate_spans(
     pos, gk, okey = "__pos", "__gk", "__okey"
     occ = (
         df.select(F.col(id_col),
-                  F.posexplode(token_grams(F.col(tokens_col), k))
+                  F.posexplode(token_grams(F.col(tokens_col)))
                   .alias(pos, gk))
     )
     occ = seam(occ)  # feeds the census AND the probe side
@@ -1129,7 +1112,7 @@ def remove_duplicate_spans(
                                F.lpad(F.col(pos).cast("string"), 12, "0"))
                    != F.col("__keeper")))
         .select(F.col(id_col),
-                F.explode(F.sequence(F.col(pos), F.col(pos) + (k - 1)))
+                F.explode(F.sequence(F.col(pos), F.col(pos) + (GRAM - 1)))
                 .alias("__rp"))
         .distinct()
         .groupBy(id_col)
@@ -1151,10 +1134,10 @@ def remove_duplicate_spans(
 
 
 def remove_duplicate_spans_sql(
-    table: str, tokens_col: str, id_col: str, k: int = GRAM,
+    table: str, tokens_col: str, id_col: str,
 ) -> str:
     """DuckDB twin: same occurrence census, keeper rule, and rebuild."""
-    grams = token_grams_sql(tokens_col, k)
+    grams = token_grams_sql(tokens_col)
     return f"""
         WITH occ AS (
           SELECT {id_col}, u.pos, u.gk,
@@ -1173,7 +1156,7 @@ def remove_duplicate_spans_sql(
         removed AS (
           SELECT {id_col}, list_sort(list(DISTINCT rp)) AS removed_pos
           FROM (
-            SELECT {id_col}, unnest(range(pos, pos + {k})) AS rp
+            SELECT {id_col}, unnest(range(pos, pos + {GRAM})) AS rp
             FROM occ JOIN census USING (gk)
             WHERE n_occ > 1 AND okey != keeper)
           GROUP BY {id_col}
@@ -1194,7 +1177,6 @@ def remove_duplicate_spans_sql(
 
 def trim_repeated_suffix(
     df: DataFrame, tokens_col: str = "tokens", id_col: str = "doc_id",
-    max_period: int = 8,
 ) -> DataFrame:
     """The REWRITE behind the ``repeated_suffix`` detector: drop the
     redundant trailing copies of the best repeating block (keeping
@@ -1211,11 +1193,9 @@ def trim_repeated_suffix(
     work in one codegen stage, no shuffle, no UDF; output co-partitions
     with the input.
     """
-    if max_period < 1:
-        raise ValueError("max_period must be >= 1")
     toks = F.col(tokens_col)
     n = F.size(toks)
-    best = _best_repeat(toks, max_period)
+    best = _best_repeat(toks)
     keep = n - best["trim_tokens"]
     return df.select(
         F.col(id_col),
@@ -1228,10 +1208,9 @@ def trim_repeated_suffix(
 
 def trim_repeated_suffix_sql(
     table: str, tokens_col: str = "tokens", id_col: str = "doc_id",
-    max_period: int = 8,
 ) -> str:
     """DuckDB twin: same best-repeat struct, slice keeps n - trim."""
-    best = _best_repeat_sql(tokens_col, max_period)
+    best = _best_repeat_sql(tokens_col)
     return f"""
         SELECT {id_col},
                {tokens_col}[1 : len({tokens_col}) -
@@ -1475,16 +1454,15 @@ def cross_source_dup_matrix_sql(
 
 
 def contamination_coverage(
-    df: DataFrame, tokens_col: str, id_col: str,
-    eval_pred: Column, k: int = GRAM,
+    df: DataFrame, tokens_col: str, id_col: str, eval_pred: Column,
 ) -> DataFrame:
     """Graded decontamination (the Llama-3 'dirty fraction' form): for
-    each TRAIN sequence, the fraction of its k-token windows that appear
+    each TRAIN sequence, the fraction of its GRAM-token windows that appear
     anywhere in the eval split — so callers threshold (e.g. drop > 0.8,
     keep < 0.1, audit between) instead of the binary any-hit flag
     token_contamination gives.
 
-    Rows shorter than k have no windows; they report n_windows = 0 and
+    Rows shorter than GRAM have no windows; they report n_windows = 0 and
     contamination_frac = 0.0 (nothing to leak).
 
     Scale shape: identical to token_contamination — eval gram keys are
@@ -1492,7 +1470,7 @@ def contamination_coverage(
     partitioning through explode -> broadcast-mark -> groupBy(id) with
     map-side combine.  One corpus-scale shuffle (the per-id collapse).
     """
-    grams = token_grams(F.col(tokens_col), k)
+    grams = token_grams(F.col(tokens_col))
     sides = df.select(F.col(id_col), eval_pred.alias("is_eval"),
                       F.explode(grams).alias("gk"))
     eval_grams = sides.filter("is_eval").select("gk").distinct()
@@ -1520,10 +1498,9 @@ def contamination_coverage(
 
 
 def contamination_coverage_sql(
-    table: str, tokens_col: str, id_col: str,
-    eval_pred_sql: str, k: int = GRAM,
+    table: str, tokens_col: str, id_col: str, eval_pred_sql: str,
 ) -> str:
-    grams = token_grams_sql(tokens_col, k)
+    grams = token_grams_sql(tokens_col)
     return f"""
         WITH sides AS (
           SELECT {id_col}, ({eval_pred_sql}) AS is_eval,
@@ -1627,13 +1604,14 @@ def vocab_growth_sql(
     """
 
 
-def token_shingle_hashes(tokens: Column, k: int = GRAM) -> Column:
-    """Distinct sorted 32-bit hashes of the k-token windows — the token-id
+def token_shingle_hashes(tokens: Column) -> Column:
+    """Distinct sorted 32-bit hashes of the GRAM-token windows — the token-id
     analog of dedup.shingle_hashes (same md5-fold, same int64 range), so
     the MinHash machinery applies unchanged to pre-tokenized sequences.
-    Rows shorter than k yield an empty array."""
+    Rows shorter than GRAM yield an empty array."""
     from ulp_spark.operators.dedup import _md5_bigint
 
+    k = GRAM
     n = F.size(tokens)
     # element_at instead of slice+transform (the word_grams allocation
     # win, r6): every window is full by the sequence bound, so the CSV
@@ -1651,7 +1629,8 @@ def token_shingle_hashes(tokens: Column, k: int = GRAM) -> Column:
         F.transform(csvs, lambda c: _md5_bigint(c))))
 
 
-def token_shingle_hashes_sql(tokens: str, k: int = GRAM) -> str:
+def token_shingle_hashes_sql(tokens: str) -> str:
+    k = GRAM
     return (
         f"list_sort(list_distinct([CAST(('0x' || substr(md5("
         f"array_to_string({tokens}[j:j+{k - 1}], ',')), 1, 8)) AS BIGINT) "
@@ -1661,16 +1640,15 @@ def token_shingle_hashes_sql(tokens: str, k: int = GRAM) -> str:
 
 def sequence_minhash_candidates(
     df: DataFrame, tokens_col: str = "tokens", id_col: str = "doc_id",
-    k: int = GRAM, max_bucket: int = 1000,
 ) -> DataFrame:
     """NEAR-duplicate sequence candidates on TOKEN IDS — MinHash+LSH over
-    k-token windows, closing the gap between sequence_exact_dedup
+    GRAM-token windows, closing the gap between sequence_exact_dedup
     (bitwise only) and the text-side near-dup stack (pre-tokenization
     only).  A sequence re-tokenized after a small edit, or truncated a
     few tokens differently, shares almost all its windows and lands in
     the same band buckets.
 
-    Sequences shorter than k have NO windows and are excluded up front —
+    Sequences shorter than GRAM have NO windows and are excluded up front —
     an empty shingle set carries no content evidence, and keeping the
     text-side sentinel signature here would weld every short sequence
     into one giant all-pairs bucket.
@@ -1682,22 +1660,20 @@ def sequence_minhash_candidates(
     from ulp_spark.operators.dedup import minhash_candidates_from_hashes
 
     toks = F.col(tokens_col)
-    eligible = df.filter(F.size(toks) >= k)
+    eligible = df.filter(F.size(toks) >= GRAM)
     return minhash_candidates_from_hashes(
-        eligible, token_shingle_hashes(toks, k), id_col, max_bucket)
+        eligible, token_shingle_hashes(toks), id_col)
 
 
 def sequence_minhash_candidates_sql(
     table: str, tokens_col: str = "tokens", id_col: str = "doc_id",
-    k: int = GRAM, max_bucket: int = 1000,
 ) -> str:
     from ulp_spark.operators.dedup import minhash_candidates_from_hashes_sql
 
     eligible = (f"(SELECT * FROM {table} "
-                f"WHERE len({tokens_col}) >= {k})")
+                f"WHERE len({tokens_col}) >= {GRAM})")
     return minhash_candidates_from_hashes_sql(
-        eligible, token_shingle_hashes_sql(tokens_col, k), id_col,
-        max_bucket)
+        eligible, token_shingle_hashes_sql(tokens_col), id_col)
 
 
 _CURR_OFFSET = 10 ** 18  # shifts any plausible integer score non-negative
@@ -1705,10 +1681,9 @@ _CURR_OFFSET = 10 ** 18  # shifts any plausible integer score non-negative
 
 def curriculum_stages(
     df: DataFrame, score_col: str, id_col: str, n_stages: int,
-    ascending: bool = True,
 ) -> DataFrame:
     """Curriculum assignment: global rank by an INTEGER difficulty score
-    (easy-first when ``ascending``) and an equal-width stage index in
+    (ascending: easy-first) and an equal-width stage index in
     [0, n_stages) — the ordered-training complement of epoch_order's
     keyed shuffle.  Stage boundaries are exact (stage = rank*n//total),
     so stage populations differ by at most one row.
@@ -1730,7 +1705,7 @@ def curriculum_stages(
     if n_stages < 1:
         raise ValueError("n_stages must be >= 1")
     s = F.col(score_col).cast("bigint")
-    keyval = (s if ascending else -s) + F.lit(_CURR_OFFSET)
+    keyval = s + F.lit(_CURR_OFFSET)
     guarded = F.when(
         (keyval >= 0) & (keyval < 2 * _CURR_OFFSET), keyval
     ).otherwise(F.raise_error(F.lit(
@@ -1754,10 +1729,8 @@ def curriculum_stages(
 
 def curriculum_stages_sql(
     table: str, score_col: str, id_col: str, n_stages: int,
-    ascending: bool = True,
 ) -> str:
-    sign = "" if ascending else "-"
-    key = (f"printf('%020d|%s', {sign}{score_col}::BIGINT "
+    key = (f"printf('%020d|%s', {score_col}::BIGINT "
            f"+ {_CURR_OFFSET}, {id_col}::VARCHAR)")
     return f"""
         WITH r AS (
@@ -1777,14 +1750,15 @@ def curriculum_stages_sql(
 def apply_mixing_plan(
     df: DataFrame, n_tok_col: str = "n_tok", source_col: str = "source",
     id_col: str = "doc_id", alpha: float = 0.5,
-    budget: int = 1_000_000_000, seed: str = "mix0",
+    budget: int = 1_000_000_000,
 ) -> DataFrame:
     """EXECUTE source_mixing_plan (the learn->apply move, same as
     BPE train->tokenize): materialize the mixed-epoch membership —
     (id, source, epoch_copy, is_tail), one row per pass each sequence
     takes in the temperature-mixed training epoch.  Copies 0..n_epochs-1
     are unconditional; the fractional tail admits copy n_epochs iff a
-    deterministic md5 uniform (sampling._uniform01 — 52-bit, exactly
+    deterministic md5 uniform (sampling._uniform01 seeded with
+    ``MIX_SEED`` — 52-bit, exactly
     representable, partition-invariant) falls under the plan's
     tail_frac.  NULL sources bucket as '__null__' BEFORE the join —
     the same coalesce the plan itself applies — so the budget share the
@@ -1810,7 +1784,7 @@ def apply_mixing_plan(
             F.col("source").alias(source_col), "n_epochs", "tail_frac")),
         source_col)
     n_copies = (F.col("n_epochs")
-                + F.when(_uniform01(F.col(id_col), seed)
+                + F.when(_uniform01(F.col(id_col), MIX_SEED)
                          < F.col("tail_frac"), 1).otherwise(0))
     copies = F.when(
         n_copies >= 1, F.sequence(F.lit(0).cast("bigint"), n_copies - 1)
@@ -1832,13 +1806,13 @@ def apply_mixing_plan(
 def apply_mixing_plan_sql(
     table: str, n_tok_col: str = "n_tok", source_col: str = "source",
     id_col: str = "doc_id", alpha: float = 0.5,
-    budget: int = 1_000_000_000, seed: str = "mix0",
+    budget: int = 1_000_000_000,
 ) -> str:
     from ulp_spark.operators.sampling import _uniform01_sql
 
     plan = source_mixing_plan_sql(table, n_tok_col, source_col,
                                   alpha=alpha, budget=budget)
-    u = _uniform01_sql(f"t.{id_col}", seed)
+    u = _uniform01_sql(f"t.{id_col}", MIX_SEED)
     return f"""
         WITH plan AS ({plan}),
         j AS (
@@ -1859,11 +1833,10 @@ def apply_mixing_plan_sql(
 
 def sequence_dedup_groups(
     df: DataFrame, tokens_col: str = "tokens", id_col: str = "doc_id",
-    k: int = GRAM, threshold: float = 0.8, max_bucket: int = 1000,
 ) -> DataFrame:
     """Token-level near-dup CLUSTERS — the full three-stage pipeline:
     MinHash+LSH candidates -> EXACT window-set Jaccard verification
-    (>= threshold; kills the band-collision false positives the
+    (>= dedup.JACCARD_MIN; kills the band-collision false positives the
     candidate stage tolerates by design) -> connected components
     (comp_id = canonical min id).  Keep comp_id == id for the dedup.
 
@@ -1875,22 +1848,22 @@ def sequence_dedup_groups(
     runs on verified edges at O(log diameter) rounds.
     """
     from ulp_spark.operators.dedup import (
-        connected_components, jaccard_distinct, minhash_candidates_from_hashes)
+        JACCARD_MIN, connected_components, jaccard_distinct,
+        minhash_candidates_from_hashes)
 
     toks = F.col(tokens_col)
     h = (
-        df.filter(F.size(toks) >= k)
+        df.filter(F.size(toks) >= GRAM)
         .select(F.col(id_col).alias("__sid"),
-                token_shingle_hashes(toks, k).alias("__sh"))
+                token_shingle_hashes(toks).alias("__sh"))
     )
     h = seam(h)
-    pairs = minhash_candidates_from_hashes(
-        h, F.col("__sh"), "__sid", max_bucket)
+    pairs = minhash_candidates_from_hashes(h, F.col("__sh"), "__sid")
     a = h.select(F.col("__sid").alias("id_a"), F.col("__sh").alias("sh_a"))
     b = h.select(F.col("__sid").alias("id_b"), F.col("__sh").alias("sh_b"))
     verified = (
         pairs.join(a, "id_a").join(b, "id_b")
-        .filter(jaccard_distinct(F.col("sh_a"), F.col("sh_b")) >= threshold)
+        .filter(jaccard_distinct(F.col("sh_a"), F.col("sh_b")) >= JACCARD_MIN)
         .select("id_a", "id_b")
     )
     cc = connected_components(verified)
@@ -1899,15 +1872,14 @@ def sequence_dedup_groups(
 
 def sequence_dedup_groups_sql(
     table: str, tokens_col: str = "tokens", id_col: str = "doc_id",
-    k: int = GRAM, threshold: float = 0.8, max_bucket: int = 1000,
 ) -> str:
-    from ulp_spark.operators.dedup import connected_components_sql
+    from ulp_spark.operators.dedup import (
+        JACCARD_MIN, connected_components_sql)
 
-    cand = sequence_minhash_candidates_sql(
-        table, tokens_col, id_col, k, max_bucket)
+    cand = sequence_minhash_candidates_sql(table, tokens_col, id_col)
     sh = (f"SELECT {id_col} AS vid, "
-          f"{token_shingle_hashes_sql(tokens_col, k)} AS sh "
-          f"FROM {table} WHERE len({tokens_col}) >= {k}")
+          f"{token_shingle_hashes_sql(tokens_col)} AS sh "
+          f"FROM {table} WHERE len({tokens_col}) >= {GRAM}")
     verified = f"""
         SELECT p.id_a, p.id_b FROM ({cand}) p
         JOIN ({sh}) a ON p.id_a = a.vid
@@ -1915,7 +1887,7 @@ def sequence_dedup_groups_sql(
         WHERE (CASE WHEN len(list_distinct(a.sh || b.sh)) > 0
                     THEN len(list_intersect(a.sh, b.sh))::DOUBLE
                          / len(list_distinct(a.sh || b.sh))
-                    ELSE 0.0 END) >= {threshold}
+                    ELSE 0.0 END) >= {JACCARD_MIN}
     """
     return connected_components_sql(verified, id_alias=id_col)
 
@@ -1923,7 +1895,7 @@ def sequence_dedup_groups_sql(
 def fim_transform(
     df: DataFrame, tokens_col: str = "tokens", id_col: str = "doc_id",
     rate: float = 0.5, pre_id: int = 50281, mid_id: int = 50282,
-    suf_id: int = 50283, seed: str = "fim0",
+    suf_id: int = 50283,
 ) -> DataFrame:
     """Fill-in-the-middle rewrite (Bavarian et al. 2022, the
     StarCoder/code-Llama data transform), PSM layout: with probability
@@ -1933,7 +1905,7 @@ def fim_transform(
     contract, as in the paper).
 
     Determinism: the apply coin and both split points come from
-    sampling._uniform01's 52-bit md5 uniforms keyed on (seed, id) —
+    sampling._uniform01's 52-bit md5 uniforms keyed on ("fim0", id) —
     partition-invariant, identical in the DuckDB twin, reproducible
     across runs (the property a resumable 10^12-row preprocessing job
     needs; rand() would re-deal on every retry).
@@ -1952,9 +1924,9 @@ def fim_transform(
     toks = F.col(tokens_col)
     idc = F.col(id_col)
     n = F.size(toks)
-    u_apply = _uniform01(idc, f"{seed}:apply")
-    ua = _uniform01(idc, f"{seed}:a")
-    ub = _uniform01(idc, f"{seed}:b")
+    u_apply = _uniform01(idc, "fim0:apply")
+    ua = _uniform01(idc, "fim0:a")
+    ub = _uniform01(idc, "fim0:b")
     i = F.floor(F.least(ua, ub) * (n + 1)).cast("int")
     j = F.floor(F.greatest(ua, ub) * (n + 1)).cast("int")
     prefix = F.slice(toks, 1, i)
@@ -1979,13 +1951,13 @@ def fim_transform(
 def fim_transform_sql(
     table: str, tokens_col: str = "tokens", id_col: str = "doc_id",
     rate: float = 0.5, pre_id: int = 50281, mid_id: int = 50282,
-    suf_id: int = 50283, seed: str = "fim0",
+    suf_id: int = 50283,
 ) -> str:
     from ulp_spark.operators.sampling import _uniform01_sql
 
-    ua = _uniform01_sql(id_col, f"{seed}:a")
-    ub = _uniform01_sql(id_col, f"{seed}:b")
-    u_apply = _uniform01_sql(id_col, f"{seed}:apply")
+    ua = _uniform01_sql(id_col, "fim0:a")
+    ub = _uniform01_sql(id_col, "fim0:b")
+    u_apply = _uniform01_sql(id_col, "fim0:apply")
     return f"""
         WITH s AS (
           SELECT {id_col}, {tokens_col} AS t, len({tokens_col}) AS n,
@@ -2156,12 +2128,11 @@ def span_corruption_sql(
     """
 
 
-def source_js_divergence(
-    df: DataFrame, tokens_col: str = "tokens", source_col: str = "source",
-) -> DataFrame:
+def source_js_divergence(df: DataFrame) -> DataFrame:
     """Pairwise Jensen-Shannon divergence between per-source token
-    unigram distributions — the mixture-design complement of
-    source_token_drift (each source vs the corpus) and
+    unigram distributions over a (tokens, source) table — the
+    mixture-design complement of source_token_drift (each source vs the
+    corpus) and
     cross_source_dup_matrix (shared exact sequences): JS answers "how
     far apart are two sources' token distributions", the quantity
     mixture/temperature tuning and duplicate-domain detection read.
@@ -2188,9 +2159,9 @@ def source_js_divergence(
     scale with multiplicity |S| per row, the pair frame is |S|^2
     broadcast.  Token payloads never move.
     """
-    src = F.coalesce(F.col(source_col), F.lit("__null__"))
+    src = F.coalesce(F.col("source"), F.lit("__null__"))
     st = (
-        df.select(src.alias("source"), F.explode(F.col(tokens_col)).alias("t"))
+        df.select(src.alias("source"), F.explode(F.col("tokens")).alias("t"))
         .groupBy("source", "t").agg(F.count(F.lit(1)).alias("c"))
     )
     st = seam(st)  # feeds totals AND both sides of the pair join
@@ -2258,13 +2229,11 @@ def source_js_divergence(
     )
 
 
-def source_js_divergence_sql(
-    table: str, tokens_col: str = "tokens", source_col: str = "source",
-) -> str:
+def source_js_divergence_sql(table: str) -> str:
     return f"""
         WITH st AS (
-          SELECT coalesce({source_col}, '__null__') AS source,
-                 unnest({tokens_col}) AS t
+          SELECT coalesce(source, '__null__') AS source,
+                 unnest(tokens) AS t
           FROM {table}
         ),
         cnt AS (
@@ -2318,8 +2287,6 @@ def source_js_divergence_sql(
 
 def denoiser_mix(
     df: DataFrame, tokens_col: str = "tokens", id_col: str = "doc_id",
-    r_id: int = 52000, x_id: int = 52001, s_id: int = 52002,
-    sentinel_base: int = 51000, seed: str = "ul2",
 ) -> DataFrame:
     """UL2 mixture-of-denoisers rewrite (Tay et al. 2022): each sequence
     is deterministically routed to ONE of three denoising objectives and
@@ -2327,15 +2294,15 @@ def denoiser_mix(
     inputs stream:
 
     * R-denoiser (regular): span_corruption at rate 0.15, 3-token spans
-      — the T5 objective; mode token ``r_id``.
+      — the T5 objective; mode token ``UL2_R_ID``.
     * X-denoiser (extreme): span_corruption at rate 0.5, 12-token spans;
-      mode token ``x_id``.
+      mode token ``UL2_X_ID``.
     * S-denoiser (sequential / prefix-LM): a deterministic split point j
-      in [0, n]; inputs = [s_id] + tokens[..j] + [sentinel], targets =
-      [sentinel] + tokens[j+1..]; mode token ``s_id``.
+      in [0, n]; inputs = [UL2_S_ID] + tokens[..j] + [UL2_SENTINEL],
+      targets = [UL2_SENTINEL] + tokens[j+1..]; mode token ``UL2_S_ID``.
 
     Mode choice and the S split point ride the same 52-bit md5 uniforms
-    as every rewrite here (keyed (seed, id)) — partition-invariant,
+    as every rewrite here (keyed ("ul2", id)) — partition-invariant,
     retry-stable, identical in the DuckDB twin.  Mode and sentinel ids
     must sit outside the corpus vocabulary (caller's contract).
 
@@ -2351,7 +2318,7 @@ def denoiser_mix(
     from ulp_spark.operators.sampling import _uniform01
 
     idc = F.col(id_col)
-    u_mode = _uniform01(idc, f"{seed}:mode")
+    u_mode = _uniform01(idc, "ul2:mode")
     third = F.lit(1.0) / F.lit(3.0)
 
     def with_mode(frame: DataFrame, mode: str, mode_id: int) -> DataFrame:
@@ -2367,20 +2334,20 @@ def denoiser_mix(
 
     r_out = with_mode(
         span_corruption(r_in, tokens_col, id_col, rate=0.15, span_len=3,
-                        sentinel_base=sentinel_base, seed=f"{seed}:R"),
-        "R", r_id)
+                        sentinel_base=UL2_SENTINEL, seed="ul2:R"),
+        "R", UL2_R_ID)
     x_out = with_mode(
         span_corruption(x_in, tokens_col, id_col, rate=0.5, span_len=12,
-                        sentinel_base=sentinel_base, seed=f"{seed}:X"),
-        "X", x_id)
+                        sentinel_base=UL2_SENTINEL, seed="ul2:X"),
+        "X", UL2_X_ID)
 
     toks = F.col(tokens_col)
     n = F.size(toks)
-    j = F.floor(_uniform01(idc, f"{seed}:split") * (n + 1)).cast("int")
-    sent = F.lit(sentinel_base).cast("int")
+    j = F.floor(_uniform01(idc, "ul2:split") * (n + 1)).cast("int")
+    sent = F.lit(UL2_SENTINEL).cast("int")
     s_out = s_in.select(
         idc, F.lit("S").alias("mode"),
-        F.concat(F.array(F.lit(s_id).cast("int")), F.slice(toks, 1, j),
+        F.concat(F.array(F.lit(UL2_S_ID).cast("int")), F.slice(toks, 1, j),
                  F.array(sent)).alias("inputs"),
         F.concat(F.array(sent),
                  F.when(n - j > 0, F.slice(toks, j + 1, n - j))
@@ -2392,37 +2359,35 @@ def denoiser_mix(
 
 def denoiser_mix_sql(
     table: str, tokens_col: str = "tokens", id_col: str = "doc_id",
-    r_id: int = 52000, x_id: int = 52001, s_id: int = 52002,
-    sentinel_base: int = 51000, seed: str = "ul2",
 ) -> str:
     from ulp_spark.operators.sampling import _uniform01_sql
 
-    u_mode = _uniform01_sql(id_col, f"{seed}:mode")
-    u_split = _uniform01_sql(id_col, f"{seed}:split")
+    u_mode = _uniform01_sql(id_col, "ul2:mode")
+    u_split = _uniform01_sql(id_col, "ul2:split")
     r_sql = span_corruption_sql(
         f"(SELECT * FROM {table} WHERE ({u_mode}) < 1.0/3.0)",
         tokens_col, id_col, rate=0.15, span_len=3,
-        sentinel_base=sentinel_base, seed=f"{seed}:R")
+        sentinel_base=UL2_SENTINEL, seed="ul2:R")
     x_sql = span_corruption_sql(
         f"(SELECT * FROM {table} WHERE ({u_mode}) >= 1.0/3.0 "
         f"AND ({u_mode}) < (1.0/3.0) * 2)",
         tokens_col, id_col, rate=0.5, span_len=12,
-        sentinel_base=sentinel_base, seed=f"{seed}:X")
+        sentinel_base=UL2_SENTINEL, seed="ul2:X")
     return f"""
         SELECT {id_col}, 'R' AS mode,
-               [CAST({r_id} AS INTEGER)] || inputs AS inputs,
+               [CAST({UL2_R_ID} AS INTEGER)] || inputs AS inputs,
                targets, n_spans
         FROM ({r_sql})
         UNION ALL
         SELECT {id_col}, 'X' AS mode,
-               [CAST({x_id} AS INTEGER)] || inputs AS inputs,
+               [CAST({UL2_X_ID} AS INTEGER)] || inputs AS inputs,
                targets, n_spans
         FROM ({x_sql})
         UNION ALL
         SELECT {id_col}, 'S' AS mode,
-               [CAST({s_id} AS INTEGER)] || t[1:j]
-                 || [CAST({sentinel_base} AS INTEGER)] AS inputs,
-               [CAST({sentinel_base} AS INTEGER)]
+               [CAST({UL2_S_ID} AS INTEGER)] || t[1:j]
+                 || [CAST({UL2_SENTINEL} AS INTEGER)] AS inputs,
+               [CAST({UL2_SENTINEL} AS INTEGER)]
                  || (CASE WHEN n - j > 0 THEN t[j+1:n]
                      ELSE CAST([] AS INTEGER[]) END) AS targets,
                1 AS n_spans
@@ -2436,10 +2401,10 @@ def denoiser_mix_sql(
 
 
 def gram_novelty(
-    df: DataFrame, tokens_col: str, id_col: str, k: int = GRAM,
+    df: DataFrame, tokens_col: str, id_col: str,
 ) -> DataFrame:
     """Per-sequence NOVELTY: the fraction of its distinct token
-    ``k``-gram windows whose FIRST corpus occurrence (ascending
+    ``GRAM``-gram windows whose FIRST corpus occurrence (ascending
     ``id_col`` order — the deterministic ingest order) is in this
     sequence.  The temporal complement of ``duplicate_gram_coverage``:
     coverage says "how much of me exists elsewhere", novelty says "how
@@ -2450,7 +2415,7 @@ def gram_novelty(
     high-coverage rows are the memorization-risk tail).
 
     Returns (id, n_grams, n_novel, novel_frac) for every sequence with
-    at least one full window (rows shorter than ``k`` are omitted —
+    at least one full window (rows shorter than ``GRAM`` are omitted —
     same rule as duplicate_gram_coverage).  Ties cannot occur: first
     occurrence is min(id) per gram, and a gram appearing several times
     inside one doc collapses in the distinct pair set.
@@ -2462,7 +2427,7 @@ def gram_novelty(
     """
     pairs = (
         df.select(F.col(id_col),
-                  F.explode(token_grams(F.col(tokens_col), k)).alias("gk"))
+                  F.explode(token_grams(F.col(tokens_col))).alias("gk"))
         .distinct()
     )
     pairs = seam(pairs)  # feeds the first-occurrence census AND the rollup
@@ -2480,10 +2445,10 @@ def gram_novelty(
 
 
 def gram_novelty_sql(
-    table: str, tokens_col: str, id_col: str, k: int = GRAM,
+    table: str, tokens_col: str, id_col: str,
 ) -> str:
     """DuckDB twin: distinct pairs -> min-id census -> per-doc rollup."""
-    grams = token_grams_sql(tokens_col, k)
+    grams = token_grams_sql(tokens_col)
     return f"""
         WITH pairs AS (
           SELECT DISTINCT {id_col}, gk FROM (
@@ -2502,7 +2467,6 @@ def gram_novelty_sql(
 
 def sft_loss_mask(
     df: DataFrame, tokens_col: str, prompt_len_col: str,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Instruction-tuning LOSS MASK: for rows carrying a prompt/completion
     boundary (``prompt_len_col`` = number of leading prompt tokens), emit
@@ -2533,7 +2497,6 @@ def sft_loss_mask(
 
 def sft_loss_mask_sql(
     table: str, tokens_col: str, prompt_len_col: str,
-    id_col: str = "doc_id",
 ) -> str:
     """DuckDB twin: same clamp, same repeat-concat mask."""
     n = f"len({tokens_col})"

@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 from ulp_spark.operators.curation import (word_grams, word_tokens,
                                           word_tokens_sql)
 
+BPE_MIN_COUNT = 2  # a pair seen fewer times than this ends bpe training
+
 
 def word_counts(df: DataFrame, text_col: str) -> DataFrame:
     """(word, n) corpus word frequencies — the vocabulary."""
@@ -200,8 +202,7 @@ def bigram_coverage_sql(
 # --------------------------------------------------------------------------
 
 def bpe_train(
-    df: DataFrame, text_col: str, n_merges: int,
-    max_words: int = 200_000, min_count: int = 2,
+    df: DataFrame, text_col: str, n_merges: int, max_words: int = 200_000,
 ) -> dict:
     """Learn an ordered BPE merge list from the corpus — the full
     iterative loop, closing the learn -> apply chain: ``bpe_top_merges``
@@ -225,7 +226,7 @@ def bpe_train(
     ``(left, right)`` tuple — deterministic at any partitioning.  Pair
     occurrences count per-occurrence within a word ("aa" twice in
     "aaa"), matching ``bpe_pair_counts``.  Stops early when no pair
-    reaches ``min_count``.
+    reaches ``BPE_MIN_COUNT``.
 
     Returns ``{"merges": [(l, r), ...], "vocab": [piece, ...],
     "n_words_trained", "n_words_total", "freq_mass_kept"}`` — ``vocab``
@@ -243,7 +244,7 @@ def bpe_train(
             wc.orderBy(F.col("n").desc(), "word").limit(max_words)
             .collect()]
     mass_kept = sum(n for _, n in rows)
-    merges, vocab = bpe_merge_loop(rows, n_merges, min_count)
+    merges, vocab = bpe_merge_loop(rows, n_merges)
     return {
         "merges": merges,
         "vocab": vocab,
@@ -255,7 +256,7 @@ def bpe_train(
 
 
 def bpe_merge_loop(
-    rows: list[tuple[str, int]], n_merges: int, min_count: int = 2,
+    rows: list[tuple[str, int]], n_merges: int,
 ) -> tuple[list[tuple[str, str]], list[str]]:
     """The driver-side merge recurrence behind ``bpe_train``, exposed as
     a pure function of a (word, count) table so tests and oracles can
@@ -289,7 +290,7 @@ def bpe_merge_loop(
         for p, c in pair_counts.items():
             if c > best_n or (c == best_n and best is not None and p < best):
                 best, best_n = p, c
-        if best is None or best_n < min_count:
+        if best is None or best_n < BPE_MIN_COUNT:
             break
         merges.append(best)
         l, r = best

@@ -130,17 +130,13 @@ def job_status(base: str, run_id: str) -> dict[str, Any] | None:
     }
 
 
-def delete_job(base: str, run_id: str, remove_sinks: bool = False) -> bool:
+def delete_job(base: str, run_id: str) -> bool:
     """``DELETE /job`` analog (reference ``src/api.rs:98-107``: clears the
     in-memory job record, leaving prior outputs on disk).  Removes the
-    manifest only; ``remove_sinks=True`` additionally removes the whole
-    run directory (sink parquet included) — an explicit extension, not
-    reference behavior.  Returns True if a manifest was deleted."""
+    manifest only.  Returns True if a manifest was deleted."""
     p = manifest_path(base, run_id)
     existed = os.path.exists(p)
-    if remove_sinks:
-        shutil.rmtree(os.path.join(base, run_id), ignore_errors=True)
-    elif existed:
+    if existed:
         os.remove(p)
     return existed
 

@@ -7,9 +7,10 @@ rebuild gets for free: the SAME parse/route/sanitize expressions run under
 identical DAG with checkpointed exactly-once sinks.
 
 * ``stream_lines_to_routes`` — file-source stream of raw lines ->
-  parse -> route -> append sink partitioned by route.  ``availableNow``
-  drains everything present then stops (batch-equivalent semantics;
-  resumable via the checkpoint dir — the streaming twin of S9).
+  parse -> route -> append sink partitioned by route.  The
+  ``availableNow`` trigger drains everything present then stops
+  (batch-equivalent semantics; resumable via the checkpoint dir — the
+  streaming twin of S9).
 * ``windowed_route_counts`` — event-time tumbling-window counts with a
   watermark for late data, over any timestamped stream.
 """
@@ -29,7 +30,6 @@ def stream_lines_to_routes(
     source_dir: str,
     sink_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Stream parquet files of (doc_id, line) through parse->route->sink."""
     lines = (
@@ -38,37 +38,33 @@ def stream_lines_to_routes(
     parsed = parse.parse_lines(lines)
     routed = parsed.withColumn("route", pipeline.route_expr(parsed))
     out = routed.select("doc_id", "route", "parser", "parse_error")
-    writer = (
+    return (
         out.writeStream.format("parquet")
         .option("path", sink_dir)
         .option("checkpointLocation", checkpoint_dir)
         .partitionBy("route")
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
-def windowed_route_counts(
-    routed: DataFrame,
-    ts_col: str = "ts",
-    window: str = "1 minute",
-    watermark: str = "2 minutes",
-) -> DataFrame:
-    """Event-time tumbling counts per route with late-data watermark.
+def windowed_route_counts(routed: DataFrame) -> DataFrame:
+    """Event-time 1-minute tumbling counts per route over the ``ts``
+    column, with a 2-minute late-data watermark.
 
     Works on both batch and streaming frames (same expression surface) —
     on a stream, state for windows older than the watermark is dropped.
     """
     with_ts = routed.withColumn(
         "__event_time",
-        F.to_timestamp(F.col(ts_col), "yyyy-MM-dd'T'HH:mm:ss'Z'"),
+        F.to_timestamp(F.col("ts"), "yyyy-MM-dd'T'HH:mm:ss'Z'"),
     )
     if with_ts.isStreaming:
-        with_ts = with_ts.withWatermark("__event_time", watermark)
+        with_ts = with_ts.withWatermark("__event_time", "2 minutes")
     return (
-        with_ts.groupBy(F.window("__event_time", window).alias("w"), "route")
+        with_ts.groupBy(F.window("__event_time", "1 minute").alias("w"),
+                        "route")
         .agg(F.count(F.lit(1)).alias("n_rows"))
         .select(F.col("w.start").alias("window_start"), "route", "n_rows")
     )
@@ -76,10 +72,10 @@ def windowed_route_counts(
 
 def contamination_alerts(
     seq_stream: DataFrame, eval_grams: DataFrame,
-    tokens_col: str = "tokens", id_col: str = "doc_id", k: int = 8,
 ) -> DataFrame:
-    """Streaming decontamination monitor: one alert row (id) per ingested
-    sequence sharing ANY k-token window with the STATIC eval gram set —
+    """Streaming decontamination monitor: one alert row (doc_id) per
+    ingested (doc_id, tokens) sequence sharing ANY ``tokens.GRAM``-token
+    window with the STATIC eval gram set —
     the always-on twin of tokens.token_contamination, run at ingest time
     so a contaminated shard is caught before it reaches training.
 
@@ -97,9 +93,9 @@ def contamination_alerts(
     from ulp_spark.operators.tokens import token_grams
 
     ex = seq_stream.select(
-        F.col(id_col),
-        F.explode(token_grams(F.col(tokens_col), k)).alias("gk"),
+        F.col("doc_id"),
+        F.explode(token_grams(F.col("tokens"))).alias("gk"),
     )
     hits = ex.join(F.broadcast(eval_grams.select(F.col("gk"))),
                    "gk", "left_semi")
-    return hits.select(id_col).dropDuplicates([id_col])
+    return hits.select("doc_id").dropDuplicates(["doc_id"])
