@@ -23,6 +23,27 @@ def spark():
 
 
 @pytest.fixture
+def content_digest():
+    """``content_digest(df)`` -> a whole-frame, order-insensitive digest:
+    the sum of the rows' xxhash64 in a Mersenne modulus.  Equal frames, as
+    multisets of rows, give equal digests whatever their partitioning —
+    the resume tests' no-duplicate, no-loss check."""
+    from pyspark.sql import functions as F
+
+    m61 = (1 << 61) - 1  # keeps the digest sum in i64 range
+
+    def digest(df):
+        row_hash = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]),
+                          F.lit(m61))
+        row = df.select(
+            (F.sum(row_hash.cast("decimal(38,0)")) % m61).cast("long")
+            .alias("d")).collect()[0]
+        return int(row.d) if row.d is not None else 0
+
+    return digest
+
+
+@pytest.fixture
 def count_jobs(spark):
     """``count_jobs(fn)`` -> ``(fn(), n)``, where ``n`` is the number of
     Spark jobs ``fn`` started: it runs under a fresh job group, and the

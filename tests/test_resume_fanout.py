@@ -1,5 +1,6 @@
-"""S9/D1 — manifest-based resume, deterministic fan-out, salted agg,
-lineage digests, and the streaming skin."""
+"""S9/D1 — manifest-based resume, deterministic fan-out, lineage digests,
+the scripts/run_pipeline.py script, and batch operators run unchanged
+under Structured Streaming."""
 
 from __future__ import annotations
 
@@ -10,7 +11,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from ulp_spark.operators import agg, fanout, lattice, lineage, parse
+from ulp_spark.operators import fanout, lattice, lineage, parse
 from ulp_spark.plans import manifest, pipeline
 
 N = 1_000
@@ -30,7 +31,7 @@ def test_fanout_partitioned_write(spark, tmp_path):
     assert got == exp
 
 
-def test_resume_skips_committed_routes(spark, tmp_path):
+def test_resume_skips_committed_routes(spark, tmp_path, content_digest):
     routed = _routed(spark).select("doc_id", "route", "parser").cache()
     fields = parse.all_fields(parse.DEFAULT_PATTERNS)
     schemas = lattice.route_schemas(pipeline.build(spark, n=N).routed, fields)
@@ -62,7 +63,7 @@ def test_resume_skips_committed_routes(spark, tmp_path):
     # no dup/loss: union of sinks content-equal to the input frame
     paths = [e["path"] for e in done["routes"].values() if e["n_rows"]]
     union = spark.read.parquet(*paths).select("doc_id", "route", "parser")
-    assert lineage.content_digest(union) == lineage.content_digest(routed)
+    assert content_digest(union) == content_digest(routed)
     assert union.count() == routed.count()
 
     # idempotency: resuming a complete manifest writes nothing new
@@ -106,7 +107,8 @@ def _glob_escaped(path):
     return re.sub(r"([{}\[\]*?\\])", r"\\\1", path)
 
 
-def test_resume_fanout_after_crash_mid_commit(spark, tmp_path, monkeypatch):
+def test_resume_fanout_after_crash_mid_commit(spark, tmp_path, monkeypatch,
+                                             content_digest):
     """A crash after the 2nd route commit leaves a stale ``_staging/``, a
     renamed-but-unrecorded 3rd sink and a half-committed manifest; the
     next call commits every route, the sinks hold exactly the input, the
@@ -143,7 +145,7 @@ def test_resume_fanout_after_crash_mid_commit(spark, tmp_path, monkeypatch):
     union = spark.read.parquet(
         *[_glob_escaped(e["path"]) for e in done["routes"].values()]
     ).select("doc_id", "route", "parser")
-    assert lineage.content_digest(union) == lineage.content_digest(routed)
+    assert content_digest(union) == content_digest(routed)
     assert union.count() == routed.count()
     assert not os.path.exists(staging)
     assert [h["committed"] for h in done["history"]] == [
@@ -172,26 +174,6 @@ def test_resume_fanout_escaped_route_names_and_empty_route(spark, tmp_path):
         assert sorted(tuple(r) for r in back.collect()) == exp
 
 
-def test_salted_agg_matches_plain(spark):
-    seq = pipeline.build(spark, n=N).sequences
-    plain = {
-        (r.source, r.n_rows, r.sum_tok, r.max_tok)
-        for r in seq.groupBy("source").agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("n_tok").alias("sum_tok"),
-            F.max("n_tok").alias("max_tok")).collect()
-    }
-    salted = {
-        (r.source, r.n_rows, r.sum_tok, r.max_tok)
-        for r in agg.salted_agg(
-            seq.select("source", "n_tok"), ["source"],
-            [("n_rows", F.count(F.lit(1)), "sum"),
-             ("sum_tok", F.sum("n_tok"), "sum"),
-             ("max_tok", F.max("n_tok"), "max")]).collect()
-    }
-    assert salted == plain
-
-
 def test_partition_lineage_totals(spark):
     seq = pipeline.build(spark, n=N).sequences.repartition(7)
     rows = lineage.partition_lineage(seq, ["doc_id", "n_tok"]).collect()
@@ -199,184 +181,14 @@ def test_partition_lineage_totals(spark):
     assert len(rows) <= 7
 
 
-def test_content_digest_partition_invariant(spark):
+def test_content_digest_partition_invariant(spark, content_digest):
     a = pipeline.build(spark, n=N).sequences.repartition(3)
     b = pipeline.build(spark, n=N).sequences.repartition(11)
     cols = ["doc_id", "n_tok", "source"]
     a, b = a.select(*cols), b.select(*cols)
-    assert lineage.content_digest(a) == lineage.content_digest(b)
+    assert content_digest(a) == content_digest(b)
     c = pipeline.build(spark, n=N - 1).sequences.select(*cols)
-    assert lineage.content_digest(c) != lineage.content_digest(a)
-
-
-def test_streaming_availablenow_matches_batch(spark, tmp_path):
-    from ulp_spark import fixtures
-    from ulp_spark.streaming import stream
-
-    src = str(tmp_path / "src")
-    fixtures.raw_lines(spark, N).write.parquet(src)
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    q = stream.stream_lines_to_routes(spark, src, sink, ckpt)
-    q.awaitTermination(120)
-    got = dict((r.route, r.n_rows) for r in fanout.route_counts(
-        spark.read.parquet(sink)).collect())
-    exp = dict((r.route, r.n_rows) for r in
-               pipeline.build(spark, n=N).route_counts.collect())
-    assert got == exp
-    # resume with no new data: no duplicates
-    q2 = stream.stream_lines_to_routes(spark, src, sink, ckpt)
-    q2.awaitTermination(60)
-    got2 = dict((r.route, r.n_rows) for r in fanout.route_counts(
-        spark.read.parquet(sink)).collect())
-    assert got2 == got
-
-
-def test_windowed_route_counts_batch(spark):
-    routed = _routed(spark).filter(~F.col("parse_error"))
-    from ulp_spark.streaming import stream
-
-    win = stream.windowed_route_counts(routed)
-    rows = win.collect()
-    assert sum(r.n_rows for r in rows) == routed.count()
-    # N=1000 seconds of data -> ceil(1000/60) = 17 one-minute windows
-    assert len({r.window_start for r in rows}) == 17
-
-
-def test_stateful_stream_dedup(spark, tmp_path):
-    """Cross-batch exactly-once emission: batch 2 re-sends batch 1's ids
-    plus new ones; only the new ones come out (state survives via the
-    checkpoint)."""
-    from ulp_spark.streaming import stateful
-
-    src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run_batch(rows):
-        spark.createDataFrame(rows, "doc_id string, route string") \
-            .write.mode("append").parquet(src)
-        stream = spark.readStream.schema("doc_id string, route string").parquet(src)
-        q = (
-            stateful.dedup_stream(stream)
-            .writeStream.format("parquet")
-            .option("path", sink).option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-
-    run_batch([("d1", "r1"), ("d2", "r1"), ("d1", "r2")])  # intra-batch dup too
-    got1 = {r.doc_id for r in spark.read.parquet(sink).collect()}
-    assert got1 == {"d1", "d2"}
-
-    run_batch([("d1", "r9"), ("d3", "r1")])  # d1 replayed across batches
-    rows = spark.read.parquet(sink).collect()
-    assert sorted(r.doc_id for r in rows) == ["d1", "d2", "d3"]  # no dup emission
-
-
-def test_stateful_stream_dedup_bloom(spark, tmp_path):
-    """Bloom-state variant: same cross-batch suppression, but the state is
-    a FIXED-SIZE bitset — replayed ids stay suppressed after a restart and
-    the checkpointed state never grows with stream length."""
-    from ulp_spark.streaming import stateful
-
-    src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run_batch(rows):
-        spark.createDataFrame(rows, "doc_id string, route string") \
-            .write.mode("append").parquet(src)
-        stream = spark.readStream.schema("doc_id string, route string").parquet(src)
-        q = (
-            stateful.dedup_stream_bloom(stream)
-            .writeStream.format("parquet")
-            .option("path", sink).option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-
-    run_batch([("d1", "r1"), ("d2", "r1"), ("d1", "r2")])
-    assert {r.doc_id for r in spark.read.parquet(sink).collect()} == {"d1", "d2"}
-
-    run_batch([("d1", "r9"), ("d3", "r1")])  # d1 replayed across batches
-    rows = spark.read.parquet(sink).collect()
-    assert sorted(r.doc_id for r in rows) == ["d1", "d2", "d3"]
-
-
-def test_stateful_bloom_state_stays_bounded(spark, tmp_path):
-    """The 100-TB streaming claim: Bloom state is FIXED-SIZE per bucket no
-    matter how many ids stream through.  Four availableNow rounds, each
-    replaying every earlier id plus 1000 new ones.  Proof points:
-    (a) no id is ever emitted twice across all rounds;
-    (b) suppression holds for ids from ANY earlier round, not just the
-        previous one;
-    (c) byte-measured from the checkpoint: every round's state delta stays
-        under the FIXED uncompressed ceiling N_BUCKETS x BLOOM_BITS/8 no matter
-        how many ids have streamed (deltas are compressed, and fuller
-        bitsets compress worse, so early deltas are smaller — the ceiling,
-        not a round-over-round byte ratio, is the invariant);
-    (d) a replay-only round (no new ids) emits nothing and rewrites a
-        byte-identical-size state — stream length alone never grows state.
-    """
-    import os
-
-    from ulp_spark.streaming import stateful
-
-    src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-
-    def batch_ids(r):
-        return [f"d{r}_{i}" for i in range(1000)]
-
-    def delta_bytes(batch_id):
-        total = 0
-        for root, _dirs, files in os.walk(os.path.join(ckpt, "state")):
-            for f in files:
-                if f == f"{batch_id + 1}.delta":
-                    total += os.path.getsize(os.path.join(root, f))
-        return total
-
-    def run_round(rows):
-        spark.createDataFrame(rows, "doc_id string, route string") \
-            .write.mode("append").parquet(src)
-        stream = spark.readStream.schema(
-            "doc_id string, route string").parquet(src)
-        q = (
-            stateful.dedup_stream_bloom(stream)
-            .writeStream.format("parquet")
-            .option("path", sink).option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(180)
-        return [x.doc_id for x in spark.read.parquet(sink).collect()]
-
-    all_sent: list[str] = []
-    emitted_per_round = []
-    for r in range(4):
-        new = batch_ids(r)
-        emitted = run_round([(d, "r") for d in all_sent + new])
-        emitted_per_round.append(set(emitted))
-        all_sent += new
-
-    final = [x.doc_id for x in spark.read.parquet(sink).collect()]
-    assert len(final) == len(set(final))          # (a) never twice
-    assert emitted_per_round[3] >= emitted_per_round[0]  # (b) cumulative
-    # at-most-once: everything emitted was sent; nearly everything sent
-    # was emitted (fp suppression must stay rare at n/m ~ 0.0003)
-    assert set(final) <= set(all_sent)
-    assert len(final) >= len(all_sent) - 20
-    # (c) every round's delta stays under the fixed uncompressed ceiling
-    from ulp_spark.streaming.stateful import BLOOM_BITS, N_BUCKETS
-    ceiling = N_BUCKETS * (BLOOM_BITS // 8) * 1.10 + 8192
-    per_round = [delta_bytes(i) for i in range(4)]
-    assert all(0 < d <= ceiling for d in per_round), (per_round, ceiling)
-    # (d) replay-only round: nothing emitted, state bytes unchanged
-    n_before = len(final)
-    final5 = run_round([(d, "r") for d in all_sent])
-    assert len(final5) == n_before
-    d4, d5 = delta_bytes(3), delta_bytes(4)
-    assert abs(d5 - d4) <= d4 * 0.02 + 1024, (d4, d5)
+    assert content_digest(c) != content_digest(a)
 
 
 def test_streaming_session_windows_match_batch(spark, tmp_path):
@@ -512,222 +324,72 @@ def test_streaming_watermark_drops_late_rows(spark, tmp_path):
     assert got.get("01:00") in (None, 2)
 
 
-def test_job_status_and_delete(spark, tmp_path):
-    """GET/DELETE /job analogs (reference src/api.rs:79-107): status is
-    the manifest + derived summary (None = the 204 case); delete clears
-    the record but leaves sink files."""
-    import os
-
+def test_job_status_summary(tmp_path):
+    """GET /job analog (reference src/api.rs:79-88): status is the
+    manifest + derived summary, None when there is no job (the 204
+    case)."""
     base = str(tmp_path / "runs")
     assert manifest.job_status(base, "nope") is None  # 204
 
     m = manifest.new_manifest("run-js", 10, {"a": {}, "b": {}})
     m["routes"]["a"].update(committed=True, n_rows=7, path="x")
     manifest.save(base, "run-js", m)
-    sink = os.path.join(base, "run-js", "sinks", "a")
-    os.makedirs(sink)
 
     st = manifest.job_status(base, "run-js")
     assert st["summary"] == {"n_routes": 2, "n_committed": 1,
                              "n_pending": 1, "total_rows": 7, "done": False}
 
-    assert manifest.delete_job(base, "run-js") is True
-    assert manifest.job_status(base, "run-js") is None
-    assert os.path.isdir(sink)          # reference semantics: files stay
-    assert manifest.delete_job(base, "run-js") is False  # already gone
 
+def test_run_pipeline_script_fixture_resume_and_input(tmp_path):
+    """scripts/run_pipeline.py end to end in its own process: the fixture
+    run prints the job status read back from the manifest; a --resume
+    rerun writes no route; and --input over the same lines, split
+    between a plain .log and a .log.gz next to a file of unknown format,
+    routes the same rows and lists the unknown file."""
+    import gzip
+    import subprocess
+    import sys
 
+    import duckdb
 
-def test_compact_route_rewrites_and_preserves_rows(spark, tmp_path):
-    """Small-files compaction: many tiny files -> ceil(rows/target) files,
-    content identical, atomic swap; an already-compact dir is skipped."""
-    from ulp_spark.operators import fanout
+    from ulp_spark import fixtures
 
-    path = str(tmp_path / "route_a")
-    df = spark.range(10_000).select(F.col("id").alias("doc_id"))
-    df.repartition(37).write.parquet(path)  # 37 tiny files
-
-    before = lineage.content_digest(spark.read.parquet(path).select("doc_id"))
-    res = fanout.compact_route(spark, path, target_rows_per_file=4_000)
-    assert res["files_before"] == 37
-    assert res["files_after"] == 3  # ceil(10000/4000)
-    assert res["rows"] == 10_000 and res["skipped"] == 0
-    after = spark.read.parquet(path)
-    assert after.count() == 10_000
-    assert lineage.content_digest(after.select("doc_id")) == before
-
-    res2 = fanout.compact_route(spark, path, target_rows_per_file=4_000,
-                                min_files=3)
-    assert res2["skipped"] == 1 and res2["files_before"] == 3
-
-
-def test_compact_route_crash_between_renames_is_repaired(
-        spark, tmp_path, monkeypatch):
-    """VERDICT r3 #2 / ADVICE r3: the directory swap is two renames, and a
-    crash between them leaves the route directory missing.  Kill the
-    process exactly there (monkeypatched os.rename raising on the second
-    call) and prove (a) the repair restores the ORIGINAL data bit-for-bit,
-    (b) the stale .compact-tmp/.compact-old dirs are cleared, and (c) the
-    retried compaction then succeeds — no data loss, no wedge."""
-    import os as _os
-
-    from ulp_spark.operators import fanout
-
-    path = str(tmp_path / "route_b")
-    spark.range(9_000).select(F.col("id").alias("doc_id")) \
-        .repartition(29).write.parquet(path)
-    before = lineage.content_digest(spark.read.parquet(path).select("doc_id"))
-
-    real_rename = _os.rename
-    calls = {"n": 0}
-
-    def crashing_rename(src, dst):
-        calls["n"] += 1
-        if calls["n"] == 2:  # between rename(path->old) and rename(tmp->path)
-            raise OSError("simulated crash between swap renames")
-        real_rename(src, dst)
-
-    monkeypatch.setattr(fanout.os, "rename", crashing_rename)
-    try:
-        fanout.compact_route(spark, path, target_rows_per_file=4_000)
-    except OSError:
-        pass
-    monkeypatch.setattr(fanout.os, "rename", real_rename)
-
-    # the crash window: route dir is gone, .compact-old holds the data
-    assert not _os.path.isdir(path)
-    assert _os.path.isdir(path + ".compact-old")
-
-    rep = fanout.repair_compaction(path)
-    assert rep["restored"] == 1
-    assert _os.path.isdir(path)
-    assert not _os.path.isdir(path + ".compact-old")
-    assert not _os.path.isdir(path + ".compact-tmp")
-    assert lineage.content_digest(spark.read.parquet(path).select("doc_id")) == before
-
-    # retry goes clean end-to-end (compact_route self-repairs at entry too:
-    # re-create the crash debris and call it directly)
-    res = fanout.compact_route(spark, path, target_rows_per_file=4_000)
-    assert res["skipped"] == 0 and res["rows"] == 9_000
-    assert res["files_after"] == 3
-    assert lineage.content_digest(spark.read.parquet(path).select("doc_id")) == before
-
-
-def test_streaming_window_stats_match_batch(spark, tmp_path):
-    """anomaly.window_stats is the streaming-unification claim for the
-    anomaly op: the SAME groupBy(key, window) aggregation runs unchanged
-    as a Structured Streaming complete-mode aggregation and lands on the
-    batch answer."""
-    from ulp_spark.operators import anomaly
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet") \
-        .limit(2000)
-    src = str(tmp_path / "src")
-    ev.write.parquet(src)
-
-    batch = {(r.event_type, r.w_start): (r.n, r.mean, r.std)
-             for r in anomaly.window_stats(spark.read.parquet(src)).collect()}
-
-    stream = spark.readStream.schema(
-        spark.read.parquet(src).schema).parquet(src)
-    q = (
-        anomaly.window_stats(stream)
-        .writeStream.format("memory").queryName("wstats")
-        .outputMode("complete").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    got = {(r.event_type, r.w_start): (r.n, r.mean, r.std)
-           for r in spark.sql("SELECT * FROM wstats").collect()}
-    assert got == batch
-    assert len(got) > 0
-
-
-def test_snapshot_history_and_rollback(spark, tmp_path):
-    """Iceberg-substitution depth: every commit appends a snapshot to the
-    manifest history; rollback_to_snapshot flips later routes back to
-    pending and the next resume rewrites exactly those sinks."""
-    routed = _routed(spark).select("doc_id", "route", "parser")
-    fields = parse.all_fields(parse.DEFAULT_PATTERNS)
-    schemas = lattice.route_schemas(pipeline.build(spark, n=N).routed, fields)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     base = str(tmp_path / "runs")
 
-    m = manifest.new_manifest("run-sn", N, schemas)
-    manifest.save(base, "run-sn", m)          # snapshot 0: nothing committed
-    done = manifest.resume_fanout(routed, m, base)
-    hist = manifest.load(base, "run-sn")["history"]
-    n_routes = len(done["routes"])
-    # one snapshot per route commit, plus the initial empty one
-    assert [h["snapshot_id"] for h in hist] == list(range(n_routes + 1))
-    assert hist[0]["committed"] == []
-    assert len(hist[-1]["committed"]) == n_routes
+    def run(*args):
+        res = subprocess.run(
+            [sys.executable, os.path.join(repo, "scripts", "run_pipeline.py"),
+             "--master", "local[2]", "--base", base, *args],
+            capture_output=True, text=True, timeout=600, cwd=repo)
+        assert res.returncode == 0, res.stderr[-3000:]
+        return json.loads(res.stdout.strip().splitlines()[-1])
 
-    # roll back to the second commit point: all but 2 routes become pending
-    rolled = manifest.rollback(base, "run-sn", 2)
-    pending = [r for r, e in rolled["routes"].items() if not e["committed"]]
-    assert len(pending) == n_routes - 2
-    # rollback appended a snapshot rather than rewriting history
-    assert rolled["history"][-1]["snapshot_id"] == n_routes + 1
-    assert sorted(rolled["history"][-1]["committed"]) == \
-        sorted(rolled["history"][2]["committed"])
+    fx = run("--n", "2000", "--run-id", "fx")
+    st = manifest.job_status(base, "fx")
+    assert fx["status"] == st["summary"]
+    assert fx["rows_per_route"] == {
+        r: e["n_rows"] for r, e in st["routes"].items()}
+    assert fx["status"]["done"] and fx["status"]["total_rows"] == 2000
+    assert fx["routes_written_this_run"] == fx["status"]["n_routes"] > 1
 
-    # resume catches the data back up; full content equality again
-    done2 = manifest.resume_fanout(routed, rolled, base)
-    assert all(e["committed"] for e in done2["routes"].values())
-    paths = [e["path"] for e in done2["routes"].values() if e["n_rows"]]
-    union = spark.read.parquet(*paths).select("doc_id", "route", "parser")
-    assert union.count() == routed.count()
+    again = run("--n", "2000", "--run-id", "fx", "--resume")
+    assert again["routes_written_this_run"] == 0
+    assert again["rows_per_route"] == fx["rows_per_route"]
 
-    import pytest as _p
-    with _p.raises(KeyError):
-        manifest.rollback(base, "run-sn", 999)
-    with _p.raises(KeyError):
-        manifest.rollback(base, "nope", 0)
-
-
-def test_streaming_contamination_alerts_match_batch(spark, tmp_path):
-    """Stream-static broadcast join: alerts across two micro-batches match
-    the batch token_contamination hit set; replayed rows alert once."""
-    from ulp_spark import fixtures
-    from ulp_spark.operators import tokens as toks
-    from ulp_spark.streaming import stream as st
-
-    n = 400
-    seq = fixtures.sequences(spark, n)
-    eval_grams = (
-        seq.filter(F.col("source") == "wiki")
-        .select(F.explode(toks.token_grams(F.col("tokens"))).alias("gk"))
-        .distinct()
-    )
-    eval_pd = eval_grams.collect()
-    eval_static = spark.createDataFrame(eval_pd, "gk string")
-    # batch expectation: contaminated train ids
-    exp = {r.doc_id for r in toks.token_contamination(
-        seq, "tokens", "doc_id", F.col("source") == "wiki").collect()
-        if r.is_contaminated}
-
-    src = str(tmp_path / "src"); sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    train = seq.filter(F.col("source") != "wiki").select("doc_id", "tokens")
-
-    def run(batch_df):
-        batch_df.write.mode("append").parquet(src)
-        s = spark.readStream.schema(
-            "doc_id string, tokens array<int>").parquet(src)
-        q = (
-            st.contamination_alerts(s, eval_static)
-            .writeStream.format("parquet")
-            .option("path", sink).option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-
-    half = train.filter(F.col("doc_id") < "doc-00000200")
-    rest = train.filter(F.col("doc_id") >= "doc-00000200")
-    run(half)
-    run(rest.unionAll(half.limit(50)))  # replay: no duplicate alerts
-    got = [r.doc_id for r in spark.read.parquet(sink).collect()]
-    assert len(got) == len(set(got))
-    assert set(got) == exp
+    lines = [r[0] for r in duckdb.sql(
+        f"SELECT line FROM ({fixtures.raw_lines_sql(2000)}) ORDER BY doc_id"
+    ).fetchall()]
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "a.log").write_text("\n".join(lines[:1200]) + "\n")
+    with gzip.open(src / "b.log.gz", "wt") as f:
+        f.write("\n".join(lines[1200:]) + "\n")
+    (src / "c.bin").write_bytes(b"\x00\x01\x02")
+    inp = run("--input", str(src / "*"), "--run-id", "in")
+    assert inp["rows_per_route"] == fx["rows_per_route"]
+    assert inp["skipped_files"] == {"unknown": [str(src / "c.bin")]}
+    assert inp["n"] is None and inp["status"]["done"]
 
 
 def test_streaming_rewrites_match_batch(spark, tmp_path):

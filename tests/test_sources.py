@@ -1,11 +1,11 @@
-"""S1/S2 — glob scan + format detection + unified line reader, plus the
-per-route typed cast (cast_per_route) and DDL generation (S8)."""
+"""S1/S2 — glob scan + format detection + the kv_log line reader with
+deterministic doc ids, plus the per-route typed cast (cast_per_route,
+S8)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ulp_spark.functions import sniff
 from ulp_spark.operators import lattice, parse, route_cast
 from ulp_spark.plans import pipeline
 from ulp_spark.sources import registry
@@ -23,34 +23,39 @@ def test_scan_plan_detection(tmp_path):
     _mk(tmp_path, "c.parquet", b"PAR1xxxxPAR1")
     _mk(tmp_path, "d.bin", b"\x00\x01\x02\x03")
     plan = registry.plan_scan(str(tmp_path / "*"))
-    assert [p.split("/")[-1] for p in plan.groups["ndjson"]] == ["a.jsonl"]
-    assert [p.split("/")[-1] for p in plan.groups["kv_log"]] == ["b.log"]
-    assert [p.split("/")[-1] for p in plan.groups["parquet"]] == ["c.parquet"]
-    assert [p.split("/")[-1] for p in plan.unknown] == ["d.bin"]
+    assert [p.split("/")[-1] for p in plan["ndjson"]] == ["a.jsonl"]
+    assert [p.split("/")[-1] for p in plan["kv_log"]] == ["b.log"]
+    assert [p.split("/")[-1] for p in plan["parquet"]] == ["c.parquet"]
+    assert [p.split("/")[-1] for p in plan["unknown"]] == ["d.bin"]
 
 
 def test_scan_empty_glob_is_empty_not_panic(tmp_path):
     plan = registry.plan_scan(str(tmp_path / "nope-*"))
-    assert plan.groups == {}
+    assert plan == {}
 
 
-def test_read_lines_union(spark, tmp_path):
+def test_read_lines_kv_log_with_deterministic_ids(spark, tmp_path):
+    """Only the kv_log group is read; each line's doc_id is the sha-256 of
+    (path, occurrence number among equal lines of its file, line), so
+    equal lines of one file get different ids and a rerun or another
+    partitioning gets the same ones."""
+    import hashlib
+
     _mk(tmp_path, "a.jsonl", b'{"x": 1}\n{"x": 2}\n')
-    _mk(tmp_path, "b.log", b"l1\nl2\nl3\n")
+    _mk(tmp_path, "b.log", b"l1\nl2\nl1\n")
     df = registry.read_lines(spark, registry.plan_scan(str(tmp_path / "*")))
     rows = df.collect()
-    assert len(rows) == 5
-    assert {r.format for r in rows} == {"ndjson", "kv_log"}
-    assert all(r.path.endswith((".jsonl", ".log")) for r in rows)
+    assert sorted(r.line for r in rows) == ["l1", "l1", "l2"]
+    path = rows[0].path
+    assert path.endswith("/b.log") and {r.path for r in rows} == {path}
 
+    def sha(k, line):
+        return hashlib.sha256(f"{path}\0{k}\0{line}".encode()).hexdigest()
 
-def test_detect_line_format(spark):
-    df = spark.createDataFrame(
-        [(1, '{"a":1}'), (2, "2022-03-23T00:00:00Z INFO x"), (3, "garbage")],
-        "i int, line string")
-    got = {r.i: r.f for r in df.select(
-        "i", registry.detect_line_format(F.col("line")).alias("f")).collect()}
-    assert got == {1: "ndjson", 2: "kv_log", 3: "unknown"}
+    assert sorted(r.doc_id for r in rows) == sorted(
+        [sha(1, "l1"), sha(2, "l1"), sha(1, "l2")])
+    assert sorted(r.doc_id for r in df.repartition(3).collect()) == \
+        sorted(r.doc_id for r in rows)
 
 
 def test_cast_per_route_typed_schemas(spark):
@@ -71,19 +76,6 @@ def test_cast_per_route_typed_schemas(spark):
     t2 = tables["evtx_"]
     assert dict(t2.dtypes)["provider"] == "bigint"
     assert all(x.provider == 17 for x in t2.collect())
-
-
-def test_schema_ddl(spark):
-    ddl = route_cast.spark_schema_ddl(
-        {"ts": sniff.DATE, "n": sniff.INT, "provider": sniff.STR})
-    assert ddl == "n BIGINT, provider STRING, ts STRING"
-    # DDL round-trips through a real CREATE TABLE statement
-    spark.sql("DROP TABLE IF EXISTS _ddl_check")
-    spark.sql(f"CREATE TABLE _ddl_check ({ddl}) USING parquet "
-              "LOCATION '/tmp/_ddl_check'")
-    assert [f.name for f in spark.table("_ddl_check").schema.fields] == \
-        ["n", "provider", "ts"]
-    spark.sql("DROP TABLE _ddl_check")
 
 
 def test_cast_single_pass_missing_field_error_is_false_not_null(spark):
@@ -202,9 +194,9 @@ def test_ivf_trained_fewer_rows_than_k(spark):
 
 
 def test_csv_and_gzip_detection_and_readers(spark, tmp_path):
-    """Round-3 format breadth: csv/tsv classify as table sources; gzip
+    """Round-3 format breadth: csv/tsv classify as the csv group; gzip
     members classify as their INNER format (compression is storage, not
-    format) and read transparently through the text reader."""
+    format), and a .log.gz reads transparently through the line reader."""
     import gzip
 
     from ulp_spark.sources import registry
@@ -218,33 +210,22 @@ def test_csv_and_gzip_detection_and_readers(spark, tmp_path):
     (tmp_path / "e.gz").write_bytes(gzip.compress(b"???"))  # no inner ext
 
     plan = registry.plan_scan(str(tmp_path / "*"))
-    assert [p.split("/")[-1] for p in plan.groups.get("csv", [])] == \
+    assert [p.split("/")[-1] for p in plan.get("csv", [])] == \
         ["a.csv", "b.tsv"]
-    assert [p.split("/")[-1] for p in plan.groups.get("ndjson", [])] == \
+    assert [p.split("/")[-1] for p in plan.get("ndjson", [])] == \
         ["c.ndjson.gz"]
-    assert [p.split("/")[-1] for p in plan.groups.get("kv_log", [])] == \
+    assert [p.split("/")[-1] for p in plan.get("kv_log", [])] == \
         ["d.log.gz"]
-    assert [p.split("/")[-1] for p in plan.unknown] == ["e.gz"]
+    assert [p.split("/")[-1] for p in plan["unknown"]] == ["e.gz"]
 
     lines = registry.read_lines(spark, plan)
-    got = sorted(r.line for r in lines.collect())
-    assert got == sorted(['{"k": 1}', '{"k": 2}',
-                          "2024-01-01T00:00:00 INFO doc=a src=b n=1"])
-
-    tables = registry.read_tables(spark, plan)
-    # comma and tab files get separate readers (never one merged schema)
-    assert set(tables) == {"csv", "tsv"}
-    csv = tables["csv"]
-    assert set(csv.columns) == {"x", "y"}
-    assert csv.count() == 2
-    assert dict(csv.dtypes)["x"] == "int"
-    assert set(tables["tsv"].columns) == {"x", "y"}
-    assert tables["tsv"].count() == 0  # header-only file
+    assert [r.line for r in lines.collect()] == \
+        ["2024-01-01T00:00:00 INFO doc=a src=b n=1"]
 
 
-def test_orc_detection_and_reader(spark, tmp_path):
-    """Round-4 format breadth: ORC classifies by its 'ORC' magic (even
-    with a lying extension) and reads back typed through read_tables."""
+def test_orc_detection_by_magic(spark, tmp_path):
+    """Round-4 format breadth: ORC classifies by its 'ORC' magic, even
+    with a lying extension."""
     from ulp_spark.sources import registry
 
     src = spark.createDataFrame([(1, "foo"), (2, "bar")], "x int, y string")
@@ -257,11 +238,8 @@ def test_orc_detection_and_reader(spark, tmp_path):
     renamed.write_bytes(data)
 
     plan = registry.plan_scan(str(tmp_path / "mystery.*"))
-    assert [p.split("/")[-1] for p in plan.groups.get("orc", [])] == \
+    assert [p.split("/")[-1] for p in plan.get("orc", [])] == \
         ["mystery.bin"]
-    tables = registry.read_tables(spark, plan)
-    got = sorted((r.x, r.y) for r in tables["orc"].collect())
-    assert got == [(1, "foo"), (2, "bar")]
 
 
 def test_cast_per_route_reads_seam_not_derivation(spark):

@@ -1,6 +1,6 @@
 """Recursive type-tree semantics: pure-Python oracle vs reference golden
-cases (T6/type_casting tests), the distributed tree fold, dynamic NDJSON
-parse, and dotted-path extraction (P3)."""
+cases (T6/type_casting tests), the distributed tree fold, and dotted-path
+extraction (P3)."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from ulp_spark import oracle
 from ulp_spark.functions import fields, sniff
-from ulp_spark.operators import lattice, parse
+from ulp_spark.operators import lattice
 
 S = sniff
 
@@ -79,30 +79,6 @@ def test_json_tree_schema_distributed_matches_oracle(spark):
     assert paths["e"] == S.BOOL
 
 
-def test_tree_to_spark_type_shapes():
-    t = obj(a=S.INT, b=obj(c=S.DATE), d=lst(S.INT, S.INT), e=lst(S.INT, S.STR))
-    st = lattice.tree_to_spark_type(t)
-    # heterogeneous list -> array<string> (raw), positional casts downstream
-    assert st.simpleString() == (
-        "struct<a:bigint,b:struct<c:string>,d:array<bigint>,e:array<string>>"
-    )
-
-
-def test_parse_ndjson_two_pass(spark):
-    lines = [
-        '{"a": 1, "b": {"c": 5}}',
-        '{"a": 2, "b": {"c": 6}}',
-        "garbage{{{",
-    ]
-    df = spark.createDataFrame([(ln,) for ln in lines], "line string")
-    out = parse.parse_ndjson(df)
-    rows = out.orderBy("line").collect()
-    ok = [r for r in rows if not r.parse_error]
-    assert len(ok) == 2 and {r.rec.a for r in ok} == {1, 2}
-    assert {r.rec.b.c for r in ok} == {5, 6}
-    assert sum(r.parse_error for r in rows) == 1
-
-
 def test_dotted_path_extraction(spark):
     df = spark.createDataFrame(
         [('{"a": {"b": [ {"c": "apple"}, {"c": "pear"} ]}}',)], "j string")
@@ -112,22 +88,6 @@ def test_dotted_path_extraction(spark):
         fields.json_path(F.col("j"), "a.nope").alias("z"),
     ).collect()[0]
     assert (got.x, got.y, got.z) == ("apple", "pear", None)
-    import duckdb
-    assert duckdb.sql(
-        "SELECT " + fields.json_path_sql(
-            """'{"a": {"b": [ {"c": "apple"} ]}}'""", "a.b.0.c")
-    ).fetchall() == [("apple",)]
-
-
-def test_struct_path(spark):
-    df = spark.createDataFrame(
-        [((("apple", [10, 20]),),)],
-        "s struct<t: struct<name string, xs array<int>>>")
-    got = df.select(
-        fields.struct_path(F.col("s"), "t.name").alias("n"),
-        fields.struct_path(F.col("s"), "t.xs.1").alias("x"),
-    ).collect()[0]
-    assert (got.n, got.x) == ("apple", 20)
 
 
 def test_json_field_schema_runtime_types(spark):

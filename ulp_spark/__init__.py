@@ -7,9 +7,12 @@ each record by a field-extraction template -> cast to the merged route schema
 -> fan-out bulk writes, one sink per route (see SURVEY.md for file:line
 citations).  This package re-expresses that DAG as declarative PySpark:
 
-* parse     — vectorized regex extraction over Arrow string batches
-              (``ulp_spark.operators.parse``), replacing per-record Rust loops
-              (reference ``src/evtx.rs:46-68``, ``src/mft.rs:54-78``)
+* scan      — glob + per-file magic-byte detection, log lines with
+              deterministic doc ids (``ulp_spark.sources.registry``),
+              replacing reference ``src/job.rs:52-73``, ``src/lib.rs:58-72``
+* parse     — an ``RLIKE`` cascade + one ``regexp_replace`` per row, as SQL
+              text (``ulp_spark.operators.parse``), replacing per-record
+              Rust loops (reference ``src/evtx.rs:46-68``, ``src/mft.rs:54-78``)
 * enrich    — broadcast-hash-join lookups against small dimension frames
               (``ulp_spark.operators.enrich``), replacing per-row BTreeMap
               gets (reference ``src/type_map.rs:184-192``, ``src/lib.rs:48-56``)
@@ -24,12 +27,15 @@ citations).  This package re-expresses that DAG as declarative PySpark:
 * fan-out   — deterministic per-route partitioned writes
               (``ulp_spark.operators.fanout``), replacing the Elasticsearch
               bulk sink (reference ``src/elastic.rs:101-154``)
-* lineage   — per-partition lineage records + accumulators
+* lineage   — per-partition lineage records (rows, bytes, content digest)
               (``ulp_spark.operators.lineage``), replacing
               ``src/type_map.rs:111-155``
 
-Everything is DataFrame-first: Catalyst handles pushdown/pruning/broadcast;
-Python only runs inside Arrow-batched pandas UDFs.
+Everything is DataFrame-first: Catalyst handles pushdown/pruning/broadcast.
+The driver builds plans (mostly SQL text) and reads a few small collects;
+executor-side Python is a few Arrow-batched stages: the IPv6 cast's pandas
+UDF and the ``mapInPandas`` bodies of ``bpe_tokenize``, ``pack_bins``, the
+JSON type-tree fold and the multimodal kernels.
 """
 
 __version__ = "0.1.0"

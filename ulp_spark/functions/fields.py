@@ -4,14 +4,9 @@ Reference: ``get_value(&Value, "a.b.0.c")`` walks a JSON tree, numeric
 segments indexing arrays (``src/type_map.rs:65-88``); a miss is None (which
 route templates later render as "NONE").
 
-Two Spark forms:
-
-* :func:`json_path` — for JSON *string* columns: compile the dotted path to
-  a JsonPath once on the driver, evaluate with ``get_json_object`` (JVM).
-* :func:`struct_path` — for already-typed nested columns: chain
-  ``getField``/``element_at`` accessors (numeric segment i -> element i+1,
-  Spark arrays are 1-based in element_at; the reference is 0-based like
-  JSON, so we add 1 here).
+:func:`json_path` compiles the dotted path to a JsonPath once on the
+driver and evaluates it over a JSON *string* column with
+``get_json_object`` (JVM).
 """
 
 from __future__ import annotations
@@ -37,17 +32,3 @@ def json_path(col: Column, dotted: str) -> Column:
     return F.get_json_object(col, to_json_path(dotted))
 
 
-def struct_path(col: Column, dotted: str) -> Column:
-    """Extract a dotted path from a typed struct/array column."""
-    out = col
-    for seg in dotted.split("."):
-        if seg.isdigit():
-            out = F.element_at(out, int(seg) + 1)
-        else:
-            out = out.getField(seg)
-    return out
-
-
-def json_path_sql(expr: str, dotted: str) -> str:
-    """DuckDB twin (json_extract_string accepts the same JsonPath)."""
-    return f"json_extract_string({expr}, '{to_json_path(dotted)}')"

@@ -10,9 +10,7 @@ window start — the only columns either pass needs) is seam-materialized
 once; pass 1 aggregates mean/stddev per (key, tumbling window) over it —
 map-side combined, output is (keys x windows) rows: TINY next to the
 events.  Pass 2 joins the stats back to the SAME materialized frame —
-the stats side broadcasts, so the event table is never shuffled.  This
-is the batch form; the same groupBy over ``F.window`` runs as a
-streaming aggregation with a watermark.
+the stats side broadcasts, so the event table is never shuffled.
 
 Determinism/oracle parity: population stddev (``stddev_pop``) and the
 z-score are rounded to 6 dp on both engines; a window with stddev 0
@@ -28,25 +26,6 @@ from ulp_spark.session import seam
 
 ROUND = 6
 Z_THRESHOLD = 3.0
-
-
-def window_stats(df: DataFrame) -> DataFrame:
-    """Per-(event_type, 1-day window) population mean/stddev/count of
-    ``value``."""
-    return (
-        df.groupBy(
-            F.col("event_type"),
-            F.window(F.col("ts"), "1 day").alias("w"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.avg(F.col("value").cast("double")), ROUND).alias("mean"),
-            F.round(F.stddev_pop(F.col("value").cast("double")), ROUND)
-            .alias("std"),
-        )
-        .select("event_type", F.col("w.start").alias("w_start"), "n", "mean",
-                "std")
-    )
 
 
 def value_anomalies(df: DataFrame) -> DataFrame:

@@ -273,26 +273,6 @@ def jaccard_distinct(a: Column, b: Column) -> Column:
     return F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame, text_col: str, id_col: str, pairs: DataFrame,
-) -> DataFrame:
-    """Verify candidate pairs with exact shingle-set Jaccard: keeps the
-    pairs at or above ``JACCARD_MIN``."""
-    sh = df.select(F.col(id_col).alias("id"),
-                   shingle_hashes(F.col(text_col)).alias("sh"))
-    j = (
-        pairs.join(sh.withColumnRenamed("sh", "sh_a"),
-                   pairs.id_a == sh.id).drop("id")
-        .join(sh.withColumnRenamed("sh", "sh_b").withColumnRenamed("id", "id2"),
-              F.col("id_b") == F.col("id2")).drop("id2")
-        .select("id_a", "id_b",
-                # shingle_hashes sets are array_distinct-built, so the
-                # cheaper inclusion-exclusion form applies (r6)
-                jaccard_distinct(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
-    )
-    return j.filter(F.col("jaccard") >= JACCARD_MIN)
-
-
 # --------------------------------------------------------------------------
 # simhash
 # --------------------------------------------------------------------------

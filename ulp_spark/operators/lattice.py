@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ulp_spark.functions import casts, sniff, sqltext
+from ulp_spark.functions import sniff, sqltext
 from ulp_spark.functions.sqltext import ident, lit
 
 
@@ -135,32 +135,6 @@ def json_tree_schema(df: DataFrame, json_col: str):
     for r in rows:
         final = _oracle.merge_tree(final, _oracle.decode_tree(_json.loads(r.tree)))
     return final
-
-
-def tree_to_spark_type(tree):
-    """Type tree -> Spark DataType (SURVEY §1.1 mapping).
-
-    Scalars map to native types (IP/Date stay strings — the reference emits
-    normalized strings); Object -> StructType (sorted keys, BTreeMap order);
-    List -> ArrayType(elem) when all positions agree, else
-    ArrayType(String): JSON arrays can only materialize as Spark arrays
-    (from_json marks a struct-typed array corrupt), so heterogeneous lists
-    carry raw strings and the tree's positional codes drive per-position
-    casts downstream (element_at + casts.cast_field) — same reference
-    semantics (positional per-index typing), applied one step later."""
-    from pyspark.sql import types as T
-
-    if isinstance(tree, int):
-        return casts.NATIVE[tree]
-    if tree["kind"] == sniff.OBJECT:
-        return T.StructType([
-            T.StructField(k, tree_to_spark_type(v), True)
-            for k, v in sorted(tree["children"].items())
-        ])
-    children = [tree["children"][i] for i in sorted(tree["children"])]
-    if children and all(c == children[0] for c in children):
-        return T.ArrayType(tree_to_spark_type(children[0]), True)
-    return T.ArrayType(T.StringType(), True)
 
 
 _RE_DECIMAL0 = r"^DECIMAL\([0-9]+,0\)$"

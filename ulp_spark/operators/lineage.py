@@ -46,16 +46,3 @@ def partition_lineage(df: DataFrame, cols: list[str] | None = None) -> DataFrame
     )
 
 
-def content_digest(df: DataFrame) -> int:
-    """Whole-frame order-insensitive digest (P10's SHA256-per-file analog).
-
-    Equal frames (as multisets of rows) give equal digests regardless of
-    partitioning — used by the resume test to prove no duplication.
-    """
-    row_hash = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]),
-                      F.lit(_M61))
-    row = df.select(
-        (F.sum(row_hash.cast("decimal(38,0)")) % _M61).cast("long").alias("d")
-    ).collect()[0]
-    return int(row.d) if row.d is not None else 0
-

@@ -3,12 +3,11 @@ columns + typed metadata structs, processed by Arrow-batched pandas UDFs.
 
 The Spark-side architecture is real and tested — schemas, partitioning,
 ``mapInPandas`` batch shapes, metadata propagation.  The codec kernels
-themselves are STUBBED: this container has no image/audio libraries, so
-``decode_image``/``decode_audio`` raise ``NotImplementedError`` unless the
-optional import succeeds, and the tested path uses deterministic fake
-kernels (byte statistics / strided sampling) with the same signatures a
-real PIL/librosa kernel would have.  Swapping in real codecs changes ONE
-function body, not the pipeline.
+themselves are stand-ins: no image/audio decoder ships with the package,
+so the pipeline runs deterministic fake kernels (byte statistics /
+strided sampling) with the same signatures a real PIL/librosa kernel
+would have.  Swapping in real codecs changes ONE function body, not the
+pipeline.
 
 Scale notes: binary payloads ride the same Arrow batches as every other
 column; ``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds batch
@@ -25,14 +24,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Optional real codecs (absent in this container; import-gated by design).
-try:  # pragma: no cover
-    from PIL import Image  # noqa: F401
-    _HAVE_PIL = True
-except Exception:  # pragma: no cover
-    _HAVE_PIL = False
-
-IMAGE_META = "width int, height int, channels int, format string"
 FEATURE_SCHEMA = (
     "doc_id bigint, n_bytes int, byte_mean double, byte_hist array<int>"
 )
@@ -54,18 +45,6 @@ def synth_binary_column(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
             F.lit("FAKE").alias("format"),
         ).alias("meta"),
     )
-
-
-def decode_image(blob: bytes):  # pragma: no cover - real-codec path
-    """Real decode kernel — requires PIL; see module docstring."""
-    if not _HAVE_PIL:
-        raise NotImplementedError(
-            "image decode requires PIL; container ships without codecs — "
-            "use extract_features (deterministic fake kernel) in tests"
-        )
-    import io
-
-    return Image.open(io.BytesIO(blob))
 
 
 def extract_features(df: DataFrame) -> DataFrame:

@@ -33,7 +33,6 @@ from dataclasses import dataclass
 from typing import Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ulp_spark.functions import sniff
 from ulp_spark.functions.sqltext import ident, lit
@@ -150,39 +149,6 @@ def runtime_code_columns(fields: Sequence[str]) -> list[str]:
     field from its value and its sniffed ``<f>__t`` code."""
     return [f"{sniff.materialized_runtime_code(ident(f), ident(f + '__t'))}"
             f" AS {ident(f + '__r')}" for f in fields]
-
-
-def parse_ndjson(df: DataFrame) -> DataFrame:
-    """S3/S6 analog — dynamic two-pass NDJSON parse of the ``line``
-    column.
-
-    Pass 1 infers the merged type tree over the whole column
-    (lattice.json_tree_schema — the distributed Mapping::map_json fold);
-    pass 2 parses every line against the inferred schema with the JVM
-    ``from_json`` (the cast-to-merged-map semantics of the ingest phase,
-    ``src/elastic.rs:76-99``).  Unparseable lines get a null ``rec`` and
-    ``parse_error`` true (quarantine, not panic).
-    """
-    from pyspark.sql import types as T
-
-    from ulp_spark.operators import lattice
-
-    tree = lattice.json_tree_schema(df, "line")
-    spark_type = lattice.tree_to_spark_type(tree)
-    # Standard Spark JSON quarantine: a corrupt-record column inside the
-    # struct marks malformed lines (PERMISSIVE from_json otherwise yields an
-    # all-null struct, indistinguishable from a legitimately-null record).
-    assert isinstance(spark_type, T.StructType)
-    with_corrupt = T.StructType(
-        list(spark_type.fields) + [T.StructField("_corrupt_record", T.StringType())]
-    )
-    rec = F.from_json(F.col("line"), with_corrupt,
-                      {"columnNameOfCorruptRecord": "_corrupt_record"})
-    return (
-        df.withColumn("rec", rec)
-        .withColumn("parse_error",
-                    F.col("rec").isNull() | F.col("rec._corrupt_record").isNotNull())
-    )
 
 
 def parse_sql(line_expr: str) -> dict[str, str]:

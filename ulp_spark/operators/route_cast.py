@@ -181,8 +181,3 @@ def cast_per_route(
     return out
 
 
-def spark_schema_ddl(schema: dict[str, int]) -> str:
-    """S8 analog: route type-map -> DDL column list (reference
-    ``src/elastic.rs:38-66`` translates Types -> ES mapping JSON)."""
-    return ", ".join(f"{f} {casts.NATIVE[c].simpleString().upper()}"
-                     for f, c in sorted(schema.items()))

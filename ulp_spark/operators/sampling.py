@@ -56,11 +56,6 @@ def split_label_sql(id_expr: str) -> str:
     return "CASE " + " ".join(cases) + " END"
 
 
-def deterministic_sample(df, id_col: str, rate_pct: int):
-    """Reproducible ``rate_pct``%% sample: bucket < rate — a scan predicate."""
-    return df.filter(hash_bucket(F.col(id_col)) < rate_pct)
-
-
 def stratified_keep(
     id_col: Column, strat_col: Column, rates_pct: dict[str, int],
 ) -> Column:

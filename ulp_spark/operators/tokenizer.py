@@ -1,4 +1,4 @@
-"""Vocabulary tokenizer APPLY (text -> token ids) and its inverse — the
+"""Vocabulary tokenizer APPLY (text -> token ids) — the
 step between the text-side corpus (documents) and the token-side table
 (doc_id, tokens, n_tok, source) that every other tokens.* operator
 consumes.  vocab.py LEARNS vocabulary/merge statistics from a corpus;
@@ -21,8 +21,7 @@ ended — not expressible as Catalyst column algebra over fixed offsets
 leftmost-first regex alternation with the pieces ordered longest-first
 IS that recurrence, so ``tokenize`` is one JVM projection
 (``regexp_extract_all`` + a piece -> id map lookup): no Python worker,
-no Arrow round trip, zero shuffles.  ``detokenize`` is the inverse — a
-broadcast join + ordered re-assembly, JVM end to end.  ``bpe_tokenize``
+no Arrow round trip, zero shuffles.  ``bpe_tokenize``
 (merge-rank order depends on the whole symbol sequence) stays the one
 mapInPandas path here.
 
@@ -136,40 +135,6 @@ def tokenize_sql(
     """
 
 
-def detokenize(
-    df: DataFrame, tokens_col: str, id_col: str, vocab: list[str],
-) -> DataFrame:
-    """(id, text): inverse of tokenize — concatenate each id's piece
-    (ids outside [0, len(vocab)) render as U+FFFD, the replacement
-    character).  Lossless for
-    ids produced by tokenize with the same vocab and no unks; pinned as
-    the roundtrip property in pytest.
-
-    posexplode -> broadcast join against the (id -> piece) dim -> ordered
-    re-assembly: one corpus exchange (the groupBy), any vocab size, JVM
-    end to end.
-    """
-    spark = df.sparkSession
-    dim = spark.createDataFrame(
-        [(i, p) for i, p in enumerate(vocab)], "tid int, piece string")
-    ex = df.select(
-        F.col(id_col),
-        F.posexplode_outer(F.col(tokens_col)).alias("pos", "tid"))
-    joined = ex.join(F.broadcast(dim), "tid", "left").select(
-        id_col, "pos",
-        F.coalesce(
-            F.when(F.col("pos").isNotNull(), F.coalesce(
-                F.col("piece"), F.lit("\ufffd"))),
-            F.lit("")).alias("piece"),
-    )
-    return (
-        joined.groupBy(id_col)
-        .agg(F.concat_ws("", F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "piece"))),
-            lambda s: s["piece"])).alias("text"))
-    )
-
-
 # --------------------------------------------------------------------------
 # True BPE merge-rank application (closes the learn -> apply loop with
 # vocab.bpe_top_merges; reference-free breadth — the reference has no
@@ -190,7 +155,8 @@ def bpe_tokenize(
     ``tokenize``'s docstring concedes greedy can diverge from this on
     adversarial vocabularies; the divergence is pinned as a pytest
     case.  ``merges[i]`` has rank i — exactly the order
-    ``vocab.bpe_top_merges`` emits (see ``merges_from_pairs``).
+    ``vocab.bpe_top_merges`` emits (its 2-char ``pair`` strings, split
+    into (left, right)).
 
     Scale shape: the one mapInPandas path in this module (``tokenize``
     is a JVM projection) — the merge recurrence is variable-length and
@@ -265,18 +231,6 @@ def bpe_tokenize(
             })
 
     return df.select(id_col, text_col).mapInPandas(run, schema)
-
-
-def merges_from_pairs(pairs: list[str]) -> list[tuple[str, str]]:
-    """Adapt ``vocab.bpe_top_merges`` output (ranked 2-char ``pair``
-    strings) into the (left, right) merge list ``bpe_tokenize`` consumes
-    — the learn -> apply bridge."""
-    out = []
-    for p in pairs:
-        if len(p) != 2:
-            raise ValueError(f"bpe_top_merges pairs are 2 chars, got {p!r}")
-        out.append((p[0], p[1]))
-    return out
 
 
 _SEP = "\x01"

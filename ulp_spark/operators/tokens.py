@@ -516,8 +516,8 @@ def source_mixing_plan(
     (source, n_tokens, budget_tokens, n_epochs, tail_frac), where
     budget_tokens = floor(q_temp * budget), n_epochs = budget_tokens div
     n_tokens, and tail_frac is the remainder as a sampling rate a
-    deterministic sampler (sampling.deterministic_sample) applies to the
-    final pass.  Upsampled low-resource sources get n_epochs >= 1 + a
+    deterministic sampler (a ``sampling.hash_bucket`` predicate) applies
+    to the final pass.  Upsampled low-resource sources get n_epochs >= 1 + a
     partial pass; downsampled ones get n_epochs = 0 + a thinning rate.
 
     Same scale shape as source_temperature_weights (one aggregate to
@@ -547,118 +547,6 @@ def source_mixing_plan_sql(
                  AS tail_frac
         FROM ({inner})
     """
-
-
-def incremental_sequence_dedup(
-    df: DataFrame, tokens_col: str, id_col: str, state_path: str,
-) -> DataFrame:
-    """Cross-RUN exact dedup for incremental ingest: drop sequences whose
-    token fingerprint was already committed by ANY previous batch, then
-    append the survivors' fingerprints to the parquet state store — the
-    batch counterpart of streaming/stateful.py's cross-micro-batch dedup
-    (daily-ingest pattern: each run sees only its delta, the state store
-    carries corpus history).
-
-    Returns the surviving rows of ``df`` (original columns).  The state
-    store is a plain parquet directory of (fp string); first run starts
-    empty.  Survivors are deduped WITHIN the batch too (min id wins, the
-    sequence_exact_dedup rule).
-
-    Scale shape: the batch's (fp, id) pairs aggregate to one row per
-    distinct fingerprint (map-side combine), LEFT ANTI join against the
-    state scan (AQE picks broadcast vs shuffle by actual state size — on
-    mature corpora the state side is the big one and the DELTA
-    broadcasts), then one semi-join back to the batch rows.  The append
-    writes only the batch's new fingerprints (16-byte keys, never token
-    payloads).  NOT atomic vs concurrent writers by itself — serialize
-    runs through plans/manifest.py like the fan-out sinks do.
-
-    State safety (ADVICE r4): "first run" is decided by an EXPLICIT
-    existence check on ``state_path`` (Hadoop FileSystem API, so the same
-    code answers for file://, hdfs:// and s3a://), never by catching a
-    read error — a transient read failure on a mature store raises
-    instead of silently masquerading as an empty history.  The write is
-    ALWAYS ``mode("append")`` (append onto a missing path creates it), so
-    no code path can overwrite — and thereby destroy — accumulated
-    fingerprint history.
-    """
-    spark = df.sparkSession
-    fp = token_fingerprint(F.col(tokens_col)).alias("fp")
-    batch = df.select(fp, F.col(id_col))
-    batch_min = batch.groupBy("fp").agg(F.min(id_col).alias(id_col))
-    if _state_has_data(spark, state_path):
-        # a real read error here (corrupt footer, permission blip,
-        # eventual-consistency miss) must abort the run loudly: let it
-        # raise — the only safe "empty state" is a state with no
-        # committed data files
-        seen = spark.read.parquet(state_path).select("fp")
-    else:
-        # covers both "never written" AND "directory created but no data
-        # file committed" (an empty first delta, or a writer that died
-        # after mkdir: only _SUCCESS/_temporary markers present).
-        # Treating that as first-run is safe — no fingerprint was ever
-        # committed — and avoids wedging every later run on an
-        # unreadable-schema directory.
-        seen = spark.createDataFrame([], "fp string")
-    fresh = batch_min.join(seen, "fp", "left_anti")
-    # materialize the new-key set once: it feeds BOTH the state append
-    # and the survivor semi-join (and the append must not re-race the
-    # state scan it just anti-joined against)
-    fresh = seam(fresh)
-    fresh.select("fp").write.mode("append").parquet(state_path)
-    return df.select("*", fp).join(
-        fresh, ["fp", id_col], "left_semi").drop("fp")
-
-
-def _state_has_data(spark, path: str) -> bool:
-    """True iff ``path`` exists AND contains at least one committed data
-    file (name not starting with '_' or '.').  Bare existence is the
-    wrong gate: an empty first delta or a writer killed after mkdir
-    leaves the directory with only _SUCCESS/_temporary markers, and
-    `spark.read.parquet` on that raises 'Unable to infer schema' —
-    which would then wedge EVERY later run if existence alone decided
-    'mature store'."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return False
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if not name.startswith("_") and not name.startswith("."):
-            return True
-    return False
-
-
-def compact_dedup_state(
-    spark, state_path: str, target_rows_per_file: int = 50_000_000,
-    min_files: int = 8,
-) -> dict[str, int]:
-    """Maintenance compaction for the incremental-dedup state store: the
-    parquet fingerprint directory grows one file set per run forever
-    (daily ingest -> hundreds of small files within a year), so listing
-    and footer-open overhead eventually dominates the state scan.
-
-    Rewrites the directory into ``ceil(distinct_fps /
-    target_rows_per_file)`` files of DISTINCT fingerprints — serialized
-    runs only ever append novel fps, but distinct also self-heals a store
-    that absorbed a concurrent double-append.  Rides fanout.compact_route
-    verbatim: same temp-dir + two-rename swap, same repair_compaction
-    crash contract at entry (crashed compactions are restored or cleaned,
-    data is never lost).  Run it BETWEEN dedup runs — the swap is not
-    atomic for a concurrent reader (compact_route docstring).  The
-    anti-join result is unchanged by compaction (pinned in pytest).
-
-    At cluster scale the same maintenance is Iceberg's
-    rewrite_data_files on the state table (BASELINE.md substitution
-    table).  16-byte keys at 10^12 sequences ~= 16 TB of state; size
-    target_rows_per_file so one file ~= a few hundred MB.
-    """
-    from ulp_spark.operators.fanout import compact_route
-
-    return compact_route(
-        spark, state_path, target_rows_per_file=target_rows_per_file,
-        min_files=min_files, distinct=True)
 
 
 def chunk_sequences(

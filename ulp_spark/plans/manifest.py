@@ -5,11 +5,12 @@ serializes to ``{dir}/{job_id}/mappings.json`` (``src/workerpool.rs:200-228``)
 and the ingest phase re-hydrates from it (``src/workerpool.rs:84-101``) —
 manifest-based re-entry is ulp's actual resume semantic.
 
-Here the manifest records, per run: fixture size, route list, per-route
-schemas (type codes), per-route row counts, per-route sink paths and
-commit state.  ``resume_fanout`` skips routes already committed (their
-parquet written + recorded) — re-running a half-finished job writes only
-the missing routes, and the content digest proves no dup/loss.  On a real
+Here the manifest records, per run: fixture size (null for a run over
+input files), route list, per-route schemas (type codes), per-route row
+counts, per-route sink paths and commit state.  ``resume_fanout`` skips
+routes already committed (their parquet written + recorded) — re-running
+a half-finished job writes only the missing routes, with no duplicate and
+no loss.  ``job_status`` reads it back as ulp's ``GET /job``.  On a real
 deployment the commit token is the Iceberg snapshot id; directory-level
 parquet commits (_SUCCESS) model the same idempotency here.
 
@@ -54,7 +55,7 @@ def save(base: str, run_id: str, manifest: dict[str, Any]) -> str:
     differs from the latest snapshot, a new entry {snapshot_id,
     committed} is appended to ``manifest["history"]`` — the metadata
     analog of Iceberg's snapshot lineage (each commit = a new snapshot
-    whose id is the resume/rollback token; BASELINE.md substitution
+    whose id is the resume token; BASELINE.md substitution
     table).  Ids are monotonically increasing ints, deterministic."""
     routes = manifest.get("routes", {})
     committed = sorted(r for r, e in routes.items() if e.get("committed"))
@@ -70,32 +71,7 @@ def save(base: str, run_id: str, manifest: dict[str, Any]) -> str:
     return p
 
 
-def rollback(base: str, run_id: str, snapshot_id: int) -> dict[str, Any]:
-    """Restore the manifest's route commit-state to ``snapshot_id`` (the
-    Iceberg ``rollback_to_snapshot`` analog, metadata level: routes
-    committed after that snapshot flip back to pending, so the next
-    ``resume_fanout`` rewrites exactly those sinks — idempotent
-    overwrite commits make the data catch up with the metadata).  The
-    rollback itself is a new snapshot (history is append-only, like
-    Iceberg's lineage).  Raises KeyError for an unknown snapshot."""
-    m = load(base, run_id)
-    if m is None:
-        raise KeyError(f"no manifest for run {run_id!r}")
-    hist = m.get("history", [])
-    match = [h for h in hist if h["snapshot_id"] == snapshot_id]
-    if not match:
-        raise KeyError(f"snapshot {snapshot_id} not in history "
-                       f"(have {[h['snapshot_id'] for h in hist]})")
-    keep = set(match[0]["committed"])
-    for r, e in m["routes"].items():
-        if r not in keep and e.get("committed"):
-            e["committed"] = False
-            e["n_rows"] = None
-    save(base, run_id, m)
-    return m
-
-
-def new_manifest(run_id: str, n: int, route_schemas: dict[str, dict[str, int]]
+def new_manifest(run_id: str, n: int | None, route_schemas: dict[str, dict[str, int]]
                  ) -> dict[str, Any]:
     return {
         "run_id": run_id,
@@ -128,17 +104,6 @@ def job_status(base: str, run_id: str) -> dict[str, Any] | None:
             "done": len(committed) == len(routes),
         },
     }
-
-
-def delete_job(base: str, run_id: str) -> bool:
-    """``DELETE /job`` analog (reference ``src/api.rs:98-107``: clears the
-    in-memory job record, leaving prior outputs on disk).  Removes the
-    manifest only.  Returns True if a manifest was deleted."""
-    p = manifest_path(base, run_id)
-    existed = os.path.exists(p)
-    if existed:
-        os.remove(p)
-    return existed
 
 
 # Partition column of the staged write: a copy of the route column, so
@@ -216,7 +181,7 @@ def resume_fanout(
         n_rows = int(counts[f"n{i}"])
         path = os.path.join(run_dir, "sinks", route_name)
         # a sink left by a commit the manifest never recorded (crash
-        # between rename and save, or a rolled-back route) is replaced
+        # between rename and save) is replaced
         shutil.rmtree(path, ignore_errors=True)
         if route_name in staged_dirs:
             os.makedirs(os.path.dirname(path), exist_ok=True)

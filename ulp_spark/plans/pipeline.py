@@ -13,8 +13,7 @@ Scale shape (the part that must survive 100 TB):
   bucketed by hash(doc_id) so it's co-located (storage-partitioned join,
   no shuffle); on local parquet it's one shuffle pair, which AQE sizes;
 * `source` is skewed (60% one key): per-sink histograms aggregate by
-  (source, bucket) — the bucket dimension already splits the hot key; for
-  pure per-source totals use operators.agg.salted_agg.
+  (source, bucket) — the bucket dimension already splits the hot key.
 """
 
 from __future__ import annotations
@@ -74,7 +73,11 @@ def build(
     lines_df: DataFrame | None = None,
     checkpoint: str | None = None,
 ) -> Pipeline:
-    """``checkpoint``: None | "local".
+    """``lines_df``: the ``(doc_id, line)`` input, e.g. files read by
+    :func:`ulp_spark.sources.registry.read_lines`; default the
+    ``fixtures.raw_lines`` of ``n`` sequences.
+
+    ``checkpoint``: None | "local".
 
     The reference materializes parse output as NDJSON between its two phases
     (S5, ``src/evtx.rs:52-53`` -> ``src/elastic.rs:83``) — that seam is both

@@ -5,28 +5,24 @@ and ``Parser::try_from`` sniffs the first 8 bytes per file — ``FILE0`` magic
 -> MFT, ``ElfFile`` -> EVTX, extension fallback, panic otherwise
 (``src/lib.rs:58-72,90``).
 
-Spark-first translation: the glob goes straight to the reader (Spark
-expands it, lists in parallel, and prunes partitions); detection becomes a
-*vectorized* decision so it survives 10^12 rows:
-
-* per-file sniff (the reference's granularity): read the first bytes of
-  each matched file on the driver — file COUNT is the small dimension here,
-  not row count — then route each file list to its typed reader;
-* per-line sniff (for mixed/concatenated feeds): a prefix classifier
-  column over the payload (``detect_line_format``), the analog of the
-  magic-byte check as a ``when`` cascade.
+Spark-first translation: detection stays at the reference's granularity,
+one sniff per FILE on the driver (file COUNT is the small dimension here,
+not row count), and groups the matched paths by format
+(:func:`plan_scan`).  The one group the parser understands, ``kv_log``,
+then streams line-per-row through Spark's text reader (:func:`read_lines`),
+which lists in parallel and decompresses ``.gz`` transparently.
 
 Unknown formats are never a panic (documented deviation): they land in the
-``unknown`` bucket and flow to the quarantine route.
+``unknown`` group, which the caller reports next to every other group it
+does not read.
 """
 
 from __future__ import annotations
 
 import glob as _glob
 import os
-from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # (format name, magic prefix) — checked in order, first match wins, like
@@ -51,11 +47,6 @@ EXT_FALLBACK = {
 }
 
 
-def expand_glob(pattern: str) -> list[str]:
-    """S1: glob -> sorted paths; empty list (not None/panic) when no match."""
-    return sorted(_glob.glob(pattern))
-
-
 def detect_file_format(path: str) -> str:
     """S2 at file granularity: magic bytes, then extension, else unknown.
 
@@ -76,88 +67,35 @@ def detect_file_format(path: str) -> str:
     return EXT_FALLBACK.get(os.path.splitext(path)[1].lower(), "unknown")
 
 
-@dataclass(frozen=True)
-class ScanPlan:
-    """Paths grouped by detected format (deterministic sorted order)."""
-
-    groups: dict[str, list[str]]
-
-    @property
-    def unknown(self) -> list[str]:
-        return self.groups.get("unknown", [])
-
-
-def plan_scan(pattern: str) -> ScanPlan:
+def plan_scan(pattern: str) -> dict[str, list[str]]:
+    """S1 + S2: the glob's matches grouped by detected format, formats and
+    paths in sorted order; empty (not a panic) when nothing matches."""
     groups: dict[str, list[str]] = {}
-    for p in expand_glob(pattern):
+    for p in sorted(_glob.glob(pattern)):
         groups.setdefault(detect_file_format(p), []).append(p)
-    return ScanPlan({k: sorted(v) for k, v in sorted(groups.items())})
+    return dict(sorted(groups.items()))
 
 
-def read_lines(spark: SparkSession, plan: ScanPlan) -> DataFrame:
-    """Load every readable group as a unified (path, format, line) frame.
+def read_lines(spark: SparkSession, plan: dict[str, list[str]]) -> DataFrame:
+    """The plan's ``kv_log`` files as a ``(doc_id, path, line)`` frame, the
+    ``lines_df`` of :func:`ulp_spark.plans.pipeline.build`.
 
-    parquet groups are read as tables (caller handles them); text-ish
-    groups stream line-per-row with lineage columns — the input to
-    operators.parse.
+    ``doc_id`` replaces the reference's v4 UUID (SURVEY P11): the sha-256
+    of (path, the line's number among the EQUAL lines of its file, line).
+    Reruns and any partitioning give the same ids, and equal lines of one
+    file get different ones; numbering them costs one aggregate over
+    ``(path, line)``, as the text reader exposes no line offset.
     """
-    frames: list[DataFrame] = []
-    for fmt in ("ndjson", "kv_log"):
-        paths = plan.groups.get(fmt)
-        if not paths:
-            continue
-        df = (
-            spark.read.text(paths)
-            .select(
-                F.input_file_name().alias("path"),
-                F.lit(fmt).alias("format"),
-                F.col("value").alias("line"),
-            )
-        )
-        frames.append(df)
-    if not frames:
-        return spark.createDataFrame([], "path string, format string, line string")
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
-
-
-def read_tables(
-    spark: SparkSession, plan: ScanPlan, csv_header: bool = True,
-) -> dict[str, DataFrame]:
-    """Typed readers for the TABLE formats in a scan plan (parquet, csv);
-    line-oriented groups go through :func:`read_lines` instead.  CSV types
-    are inferred by Spark's sampler — for production-stable schemas pass
-    the result through the sniff/cast battery like any parsed field."""
-    out: dict[str, DataFrame] = {}
-    if plan.groups.get("parquet"):
-        out["parquet"] = spark.read.parquet(*plan.groups["parquet"])
-    if plan.groups.get("orc"):
-        out["orc"] = spark.read.orc(*plan.groups["orc"])
-    # comma and tab files never share one reader: a .tsv header parsed
-    # under the comma delimiter becomes a bogus data row that degrades
-    # the whole group's inferred schema to strings
-    csvish = plan.groups.get("csv", [])
-    for key, sep in (("csv", ","), ("tsv", "\t")):
-        paths = [p for p in csvish
-                 if (os.path.splitext(p[:-3] if p.lower().endswith(".gz")
-                                      else p)[1].lower() == f".{key}")]
-        if paths:
-            out[key] = (
-                spark.read.option("header", str(csv_header).lower())
-                .option("inferSchema", "true")
-                .option("sep", sep)
-                .csv(paths)
-            )
-    return out
-
-
-def detect_line_format(line: Column) -> Column:
-    """S2 at line granularity: prefix classifier as a Column expression."""
-    t = F.ltrim(line)
+    paths = plan.get("kv_log")
+    if not paths:
+        return spark.createDataFrame(
+            [], "doc_id string, path string, line string")
     return (
-        F.when(t.startswith("{"), F.lit("ndjson"))
-        .when(t.rlike(r"^\d{4}-\d{2}-\d{2}T"), F.lit("kv_log"))
-        .otherwise(F.lit("unknown"))
+        spark.read.text(paths)
+        .select(F.input_file_name().alias("path"), F.col("value").alias("line"))
+        .groupBy("path", "line").count()
+        .selectExpr("path", "line", "explode(sequence(1L, `count`)) AS k")
+        .selectExpr(
+            "sha2(concat_ws(char(0), path, CAST(k AS STRING), line), 256)"
+            " AS doc_id", "path", "line")
     )
