@@ -31,6 +31,7 @@ from ulp_spark.operators import dedup, lattice, multimodal, parse, similarity, t
 from ulp_spark.operators import profiling as _profiling
 from ulp_spark.operators import vocab as _vocab
 from ulp_spark.plans import pipeline
+from ulp_spark.session import local_frame
 
 N_FIXTURE = 10_000
 
@@ -503,8 +504,7 @@ def _q_events_nested_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = fixtures.nested_json(spark, N_FIXTURE)
     tree = lattice.json_tree_schema(df, "doc")
     paths = _oracle.tree_to_paths(tree)
-    return spark.createDataFrame(
-        sorted(paths.items()), "path string, type_code int")
+    return local_frame(spark, sorted(paths.items()), "path string, type_code int")
 
 
 def _q_emb_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:

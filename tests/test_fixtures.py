@@ -97,3 +97,64 @@ def test_routed_tokens_bitwise_equal_to_oracle(spark):
             continue
         exp = oracle_tokens(i)
         assert array("i", got[doc_id]).tobytes() == exp.tobytes(), doc_id
+
+
+def test_local_frame_matches_create_data_frame(spark):
+    """session.local_frame gives createDataFrame's rows, names and types
+    for every type its callers use — quote, backslash, control and
+    non-ASCII strings, int/bigint extremes, the awkward doubles, arrays,
+    a NULL in every column, zero rows — under either setting of
+    ``spark.sql.parser.escapedStringLiterals``.  Only nullability may
+    differ, and only where no row holds a NULL."""
+    import math
+
+    import pytest
+    from pyspark.sql.types import ArrayType
+
+    from ulp_spark.session import local_frame
+
+    ddl = "s string, i int, b bigint, d double, a array<double>"
+    specials = [0.1, -0.0, 5e-324, math.nan, math.inf, -math.inf]
+    rows = [
+        ("it's", 2**31 - 1, 2**63 - 1, 0.1, specials),
+        ("back\\slash", -(2**31), -(2**63), -0.0, [None, 1.5]),
+        ("ctl\x01", 0, 0, 5e-324, []),
+        ("näïve ✓ 日本", 7, 7, math.nan, [0.25]),
+        ("", -1, -1, math.inf, [-math.inf]),
+        ("x", 1, 1, -math.inf, [2.0]),
+        (None, None, None, None, None),
+    ]
+
+    def shape(df):
+        return [(f.name, f.dataType.simpleString()) for f in df.schema]
+
+    def check(rows, ddl):
+        got, exp = local_frame(spark, rows, ddl), spark.createDataFrame(rows, ddl)
+        assert shape(got) == shape(exp)
+        got_rows = got.collect()
+        # repr keeps -0.0 apart from 0.0 and makes NaN equal to itself
+        assert repr(got_rows) == repr(exp.collect())
+        for f in got.schema:
+            assert f.nullable or all(r[f.name] is not None for r in got_rows), f
+            if isinstance(f.dataType, ArrayType):
+                assert f.dataType.containsNull or all(
+                    None not in (r[f.name] or []) for r in got_rows), f
+
+    key = "spark.sql.parser.escapedStringLiterals"
+    for setting in ("false", "true"):
+        spark.conf.set(key, setting)
+        try:
+            check(rows, ddl)
+            check(rows[:-1], ddl)   # no NULL column anywhere
+            check([], ddl)
+        finally:
+            spark.conf.unset(key)
+
+    with pytest.raises(ValueError):
+        local_frame(spark, [({"k": 1},)], "m map<string,int>")
+    with pytest.raises(ValueError):
+        local_frame(spark, [(True,)], "f boolean")
+    with pytest.raises(TypeError):
+        local_frame(spark, [(1.5,)], "i int")
+    with pytest.raises(ValueError):
+        local_frame(spark, [(1, 2)], "i int")

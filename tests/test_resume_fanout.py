@@ -342,8 +342,9 @@ def test_job_status_summary(tmp_path):
 
 def test_run_pipeline_script_fixture_resume_and_input(tmp_path):
     """scripts/run_pipeline.py end to end in its own process: the fixture
-    run prints the job status read back from the manifest; a --resume
-    rerun writes no route; and --input over the same lines, split
+    run prints the job status read back from the manifest, lineage
+    included; a --resume rerun writes no route and keeps the recorded
+    lineage; and --input over the same lines, split
     between a plain .log and a .log.gz next to a file of unknown format,
     routes the same rows and lists the unknown file."""
     import gzip
@@ -372,10 +373,14 @@ def test_run_pipeline_script_fixture_resume_and_input(tmp_path):
         r: e["n_rows"] for r, e in st["routes"].items()}
     assert fx["status"]["done"] and fx["status"]["total_rows"] == 2000
     assert fx["routes_written_this_run"] == fx["status"]["n_routes"] > 1
+    # the run's lineage is recorded in the manifest and covers every row
+    assert len(st["lineage"]) == fx["lineage_partitions"] > 0
+    assert sum(r["n_rows"] for r in st["lineage"]) == 2000
 
     again = run("--n", "2000", "--run-id", "fx", "--resume")
     assert again["routes_written_this_run"] == 0
     assert again["rows_per_route"] == fx["rows_per_route"]
+    assert manifest.job_status(base, "fx")["lineage"] == st["lineage"]
 
     lines = [r[0] for r in duckdb.sql(
         f"SELECT line FROM ({fixtures.raw_lines_sql(2000)}) ORDER BY doc_id"
@@ -390,6 +395,8 @@ def test_run_pipeline_script_fixture_resume_and_input(tmp_path):
     assert inp["rows_per_route"] == fx["rows_per_route"]
     assert inp["skipped_files"] == {"unknown": [str(src / "c.bin")]}
     assert inp["n"] is None and inp["status"]["done"]
+    assert sum(r["n_rows"] for r in
+               manifest.job_status(base, "in")["lineage"]) == 2000
 
 
 def test_streaming_rewrites_match_batch(spark, tmp_path):

@@ -4,6 +4,8 @@ inline test ``src/type_map.rs:201-218``) and sink-name sanitization
 
 from __future__ import annotations
 
+import re
+
 import duckdb
 from pyspark.sql import functions as F
 
@@ -163,3 +165,48 @@ def test_plan_construction_py4j_budget(spark, monkeypatch):
         p.routed.filter(~F.col("parse_error")), schemas, fields)
     monkeypatch.undo()
     assert 0 < calls["n"] <= 1500, calls
+
+
+def test_dimensions_are_local_table_scans(spark):
+    """Both broadcast dimensions of ulp's job — enrich's pattern_dict and
+    the cast's route -> schema map — are JVM ``LocalTableScan``s: no
+    ``Scan ExistingRDD``, so no Python worker runs for either."""
+    from ulp_spark import fixtures
+    from ulp_spark.operators import lattice, parse, route_cast
+    from ulp_spark.plans import pipeline
+
+    fields = parse.all_fields(parse.DEFAULT_PATTERNS)
+    p = pipeline.build(spark, lines_df=fixtures.raw_lines(spark, 50),
+                       sequences_df=fixtures.sequences(spark, 50))
+    ok = p.routed.filter(~F.col("parse_error"))
+    casted = route_cast.cast_single_pass(
+        ok, lattice.route_schemas(ok, fields), fields)
+
+    def local_scans(df):
+        """The output lines of the formatted plan's LocalTableScans."""
+        plan = df._jdf.queryExecution().explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                "formatted"))
+        assert "Scan ExistingRDD" not in plan
+        return re.findall(r"\) LocalTableScan\nOutput \[\d+\]: (.*)", plan)
+
+    routed, cast = local_scans(p.routed), local_scans(casted)
+    assert any("category#" in s for s in routed)          # pattern_dict
+    assert any("category#" in s for s in cast)
+    assert any("ts__target#" in s for s in cast)          # schema_dim
+
+
+def test_file_run_has_no_fixture_frames(spark):
+    """A file run (lines without sequences) builds no fixture token
+    payload: the token frames are None, routing is unchanged."""
+    from ulp_spark import fixtures
+    from ulp_spark.plans import pipeline
+
+    lines = fixtures.raw_lines(spark, 200)
+    p = pipeline.build(spark, lines_df=lines)
+    assert (p.sequences, p.routed_tokens, p.source_token_hist) == (
+        None, None, None)
+    fx = pipeline.build(spark, n=200)
+    assert sorted(map(tuple, p.route_counts.collect())) == sorted(
+        map(tuple, fx.route_counts.collect()))
+    assert fx.source_token_hist is not None

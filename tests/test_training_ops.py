@@ -1063,6 +1063,25 @@ def test_no_session_conf_writes():
     assert offenders == []
 
 
+def test_no_python_local_frames():
+    """Driver-side tables enter a plan only through session.local_frame
+    (a JVM LocalRelation): no ``createDataFrame(`` or ``parallelize(`` in
+    the package or __spark_entry__.py, whose RDDs would run Python-worker
+    tasks on every evaluation."""
+    import pathlib
+    import re
+
+    import ulp_spark
+
+    root = pathlib.Path(ulp_spark.__file__).parent
+    offenders = [
+        p.name for p in sorted(root.rglob("*.py"))
+        + [root.parent / "__spark_entry__.py"]
+        if re.search(r"createDataFrame\(|parallelize\(", p.read_text())
+    ]
+    assert offenders == []
+
+
 def test_seam_is_the_only_checkpoint_call():
     """session.seam is the one materialization primitive: no other module
     in the package checkpoints a frame itself."""

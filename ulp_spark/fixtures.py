@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ulp_spark.session import local_frame
+
 TOKEN_VOCAB = 50257          # GPT-2-ish vocab size; tokens in [0, 50257)
 MAX_TOKENS = 512             # n_tok in [1, 512]
 EPOCH = "2022-03-23 00:00:00"  # matches reference date-sniff fixtures
@@ -179,9 +181,9 @@ def nested_json_sql(n: int) -> str:
 
 def pattern_dict(spark: SparkSession) -> DataFrame:
     """T3: tiny enrichment dimension — always broadcast."""
-    return spark.createDataFrame(
-        PATTERN_DICT_ROWS, "provider string, category string, severity_weight int"
-    )
+    return local_frame(
+        spark, PATTERN_DICT_ROWS,
+        "provider string, category string, severity_weight int")
 
 
 # --------------------------------------------------------------------------

@@ -5,7 +5,10 @@ Reference: two per-row dictionary lookups — route -> type-map
 (``src/lib.rs:48-56``).  Both become broadcast hash joins against small
 dimension DataFrames: Catalyst keeps the probe side streaming (no shuffle
 of the fact table), which is the only join shape this pipeline ever needs
-at 10^12 rows — the dimensions are KiB-sized.
+at 10^12 rows — the dimensions are KiB-sized.  Both dimensions
+(``fixtures.pattern_dict`` here, ``route_cast.schema_dim`` for the cast)
+are JVM ``LocalRelation`` frames from :func:`ulp_spark.session.local_frame`:
+the broadcast reads a ``LocalTableScan`` and runs no Python worker.
 """
 
 from __future__ import annotations

@@ -7,9 +7,11 @@ the first bad field (``type_casting/src/lib.rs:389-397``).
 
 Here the route->schema dict (A2 output, driver-side, KiB) becomes a
 broadcast dimension (J1, :func:`schema_dim`) joined onto the records — one
-broadcast hash join, no shuffle of the records, zero Python — and each
-field's cast branches over the distinct target types it takes across
-routes.  One cast implementation, two shapes:
+broadcast hash join, no shuffle of the records, zero Python: the dimension
+is a JVM ``LocalRelation`` built by :func:`ulp_spark.session.local_frame`,
+so broadcasting it runs no Python-worker task — and each field's cast
+branches over the distinct target types it takes across routes.  One cast
+implementation, two shapes:
 
 * :func:`cast_single_pass` — one DataFrame for all routes; casted values
   carried in canonical string form + per-row ``cast_error``.  Used for
@@ -29,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ulp_spark.functions import casts, sniff, sqltext
 from ulp_spark.functions.sqltext import ident, lit
-from ulp_spark.session import seam
+from ulp_spark.session import local_frame, seam
 
 
 def _repr_str(value: str, rcode: str, target: int, helpers) -> tuple[str, str]:
@@ -46,13 +48,14 @@ def schema_dim(
     """Route -> per-field target-type dimension (KiB), the J1 broadcast dim.
 
     This is literally the reference's ``index_pattern_mappings`` BTreeMap
-    shipped as a table (``src/type_map.rs:90-98``)."""
+    shipped as a table (``src/type_map.rs:90-98``), as a ``LocalTableScan``
+    (:func:`ulp_spark.session.local_frame`)."""
     rows = [
         tuple([r] + [route_schemas[r].get(f) for f in fields])
         for r in sorted(route_schemas)
     ]
     ddl = "route string, " + ", ".join(f"{f}__target int" for f in fields)
-    return spark.createDataFrame(rows, ddl)
+    return local_frame(spark, rows, ddl)
 
 
 def cast_single_pass(

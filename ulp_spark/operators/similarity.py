@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ulp_spark.operators.dedup import MAX_BUCKET, _bucket_pairs
-from ulp_spark.session import seam
+from ulp_spark.session import local_frame, seam
 
 NBITS = 8
 
@@ -405,8 +405,8 @@ def ann_recall(
         srp_signature(F.col("v"), dim).alias("bucket"))
     feat = seam(feat)
 
-    qdf = df.sparkSession.createDataFrame(
-        [(q_id, vec, _py_norm(vec)) for q_id, vec in queries],
+    qdf = local_frame(
+        df.sparkSession, [(q_id, vec, _py_norm(vec)) for q_id, vec in queries],
         "q_id int, q_vec array<double>, q_norm double")
     # cosine(v, q_vec) with both norms staged — identical rounded values
     cos = F.round(
@@ -457,7 +457,7 @@ def ann_recall(
             order = sorted(range(len(centroids)),
                            key=lambda i: (-cos_py(vec, centroids[i]), i))
             probe_rows += [(q_id, int(c)) for c in order[:np_]]
-        pdf = df.sparkSession.createDataFrame(probe_rows, "q_id int, cell int")
+        pdf = local_frame(df.sparkSession, probe_rows, "q_id int, cell int")
         out_frames.append(eval_method(
             f"ivf_p{np_}", feat.join(F.broadcast(pdf), "cell")))
 
@@ -476,7 +476,7 @@ def ann_recall(
         ("srp_mp1", lambda s: [s] + [s ^ (1 << i) for i in range(NBITS)]),
     ):
         srp_rows = [(q_id, int(b)) for q_id, s in qsigs for b in expand(s)]
-        bdf = df.sparkSession.createDataFrame(srp_rows, "q_id int, bucket int")
+        bdf = local_frame(df.sparkSession, srp_rows, "q_id int, bucket int")
         out_frames.append(eval_method(
             method, feat.join(F.broadcast(bdf), "bucket")))
 

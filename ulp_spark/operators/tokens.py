@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ulp_spark.session import seam
+from ulp_spark.session import local_frame, seam
 
 GRAM = 8  # contamination n-gram length, in tokens
 MAX_PERIOD = 8  # longest repeating block the suffix detector tries
@@ -1454,8 +1454,8 @@ def vocab_growth(
         F.posexplode(F.col("__toks")).alias("pos", "t"),
     ).select("t", (F.col("tok_offset") + F.col("pos")).alias("p"))
     first = ex.groupBy("t").agg(F.min("p").alias("fp"))
-    cp = df.sparkSession.createDataFrame(
-        [(int(c),) for c in checkpoints], "checkpoint bigint")
+    cp = local_frame(df.sparkSession, [(int(c),) for c in checkpoints],
+                     "checkpoint bigint")
     return (
         first.crossJoin(F.broadcast(cp))
         .groupBy("checkpoint")

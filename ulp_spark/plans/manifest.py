@@ -7,8 +7,10 @@ manifest-based re-entry is ulp's actual resume semantic.
 
 Here the manifest records, per run: fixture size (null for a run over
 input files), route list, per-route schemas (type codes), per-route row
-counts, per-route sink paths and commit state.  ``resume_fanout`` skips
-routes already committed (their parquet written + recorded) — re-running
+counts, per-route sink paths and commit state, and — once the fan-out is
+done — the ``lineage`` rows of
+:func:`ulp_spark.operators.lineage.partition_lineage`.  ``resume_fanout``
+skips routes already committed (their parquet written + recorded) — re-running
 a half-finished job writes only the missing routes, with no duplicate and
 no loss.  ``job_status`` reads it back as ulp's ``GET /job``.  On a real
 deployment the commit token is the Iceberg snapshot id; directory-level

@@ -42,11 +42,15 @@ HIST_BUCKET = 64  # tokens-per-source histogram bucket width
 
 @dataclass
 class Pipeline:
-    sequences: DataFrame
+    """The built frames.  ``sequences``, ``routed_tokens`` and
+    ``source_token_hist`` join the fixture token payload onto the routed
+    lines by doc id; they are None for a file run (``lines_df`` given
+    without ``sequences_df``), whose doc ids name no sequence."""
+    sequences: DataFrame | None
     routed: DataFrame          # + fields, parser, parse_error, route
     route_counts: DataFrame    # (route, n_rows)
-    routed_tokens: DataFrame   # route + token payload, bitwise invariant
-    source_token_hist: DataFrame  # (source, bucket, n_rows, sum_tok)
+    routed_tokens: DataFrame | None   # route + token payload, bitwise invariant
+    source_token_hist: DataFrame | None  # (source, bucket, n_rows, sum_tok)
 
 
 def route_expr(parsed: DataFrame) -> Column:
@@ -75,7 +79,10 @@ def build(
 ) -> Pipeline:
     """``lines_df``: the ``(doc_id, line)`` input, e.g. files read by
     :func:`ulp_spark.sources.registry.read_lines`; default the
-    ``fixtures.raw_lines`` of ``n`` sequences.
+    ``fixtures.raw_lines`` of ``n`` sequences.  ``sequences_df``: the token
+    payload joined onto the routed lines; default ``fixtures.sequences``
+    of ``n`` for a fixture run, none (the token frames are None) when
+    ``lines_df`` is given alone.
 
     ``checkpoint``: None | "local".
 
@@ -92,10 +99,12 @@ def build(
     if checkpoint not in (None, "local"):
         raise ValueError(
             f"checkpoint must be None or 'local', got {checkpoint!r}")
-    seq = sequences_df if sequences_df is not None else fixtures.sequences(
-        spark, n, partitions)
-    lines = lines_df if lines_df is not None else fixtures.raw_lines(
-        spark, n, partitions)
+    if lines_df is None:
+        lines = fixtures.raw_lines(spark, n, partitions)
+        seq = sequences_df if sequences_df is not None else fixtures.sequences(
+            spark, n, partitions)
+    else:
+        lines, seq = lines_df, sequences_df
 
     parsed = parse.parse_lines(lines)
     enriched = enrich.enrich(parsed, fixtures.pattern_dict(spark), on="provider")
@@ -114,6 +123,10 @@ def build(
             "*", *parse.runtime_code_columns(fields))
 
     route_counts = fanout.route_counts(routed)
+    if seq is None:
+        return Pipeline(sequences=None, routed=routed,
+                        route_counts=route_counts, routed_tokens=None,
+                        source_token_hist=None)
 
     # Token payload join (doc -> doc_id): bitwise-equality carrier.
     routed_tokens = (

@@ -5,13 +5,20 @@ The reference's parallelism knob is ``ULP_WORKERS_N`` (default 8 OS threads,
 count; these defaults are what we'd set on a real 1000-executor cluster too
 (AQE on, Arrow on, sane shuffle partitioning), minus the cluster-only bits
 (dynamic allocation, external shuffle service) which are deploy-time configs.
+
+It also holds the two frame primitives every module shares: :func:`seam`,
+the one materialization, and :func:`local_frame`, the one way a
+driver-side table enters a plan.
 """
 
 from __future__ import annotations
 
+import operator
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+from ulp_spark.functions.sqltext import ident, lit
 
 # At 100 TB these would be overridden by deploy config; the *ratios* are what
 # matter: shuffle partitions ~ 2-3x total cores, 128 MiB scan splits,
@@ -91,6 +98,69 @@ def seam(df, eager: bool = False):
     if sc.getCheckpointDir() is not None:
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+# SQL text of one non-NULL value, per DDL scalar type.  A double goes in as
+# its repr string, which the cast reads back exactly (``nan`` and ``inf``
+# included); ints must be ints, not floats that happen to be whole.
+_LITERALS = {
+    "string": lit,
+    "int": lambda v: str(operator.index(v)),
+    "bigint": lambda v: str(operator.index(v)),
+    "double": lambda v: lit(repr(float(v))),
+}
+_TYPES = {*_LITERALS, *(f"array<{t}>" for t in _LITERALS)}
+
+
+def _value_sql(v, typ: str) -> str:
+    """``v`` as a ``typ`` SQL expression: a CAST of a literal, or an
+    ``array(...)`` of them for ``array<scalar>``."""
+    if v is None:
+        return f"CAST(NULL AS {typ})"
+    if typ.startswith("array<"):
+        elem = typ[len("array<"):-1]
+        return (f"CAST(array({', '.join(_value_sql(x, elem) for x in v)})"
+                f" AS {typ})")
+    return f"CAST({_LITERALS[typ](v)} AS {typ})"
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """``rows`` (tuples in the order of ``ddl``'s columns) as a frame:
+    the one way a driver-side table enters a plan in ``ulp_spark``.
+
+    Not ``spark.createDataFrame``: for a Python list that call is
+    ``sc.parallelize`` plus an identity ``map``, an RDD whose every
+    evaluation — each broadcast of a 3-row dimension included — runs
+    Python-worker tasks.  Here the rows become one ``VALUES`` inline
+    table of SQL text, which the analyzer folds into a JVM
+    ``LocalRelation`` (``LocalTableScan`` in the physical plan), so no
+    Python worker ever reads them.
+
+    Every value is a ``CAST`` of a literal to its column's DDL type:
+    strings go through :func:`ulp_spark.functions.sqltext.lit` (the same
+    under either setting of ``spark.sql.parser.escapedStringLiterals``),
+    a double through its repr string (exact, ``NaN``/``±Infinity``
+    included), a NULL as a typed NULL.  Types: string, int, bigint,
+    double and ``array<>`` of those; any other raises.  Zero rows give
+    an empty typed frame.  A column that holds a NULL is nullable; one
+    that holds none may not be (``createDataFrame`` makes every column
+    nullable)."""
+    cols = []
+    for spec in ddl.split(","):
+        name, typ = spec.split()
+        typ = typ.lower()
+        if typ not in _TYPES:
+            raise ValueError(f"local_frame: unsupported type {typ!r} in {ddl!r}")
+        cols.append((name, typ))
+    if not rows:
+        nulls = ", ".join(f"CAST(NULL AS {t}) AS {ident(n)}" for n, t in cols)
+        return spark.sql(f"SELECT {nulls} WHERE false")
+    values = ", ".join(
+        "(" + ", ".join(_value_sql(v, t)
+                        for v, (_, t) in zip(row, cols, strict=True)) + ")"
+        for row in rows)
+    names = ", ".join(ident(n) for n, _ in cols)
+    return spark.sql(f"SELECT * FROM VALUES {values} AS t({names})")
 
 
 def get_spark(

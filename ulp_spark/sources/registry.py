@@ -25,6 +25,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ulp_spark.session import local_frame
+
 # (format name, magic prefix) — checked in order, first match wins, like
 # the reference's match on the 8-byte header.
 MAGIC: list[tuple[str, bytes]] = [
@@ -88,8 +90,7 @@ def read_lines(spark: SparkSession, plan: dict[str, list[str]]) -> DataFrame:
     """
     paths = plan.get("kv_log")
     if not paths:
-        return spark.createDataFrame(
-            [], "doc_id string, path string, line string")
+        return local_frame(spark, [], "doc_id string, path string, line string")
     return (
         spark.read.text(paths)
         .select(F.input_file_name().alias("path"), F.col("value").alias("line"))
