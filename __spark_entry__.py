@@ -278,113 +278,6 @@ def _q_mm_frame_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_events_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Analytic window functions over the event stream (absent in the
-    reference — SURVEY §2.6 — present here as engine breadth)."""
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.select(
-        "user_id", "event_id",
-        F.row_number().over(w).alias("seq"),
-        F.round(F.col("value") - F.lag("value", 1, 0.0).over(w), 6).alias("delta"),
-    )
-
-
-def _q_events_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    total = ev.groupBy("user_id").agg(
-        F.sum(F.col("value").cast("decimal(18,2)")).alias("total_value"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-    return total.orderBy(F.desc("total_value"), F.col("user_id")).limit(5)
-
-
-def _q_lineitem_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1-shaped pricing summary.
-
-    Sums accumulate in exact decimals, then are EMITTED as rounded doubles:
-    the driver's value hash renders Spark decimal trailing zeros differently
-    from DuckDB's double fetch path (round-1 hash mismatch), so both engines
-    round-trip the final sums through one canonical primitive."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    d = lambda c: F.col(c).cast("decimal(18,2)")  # noqa: E731
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum(d("l_quantity")).cast("double"), 2).alias("sum_qty"),
-            F.round(F.sum(d("l_extendedprice")).cast("double"), 2)
-            .alias("sum_base_price"),
-            F.round(
-                F.sum((d("l_extendedprice")
-                       * (F.lit(1).cast("decimal(18,2)") - d("l_discount")))
-                      .cast("decimal(28,4)")).cast("double"), 2)
-            .alias("sum_disc_price"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-def _q_events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval-containment join WITHOUT a nested loop: every 20th event
-    opens a 5-minute interval; all events are bin-bucketized (exact
-    epoch-micros floor division) and equi-joined on the bin key, then the
-    exact predicate re-checked. Oracle is DuckDB's plain inequality
-    join."""
-    from ulp_spark.operators import ranges
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    pts = ev.select(F.col("event_id").alias("p_id"),
-                    F.col("ts").alias("p_ts"))
-    iv = ev.filter(F.col("event_id") % 20 == 0).select(
-        F.col("event_id").alias("iv_id"),
-        F.col("ts").alias("iv_start"),
-        (F.col("ts") + F.expr("INTERVAL 5 MINUTES")).alias("iv_end"))
-    j = ranges.range_join(pts, iv, "p_ts", "iv_start", "iv_end",
-                          bin_width_s=300)
-    return j.groupBy("iv_id").agg(
-        F.count(F.lit(1)).alias("n_points"),
-        F.sum("p_id").cast("bigint").alias("sum_p_id"))
-
-
-def _q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5-shaped 6-table join: region->nation->customer/supplier
-    dims broadcast (KiB-sized), two big-table shuffle joins
-    (orders-lineitem on the order key, then the supplier probe), revenue
-    only where the supplier and customer share a nation. Decimal
-    accumulation, rounded-double emission."""
-    rd = lambda t: spark.read.parquet(f"{sf_dir}/{t}.parquet")  # noqa: E731
-    nat = (rd("nation").join(
-        F.broadcast(rd("region").filter(F.col("r_name") == "ASIA")),
-        F.col("n_regionkey") == F.col("r_regionkey"))
-        .select("n_nationkey", "n_name"))
-    cust = rd("customer").join(
-        F.broadcast(nat), F.col("c_nationkey") == F.col("n_nationkey")) \
-        .select("c_custkey", F.col("n_nationkey").alias("c_nat"), "n_name")
-    supp = rd("supplier").select("s_suppkey",
-                                 F.col("s_nationkey").alias("s_nat"))
-    orders = (rd("orders")
-              .filter((F.col("o_orderdate") >= F.lit("1996-01-01"))
-                      & (F.col("o_orderdate") < F.lit("1997-01-01")))
-              .select("o_orderkey", "o_custkey"))
-    li = rd("lineitem").select("l_orderkey", "l_suppkey",
-                               "l_extendedprice", "l_discount")
-    d = lambda name: F.col(name).cast("decimal(18,2)")  # noqa: E731
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(supp), (F.col("l_suppkey") == F.col("s_suppkey"))
-              & (F.col("s_nat") == F.col("c_nat")))
-        .groupBy("n_name")
-        .agg(F.round(
-            F.sum((d("l_extendedprice")
-                   * (F.lit(1).cast("decimal(18,2)") - d("l_discount")))
-                  .cast("decimal(28,4)")).cast("double"), 2).alias("revenue"))
-    )
-
-
 def _q_doc_bigram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style fluency proxy: per-doc fraction of word-bigram
     occurrences whose corpus count >= 3 (exact integer statistics in
@@ -422,42 +315,6 @@ def _q_bpe_top_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vocab.bpe_top_merges(_docs(spark, sf_dir), "text", k=20)
 
 
-def _q_orders_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3-shaped shipping priority: selective filters pushed into
-    all three parquet scans, the filtered customer dim BROADCAST, one
-    shuffle join lineitem-orders on the order key, top-10 by revenue via
-    TakeOrderedAndProject (no global sort). Decimal accumulation + final
-    rounded-double emission per the lineitem_pricing_summary rule."""
-    c = (spark.read.parquet(f"{sf_dir}/customer.parquet")
-         .filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey"))
-    o = (spark.read.parquet(f"{sf_dir}/orders.parquet")
-         .filter(F.col("o_orderdate") < F.lit("1998-01-01"))
-         .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority"))
-    li = (spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-          .filter(F.col("l_shipdate") > F.lit("1998-01-01"))
-          .select("l_orderkey", "l_extendedprice", "l_discount"))
-    d = lambda name: F.col(name).cast("decimal(18,2)")  # noqa: E731
-    return (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.round(
-            F.sum((d("l_extendedprice")
-                   * (F.lit(1).cast("decimal(18,2)") - d("l_discount")))
-                  .cast("decimal(28,4)")).cast("double"), 2).alias("revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
-        .limit(10)
-    )
-
-
-def _q_doc_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
-    return d.rollup("source", "lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("sum_chars"),
-    )
-
-
 def _q_events_json_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ulp_spark.functions import fields as fields_fn
 
@@ -472,26 +329,6 @@ def _q_emb_bucket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _embs(spark, sf_dir)
     return similarity.embedding_near_dup(
         e, "embedding", "vec_id", dim=64, threshold=0.1)
-
-
-def _q_events_asof_click(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join: each purchase gets the latest prior-or-same click of
-    the same user (composition-of-builtins op; DuckDB ASOF JOIN oracle)."""
-    from ulp_spark.operators import asof
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "event_id", "ts")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "event_id", "ts", F.round("value", 6).alias("click_value"))
-    out = asof.asof_lookup(
-        purchases, clicks, keys=["user_id"], ts="ts",
-        right_seq="event_id", right_vals=["click_value"])
-    return out.select(
-        "user_id", "event_id",
-        F.col("asof_event_id").alias("click_event_id"),
-        F.col("asof_click_value").alias("click_value"),
-    )
 
 
 def _q_events_nested_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1278,39 +1115,6 @@ def _q_doc_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (30-min inactivity); all outputs are
-    time-difference based, so TZ-independent under any driver session."""
-    from ulp_spark.operators import sessions
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return sessions.sessionize(ev)
-
-
-def _q_events_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark's native session_window (the streaming-capable stateful
-    session aggregation), batch side; inclusive-end tie rule in the twin."""
-    from ulp_spark.operators import sessions
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return sessions.session_window_stats(ev)
-
-
-def _q_events_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling event-time windows (the streaming aggregate, batch side)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return (
-        ev.groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             # decimal-exact accumulation, double emission (see
-             # _q_lineitem_pricing for why the hasher needs one primitive)
-             F.round(F.sum(F.col("value").cast("decimal(18,2)"))
-                     .cast("double"), 2).alias("sum_value"))
-        .select(F.date_format("w.start", "yyyy-MM-dd").alias("day"),
-                "event_type", "n_events", "sum_value")
-    )
-
-
 # ---- corpus curation (repetition / passage dedup / decontamination / PII) --
 
 _STRAT_RATES = {"en": 10, "de": 50, "fr": 50, "es": 50, "zh": 20}
@@ -1440,9 +1244,7 @@ _PYTEST_ONLY = frozenset({
     "doc_passage_dedup",
     "doc_ngram_jaccard",
     "emb_ivf_cells_trained",
-    "events_range_join",
     "doc_bigram_coverage",
-    "events_windowed_deltas",
     "doc_profile",
     "doc_length_quantiles",
     "doc_simhash_candidates",
@@ -1453,7 +1255,6 @@ _PYTEST_ONLY = frozenset({
     "text_token_counts",
     "mm_features",
     "mm_frame_counts",
-    "events_topk_users",
     "emb_bucket_pairs",
     "seq_shard_manifest",
     "seq_source_drift",
@@ -1462,9 +1263,7 @@ _PYTEST_ONLY = frozenset({
     "seq_token_contamination",
     "events_value_anomalies",
     "doc_split_counts",
-    "events_sessions",
     "events_nested_schema",
-    "events_asof_click",
     "text_repetition",
     "events_pii_redact",
     "doc_stratified_sample",
@@ -1476,18 +1275,12 @@ _PYTEST_ONLY = frozenset({
     "sanitize_event_types",
     "doc_minhash_candidates",
     "doc_dedup_groups",
-    "orders_shipping_priority",
-    "local_supplier_volume",
-    "lineitem_pricing_summary",
     "doc_minhash",
     "doc_simhash",
     "emb_srp_buckets",
     "emb_ivf_cells",
-    "events_session_windows",
     "pipeline_routed_tokens_proof",
     "events_json_path",
-    "doc_rollup_counts",
-    "events_tumbling_counts",
 })
 
 
@@ -1518,13 +1311,10 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_winnow_candidates": _q_doc_winnow_candidates,
         "doc_simhash_candidates": _q_doc_simhash_candidates,
         "doc_dedup_groups": _q_doc_dedup_groups,
-        "orders_shipping_priority": _q_orders_shipping_priority,
         "vocab_topk": _q_vocab_topk,
         "bpe_top_merges": _q_bpe_top_merges,
         "doc_profile": _q_doc_profile,
-        "events_range_join": _q_events_range_join,
         "doc_bigram_coverage": _q_doc_bigram_coverage,
-        "local_supplier_volume": _q_local_supplier_volume,
         "emb_topk_cosine": _q_emb_topk,
         "emb_srp_buckets": _q_emb_srp_buckets,
         "text_langid": _q_text_langid,
@@ -1532,10 +1322,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_token_counts": _q_text_token_counts,
         "mm_features": _q_mm_features,
         "mm_frame_counts": _q_mm_frame_counts,
-        "events_windowed_deltas": _q_events_windowed,
-        "events_topk_users": _q_events_topk_users,
-        "lineitem_pricing_summary": _q_lineitem_pricing,
-        "doc_rollup_counts": _q_doc_rollup,
         "events_json_path": _q_events_json_path,
         "emb_bucket_pairs": _q_emb_bucket_pairs,
         "seq_packing_offsets": _q_seq_packing_offsets,
@@ -1591,14 +1377,10 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "seq_length_buckets": _q_seq_length_buckets,
         "doc_split_counts": _q_doc_split_counts,
         "doc_length_quantiles": _q_doc_length_quantiles,
-        "events_sessions": _q_events_sessions,
-        "events_session_windows": _q_events_session_windows,
-        "events_tumbling_counts": _q_events_tumbling_counts,
         "events_nested_schema": _q_events_nested_schema,
         "emb_ivf_cells": _q_emb_ivf_cells,
         "emb_ivf_cells_trained": _q_emb_ivf_cells_trained,
         "emb_ivf_topk": _q_emb_ivf_topk,
-        "events_asof_click": _q_events_asof_click,
         "text_repetition": _q_text_repetition,
         "doc_passage_dedup": _q_doc_passage_dedup,
         "doc_contamination": _q_doc_contamination,
@@ -2156,18 +1938,6 @@ def _split_counts_sql() -> str:
     """
 
 
-def _sessions_sql() -> str:
-    from ulp_spark.operators import sessions
-
-    return sessions.sessionize_sql("events")
-
-
-def _session_windows_sql() -> str:
-    from ulp_spark.operators import sessions
-
-    return sessions.session_window_stats_sql("events")
-
-
 def _nested_schema_oracle() -> str:
     """DuckDB twin of the recursive-lattice query.  The fixture's merged
     STRUCTURE is fixed by its two shapes (the reference's structural rules,
@@ -2360,57 +2130,12 @@ def _all_oracle_sql() -> dict[str, str]:
         "doc_dedup_groups": dedup.connected_components_sql(
             dedup.minhash_candidates_sql("documents", "text", "doc_id"),
             id_alias="doc_id"),
-        "events_range_join": """
-            WITH pts AS (SELECT event_id AS p_id, ts AS p_ts FROM events),
-            iv AS (
-              SELECT event_id AS iv_id, ts AS iv_start,
-                     ts + INTERVAL 5 MINUTE AS iv_end
-              FROM events WHERE event_id % 20 = 0
-            )
-            SELECT iv_id, count(*)::BIGINT AS n_points,
-                   sum(p_id)::BIGINT AS sum_p_id
-            FROM iv JOIN pts ON p_ts >= iv_start AND p_ts < iv_end
-            GROUP BY iv_id
-        """,
-        "local_supplier_volume": """
-            SELECT n_name,
-                   round(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2))
-                            * (CAST(1 AS DECIMAL(18,2))
-                               - CAST(l_discount AS DECIMAL(18,2)))
-                       AS DECIMAL(28,4)))::DOUBLE, 2) AS revenue
-            FROM lineitem
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            JOIN supplier ON l_suppkey = s_suppkey
-                         AND s_nationkey = c_nationkey
-            JOIN nation ON c_nationkey = n_nationkey
-            JOIN region ON n_regionkey = r_regionkey
-            WHERE r_name = 'ASIA'
-              AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-              AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-            GROUP BY n_name
-        """,
         "doc_profile": _profiling.profile_table_sql(
             "documents", ["doc_id", "lang", "source", "n_chars"]),
         "vocab_topk": _vocab.vocab_topk_sql("documents", "text", k=50),
         "doc_bigram_coverage": _vocab.bigram_coverage_sql(
             "documents", "text", "doc_id", min_count=3),
         "bpe_top_merges": _vocab.bpe_top_merges_sql("documents", "text", k=20),
-        "orders_shipping_priority": """
-            SELECT l_orderkey, o_orderdate, o_orderpriority,
-                   round(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2))
-                            * (CAST(1 AS DECIMAL(18,2))
-                               - CAST(l_discount AS DECIMAL(18,2)))
-                       AS DECIMAL(28,4)))::DOUBLE, 2) AS revenue
-            FROM lineitem
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            WHERE c_mktsegment = 'BUILDING'
-              AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-              AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
-            GROUP BY l_orderkey, o_orderdate, o_orderpriority
-            ORDER BY revenue DESC, l_orderkey LIMIT 10
-        """,
         "emb_topk_cosine": """
             SELECT e.vec_id,
                    round(list_cosine_similarity(e.embedding::DOUBLE[],
@@ -2466,40 +2191,6 @@ def _all_oracle_sql() -> dict[str, str]:
                                         FOR o IN range(0, len(text), 16)],
                                        'sum') AS BIGINT) AS frame_bytes
             FROM documents
-        """,
-        "events_windowed_deltas": """
-            SELECT user_id, event_id,
-                   CAST(row_number() OVER w AS INTEGER) AS seq,
-                   round(value - lag(value, 1, 0.0) OVER w, 6) AS delta
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        """,
-        "events_topk_users": """
-            SELECT user_id,
-                   sum(CAST(value AS DECIMAL(18,2))) AS total_value,
-                   count(*)::BIGINT AS n_events
-            FROM events GROUP BY user_id
-            ORDER BY total_value DESC, user_id LIMIT 5
-        """,
-        "lineitem_pricing_summary": """
-            SELECT l_returnflag, l_linestatus,
-                   round(sum(CAST(l_quantity AS DECIMAL(18,2)))::DOUBLE, 2)
-                     AS sum_qty,
-                   round(sum(CAST(l_extendedprice AS DECIMAL(18,2)))::DOUBLE, 2)
-                     AS sum_base_price,
-                   round(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2))
-                            * (CAST(1 AS DECIMAL(18,2))
-                               - CAST(l_discount AS DECIMAL(18,2)))
-                       AS DECIMAL(28,4)))::DOUBLE, 2) AS sum_disc_price,
-                   count(*)::BIGINT AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-            GROUP BY l_returnflag, l_linestatus
-        """,
-        "doc_rollup_counts": """
-            SELECT source, lang, count(*)::BIGINT AS n_docs,
-                   sum(n_chars)::BIGINT AS sum_chars
-            FROM documents GROUP BY ROLLUP (source, lang)
         """,
         "events_json_path": """
             SELECT event_id, json_extract_string(props, '$.k') AS k_str
@@ -2577,34 +2268,6 @@ def _all_oracle_sql() -> dict[str, str]:
                    round(quantile_cont(n_chars, 0.9), 6) AS p90,
                    round(quantile_cont(n_chars, 0.99), 6) AS p99
             FROM documents GROUP BY source
-        """,
-        "events_sessions": _sessions_sql(),
-        "events_session_windows": _session_windows_sql(),
-        "events_tumbling_counts": """
-            SELECT strftime(time_bucket(INTERVAL '1 day', ts), '%Y-%m-%d') AS day,
-                   event_type,
-                   count(*)::BIGINT AS n_events,
-                   round(sum(CAST(value AS DECIMAL(18,2)))::DOUBLE, 2) AS sum_value
-            FROM events
-            GROUP BY day, event_type
-        """,
-        "events_asof_click": """
-            WITH clicks AS (
-              SELECT user_id, ts, max(event_id) AS event_id,
-                     round(max_by(value, event_id), 6) AS click_value
-              FROM events WHERE event_type = 'click'
-              GROUP BY user_id, ts
-            ),
-            purchases AS (
-              SELECT user_id, event_id, ts FROM events
-              WHERE event_type = 'purchase'
-            )
-            SELECT p.user_id, p.event_id,
-                   c.event_id AS click_event_id,
-                   c.click_value
-            FROM purchases p
-            ASOF LEFT JOIN clicks c
-              ON p.user_id = c.user_id AND p.ts >= c.ts
         """,
         "events_nested_schema": _nested_schema_oracle(),
         # IVF oracles recompute the deterministic centroids (8 smallest ids)

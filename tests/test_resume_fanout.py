@@ -191,65 +191,6 @@ def test_content_digest_partition_invariant(spark, content_digest):
     assert content_digest(c) != content_digest(a)
 
 
-def test_streaming_session_windows_match_batch(spark, tmp_path):
-    """The docstring claim of sessions.session_window_stats, proven: the
-    SAME groupBy runs as a stateful streaming session aggregation (stream +
-    watermark, append mode) and emits the batch-identical session set once
-    the watermark passes them (append mode flushes only CLOSED sessions —
-    a later batch advances the watermark, exactly as a live feed would)."""
-    from pyspark.sql import functions as F2
-
-    from ulp_spark.operators import sessions
-
-    rows = []
-    for u in range(5):
-        for k in range(6):
-            # two bursts per user separated by > 30 min
-            base = k * 300 if k < 3 else 3600 + k * 300
-            rows.append((u, u * 100 + k, base))
-    src = str(tmp_path / "src")
-
-    def write(batch_rows):
-        spark.createDataFrame(batch_rows, "user_id long, event_id long, off long") \
-            .select("user_id", "event_id",
-                    (F2.lit("2024-01-01 00:00:00").cast("timestamp")
-                     + F2.make_interval(secs=F2.col("off"))).alias("ts")) \
-            .write.mode("append").parquet(src)
-
-    write(rows)
-    batch = sessions.session_window_stats(spark.read.parquet(src))
-    exp = sorted(tuple(r) for r in batch.collect())
-
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-
-    def run_stream():
-        stream = spark.readStream.schema(
-            "user_id long, event_id long, ts timestamp").parquet(src)
-        agg = (
-            stream.withWatermark("ts", "10 minutes")
-            .groupBy("user_id",
-                     F2.session_window(F2.col("ts"), "30 minutes").alias("w"))
-            .agg(F2.count(F2.lit(1)).alias("n_events"),
-                 F2.min("event_id").alias("first_event_id"),
-                 (F2.max(F2.unix_micros("ts")) - F2.min(F2.unix_micros("ts")))
-                 .alias("duration_us"))
-            .drop("w")
-        )
-        q = (agg.writeStream.format("parquet").option("path", sink)
-             .option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    run_stream()
-    # sentinel event far in the future advances the watermark past every
-    # real session's close; its own (still-open) session is excluded below
-    write([(99, 9900, 3 * 3600)])
-    run_stream()
-    got = sorted(tuple(r) for r in spark.read.parquet(sink).collect()
-                 if r.user_id != 99)
-    assert got == exp
-
-
 def test_streaming_vocab_counts_match_batch(spark, tmp_path):
     """Streaming word counts (complete mode, checkpointed state carried
     across two availableNow rounds) equal the batch vocabulary over the
@@ -279,49 +220,6 @@ def test_streaming_vocab_counts_match_batch(spark, tmp_path):
     exp = {r.word: r.n
            for r in vocab.word_counts(spark.read.parquet(src), "text").collect()}
     assert got == exp and got["the"] == 3 and got["cat"] == 3
-
-
-def test_streaming_watermark_drops_late_rows(spark, tmp_path):
-    """Append-mode windowed count with a 10-minute watermark: a row
-    arriving in a later micro-batch but timestamped far before the
-    advanced watermark is DROPPED (its window already closed and was
-    emitted); an on-time row for an open window still lands."""
-    src, sink, ckpt = (str(tmp_path / d) for d in ("src", "sink", "ckpt"))
-
-    def write(rows):
-        spark.createDataFrame(rows, "event_id long, off long") \
-            .select("event_id",
-                    (F.lit("2024-01-01 00:00:00").cast("timestamp")
-                     + F.make_interval(secs=F.col("off"))).alias("ts")) \
-            .write.mode("append").parquet(src)
-
-    def run():
-        stream = spark.readStream.schema("event_id long, ts timestamp") \
-            .parquet(src)
-        agg = (stream.withWatermark("ts", "10 minutes")
-               .groupBy(F.window("ts", "5 minutes").alias("w"))
-               .agg(F.count(F.lit(1)).alias("n"))
-               .select(F.col("w.start").alias("w_start"), "n"))
-        q = (agg.writeStream.format("parquet").option("path", sink)
-             .option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    # batch 1: two rows in window [0,5m) + a row at t=60m that advances
-    # the watermark to 50m, closing (and emitting) the [0,5m) window.
-    write([(1, 0), (2, 60), (3, 3600)])
-    run()
-    # batch 2: a LATE row for the closed [0,5m) window (must be dropped)
-    # and an on-time row near the frontier (window still open, held in
-    # state, not yet emitted in append mode).
-    write([(4, 120), (5, 3660)])
-    run()
-    got = {r.w_start.strftime("%H:%M"): r.n
-           for r in spark.read.parquet(sink).collect()}
-    assert got.get("00:00") == 2          # late row 4 did NOT bump it
-    # frontier window [60m, 65m): usually still held in state; if an
-    # engine change ever emits it, it must hold BOTH frontier rows.
-    assert got.get("01:00") in (None, 2)
 
 
 def test_job_status_summary(tmp_path):

@@ -87,7 +87,7 @@ def test_cast_single_pass_missing_field_error_is_false_not_null(spark):
 
     df = spark.createDataFrame(
         [("A", "abc"), ("B", "abc")], "route string, f string")
-    df = df.select("*", F.lit(sn.STR).alias("f__r"))
+    df = df.select("*", F.lit(sn.STR).alias("f__t"))
     schemas = {"A": {"f": sn.INT}, "B": {}}  # B has no target for f
     out = route_cast.cast_single_pass(df, schemas, ["f"])
     rows = {r.route: r.cast_error for r in out.collect()}
@@ -106,7 +106,7 @@ def test_bool_cast_failure_is_null_in_both_cast_shapes(spark):
     df = spark.createDataFrame(
         [(1, "A", "1", sn.INT), (2, "A", "5", sn.INT),
          (3, "A", "maybe", sn.STR)],
-        "doc_id long, route string, f string, f__r int")
+        "doc_id long, route string, f string, f__t int")
     schemas = {"A": {"f": sn.BOOL}}
     typed = {r.doc_id: (r.f, r.cast_error) for r in route_cast.cast_per_route(
         df, schemas, ["f"])["A"].collect()}
@@ -139,7 +139,6 @@ def test_cast_per_route_matches_single_pass_for_every_target(spark):
             if not (t == sn.INT and v == "1.7976931348623157e308")]
     df = spark.createDataFrame(rows, "doc_id long, route string, f string")
     df = df.selectExpr("*", f"{sn.sniff_code(ident('f'))} AS f__t")
-    df = df.selectExpr("*", *parse.runtime_code_columns(["f"]))
     schemas = {f"t{t}": {"f": t} for t in range(8)}
     native = {sn.NULL: "string", sn.BOOL: "boolean", sn.INT: "bigint",
               sn.FLOAT: "double", sn.IPV4: "string", sn.IPV6: "string",
@@ -171,7 +170,7 @@ def test_cast_single_pass_ipv6_branch(spark):
     df = spark.createDataFrame(
         [("A", "0:0:0:0:0:0:0:1"), ("A", "::FFFF:1.2.3.4"),
          ("B", "0:0:0:0:0:0:0:1"), ("C", "12")], "route string, f string")
-    df = df.select("*", F.lit(sn.STR).alias("f__r"))
+    df = df.select("*", F.lit(sn.STR).alias("f__t"))
     schemas = {"A": {"f": sn.IPV6}, "B": {"f": sn.STR}, "C": {"f": sn.INT}}
     out = route_cast.cast_single_pass(df, schemas, ["f"])
     assert sorted(tuple(r) for r in out.select(

@@ -290,28 +290,6 @@ def test_packing_offsets_chunks(spark):
                    "c": (512, 1, 2), "d": (1112, 2, 1)}
 
 
-def test_session_boundary_tie_rules(spark):
-    """An event landing EXACTLY at prev_ts + gap MERGES under BOTH the
-    native session_window (inclusive session end, verified empirically)
-    and the manual composition (strict diff > gap) — pinned so an
-    upstream Spark semantic change would be caught."""
-    from ulp_spark.operators import sessions
-
-    rows = [(1, 100, "2024-01-01 00:00:00"),
-            (1, 101, "2024-01-01 00:30:00"),     # exactly at the 30-min gap
-            (1, 102, "2024-01-01 01:30:01"),     # past the gap from 101
-            (2, 200, "2024-01-01 00:00:00")]
-    df = spark.createDataFrame(rows, "user_id long, event_id long, t string") \
-        .select("user_id", "event_id",
-                F.col("t").cast("timestamp_ntz").alias("ts"))
-    manual = sessions.sessionize(df)
-    assert sorted((r.user_id, r.n_events) for r in manual.collect()) \
-        == [(1, 1), (1, 2), (2, 1)]              # 100+101 merge (> rule)
-    native = sessions.session_window_stats(df)
-    assert sorted((r.user_id, r.n_events) for r in native.collect()) \
-        == [(1, 1), (1, 2), (2, 1)]              # 101 merges here too
-
-
 # --------------------------------------------------------------------------
 # curation: repetition / passage dedup / contamination / PII / stratified
 # --------------------------------------------------------------------------
@@ -552,47 +530,6 @@ def test_profile_table_null_handling(spark):
         assert tuple(got[c]) == want[c]
 
 
-def test_range_join_boundaries_and_bins(spark):
-    """start-inclusive / end-exclusive, intervals spanning multiple bins,
-    inverted intervals, and pairs meeting in exactly one bin (no dupes);
-    matched against DuckDB's plain inequality join."""
-    from ulp_spark.operators import ranges
-
-    pts = spark.createDataFrame(
-        [(i, f"2024-01-01 00:{m:02d}:{s:02d}")
-         for i, (m, s) in enumerate([(0, 0), (4, 59), (5, 0), (9, 59),
-                                     (10, 0), (59, 59)])],
-        "p_id long, p_ts string").select(
-            "p_id", F.col("p_ts").cast("timestamp_ntz").alias("p_ts"))
-    iv = spark.createDataFrame(
-        [(100, "2024-01-01 00:00:00", "2024-01-01 00:05:00"),   # [0, 5min)
-         (101, "2024-01-01 00:04:59", "2024-01-01 00:10:00"),   # spans bins
-         (102, "2024-01-01 00:10:00", "2024-01-01 00:10:00"),   # empty
-         (103, "2024-01-01 00:10:00", "2024-01-01 00:09:00")],  # inverted
-        "iv_id long, s string, e string").select(
-            "iv_id", F.col("s").cast("timestamp_ntz").alias("iv_start"),
-            F.col("e").cast("timestamp_ntz").alias("iv_end"))
-    got = sorted((r.p_id, r.iv_id) for r in ranges.range_join(
-        pts, iv, "p_ts", "iv_start", "iv_end", bin_width_s=300).collect())
-    want_pairs = duckdb.sql("""
-        WITH pts(p_id, p_ts) AS (VALUES
-          (0, TIMESTAMP '2024-01-01 00:00:00'),
-          (1, TIMESTAMP '2024-01-01 00:04:59'),
-          (2, TIMESTAMP '2024-01-01 00:05:00'),
-          (3, TIMESTAMP '2024-01-01 00:09:59'),
-          (4, TIMESTAMP '2024-01-01 00:10:00'),
-          (5, TIMESTAMP '2024-01-01 00:59:59')),
-        iv(iv_id, s, e) AS (VALUES
-          (100, TIMESTAMP '2024-01-01 00:00:00', TIMESTAMP '2024-01-01 00:05:00'),
-          (101, TIMESTAMP '2024-01-01 00:04:59', TIMESTAMP '2024-01-01 00:10:00'),
-          (102, TIMESTAMP '2024-01-01 00:10:00', TIMESTAMP '2024-01-01 00:10:00'),
-          (103, TIMESTAMP '2024-01-01 00:10:00', TIMESTAMP '2024-01-01 00:09:00'))
-        SELECT p_id, iv_id FROM pts JOIN iv ON p_ts >= s AND p_ts < e
-    """).fetchall()
-    assert got == sorted(want_pairs)
-    assert len(got) == len(set(got))  # one row per matching pair
-
-
 def test_connected_components_raises_without_convergence(spark, monkeypatch):
     import pytest as _pytest
 
@@ -644,50 +581,6 @@ def test_connected_components_job_budget_per_round(spark, count_jobs):
     _, two = count_jobs(lambda: rounds(2))
     assert one <= 13, one
     assert two - one <= 10, (one, two)
-
-
-def test_range_join_instant_timestamps_across_dst_fold(spark):
-    """TIMESTAMP (instant) inputs must go through unix_micros: casting to
-    NTZ reads the session wall clock, which repeats itself across a DST
-    fall-back and made an interval spanning the fold look inverted
-    (silently dropping the match)."""
-    from datetime import datetime, timezone
-
-    from ulp_spark.operators import ranges
-
-    us = lambda *a: int(datetime(*a, tzinfo=timezone.utc).timestamp() * 1e6)  # noqa: E731
-    old = spark.conf.get("spark.sql.session.timeZone")
-    try:
-        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-        pts = spark.createDataFrame(
-            [(1, us(2024, 11, 3, 5, 59))], "p_id long, m long"
-        ).select("p_id", F.timestamp_micros("m").alias("p_ts"))
-        iv = spark.createDataFrame(
-            [(9, us(2024, 11, 3, 5, 58), us(2024, 11, 3, 6, 3))],
-            "iv_id long, s long, e long"
-        ).select("iv_id", F.timestamp_micros("s").alias("iv_start"),
-                 F.timestamp_micros("e").alias("iv_end"))
-        got = ranges.range_join(pts, iv, "p_ts", "iv_start", "iv_end",
-                                bin_width_s=300).collect()
-        assert [(r.p_id, r.iv_id) for r in got] == [(1, 9)]
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", old)
-
-
-def test_range_join_rejects_mixed_timestamp_types(spark):
-    import pytest as _pytest
-
-    from ulp_spark.operators import ranges
-
-    pts = spark.createDataFrame([(1, 0)], "p_id long, m long").select(
-        "p_id", F.timestamp_micros("m").alias("p_ts"))
-    iv = spark.createDataFrame([(9, "2024-01-01 00:00:00",
-                                 "2024-01-01 01:00:00")],
-                               "iv_id long, s string, e string").select(
-        "iv_id", F.col("s").cast("timestamp_ntz").alias("iv_start"),
-        F.col("e").cast("timestamp_ntz").alias("iv_end"))
-    with _pytest.raises(ValueError, match="one timestamp type"):
-        ranges.range_join(pts, iv, "p_ts", "iv_start", "iv_end")
 
 
 def test_profile_table_double_rendering_matches_duckdb(spark):
@@ -1143,16 +1036,22 @@ _DEF_ALLOW = {
     "ulp_spark/operators/route_cast.py:cast_per_route",
 }
 
+# __spark_entry__.py's contract functions: its other defs count as
+# reached only through these.
+_ENTRY_ROOTS = {"entry", "queries", "oracle_sql", "retired_queries",
+                "retired_oracle_sql"}
+
 
 def test_every_package_def_is_referenced():
-    """Dead-code guard: every top-level def/class in ulp_spark/ is
-    reachable from code that runs outside tests, or sits on the
-    allow-list above.  The roots are every file of ``_caller_files``
-    except the package's own defs, plus the package's module-level
-    statements; a def is reached once a root or a reached def names it
-    (Name, Attribute, import alias or a string that parses as one).  A
-    plain reference count would let two dead functions keep each other
-    alive, and counting tests would let a test keep its own subject
+    """Dead-code guard: every top-level def/class in ulp_spark/ and
+    __spark_entry__.py is reachable from code that runs outside tests,
+    or sits on the allow-list above.  The roots are every file of
+    ``_caller_files`` except the defs of those two, plus their
+    module-level statements and the entry module's contract functions
+    (``_ENTRY_ROOTS``); a def is reached once a root or a reached def
+    names it (Name, Attribute, import alias or a string that parses as
+    one).  A plain reference count would let two dead functions keep each
+    other alive, and counting tests would let a test keep its own subject
     alive."""
     import ast
     import pathlib
@@ -1161,6 +1060,7 @@ def test_every_package_def_is_referenced():
 
     pkg = pathlib.Path(ulp_spark.__file__).parent
     repo = pkg.parent
+    entry_file = repo / "__spark_entry__.py"
 
     def names(node):
         out = set()
@@ -1178,13 +1078,14 @@ def test_every_package_def_is_referenced():
     roots: set[str] = set()
     for p in _caller_files(repo):
         for top in ast.parse(p.read_text()).body:
-            if pkg in p.parents and isinstance(
+            if (pkg in p.parents or p == entry_file) and isinstance(
                     top, (ast.FunctionDef, ast.AsyncFunctionDef,
                           ast.ClassDef)):
                 defs.setdefault(top.name, []).append(
                     (f"{p.relative_to(repo)}:{top.name}", top))
             else:
                 roots |= names(top)
+    roots |= _ENTRY_ROOTS
     reached: set[str] = set()
     todo = sorted(roots & defs.keys())
     while todo:

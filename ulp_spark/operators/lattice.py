@@ -30,15 +30,11 @@ from ulp_spark.functions import sniff, sqltext
 from ulp_spark.functions.sqltext import ident, lit
 
 
-def field_masks(df: DataFrame, fields: list[str]) -> list:
-    """bit_or aggregates per field; reuses parse-stage ``<f>__t`` sniff codes
-    when present (one regex battery per value, total — not one per stage)."""
-    aggs = []
-    for f in fields:
-        code = (ident(f"{f}__t") if f"{f}__t" in df.columns
-                else sniff.sniff_code(ident(f)))
-        aggs.append(sqltext.column(f"bit_or({sniff.code_mask(code)})", f))
-    return aggs
+def field_masks(fields: list[str]) -> list:
+    """bit_or aggregates per field over the parse stage's ``<f>__t`` sniff
+    codes (one regex battery per value, total — not one per stage)."""
+    return [sqltext.column(f"bit_or({sniff.code_mask(ident(f + '__t'))})", f)
+            for f in fields]
 
 
 def route_schemas(df: DataFrame, fields: list[str]
@@ -49,7 +45,7 @@ def route_schemas(df: DataFrame, fields: list[str]
     collected to a driver dict that the cast stage ships back as its
     broadcast dimension (J1, ``route_cast.schema_dim``).
     """
-    rows = df.groupBy("route").agg(*field_masks(df, fields)).collect()
+    rows = df.groupBy("route").agg(*field_masks(fields)).collect()
     return {
         r["route"]: {f: sniff.resolve_mask_py(r[f]) for f in fields if r[f] is not None}
         for r in rows
@@ -58,7 +54,7 @@ def route_schemas(df: DataFrame, fields: list[str]
 
 def route_schema_frame(df: DataFrame, fields: list[str]) -> DataFrame:
     """A2 as a DataFrame (route, field, type_code) — oracle-comparable."""
-    masks = df.groupBy("route").agg(*field_masks(df, fields))
+    masks = df.groupBy("route").agg(*field_masks(fields))
     pairs = ", ".join(
         f"named_struct({lit('field')}, {lit(f)},"
         f" {lit('type_code')}, {sniff.resolve_mask(ident(f))})"

@@ -78,9 +78,9 @@ def parse_lines(df: DataFrame) -> DataFrame:
     """Parse the ``line`` column with :data:`DEFAULT_PATTERNS` into typed
     fields + parser tag + error flag.
 
-    Adds per field ``f``: the raw extracted text ``f``, its sniffed map-type
-    code ``f__t`` and runtime code ``f__r`` (see functions.sniff docstrings).
-    Missing field / no match -> NULL (never "").
+    Adds per field ``f``: the raw extracted text ``f`` and its sniffed
+    map-type code ``f__t`` (see functions.sniff docstrings).  Missing field
+    / no match -> NULL (never "").
 
     Group extraction runs ONE regex execution per row for the matching
     pattern — ``regexp_replace`` rewrites the line to its groups joined by
@@ -138,17 +138,9 @@ def parse_lines(df: DataFrame) -> DataFrame:
     stage2 = stage1.selectExpr(
         "*", "`parser` IS NULL AS parse_error", *value_cols
     ).drop(*[f"__g_{p.name}" for p in patterns])
-    stage3 = stage2.selectExpr(
+    return stage2.selectExpr(
         "*", *[f"{sniff.sniff_code(ident(f))} AS {ident(f + '__t')}"
                for f in fields])
-    return stage3.selectExpr("*", *runtime_code_columns(fields))
-
-
-def runtime_code_columns(fields: Sequence[str]) -> list[str]:
-    """``<f>__r`` select items: the materialized runtime code of each
-    field from its value and its sniffed ``<f>__t`` code."""
-    return [f"{sniff.materialized_runtime_code(ident(f), ident(f + '__t'))}"
-            f" AS {ident(f + '__r')}" for f in fields]
 
 
 def parse_sql(line_expr: str) -> dict[str, str]:

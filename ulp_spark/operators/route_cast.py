@@ -63,9 +63,10 @@ def cast_single_pass(
     route_schemas: dict[str, dict[str, int]],
     fields: list[str],
 ) -> DataFrame:
-    """All routes in one pass; adds ``<f>__cast`` string columns +
-    ``cast_error``.  Rows whose route is absent from the schema dict get
-    ``cast_error = true`` (the reference's unseen-route error,
+    """All routes in one pass over a frame of parsed records (each field
+    ``<f>`` with its sniff code ``<f>__t``); adds ``<f>__cast`` string
+    columns + ``cast_error``.  Rows whose route is absent from the schema
+    dict get ``cast_error = true`` (the reference's unseen-route error,
     ``src/type_map.rs:193-196``).
 
     Plan shape (matters at every scale):
@@ -73,7 +74,8 @@ def cast_single_pass(
       lookup is a hash probe, not a |routes|-deep when-cascade;
     * casts branch over the DISTINCT TARGET TYPES a field takes across all
       routes (<= 8, usually 1-2), keyed by the joined ``<f>__target`` code;
-    * shared str_int/str_bool/str_float helpers are computed once per field.
+    * the runtime code and the shared str_int/str_bool/str_float helpers
+      are computed once per field and row.
     A naive per-route expression cascade is O(fields x routes x |helpers|)
     after optimizer inlining — observed to wedge Catalyst and OOM the JVM.
     """
@@ -97,23 +99,28 @@ def cast_single_pass(
     }
     helper_fields = [f for f in fields
                      if _HELPER_TARGETS & set(field_targets[f])]
+    # Each field's runtime code <f>__r (the JSON type its value would
+    # materialize as, from the value and its sniff code <f>__t) is a staged
+    # column like the helpers: inlined into every target branch, its
+    # finite-float check would run once per branch.
+    runtime_codes = [
+        f"{sniff.materialized_runtime_code(ident(f), ident(f + '__t'))}"
+        f" AS {ident(f + '__r')}" for f in fields]
     staged = (
         df.join(broadcast(dim.withColumn("__known", F.lit(True))),
                 on="route", how="left")
-        .selectExpr("*", *[c for f in helper_fields
-                           for c in casts.helper_columns(f)])
+        .selectExpr("*", *runtime_codes,
+                    *[c for f in helper_fields
+                      for c in casts.helper_columns(f)])
     )
     err_any = "coalesce(`__known`, false) = false"
     out_cols: list[Column] = []
     for f in fields:
         value, rcode = ident(f), ident(f"{f}__r")
-        # the parse stage's sniff verdict rides along so the DATE cast can
-        # test it instead of re-running the calendar regex per row
-        # (casts.cast_field docstring proves the predicate equivalence);
-        # frames without a __t column (not the pipeline shape) keep the
-        # regex path
-        helpers = dict(sniff_code=(ident(f"{f}__t")
-                                   if f"{f}__t" in df.columns else None))
+        # the sniff verdict also lets the DATE cast test it instead of
+        # re-running the calendar regex per row (casts.cast_field
+        # docstring proves the predicate equivalence)
+        helpers = dict(sniff_code=ident(f"{f}__t"))
         if f in helper_fields:
             helpers.update(iv=ident(f"{f}__iv"), bv=ident(f"{f}__bv"),
                            fv=ident(f"{f}__fv"))
@@ -138,7 +145,8 @@ def cast_single_pass(
                 F.when(F.expr(f"{tcol} = {sniff.IPV6}"),
                        casts.ipv6_canonical(F.expr(ipv6)))
                 .otherwise(F.expr(casted)).alias(f"{f}__cast"))
-    drop_cols = [f"{f}__{s}" for f in fields for s in ("iv", "bv", "fv", "target")]
+    drop_cols = [f"{f}__{s}" for f in fields
+                 for s in ("r", "iv", "bv", "fv", "target")]
     drop_cols.append("__known")
     return (
         staged.select("*", *out_cols,

@@ -111,16 +111,10 @@ def build(
     routed = enriched.withColumn("route", route_expr(enriched))
     if checkpoint:
         # Slim the materialized table: raw line kept only for quarantined
-        # rows (its one consumer — forensics/re-parse), and the derived
-        # __r runtime codes recomputed after the read (cheap expressions
-        # over persisted value+__t columns).  Persisted width drives the
-        # seam's write cost at every scale.
-        fields = parse.all_fields(parse.DEFAULT_PATTERNS)
-        routed = routed.withColumn(
-            "line", F.expr("CASE WHEN parse_error THEN line END")
-        ).drop(*[f"{f}__r" for f in fields])
-        routed = seam(routed, eager=True).selectExpr(
-            "*", *parse.runtime_code_columns(fields))
+        # rows (its one consumer — forensics/re-parse).  Persisted width
+        # drives the seam's write cost at every scale.
+        routed = seam(routed.withColumn(
+            "line", F.expr("CASE WHEN parse_error THEN line END")), eager=True)
 
     route_counts = fanout.route_counts(routed)
     if seq is None:
