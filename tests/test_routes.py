@@ -169,31 +169,68 @@ def test_plan_construction_py4j_budget(spark, monkeypatch):
 
 def test_dimensions_are_local_table_scans(spark):
     """Both broadcast dimensions of ulp's job — enrich's pattern_dict and
-    the cast's route -> schema map — are JVM ``LocalTableScan``s: no
-    ``Scan ExistingRDD``, so no Python worker runs for either."""
+    the cast's route -> schema map — are JVM ``LocalTableScan``s, so no
+    Python worker runs for either: the enrich frame below build's seam
+    scans no RDD, and the cast plan's one ``Scan ExistingRDD`` is the
+    seam itself."""
     from ulp_spark import fixtures
-    from ulp_spark.operators import lattice, parse, route_cast
+    from ulp_spark.operators import enrich, lattice, parse, route_cast
     from ulp_spark.plans import pipeline
 
     fields = parse.all_fields(parse.DEFAULT_PATTERNS)
-    p = pipeline.build(spark, lines_df=fixtures.raw_lines(spark, 50),
+    lines = fixtures.raw_lines(spark, 50)
+    enriched = enrich.enrich(parse.parse_lines(lines),
+                             fixtures.pattern_dict(spark), on="provider")
+    p = pipeline.build(spark, lines_df=lines,
                        sequences_df=fixtures.sequences(spark, 50))
     ok = p.routed.filter(~F.col("parse_error"))
     casted = route_cast.cast_single_pass(
         ok, lattice.route_schemas(ok, fields), fields)
 
-    def local_scans(df):
-        """The output lines of the formatted plan's LocalTableScans."""
-        plan = df._jdf.queryExecution().explainString(
+    def formatted(df):
+        return df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"))
-        assert "Scan ExistingRDD" not in plan
+
+    def local_scans(plan):
+        """The output lines of the formatted plan's LocalTableScans."""
         return re.findall(r"\) LocalTableScan\nOutput \[\d+\]: (.*)", plan)
 
-    routed, cast = local_scans(p.routed), local_scans(casted)
-    assert any("category#" in s for s in routed)          # pattern_dict
-    assert any("category#" in s for s in cast)
-    assert any("ts__target#" in s for s in cast)          # schema_dim
+    enrich_plan, cast_plan = formatted(enriched), formatted(casted)
+    assert "Scan ExistingRDD" not in enrich_plan
+    assert any("category#" in s for s in local_scans(enrich_plan))  # pattern_dict
+    assert len(re.findall(r"\) Scan ExistingRDD\n", cast_plan)) == 1  # seam
+    assert any("ts__target#" in s for s in local_scans(cast_plan))  # schema_dim
+
+
+def test_cast_over_lazy_build_compiles(spark):
+    """Both forms of ``build(...).routed`` are one checkpoint scan, so a
+    cast and filter over the lazy form compile: over the unseamed parse
+    derivation the stage's generated code outgrows Janino's 64 KB method
+    limit, which codegen fallback would hide behind minutes of
+    interpreted execution."""
+    from ulp_spark.operators import lattice, parse, route_cast
+    from ulp_spark.plans import pipeline
+
+    fields = parse.all_fields(parse.DEFAULT_PATTERNS)
+    not_err = ~F.col("parse_error")
+    eager = pipeline.build(spark, n=200, checkpoint="local").routed
+    schemas = lattice.route_schemas(eager.filter(not_err), fields)
+
+    def n_cast(routed):
+        return route_cast.cast_single_pass(
+            routed.filter(not_err), schemas, fields
+        ).filter(~F.col("cast_error")).count()
+
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        lazy = pipeline.build(spark, n=200).routed
+        assert n_cast(lazy) == n_cast(eager) > 0
+        for routed in (lazy, eager):
+            plan = routed._jdf.queryExecution().executedPlan().toString()
+            assert "Scan ExistingRDD" in plan and "\n" not in plan.strip()
+    finally:
+        spark.conf.unset("spark.sql.codegen.fallback")
 
 
 def test_file_run_has_no_fixture_frames(spark):

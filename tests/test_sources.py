@@ -242,11 +242,9 @@ def test_orc_detection_by_magic(spark, tmp_path):
 
 
 def test_cast_per_route_reads_seam_not_derivation(spark):
-    """Round-4 wedge regression pin: cast_per_route must put a seam
-    between the parse derivation and its per-route filter loop — pushing
-    filter(route == r) through the unmaterialized parse tree re-inlines
-    the whole derivation per route and blows Janino's 64 KB method limit
-    (one route's collect measured at 490 s; with the seam, seconds)."""
+    """cast_per_route over build's ``routed`` reads build's seam: each
+    route's filter(route == r) runs over a scan of it, never over the
+    parse derivation."""
     p = pipeline.build(spark, n=200)
     ok = p.routed.filter(~F.col("parse_error"))
     fields = parse.all_fields(parse.DEFAULT_PATTERNS)

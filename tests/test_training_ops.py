@@ -893,8 +893,9 @@ def test_seam_upgrades_to_reliable_checkpoint(spark, tmp_path):
     """localCheckpoint blocks die with their executor, so every seam must
     flip to a reliable checkpoint when the session has a checkpoint dir —
     one sc.setCheckpointDir call upgrades the whole repo, the pipeline's
-    S5 seam, the resumable fan-out and the connected-components rounds
-    included."""
+    S5 seam (eager or filled by the first action) and the
+    connected-components rounds included.  The resumable fan-out reads
+    build's seam and pins nothing of its own."""
     import glob
 
     from ulp_spark.plans import manifest, pipeline
@@ -928,7 +929,13 @@ def test_seam_upgrades_to_reliable_checkpoint(spark, tmp_path):
         m = manifest.resume_fanout(p.routed.select("doc_id", "route"), m,
                                    str(tmp_path / "runs"))
         assert sum(e["n_rows"] for e in m["routes"].values()) == 200
-        assert rdd_dirs("fanout")
+        assert rdd_dirs("fanout") == []
+
+        sc.setCheckpointDir(str(tmp_path / "lazy"))
+        lazy = pipeline.build(spark, n=200)
+        assert rdd_dirs("lazy") == []
+        assert lazy.routed.count() == 200
+        assert rdd_dirs("lazy")
 
         sc.setCheckpointDir(str(tmp_path / "cc"))
         pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)],

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ulp_spark.functions import casts, sniff, sqltext
 from ulp_spark.functions.sqltext import ident, lit
-from ulp_spark.session import local_frame, seam
+from ulp_spark.session import local_frame
 
 
 def _repr_str(value: str, rcode: str, target: int, helpers) -> tuple[str, str]:
@@ -166,20 +166,11 @@ def cast_per_route(
     string, then ``cast_error``.  The canonical strings round-trip
     exactly: a BIGINT's decimal digits, a DOUBLE's Java rendering and
     ``true``/``false`` cast back to the value they render, and a failed
-    cast stays NULL.
-
-    The input is read through a :func:`ulp_spark.session.seam` (lazy: the
-    first route's action writes it) — REQUIRED for an unmaterialized parse
-    derivation (the same barrier ``manifest.resume_fanout`` puts under
-    its route filter): each route's ``filter(route == r)`` is
-    pushed through every projection below it, substituting the full
-    derivation into the filter, and the resulting whole-stage-codegen
-    class blows Janino's 64 KB method limit (measured after the guarded
-    replace-parse widened the tree: ONE route's collect took 490 s with
-    ``CodeGenerator: Failed to compile`` fallbacks; with the seam the
-    whole map collects in seconds).
+    cast stays NULL.  ``df`` is read as given (for parsed records,
+    :func:`ulp_spark.plans.pipeline.build`'s seamed ``routed``), so every
+    route's filter runs over one scan of it.
     """
-    casted = cast_single_pass(seam(df), route_schemas, fields)
+    casted = cast_single_pass(df, route_schemas, fields)
     out: dict[str, DataFrame] = {}
     for r in sorted(route_schemas):
         schema = route_schemas[r]

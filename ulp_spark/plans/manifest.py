@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 from ulp_spark.functions import sqltext
 from ulp_spark.functions.sqltext import ident, lit
 from ulp_spark.operators import fanout
-from ulp_spark.session import seam
 
 
 def manifest_path(base: str, run_id: str) -> str:
@@ -143,6 +142,10 @@ def resume_fanout(
     routes (the overwrite clears a stale ``_staging/``) and replaces any
     sink directory an uncommitted route left behind.  A pending route
     with no rows commits an empty sink with the frame's schema.
+
+    ``routed`` is read as given: :func:`ulp_spark.plans.pipeline.build`'s
+    ``routed`` (or a projection of it) is already the S5 seam, so the
+    route filter runs over a scan of it, never the parse.
     """
     run_dir = os.path.join(base, manifest["run_id"])
     staging = os.path.join(run_dir, "_staging")
@@ -151,17 +154,6 @@ def resume_fanout(
     if not pending:
         return manifest
     route = ident("route")
-    # S5 seam (lazy: the staged write fills it), REQUIRED for an
-    # unmaterialized `routed`: the `isin(pending)` filter would otherwise
-    # be pushed down THROUGH the route derivation, re-inlining the entire
-    # parse/sniff/template tree into the filter condition — measured:
-    # whole-stage codegen grew past Janino's 64 KB method limit (1700+
-    # references) and each write spent ~100 s failing compilation before
-    # falling back to interpreted mode.  Freezing the lineage makes the
-    # write a scan + tiny filter — the reference's own architecture (the
-    # ingest phase reads the materialized NDJSON, never re-parses;
-    # src/elastic.rs:83).
-    routed = seam(routed)
     # one count_if per pending route: a comparison per route per row,
     # negligible for the tens of sinks a run fans out to
     observed = Observation("resume_fanout")

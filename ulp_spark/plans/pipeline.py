@@ -2,8 +2,8 @@
 
 This is the reference's whole program as one declarative plan
 (SURVEY.md §3.1-3.2): both of ulp's phases (parse/infer and
-route/cast/ingest), minus the HTTP shell, with the resume seam kept as an
-optional checkpoint of the parsed table (S5's NDJSON intermediate).
+route/cast/ingest), minus the HTTP shell, with the resume seam kept as a
+checkpoint of the parsed table (S5's NDJSON intermediate).
 
 Scale shape (the part that must survive 100 TB):
 * exactly one wide shuffle per phase — the groupBy aggregations; parsing,
@@ -88,13 +88,13 @@ def build(
 
     The reference materializes parse output as NDJSON between its two phases
     (S5, ``src/evtx.rs:52-53`` -> ``src/elastic.rs:83``) — that seam is both
-    its resume point and its plan boundary.  We keep it optional: "local"
-    materializes the parsed+routed table eagerly through
-    :func:`ulp_spark.session.seam` (in executor storage, or as reliable
-    checkpoint files once the session has a checkpoint dir — the durable,
-    resumable form of the reference's architecture); None composes one
-    lazy plan (fine for small fixtures; at many-action or huge-plan scale
-    the seam also bounds codegen/optimizer cost).
+    its resume point and its plan boundary.  ``routed`` is always that seam:
+    the parsed+routed table read through :func:`ulp_spark.session.seam` (in
+    executor storage, or as reliable checkpoint files once the session has
+    a checkpoint dir — the durable, resumable form of the reference's
+    architecture), so every consumer reads a scan of it and never re-plans
+    the parse.  "local" fills the seam before ``build`` returns; None
+    leaves it to the first action that reads it.
     """
     if checkpoint not in (None, "local"):
         raise ValueError(
@@ -109,12 +109,12 @@ def build(
     parsed = parse.parse_lines(lines)
     enriched = enrich.enrich(parsed, fixtures.pattern_dict(spark), on="provider")
     routed = enriched.withColumn("route", route_expr(enriched))
-    if checkpoint:
-        # Slim the materialized table: raw line kept only for quarantined
-        # rows (its one consumer — forensics/re-parse).  Persisted width
-        # drives the seam's write cost at every scale.
-        routed = seam(routed.withColumn(
-            "line", F.expr("CASE WHEN parse_error THEN line END")), eager=True)
+    # Slim the materialized table: raw line kept only for quarantined
+    # rows (its one consumer — forensics/re-parse).  Persisted width
+    # drives the seam's write cost at every scale.
+    routed = seam(routed.withColumn(
+        "line", F.expr("CASE WHEN parse_error THEN line END")),
+        eager=checkpoint == "local")
 
     route_counts = fanout.route_counts(routed)
     if seq is None:

@@ -62,23 +62,8 @@ def seam(df, eager: bool = False):
     """The one materialization primitive: every frame in ``ulp_spark``
     that is checkpointed goes through here (the pipeline's S5 seam,
     generalized — any frame that several branches of a plan read).
-
-    Callers and eagerness: two callers seam eagerly (the frame is written
-    before the call returns).  ``pipeline.build(checkpoint="local")`` is
-    one.  ``dedup.connected_components`` is the other: it pins its input
-    once and each round's edges once, persisting the frame first so the
-    checkpoint carries real size stats, and the seam's one job also fills
-    an ``observe`` edge count.  Every other caller seams lazily (written
-    by the first action that reads it): ``manifest.resume_fanout``'s plan
-    barrier, filled by its one staged write; ``route_cast.cast_per_route``,
-    whose per-route projections all filter one ``cast_single_pass`` over
-    the pin (filled by the first route's action);
-    ``sharding.write_shards``, which pins its INPUT (filled by the prefix
-    sum's first pass, so the row count, key sample, per-bucket totals and
-    window all read one pin); ``dedup._bucket_pairs``, shared by the
-    minhash, simhash, winnowing and embedding candidate generators; and
-    the fan-out frames of the tokens, curation, similarity, classifier
-    and anomaly operators.
+    ``eager`` writes the frame before the call returns; otherwise the
+    first action that reads it fills it.
 
     Storage tier is chosen by session config: when the SparkContext has a
     CHECKPOINT DIR configured, use a reliable ``checkpoint`` — blocks live
@@ -88,8 +73,7 @@ def seam(df, eager: bool = False):
     executor storage: fast and fine on local[] / static single-JVM runs,
     but executor loss makes the lineage unrecoverable, so cluster
     deployments should set ``sc.setCheckpointDir(...)``, which flips every
-    seam above — build, fan-out and connected-components rounds included —
-    to the durable path.  Nothing releases a seam explicitly yet: local
+    seam to the durable path.  Nothing releases a seam explicitly yet: local
     blocks live until Spark's ContextCleaner collects an unreferenced
     frame, and reliable checkpoint files (the connected-components
     rounds' among them) are never cleaned up.
