@@ -106,7 +106,7 @@ def _q_events_cast_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = f"get_json_object(props, {sqltext.lit('$.k')})"
     code = sniff.sniff_code(v)
     rcode = sniff.materialized_runtime_code(v, code)
-    as_int, err = casts.cast_field(v, rcode, sniff.INT)
+    as_int, err = casts.cast_field(v, rcode, sniff.INT, code)
     return ev.selectExpr(
         "event_id",
         f"{v} AS k_raw",
@@ -179,7 +179,7 @@ def _q_doc_simhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     4x16-bit Hamming bands (pigeonhole-complete for distance <= 3) ->
     bucket-capped collision join -> exact bit_count(xor) verify."""
     d = _docs(spark, sf_dir)
-    return dedup.simhash_candidates(d, "text", "doc_id", max_hamming=3)
+    return dedup.simhash_candidates(d, "text", "doc_id")
 
 
 def _q_doc_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -222,7 +222,7 @@ def _emb_query_vec(spark, sf_dir) -> list[float]:
 def _q_emb_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _embs(spark, sf_dir)
     return similarity.brute_force_topk(
-        e, "embedding", "vec_id", _emb_query_vec(spark, sf_dir), k=10)
+        e, "embedding", "vec_id", _emb_query_vec(spark, sf_dir))
 
 
 def _q_emb_srp_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -271,7 +271,7 @@ def _q_mm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_mm_frame_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = multimodal.synth_binary_column(_docs(spark, sf_dir), "text", "doc_id")
-    frames = multimodal.sample_frames(d, stride=16, frame_len=8)
+    frames = multimodal.sample_frames(d)
     return frames.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_frames"),
         F.sum(F.length(F.col("frame"))).alias("frame_bytes"),
@@ -283,8 +283,7 @@ def _q_doc_bigram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrences whose corpus count >= 3 (exact integer statistics in
     place of an LM; one shuffle join against the vocab-scale bigram
     model)."""
-    return _vocab.bigram_coverage(_docs(spark, sf_dir), "text", "doc_id",
-                                  min_count=3)
+    return _vocab.bigram_coverage(_docs(spark, sf_dir), "text", "doc_id")
 
 
 def _q_doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -304,7 +303,7 @@ def _q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject (per-partition heaps, no global sort)."""
     from ulp_spark.operators import vocab
 
-    return vocab.vocab_topk(_docs(spark, sf_dir), "text", k=50)
+    return vocab.vocab_topk(_docs(spark, sf_dir), "text")
 
 
 def _q_bpe_top_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -372,7 +371,7 @@ def _q_emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = similarity.ivf_centroids(e, "embedding", "vec_id", k=8)
     return similarity.ivf_topk(
         e, "embedding", "vec_id", _emb_query_vec(spark, sf_dir),
-        cents, k=10, n_probe=2)
+        cents)
 
 
 def _q_seq_packing_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -424,7 +423,7 @@ def _q_seq_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ulp_spark.operators import tokens
 
     seq = fixtures.sequences(spark, N_FIXTURE)
-    return tokens.source_token_drift(seq, "tokens", "source")
+    return tokens.source_token_drift(seq)
 
 
 def _q_seq_dup_gram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -485,7 +484,7 @@ def _q_seq_packed_sft(spark: SparkSession, sf_dir: str) -> DataFrame:
     pk = masked.select(
         "doc_id", hash_bucket(F.col("doc_id"), 64).alias("bin_id"))
     return packing.pack_segments(packing.pack_sequences(
-        masked, pk, "doc_id", "tokens", extra_array_cols=["loss_mask"]))
+        masked, pk, extra_array_cols=["loss_mask"]))
 
 
 def _q_seq_gram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -517,7 +516,7 @@ def _q_seq_packed_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     seq = fixtures.sequences(spark, 2_000)
     pk = seq.select("doc_id", hash_bucket(F.col("doc_id"), 64).alias("bin_id"))
     return packing.pack_segments(
-        packing.pack_sequences(seq, pk, "doc_id", "tokens"))
+        packing.pack_sequences(seq, pk))
 
 
 def _q_doc_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -538,8 +537,7 @@ def _q_seq_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ulp_spark.operators import tokens
 
     seq = fixtures.sequences(spark, N_FIXTURE)
-    return tokens.source_temperature_weights(
-        seq, "n_tok", "source", alpha=0.5, budget=1_000_000)
+    return tokens.source_temperature_weights(seq, budget=1_000_000)
 
 
 def _q_seq_epoch_order(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -550,7 +548,7 @@ def _q_seq_epoch_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ulp_spark.operators import tokens
 
     seq = fixtures.sequences(spark, N_FIXTURE).select("doc_id")
-    return tokens.epoch_order(seq, "doc_id", epoch=1, seed=42)
+    return tokens.epoch_order(seq, "doc_id", epoch=1)
 
 
 def _q_seq_balanced_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -604,8 +602,7 @@ def _q_seq_mixing_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ulp_spark.operators import tokens
 
     seq = fixtures.sequences(spark, N_FIXTURE)
-    return tokens.source_mixing_plan(seq, "n_tok", "source",
-                                     alpha=0.5, budget=2_000_000)
+    return tokens.source_mixing_plan(seq, budget=2_000_000)
 
 
 def _q_doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -639,8 +636,7 @@ def _q_seq_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ulp_spark.operators import tokens
 
     seq = fixtures.sequences(spark, N_FIXTURE)
-    return tokens.chunk_sequences(
-        seq, "tokens", "doc_id", capacity=128, stride=96, min_tokens=16)
+    return tokens.chunk_sequences(seq, "tokens", "doc_id")
 
 
 def _q_seq_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -664,7 +660,7 @@ def _q_seq_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ulp_spark.operators import packing
 
     seq = fixtures.sequences(spark, N_FIXTURE)
-    return packing.length_bucket_stats(seq, "n_tok", min_bucket=32)
+    return packing.length_bucket_stats(seq)
 
 
 def _q_seq_unigram_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -675,7 +671,7 @@ def _q_seq_unigram_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ulp_spark.operators import tokens
 
     seq = fixtures.sequences(spark, N_FIXTURE)
-    return tokens.sequence_unigram_scores(seq, "tokens", "doc_id")
+    return tokens.sequence_unigram_scores(seq)
 
 
 def _aug_tail(spark: SparkSession) -> DataFrame:
@@ -702,7 +698,7 @@ def _q_seq_repeated_suffix(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines, so periods 0/1/2 and multi-copy tails all occur."""
     from ulp_spark.operators import tokens
 
-    return tokens.repeated_suffix(_aug_tail(spark), "tokens", "doc_id")
+    return tokens.repeated_suffix(_aug_tail(spark))
 
 
 def _q_seq_resume_position(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -715,8 +711,7 @@ def _q_seq_resume_position(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ulp_spark.operators import sharding
 
     seq = fixtures.sequences(spark, N_FIXTURE)
-    man = sharding.shard_manifest(seq, "doc_id", "n_tok",
-                                  shard_tokens=1 << 12)
+    man = sharding.shard_manifest(seq, shard_tokens=1 << 12)
     return sharding.resume_position(man, global_step=1_000, batch_size=32)
 
 
@@ -769,7 +764,7 @@ def _q_seq_trim_repeated_suffix(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept, arrays rebuilt — zero-shuffle per-row expression work."""
     from ulp_spark.operators import tokens
 
-    return tokens.trim_repeated_suffix(_aug_tail(spark), "tokens", "doc_id")
+    return tokens.trim_repeated_suffix(_aug_tail(spark))
 
 
 def _q_emb_semantic_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -796,7 +791,7 @@ def _q_seq_bigram_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ulp_spark.operators import tokens
 
     seq = fixtures.sequences(spark, N_FIXTURE)
-    return tokens.sequence_bigram_scores(seq, "tokens", "doc_id")
+    return tokens.sequence_bigram_scores(seq)
 
 
 def _q_doc_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -818,7 +813,7 @@ def _q_seq_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ulp_spark.operators import tokens
 
     seq = fixtures.sequences(spark, N_FIXTURE)
-    return tokens.sequence_token_entropy(seq, "tokens", "doc_id")
+    return tokens.sequence_token_entropy(seq)
 
 
 def _q_seq_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -829,7 +824,7 @@ def _q_seq_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ulp_spark.operators import tokens
 
     seq = fixtures.sequences(spark, N_FIXTURE)
-    return tokens.zipf_fit(seq, "tokens")
+    return tokens.zipf_fit(seq)
 
 
 def _q_seq_cross_source_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -849,7 +844,7 @@ def _q_seq_cross_source_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     aug = seq.select("tokens", "source").unionAll(
         seq.filter(F.col("seq_no") % 10 == 0)
         .select("tokens", rot.alias("source")))
-    return tokens.cross_source_dup_matrix(aug, "tokens", "source")
+    return tokens.cross_source_dup_matrix(aug)
 
 
 def _q_seq_contamination_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -926,8 +921,7 @@ def _q_seq_mixed_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ulp_spark.operators import tokens
 
     seq = fixtures.sequences(spark, N_FIXTURE)
-    return tokens.apply_mixing_plan(
-        seq, "n_tok", "source", "doc_id", alpha=0.5, budget=2_000_000)
+    return tokens.apply_mixing_plan(seq)
 
 
 def _q_seq_fim_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -937,9 +931,7 @@ def _q_seq_fim_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ulp_spark.operators import tokens
 
     seq = fixtures.sequences(spark, N_FIXTURE)
-    return tokens.fim_transform(
-        seq, "tokens", "doc_id", rate=0.5,
-        pre_id=60001, mid_id=60002, suf_id=60003)
+    return tokens.fim_transform(seq)
 
 
 def _q_seq_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -951,8 +943,7 @@ def _q_seq_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     seq = fixtures.sequences(spark, N_FIXTURE)
     return tokens.span_corruption(seq, "tokens", "doc_id",
-                                  rate=0.15, span_len=3,
-                                  sentinel_base=51000)
+                                  rate=0.15, span_len=3)
 
 
 def _q_doc_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -985,7 +976,7 @@ def _q_seq_denoiser_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ulp_spark.operators import tokens
 
     seq = fixtures.sequences(spark, N_FIXTURE)
-    return tokens.denoiser_mix(seq, "tokens", "doc_id")
+    return tokens.denoiser_mix(seq)
 
 
 def _q_doc_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1022,8 +1013,7 @@ def _q_seq_mixed_writer_loads(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ulp_spark.operators import tokens
 
     seq = fixtures.sequences(spark, N_FIXTURE)
-    mixed = tokens.apply_mixing_plan(
-        seq, "n_tok", "source", "doc_id", alpha=0.5, budget=2_000_000)
+    mixed = tokens.apply_mixing_plan(seq)
     withtok = (
         mixed.join(seq.select("doc_id", "n_tok"), "doc_id")
         .select(
@@ -1035,9 +1025,6 @@ def _q_seq_mixed_writer_loads(spark: SparkSession, sf_dir: str) -> DataFrame:
         tokens.balanced_writers(withtok, "n_tok", "inst_id", 8))
 
 
-_GROWTH_CHECKPOINTS = [1_000, 10_000, 100_000, 1_000_000, 3_000_000]
-
-
 def _q_seq_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heaps'-law vocabulary growth: distinct token types within the
     first c corpus tokens (doc_id order), per checkpoint — the
@@ -1046,8 +1033,7 @@ def _q_seq_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ulp_spark.operators import tokens
 
     seq = fixtures.sequences(spark, N_FIXTURE)
-    return tokens.vocab_growth(seq, "tokens", "doc_id",
-                               _GROWTH_CHECKPOINTS)
+    return tokens.vocab_growth(seq)
 
 
 def _q_corpus_training_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1191,7 +1177,7 @@ def _q_doc_quality_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ulp_spark.operators import curation
 
     return curation.quality_topk(_docs(spark, sf_dir), "text", "doc_id",
-                                 "source", k=3)
+                                 "source")
 
 
 def _q_doc_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1460,7 +1446,7 @@ def _source_drift_sql() -> str:
     from ulp_spark.operators import tokens
 
     return tokens.source_token_drift_sql(
-        f"({fixtures.sequences_sql(N_FIXTURE)})", "tokens", "source")
+        f"({fixtures.sequences_sql(N_FIXTURE)})")
 
 
 def _dup_gram_coverage_sql() -> str:
@@ -1531,15 +1517,14 @@ def _temperature_mix_sql() -> str:
     from ulp_spark.operators import tokens
 
     return tokens.source_temperature_weights_sql(
-        f"({fixtures.sequences_sql(N_FIXTURE)})", "n_tok", "source",
-        alpha=0.5, budget=1_000_000)
+        f"({fixtures.sequences_sql(N_FIXTURE)})", budget=1_000_000)
 
 
 def _epoch_order_sql() -> str:
     from ulp_spark.operators import tokens
 
     return tokens.epoch_order_sql(
-        f"({fixtures.sequences_sql(N_FIXTURE)})", "doc_id", epoch=1, seed=42)
+        f"({fixtures.sequences_sql(N_FIXTURE)})", "doc_id", epoch=1)
 
 
 def _balanced_writers_sql() -> str:
@@ -1553,8 +1538,7 @@ def _mixing_plan_sql() -> str:
     from ulp_spark.operators import tokens
 
     return tokens.source_mixing_plan_sql(
-        f"({fixtures.sequences_sql(N_FIXTURE)})", "n_tok", "source",
-        alpha=0.5, budget=2_000_000)
+        f"({fixtures.sequences_sql(N_FIXTURE)})")
 
 
 def _quality_classifier_sql() -> str:
@@ -1586,14 +1570,13 @@ def _token_entropy_sql() -> str:
     from ulp_spark.operators import tokens
 
     return tokens.sequence_token_entropy_sql(
-        f"({fixtures.sequences_sql(N_FIXTURE)})", "tokens", "doc_id")
+        f"({fixtures.sequences_sql(N_FIXTURE)})")
 
 
 def _zipf_fit_sql() -> str:
     from ulp_spark.operators import tokens
 
-    return tokens.zipf_fit_sql(
-        f"({fixtures.sequences_sql(N_FIXTURE)})", "tokens")
+    return tokens.zipf_fit_sql(f"({fixtures.sequences_sql(N_FIXTURE)})")
 
 
 def _cross_source_dups_sql() -> str:
@@ -1610,7 +1593,7 @@ def _cross_source_dups_sql() -> str:
                            WHEN 'code' THEN 'wiki'
                            WHEN 'wiki' THEN 'web' END AS source
         FROM ({base}) WHERE seq_no % 10 = 0)"""
-    return tokens.cross_source_dup_matrix_sql(aug, "tokens", "source")
+    return tokens.cross_source_dup_matrix_sql(aug)
 
 
 def _near_dup_aug_sql() -> str:
@@ -1629,39 +1612,33 @@ def _near_dup_aug_sql() -> str:
 def _seq_minhash_sql() -> str:
     from ulp_spark.operators import tokens
 
-    return tokens.sequence_minhash_candidates_sql(
-        _near_dup_aug_sql(), "tokens", "doc_id")
+    return tokens.sequence_minhash_candidates_sql(_near_dup_aug_sql())
 
 
 def _seq_dedup_groups_sql() -> str:
     from ulp_spark.operators import tokens
 
-    return tokens.sequence_dedup_groups_sql(
-        _near_dup_aug_sql(), "tokens", "doc_id")
+    return tokens.sequence_dedup_groups_sql(_near_dup_aug_sql())
 
 
 def _vocab_growth_sql() -> str:
     from ulp_spark.operators import tokens
 
-    return tokens.vocab_growth_sql(
-        f"({fixtures.sequences_sql(N_FIXTURE)})", "tokens", "doc_id",
-        _GROWTH_CHECKPOINTS)
+    return tokens.vocab_growth_sql(f"({fixtures.sequences_sql(N_FIXTURE)})")
 
 
 def _mixed_epoch_sql() -> str:
     from ulp_spark.operators import tokens
 
     return tokens.apply_mixing_plan_sql(
-        f"({fixtures.sequences_sql(N_FIXTURE)})", "n_tok", "source",
-        "doc_id", alpha=0.5, budget=2_000_000)
+        f"({fixtures.sequences_sql(N_FIXTURE)})")
 
 
 def _mixed_writer_loads_sql() -> str:
     from ulp_spark.operators import tokens
 
     seq_tbl = f"({fixtures.sequences_sql(N_FIXTURE)})"
-    mixed = tokens.apply_mixing_plan_sql(
-        seq_tbl, "n_tok", "source", "doc_id", alpha=0.5, budget=2_000_000)
+    mixed = tokens.apply_mixing_plan_sql(seq_tbl)
     inner = f"""(
         SELECT m.doc_id || '#' || CAST(m.epoch_copy AS VARCHAR) AS inst_id,
                s.n_tok
@@ -1672,17 +1649,15 @@ def _mixed_writer_loads_sql() -> str:
 def _fim_sql() -> str:
     from ulp_spark.operators import tokens
 
-    return tokens.fim_transform_sql(
-        f"({fixtures.sequences_sql(N_FIXTURE)})", "tokens", "doc_id",
-        rate=0.5, pre_id=60001, mid_id=60002, suf_id=60003)
+    return tokens.fim_transform_sql(f"({fixtures.sequences_sql(N_FIXTURE)})")
 
 
 def _span_corruption_sql() -> str:
     from ulp_spark.operators import tokens
 
     return tokens.span_corruption_sql(
-        f"({fixtures.sequences_sql(N_FIXTURE)})", "tokens", "doc_id",
-        rate=0.15, span_len=3, sentinel_base=51000)
+        f"({fixtures.sequences_sql(N_FIXTURE)})",
+        rate=0.15, span_len=3)
 
 
 def _dsir_weights_sql() -> str:
@@ -1702,8 +1677,7 @@ def _source_js_sql() -> str:
 def _denoiser_mix_sql() -> str:
     from ulp_spark.operators import tokens
 
-    return tokens.denoiser_mix_sql(
-        f"({fixtures.sequences_sql(N_FIXTURE)})", "tokens", "doc_id")
+    return tokens.denoiser_mix_sql(f"({fixtures.sequences_sql(N_FIXTURE)})")
 
 
 def _tokenizer_fertility_sql() -> str:
@@ -1746,8 +1720,7 @@ def _chunk_windows_sql() -> str:
     from ulp_spark.operators import tokens
 
     return tokens.chunk_sequences_sql(
-        f"({fixtures.sequences_sql(N_FIXTURE)})", "tokens", "doc_id",
-        capacity=128, stride=96, min_tokens=16)
+        f"({fixtures.sequences_sql(N_FIXTURE)})", "tokens", "doc_id")
 
 
 def _bpe_tokenize_sql() -> str:
@@ -1775,7 +1748,7 @@ def _training_batches_sql() -> str:
 def _semantic_dedup_sql() -> str:
     from ulp_spark.operators import similarity as _sim
 
-    fix = fixtures.clustered_embeddings_sql(400, dim=64, clusters=20)
+    fix = fixtures.clustered_embeddings_sql(400)
     pairs = f"""
         WITH sig AS (
           SELECT vec_id,
@@ -1800,7 +1773,7 @@ def _resume_position_sql() -> str:
     from ulp_spark.operators import sharding
 
     man = sharding.shard_manifest_sql(
-        f"({fixtures.sequences_sql(N_FIXTURE)})", "doc_id", "n_tok",
+        f"({fixtures.sequences_sql(N_FIXTURE)})",
         shard_tokens=1 << 12)
     return sharding.resume_position_sql(
         f"({man})", global_step=1_000, batch_size=32)
@@ -1888,28 +1861,27 @@ def _aug_tail_sql() -> str:
 def _repeated_suffix_sql() -> str:
     from ulp_spark.operators import tokens
 
-    return tokens.repeated_suffix_sql(_aug_tail_sql(), "tokens", "doc_id")
+    return tokens.repeated_suffix_sql(_aug_tail_sql())
 
 
 def _trim_repeated_suffix_sql() -> str:
     from ulp_spark.operators import tokens
 
-    return tokens.trim_repeated_suffix_sql(
-        _aug_tail_sql(), "tokens", "doc_id")
+    return tokens.trim_repeated_suffix_sql(_aug_tail_sql())
 
 
 def _bigram_scores_sql() -> str:
     from ulp_spark.operators import tokens
 
     return tokens.sequence_bigram_scores_sql(
-        f"({fixtures.sequences_sql(N_FIXTURE)})", "tokens", "doc_id")
+        f"({fixtures.sequences_sql(N_FIXTURE)})")
 
 
 def _unigram_scores_sql() -> str:
     from ulp_spark.operators import tokens
 
     return tokens.sequence_unigram_scores_sql(
-        f"({fixtures.sequences_sql(N_FIXTURE)})", "tokens", "doc_id")
+        f"({fixtures.sequences_sql(N_FIXTURE)})")
 
 
 def _weighted_sample_sql() -> str:
@@ -1924,7 +1896,7 @@ def _length_buckets_sql() -> str:
     from ulp_spark.operators import packing
 
     return packing.length_bucket_stats_sql(
-        f"({fixtures.sequences_sql(N_FIXTURE)})", "n_tok", min_bucket=32)
+        f"({fixtures.sequences_sql(N_FIXTURE)})")
 
 
 def _split_counts_sql() -> str:
@@ -2126,16 +2098,16 @@ def _all_oracle_sql() -> dict[str, str]:
         "doc_minhash_candidates": dedup.minhash_candidates_sql(
             "documents", "text", "doc_id"),
         "doc_simhash_candidates": dedup.simhash_candidates_sql(
-            "documents", "text", "doc_id", max_hamming=3),
+            "documents", "text", "doc_id"),
         "doc_dedup_groups": dedup.connected_components_sql(
             dedup.minhash_candidates_sql("documents", "text", "doc_id"),
             id_alias="doc_id"),
         "doc_profile": _profiling.profile_table_sql(
             "documents", ["doc_id", "lang", "source", "n_chars"]),
-        "vocab_topk": _vocab.vocab_topk_sql("documents", "text", k=50),
+        "vocab_topk": _vocab.vocab_topk_sql("documents", "text"),
         "doc_bigram_coverage": _vocab.bigram_coverage_sql(
-            "documents", "text", "doc_id", min_count=3),
-        "bpe_top_merges": _vocab.bpe_top_merges_sql("documents", "text", k=20),
+            "documents", "text", "doc_id"),
+        "bpe_top_merges": _vocab.bpe_top_merges_sql("documents", "text"),
         "emb_topk_cosine": """
             SELECT e.vec_id,
                    round(list_cosine_similarity(e.embedding::DOUBLE[],
@@ -2412,8 +2384,7 @@ def _curation_pii_oracle() -> str:
 def _quality_topk_oracle() -> str:
     from ulp_spark.operators import curation
 
-    return curation.quality_topk_sql("documents", "text", "doc_id",
-                                     "source", k=3)
+    return curation.quality_topk_sql("documents", "text", "doc_id", "source")
 
 
 def _token_budget_oracle() -> str:

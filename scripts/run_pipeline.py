@@ -77,7 +77,8 @@ def main() -> None:
         # ulp's per-file lineage (src/type_map.rs:111-155), per partition of
         # the seam: recorded once, so a rerun of a finished run skips the job
         m["lineage"] = [r.asDict() for r in lineage.partition_lineage(
-            p.routed, ["doc_id", "route"]).orderBy("partition_id").collect()]
+            p.routed.select("doc_id", "route")).orderBy("partition_id")
+            .collect()]
         manifest.save(args.base, args.run_id, m)
     status = manifest.job_status(args.base, args.run_id)
 

@@ -53,8 +53,7 @@ def main() -> None:
              F.min("source").alias("source")))
     n_in, n_surv = seq.count(), surv.count()
 
-    plan = tokens.source_mixing_plan(
-        surv, "n_tok", "source", alpha=0.5, budget=args.n * 200)
+    plan = tokens.source_mixing_plan(surv, budget=args.n * 200)
     print("mixing plan:")
     for r in plan.collect():
         print(f"  {r.source}: n_tokens={r.n_tokens} "

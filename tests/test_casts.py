@@ -101,7 +101,7 @@ def results(spark):
     # an IPv6 value is the validated address, canonicalized by the UDF.
     cols = []
     for i, (_, _, target, _, _) in enumerate(CASES):
-        val, err = casts.cast_field("v", "rc", target)
+        val, err = casts.cast_field("v", "rc", target, sniff.sniff_code("v"))
         val = F.expr(val)
         if target == IPV6:
             val = casts.ipv6_canonical(val)

@@ -22,13 +22,17 @@ def _routed(spark):
 
 
 def test_fanout_partitioned_write(spark, tmp_path):
+    """Every route's sink holds exactly that route's rows, and the
+    manifest's n_rows says so."""
     routed = _routed(spark)
-    out = str(tmp_path / "sinks")
-    fanout.write_partitioned(routed.select("doc_id", "route"), out)
-    back = spark.read.parquet(out)
-    got = dict((r.route, r.n_rows) for r in fanout.route_counts(back).collect())
     exp = dict((r.route, r.n_rows) for r in fanout.route_counts(routed).collect())
-    assert got == exp
+    base = str(tmp_path / "runs")
+    m = manifest.new_manifest("run-000", N, {r: {} for r in exp})
+    done = manifest.resume_fanout(routed.select("doc_id", "route"), m, base)
+    for route, n in exp.items():
+        back = spark.read.parquet(_glob_escaped(done["routes"][route]["path"]))
+        assert back.filter(F.col("route") != route).count() == 0
+        assert back.count() == n == done["routes"][route]["n_rows"]
 
 
 def test_resume_skips_committed_routes(spark, tmp_path, content_digest):
@@ -176,7 +180,7 @@ def test_resume_fanout_escaped_route_names_and_empty_route(spark, tmp_path):
 
 def test_partition_lineage_totals(spark):
     seq = pipeline.build(spark, n=N).sequences.repartition(7)
-    rows = lineage.partition_lineage(seq, ["doc_id", "n_tok"]).collect()
+    rows = lineage.partition_lineage(seq.select("doc_id", "n_tok")).collect()
     assert sum(r.n_rows for r in rows) == N
     assert len(rows) <= 7
 

@@ -215,7 +215,8 @@ def test_sql_text_is_conf_independent(spark, sniffed):
                                         .alias("c")).orderBy("i").collect()]
         parsed = sorted(repr(tuple(r)) for r in
                         parse_op.parse_lines(lines).collect())
-        val, _ = casts.cast_field("s", str(sniff.STR), sniff.DATE)
+        val, _ = casts.cast_field("s", str(sniff.STR), sniff.DATE,
+                                  sniff.sniff_code("s"))
         cast = [r[0] for r in dates.select(F.expr(val)).collect()]
         return codes, parsed, cast
 

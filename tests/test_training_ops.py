@@ -113,8 +113,7 @@ def test_fingerprint_normalization(spark):
 def test_multimodal_frames_shape(spark):
     df = spark.createDataFrame([(1, "x" * 40)], "doc_id long, text string")
     frames = multimodal.sample_frames(
-        multimodal.synth_binary_column(df, "text", "doc_id"),
-        stride=16, frame_len=8).collect()
+        multimodal.synth_binary_column(df, "text", "doc_id")).collect()
     assert [(r.frame_no, len(r.frame)) for r in frames] == [(0, 8), (1, 8), (2, 8)]
 
 
@@ -201,7 +200,7 @@ def test_simhash_candidates_pigeonhole(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = sorted((r.id_a, r.id_b, r.hamming)
                  for r in dedup.simhash_candidates(
-                     df, "text", "doc_id", max_hamming=3).collect())
+                     df, "text", "doc_id").collect())
     assert got == [(0, 1, 0), (0, 2, 0), (1, 2, 0)]
 
 
@@ -388,15 +387,20 @@ def test_stratified_keep_matches_duckdb(spark):
 def test_quality_topk_ranks_and_ties(spark):
     from ulp_spark.operators import curation
 
-    # two docs with IDENTICAL text (tied score) -> smaller id wins rank
+    # IDENTICAL texts (tied scores) -> smaller id wins rank; group "s"
+    # holds one doc more than the QUALITY_TOPK = 3 kept
     df = spark.createDataFrame(
         [(1, "s", "the quick brown fox is in the den and it is fine"),
          (2, "s", "the quick brown fox is in the den and it is fine"),
-         (3, "s", "zz"), (4, "t", "the and of to is in that it fits")],
+         (3, "s", "zz"), (4, "t", "the and of to is in that it fits"),
+         (5, "s", "zz")],
         "doc_id long, source string, text string")
     got = {(r.source, r.rank): r.doc_id
-           for r in curation.quality_topk(df, "text", "doc_id", "source", k=2).collect()}
-    assert got[("s", 1)] == 1 and got[("s", 2)] == 2
+           for r in curation.quality_topk(
+               df, "text", "doc_id", "source").collect()}
+    assert curation.QUALITY_TOPK == 3
+    assert got[("s", 1)] == 1 and got[("s", 2)] == 2 and got[("s", 3)] == 3
+    assert ("s", 4) not in got
     assert got[("t", 1)] == 4 and ("t", 2) not in got
 
 
@@ -608,19 +612,22 @@ def test_bigram_coverage_edges_and_duckdb(spark):
             (3, "solo"), (4, "")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r.doc_id: (r.n_bigrams, r.n_common, r.common_frac)
-           for r in vocab.bigram_coverage(df, "text", "doc_id",
-                                          min_count=2).collect()}
+           for r in vocab.bigram_coverage(df, "text", "doc_id").collect()}
     assert got[3] == (0, 0, 0.0) and got[4] == (0, 0, 0.0)
     # doc 1: bigrams [the cat, cat sat, sat on, on the, the cat, cat mat]
-    # counts: "the cat" x3 (2 here + 1 in doc 2), "cat sat" x2 -> common
-    # occurrences in doc 1 = 2 ("the cat") + 1 ("cat sat") = 3 of 6
-    assert got[1] == (6, 3, 0.5)
+    # counts: "the cat" x3 (2 here + 1 in doc 2) is common at
+    # BIGRAM_MIN_COUNT = 3, "cat sat" x2 is not -> common occurrences in
+    # doc 1 = 2 ("the cat") of 6
+    assert vocab.BIGRAM_MIN_COUNT == 3
+    assert got[1] == (6, 2, round(2 / 6, 6))
+    # doc 2: "the cat" is its one common bigram of 3
+    assert got[2] == (3, 1, round(1 / 3, 6))
     con = duckdb.connect()
     con.execute("CREATE VIEW d AS SELECT * FROM (VALUES "
                 "(1, 'the cat sat on the cat mat'), (2, 'the cat sat again'), "
                 "(3, 'solo'), (4, '')) t(doc_id, text)")
     want = {r[0]: (r[1], r[2], r[3]) for r in con.sql(
-        vocab.bigram_coverage_sql("d", "text", "doc_id", min_count=2)
+        vocab.bigram_coverage_sql("d", "text", "doc_id")
     ).fetchall()}
     assert got == want
 
@@ -1036,6 +1043,130 @@ def _with_child_scripts(tree):
     return out
 
 
+def _module_file(repo, dotted):
+    """The file of package module ``dotted`` (``ulp_spark.x.y``), or None."""
+    if dotted.split(".")[0] != "ulp_spark":
+        return None
+    base = repo.joinpath(*dotted.split("."))
+    for p in (base.with_suffix(".py"), base / "__init__.py"):
+        if p.is_file():
+            return p
+    return None
+
+
+def _module_constants(tree):
+    """Top-level names of ``tree`` assigned exactly once: name -> value."""
+    import ast
+
+    seen: dict[str, list] = {}
+    for top in tree.body:
+        if isinstance(top, ast.Assign):
+            pairs = [(t, top.value) for t in top.targets]
+        elif isinstance(top, ast.AnnAssign) and top.value is not None:
+            pairs = [(top.target, top.value)]
+        else:
+            continue
+        for target, value in pairs:
+            if isinstance(target, ast.Name):
+                seen.setdefault(target.id, []).append(value)
+    return {k: v[0] for k, v in seen.items() if len(v) == 1}
+
+
+class _Calls:
+    """Every call in ``_caller_files`` (child scripts included) resolved to
+    a public top-level def of ulp_spark/ through the caller's imports,
+    import aliases and relative imports included."""
+
+    def __init__(self, repo):
+        import ast
+
+        self.repo = repo
+        self.trees = {p: ast.parse(p.read_text()) for p in _caller_files(repo)}
+        # (file, name) -> FunctionDef, for the package's public defs
+        self.defs = {
+            (p, top.name): top for p, tree in self.trees.items()
+            if repo / "ulp_spark" in p.parents
+            for top in tree.body
+            if isinstance(top, ast.FunctionDef) and top.name[0] != "_"}
+        self.consts = {p: _module_constants(t) for p, t in self.trees.items()}
+        self.bindings = {p: self._bindings(p, _with_child_scripts(t))
+                         for p, t in self.trees.items()}
+
+    def _bindings(self, path, trees):
+        """Local name -> ("mod", file) or ("fn", file, name)."""
+        import ast
+
+        pkg_parts = path.relative_to(self.repo).with_suffix("").parts[:-1]
+        out = {name: ("fn", p, name) for p, name in self.defs if p == path}
+        for tree in trees:
+            for n in ast.walk(tree):
+                if isinstance(n, ast.Import):
+                    for a in n.names:
+                        local = a.asname or a.name.split(".")[0]
+                        f = _module_file(self.repo,
+                                         a.name if a.asname else local)
+                        if f:
+                            out[local] = ("mod", f)
+                elif isinstance(n, ast.ImportFrom):
+                    base = n.module or ""
+                    if n.level:
+                        base = ".".join(
+                            pkg_parts[:len(pkg_parts) - n.level + 1]
+                            + tuple(base.split(".") if base else ()))
+                    mod = _module_file(self.repo, base)
+                    for a in n.names:
+                        local = a.asname or a.name
+                        f = _module_file(self.repo, f"{base}.{a.name}")
+                        if f:
+                            out[local] = ("mod", f)
+                        elif mod:
+                            out[local] = ("fn", mod, a.name)
+        return out
+
+    def resolve(self, bindings, node):
+        """The (file, name) an expression names through ``bindings``:
+        ``f``, ``mod.f`` or ``pkg.mod.f``; None if it names no package
+        module member."""
+        import ast
+
+        parts = []
+        while isinstance(node, ast.Attribute):
+            parts.append(node.attr)
+            node = node.value
+        if not isinstance(node, ast.Name) or node.id not in bindings:
+            return None
+        parts.reverse()
+        b = bindings[node.id]
+        if b[0] == "fn":
+            return (b[1], b[2]) if not parts else None
+        f = b[1]
+        for part in parts[:-1]:
+            if f is None or f.name != "__init__.py":
+                return None
+            f = next((q for q in (f.parent / f"{part}.py",
+                                  f.parent / part / "__init__.py")
+                      if q.is_file()), None)
+        return (f, parts[-1]) if f is not None and parts else None
+
+    def __iter__(self):
+        """Yield (file, call, (target file, target name), enclosing public
+        package def or None) for each resolved call."""
+        import ast
+
+        for path, tree in self.trees.items():
+            around = {}
+            for top in tree.body:
+                if (path, getattr(top, "name", None)) in self.defs:
+                    for n in ast.walk(top):
+                        around[id(n)] = top
+            for t in _with_child_scripts(tree):
+                for n in ast.walk(t):
+                    if isinstance(n, ast.Call):
+                        key = self.resolve(self.bindings[path], n.func)
+                        if key in self.defs:
+                            yield path, n, key, around.get(id(n))
+
+
 # Package defs no non-test code reaches, kept on purpose (reason each).
 _DEF_ALLOW = {
     # typed per-route sinks: wired into the fan-out or deleted when the
@@ -1128,61 +1259,143 @@ _OPTION_ALLOW = {
 
 
 def test_every_option_has_a_non_test_caller():
-    """Knob guard: every optional parameter of a public top-level
-    function in ulp_spark/ is set by some call in ``_caller_files`` —
-    code that runs outside tests, child scripts included — or sits on
-    the allow-list above.  A call sets a parameter by keyword, by
-    position, or through ``*args``/``**kwargs`` (which set them all).
-    An option nobody sets is a configuration no traffic exercises: make
-    it a constant."""
+    """Knob guard: non-test callers give every optional parameter of a
+    public top-level function in ulp_spark/ at least two distinct values,
+    or it is exempt or on the allow-list above.  With one value in use,
+    the option is a constant.  The callers are the calls in
+    ``_caller_files`` (child scripts included) that ``_Calls`` resolves.
+    A call that leaves an option out passes its default; a literal or a
+    module-level constant is its value; a bare name that is an option of
+    the enclosing public package function passes that option's values
+    (and its exemption); any other expression, and any ``*``/``**``
+    expansion, is a value of its own.  An option bench.py or a perfbench/
+    file passes explicitly is exempt: those files pin the benchmark."""
     import ast
     import pathlib
 
     import ulp_spark
 
-    pkg = pathlib.Path(ulp_spark.__file__).parent
-    repo = pkg.parent
+    repo = pathlib.Path(ulp_spark.__file__).parent.parent
+    calls = _Calls(repo)
 
-    options = []   # (module:function(param), function, param, position)
-    for p in _py_files(pkg):
-        for top in ast.parse(p.read_text()).body:
-            if not isinstance(top, ast.FunctionDef) or top.name[0] == "_":
+    options = {}   # (file, function, param) -> (tag, position, default)
+    for (p, name), fn in calls.defs.items():
+        a = fn.args
+        pos = a.posonlyargs + a.args
+        first_opt = len(pos) - len(a.defaults)
+        for i, x in enumerate(pos[first_opt:], first_opt):
+            options[p, name, x.arg] = (i, a.defaults[i - first_opt])
+        for x, d in zip(a.kwonlyargs, a.kw_defaults):
+            if d is not None:
+                options[p, name, x.arg] = (None, d)
+
+    def tag(key):
+        return f"{key[0].relative_to(repo)}:{key[1]}({key[2]})"
+
+    def value(expr, path, enclosing):
+        try:
+            return repr(ast.literal_eval(expr))
+        except (ValueError, TypeError, SyntaxError):
+            pass
+        if isinstance(expr, ast.Name) and enclosing is not None:
+            ref = (path, enclosing.name, expr.id)
+            if ref in options:
+                return ("ref", ref)
+        const = None
+        if isinstance(expr, ast.Name) and expr.id in calls.consts[path]:
+            const = (path, expr.id)
+        elif isinstance(expr, (ast.Name, ast.Attribute)):
+            const = calls.resolve(calls.bindings[path], expr)
+        if const is not None and const[1] in calls.consts.get(const[0], {}):
+            try:
+                return repr(ast.literal_eval(calls.consts[const[0]][const[1]]))
+            except (ValueError, TypeError, SyntaxError):
+                return ("const", *const)
+        return ("own", expr)
+
+    values = {key: set() for key in options}
+    exempt = set()
+    for path, call, fkey, enclosing in calls:
+        pinned = path.name == "bench.py" or repo / "perfbench" in path.parents
+        star = next((i for i, x in enumerate(call.args)
+                     if isinstance(x, ast.Starred)), None)
+        kw = {k.arg: k.value for k in call.keywords if k.arg is not None}
+        double_star = any(k.arg is None for k in call.keywords)
+        for key, (i, default) in options.items():
+            if key[:2] != fkey:
                 continue
-            a = top.args
-            pos = a.posonlyargs + a.args
-            first_opt = len(pos) - len(a.defaults)
-            opts = [(x.arg, i) for i, x in enumerate(pos) if i >= first_opt]
-            opts += [(x.arg, None)
-                     for x, d in zip(a.kwonlyargs, a.kw_defaults)
-                     if d is not None]
-            options += [(f"{p.relative_to(repo)}:{top.name}({n})",
-                         top.name, n, i) for n, i in opts]
+            if key[2] in kw or (i is not None and i < len(call.args)
+                                and (star is None or i < star)):
+                expr = kw[key[2]] if key[2] in kw else call.args[i]
+                values[key].add(value(expr, path, enclosing))
+                if pinned:
+                    exempt.add(key)
+            elif (star is not None and i is not None and i >= star) \
+                    or double_star:
+                values[key].add(("own", call, key))
+            else:
+                values[key].add(value(default, fkey[0], None))
 
-    set_by: dict[str, set] = {}   # callee name -> params/positions/"*"
-    for p in _caller_files(repo):
-        for tree in _with_child_scripts(ast.parse(p.read_text())):
-            for n in ast.walk(tree):
-                if isinstance(n, ast.Call):
-                    f = n.func
-                    name = getattr(f, "id", None) or getattr(f, "attr", None)
-                    keys = set_by.setdefault(name, set())
-                    keys |= {"*" if isinstance(x, ast.Starred) else i
-                             for i, x in enumerate(n.args)}
-                    keys |= {"*" if k.arg is None else k.arg
-                             for k in n.keywords}
-
-    def is_set(fn, param, i):
-        keys = set_by.get(fn, set())
-        return "*" in keys or param in keys or (i is not None and i in keys)
-
-    unset = [tag for tag, fn, param, i in options if not is_set(fn, param, i)]
+    # a passed-through option takes the values and exemption it passes
+    while True:
+        refs = {key: [v[1] for v in vals if v[0] == "ref"]
+                for key, vals in values.items()}
+        grown = {key: vals.union(*(values[r] for r in refs[key]))
+                 for key, vals in values.items()}
+        more = exempt | {key for key in options
+                         if any(r in exempt for r in refs[key])}
+        if grown == values and more == exempt:
+            break
+        values, exempt = grown, more
+    n_values = {key: len({v for v in vals if v[0] != "ref"})
+                for key, vals in values.items()}
+    single = sorted(tag(key) for key in options
+                    if key not in exempt and n_values[key] < 2)
     print(f"{len(options)} optional parameters, "
-          f"{len(options) - len(unset)} set by non-test callers, "
-          f"{len(_OPTION_ALLOW)} allow-listed")
-    offenders = [tag for tag in unset if tag not in _OPTION_ALLOW]
-    assert offenders == [], "\n".join(offenders)
-    # an allow-list entry must still name an option no caller sets
-    assert sorted(_OPTION_ALLOW - set(unset)) == []
+          f"{sum(n >= 2 for n in n_values.values())} given two or more "
+          f"values by non-test callers, {len(exempt)} exempt (passed by "
+          f"bench.py or perfbench/), {len(_OPTION_ALLOW)} allow-listed")
+    offenders = [t for t in single if t not in _OPTION_ALLOW]
+    assert offenders == [], f"{len(offenders)} options with one value:\n" \
+        + "\n".join(offenders)
+    # an allow-list entry must still name an option with one value
+    assert sorted(_OPTION_ALLOW - set(single)) == []
+
+
+def test_benchmark_calls_still_bind():
+    """bench.py and perfbench/ pin the benchmark and change only with it:
+    every call they make to a ulp_spark function must still bind to its
+    signature (positional count and keyword names), import aliases
+    included."""
+    import ast
+    import importlib
+    import inspect
+    import pathlib
+
+    import ulp_spark
+
+    repo = pathlib.Path(ulp_spark.__file__).parent.parent
+    calls = _Calls(repo)
+    checked = 0
+    for path, call, (target, name), _ in calls:
+        if path.name != "bench.py" and repo / "perfbench" not in path.parents:
+            continue
+        module = ".".join(target.relative_to(repo).with_suffix("").parts)
+        fn = getattr(importlib.import_module(module.removesuffix(".__init__")),
+                     name)
+        starred = any(isinstance(a, ast.Starred) for a in call.args) or any(
+            k.arg is None for k in call.keywords)
+        args = [None] * sum(not isinstance(a, ast.Starred) for a in call.args)
+        kwargs = {k.arg: None for k in call.keywords if k.arg is not None}
+        sig = inspect.signature(fn)
+        try:
+            (sig.bind_partial if starred else sig.bind)(*args, **kwargs)
+        except TypeError as e:
+            raise AssertionError(
+                f"{path.relative_to(repo)}:{call.lineno} {name}: {e}") from e
+        checked += 1
+    print(f"{checked} benchmark calls bind")
+    assert checked > 0
 
 
 def test_value_anomalies_single_scan_when_materialized(spark, tmp_path):
@@ -1266,7 +1479,7 @@ def test_source_token_drift_identical_null_and_skewed(spark):
         (3, [9, 9, 9, 9], None),
     ]
     df = spark.createDataFrame(rows, "doc_id long, tokens array<int>, source string")
-    got = {r.source: r for r in tokens.source_token_drift(df, "tokens", "source").collect()}
+    got = {r.source: r for r in tokens.source_token_drift(df).collect()}
     assert set(got) == {"a", "b", "__null__"}
     assert all(r.n_tokens == 4 for r in got.values())
     # corpus: P(1)=P(2)=1/3, P(9)=1/3.  a: P_s(1)=P_s(2)=1/2.
@@ -1322,7 +1535,7 @@ def test_source_temperature_weights_hand_computed(spark):
     rows = [(1, 60, "a"), (2, 40, "a"), (3, 400, None)]
     df = spark.createDataFrame(rows, "doc_id long, n_tok int, source string")
     got = {r.source: r for r in tokens.source_temperature_weights(
-        df, "n_tok", "source", alpha=0.5, budget=300).collect()}
+        df, budget=300).collect()}
     assert set(got) == {"a", "__null__"}
     a, nul = got["a"], got["__null__"]
     assert (a.n_tokens, nul.n_tokens) == (100, 400)
@@ -1582,7 +1795,7 @@ def test_source_mixing_plan_matches_duckdb_and_budget(spark):
         seq, budget=2_000_000).collect()))
     con = duckdb.connect()
     exp = sorted(con.sql(tokens.source_mixing_plan_sql(
-        f"({fixtures.sequences_sql(3000)})", budget=2_000_000)).fetchall())
+        f"({fixtures.sequences_sql(3000)})")).fetchall())
     assert got == exp
     for _, n_tokens, budget_tokens, n_epochs, tail_frac in got:
         # plan reconstructs its own budget: epochs*n + tail*n ~= budget
@@ -1991,57 +2204,46 @@ def test_ivf_sampled_training_holds_recall_at_scale(spark):
 
 
 def test_chunk_sequences_sliding_windows_hand_computed(spark):
-    """capacity=4, stride=2 over 9 tokens: starts 0,2,4,6,8 -> windows
-    [0:4],[2:6],[4:8],[6:9],[8:9]; min_tokens=2 drops the final 1-token
-    tail.  Overlap must be exact (each chunk re-reads its left context)."""
+    """CHUNK_LEN=128, CHUNK_STRIDE=96 over 300 tokens: starts 0,96,192,288
+    -> windows [0:128],[96:224],[192:300],[288:300]; CHUNK_MIN_TOKENS=16
+    drops the final 12-token tail.  Overlap must be exact (each chunk
+    re-reads its left context).  A 20-token doc is one short window; a
+    10-token doc and an empty doc produce no rows."""
     from ulp_spark.operators import tokens
 
+    assert (tokens.CHUNK_LEN, tokens.CHUNK_STRIDE,
+            tokens.CHUNK_MIN_TOKENS) == (128, 96, 16)
     df = spark.createDataFrame(
-        [("a", list(range(9))), ("empty", [])],
+        [("a", list(range(300))), ("b", list(range(20))),
+         ("c", list(range(10))), ("empty", [])],
         "doc_id string, tokens array<int>")
-    out = tokens.chunk_sequences(
-        df, "tokens", "doc_id", capacity=4, stride=2, min_tokens=2)
+    out = tokens.chunk_sequences(df, "tokens", "doc_id")
     got = {(r.doc_id, r.chunk_idx): (list(r.tokens), r.n_tok)
            for r in out.collect()}
     assert got == {
-        ("a", 0): ([0, 1, 2, 3], 4),
-        ("a", 1): ([2, 3, 4, 5], 4),
-        ("a", 2): ([4, 5, 6, 7], 4),
-        ("a", 3): ([6, 7, 8], 3),
-    }  # empty doc -> no rows; 1-token tail at start 8 dropped
-
-
-def test_chunk_sequences_full_windows_only_and_validation(spark):
-    from ulp_spark.operators import tokens
-
-    df = spark.createDataFrame(
-        [("a", list(range(10)))], "doc_id string, tokens array<int>")
-    # min_tokens=capacity: only complete windows survive (10 // 4 -> 2)
-    out = tokens.chunk_sequences(
-        df, "tokens", "doc_id", capacity=4, min_tokens=4)
-    rows = sorted((r.chunk_idx, list(r.tokens)) for r in out.collect())
-    assert rows == [(0, [0, 1, 2, 3]), (1, [4, 5, 6, 7])]
-    with pytest.raises(ValueError):
-        tokens.chunk_sequences(df, "tokens", "doc_id", capacity=0)
-    with pytest.raises(ValueError):
-        tokens.chunk_sequences(df, "tokens", "doc_id", capacity=4, stride=5)
-    with pytest.raises(ValueError):
-        tokens.chunk_sequences(df, "tokens", "doc_id", capacity=4, stride=0)
+        ("a", 0): (list(range(0, 128)), 128),
+        ("a", 1): (list(range(96, 224)), 128),
+        ("a", 2): (list(range(192, 300)), 108),
+        ("b", 0): (list(range(20)), 20),
+    }
 
 
 def test_chunk_sequences_no_shuffle_and_token_conservation(spark):
     """Plan pin: the explode is narrow — no Exchange anywhere (output
-    co-partitions with the input).  With stride == capacity every token
-    appears exactly once across chunks (conservation)."""
+    co-partitions with the input).  The chunks hold exactly the tokens
+    the sliding-window reference puts in them."""
     from ulp_spark import fixtures
     from ulp_spark.operators import tokens
 
     seq = fixtures.sequences(spark, 300)
-    out = tokens.chunk_sequences(seq, "tokens", "doc_id", capacity=64)
+    out = tokens.chunk_sequences(seq, "tokens", "doc_id")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     tot = out.agg(F.sum("n_tok").alias("s")).collect()[0].s
-    exp = seq.agg(F.sum(F.size("tokens")).alias("s")).collect()[0].s
+    exp = sum(n for r in seq.select("tokens").collect()
+              for _, _, n in _chunk_ref(
+                  r.tokens, tokens.CHUNK_LEN, tokens.CHUNK_STRIDE,
+                  tokens.CHUNK_MIN_TOKENS))
     assert tot == exp
 
 
@@ -2101,7 +2303,7 @@ def test_length_bucket_stats_hand_computed(spark):
          ("f", 100), ("g", 0), ("h", None)],
         "doc_id string, n_tok int")
     got = {r.bucket: (r.n_seqs, r.sum_tok, r.pad_tok)
-           for r in packing.length_bucket_stats(df, "n_tok").collect()}
+           for r in packing.length_bucket_stats(df).collect()}
     assert got == {32: (3, 64, 32), 64: (2, 97, 31), 128: (1, 100, 28)}
 
 
@@ -2115,14 +2317,14 @@ def test_length_bucket_stats_power_of_two_edges_match_duckdb(spark):
 
     rows = [(f"d{i:04d}", i) for i in range(1, 601)]
     df = spark.createDataFrame(rows, "doc_id string, n_tok int")
-    got = sorted(map(tuple, packing.length_bucket_stats(df, "n_tok")
+    got = sorted(map(tuple, packing.length_bucket_stats(df)
                      .collect()))
     con = duckdb.connect()
     con.execute("CREATE TABLE t AS SELECT * FROM (VALUES "
                 + ",".join(f"('d{i:04d}', {i})" for i in range(1, 601))
                 + ") v(doc_id, n_tok)")
     exp = sorted(map(tuple, con.sql(
-        packing.length_bucket_stats_sql("t", "n_tok")).fetchall()))
+        packing.length_bucket_stats_sql("t")).fetchall()))
     assert got == exp
     # and the buckets are the true integer-exact ceil-to-power-of-two:
     import math
@@ -2266,7 +2468,7 @@ def test_repeated_suffix_matches_duckdb_on_random_arrays(spark):
     con.execute(f"CREATE TABLE t AS SELECT * FROM (VALUES {vals}) "
                 "v(doc_id, tokens)")
     exp = sorted(map(tuple, con.sql(
-        tokens.repeated_suffix_sql("t", "tokens", "doc_id")).fetchall()))
+        tokens.repeated_suffix_sql("t")).fetchall()))
     assert got == exp
 
 
@@ -2279,10 +2481,10 @@ def test_clustered_embeddings_sql_twin_bitwise(spark):
     from ulp_spark import fixtures
 
     got = {r.vec_id: (list(r.embedding), r.label)
-           for r in fixtures.clustered_embeddings(spark, 50, dim=8).collect()}
+           for r in fixtures.clustered_embeddings(spark, 50).collect()}
     con = duckdb.connect()
     exp = {v: (list(e), l) for v, e, l in con.sql(
-        fixtures.clustered_embeddings_sql(50, dim=8)).fetchall()}
+        fixtures.clustered_embeddings_sql(50)).fetchall()}
     assert got == exp
 
 
@@ -2343,27 +2545,19 @@ def test_chunk_sequences_hypothesis_vs_reference(spark):
     from ulp_spark.operators import tokens
 
     @settings(max_examples=5, deadline=None)
-    @given(
-        arrays=st.lists(st.lists(st.integers(0, 9), max_size=40),
-                        min_size=1, max_size=25),
-        cap=st.integers(1, 12),
-        stride_frac=st.integers(1, 12),
-        min_tok=st.integers(1, 12),
-    )
-    def check(arrays, cap, stride_frac, min_tok):
-        step = min(stride_frac, cap)
+    @given(arrays=st.lists(st.lists(st.integers(0, 9), max_size=400),
+                           min_size=1, max_size=8))
+    def check(arrays):
         rows = [(f"d{i}", a) for i, a in enumerate(arrays)]
         df = spark.createDataFrame(rows, "doc_id string, tokens array<int>")
         got = {}
-        for r in tokens.chunk_sequences(
-                df, "tokens", "doc_id", capacity=cap, stride=step,
-                min_tokens=min_tok).collect():
+        for r in tokens.chunk_sequences(df, "tokens", "doc_id").collect():
             got.setdefault(r.doc_id, []).append(
                 (r.chunk_idx, tuple(r.tokens), r.n_tok))
         for i, a in enumerate(rows):
-            exp = _chunk_ref(a[1], cap, step, min_tok)
-            assert sorted(got.get(a[0], [])) == sorted(exp), (a, cap, step,
-                                                              min_tok)
+            exp = _chunk_ref(a[1], tokens.CHUNK_LEN, tokens.CHUNK_STRIDE,
+                             tokens.CHUNK_MIN_TOKENS)
+            assert sorted(got.get(a[0], [])) == sorted(exp), a
 
     check()
 
@@ -2689,7 +2883,7 @@ def test_trim_repeated_suffix_hand_computed(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id string, tokens array<int>")
     got = {r.doc_id: r for r in
-           tokens.trim_repeated_suffix(df, "tokens", "doc_id").collect()}
+           tokens.trim_repeated_suffix(df).collect()}
     assert (list(got["a"].tokens_clean), got["a"].trim_tokens,
             got["a"].period) == ([1, 2, 3, 4], 4, 2)
     assert (list(got["b"].tokens_clean), got["b"].trim_tokens,
@@ -2719,9 +2913,9 @@ def test_trim_repeated_suffix_consistent_with_detector(spark):
                         F.greatest(F.size("tokens") - 1, F.lit(1)), 2),
                 (F.col("seq_no") % 4).cast("int")))).alias("tokens"))
     det = {r.doc_id: r for r in
-           tokens.repeated_suffix(aug, "tokens", "doc_id").collect()}
+           tokens.repeated_suffix(aug).collect()}
     trm = {r.doc_id: r for r in
-           tokens.trim_repeated_suffix(aug, "tokens", "doc_id").collect()}
+           tokens.trim_repeated_suffix(aug).collect()}
     assert set(det) == set(trm)
     for k in det:
         assert trm[k].trim_tokens == det[k].trim_tokens
@@ -2740,7 +2934,7 @@ def test_token_entropy_hand_computed(spark):
          ("c", [5, 5, 6, 6, 6, 9])],     # 2/6, 3/6, 1/6
         "doc_id string, tokens array<int>")
     got = {r.doc_id: r for r in
-           tokens.sequence_token_entropy(df, "tokens", "doc_id").collect()}
+           tokens.sequence_token_entropy(df).collect()}
     assert (got["a"].n_tok, got["a"].n_types, got["a"].entropy_nats) == (4, 1, 0.0)
     assert got["b"].entropy_nats == round(math.log(4), 6)
     # H = ln(6) - (2*ln2 + 3*ln3)/6, via the same micro-nat quantization
@@ -2768,7 +2962,7 @@ def test_zipf_fit_hand_computed(spark):
         rows.extend([(t,)] * (1000 // t))
     df = spark.createDataFrame(rows, "t int").select(
         F.array("t").alias("tokens"))
-    r = tokens.zipf_fit(df, "tokens").collect()[0]
+    r = tokens.zipf_fit(df).collect()[0]
     assert r.n_types == 20
     assert abs(r.slope - (-1.0)) < 0.01
     assert r.r2 > 0.9999
@@ -2779,7 +2973,7 @@ def test_zipf_fit_degenerate_single_type(spark):
     from ulp_spark.operators import tokens
 
     df = spark.createDataFrame([([3, 3, 3],)], "tokens array<int>")
-    r = tokens.zipf_fit(df, "tokens").collect()[0]
+    r = tokens.zipf_fit(df).collect()[0]
     assert r.n_types == 1
     assert r.slope is None and r.r2 is None  # den = 0 -> undefined, not NaN
 
@@ -2821,30 +3015,30 @@ def test_contamination_frac_hand_computed(spark):
 
 
 def test_vocab_growth_hand_computed(spark):
-    """doc order a,b,c -> token stream [1,2,1][3][1,4,5]; first-seen
-    positions: 1->0, 2->1, 3->3, 4->5, 5->6."""
+    """doc order a,b,c -> token stream [0..999][7 x 8999, 5000]
+    [1000..1499]; first-seen positions: t -> t for t < 1000, 5000 ->
+    9999, 1000 + i -> 10000 + i.  GROWTH_CHECKPOINTS count the types first
+    seen before 1k, 10k, 100k, 1M and 3M tokens."""
     from ulp_spark.operators import tokens
 
+    assert tokens.GROWTH_CHECKPOINTS == (
+        1_000, 10_000, 100_000, 1_000_000, 3_000_000)
     df = spark.createDataFrame(
-        [("a", [1, 2, 1]), ("c", [1, 4, 5]), ("b", [3])],
+        [("a", list(range(1000))), ("c", list(range(1000, 1500))),
+         ("b", [7] * 8999 + [5000])],
         "doc_id string, tokens array<int>")
-    got = {r.checkpoint: r.n_types for r in tokens.vocab_growth(
-        df, "tokens", "doc_id", [1, 2, 4, 7, 100]).collect()}
-    assert got == {1: 1, 2: 2, 4: 3, 7: 5, 100: 5}
+    got = {r.checkpoint: r.n_types for r in tokens.vocab_growth(df).collect()}
+    assert got == {1_000: 1000, 10_000: 1001, 100_000: 1501,
+                   1_000_000: 1501, 3_000_000: 1501}
 
 
-def test_vocab_growth_partition_invariant_and_validation(spark):
+def test_vocab_growth_partition_invariant(spark):
     from ulp_spark.fixtures import sequences
     from ulp_spark.operators import tokens
 
-    cps = [100, 10_000]
-    a = tokens.vocab_growth(sequences(spark, 200, 1), checkpoints=cps)
-    b = tokens.vocab_growth(sequences(spark, 200, 7), checkpoints=cps)
+    a = tokens.vocab_growth(sequences(spark, 200, 1))
+    b = tokens.vocab_growth(sequences(spark, 200, 7))
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-    with pytest.raises(ValueError):
-        tokens.vocab_growth(sequences(spark, 10), checkpoints=[])
-    with pytest.raises(ValueError):
-        tokens.vocab_growth(sequences(spark, 10), checkpoints=[5, 5])
 
 
 def test_sequence_minhash_identical_and_near(spark):
@@ -2914,9 +3108,8 @@ def test_apply_mixing_plan_reconstructs_budget(spark):
 
     seq = sequences(spark, 1_000)
     plan = {r.source: r for r in tokens.source_mixing_plan(
-        seq, "n_tok", "source", alpha=0.3, budget=500_000).collect()}
-    mixed = tokens.apply_mixing_plan(
-        seq, "n_tok", "source", "doc_id", alpha=0.3, budget=500_000)
+        seq, budget=tokens.MIX_BUDGET).collect()}
+    mixed = tokens.apply_mixing_plan(seq)
     per = mixed.groupBy("source", "doc_id").count()
     counts = {(r.source, r.doc_id): r["count"] for r in per.collect()}
     n_rows = {s: 0 for s in plan}
@@ -2940,8 +3133,8 @@ def test_apply_mixing_plan_partition_invariant(spark):
     from ulp_spark.fixtures import sequences
     from ulp_spark.operators import tokens
 
-    a = tokens.apply_mixing_plan(sequences(spark, 400, 1), budget=300_000)
-    b = tokens.apply_mixing_plan(sequences(spark, 400, 9), budget=300_000)
+    a = tokens.apply_mixing_plan(sequences(spark, 400, 1))
+    b = tokens.apply_mixing_plan(sequences(spark, 400, 9))
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
@@ -2975,7 +3168,7 @@ def test_apply_mixing_plan_no_corpus_shuffle_plan(spark):
     from ulp_spark.fixtures import sequences
     from ulp_spark.operators import tokens
 
-    out = tokens.apply_mixing_plan(sequences(spark, 500), budget=200_000)
+    out = tokens.apply_mixing_plan(sequences(spark, 500))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastExchange" in plan          # the plan side
     # corpus side: a BroadcastHashJoin, never a SortMergeJoin/shuffle join
@@ -2999,7 +3192,7 @@ def test_contamination_coverage_single_corpus_shuffle(spark):
 
 def test_fim_transform_invariants(spark):
     """Structure: [PRE] p [SUF] s [MID] m with the non-sentinel token
-    MULTISET preserved; untouched rows pass through; rate=0/1 edges."""
+    MULTISET preserved; untouched rows pass through."""
     from collections import Counter
 
     from ulp_spark.fixtures import sequences
@@ -3007,27 +3200,23 @@ def test_fim_transform_invariants(spark):
 
     seq = sequences(spark, 300).select("doc_id", "tokens")
     orig = {r.doc_id: list(r.tokens) for r in seq.collect()}
-    out = tokens.fim_transform(seq, rate=0.5,
-                               pre_id=60001, mid_id=60002, suf_id=60003)
+    out = tokens.fim_transform(seq)
     n_fim = 0
     for r in out.collect():
         t = list(r.tokens_fim)
         if r.is_fim:
             n_fim += 1
-            assert t[0] == 60001 and r.n_tok_fim == len(orig[r.doc_id]) + 3
-            i_suf, i_mid = t.index(60003), t.index(60002)
+            assert t[0] == tokens.FIM_PRE_ID
+            assert r.n_tok_fim == len(orig[r.doc_id]) + 3
+            i_suf = t.index(tokens.FIM_SUF_ID)
+            i_mid = t.index(tokens.FIM_MID_ID)
             assert 0 < i_suf < i_mid
             body = t[1:i_suf] + t[i_mid + 1:] + t[i_suf + 1:i_mid]
             assert Counter(body) == Counter(orig[r.doc_id])
         else:
             assert t == orig[r.doc_id]
+    assert tokens.FIM_RATE == 0.5
     assert 100 < n_fim < 200  # rate 0.5 over 300 rows, loose band
-    all_off = tokens.fim_transform(seq, rate=0.0)
-    assert all_off.filter("is_fim").count() == 0
-    all_on = tokens.fim_transform(seq, rate=1.0)
-    assert all_on.filter("NOT is_fim").count() == 0
-    with pytest.raises(ValueError):
-        tokens.fim_transform(seq, rate=1.5)
 
 
 def test_fim_transform_partition_invariant_no_shuffle(spark):
@@ -3051,11 +3240,10 @@ def test_span_corruption_invariants(spark):
     from ulp_spark.fixtures import sequences
     from ulp_spark.operators import tokens
 
-    BASE = 51000
+    BASE = tokens.UL2_SENTINEL
     seq = sequences(spark, 300).select("doc_id", "tokens")
     orig = {r.doc_id: list(r.tokens) for r in seq.collect()}
-    out = tokens.span_corruption(seq, rate=0.15, span_len=3,
-                                 sentinel_base=BASE)
+    out = tokens.span_corruption(seq, rate=0.15, span_len=3)
     n_spans_total = 0
     for r in out.collect():
         inp, tgt = list(r.inputs), list(r.targets)
@@ -3335,7 +3523,7 @@ def test_pack_segments_invariants(spark):
     pk = seq.select("doc_id",
                     hash_bucket(F.col("doc_id"), 8).alias("bin_id"))
     out = packing.pack_segments(
-        packing.pack_sequences(seq, pk, "doc_id", "tokens")).collect()
+        packing.pack_sequences(seq, pk)).collect()
     assert len(out) == 8
     for r in out:
         n = len(r.tokens)
@@ -3466,8 +3654,7 @@ def test_pack_sequences_extra_arrays_align(spark):
         .alias("prompt_len"))
     masked = tokens.sft_loss_mask(seq, "tokens", "prompt_len")
     pk = masked.select("doc_id", hash_bucket(F.col("doc_id"), 6).alias("bin_id"))
-    out = packing.pack_sequences(
-        masked, pk, "doc_id", "tokens", extra_array_cols=["loss_mask"])
+    out = packing.pack_sequences(masked, pk, extra_array_cols=["loss_mask"])
     docs = {r.doc_id: r for r in masked.collect()}
     assign = {r.doc_id: r.bin_id for r in pk.collect()}
     for r in out.collect():

@@ -31,6 +31,7 @@ TOKEN_VOCAB = 50257          # GPT-2-ish vocab size; tokens in [0, 50257)
 MAX_TOKENS = 512             # n_tok in [1, 512]
 EPOCH = "2022-03-23 00:00:00"  # matches reference date-sniff fixtures
 NOISE_MICRO = 4800           # clustered_embeddings noise, millionths
+EMB_DIM, EMB_CLUSTERS = 64, 20  # clustered_embeddings shape by default
 
 PROVIDERS = [
     "Microsoft-Windows-Security-Auditing",
@@ -72,7 +73,8 @@ def sequences(spark: SparkSession, n: int, partitions: int | None = None) -> Dat
 
 
 def clustered_embeddings(
-    spark: SparkSession, n: int, dim: int = 64, clusters: int = 20,
+    spark: SparkSession, n: int, dim: int = EMB_DIM,
+    clusters: int = EMB_CLUSTERS,
     partitions: int | None = None,
 ) -> DataFrame:
     """T4: deterministic CLUSTERABLE embeddings (vec_id, embedding, label).
@@ -210,19 +212,18 @@ def sequences_sql(n: int) -> str:
     """
 
 
-def clustered_embeddings_sql(
-    n: int, dim: int = 64, clusters: int = 20,
-) -> str:
-    """DuckDB SQL producing exactly `clustered_embeddings(spark, n, ...)`
-    (bitwise: integer grid + exact-integer noise scaled by one
-    correctly-rounded double division, cast to FLOAT in both engines)."""
+def clustered_embeddings_sql(n: int) -> str:
+    """DuckDB SQL producing exactly `clustered_embeddings(spark, n)` at its
+    default ``EMB_DIM`` x ``EMB_CLUSTERS`` shape (bitwise: integer grid +
+    exact-integer noise scaled by one correctly-rounded double division,
+    cast to FLOAT in both engines)."""
     return f"""
     SELECT i AS vec_id,
-           [CAST(((i % {clusters})*41 + j*17) % 23 - 11
+           [CAST(((i % {EMB_CLUSTERS})*41 + j*17) % 23 - 11
                  + (((i*96557 + j*40503) % 2000) - 1000)
                    * {NOISE_MICRO}/1000000.0 AS FLOAT)
-            FOR j IN range(0, {dim})] AS embedding,
-           CAST(i % {clusters} AS INT) AS label
+            FOR j IN range(0, {EMB_DIM})] AS embedding,
+           CAST(i % {EMB_CLUSTERS} AS INT) AS label
     FROM range(0, {n}) t(i)
     """
 

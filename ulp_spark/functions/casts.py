@@ -52,7 +52,7 @@ from pyspark.sql.functions import pandas_udf
 from ulp_spark.functions import sniff
 from ulp_spark.functions.sniff import (
     BOOL, DATE, FLOAT, INT, IPV4, IPV6, NULL, STR,
-    RE_DATE, RE_FLOAT, RE_IPV4, RE_IPV6,
+    RE_FLOAT, RE_IPV4, RE_IPV6,
 )
 from ulp_spark.functions.sqltext import ident, lit
 
@@ -133,8 +133,9 @@ _RE_ZONE = r"(Z|[+-][0-9]{2}:[0-9]{2})$"
 _UTC_FORMAT = "yyyy-MM-dd'T'HH:mm:ss"
 
 
-def _date_canonical(e: str, is_date: str | None = None) -> str:
-    """RFC3339 -> UTC RFC3339 with '+00:00' (chrono to_rfc3339, lib.rs:377).
+def _date_canonical(e: str, is_date: str) -> str:
+    """RFC3339 -> UTC RFC3339 with '+00:00' (chrono to_rfc3339, lib.rs:377),
+    for values where the SQL predicate ``is_date`` holds.
 
     Implemented entirely on TIMESTAMP_NTZ + explicit offset arithmetic so
     the result is independent of ``spark.sql.session.timeZone`` (a
@@ -155,9 +156,8 @@ def _date_canonical(e: str, is_date: str | None = None) -> str:
                f" + CAST(substring({off}, 5, 2) AS INT)) END")
     utc = f"({base} - make_interval(0, 0, 0, 0, 0, {off_min}, 0))"
     frac = f"regexp_extract({e}, {lit('(' + _RE_FRAC + ')')}, 1)"
-    shape_ok = f"{e} RLIKE {lit(RE_DATE)}" if is_date is None else is_date
     return (
-        f"CASE WHEN ({shape_ok}) AND {base} IS NOT NULL"
+        f"CASE WHEN ({is_date}) AND {base} IS NOT NULL"
         f" THEN concat(date_format({utc}, {lit(_UTC_FORMAT)}),"
         f" {frac}, {lit('+00:00')}) END"
     )
@@ -187,14 +187,16 @@ def cast_field(
     value: str,
     rcode: str,
     target: int,
+    sniff_code: str,
     iv: str | None = None,
     bv: str | None = None,
     fv: str | None = None,
-    sniff_code: str | None = None,
 ) -> tuple[str, str]:
     """Cast one field to a target type code, as SQL text.
 
-    ``value`` is the field's raw string form; ``rcode`` its JSON runtime type
+    ``value`` is the field's raw string form; ``sniff_code`` its sniffed
+    type code (:func:`ulp_spark.functions.sniff.sniff_code`, or the parse
+    stage's staged ``<f>__t``); ``rcode`` its JSON runtime type
     (sniff.runtime_code of the sniffed code: NULL/BOOL/INT/FLOAT/STR).
     Returns (casted value of the target's :data:`NATIVE` Spark type, error
     flag), both SQL text.
@@ -208,16 +210,14 @@ def cast_field(
     :func:`helper_columns` to avoid re-inlining the heavy sub-expressions
     in multi-route cascades.
 
-    ``sniff_code`` optionally passes the field's ALREADY-SNIFFED type code
-    (the parse stage's ``<f>__t``).  The DATE branch then tests
-    ``sniff_code == DATE`` instead of re-running the calendar regex —
-    provably the same predicate: the sniff cascade classifies a string as
-    DATE iff it matches RE_DATE (every earlier branch fails on any
-    RE_DATE-shaped value: int/float/hex literals cannot contain the
-    mandatory '-', the IPv4 quad has no '-', the IPv6 branch is gated on
-    "contains ':' and no '-'", and the NULL/BOOL word forms are
-    length-incompatible), and the DATE branch itself is that rlike.
-    Callers without a staged sniff column omit it and keep the regex.
+    The DATE branch tests ``sniff_code == DATE`` instead of re-running the
+    calendar regex — provably the same predicate: the sniff cascade
+    classifies a string as DATE iff it matches RE_DATE (every earlier
+    branch fails on any RE_DATE-shaped value: int/float/hex literals
+    cannot contain the mandatory '-', the IPv4 quad has no '-', the IPv6
+    branch is gated on "contains ':' and no '-'", and the NULL/BOOL word
+    forms are length-incompatible), and the DATE branch itself is that
+    rlike.
     """
     iv = f"({iv if iv is not None else sniff.int_value(value)})"
     bv = f"({bv if bv is not None else _bool_value(value)})"
@@ -294,8 +294,7 @@ def cast_field(
         return f"CASE WHEN {ok} THEN {value} END", f"NOT {ok}"
 
     if target == DATE:
-        canon = _date_canonical(
-            value, None if sniff_code is None else f"({sniff_code}) = {DATE}")
+        canon = _date_canonical(value, f"({sniff_code}) = {DATE}")
         ok = f"({is_str} AND ({canon}) IS NOT NULL)"
         return f"CASE WHEN {ok} THEN {canon} END", f"NOT {ok}"
 

@@ -33,6 +33,7 @@ PASSAGE_WORDS = 8          # words per dedup passage
 CONTAM_GRAM = 5            # words per decontamination n-gram
 BOILER_MIN_DOCS = 2        # distinct docs that make a passage boilerplate
 ROUND = 6                  # decimal places for ratio outputs
+QUALITY_TOPK = 3           # documents quality_topk keeps per group
 
 
 # --------------------------------------------------------------------------
@@ -385,9 +386,10 @@ def redact_sql(text: str) -> tuple[str, dict[str, str]]:
 # --------------------------------------------------------------------------
 
 def quality_topk(
-    df: DataFrame, text_col: str, id_col: str, group_col: str, k: int = 3,
+    df: DataFrame, text_col: str, id_col: str, group_col: str,
 ) -> DataFrame:
-    """Top-``k`` documents per group by quality score (ties -> smaller id).
+    """Top-``QUALITY_TOPK`` documents per group by quality score (ties ->
+    smaller id).
 
     The curation "select best exemplars per domain" move: one shuffle on
     the group key, per-partition row_number — never a global sort. At
@@ -402,12 +404,12 @@ def quality_topk(
     return (
         df.select(group_col, id_col, q.alias("q"))
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= QUALITY_TOPK)
     )
 
 
 def quality_topk_sql(
-    table: str, text_col: str, id_col: str, group_col: str, k: int = 3,
+    table: str, text_col: str, id_col: str, group_col: str,
 ) -> str:
     from ulp_spark.operators import textstats
 
@@ -420,7 +422,7 @@ def quality_topk_sql(
                row_number() OVER (PARTITION BY {group_col}
                                   ORDER BY q DESC, {id_col}) AS rank
         FROM scored
-        QUALIFY rank <= {k}
+        QUALIFY rank <= {QUALITY_TOPK}
     """
 
 

@@ -43,6 +43,7 @@ MAX_BUCKET = 1000     # skew cap: larger LSH buckets / postings form no pairs
 JACCARD_MIN = 0.8     # verified near-dup threshold on shingle sets
 WINNOW_W = 8          # winnowing window, in k-grams
 WINNOW_MIN_SHARED = 2  # fingerprints a winnow candidate pair must share
+SIMHASH_MAX_HAMMING = 3  # simhash near-dup bound, in differing bits
 
 
 # --------------------------------------------------------------------------
@@ -343,12 +344,11 @@ def simhash64_sql(table: str, text_col: str, id_col: str) -> str:
     """
 
 
-def simhash_candidates(
-    df: DataFrame, text_col: str, id_col: str, max_hamming: int = 3,
-) -> DataFrame:
+def simhash_candidates(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Near-dup pairs by 64-bit simhash: 4x16-bit band collision candidates
     from :func:`_bucket_pairs`, verified with the exact Hamming distance
-    (``bit_count(xor)``).  Returns (id_a, id_b, hamming <= max_hamming).
+    (``bit_count(xor)``).  Returns (id_a, id_b, hamming <=
+    SIMHASH_MAX_HAMMING).
     """
     sig = simhash64(df, text_col, id_col)
     lo, hi = F.col("sim_lo"), F.col("sim_hi")
@@ -369,12 +369,10 @@ def simhash_candidates(
         .select("id_a", "id_b", ham.cast("int").alias("hamming"))
         .distinct()
     )
-    return pairs.filter(F.col("hamming") <= max_hamming)
+    return pairs.filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
 
 
-def simhash_candidates_sql(
-    table: str, text_col: str, id_col: str, max_hamming: int = 3,
-) -> str:
+def simhash_candidates_sql(table: str, text_col: str, id_col: str) -> str:
     """DuckDB twin of :func:`simhash_candidates`."""
     band_vals = ["sim_lo & 65535", "sim_lo >> 16", "sim_hi & 65535", "sim_hi >> 16"]
     bands_sel = " UNION ALL ".join(
@@ -395,7 +393,7 @@ def simhash_candidates_sql(
       FROM bands a JOIN ok USING (band, bk)
       JOIN bands b ON a.band = b.band AND a.bk = b.bk AND a.id < b.id
     )
-    SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= {max_hamming}
+    SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= {SIMHASH_MAX_HAMMING}
     """
 
 

@@ -6,10 +6,10 @@ row with buffered bulk POSTs and infinite retry (``src/elastic.rs:76-154``,
 
 * ONE pass, ``partitionBy(route)`` parquet/Iceberg write — every route
   lands in its own directory/partition in a single shuffle-free job
-  (:func:`write_partitioned`);
-* resumable commits: ``plans.manifest.resume_fanout`` stages every pending
-  route through that one write, then commits the routes one by one in
-  sorted route order (the reference's BTreeMap iteration) — a rename into
+  (``plans.manifest.resume_fanout``);
+* resumable commits: ``resume_fanout`` stages every pending route through
+  that one write, then commits the routes one by one in sorted route
+  order (the reference's BTreeMap iteration) — a rename into
   ``sinks/<route>`` and a manifest save each — so a crash resumes where it
   stopped;
 * idempotent commit: parquet/Iceberg atomic job commit replaces the
@@ -24,17 +24,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def write_partitioned(df: DataFrame, path: str, route_col: str = "route"
-                      ) -> None:
-    """Single-pass fan-out: directory per route under ``path``, replacing
-    whatever ``path`` held."""
-    (
-        df.write.mode("overwrite")
-        .partitionBy(route_col)
-        .parquet(path)
-    )
 
 
 def route_counts(df: DataFrame) -> DataFrame:

@@ -21,9 +21,10 @@ from pyspark.sql import functions as F
 _M61 = (1 << 61) - 1  # Mersenne modulus keeps the digest sum in i64 range
 
 
-def partition_lineage(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """(partition_id, n_rows, n_bytes, digest) — one row per partition."""
-    cs = cols or df.columns
+def partition_lineage(df: DataFrame) -> DataFrame:
+    """(partition_id, n_rows, n_bytes, digest) — one row per partition,
+    over every column of ``df`` (project first to digest fewer)."""
+    cs = df.columns
     row_hash = F.pmod(F.xxhash64(*[F.col(c) for c in cs]), F.lit(_M61))
     byte_len = sum(
         (F.coalesce(F.length(F.col(c).cast("string")), F.lit(0)) for c in cs),

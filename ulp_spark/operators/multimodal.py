@@ -29,6 +29,7 @@ FEATURE_SCHEMA = (
 )
 FRAME_SCHEMA = "doc_id bigint, frame_no int, frame binary"
 N_HIST = 4  # byte-histogram buckets in extract_features
+FRAME_STRIDE, FRAME_LEN = 16, 8  # sample_frames: frame step and size (bytes)
 
 
 def synth_binary_column(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -80,11 +81,11 @@ def extract_features(df: DataFrame) -> DataFrame:
     return df.mapInPandas(run, FEATURE_SCHEMA)
 
 
-def sample_frames(df: DataFrame, stride: int = 16, frame_len: int = 8) -> DataFrame:
-    """Frame sampling from a fake "video" payload: every ``stride`` bytes,
-    one ``frame_len``-byte slice.  One row per (doc, frame) — the explode
-    shape real video pipelines use (frames >> videos, so the fan-out
-    repartitions naturally by hash of the new row count)."""
+def sample_frames(df: DataFrame) -> DataFrame:
+    """Frame sampling from a fake "video" payload: every ``FRAME_STRIDE``
+    bytes, one ``FRAME_LEN``-byte slice.  One row per (doc, frame) — the
+    explode shape real video pipelines use (frames >> videos, so the
+    fan-out repartitions naturally by hash of the new row count)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -92,10 +93,10 @@ def sample_frames(df: DataFrame, stride: int = 16, frame_len: int = 8) -> DataFr
             for doc_id, blob in zip(pdf["doc_id"], pdf["payload"]):
                 if blob is None:
                     continue
-                for k, off in enumerate(range(0, len(blob), stride)):
+                for k, off in enumerate(range(0, len(blob), FRAME_STRIDE)):
                     ids.append(doc_id)
                     nos.append(k)
-                    frames.append(bytes(blob[off:off + frame_len]))
+                    frames.append(bytes(blob[off:off + FRAME_LEN]))
             yield pd.DataFrame({"doc_id": ids, "frame_no": nos, "frame": frames})
 
     return df.mapInPandas(run, FRAME_SCHEMA)

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 CHUNK = 512  # training sequence length (tokens)
+MIN_BUCKET = 32  # narrowest length_bucket_stats bucket (tokens)
 
 
 def _range_boundaries(df: DataFrame, order_col: str, n_part: int) -> list:
@@ -280,7 +281,6 @@ def bin_stats(packed: DataFrame, capacity: int = CHUNK) -> DataFrame:
 
 def pack_sequences(
     seq: DataFrame, packed: DataFrame,
-    id_col: str = "doc_id", tokens_col: str = "tokens",
     extra_array_cols: list[str] | None = None,
 ) -> DataFrame:
     """Materialize the training rows for a pack_bins assignment: one row
@@ -310,20 +310,20 @@ def pack_sequences(
     document's tokens (sft_loss_mask output is by construction).
     """
     extras = list(extra_array_cols or [])
-    j = seq.select(id_col, tokens_col, *extras).join(
-        packed.select(id_col, "bin_id"), id_col)
+    j = seq.select("doc_id", "tokens", *extras).join(
+        packed.select("doc_id", "bin_id"), "doc_id")
     grouped = j.groupBy("bin_id").agg(
-        F.array_sort(F.collect_list(F.struct(id_col, tokens_col, *extras)))
+        F.array_sort(F.collect_list(F.struct("doc_id", "tokens", *extras)))
         .alias("__arr"))
     arr = F.col("__arr")
-    toks = F.flatten(F.transform(arr, lambda s: s[tokens_col]))
+    toks = F.flatten(F.transform(arr, lambda s: s["tokens"]))
     starts = F.aggregate(
         arr,
         F.struct(F.array().cast("array<int>").alias("st"),
                  F.lit(0).alias("off")),
         lambda acc, s: F.struct(
             F.concat(acc["st"], F.array(acc["off"])).alias("st"),
-            (acc["off"] + F.size(s[tokens_col])).alias("off")),
+            (acc["off"] + F.size(s["tokens"])).alias("off")),
         lambda acc: acc["st"],
     )
     def _field(c):
@@ -336,7 +336,7 @@ def pack_sequences(
     ]
     return grouped.select(
         "bin_id",
-        toks.alias(tokens_col),
+        toks.alias("tokens"),
         *extra_out,
         starts.alias("doc_starts"),
         F.size(arr).alias("n_docs"),
@@ -344,13 +344,11 @@ def pack_sequences(
     )
 
 
-def length_bucket_stats(
-    df: DataFrame, len_col: str = "n_tok", min_bucket: int = 32,
-) -> DataFrame:
+def length_bucket_stats(df: DataFrame) -> DataFrame:
     """Padding-waste accounting for LENGTH-BUCKETED batching — the cheap
     alternative to pack_bins when documents must stay un-concatenated
     (e.g. SFT rows).  Each sequence lands in the power-of-two bucket
-    ceil'd from its length (floored at ``min_bucket``); batching within a
+    ceil'd from its length (floored at ``MIN_BUCKET``); batching within a
     bucket pads every row to the bucket width.  Output: one row per
     bucket — (bucket, n_seqs, sum_tok, pad_tok, pad_frac) with pad_tok =
     n_seqs*bucket - sum_tok — plus the padding a pad-to-global-max
@@ -362,19 +360,17 @@ def length_bucket_stats(
     Rows with NULL or non-positive length are excluded by contract
     (report them via profiling, don't fold them into padding math).
     """
-    if min_bucket < 1:
-        raise ValueError("min_bucket must be >= 1")
-    n = F.col(len_col).cast("bigint")
+    n = F.col("n_tok").cast("bigint")
     # double log2/pow CAN misround near exact powers of two; the two
     # guards below self-correct both directions, making the bucket
     # integer-exact at every 2^k edge (pinned by the 1..600 sweep test).
-    exp = F.when(n <= min_bucket, F.lit(float(min_bucket))).otherwise(
+    exp = F.when(n <= MIN_BUCKET, F.lit(float(MIN_BUCKET))).otherwise(
         F.pow(F.lit(2.0), F.ceil(F.log2(n.cast("double")))))
     bucket = exp.cast("bigint")
     # guard the float-log edge: if pow/log2 rounding undershot (bucket<n)
     # double it; if it overshot a full level (bucket >= 2n), halve it.
     bucket = F.when(bucket < n, bucket * 2).otherwise(bucket)
-    bucket = F.when((bucket >= n * 2) & (bucket > min_bucket), bucket / 2)\
+    bucket = F.when((bucket >= n * 2) & (bucket > MIN_BUCKET), bucket / 2)\
         .otherwise(bucket).cast("bigint")
     return (
         df.filter(n.isNotNull() & (n > 0))
@@ -394,17 +390,15 @@ def length_bucket_stats(
     )
 
 
-def length_bucket_stats_sql(
-    table: str, len_col: str = "n_tok", min_bucket: int = 32,
-) -> str:
+def length_bucket_stats_sql(table: str) -> str:
     """DuckDB twin of length_bucket_stats (integer-exact bucket via the
     same guarded float-log construction, so edge rows agree bitwise)."""
-    n = f"CAST({len_col} AS BIGINT)"
-    b0 = (f"CASE WHEN {n} <= {min_bucket} THEN {min_bucket}.0 "
+    n = "CAST(n_tok AS BIGINT)"
+    b0 = (f"CASE WHEN {n} <= {MIN_BUCKET} THEN {MIN_BUCKET}.0 "
           f"ELSE pow(2.0, ceil(log2(CAST({n} AS DOUBLE)))) END")
     b1 = f"CAST({b0} AS BIGINT)"
     b2 = f"(CASE WHEN {b1} < {n} THEN {b1} * 2 ELSE {b1} END)"
-    b3 = (f"CAST(CASE WHEN {b2} >= {n} * 2 AND {b2} > {min_bucket} "
+    b3 = (f"CAST(CASE WHEN {b2} >= {n} * 2 AND {b2} > {MIN_BUCKET} "
           f"THEN {b2} / 2 ELSE {b2} END AS BIGINT)")
     return f"""
         SELECT bucket, n_seqs, sum_tok, pad_tok,
@@ -416,7 +410,7 @@ def length_bucket_stats_sql(
                  sum(n)::BIGINT AS sum_tok,
                  (count(*) * any_value(bucket) - sum(n))::BIGINT AS pad_tok
           FROM (SELECT {b3} AS bucket, {n} AS n FROM {table}
-                WHERE {len_col} IS NOT NULL AND {len_col} > 0)
+                WHERE n_tok IS NOT NULL AND n_tok > 0)
           GROUP BY bucket
         )
     """

@@ -41,31 +41,28 @@ def shard_assign(
 
 
 def shard_manifest(
-    df: DataFrame, order_col: str = "doc_id", len_col: str = "n_tok",
-    shard_tokens: int = SHARD_TOKENS,
+    df: DataFrame, shard_tokens: int = SHARD_TOKENS,
 ) -> DataFrame:
-    """One row per shard: (shard, n_seqs, n_tokens, first_doc, last_doc)."""
-    return _manifest_agg(shard_assign(df, order_col, len_col, shard_tokens),
-                         order_col, len_col)
+    """One row per shard of ``df`` in doc_id order, sized by n_tok:
+    (shard, n_seqs, n_tokens, first_doc, last_doc)."""
+    return _manifest_agg(shard_assign(df, "doc_id", "n_tok", shard_tokens),
+                         "doc_id", "n_tok")
 
 
-def shard_manifest_sql(
-    table: str, order_col: str = "doc_id", len_col: str = "n_tok",
-    shard_tokens: int = SHARD_TOKENS,
-) -> str:
+def shard_manifest_sql(table: str, shard_tokens: int = SHARD_TOKENS) -> str:
     """DuckDB twin (plain window cumsum — single node by design)."""
     return f"""
     WITH c AS (
-      SELECT {order_col}, {len_col},
-             (sum({len_col}) OVER (ORDER BY {order_col})
-              - {len_col})::BIGINT AS tok_offset
+      SELECT doc_id, n_tok,
+             (sum(n_tok) OVER (ORDER BY doc_id)
+              - n_tok)::BIGINT AS tok_offset
       FROM {table}
     )
     SELECT CAST(floor(tok_offset / {shard_tokens}) AS BIGINT) AS shard,
            count(*)::BIGINT AS n_seqs,
-           sum({len_col})::BIGINT AS n_tokens,
-           min({order_col}) AS first_doc,
-           max({order_col}) AS last_doc
+           sum(n_tok)::BIGINT AS n_tokens,
+           min(doc_id) AS first_doc,
+           max(doc_id) AS last_doc
     FROM c GROUP BY shard
     """
 

@@ -26,6 +26,8 @@ from ulp_spark.operators.dedup import MAX_BUCKET, _bucket_pairs
 from ulp_spark.session import local_frame, seam
 
 NBITS = 8
+TOPK = 10  # neighbours brute_force_topk and ivf_topk return
+N_PROBE = 2  # IVF cells ivf_topk scans
 
 
 def _py_norm(vec: list[float]) -> float:
@@ -60,9 +62,9 @@ def cosine(a: Column, b: Column) -> Column:
 
 
 def brute_force_topk(
-    df: DataFrame, vec_col: str, id_col: str, query: list[float], k: int = 10
+    df: DataFrame, vec_col: str, id_col: str, query: list[float],
 ) -> DataFrame:
-    """Exact top-k by cosine to a constant query vector.
+    """Exact top-``TOPK`` by cosine to a constant query vector.
 
     Ties broken by id for determinism (and oracle parity).
     """
@@ -71,7 +73,7 @@ def brute_force_topk(
         F.col(id_col),
         F.round(cosine(F.col(vec_col), q), 6).alias("cos_sim"),
     )
-    return scored.orderBy(F.desc("cos_sim"), F.col(id_col)).limit(k)
+    return scored.orderBy(F.desc("cos_sim"), F.col(id_col)).limit(TOPK)
 
 
 # --------------------------------------------------------------------------
@@ -301,11 +303,12 @@ def ivf_assign(vec: Column, centroids: list[list[float]],
 
 def ivf_topk(
     df: DataFrame, vec_col: str, id_col: str, query: list[float],
-    centroids: list[list[float]], k: int = 10, n_probe: int = 2,
+    centroids: list[list[float]],
 ) -> DataFrame:
-    """Approximate top-k: exact cosine within the ``n_probe`` cells nearest
-    to the query.  At cluster scale the table is written partitioned by
-    cell, so probing is partition pruning; here it's a cell-id filter."""
+    """Approximate top-``TOPK``: exact cosine within the ``N_PROBE`` cells
+    nearest to the query.  At cluster scale the table is written
+    partitioned by cell, so probing is partition pruning; here it's a
+    cell-id filter."""
     def cos_py(a, b):
         num = sum(x * y for x, y in zip(a, b))
         den = (sum(x * x for x in a) ** 0.5) * (sum(y * y for y in b) ** 0.5)
@@ -313,7 +316,7 @@ def ivf_topk(
 
     order = sorted(range(len(centroids)),
                    key=lambda i: (-cos_py(query, centroids[i]), i))
-    probe = order[:n_probe]
+    probe = order[:N_PROBE]
     q = F.array(*[F.lit(float(x)) for x in query])
     # row norm staged once, shared by the cell assignment and the final
     # re-rank cosine (identical rounded values — see ivf_assign)
@@ -327,7 +330,7 @@ def ivf_topk(
                 F.round(F.when(d > 0, dot(F.col(vec_col), q) / d)
                         .otherwise(F.lit(0.0)), 6).alias("cos_sim"))
     )
-    return scored.orderBy(F.desc("cos_sim"), F.col(id_col)).limit(k)
+    return scored.orderBy(F.desc("cos_sim"), F.col(id_col)).limit(TOPK)
 
 
 # --------------------------------------------------------------------------

@@ -22,8 +22,21 @@ MAX_PERIOD = 8  # longest repeating block the suffix detector tries
 VOCAB_SIZE = 50257  # V of the add-alpha token LMs (the fixtures' vocab)
 LM_ALPHA = 0.5  # add-alpha smoothing of the token LMs
 MIX_SEED = "mix0"  # md5 seed of apply_mixing_plan's tail draw
-# UL2 denoiser_mix mode tokens and its S-mode sentinel (outside the vocab)
+MIX_ALPHA = 0.5  # source mixing temperature: q proportional to p**MIX_ALPHA
+MIX_BUDGET = 2_000_000  # tokens apply_mixing_plan's epoch spends
+EPOCH_SEED = 42  # key of the epoch shuffle
+# chunk_sequences: window length, step between window starts, and the
+# shortest trailing window kept
+CHUNK_LEN, CHUNK_STRIDE, CHUNK_MIN_TOKENS = 128, 96, 16
+# vocab_growth's checkpoints, in corpus tokens
+GROWTH_CHECKPOINTS = (1_000, 10_000, 100_000, 1_000_000, 3_000_000)
+# fim_transform: share of sequences rewritten, and its PRE/MID/SUF
+# sentinels (outside the vocab)
+FIM_RATE = 0.5
+FIM_PRE_ID, FIM_MID_ID, FIM_SUF_ID = 60001, 60002, 60003
+# UL2 denoiser_mix mode tokens (outside the vocab)
 UL2_R_ID, UL2_X_ID, UL2_S_ID = 52000, 52001, 52002
+# span_corruption's first sentinel id, also UL2's S-mode sentinel
 UL2_SENTINEL = 51000
 
 
@@ -211,9 +224,7 @@ def duplicate_gram_coverage_sql(
     """
 
 
-def source_token_drift(
-    df: DataFrame, tokens_col: str = "tokens", source_col: str = "source",
-) -> DataFrame:
+def source_token_drift(df: DataFrame) -> DataFrame:
     """Per-source unigram-distribution drift vs the whole corpus — the
     mixture-monitoring stat a training-data pipeline watches per ingest
     batch (a source whose token distribution walks away from the corpus
@@ -238,9 +249,9 @@ def source_token_drift(
     engines).
     """
     st = (
-        df.select(F.coalesce(F.col(source_col), F.lit("__null__"))
+        df.select(F.coalesce(F.col("source"), F.lit("__null__"))
                   .alias("source"),
-                  F.explode(F.col(tokens_col)).alias("t"))
+                  F.explode(F.col("tokens")).alias("t"))
         .groupBy("source", "t")
         .agg(F.count(F.lit(1)).alias("n_st"))
     )
@@ -272,14 +283,12 @@ def source_token_drift(
     )
 
 
-def source_token_drift_sql(
-    table: str, tokens_col: str = "tokens", source_col: str = "source",
-) -> str:
+def source_token_drift_sql(table: str) -> str:
     """DuckDB twin (plain CTE re-derivation, same closed-form TV fix)."""
     return f"""
         WITH ex AS (
-          SELECT coalesce({source_col}, '__null__') AS source,
-                 unnest({tokens_col}) AS t
+          SELECT coalesce(source, '__null__') AS source,
+                 unnest(tokens) AS t
           FROM {table}
         ),
         st AS (
@@ -302,13 +311,12 @@ def source_token_drift_sql(
 
 
 def source_temperature_weights(
-    df: DataFrame, n_tok_col: str = "n_tok", source_col: str = "source",
-    alpha: float = 0.5, budget: int | None = None,
+    df: DataFrame, budget: int | None = None,
 ) -> DataFrame:
     """Temperature-based source mixing weights — the multilingual /
     multi-corpus reweighting scheme (XLM-R's exponentiated sampling,
-    alpha in (0, 1]): a source holding share p of the corpus tokens is
-    sampled with probability q proportional to p**alpha, up-weighting
+    alpha = ``MIX_ALPHA``): a source holding share p of the corpus tokens
+    is sampled with probability q proportional to p**alpha, up-weighting
     low-resource sources without discarding anything.
 
     Returns one row per source: (source, n_tokens, p_natural, q_temp,
@@ -326,21 +334,21 @@ def source_temperature_weights(
     one row).  Null sources bucket as '__null__' like source_token_drift.
     """
     per = (
-        df.select(F.coalesce(F.col(source_col), F.lit("__null__"))
+        df.select(F.coalesce(F.col("source"), F.lit("__null__"))
                   .alias("source"),
-                  F.col(n_tok_col))
+                  F.col("n_tok"))
         .groupBy("source")
-        .agg(F.sum(n_tok_col).cast("bigint").alias("n_tokens"))
+        .agg(F.sum("n_tok").cast("bigint").alias("n_tokens"))
     )
     # |sources| rows after ONE corpus pass; the normalizer aggregate and
     # the output projection both read the seam, never the corpus again
     per = seam(per)
     tot = per.agg(
         F.sum("n_tokens").cast("double").alias("__N"),
-        F.sum(F.pow("n_tokens", F.lit(alpha))).alias("__Z"),
+        F.sum(F.pow("n_tokens", F.lit(MIX_ALPHA))).alias("__Z"),
     )
     p = F.col("n_tokens") / F.col("__N")
-    q = F.pow("n_tokens", F.lit(alpha)) / F.col("__Z")
+    q = F.pow("n_tokens", F.lit(MIX_ALPHA)) / F.col("__Z")
     cols = [
         F.col("source"), F.col("n_tokens"),
         F.round(p, 6).alias("p_natural"),
@@ -355,26 +363,26 @@ def source_temperature_weights(
 
 
 def source_temperature_weights_sql(
-    table: str, n_tok_col: str = "n_tok", source_col: str = "source",
-    alpha: float = 0.5, budget: int | None = None,
+    table: str, budget: int | None = None,
 ) -> str:
     """DuckDB twin: same cancelled-normalizer derivation."""
     budget_col = (
-        f",\n               floor(pow(n_tokens, {alpha}) / t.z * {float(budget)})"
-        f"::BIGINT AS budget_tokens" if budget is not None else ""
+        f",\n               floor(pow(n_tokens, {MIX_ALPHA}) / t.z"
+        f" * {float(budget)})::BIGINT AS budget_tokens"
+        if budget is not None else ""
     )
     return f"""
         WITH per AS (
-          SELECT coalesce({source_col}, '__null__') AS source,
-                 sum({n_tok_col})::BIGINT AS n_tokens
+          SELECT coalesce(source, '__null__') AS source,
+                 sum(n_tok)::BIGINT AS n_tokens
           FROM {table} GROUP BY 1
         ),
         t AS (SELECT sum(n_tokens)::DOUBLE AS n,
-                     sum(pow(n_tokens, {alpha})) AS z FROM per)
+                     sum(pow(n_tokens, {MIX_ALPHA})) AS z FROM per)
         SELECT source, n_tokens,
                round(n_tokens / t.n, 6) AS p_natural,
-               round(pow(n_tokens, {alpha}) / t.z, 6) AS q_temp,
-               round((pow(n_tokens, {alpha}) / t.z)
+               round(pow(n_tokens, {MIX_ALPHA}) / t.z, 6) AS q_temp,
+               round((pow(n_tokens, {MIX_ALPHA}) / t.z)
                      / (n_tokens / t.n), 6) AS up_weight{budget_col}
         FROM per CROSS JOIN t
     """
@@ -384,18 +392,17 @@ def source_temperature_weights_sql(
 # deterministic epoch shuffle (reproducible global training order)
 # --------------------------------------------------------------------------
 
-def epoch_shuffle_key(id_col: Column, epoch: int, seed: int = 0) -> Column:
-    """md5('{seed}:{epoch}:{doc_id}') — a keyed, reproducible permutation
-    of the corpus per (seed, epoch).  Changing the epoch re-permutes
+def epoch_shuffle_key(id_col: Column, epoch: int) -> Column:
+    """md5('{EPOCH_SEED}:{epoch}:{doc_id}') — a keyed, reproducible
+    permutation of the corpus per epoch.  Changing the epoch re-permutes
     everything; re-running the same epoch reproduces the exact order on
     any cluster size or partitioning."""
     return F.md5(F.concat_ws(
-        ":", F.lit(str(seed)), F.lit(str(epoch)), id_col.cast("string")))
+        ":", F.lit(str(EPOCH_SEED)), F.lit(str(epoch)),
+        id_col.cast("string")))
 
 
-def epoch_order(
-    df: DataFrame, id_col: str, epoch: int, seed: int = 0,
-) -> DataFrame:
+def epoch_order(df: DataFrame, id_col: str, epoch: int) -> DataFrame:
     """Global training order for one epoch: (id, shuffle_key, epoch_rank)
     with epoch_rank a gap-free 0-based global position in shuffle_key
     order — the deterministic dataloader-order contract (every worker can
@@ -416,7 +423,7 @@ def epoch_order(
 
     keyed = df.select(
         F.col(id_col),
-        epoch_shuffle_key(F.col(id_col), epoch, seed).alias("shuffle_key"),
+        epoch_shuffle_key(F.col(id_col), epoch).alias("shuffle_key"),
     ).withColumn("__one", F.lit(1))
     ranked = global_cumsum(keyed, "shuffle_key", "__one",
                            out_col="epoch_rank")
@@ -424,12 +431,13 @@ def epoch_order(
         id_col, "shuffle_key", F.col("epoch_rank").cast("bigint"))
 
 
-def epoch_order_sql(table: str, id_col: str, epoch: int, seed: int = 0) -> str:
+def epoch_order_sql(table: str, id_col: str, epoch: int) -> str:
+    key = f"md5(concat_ws(':', '{EPOCH_SEED}', '{epoch}', {id_col}))"
     return f"""
         SELECT {id_col},
-               md5(concat_ws(':', '{seed}', '{epoch}', {id_col})) AS shuffle_key,
+               {key} AS shuffle_key,
                (row_number() OVER (
-                  ORDER BY md5(concat_ws(':', '{seed}', '{epoch}', {id_col})))
+                  ORDER BY {key})
                 - 1)::BIGINT AS epoch_rank
         FROM {table}
     """
@@ -508,8 +516,7 @@ def balanced_writer_loads_sql(
 
 
 def source_mixing_plan(
-    df: DataFrame, n_tok_col: str = "n_tok", source_col: str = "source",
-    alpha: float = 0.5, budget: int = 1_000_000_000,
+    df: DataFrame, budget: int = 1_000_000_000,
 ) -> DataFrame:
     """Executable form of source_temperature_weights: per source, how
     many FULL passes over its data to take plus the fractional tail —
@@ -523,8 +530,7 @@ def source_mixing_plan(
     Same scale shape as source_temperature_weights (one aggregate to
     |sources| rows); the arithmetic is per-source scalar algebra.
     """
-    w = source_temperature_weights(
-        df, n_tok_col, source_col, alpha=alpha, budget=budget)
+    w = source_temperature_weights(df, budget=budget)
     bt = F.col("budget_tokens")
     nt = F.col("n_tokens")
     return w.select(
@@ -534,12 +540,8 @@ def source_mixing_plan(
     )
 
 
-def source_mixing_plan_sql(
-    table: str, n_tok_col: str = "n_tok", source_col: str = "source",
-    alpha: float = 0.5, budget: int = 1_000_000_000,
-) -> str:
-    inner = source_temperature_weights_sql(
-        table, n_tok_col, source_col, alpha=alpha, budget=budget)
+def source_mixing_plan_sql(table: str) -> str:
+    inner = source_temperature_weights_sql(table, budget=MIX_BUDGET)
     return f"""
         SELECT source, n_tokens, budget_tokens,
                (budget_tokens // n_tokens)::BIGINT AS n_epochs,
@@ -549,38 +551,28 @@ def source_mixing_plan_sql(
     """
 
 
-def chunk_sequences(
-    df: DataFrame, tokens_col: str, id_col: str,
-    capacity: int = 2048, stride: int | None = None,
-    min_tokens: int = 1,
-) -> DataFrame:
-    """Split each sequence into fixed-``capacity`` token windows — the
+def chunk_sequences(df: DataFrame, tokens_col: str, id_col: str) -> DataFrame:
+    """Split each sequence into ``CHUNK_LEN``-token windows — the
     long-document complement to packing.pack_bins (which NEVER splits):
-    chunk i covers tokens [i*step, i*step + capacity) with step =
-    ``stride`` or ``capacity``; ``stride < capacity`` yields overlapping
-    context windows (GPT-style sliding-window chunking, so no token loses
-    its left context at a hard boundary).  Returns (id, chunk_idx,
-    tokens, n_tok); trailing windows shorter than ``min_tokens`` are
-    dropped (set min_tokens=capacity to keep only full windows; empty
-    sequences produce no rows).
+    chunk i covers tokens [i*CHUNK_STRIDE, i*CHUNK_STRIDE + CHUNK_LEN);
+    the stride is shorter than the window, so windows overlap
+    (GPT-style sliding-window chunking, so no token loses its left
+    context at a hard boundary).  Returns (id, chunk_idx, tokens,
+    n_tok); trailing windows shorter than ``CHUNK_MIN_TOKENS`` are
+    dropped (empty sequences produce no rows).
 
     Scale shape: a narrow per-row explode — ``sequence`` of starts +
     ``slice`` per window, JVM higher-order functions end to end, no
     shuffle; output co-partitions with the input.  Row growth is
-    n/step chunks per sequence (bounded by design); the overlap factor
-    capacity/step multiplies bytes out, which is the documented cost of
-    sliding-window training data.
+    n/CHUNK_STRIDE chunks per sequence (bounded by design); the overlap
+    factor CHUNK_LEN/CHUNK_STRIDE multiplies bytes out, which is the
+    documented cost of sliding-window training data.
     """
-    if capacity < 1:
-        raise ValueError("capacity must be >= 1")
-    step = capacity if stride is None else stride
-    if step < 1 or step > capacity:
-        raise ValueError("stride must be in [1, capacity]")
     n = F.size(F.col(tokens_col))
-    starts = F.when(n > 0, F.sequence(F.lit(0), n - 1, F.lit(step))) \
+    starts = F.when(n > 0, F.sequence(F.lit(0), n - 1, F.lit(CHUNK_STRIDE))) \
         .otherwise(F.array().cast("array<int>"))
     chunk = F.slice(
-        F.col(tokens_col), F.col("__start") + 1, F.lit(capacity))
+        F.col(tokens_col), F.col("__start") + 1, F.lit(CHUNK_LEN))
     ex = df.select(
         F.col(id_col),
         F.col(tokens_col),
@@ -591,28 +583,23 @@ def chunk_sequences(
             id_col, "chunk_idx",
             chunk.alias(tokens_col),
             F.size(chunk).alias("n_tok"))
-        .filter(F.col("n_tok") >= min_tokens)
+        .filter(F.col("n_tok") >= CHUNK_MIN_TOKENS)
     )
 
 
-def chunk_sequences_sql(
-    table: str, tokens_col: str, id_col: str,
-    capacity: int = 2048, stride: int | None = None,
-    min_tokens: int = 1,
-) -> str:
-    step = capacity if stride is None else stride
+def chunk_sequences_sql(table: str, tokens_col: str, id_col: str) -> str:
     return f"""
         SELECT {id_col}, chunk_idx,
                tokens, len(tokens)::INT AS n_tok
         FROM (
           SELECT {id_col},
-                 CAST(s.i // {step} AS INT) AS chunk_idx,
-                 {tokens_col}[s.i + 1 : s.i + {capacity}] AS tokens
+                 CAST(s.i // {CHUNK_STRIDE} AS INT) AS chunk_idx,
+                 {tokens_col}[s.i + 1 : s.i + {CHUNK_LEN}] AS tokens
           FROM {table},
                LATERAL (SELECT unnest(range(0, greatest(len({tokens_col}), 0),
-                                            {step})) AS i) s
+                                            {CHUNK_STRIDE})) AS i) s
         )
-        WHERE len(tokens) >= {min_tokens}
+        WHERE len(tokens) >= {CHUNK_MIN_TOKENS}
     """
 
 
@@ -620,9 +607,7 @@ def chunk_sequences_sql(
 # Unigram LM scoring — the perplexity-filter analog on token ids
 # --------------------------------------------------------------------------
 
-def unigram_logprob_table(
-    df: DataFrame, tokens_col: str = "tokens",
-) -> DataFrame:
+def unigram_logprob_table(df: DataFrame) -> DataFrame:
     """Additively-smoothed corpus unigram log-probs: one row per observed
     token id — (t, n_t, logp_micro) with logp_micro = round(ln((n_t +
     alpha) / (N + alpha*V)) * 1e6) as BIGINT (alpha = ``LM_ALPHA``,
@@ -637,7 +622,7 @@ def unigram_logprob_table(
     scale, never a rescan).
     """
     cnt = (
-        df.select(F.explode(F.col(tokens_col)).alias("t"))
+        df.select(F.explode(F.col("tokens")).alias("t"))
         .groupBy("t").agg(F.count(F.lit(1)).alias("n_t"))
     )
     cnt = seam(cnt)  # feeds the total AND the logp projection
@@ -658,9 +643,7 @@ def unigram_logprob_table(
     )
 
 
-def sequence_unigram_scores(
-    df: DataFrame, tokens_col: str = "tokens", id_col: str = "doc_id",
-) -> DataFrame:
+def sequence_unigram_scores(df: DataFrame) -> DataFrame:
     """Per-sequence unigram cross-entropy — the CCNet-style perplexity
     quality signal expressed on token ids: (id, n_tok, logp_micro_sum,
     ce_nats) where ce_nats = -logp_micro_sum / (n_tok * 1e6).  Low ce =
@@ -677,15 +660,15 @@ def sequence_unigram_scores(
     only document-scale shuffle.  The bigint sum is the exact anchor;
     the one double division per row is IEEE-identical in any engine.
     """
-    p = unigram_logprob_table(df, tokens_col)
-    ex = df.select(F.col(id_col), F.explode(F.col(tokens_col)).alias("t"))
+    p = unigram_logprob_table(df)
+    ex = df.select(F.col("doc_id"), F.explode(F.col("tokens")).alias("t"))
     joined = ex.join(F.broadcast(p.select("t", "logp_micro")), "t", "left")
-    agg = joined.groupBy(id_col).agg(
+    agg = joined.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tok"),
         F.sum("logp_micro").cast("bigint").alias("logp_micro_sum"),
     )
     return agg.select(
-        id_col,
+        "doc_id",
         F.col("n_tok").cast("int").alias("n_tok"),
         "logp_micro_sum",
         F.round(-F.col("logp_micro_sum")
@@ -693,14 +676,12 @@ def sequence_unigram_scores(
     )
 
 
-def sequence_unigram_scores_sql(
-    table: str, tokens_col: str = "tokens", id_col: str = "doc_id",
-) -> str:
+def sequence_unigram_scores_sql(table: str) -> str:
     """DuckDB twin of the SELF-SCORING form (probs derived from the same
     table, same micro-nat quantization)."""
     return f"""
         WITH ex AS (
-          SELECT {id_col} AS id, unnest({tokens_col}) AS t FROM {table}
+          SELECT doc_id AS id, unnest(tokens) AS t FROM {table}
         ),
         cnt AS (SELECT t, count(*) AS n_t FROM ex GROUP BY t),
         tot AS (SELECT sum(n_t)::DOUBLE AS n FROM cnt),
@@ -710,7 +691,7 @@ def sequence_unigram_scores_sql(
                          AS BIGINT) AS logp_micro
           FROM cnt CROSS JOIN tot
         )
-        SELECT ex.id AS {id_col},
+        SELECT ex.id AS doc_id,
                count(*)::INT AS n_tok,
                sum(lp.logp_micro)::BIGINT AS logp_micro_sum,
                round(-sum(lp.logp_micro)
@@ -720,9 +701,7 @@ def sequence_unigram_scores_sql(
     """
 
 
-def repeated_suffix(
-    df: DataFrame, tokens_col: str = "tokens", id_col: str = "doc_id",
-) -> DataFrame:
+def repeated_suffix(df: DataFrame) -> DataFrame:
     """Trailing-repetition detector on token ids — the degenerate-loop
     signal (model-generated or scraper-mangled text that ends in
     `... A B A B A B`): for each period p <= MAX_PERIOD, measure the
@@ -738,11 +717,11 @@ def repeated_suffix(
     O(n)-scans inside one codegen stage,
     no shuffle, no UDF; output co-partitions with the input.
     """
-    toks = F.col(tokens_col)
+    toks = F.col("tokens")
     n = F.size(toks)
     best = _best_repeat(toks)
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n.cast("int").alias("n_tok"),
         best["period"].cast("int").alias("period"),
         best["n_copies"].alias("n_copies"),
@@ -810,30 +789,26 @@ def _best_repeat_sql(tokens_col: str) -> str:
     return f"list_max([{', '.join(cands)}])"
 
 
-def repeated_suffix_sql(
-    table: str, tokens_col: str = "tokens", id_col: str = "doc_id",
-) -> str:
+def repeated_suffix_sql(table: str) -> str:
     """DuckDB twin: same L(p) run-length via list_position of the first
     mismatch, same (trim desc, period asc) tie-break via a sorted struct
     list (struct comparison is field-order lexicographic in both
     engines)."""
-    best = _best_repeat_sql(tokens_col)
+    best = _best_repeat_sql("tokens")
     return f"""
-        SELECT {id_col},
-               CAST(len({tokens_col}) AS INT) AS n_tok,
+        SELECT doc_id,
+               CAST(len(tokens) AS INT) AS n_tok,
                CAST(CASE WHEN b.trim_tokens > 0 THEN b.period
                          ELSE 0 END AS INT) AS period,
                CAST(CASE WHEN b.trim_tokens > 0 THEN b.n_copies
                          ELSE 1 END AS INT) AS n_copies,
                CAST(CASE WHEN b.trim_tokens > 0 THEN b.trim_tokens
                          ELSE 0 END AS INT) AS trim_tokens
-        FROM (SELECT {id_col}, {tokens_col}, {best} AS b FROM {table})
+        FROM (SELECT doc_id, tokens, {best} AS b FROM {table})
     """
 
 
-def bigram_logprob_table(
-    df: DataFrame, tokens_col: str = "tokens",
-) -> DataFrame:
+def bigram_logprob_table(df: DataFrame) -> DataFrame:
     """Smoothed conditional bigram log-probs: (t_prev, t, n_2, logp_micro)
     with logp_micro = round(ln((n_2 + alpha) / (n_1 + alpha*V)) * 1e6)
     (alpha = ``LM_ALPHA``, V = ``VOCAB_SIZE``) —
@@ -847,7 +822,7 @@ def bigram_logprob_table(
     corpus-bounded (distinct bigrams), not vocab-bounded — the honest
     KenLM-shaped cost a conditional LM carries.
     """
-    toks = F.col(tokens_col)
+    toks = F.col("tokens")
     n = F.size(toks)
     pairs = df.select(F.explode(F.when(
         n >= 2,
@@ -870,9 +845,7 @@ def bigram_logprob_table(
     )
 
 
-def sequence_bigram_scores(
-    df: DataFrame, tokens_col: str = "tokens", id_col: str = "doc_id",
-) -> DataFrame:
+def sequence_bigram_scores(df: DataFrame) -> DataFrame:
     """Per-sequence CONDITIONAL cross-entropy under the corpus's own
     smoothed bigram LM — the next step up from sequence_unigram_scores
     (a unigram LM cannot see token ORDER; this one scores transitions,
@@ -887,11 +860,11 @@ def sequence_bigram_scores(
     aggregates map-side.  Self-scoring means every probe bigram exists
     in the dim; the inner join is therefore lossless by construction.
     """
-    probs = bigram_logprob_table(df, tokens_col)
-    toks = F.col(tokens_col)
+    probs = bigram_logprob_table(df)
+    toks = F.col("tokens")
     n = F.size(toks)
     ex = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(F.when(
             n >= 2,
             F.transform(F.sequence(F.lit(2), n),
@@ -899,30 +872,28 @@ def sequence_bigram_scores(
                             F.element_at(toks, i - 1).alias("t_prev"),
                             F.element_at(toks, i).alias("t"))))
             .otherwise(F.array().cast("array<struct<t_prev:int,t:int>>")))
-        .alias("bg")).select(id_col, "bg.t_prev", "bg.t")
+        .alias("bg")).select("doc_id", "bg.t_prev", "bg.t")
     return (
         ex.join(probs.select("t_prev", "t", "logp_micro"), ["t_prev", "t"])
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("int").alias("n_bigrams"),
              F.sum("logp_micro").alias("logp_micro_sum"))
         .select(
-            id_col, "n_bigrams", "logp_micro_sum",
+            "doc_id", "n_bigrams", "logp_micro_sum",
             F.round(-F.col("logp_micro_sum")
                     / (F.col("n_bigrams") * F.lit(1e6)), 6).alias("ce_nats"))
     )
 
 
-def sequence_bigram_scores_sql(
-    table: str, tokens_col: str = "tokens", id_col: str = "doc_id",
-) -> str:
+def sequence_bigram_scores_sql(table: str) -> str:
     """DuckDB twin of the self-scoring form (same micro-nat quantization,
     same n>=2 omission rule)."""
     return f"""
         WITH ex AS (
-          SELECT {id_col} AS id,
-                 {tokens_col}[i - 1] AS t_prev, {tokens_col}[i] AS t
+          SELECT doc_id AS id,
+                 tokens[i - 1] AS t_prev, tokens[i] AS t
           FROM {table},
-               LATERAL (SELECT unnest(range(2, len({tokens_col}) + 1)) AS i)
+               LATERAL (SELECT unnest(range(2, len(tokens) + 1)) AS i)
         ),
         cnt2 AS (SELECT t_prev, t, count(*) AS n_2 FROM ex GROUP BY 1, 2),
         cnt1 AS (SELECT t_prev, sum(n_2) AS n_1 FROM cnt2 GROUP BY t_prev),
@@ -933,7 +904,7 @@ def sequence_bigram_scores_sql(
                       AS BIGINT) AS logp_micro
           FROM cnt2 JOIN cnt1 USING (t_prev)
         )
-        SELECT ex.id AS {id_col},
+        SELECT ex.id AS doc_id,
                count(*)::INT AS n_bigrams,
                sum(lp.logp_micro)::BIGINT AS logp_micro_sum,
                round(-sum(lp.logp_micro) / (count(*) * 1e6), 6) AS ce_nats
@@ -1063,9 +1034,7 @@ def remove_duplicate_spans_sql(
     """
 
 
-def trim_repeated_suffix(
-    df: DataFrame, tokens_col: str = "tokens", id_col: str = "doc_id",
-) -> DataFrame:
+def trim_repeated_suffix(df: DataFrame) -> DataFrame:
     """The REWRITE behind the ``repeated_suffix`` detector: drop the
     redundant trailing copies of the best repeating block (keeping
     exactly one copy — ``... A B A B A B`` becomes ``... A B``) and
@@ -1081,12 +1050,12 @@ def trim_repeated_suffix(
     work in one codegen stage, no shuffle, no UDF; output co-partitions
     with the input.
     """
-    toks = F.col(tokens_col)
+    toks = F.col("tokens")
     n = F.size(toks)
     best = _best_repeat(toks)
     keep = n - best["trim_tokens"]
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.slice(toks, 1, keep).alias("tokens_clean"),
         keep.cast("int").alias("n_tok_clean"),
         best["trim_tokens"].alias("trim_tokens"),
@@ -1094,24 +1063,22 @@ def trim_repeated_suffix(
     )
 
 
-def trim_repeated_suffix_sql(
-    table: str, tokens_col: str = "tokens", id_col: str = "doc_id",
-) -> str:
+def trim_repeated_suffix_sql(table: str) -> str:
     """DuckDB twin: same best-repeat struct, slice keeps n - trim."""
-    best = _best_repeat_sql(tokens_col)
+    best = _best_repeat_sql("tokens")
     return f"""
-        SELECT {id_col},
-               {tokens_col}[1 : len({tokens_col}) -
+        SELECT doc_id,
+               tokens[1 : len(tokens) -
                  (CASE WHEN b.trim_tokens > 0 THEN b.trim_tokens
                        ELSE 0 END)] AS tokens_clean,
-               CAST(len({tokens_col}) -
+               CAST(len(tokens) -
                  (CASE WHEN b.trim_tokens > 0 THEN b.trim_tokens
                        ELSE 0 END) AS INT) AS n_tok_clean,
                CAST(CASE WHEN b.trim_tokens > 0 THEN b.trim_tokens
                          ELSE 0 END AS INT) AS trim_tokens,
                CAST(CASE WHEN b.trim_tokens > 0 THEN b.period
                          ELSE 0 END AS INT) AS period
-        FROM (SELECT {id_col}, {tokens_col}, {best} AS b FROM {table})
+        FROM (SELECT doc_id, tokens, {best} AS b FROM {table})
     """
 
 
@@ -1123,9 +1090,7 @@ def trim_repeated_suffix_sql(
 E5 = 100_000  # ln-value quantization (0.00001 nat) for exact-integer sums
 
 
-def sequence_token_entropy(
-    df: DataFrame, tokens_col: str = "tokens", id_col: str = "doc_id",
-) -> DataFrame:
+def sequence_token_entropy(df: DataFrame) -> DataFrame:
     """Per-sequence Shannon entropy (nats) of the within-sequence token
     distribution — the order-blind degenerate-content signal (near-0 =
     one token repeated; ln(n_tok) = all tokens distinct).  Quality
@@ -1141,31 +1106,29 @@ def sequence_token_entropy(
     more map-side-combined groupBy(id); both shuffles carry counts only,
     never token payloads.  No vocab table, no join, no window.
     """
-    ex = df.select(F.col(id_col), F.explode(F.col(tokens_col)).alias("t"))
-    cnt = ex.groupBy(id_col, "t").agg(F.count(F.lit(1)).alias("c"))
-    per = cnt.groupBy(id_col).agg(
+    ex = df.select(F.col("doc_id"), F.explode(F.col("tokens")).alias("t"))
+    cnt = ex.groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("c"))
+    per = cnt.groupBy("doc_id").agg(
         F.sum("c").cast("int").alias("n_tok"),
         F.count(F.lit(1)).cast("int").alias("n_types"),
         F.sum(F.col("c") * F.round(F.log(F.col("c")) * 1e6).cast("bigint"))
         .cast("bigint").alias("__clogc_micro"),
     )
     return per.select(
-        id_col, "n_tok", "n_types",
+        "doc_id", "n_tok", "n_types",
         F.round(F.log(F.col("n_tok").cast("double"))
                 - F.col("__clogc_micro") / (F.col("n_tok") * F.lit(1e6)),
                 6).alias("entropy_nats"),
     )
 
 
-def sequence_token_entropy_sql(
-    table: str, tokens_col: str = "tokens", id_col: str = "doc_id",
-) -> str:
+def sequence_token_entropy_sql(table: str) -> str:
     return f"""
         WITH ex AS (
-          SELECT {id_col} AS id, unnest({tokens_col}) AS t FROM {table}
+          SELECT doc_id AS id, unnest(tokens) AS t FROM {table}
         ),
         cnt AS (SELECT id, t, count(*) AS c FROM ex GROUP BY id, t)
-        SELECT id AS {id_col},
+        SELECT id AS doc_id,
                sum(c)::INT AS n_tok,
                count(*)::INT AS n_types,
                round(ln(sum(c)::DOUBLE)
@@ -1175,7 +1138,7 @@ def sequence_token_entropy_sql(
     """
 
 
-def zipf_fit(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
+def zipf_fit(df: DataFrame) -> DataFrame:
     """Zipf's-law fit over the corpus token-frequency distribution: OLS
     of ln(count) on ln(rank) -> (n_types, slope, intercept_nats, r2).
     A healthy natural corpus sits near slope -1; a slope collapsing
@@ -1201,7 +1164,7 @@ def zipf_fit(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
     from pyspark.sql import Window
 
     cnt = (
-        df.select(F.explode(F.col(tokens_col)).alias("t"))
+        df.select(F.explode(F.col("tokens")).alias("t"))
         .groupBy("t").agg(F.count(F.lit(1)).alias("n_t"))
     )
     ranked = cnt.select(
@@ -1249,9 +1212,9 @@ def zipf_fit(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
     )
 
 
-def zipf_fit_sql(table: str, tokens_col: str = "tokens") -> str:
+def zipf_fit_sql(table: str) -> str:
     return f"""
-        WITH ex AS (SELECT unnest({tokens_col}) AS t FROM {table}),
+        WITH ex AS (SELECT unnest(tokens) AS t FROM {table}),
         cnt AS (SELECT t, count(*) AS n_t FROM ex GROUP BY t),
         ranked AS (
           SELECT CAST(round(ln(row_number() OVER
@@ -1291,9 +1254,7 @@ def zipf_fit_sql(table: str, tokens_col: str = "tokens") -> str:
     """
 
 
-def cross_source_dup_matrix(
-    df: DataFrame, tokens_col: str = "tokens", source_col: str = "source",
-) -> DataFrame:
+def cross_source_dup_matrix(df: DataFrame) -> DataFrame:
     """Which sources duplicate which: per unordered source pair, how many
     DISTINCT token-array fingerprints occur in both.  The crawl-overlap
     report a multi-source ingest runs before choosing dedup priority
@@ -1309,9 +1270,9 @@ def cross_source_dup_matrix(
     projection).
     """
     fs = (
-        df.filter(F.col(source_col).isNotNull())
-        .select(token_fingerprint(F.col(tokens_col)).alias("fp"),
-                F.col(source_col).alias("s"))
+        df.filter(F.col("source").isNotNull())
+        .select(token_fingerprint(F.col("tokens")).alias("fp"),
+                F.col("source").alias("s"))
         .distinct()
     )
     fs = seam(fs)  # both join sides read the one distinct pass
@@ -1325,14 +1286,12 @@ def cross_source_dup_matrix(
     )
 
 
-def cross_source_dup_matrix_sql(
-    table: str, tokens_col: str = "tokens", source_col: str = "source",
-) -> str:
+def cross_source_dup_matrix_sql(table: str) -> str:
     return f"""
         WITH fs AS (
-          SELECT DISTINCT {token_fingerprint_sql(tokens_col)} AS fp,
-                 {source_col} AS s
-          FROM {table} WHERE {source_col} IS NOT NULL
+          SELECT DISTINCT {token_fingerprint_sql("tokens")} AS fp,
+                 source AS s
+          FROM {table} WHERE source IS NOT NULL
         )
         SELECT a.s AS source_a, b.s AS source_b,
                count(*) AS n_shared_fps
@@ -1417,15 +1376,12 @@ def contamination_coverage_sql(
     """
 
 
-def vocab_growth(
-    df: DataFrame, tokens_col: str = "tokens", id_col: str = "doc_id",
-    checkpoints: list[int] | None = None,
-) -> DataFrame:
+def vocab_growth(df: DataFrame) -> DataFrame:
     """Heaps'-law vocabulary-growth curve: distinct token types seen
-    within the first ``c`` tokens of the corpus (in ``id_col`` order),
-    for each checkpoint ``c`` — the tokenizer-sizing / corpus-diversity
-    report (a curve that flattens early means the tail of the corpus
-    adds no new vocabulary).
+    within the first ``c`` tokens of the corpus (in doc_id order), for
+    each checkpoint ``c`` of ``GROWTH_CHECKPOINTS`` — the
+    tokenizer-sizing / corpus-diversity report (a curve that flattens
+    early means the tail of the corpus adds no new vocabulary).
 
     Scale shape: global token positions come from packing.global_cumsum
     (ONE full-data exchange, no SinglePartition stage); the posexplode
@@ -1440,21 +1396,17 @@ def vocab_growth(
     """
     from ulp_spark.operators.packing import global_cumsum
 
-    if not checkpoints:
-        raise ValueError("checkpoints must be a non-empty list of ints")
-    if sorted(set(checkpoints)) != sorted(checkpoints):
-        raise ValueError("checkpoints must be distinct")
-    toks = F.col(tokens_col)
+    toks = F.col("tokens")
     off = global_cumsum(
-        df.select(F.col(id_col), toks.alias("__toks"))
+        df.select(F.col("doc_id"), toks.alias("__toks"))
         .withColumn("__n", F.size("__toks")),
-        id_col, "__n")
+        "doc_id", "__n")
     ex = off.select(
         F.col("tok_offset"),
         F.posexplode(F.col("__toks")).alias("pos", "t"),
     ).select("t", (F.col("tok_offset") + F.col("pos")).alias("p"))
     first = ex.groupBy("t").agg(F.min("p").alias("fp"))
-    cp = local_frame(df.sparkSession, [(int(c),) for c in checkpoints],
+    cp = local_frame(df.sparkSession, [(c,) for c in GROWTH_CHECKPOINTS],
                      "checkpoint bigint")
     return (
         first.crossJoin(F.broadcast(cp))
@@ -1464,16 +1416,13 @@ def vocab_growth(
     )
 
 
-def vocab_growth_sql(
-    table: str, tokens_col: str = "tokens", id_col: str = "doc_id",
-    checkpoints: list[int] | None = None,
-) -> str:
-    cps = ", ".join(str(int(c)) for c in (checkpoints or []))
+def vocab_growth_sql(table: str) -> str:
+    cps = ", ".join(str(c) for c in GROWTH_CHECKPOINTS)
     return f"""
         WITH off AS (
-          SELECT {tokens_col} AS toks,
-                 sum(len({tokens_col})) OVER (ORDER BY {id_col}
-                   ROWS UNBOUNDED PRECEDING) - len({tokens_col})
+          SELECT tokens AS toks,
+                 sum(len(tokens)) OVER (ORDER BY doc_id
+                   ROWS UNBOUNDED PRECEDING) - len(tokens)
                  AS tok_offset
           FROM {table}
         ),
@@ -1553,15 +1502,13 @@ def sequence_minhash_candidates(
         eligible, token_shingle_hashes(toks), id_col)
 
 
-def sequence_minhash_candidates_sql(
-    table: str, tokens_col: str = "tokens", id_col: str = "doc_id",
-) -> str:
+def sequence_minhash_candidates_sql(table: str) -> str:
     from ulp_spark.operators.dedup import minhash_candidates_from_hashes_sql
 
     eligible = (f"(SELECT * FROM {table} "
-                f"WHERE len({tokens_col}) >= {GRAM})")
+                f"WHERE len(tokens) >= {GRAM})")
     return minhash_candidates_from_hashes_sql(
-        eligible, token_shingle_hashes_sql(tokens_col), id_col)
+        eligible, token_shingle_hashes_sql("tokens"), "doc_id")
 
 
 _CURR_OFFSET = 10 ** 18  # shifts any plausible integer score non-negative
@@ -1635,15 +1582,12 @@ def curriculum_stages_sql(
     """
 
 
-def apply_mixing_plan(
-    df: DataFrame, n_tok_col: str = "n_tok", source_col: str = "source",
-    id_col: str = "doc_id", alpha: float = 0.5,
-    budget: int = 1_000_000_000,
-) -> DataFrame:
-    """EXECUTE source_mixing_plan (the learn->apply move, same as
-    BPE train->tokenize): materialize the mixed-epoch membership —
-    (id, source, epoch_copy, is_tail), one row per pass each sequence
-    takes in the temperature-mixed training epoch.  Copies 0..n_epochs-1
+def apply_mixing_plan(df: DataFrame) -> DataFrame:
+    """EXECUTE source_mixing_plan for a ``MIX_BUDGET``-token epoch (the
+    learn->apply move, same as BPE train->tokenize): materialize the
+    mixed-epoch membership — (id, source, epoch_copy, is_tail), one row
+    per pass each sequence takes in the temperature-mixed training
+    epoch.  Copies 0..n_epochs-1
     are unconditional; the fractional tail admits copy n_epochs iff a
     deterministic md5 uniform (sampling._uniform01 seeded with
     ``MIX_SEED`` — 52-bit, exactly
@@ -1662,17 +1606,15 @@ def apply_mixing_plan(
     """
     from ulp_spark.operators.sampling import _uniform01
 
-    plan = source_mixing_plan(df, n_tok_col, source_col,
-                              alpha=alpha, budget=budget)
+    plan = source_mixing_plan(df, budget=MIX_BUDGET)
     bucketed = df.select(
-        F.col(id_col),
-        F.coalesce(F.col(source_col), F.lit("__null__")).alias(source_col))
+        F.col("doc_id"),
+        F.coalesce(F.col("source"), F.lit("__null__")).alias("source"))
     j = bucketed.join(
-        F.broadcast(plan.select(
-            F.col("source").alias(source_col), "n_epochs", "tail_frac")),
-        source_col)
+        F.broadcast(plan.select("source", "n_epochs", "tail_frac")),
+        "source")
     n_copies = (F.col("n_epochs")
-                + F.when(_uniform01(F.col(id_col), MIX_SEED)
+                + F.when(_uniform01(F.col("doc_id"), MIX_SEED)
                          < F.col("tail_frac"), 1).otherwise(0))
     copies = F.when(
         n_copies >= 1, F.sequence(F.lit(0).cast("bigint"), n_copies - 1)
@@ -1680,39 +1622,34 @@ def apply_mixing_plan(
     return (
         j.withColumn("__copies", copies)
         .select(
-            id_col, source_col, F.col("n_epochs"),
+            "doc_id", "source", F.col("n_epochs"),
             F.explode(F.col("__copies")).alias("epoch_copy"),
         )
         .select(
-            id_col, source_col,
+            "doc_id", "source",
             F.col("epoch_copy").cast("int").alias("epoch_copy"),
             (F.col("epoch_copy") == F.col("n_epochs")).alias("is_tail"),
         )
     )
 
 
-def apply_mixing_plan_sql(
-    table: str, n_tok_col: str = "n_tok", source_col: str = "source",
-    id_col: str = "doc_id", alpha: float = 0.5,
-    budget: int = 1_000_000_000,
-) -> str:
+def apply_mixing_plan_sql(table: str) -> str:
     from ulp_spark.operators.sampling import _uniform01_sql
 
-    plan = source_mixing_plan_sql(table, n_tok_col, source_col,
-                                  alpha=alpha, budget=budget)
-    u = _uniform01_sql(f"t.{id_col}", MIX_SEED)
+    plan = source_mixing_plan_sql(table)
+    u = _uniform01_sql("t.doc_id", MIX_SEED)
     return f"""
         WITH plan AS ({plan}),
         j AS (
-          SELECT t.{id_col},
-                 coalesce(t.{source_col}, '__null__') AS {source_col},
+          SELECT t.doc_id,
+                 coalesce(t.source, '__null__') AS source,
                  p.n_epochs,
                  p.n_epochs + CASE WHEN {u} < p.tail_frac
                                    THEN 1 ELSE 0 END AS n_copies
           FROM {table} t
-          JOIN plan p ON coalesce(t.{source_col}, '__null__') = p.source
+          JOIN plan p ON coalesce(t.source, '__null__') = p.source
         )
-        SELECT {id_col}, {source_col},
+        SELECT doc_id, source,
                CAST(unnest(range(n_copies)) AS INT) AS epoch_copy,
                unnest(range(n_copies)) = n_epochs AS is_tail
         FROM j
@@ -1758,16 +1695,14 @@ def sequence_dedup_groups(
     return cc.select(F.col("id").alias(id_col), "comp_id")
 
 
-def sequence_dedup_groups_sql(
-    table: str, tokens_col: str = "tokens", id_col: str = "doc_id",
-) -> str:
+def sequence_dedup_groups_sql(table: str) -> str:
     from ulp_spark.operators.dedup import (
         JACCARD_MIN, connected_components_sql)
 
-    cand = sequence_minhash_candidates_sql(table, tokens_col, id_col)
-    sh = (f"SELECT {id_col} AS vid, "
-          f"{token_shingle_hashes_sql(tokens_col)} AS sh "
-          f"FROM {table} WHERE len({tokens_col}) >= {GRAM}")
+    cand = sequence_minhash_candidates_sql(table)
+    sh = ("SELECT doc_id AS vid, "
+          f"{token_shingle_hashes_sql('tokens')} AS sh "
+          f"FROM {table} WHERE len(tokens) >= {GRAM}")
     verified = f"""
         SELECT p.id_a, p.id_b FROM ({cand}) p
         JOIN ({sh}) a ON p.id_a = a.vid
@@ -1777,20 +1712,17 @@ def sequence_dedup_groups_sql(
                          / len(list_distinct(a.sh || b.sh))
                     ELSE 0.0 END) >= {JACCARD_MIN}
     """
-    return connected_components_sql(verified, id_alias=id_col)
+    return connected_components_sql(verified, id_alias="doc_id")
 
 
-def fim_transform(
-    df: DataFrame, tokens_col: str = "tokens", id_col: str = "doc_id",
-    rate: float = 0.5, pre_id: int = 50281, mid_id: int = 50282,
-    suf_id: int = 50283,
-) -> DataFrame:
+def fim_transform(df: DataFrame) -> DataFrame:
     """Fill-in-the-middle rewrite (Bavarian et al. 2022, the
     StarCoder/code-Llama data transform), PSM layout: with probability
-    ``rate`` per sequence, split at two deterministic points i <= j and
-    emit [PRE] prefix [SUF] suffix [MID] middle; otherwise pass through.
-    The sentinel ids must live OUTSIDE the corpus vocabulary (caller's
-    contract, as in the paper).
+    ``FIM_RATE`` per sequence, split at two deterministic points i <= j
+    and emit [PRE] prefix [SUF] suffix [MID] middle; otherwise pass
+    through.
+    The sentinel ids ``FIM_PRE_ID``/``FIM_SUF_ID``/``FIM_MID_ID`` live
+    OUTSIDE the corpus vocabulary (as in the paper).
 
     Determinism: the apply coin and both split points come from
     sampling._uniform01's 52-bit md5 uniforms keyed on ("fim0", id) —
@@ -1807,10 +1739,8 @@ def fim_transform(
     """
     from ulp_spark.operators.sampling import _uniform01
 
-    if not (0.0 <= rate <= 1.0):
-        raise ValueError("rate must be in [0, 1]")
-    toks = F.col(tokens_col)
-    idc = F.col(id_col)
+    toks = F.col("tokens")
+    idc = F.col("doc_id")
     n = F.size(toks)
     u_apply = _uniform01(idc, "fim0:apply")
     ua = _uniform01(idc, "fim0:a")
@@ -1822,11 +1752,11 @@ def fim_transform(
     suffix = F.when(n - j > 0, F.slice(toks, j + 1, n - j)) \
         .otherwise(F.array().cast("array<int>"))
     fim = F.concat(
-        F.array(F.lit(pre_id).cast("int")), prefix,
-        F.array(F.lit(suf_id).cast("int")), suffix,
-        F.array(F.lit(mid_id).cast("int")), middle,
+        F.array(F.lit(FIM_PRE_ID).cast("int")), prefix,
+        F.array(F.lit(FIM_SUF_ID).cast("int")), suffix,
+        F.array(F.lit(FIM_MID_ID).cast("int")), middle,
     )
-    apply = u_apply < F.lit(rate)
+    apply = u_apply < F.lit(FIM_RATE)
     out_toks = F.when(apply, fim).otherwise(toks)
     return df.select(
         idc,
@@ -1836,38 +1766,34 @@ def fim_transform(
     )
 
 
-def fim_transform_sql(
-    table: str, tokens_col: str = "tokens", id_col: str = "doc_id",
-    rate: float = 0.5, pre_id: int = 50281, mid_id: int = 50282,
-    suf_id: int = 50283,
-) -> str:
+def fim_transform_sql(table: str) -> str:
     from ulp_spark.operators.sampling import _uniform01_sql
 
-    ua = _uniform01_sql(id_col, "fim0:a")
-    ub = _uniform01_sql(id_col, "fim0:b")
-    u_apply = _uniform01_sql(id_col, "fim0:apply")
+    ua = _uniform01_sql("doc_id", "fim0:a")
+    ub = _uniform01_sql("doc_id", "fim0:b")
+    u_apply = _uniform01_sql("doc_id", "fim0:apply")
     return f"""
         WITH s AS (
-          SELECT {id_col}, {tokens_col} AS t, len({tokens_col}) AS n,
-                 CAST(floor(least({ua}, {ub}) * (len({tokens_col}) + 1))
+          SELECT doc_id, tokens AS t, len(tokens) AS n,
+                 CAST(floor(least({ua}, {ub}) * (len(tokens) + 1))
                       AS INT) AS i,
-                 CAST(floor(greatest({ua}, {ub}) * (len({tokens_col}) + 1))
+                 CAST(floor(greatest({ua}, {ub}) * (len(tokens) + 1))
                       AS INT) AS j,
-                 ({u_apply}) < {rate} AS apply
+                 ({u_apply}) < {FIM_RATE} AS apply
           FROM {table}
         ),
         r AS (
-          SELECT {id_col}, apply,
+          SELECT doc_id, apply,
                  CASE WHEN apply THEN
-                   [CAST({pre_id} AS INTEGER)] || t[1:i]
-                   || [CAST({suf_id} AS INTEGER)]
+                   [CAST({FIM_PRE_ID} AS INTEGER)] || t[1:i]
+                   || [CAST({FIM_SUF_ID} AS INTEGER)]
                    || (CASE WHEN n - j > 0 THEN t[j+1:n]
                        ELSE CAST([] AS INTEGER[]) END)
-                   || [CAST({mid_id} AS INTEGER)] || t[i+1:j]
+                   || [CAST({FIM_MID_ID} AS INTEGER)] || t[i+1:j]
                  ELSE t END AS tokens_fim
           FROM s
         )
-        SELECT {id_col}, tokens_fim,
+        SELECT doc_id, tokens_fim,
                len(tokens_fim)::INT AS n_tok_fim,
                apply AS is_fim
         FROM r
@@ -1876,18 +1802,17 @@ def fim_transform_sql(
 
 def span_corruption(
     df: DataFrame, tokens_col: str = "tokens", id_col: str = "doc_id",
-    rate: float = 0.15, span_len: int = 3, sentinel_base: int = 51000,
-    seed: str = "sc0",
+    rate: float = 0.15, span_len: int = 3, seed: str = "sc0",
 ) -> DataFrame:
     """T5-style span-corruption rewrite (Raffel et al. 2020 S3.1.4, the
     denoising pretraining objective): the sequence is cut into
     consecutive ``span_len``-token blocks and each block is corrupted
     with probability ``rate``; corrupted block i is replaced by sentinel
-    ``sentinel_base + i`` in the INPUTS stream and emitted as
+    ``UL2_SENTINEL + i`` in the INPUTS stream and emitted as
     ``[sentinel_i, tokens...]`` in the TARGETS stream, which closes with
-    a final sentinel ``sentinel_base + n_spans`` (the paper's layout).
-    Sentinel ids must live outside the corpus vocabulary (caller's
-    contract, as for fim_transform).
+    a final sentinel ``UL2_SENTINEL + n_spans`` (the paper's layout).
+    The sentinel ids live outside the corpus vocabulary, as
+    fim_transform's do.
 
     Deviation from the paper, documented: T5 draws span lengths from a
     randomized segment partition and merges adjacent noise spans; this
@@ -1940,7 +1865,7 @@ def span_corruption(
     toks2 = F.col("__t")
     corrupted = F.col("__corr")
     n2 = F.size(toks2)
-    base = F.lit(sentinel_base)
+    base = F.lit(UL2_SENTINEL)
 
     def block_slice(b):
         return F.slice(toks2, b * span_len + 1, span_len)
@@ -1975,41 +1900,38 @@ def span_corruption(
 
 
 def span_corruption_sql(
-    table: str, tokens_col: str = "tokens", id_col: str = "doc_id",
-    rate: float = 0.15, span_len: int = 3, sentinel_base: int = 51000,
-    seed: str = "sc0",
+    table: str, rate: float = 0.15, span_len: int = 3, seed: str = "sc0",
 ) -> str:
     from ulp_spark.operators.sampling import _uniform01_sql
 
-    u = _uniform01_sql(
-        f"({id_col} || '#' || CAST(b AS VARCHAR))", seed)
+    u = _uniform01_sql("(doc_id || '#' || CAST(b AS VARCHAR))", seed)
     L = span_len
     return f"""
         WITH s AS (
-          SELECT {id_col}, {tokens_col} AS t, len({tokens_col}) AS n,
-                 CAST(ceil(len({tokens_col}) / {float(L)!r}) AS INT) AS nb
+          SELECT doc_id, tokens AS t, len(tokens) AS n,
+                 CAST(ceil(len(tokens) / {float(L)!r}) AS INT) AS nb
           FROM {table}
         ),
         c AS (
-          SELECT {id_col}, t, n, nb,
+          SELECT doc_id, t, n, nb,
                  (CASE WHEN n > 0 THEN
                     list_filter(range(0, nb), b -> {u} < {rate})
                   ELSE [] END) AS corrupted
           FROM s
         )
-        SELECT {id_col},
+        SELECT doc_id,
           CASE WHEN n > 0 THEN
             flatten(list_transform(range(0, nb), b ->
               CASE WHEN list_contains(corrupted, b)
-                   THEN [CAST({sentinel_base} + list_position(corrupted, b)
+                   THEN [CAST({UL2_SENTINEL} + list_position(corrupted, b)
                               - 1 AS INTEGER)]
                    ELSE t[(b*{L}+1):((b+1)*{L})] END))
           ELSE CAST([] AS INTEGER[]) END AS inputs,
           CASE WHEN n > 0 THEN
             flatten(list_transform(corrupted, (b, i) ->
-              [CAST({sentinel_base} + i - 1 AS INTEGER)]
+              [CAST({UL2_SENTINEL} + i - 1 AS INTEGER)]
               || t[(b*{L}+1):((b+1)*{L})]))
-            || [CAST({sentinel_base} + len(corrupted) AS INTEGER)]
+            || [CAST({UL2_SENTINEL} + len(corrupted) AS INTEGER)]
           ELSE CAST([] AS INTEGER[]) END AS targets,
           CAST(len(corrupted) AS INT) AS n_spans
         FROM c
@@ -2173,9 +2095,7 @@ def source_js_divergence_sql(table: str) -> str:
     """
 
 
-def denoiser_mix(
-    df: DataFrame, tokens_col: str = "tokens", id_col: str = "doc_id",
-) -> DataFrame:
+def denoiser_mix(df: DataFrame) -> DataFrame:
     """UL2 mixture-of-denoisers rewrite (Tay et al. 2022): each sequence
     is deterministically routed to ONE of three denoising objectives and
     rewritten accordingly, with the paper's mode token prepended to the
@@ -2205,13 +2125,13 @@ def denoiser_mix(
     """
     from ulp_spark.operators.sampling import _uniform01
 
-    idc = F.col(id_col)
+    idc = F.col("doc_id")
     u_mode = _uniform01(idc, "ul2:mode")
     third = F.lit(1.0) / F.lit(3.0)
 
     def with_mode(frame: DataFrame, mode: str, mode_id: int) -> DataFrame:
         return frame.select(
-            F.col(id_col), F.lit(mode).alias("mode"),
+            F.col("doc_id"), F.lit(mode).alias("mode"),
             F.concat(F.array(F.lit(mode_id).cast("int")),
                      F.col("inputs")).alias("inputs"),
             F.col("targets"), F.col("n_spans"))
@@ -2221,15 +2141,15 @@ def denoiser_mix(
     s_in = df.filter(u_mode >= third * 2)
 
     r_out = with_mode(
-        span_corruption(r_in, tokens_col, id_col, rate=0.15, span_len=3,
-                        sentinel_base=UL2_SENTINEL, seed="ul2:R"),
+        span_corruption(r_in, "tokens", "doc_id", rate=0.15, span_len=3,
+                        seed="ul2:R"),
         "R", UL2_R_ID)
     x_out = with_mode(
-        span_corruption(x_in, tokens_col, id_col, rate=0.5, span_len=12,
-                        sentinel_base=UL2_SENTINEL, seed="ul2:X"),
+        span_corruption(x_in, "tokens", "doc_id", rate=0.5, span_len=12,
+                        seed="ul2:X"),
         "X", UL2_X_ID)
 
-    toks = F.col(tokens_col)
+    toks = F.col("tokens")
     n = F.size(toks)
     j = F.floor(_uniform01(idc, "ul2:split") * (n + 1)).cast("int")
     sent = F.lit(UL2_SENTINEL).cast("int")
@@ -2245,34 +2165,30 @@ def denoiser_mix(
     return r_out.unionByName(x_out).unionByName(s_out)
 
 
-def denoiser_mix_sql(
-    table: str, tokens_col: str = "tokens", id_col: str = "doc_id",
-) -> str:
+def denoiser_mix_sql(table: str) -> str:
     from ulp_spark.operators.sampling import _uniform01_sql
 
-    u_mode = _uniform01_sql(id_col, "ul2:mode")
-    u_split = _uniform01_sql(id_col, "ul2:split")
+    u_mode = _uniform01_sql("doc_id", "ul2:mode")
+    u_split = _uniform01_sql("doc_id", "ul2:split")
     r_sql = span_corruption_sql(
         f"(SELECT * FROM {table} WHERE ({u_mode}) < 1.0/3.0)",
-        tokens_col, id_col, rate=0.15, span_len=3,
-        sentinel_base=UL2_SENTINEL, seed="ul2:R")
+        rate=0.15, span_len=3, seed="ul2:R")
     x_sql = span_corruption_sql(
         f"(SELECT * FROM {table} WHERE ({u_mode}) >= 1.0/3.0 "
         f"AND ({u_mode}) < (1.0/3.0) * 2)",
-        tokens_col, id_col, rate=0.5, span_len=12,
-        sentinel_base=UL2_SENTINEL, seed="ul2:X")
+        rate=0.5, span_len=12, seed="ul2:X")
     return f"""
-        SELECT {id_col}, 'R' AS mode,
+        SELECT doc_id, 'R' AS mode,
                [CAST({UL2_R_ID} AS INTEGER)] || inputs AS inputs,
                targets, n_spans
         FROM ({r_sql})
         UNION ALL
-        SELECT {id_col}, 'X' AS mode,
+        SELECT doc_id, 'X' AS mode,
                [CAST({UL2_X_ID} AS INTEGER)] || inputs AS inputs,
                targets, n_spans
         FROM ({x_sql})
         UNION ALL
-        SELECT {id_col}, 'S' AS mode,
+        SELECT doc_id, 'S' AS mode,
                [CAST({UL2_S_ID} AS INTEGER)] || t[1:j]
                  || [CAST({UL2_SENTINEL} AS INTEGER)] AS inputs,
                [CAST({UL2_SENTINEL} AS INTEGER)]
@@ -2280,8 +2196,8 @@ def denoiser_mix_sql(
                      ELSE CAST([] AS INTEGER[]) END) AS targets,
                1 AS n_spans
         FROM (
-          SELECT {id_col}, {tokens_col} AS t, len({tokens_col}) AS n,
-                 CAST(floor(({u_split}) * (len({tokens_col}) + 1))
+          SELECT doc_id, tokens AS t, len(tokens) AS n,
+                 CAST(floor(({u_split}) * (len(tokens) + 1))
                       AS INT) AS j
           FROM {table} WHERE ({u_mode}) >= (1.0/3.0) * 2
         )

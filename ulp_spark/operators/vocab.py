@@ -30,6 +30,9 @@ from ulp_spark.operators.curation import (word_grams, word_tokens,
                                           word_tokens_sql)
 
 BPE_MIN_COUNT = 2  # a pair seen fewer times than this ends bpe training
+VOCAB_TOPK = 50  # words vocab_topk returns
+BPE_TOP_MERGES = 20  # merges bpe_top_merges returns by default
+BIGRAM_MIN_COUNT = 3  # corpus count that makes a bigram "covered"
 
 
 def word_counts(df: DataFrame, text_col: str) -> DataFrame:
@@ -48,18 +51,19 @@ def word_counts_sql(table: str, text_col: str) -> str:
     """
 
 
-def vocab_topk(df: DataFrame, text_col: str, k: int = 50) -> DataFrame:
-    """Top-``k`` words by frequency (ties -> lexicographically smaller)."""
+def vocab_topk(df: DataFrame, text_col: str) -> DataFrame:
+    """Top-``VOCAB_TOPK`` words by frequency (ties -> lexicographically
+    smaller)."""
     return (
         word_counts(df, text_col)
         .orderBy(F.col("n").desc(), F.col("word"))
-        .limit(k)
+        .limit(VOCAB_TOPK)
     )
 
 
-def vocab_topk_sql(table: str, text_col: str, k: int = 50) -> str:
+def vocab_topk_sql(table: str, text_col: str) -> str:
     return (f"SELECT word, n FROM ({word_counts_sql(table, text_col)}) "
-            f"ORDER BY n DESC, word LIMIT {k}")
+            f"ORDER BY n DESC, word LIMIT {VOCAB_TOPK}")
 
 
 def _char_pairs(word: Column) -> Column:
@@ -97,7 +101,9 @@ def bpe_pair_counts_sql(table: str, text_col: str) -> str:
     """
 
 
-def bpe_top_merges(df: DataFrame, text_col: str, k: int = 20) -> DataFrame:
+def bpe_top_merges(
+    df: DataFrame, text_col: str, k: int = BPE_TOP_MERGES,
+) -> DataFrame:
     """Top-``k`` candidate BPE merges (ties -> lexicographically smaller
     pair), i.e. the first ``k`` greedy merge choices if pair statistics
     were frozen."""
@@ -108,9 +114,9 @@ def bpe_top_merges(df: DataFrame, text_col: str, k: int = 20) -> DataFrame:
     )
 
 
-def bpe_top_merges_sql(table: str, text_col: str, k: int = 20) -> str:
+def bpe_top_merges_sql(table: str, text_col: str) -> str:
     return (f"SELECT pair, n FROM ({bpe_pair_counts_sql(table, text_col)}) "
-            f"ORDER BY n DESC, pair LIMIT {k}")
+            f"ORDER BY n DESC, pair LIMIT {BPE_TOP_MERGES}")
 
 
 # --------------------------------------------------------------------------
@@ -130,13 +136,11 @@ def bigram_counts(df: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-def bigram_coverage(
-    df: DataFrame, text_col: str, id_col: str, min_count: int = 3,
-) -> DataFrame:
+def bigram_coverage(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Per-doc fluency signal: fraction of word-bigram OCCURRENCES whose
-    corpus count is >= ``min_count`` (CCNet-style LM filtering with the
-    perplexity model replaced by exact corpus statistics, so the score is
-    integer-ratio-exact and oracle-gated; a real KenLM swap would only
+    corpus count is >= ``BIGRAM_MIN_COUNT`` (CCNet-style LM filtering with
+    the perplexity model replaced by exact corpus statistics, so the score
+    is integer-ratio-exact and oracle-gated; a real KenLM swap would only
     change the scoring UDF).
 
     Shape: docs explode to (doc_id, gram) -> ONE shuffle join against the
@@ -154,7 +158,7 @@ def bigram_coverage(
         grams.join(model, "gram")
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_bigrams"),
-             F.sum((F.col("n") >= min_count).cast("bigint"))
+             F.sum((F.col("n") >= BIGRAM_MIN_COUNT).cast("bigint"))
               .alias("n_common"))
     )
     base = df.select(F.col(id_col))
@@ -167,9 +171,7 @@ def bigram_coverage(
                       n_co.alias("n_common"), frac.alias("common_frac"))
 
 
-def bigram_coverage_sql(
-    table: str, text_col: str, id_col: str, min_count: int = 3,
-) -> str:
+def bigram_coverage_sql(table: str, text_col: str, id_col: str) -> str:
     from ulp_spark.operators.curation import word_grams_sql
     toks = word_tokens_sql(text_col)
     return f"""
@@ -182,7 +184,7 @@ def bigram_coverage_sql(
     ),
     per_doc AS (
       SELECT g.{id_col}, count(*)::BIGINT AS n_bigrams,
-             sum(CASE WHEN m.n >= {min_count} THEN 1 ELSE 0 END)::BIGINT
+             sum(CASE WHEN m.n >= {BIGRAM_MIN_COUNT} THEN 1 ELSE 0 END)::BIGINT
                AS n_common
       FROM grams g JOIN model m USING (gram)
       GROUP BY g.{id_col}

@@ -34,7 +34,6 @@ from pyspark.sql import functions as F
 
 from ulp_spark.functions import sqltext
 from ulp_spark.functions.sqltext import ident, lit
-from ulp_spark.operators import fanout
 
 
 def manifest_path(base: str, run_id: str) -> str:
@@ -129,12 +128,11 @@ def resume_fanout(
 ) -> dict[str, Any]:
     """Write every uncommitted route's rows; returns the updated manifest.
 
-    All pending routes go out in ONE partitioned write
-    (:func:`ulp_spark.operators.fanout.write_partitioned`) into
-    ``<run>/_staging/``, and per-route row counts come from
-    ``DataFrame.observe`` on that same write — one Spark job in all, with
-    no count job and no per-route scan.  The routes then commit in
-    deterministic sorted order (reference BTreeMap iteration,
+    All pending routes go out in ONE ``partitionBy`` parquet write into
+    ``<run>/_staging/`` (one directory per route), and per-route row
+    counts come from ``DataFrame.observe`` on that same write — one Spark
+    job in all, with no count job and no per-route scan.  The routes then
+    commit in deterministic sorted order (reference BTreeMap iteration,
     ``src/workerpool.rs:104``): the staged directory is renamed to
     ``sinks/<route>`` and the manifest saved — one commit point and one
     history snapshot per route.  A crash between commits resumes exactly
@@ -165,7 +163,7 @@ def resume_fanout(
                                             f"n{i}")
                              for i, r in enumerate(pending)])
     )
-    fanout.write_partitioned(staged, staging, route_col=_STAGE_COL)
+    staged.write.mode("overwrite").partitionBy(_STAGE_COL).parquet(staging)
     counts = observed.get
     staged_dirs = {_staged_route(d): os.path.join(staging, d)
                    for d in os.listdir(staging)

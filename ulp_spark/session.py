@@ -30,7 +30,9 @@ _DEFAULTS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Arrow transfer for every pandas UDF (the vectorized parse/sniff path).
+    # Arrow transfer for the Python stages: the IPv6 cast UDF and the
+    # mapInPandas bodies of pack_bins, bpe_tokenize, the JSON type-tree
+    # fold and the multimodal kernels.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
     # Deterministic timestamp rendering regardless of host TZ.
