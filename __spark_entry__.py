@@ -26,12 +26,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ulp_spark import fixtures
-from ulp_spark.functions import casts, sanitize, sniff, sqltext
-from ulp_spark.operators import dedup, lattice, multimodal, parse, similarity, textstats
-from ulp_spark.operators import profiling as _profiling
-from ulp_spark.operators import vocab as _vocab
+from ulp_spark.functions import casts, sniff, sqltext
+from ulp_spark.operators import dedup, lattice, parse, textstats
 from ulp_spark.plans import pipeline
-from ulp_spark.session import local_frame
 
 N_FIXTURE = 10_000
 
@@ -73,20 +70,6 @@ def _q_source_token_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     return p.source_token_hist
 
 
-def _q_routed_tokens_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row-level token-payload invariant, SQL-comparable form: per routed row
-    the first/last token and the full-array sum (elementwise-sensitive)."""
-    p = pipeline.build(spark, n=N_FIXTURE)
-    t = F.col("tokens")
-    return p.routed_tokens.select(
-        "doc_id", "route", "n_tok",
-        F.element_at(t, 1).alias("tok_first"),
-        F.element_at(t, -1).alias("tok_last"),
-        F.aggregate(t, F.lit(0).cast("bigint"),
-                    lambda acc, x: acc + x.cast("bigint")).alias("tok_sum"),
-    )
-
-
 def _q_enrich_categories(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = pipeline.build(spark, n=N_FIXTURE)
     return (
@@ -116,77 +99,10 @@ def _q_events_cast_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_sanitize_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return (
-        ev.selectExpr(
-            sanitize.sanitize_sink_name(
-                f"concat({sqltext.lit('Sink/')}, event_type,"
-                f" {sqltext.lit(' V1')})") + " AS sink_name"
-        )
-        .groupBy("sink_name")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-    )
-
-
 # ---- training-data ops over documents/embeddings --------------------------
 
 def _docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _embs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-
-def _q_doc_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).withColumn(
-        "fp", textstats.fingerprint(F.col("text")))
-    return dedup.exact_dedup(d, ["fp"], "doc_id")
-
-
-def _q_doc_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
-    sig = dedup.minhash_signature(dedup.shingle_hashes(F.col("text")))
-    return d.select("doc_id", *sig[:4])
-
-
-def _q_doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
-    return d.select(
-        "doc_id",
-        dedup.simhash(dedup.shingle_hashes(F.col("text"))).alias("simhash"),
-    )
-
-
-def _q_doc_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jaccard over consecutive doc pairs (deterministic candidate set)."""
-    d = _docs(spark, sf_dir).filter(F.col("doc_id") < 50)
-    sh = d.select("doc_id", dedup.shingle_hashes(F.col("text")).alias("sh"))
-    a = sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sh.select((F.col("doc_id") - 1).alias("id_a"),
-                  F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    return (
-        a.join(b, "id_a")
-        .select("id_a", "id_b",
-                F.round(dedup.jaccard(F.col("sh_a"), F.col("sh_b")), 6)
-                .alias("jaccard"))
-    )
-
-
-def _q_doc_simhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit simhash near-dup candidates at the production threshold:
-    4x16-bit Hamming bands (pigeonhole-complete for distance <= 3) ->
-    bucket-capped collision join -> exact bit_count(xor) verify."""
-    d = _docs(spark, sf_dir)
-    return dedup.simhash_candidates(d, "text", "doc_id")
-
-
-def _q_doc_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH band-collision candidates, oracle-gated by the DuckDB band
-    self-join twin (dedup.minhash_candidates_sql)."""
-    d = _docs(spark, sf_dir)
-    return dedup.minhash_candidates(d, "text", "doc_id")
 
 
 def _q_doc_winnow_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -203,300 +119,24 @@ def _q_doc_winnow_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.winnow_candidates(d, "text", "doc_id")
 
 
-def _q_doc_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup CLUSTERS: connected components over the minhash candidate
-    pairs; comp_id = canonical (min) doc_id per cluster. Spark side is
-    the alternating large-star/small-star edge rewrite (converged fixed
-    point); oracle is the exact recursive-CTE transitive closure — both
-    yield the unique min-id-per-component labeling."""
-    pairs = dedup.minhash_candidates(_docs(spark, sf_dir), "text", "doc_id")
-    cc = dedup.connected_components(pairs)
-    return cc.select(F.col("id").alias("doc_id"), "comp_id")
-
-
-def _emb_query_vec(spark, sf_dir) -> list[float]:
-    row = _embs(spark, sf_dir).filter(F.col("vec_id") == 0).collect()[0]
-    return [float(x) for x in row.embedding]
-
-
-def _q_emb_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _embs(spark, sf_dir)
-    return similarity.brute_force_topk(
-        e, "embedding", "vec_id", _emb_query_vec(spark, sf_dir))
-
-
-def _q_emb_srp_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _embs(spark, sf_dir)
-    sig = similarity.srp_signature(F.col("embedding"), dim=64)
-    return e.select(sig.alias("bucket")).groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n_rows"))
-
-
-def _q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
-    return d.select("doc_id", textstats.lang_id(F.col("text")).alias("lang_pred"))
-
-
-def _q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
-    feats = textstats.quality_features(F.col("text"))
-    return d.select(
-        "doc_id",
-        feats["n_tokens"].alias("n_tokens"),
-        feats["punct_ratio"].alias("punct_ratio"),
-        feats["stopword_ratio"].alias("stopword_ratio"),
-        textstats.quality_score(F.col("text")).alias("quality_score"),
-    )
-
-
-def _q_text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
-    return d.select(
-        "doc_id",
-        textstats.token_count_ws(F.col("text")).alias("tok_ws"),
-        textstats.token_count_bpe(F.col("text")).alias("tok_bpe"),
-        textstats.fingerprint(F.col("text")).alias("fp"),
-    )
-
-
-def _q_mm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = multimodal.synth_binary_column(_docs(spark, sf_dir), "text", "doc_id")
-    # byte_hist serialized to its JSON form: the driver's canonicalizer
-    # value-hashes pandas frames, and a raw array<int> column is unhashable
-    # there (round-1 gate failure) — '[1,2,3]' renders identically in Spark
-    # F.to_json and DuckDB to_json.
-    return multimodal.extract_features(d).withColumn(
-        "byte_hist", F.to_json("byte_hist"))
-
-
-def _q_mm_frame_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = multimodal.synth_binary_column(_docs(spark, sf_dir), "text", "doc_id")
-    frames = multimodal.sample_frames(d)
-    return frames.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_frames"),
-        F.sum(F.length(F.col("frame"))).alias("frame_bytes"),
-    )
-
-
-def _q_doc_bigram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style fluency proxy: per-doc fraction of word-bigram
-    occurrences whose corpus count >= 3 (exact integer statistics in
-    place of an LM; one shuffle join against the vocab-scale bigram
-    model)."""
-    return _vocab.bigram_coverage(_docs(spark, sf_dir), "text", "doc_id")
-
-
-def _q_doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-pass per-column census (rows/nulls/distinct/min/max) — the
-    data-quality pass before a mapping DDL commit. Exact count_distinct
-    (Expand plan) so the oracle gates values; approx_count_distinct is
-    the documented 100-TB swap."""
-    from ulp_spark.operators import profiling
-
-    return profiling.profile_table(
-        _docs(spark, sf_dir), ["doc_id", "lang", "source", "n_chars"])
-
-
-def _q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus vocabulary top-50: explode+count collapses the corpus to
-    vocabulary scale with map-side combine; top-k is
-    TakeOrderedAndProject (per-partition heaps, no global sort)."""
-    from ulp_spark.operators import vocab
-
-    return vocab.vocab_topk(_docs(spark, sf_dir), "text")
-
-
-def _q_bpe_top_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First 20 greedy BPE merge candidates: adjacent-char-pair counts
-    weighted by word frequency, computed at vocabulary scale."""
-    from ulp_spark.operators import vocab
-
-    return vocab.bpe_top_merges(_docs(spark, sf_dir), "text", k=20)
-
-
-def _q_events_json_path(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ulp_spark.functions import fields as fields_fn
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.select(
-        "event_id", fields_fn.json_path(F.col("props"), "k").alias("k_str"))
-
-
-def _q_emb_bucket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The embedding near-dup machinery (SRP bucket -> bounded pair join ->
-    exact cosine), thresholded low so the fixture yields non-trivial pairs."""
-    e = _embs(spark, sf_dir)
-    return similarity.embedding_near_dup(
-        e, "embedding", "vec_id", dim=64, threshold=0.1)
-
-
-def _q_events_nested_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full-tree recursive lattice end-to-end (A1 on nested records): mixed
-    object/list/scalar JSON folded by lattice.json_tree_schema — exercising
-    Object⊔List index-stringification (type_casting/src/lib.rs:69-86) and
-    List⊔scalar index-0 fold (lib.rs:88-97) — flattened to leaf rows."""
-    from ulp_spark import oracle as _oracle
-
-    df = fixtures.nested_json(spark, N_FIXTURE)
-    tree = lattice.json_tree_schema(df, "doc")
-    paths = _oracle.tree_to_paths(tree)
-    return local_frame(spark, sorted(paths.items()), "path string, type_code int")
-
-
-def _q_emb_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF coarse-quantizer cell histogram (assignment parity check)."""
-    e = _embs(spark, sf_dir)
-    cents = similarity.ivf_centroids(e, "embedding", "vec_id", k=8)
-    return (
-        e.select(similarity.ivf_assign(F.col("embedding"), cents).alias("cell"))
-        .groupBy("cell").agg(F.count(F.lit(1)).alias("n_rows"))
-    )
-
-
-def _q_emb_ivf_cells_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF cell histogram after ONE Lloyd iteration (train -> assign):
-    centroids recomputed as per-cell dimension means, deterministically."""
-    e = _embs(spark, sf_dir)
-    cents = similarity.ivf_centroids_trained(
-        e, "embedding", "vec_id", k=8, rounds=1)
-    return (
-        e.select(similarity.ivf_assign(F.col("embedding"), cents).alias("cell"))
-        .groupBy("cell").agg(F.count(F.lit(1)).alias("n_rows"))
-    )
-
-
-def _q_emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN: exact cosine within the 2 nearest probed cells."""
-    e = _embs(spark, sf_dir)
-    cents = similarity.ivf_centroids(e, "embedding", "vec_id", k=8)
-    return similarity.ivf_topk(
-        e, "embedding", "vec_id", _emb_query_vec(spark, sf_dir),
-        cents)
-
-
-def _q_seq_packing_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing over the input_hint table: exact global token
-    offsets via the distributed two-phase prefix sum (never a
-    single-reducer Window.orderBy) + 512-token chunk assignment."""
-    from ulp_spark.operators import packing
-
-    seq = fixtures.sequences(spark, N_FIXTURE).select("doc_id", "n_tok")
-    return packing.packing_offsets(seq)
-
-
-def _q_seq_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-shard manifest over the input_hint table: shard id from
-    the distributed prefix sum (same two-phase machinery as packing),
-    one row per shard with sequence/token counts and doc range."""
-    from ulp_spark.operators import sharding
-
-    seq = fixtures.sequences(spark, N_FIXTURE).select("doc_id", "n_tok")
-    return sharding.shard_manifest(seq, shard_tokens=1 << 18)
-
-
 def _q_seq_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact sequence dedup on TOKEN IDS (md5 over the int array) — the
-    post-tokenization twin of doc_exact_dedup."""
+    """Exact sequence dedup on TOKEN IDS (md5 over the int array)."""
     from ulp_spark.operators import tokens
 
     seq = fixtures.sequences(spark, N_FIXTURE)
     return tokens.sequence_exact_dedup(seq, "tokens", "doc_id")
 
 
-def _q_seq_token_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-level decontamination: train sequences sharing any 8-token
-    window with the eval split (source='wiki'); eval grams broadcast,
-    train never shuffled."""
-    from ulp_spark.operators import tokens
-
-    seq = fixtures.sequences(spark, N_FIXTURE)
-    return tokens.token_contamination(
-        seq, "tokens", "doc_id", F.col("source") == "wiki")
-
-
-def _q_seq_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source unigram-distribution drift vs the corpus (KL nats +
-    total-variation distance) over the input_hint table — the mixture
-    monitor a 10^12-sequence pipeline runs per ingest batch.  One pass
-    over the exploded tokens; corpus distribution re-aggregated from the
-    (source, token) partial counts, never a second corpus scan."""
-    from ulp_spark.operators import tokens
-
-    seq = fixtures.sequences(spark, N_FIXTURE)
-    return tokens.source_token_drift(seq)
-
-
-def _q_seq_dup_gram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-sequence duplicated-window coverage (ExactSubstr signal on
-    token ids): fraction of each sequence's distinct 8-token windows that
-    occur in another sequence.  Distinct (id, gram) pairs seamed once;
-    census + rollup both read the seam; no pair materialization."""
-    from ulp_spark.operators import tokens
-
-    # 2,500 rows, not N_FIXTURE: ~640k distinct (id, gram) pairs is plenty
-    # to exercise census + rollup on both engines; at 10k the DuckDB twin
-    # alone costs ~80 s of suite time for no extra coverage
-    seq = fixtures.sequences(spark, 2_500)
-    return tokens.duplicate_gram_coverage(seq, "tokens", "doc_id")
-
-
-def _q_seq_sft_loss_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Instruction-tuning loss masks: 0 over prompt positions, 1 over the
-    completion, prompt lengths clamped into [0, n_tok].  Prompt boundary
-    derived deterministically in-query (seq_no*13 mod n_tok+5 — exercises
-    the beyond-length clamp on real rows).  Pure per-row array algebra."""
-    from ulp_spark.operators import tokens
-
-    seq = fixtures.sequences(spark, 2_500).select(
-        "doc_id", "tokens",
-        (F.col("seq_no") * 13 % (F.col("n_tok") + 5)).cast("int")
-        .alias("prompt_len"))
-    return tokens.sft_loss_mask(seq, "tokens", "prompt_len")
-
-
-def _q_seq_corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source dataset-card summary (n_seqs, tokens, exact-dup mass,
-    length stats) with injected duplicates (seq_no<500 re-ingested with a
-    NULL source) so dup_frac and the '__null__' bucket both exercise.
-    ONE scan; fingerprints computed in the scan projection."""
-    from ulp_spark.operators import profiling as prof
-
-    seq = fixtures.sequences(spark, N_FIXTURE)
-    dup = (seq.filter(F.col("seq_no") < 500)
-           .withColumn("source", F.lit(None).cast("string")))
-    return prof.corpus_datacard(seq.unionByName(dup))
-
-
-def _q_seq_packed_sft(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Packed-SFT composition: sft_loss_mask -> hash-bucket packing with
-    the mask riding extra_array_cols -> pack_segments; one plan emitting
-    (tokens, loss_mask, doc_starts, segment_ids, pos_in_doc) — the full
-    packed instruction-tuning row."""
-    from ulp_spark.operators import packing, tokens
-    from ulp_spark.operators.sampling import hash_bucket
-
-    seq = fixtures.sequences(spark, 2_000).select(
-        "doc_id", "tokens",
-        (F.col("seq_no") * 13 % (F.col("n_tok") + 5)).cast("int")
-        .alias("prompt_len"))
-    masked = tokens.sft_loss_mask(seq, "tokens", "prompt_len").select(
-        "doc_id", "tokens", "loss_mask")
-    pk = masked.select(
-        "doc_id", hash_bucket(F.col("doc_id"), 64).alias("bin_id"))
-    return packing.pack_segments(packing.pack_sequences(
-        masked, pk, extra_array_cols=["loss_mask"]))
-
-
 def _q_seq_gram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-sequence novelty: fraction of each sequence's distinct 8-token
     windows whose FIRST corpus occurrence (ascending doc_id — ingest
     order) is in that sequence — the marginal-contribution signal for
-    admit-by-novelty curation.  Same seamed distinct-pair shape as
-    dup_gram_coverage (census is min(id) instead of count)."""
+    admit-by-novelty curation.  Distinct (id, gram) pairs seamed once;
+    census (min id) + rollup both read the seam."""
     from ulp_spark.operators import tokens
 
-    # 2,500 rows for the same reason as seq_dup_gram_coverage: the
-    # distinct-pair frame is the cost driver on the DuckDB side.
+    # 2,500 rows, not N_FIXTURE: the distinct-pair frame is the cost
+    # driver on the DuckDB side, and 2,500 rows exercise census + rollup.
     seq = fixtures.sequences(spark, 2_500)
     return tokens.gram_novelty(seq, "tokens", "doc_id")
 
@@ -527,17 +167,6 @@ def _q_doc_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ulp_spark.operators import curation
 
     return curation.gopher_rules(_docs(spark, sf_dir), "text", "doc_id")
-
-
-def _q_seq_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-based source mixing (XLM-R exponentiated sampling,
-    alpha=0.5) over the input_hint table: per-source natural share,
-    temperature share, up-weight, and a 1M-token budget allocation.
-    One aggregate to |sources| rows; normalizer is a 1-row broadcast."""
-    from ulp_spark.operators import tokens
-
-    seq = fixtures.sequences(spark, N_FIXTURE)
-    return tokens.source_temperature_weights(seq, budget=1_000_000)
 
 
 def _q_seq_epoch_order(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -850,9 +479,8 @@ def _q_seq_cross_source_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_seq_contamination_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graded decontamination (Llama-3 dirty-fraction form): per TRAIN
     sequence, the fraction of its 8-token windows occurring in the eval
-    split (source='wiki') — thresholdable, where seq_token_contamination
-    is the binary any-hit flag.  Eval grams broadcast; train side keeps
-    its partitioning."""
+    split (source='wiki') — thresholdable, not a binary any-hit flag.
+    Eval grams broadcast; train side keeps its partitioning."""
     from ulp_spark.operators import tokens
 
     seq = fixtures.sequences(spark, N_FIXTURE)
@@ -1064,128 +692,13 @@ def _q_corpus_training_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
         surv.select("doc_id", "n_tok"), shard_tokens=1 << 12)
 
 
-def _q_events_value_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Windowed anomaly detection: rows > 3 population stddevs from their
-    (event_type, day) mean; stats side broadcast, events never shuffled."""
-    from ulp_spark.operators import anomaly
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return anomaly.value_anomalies(ev)
-
-
-def _q_doc_split_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reproducible train/val/test split (hash-bucket membership, never
-    rand()/TABLESAMPLE — identical on any engine, cluster size, or run)."""
-    from ulp_spark.operators import sampling
-
-    d = _docs(spark, sf_dir)
-    return (
-        d.select(sampling.split_label(F.col("doc_id")).alias("split"), "source",
-                 "n_chars")
-        .groupBy("split", "source")
-        .agg(F.count(F.lit(1)).alias("n_docs"),
-             F.sum("n_chars").alias("sum_chars"))
-    )
-
-
-def _q_doc_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact linear-interpolation percentiles of document length per source
-    (Spark `percentile` == DuckDB `quantile_cont`; at 100 TB swap for
-    percentile_approx/t-digest and drop the oracle to rows-only)."""
-    d = _docs(spark, sf_dir)
-    pct = F.percentile(F.col("n_chars"), F.lit([0.5, 0.9, 0.99]))
-    return (
-        d.groupBy("source")
-        .agg(*[F.round(F.element_at(pct, i + 1), 6).alias(n)
-               for i, n in enumerate(["p50", "p90", "p99"])])
-    )
-
-
 # ---- corpus curation (repetition / passage dedup / decontamination / PII) --
 
 _STRAT_RATES = {"en": 10, "de": 50, "fr": 50, "es": 50, "zh": 20}
-_EVAL_PCT = 5  # decontamination eval split: hash_bucket(doc_id) < 5
 
 
-def _q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style duplicate-n-gram signals, per doc (zero shuffle;
-    staged projections — see curation.repetition_stats docstring)."""
-    from ulp_spark.operators import curation
-
-    return curation.repetition_stats(_docs(spark, sf_dir), "text", "doc_id")
-
-
-def _q_doc_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style passage dedup: per-doc duplicated-chunk fraction vs the
-    whole corpus (default ``via="join"``: the seamed passage table's
-    count > 1 hash set joined back, then a per-doc aggregate)."""
-    from ulp_spark.operators import curation
-
-    return curation.passage_dup_stats(_docs(spark, sf_dir), "text", "doc_id")
-
-
-def _q_doc_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: train docs sharing any word 5-gram with
-    the deterministic eval split (broadcast semi-join on eval grams)."""
-    from ulp_spark.operators import curation, sampling
-
-    d = _docs(spark, sf_dir)
-    pred = sampling.hash_bucket(F.col("doc_id"), 100) < _EVAL_PCT
-    out = curation.contamination_flags(d, "text", "doc_id", pred)
-    return out.select(
-        "doc_id", F.col("is_contaminated").cast("int").alias("is_contaminated"))
-
-
-def _q_events_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrub over a derived per-event log line (email + IPv4 rules,
-    pure regexp_replace — the enrich stage's redaction pass)."""
-    from ulp_spark.operators import curation
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    line = F.concat(
-        F.col("event_type"), F.lit(" u"), F.col("user_id").cast("string"),
-        F.lit("@example.com from 10."), (F.col("user_id") % 256).cast("string"),
-        F.lit("."), (F.col("event_id") % 256).cast("string"), F.lit(".7"))
-    red, counts = curation.redact(line)
-    return ev.select(
-        "event_id", red.alias("redacted"),
-        *[c.cast("bigint").alias(f"n_{k}") for k, c in counts.items()])
-
-
-def _q_doc_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic per-language downsampling: kept counts per stratum
-    (hash-bucket predicate — a pure scan filter at any scale)."""
-    from ulp_spark.operators import sampling
-
-    d = _docs(spark, sf_dir)
-    keep = sampling.stratified_keep(F.col("doc_id"), F.col("lang"), _STRAT_RATES)
-    return (
-        d.withColumn("kept", keep)
-        .groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n_total"),
-             F.sum(F.col("kept").cast("int")).cast("bigint").alias("n_kept"))
-    )
-
-
-_TOKEN_BUDGET = 300  # per-source token budget for the mixing query
 _MIN_QUALITY = 0.7
 _MAX_DUP_WORD = 0.55
-
-
-def _q_doc_quality_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 docs per source by quality score (one group-key shuffle)."""
-    from ulp_spark.operators import curation
-
-    return curation.quality_topk(_docs(spark, sf_dir), "text", "doc_id",
-                                 "source")
-
-
-def _q_doc_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source token-budget selection (data mixing prefix-sum)."""
-    from ulp_spark.operators import curation
-
-    return curation.token_budget_mix(_docs(spark, sf_dir), "text", "doc_id",
-                                     "source", budget=_TOKEN_BUDGET)
 
 
 def _q_corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1218,118 +731,26 @@ def _q_corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Queries kept off the driver's 50-row verdict surface: each still runs
-# against its DuckDB twin, with the driver's rows + schema + values compare,
-# in tests/test_entry_parity.py (``retired_queries``).
-_PYTEST_ONLY = frozenset({
-    "seq_sft_loss_mask",
-    "seq_corpus_datacard",
-    "seq_packed_sft",
-    "doc_exact_dedup",
-    "seq_packing_offsets",
-    "doc_passage_dedup",
-    "doc_ngram_jaccard",
-    "emb_ivf_cells_trained",
-    "doc_bigram_coverage",
-    "doc_profile",
-    "doc_length_quantiles",
-    "doc_simhash_candidates",
-    "vocab_topk",
-    "bpe_top_merges",
-    "emb_topk_cosine",
-    "text_langid",
-    "text_token_counts",
-    "mm_features",
-    "mm_frame_counts",
-    "emb_bucket_pairs",
-    "seq_shard_manifest",
-    "seq_source_drift",
-    "seq_dup_gram_coverage",
-    "seq_temperature_mix",
-    "seq_token_contamination",
-    "events_value_anomalies",
-    "doc_split_counts",
-    "events_nested_schema",
-    "text_repetition",
-    "events_pii_redact",
-    "doc_stratified_sample",
-    "doc_quality_topk",
-    "doc_token_budget_mix",
-    "emb_ivf_topk",
-    "doc_contamination",
-    "text_quality",
-    "sanitize_event_types",
-    "doc_minhash_candidates",
-    "doc_dedup_groups",
-    "doc_minhash",
-    "doc_simhash",
-    "emb_srp_buckets",
-    "emb_ivf_cells",
-    "pipeline_routed_tokens_proof",
-    "events_json_path",
-})
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {k: v for k, v in _all_queries().items() if k not in _PYTEST_ONLY}
-
-
-def retired_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {k: v for k, v in _all_queries().items() if k in _PYTEST_ONLY}
-
-
-def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "pipeline_route_counts": _q_route_counts,
         "pipeline_parse_fields": _q_parse_fields,
         "pipeline_route_schema": _q_route_schema,
         "pipeline_source_token_hist": _q_source_token_hist,
-        "pipeline_routed_tokens_proof": _q_routed_tokens_proof,
         "pipeline_enrich_categories": _q_enrich_categories,
         "events_json_schema": _q_events_json_schema,
         "events_cast_props": _q_events_cast_props,
-        "sanitize_event_types": _q_sanitize_event_types,
-        "doc_exact_dedup": _q_doc_exact_dedup,
-        "doc_minhash": _q_doc_minhash,
-        "doc_simhash": _q_doc_simhash,
-        "doc_ngram_jaccard": _q_doc_ngram_jaccard,
-        "doc_minhash_candidates": _q_doc_minhash_candidates,
         "doc_winnow_candidates": _q_doc_winnow_candidates,
-        "doc_simhash_candidates": _q_doc_simhash_candidates,
-        "doc_dedup_groups": _q_doc_dedup_groups,
-        "vocab_topk": _q_vocab_topk,
-        "bpe_top_merges": _q_bpe_top_merges,
-        "doc_profile": _q_doc_profile,
-        "doc_bigram_coverage": _q_doc_bigram_coverage,
-        "emb_topk_cosine": _q_emb_topk,
-        "emb_srp_buckets": _q_emb_srp_buckets,
-        "text_langid": _q_text_langid,
-        "text_quality": _q_text_quality,
-        "text_token_counts": _q_text_token_counts,
-        "mm_features": _q_mm_features,
-        "mm_frame_counts": _q_mm_frame_counts,
-        "events_json_path": _q_events_json_path,
-        "emb_bucket_pairs": _q_emb_bucket_pairs,
-        "seq_packing_offsets": _q_seq_packing_offsets,
-        "seq_shard_manifest": _q_seq_shard_manifest,
         "seq_exact_dedup": _q_seq_exact_dedup,
-        "seq_source_drift": _q_seq_source_drift,
-        "seq_dup_gram_coverage": _q_seq_dup_gram_coverage,
         "seq_gram_novelty": _q_seq_gram_novelty,
         "seq_packed_segments": _q_seq_packed_segments,
         "doc_gopher_rules": _q_doc_gopher_rules,
-        "seq_sft_loss_mask": _q_seq_sft_loss_mask,
-        "seq_corpus_datacard": _q_seq_corpus_datacard,
-        "seq_packed_sft": _q_seq_packed_sft,
-        "seq_temperature_mix": _q_seq_temperature_mix,
         "seq_epoch_order": _q_seq_epoch_order,
         "seq_balanced_writers": _q_seq_balanced_writers,
         "seq_mixing_plan": _q_seq_mixing_plan,
         "doc_quality_classifier": _q_doc_quality_classifier,
         "doc_tokenize": _q_doc_tokenize,
         "doc_strip_boilerplate": _q_doc_strip_boilerplate,
-        "seq_token_contamination": _q_seq_token_contamination,
-        "events_value_anomalies": _q_events_value_anomalies,
         "corpus_training_batches": _q_corpus_training_batches,
         "doc_bpe_tokenize": _q_doc_bpe_tokenize,
         "seq_chunk_windows": _q_seq_chunk_windows,
@@ -1361,19 +782,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_tokenizer_fertility": _q_doc_tokenizer_fertility,
         "doc_dsir_sample": _q_doc_dsir_sample,
         "seq_length_buckets": _q_seq_length_buckets,
-        "doc_split_counts": _q_doc_split_counts,
-        "doc_length_quantiles": _q_doc_length_quantiles,
-        "events_nested_schema": _q_events_nested_schema,
-        "emb_ivf_cells": _q_emb_ivf_cells,
-        "emb_ivf_cells_trained": _q_emb_ivf_cells_trained,
-        "emb_ivf_topk": _q_emb_ivf_topk,
-        "text_repetition": _q_text_repetition,
-        "doc_passage_dedup": _q_doc_passage_dedup,
-        "doc_contamination": _q_doc_contamination,
-        "events_pii_redact": _q_events_pii_redact,
-        "doc_stratified_sample": _q_doc_stratified_sample,
-        "doc_quality_topk": _q_doc_quality_topk,
-        "doc_token_budget_mix": _q_doc_token_budget_mix,
         "corpus_curation_pipeline": _q_corpus_curation_pipeline,
     }
 
@@ -1399,95 +807,11 @@ def _parsed_cte() -> str:
     """
 
 
-def _packing_sql() -> str:
-    from ulp_spark.operators import packing
-
-    # doc_id/n_tok regenerated WITHOUT the tokens list (this DuckDB build's
-    # parser rejects list comprehensions nested inside CTE subqueries) —
-    # same integer arithmetic as fixtures.sequences_sql, so identical rows.
-    seqtab = (
-        f"(SELECT printf('doc-%08d', i) AS doc_id, "
-        f"CAST((i*7919) % {fixtures.MAX_TOKENS} + 1 AS INTEGER) AS n_tok "
-        f"FROM range(0, {N_FIXTURE}) t(i))"
-    )
-    return packing.packing_offsets_sql(seqtab)
-
-
-def _shard_manifest_sql() -> str:
-    from ulp_spark.operators import sharding
-
-    # doc_id/n_tok regenerated without the tokens list (same reason as
-    # _packing_sql: this DuckDB build rejects list comprehensions nested
-    # inside CTEs); identical rows to fixtures.sequences_sql.
-    seqtab = (
-        f"(SELECT printf('doc-%08d', i) AS doc_id, "
-        f"CAST((i*7919) % {fixtures.MAX_TOKENS} + 1 AS INTEGER) AS n_tok "
-        f"FROM range(0, {N_FIXTURE}) t(i))"
-    )
-    return sharding.shard_manifest_sql(seqtab, shard_tokens=1 << 18)
-
-
 def _seq_dedup_sql() -> str:
     from ulp_spark.operators import tokens
 
     return tokens.sequence_exact_dedup_sql(
         f"({fixtures.sequences_sql(N_FIXTURE)})", "tokens", "doc_id")
-
-
-def _seq_contamination_sql() -> str:
-    from ulp_spark.operators import tokens
-
-    return tokens.token_contamination_sql(
-        f"({fixtures.sequences_sql(N_FIXTURE)})", "tokens", "doc_id",
-        "source = 'wiki'")
-
-
-def _source_drift_sql() -> str:
-    from ulp_spark.operators import tokens
-
-    return tokens.source_token_drift_sql(
-        f"({fixtures.sequences_sql(N_FIXTURE)})")
-
-
-def _dup_gram_coverage_sql() -> str:
-    from ulp_spark.operators import tokens
-
-    # 2,500 rows to mirror _q_seq_dup_gram_coverage (suite-time trade)
-    return tokens.duplicate_gram_coverage_sql(
-        f"({fixtures.sequences_sql(2_500)})", "tokens", "doc_id")
-
-
-def _sft_loss_mask_sql() -> str:
-    from ulp_spark.operators import tokens
-
-    inner = (f"(SELECT doc_id, tokens, "
-             f"CAST(seq_no * 13 % (n_tok + 5) AS INTEGER) AS prompt_len "
-             f"FROM ({fixtures.sequences_sql(2_500)}))")
-    return tokens.sft_loss_mask_sql(inner, "tokens", "prompt_len")
-
-
-def _corpus_datacard_sql() -> str:
-    from ulp_spark.operators import profiling as prof
-
-    base = fixtures.sequences_sql(N_FIXTURE)
-    both = (f"(SELECT * FROM ({base}) UNION ALL "
-            f"SELECT doc_id, tokens, n_tok, NULL AS source, seq_no "
-            f"FROM ({base}) WHERE seq_no < 500)")
-    return prof.corpus_datacard_sql(both)
-
-
-def _packed_sft_sql() -> str:
-    from ulp_spark.operators import packing, tokens
-    from ulp_spark.operators.sampling import hash_bucket_sql
-
-    inner = (f"(SELECT doc_id, tokens, "
-             f"CAST(seq_no * 13 % (n_tok + 5) AS INTEGER) AS prompt_len "
-             f"FROM ({fixtures.sequences_sql(2_000)}))")
-    masked = (f"(SELECT doc_id, tokens, loss_mask FROM "
-              f"({tokens.sft_loss_mask_sql(inner, 'tokens', 'prompt_len')}))")
-    return packing.bucket_pack_segments_sql(
-        masked, "doc_id", "tokens", hash_bucket_sql("doc_id", 64),
-        extra_array_cols=["loss_mask"])
 
 
 def _gram_novelty_sql() -> str:
@@ -1511,13 +835,6 @@ def _gopher_rules_sql() -> str:
     from ulp_spark.operators import curation
 
     return curation.gopher_rules_sql("documents", "text", "doc_id")
-
-
-def _temperature_mix_sql() -> str:
-    from ulp_spark.operators import tokens
-
-    return tokens.source_temperature_weights_sql(
-        f"({fixtures.sequences_sql(N_FIXTURE)})", budget=1_000_000)
 
 
 def _epoch_order_sql() -> str:
@@ -1558,12 +875,6 @@ def _strip_boilerplate_sql() -> str:
     from ulp_spark.operators import curation
 
     return curation.strip_boilerplate_sql("documents", "text", "doc_id")
-
-
-def _anomalies_sql() -> str:
-    from ulp_spark.operators import anomaly
-
-    return anomaly.value_anomalies_sql("events")
 
 
 def _token_entropy_sql() -> str:
@@ -1899,70 +1210,7 @@ def _length_buckets_sql() -> str:
         f"({fixtures.sequences_sql(N_FIXTURE)})")
 
 
-def _split_counts_sql() -> str:
-    from ulp_spark.operators import sampling
-
-    return f"""
-        SELECT {sampling.split_label_sql('doc_id')} AS split, source,
-               count(*)::BIGINT AS n_docs,
-               sum(n_chars)::BIGINT AS sum_chars
-        FROM documents GROUP BY split, source
-    """
-
-
-def _nested_schema_oracle() -> str:
-    """DuckDB twin of the recursive-lattice query.  The fixture's merged
-    STRUCTURE is fixed by its two shapes (the reference's structural rules,
-    encoded per leaf below); each leaf's scalar code is independently
-    recomputed from the data via runtime-typed masks:
-
-    * ``a``: Object⊔List stringifies list indices into the object's keys
-      (lib.rs:69-86) -> leaf 'a.x' aggregates the object rows, leaves
-      'a.0'/'a.1' aggregate the list rows;
-    * ``b``: List⊔scalar folds the scalar into index 0 (lib.rs:88-97) ->
-      leaf 'b.0' aggregates ALL rows (array element 0 or the bare scalar);
-    * ``c``: plain scalar merge (Null identity).
-    """
-    def rc(jv: str) -> str:
-        return sniff.json_runtime_code_sql(f"json_type({jv})", jv)
-
-    a = "json_extract(doc, '$.a')"
-    b = "json_extract(doc, '$.b')"
-    ax = rc("json_extract(doc, '$.a.x')")
-    a0 = rc("json_extract(doc, '$.a[0]')")
-    a1 = rc("json_extract(doc, '$.a[1]')")
-    b0 = rc(f"CASE WHEN json_type({b}) = 'ARRAY' "
-            f"THEN json_extract(doc, '$.b[0]') ELSE {b} END")
-    b1 = rc("json_extract(doc, '$.b[1]')")
-    c = rc("json_extract(doc, '$.c')")
-    leaves = f"""
-      SELECT 'a.x' AS path, {ax} AS code FROM docs WHERE json_type({a}) = 'OBJECT'
-      UNION ALL SELECT 'a.0', {a0} FROM docs WHERE json_type({a}) = 'ARRAY'
-      UNION ALL SELECT 'a.1', {a1} FROM docs WHERE json_type({a}) = 'ARRAY'
-      UNION ALL SELECT 'b.0', {b0} FROM docs
-      UNION ALL SELECT 'b.1', {b1} FROM docs WHERE json_type({b}) = 'ARRAY'
-      UNION ALL SELECT 'c', {c} FROM docs
-    """
-    return f"""
-    WITH docs AS ({fixtures.nested_json_sql(N_FIXTURE)}),
-    leaf AS ({leaves})
-    SELECT path,
-           CAST({sniff.resolve_mask_sql("bit_or(1::BIGINT << code)")} AS INTEGER)
-             AS type_code
-    FROM leaf GROUP BY path
-    """
-
-
 def oracle_sql() -> dict[str, str]:
-    return {k: v for k, v in _all_oracle_sql().items()
-            if k not in _PYTEST_ONLY}
-
-
-def retired_oracle_sql() -> dict[str, str]:
-    return {k: v for k, v in _all_oracle_sql().items() if k in _PYTEST_ONLY}
-
-
-def _all_oracle_sql() -> dict[str, str]:
     px = parse.parse_sql("line")
     provider_expr = "provider"
     fields = parse.all_fields(parse.DEFAULT_PATTERNS)
@@ -2011,16 +1259,6 @@ def _all_oracle_sql() -> dict[str, str]:
             WHERE r.parser IS NOT NULL
             GROUP BY s.source, bucket
         """,
-        "pipeline_routed_tokens_proof": f"""
-            WITH routed AS ({_routed_cte()}),
-                 seq AS ({fixtures.sequences_sql(N_FIXTURE)})
-            SELECT s.doc_id, r.route, s.n_tok,
-                   CAST(s.tokens[1] AS INTEGER) AS tok_first,
-                   CAST(s.tokens[-1] AS INTEGER) AS tok_last,
-                   CAST(list_aggregate(s.tokens, 'sum') AS BIGINT) AS tok_sum
-            FROM routed r JOIN seq s USING (doc_id)
-            WHERE r.parser IS NOT NULL
-        """,
         "pipeline_enrich_categories": f"""
             WITH parsed AS ({_parsed_cte()}),
                  dim AS ({fixtures.pattern_dict_sql()})
@@ -2049,144 +1287,9 @@ def _all_oracle_sql() -> dict[str, str]:
                      AS k_err
             FROM r
         """,
-        "sanitize_event_types": f"""
-            SELECT {sanitize.sanitize_sink_name_sql(
-                chr(39) + "Sink/" + chr(39) + " || event_type || ' V1'")} AS sink_name,
-                   count(*)::BIGINT AS n_rows
-            FROM events
-            GROUP BY sink_name
-        """,
-        "doc_exact_dedup": f"""
-            SELECT {textstats.fingerprint_sql('text')} AS fp,
-                   min(doc_id) AS doc_id,
-                   count(*)::BIGINT AS dup_count
-            FROM documents GROUP BY fp
-        """,
-        "doc_minhash": f"""
-            WITH sh AS (
-              SELECT doc_id, {dedup.shingle_hashes_sql('text')} AS hashes
-              FROM documents
-            )
-            SELECT doc_id,
-                   {dedup.minhash_signature_sql('hashes')[0]} AS mh_0,
-                   {dedup.minhash_signature_sql('hashes')[1]} AS mh_1,
-                   {dedup.minhash_signature_sql('hashes')[2]} AS mh_2,
-                   {dedup.minhash_signature_sql('hashes')[3]} AS mh_3
-            FROM sh
-        """,
-        "doc_simhash": f"""
-            WITH sh AS (
-              SELECT doc_id, {dedup.shingle_hashes_sql('text')} AS hashes
-              FROM documents
-            )
-            SELECT doc_id, {dedup.simhash_sql('hashes')} AS simhash FROM sh
-        """,
-        "doc_ngram_jaccard": f"""
-            WITH sh AS (
-              SELECT doc_id, {dedup.shingle_hashes_sql('text')} AS s
-              FROM documents WHERE doc_id < 50
-            )
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                   round(CASE WHEN len(list_distinct(a.s || b.s)) > 0
-                        THEN len(list_intersect(a.s, b.s))::DOUBLE
-                             / len(list_distinct(a.s || b.s))
-                        ELSE 0.0 END, 6) AS jaccard
-            FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1
-        """,
         "doc_winnow_candidates": dedup.winnow_candidates_sql(
             "documents", "text", "doc_id"),
-        "doc_minhash_candidates": dedup.minhash_candidates_sql(
-            "documents", "text", "doc_id"),
-        "doc_simhash_candidates": dedup.simhash_candidates_sql(
-            "documents", "text", "doc_id"),
-        "doc_dedup_groups": dedup.connected_components_sql(
-            dedup.minhash_candidates_sql("documents", "text", "doc_id"),
-            id_alias="doc_id"),
-        "doc_profile": _profiling.profile_table_sql(
-            "documents", ["doc_id", "lang", "source", "n_chars"]),
-        "vocab_topk": _vocab.vocab_topk_sql("documents", "text"),
-        "doc_bigram_coverage": _vocab.bigram_coverage_sql(
-            "documents", "text", "doc_id"),
-        "bpe_top_merges": _vocab.bpe_top_merges_sql("documents", "text"),
-        "emb_topk_cosine": """
-            SELECT e.vec_id,
-                   round(list_cosine_similarity(e.embedding::DOUBLE[],
-                                                q.embedding::DOUBLE[]), 6) AS cos_sim
-            FROM embeddings e, (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-            ORDER BY cos_sim DESC, e.vec_id LIMIT 10
-        """,
-        "emb_srp_buckets": f"""
-            SELECT {similarity.srp_signature_sql('embedding::DOUBLE[]', 64)} AS bucket,
-                   count(*)::BIGINT AS n_rows
-            FROM embeddings GROUP BY bucket
-        """,
-        "text_langid": f"""
-            SELECT doc_id, {textstats.lang_id_sql('text')} AS lang_pred
-            FROM documents
-        """,
-        "text_quality": f"""
-            SELECT doc_id,
-                   {textstats.quality_features_sql('text')['n_tokens']} AS n_tokens,
-                   {textstats.quality_features_sql('text')['punct_ratio']} AS punct_ratio,
-                   {textstats.quality_features_sql('text')['stopword_ratio']} AS stopword_ratio,
-                   {textstats.quality_score_sql('text')} AS quality_score
-            FROM documents
-        """,
-        "text_token_counts": f"""
-            SELECT doc_id,
-                   {textstats.token_count_ws_sql('text')} AS tok_ws,
-                   {textstats.token_count_bpe_sql('text')} AS tok_bpe,
-                   {textstats.fingerprint_sql('text')} AS fp
-            FROM documents
-        """,
-        # mm_features oracle assumes ASCII text (true for the synthetic
-        # corpus): bytes == code points.  byte_hist as its JSON string form
-        # (driver hashes can't take raw list cells).
-        "mm_features": """
-            SELECT doc_id,
-                   len(text) AS n_bytes,
-                   round(list_aggregate([ord(substr(text, i, 1))
-                                         FOR i IN range(1, len(text) + 1)],
-                                        'sum')::DOUBLE / len(text), 6) AS byte_mean,
-                   CAST(to_json([
-                     len(list_filter([ord(substr(text, i, 1))
-                                      FOR i IN range(1, len(text) + 1)],
-                                     c -> c // 64 = b))
-                     FOR b IN range(4)
-                   ]) AS VARCHAR) AS byte_hist
-            FROM documents
-        """,
-        "mm_frame_counts": """
-            SELECT doc_id,
-                   CAST(ceil(len(text) / 16.0) AS BIGINT) AS n_frames,
-                   CAST(list_aggregate([least(8, len(text) - o)
-                                        FOR o IN range(0, len(text), 16)],
-                                       'sum') AS BIGINT) AS frame_bytes
-            FROM documents
-        """,
-        "events_json_path": """
-            SELECT event_id, json_extract_string(props, '$.k') AS k_str
-            FROM events
-        """,
-        "emb_bucket_pairs": f"""
-            WITH sig AS (
-              SELECT vec_id,
-                     {similarity.srp_signature_sql('embedding::DOUBLE[]', 64)} AS bucket,
-                     embedding
-              FROM embeddings
-            )
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                   round(list_cosine_similarity(a.embedding::DOUBLE[],
-                                                b.embedding::DOUBLE[]), 6) AS cos_sim
-            FROM sig a JOIN sig b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-            WHERE round(list_cosine_similarity(a.embedding::DOUBLE[],
-                                               b.embedding::DOUBLE[]), 6) >= 0.1
-        """,
-        "seq_packing_offsets": _packing_sql(),
-        "seq_shard_manifest": _shard_manifest_sql(),
         "seq_exact_dedup": _seq_dedup_sql(),
-        "seq_token_contamination": _seq_contamination_sql(),
-        "events_value_anomalies": _anomalies_sql(),
         "corpus_training_batches": _training_batches_sql(),
         "doc_bpe_tokenize": _bpe_tokenize_sql(),
         "seq_chunk_windows": _chunk_windows_sql(),
@@ -2218,180 +1321,17 @@ def _all_oracle_sql() -> dict[str, str]:
         "doc_tokenizer_fertility": _tokenizer_fertility_sql(),
         "doc_dsir_sample": _dsir_sample_sql(),
         "seq_length_buckets": _length_buckets_sql(),
-        "seq_source_drift": _source_drift_sql(),
-        "seq_dup_gram_coverage": _dup_gram_coverage_sql(),
         "seq_gram_novelty": _gram_novelty_sql(),
         "seq_packed_segments": _packed_segments_sql(),
         "doc_gopher_rules": _gopher_rules_sql(),
-        "seq_sft_loss_mask": _sft_loss_mask_sql(),
-        "seq_corpus_datacard": _corpus_datacard_sql(),
-        "seq_packed_sft": _packed_sft_sql(),
-        "seq_temperature_mix": _temperature_mix_sql(),
         "seq_epoch_order": _epoch_order_sql(),
         "seq_balanced_writers": _balanced_writers_sql(),
         "seq_mixing_plan": _mixing_plan_sql(),
         "doc_quality_classifier": _quality_classifier_sql(),
         "doc_tokenize": _doc_tokenize_sql(),
         "doc_strip_boilerplate": _strip_boilerplate_sql(),
-        "doc_split_counts": _split_counts_sql(),
-        "doc_length_quantiles": """
-            SELECT source,
-                   round(quantile_cont(n_chars, 0.5), 6) AS p50,
-                   round(quantile_cont(n_chars, 0.9), 6) AS p90,
-                   round(quantile_cont(n_chars, 0.99), 6) AS p99
-            FROM documents GROUP BY source
-        """,
-        "events_nested_schema": _nested_schema_oracle(),
-        # IVF oracles recompute the deterministic centroids (8 smallest ids)
-        # in SQL; nearest-cell pick = ORDER BY sim DESC, cell ASC == the
-        # engine's strictly-greater first-wins fold.
-        "emb_ivf_cells": """
-            WITH cents AS (
-              SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, embedding
-              FROM (SELECT * FROM embeddings ORDER BY vec_id LIMIT 8)
-            ),
-            assign AS (
-              SELECT e.vec_id, c.cell,
-                     row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY round(list_cosine_similarity(
-                           e.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) DESC,
-                         c.cell ASC) AS rn
-              FROM embeddings e CROSS JOIN cents c
-            )
-            SELECT cell, count(*)::BIGINT AS n_rows
-            FROM assign WHERE rn = 1 GROUP BY cell
-        """,
-        # One Lloyd iteration recomputed in SQL: seed assignment -> per-cell
-        # per-dimension means (rounded 6 dp, same as the engine) -> second
-        # assignment with the trained centroids.  dim=64 is the embeddings
-        # fixture width (TESTDATA.md).
-        "emb_ivf_cells_trained": """
-            WITH cents0 AS (
-              SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, embedding
-              FROM (SELECT * FROM embeddings ORDER BY vec_id LIMIT 8)
-            ),
-            assign0 AS (
-              SELECT e.vec_id, c.cell,
-                     row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY round(list_cosine_similarity(
-                           e.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) DESC,
-                         c.cell ASC) AS rn
-              FROM embeddings e CROSS JOIN cents0 c
-            ),
-            member AS (SELECT vec_id, cell FROM assign0 WHERE rn = 1),
-            means AS (
-              SELECT m.cell, g.i AS pos,
-                     round(avg(e.embedding[g.i]::DOUBLE), 6) AS mval
-              FROM member m JOIN embeddings e USING (vec_id)
-              CROSS JOIN (SELECT unnest(range(1, 65)) AS i) g
-              GROUP BY m.cell, g.i
-            ),
-            cents1 AS (
-              SELECT c0.cell, coalesce(c1.emb, c0.embedding::DOUBLE[]) AS emb
-              FROM cents0 c0 LEFT JOIN (
-                SELECT cell, list(mval ORDER BY pos) AS emb
-                FROM means GROUP BY cell
-              ) c1 USING (cell)
-            ),
-            assign1 AS (
-              SELECT e.vec_id, c.cell,
-                     row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY round(list_cosine_similarity(
-                           e.embedding::DOUBLE[], c.emb), 6) DESC,
-                         c.cell ASC) AS rn
-              FROM embeddings e CROSS JOIN cents1 c
-            )
-            SELECT cell, count(*)::BIGINT AS n_rows
-            FROM assign1 WHERE rn = 1 GROUP BY cell
-        """,
-        "emb_ivf_topk": """
-            WITH cents AS (
-              SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, embedding
-              FROM (SELECT * FROM embeddings ORDER BY vec_id LIMIT 8)
-            ),
-            q AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
-            probe AS (
-              SELECT c.cell FROM cents c, q
-              ORDER BY round(list_cosine_similarity(
-                  c.embedding::DOUBLE[], q.embedding::DOUBLE[]), 6) DESC, c.cell
-              LIMIT 2
-            ),
-            assign AS (
-              SELECT e.vec_id, c.cell,
-                     row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY round(list_cosine_similarity(
-                           e.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) DESC,
-                         c.cell ASC) AS rn
-              FROM embeddings e CROSS JOIN cents c
-            )
-            SELECT a.vec_id, a.cell,
-                   round(list_cosine_similarity(
-                       e.embedding::DOUBLE[], q.embedding::DOUBLE[]), 6) AS cos_sim
-            FROM assign a
-            JOIN embeddings e ON a.vec_id = e.vec_id, q
-            WHERE a.rn = 1 AND a.cell IN (SELECT cell FROM probe)
-            ORDER BY cos_sim DESC, a.vec_id LIMIT 10
-        """,
-        "text_repetition": _curation_repetition_oracle(),
-        "doc_passage_dedup": _curation_passage_oracle(),
-        "doc_contamination": _curation_contamination_oracle(),
-        "events_pii_redact": _curation_pii_oracle(),
-        "doc_stratified_sample": _stratified_sample_oracle(),
-        "doc_quality_topk": _quality_topk_oracle(),
-        "doc_token_budget_mix": _token_budget_oracle(),
         "corpus_curation_pipeline": _curation_pipeline_oracle(),
     }
-
-
-def _curation_repetition_oracle() -> str:
-    from ulp_spark.operators import curation
-
-    sig = curation.repetition_signals_sql("text")
-    cols = ", ".join(f"{v} AS {k}" for k, v in sig.items())
-    return f"SELECT doc_id, {cols} FROM documents"
-
-
-def _curation_passage_oracle() -> str:
-    from ulp_spark.operators import curation
-
-    return curation.passage_dup_stats_sql("documents", "text", "doc_id")
-
-
-def _curation_contamination_oracle() -> str:
-    from ulp_spark.operators import curation, sampling
-
-    pred = f"{sampling.hash_bucket_sql('doc_id', 100)} < {_EVAL_PCT}"
-    inner = curation.contamination_sql("documents", "text", "doc_id", pred)
-    return (f"SELECT doc_id, is_contaminated::INT AS is_contaminated "
-            f"FROM ({inner})")
-
-
-def _curation_pii_oracle() -> str:
-    from ulp_spark.operators import curation
-
-    line = ("(event_type || ' u' || CAST(user_id AS VARCHAR) "
-            "|| '@example.com from 10.' || CAST(user_id % 256 AS VARCHAR) "
-            "|| '.' || CAST(event_id % 256 AS VARCHAR) || '.7')")
-    red, counts = curation.redact_sql(line)
-    count_cols = ", ".join(f"{v}::BIGINT AS n_{k}" for k, v in counts.items())
-    return f"SELECT event_id, {red} AS redacted, {count_cols} FROM events"
-
-
-def _quality_topk_oracle() -> str:
-    from ulp_spark.operators import curation
-
-    return curation.quality_topk_sql("documents", "text", "doc_id", "source")
-
-
-def _token_budget_oracle() -> str:
-    from ulp_spark.operators import curation
-
-    return curation.token_budget_mix_sql("documents", "text", "doc_id",
-                                         "source", budget=_TOKEN_BUDGET)
 
 
 def _curation_pipeline_oracle() -> str:
@@ -2416,10 +1356,3 @@ def _curation_pipeline_oracle() -> str:
     """
 
 
-def _stratified_sample_oracle() -> str:
-    from ulp_spark.operators import sampling
-
-    keep = sampling.stratified_keep_sql("doc_id", "lang", _STRAT_RATES)
-    return (f"SELECT lang, count(*)::BIGINT AS n_total, "
-            f"sum(({keep})::INT)::BIGINT AS n_kept "
-            f"FROM documents GROUP BY lang")

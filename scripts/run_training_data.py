@@ -7,9 +7,10 @@ the engine, as scripts/run_pipeline.py is for the parse side):
 
 Chain: deterministic pre-tokenized corpus (fixtures.sequences: doc_id,
 tokens, n_tok, source) -> exact sequence dedup on token fingerprints
-(census form: survivor + n_tok ride one aggregate) -> temperature mixing
-plan (printed) -> the survivors' full rows, token arrays included,
-written as shard-partitioned parquet via sharding.write_shards (manifest
+(tokens.sequence_exact_dedup: the min doc_id survives) -> the survivors'
+own rows -> temperature mixing plan over them (printed) -> the same
+rows, token arrays included, written as shard-partitioned parquet via
+sharding.write_shards (manifest
 aggregated from the in-hand frame) -> data-loader resume position for a
 sample checkpoint.  The last line reports the manifest's token total.  Every stage is the same code
 the oracle-gated queries run; this script exists so the whole chain is
@@ -46,21 +47,18 @@ def main() -> None:
     t0 = time.perf_counter()
     seq = fixtures.sequences(spark, args.n)
 
-    # exact dedup, census form: one aggregate yields survivor id + n_tok
-    surv = seam(
-        seq.groupBy(tokens.token_fingerprint(F.col("tokens")).alias("fp"))
-        .agg(F.min("doc_id").alias("doc_id"), F.min("n_tok").alias("n_tok"),
-             F.min("source").alias("source")))
+    surv = seam(tokens.sequence_exact_dedup(seq, "tokens", "doc_id"))
     n_in, n_surv = seq.count(), surv.count()
+    # each survivor's own row: its tokens are credited to its own source
+    rows = seq.select("doc_id", "tokens", "n_tok", "source") \
+        .join(surv.select("doc_id"), "doc_id", "left_semi")
 
-    plan = tokens.source_mixing_plan(surv, budget=args.n * 200)
+    plan = tokens.source_mixing_plan(rows, budget=args.n * 200)
     print("mixing plan:")
     for r in plan.collect():
         print(f"  {r.source}: n_tokens={r.n_tokens} "
               f"epochs={r.n_epochs} tail={r.tail_frac}")
 
-    rows = seq.select("doc_id", "tokens", "n_tok", "source") \
-        .join(surv.select("doc_id"), "doc_id", "left_semi")
     manifest = sharding.write_shards(
         rows, f"{args.out}/shards", shard_tokens=args.shard_tokens)
     n_shards, n_tokens = manifest.agg(

@@ -1,6 +1,7 @@
-"""Mimics the driver's CORRECTNESS gate: run each __spark_entry__ query and
-its DuckDB oracle side-by-side at sf0.01, compare row multisets exactly
-(column order normalized by name, NULLs included)."""
+"""Mimics the driver's CORRECTNESS gate: run each __spark_entry__ query,
+and each parity case of parity_queries.py, and its DuckDB oracle
+side-by-side at sf0.01, compare row multisets exactly (column order
+normalized by name, NULLs included)."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+import parity_queries
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = ["events", "documents", "embeddings"]
@@ -42,16 +44,17 @@ def test_driver_gate_capacity():
     must get a verdict (round-2 lesson: 55 queries -> 5 silently ungated)."""
     active = entrymod.queries()
     assert len(active) <= 50
-    assert set(entrymod.oracle_sql()) <= set(active)
-    # retired queries stay out of the driver surface but keep their oracles
-    assert not (set(entrymod.retired_queries()) & set(active))
+    assert set(entrymod.oracle_sql()) == set(active)
+    # the test-side parity cases stay off the driver surface
+    assert set(parity_queries.oracle_sql()) == set(parity_queries.queries())
+    assert not (set(parity_queries.queries()) & set(active))
 
 
 @pytest.mark.parametrize(
-    "name", list(entrymod.queries()) + list(entrymod.retired_queries()))
+    "name", list(entrymod.queries()) + list(parity_queries.queries()))
 def test_query_matches_oracle(spark, con, name):
-    q = {**entrymod.queries(), **entrymod.retired_queries()}[name]
-    osql = {**entrymod.oracle_sql(), **entrymod.retired_oracle_sql()}[name]
+    q = {**entrymod.queries(), **parity_queries.queries()}[name]
+    osql = {**entrymod.oracle_sql(), **parity_queries.oracle_sql()}[name]
     df = q(spark, SF_DIR)
     got_cols = [c.lower() for c in df.columns]
     got = _rows(got_cols, [tuple(r) for r in df.collect()])

@@ -34,8 +34,8 @@ citations).  This package re-expresses that DAG as declarative PySpark:
 Everything is DataFrame-first: Catalyst handles pushdown/pruning/broadcast.
 The driver builds plans (mostly SQL text) and reads a few small collects;
 executor-side Python is a few Arrow-batched stages: the IPv6 cast's pandas
-UDF and the ``mapInPandas`` bodies of ``bpe_tokenize``, ``pack_bins``, the
-JSON type-tree fold and the multimodal kernels.  Driver-side tables (the
+UDF and the ``mapInPandas`` bodies of ``bpe_tokenize``, ``pack_bins`` and
+the JSON type-tree fold.  Driver-side tables (the
 broadcast dimensions, query and checkpoint lists) enter a plan as JVM
 ``LocalRelation`` frames through :func:`ulp_spark.session.local_frame`,
 never as a Python RDD; ``test_no_python_local_frames`` (in

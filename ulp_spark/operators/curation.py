@@ -1,6 +1,6 @@
 """Corpus-curation operators for training-data pipelines: Gopher-style
-repetition signals, passage-level dedup, benchmark decontamination, and
-PII redaction.
+repetition signals, passage-level dedup, PII redaction and boilerplate
+removal.
 
 These are the filters an LLM data pipeline runs AFTER parsing and BEFORE
 tokenization (reference analog: the per-record enrich/filter stage of the
@@ -10,9 +10,8 @@ Design rules, same as textstats/dedup:
 * per-document signals are pure Column expressions over the token ARRAY
   (higher-order functions) — zero shuffle, whole-stage codegen, O(n·k)
   per row; at 100 TB they run at scan speed.
-* corpus-global signals (passage dup counts, contamination) shuffle ONLY
-  on the content key (passage hash / n-gram), never all-pairs; the eval
-  side of decontamination is broadcast (benchmark suites are tiny).
+* corpus-global signals (passage dup counts, boilerplate) shuffle ONLY
+  on the content key (passage hash), never all-pairs.
 * every op has a DuckDB SQL twin producing identical values, so each is
   oracle-gated.
 
@@ -30,10 +29,8 @@ from ulp_spark.operators.textstats import SPLIT_WS
 from ulp_spark.session import seam
 
 PASSAGE_WORDS = 8          # words per dedup passage
-CONTAM_GRAM = 5            # words per decontamination n-gram
 BOILER_MIN_DOCS = 2        # distinct docs that make a passage boilerplate
 ROUND = 6                  # decimal places for ratio outputs
-QUALITY_TOPK = 3           # documents quality_topk keeps per group
 
 
 # --------------------------------------------------------------------------
@@ -42,7 +39,7 @@ QUALITY_TOPK = 3           # documents quality_topk keeps per group
 
 def word_tokens(text: Column) -> Column:
     """Lowercased whitespace tokens; empty/blank text -> empty array
-    (same emptiness rule as textstats.token_count_ws)."""
+    (same emptiness rule as textstats.token_count_ws_sql)."""
     t = F.trim(F.lower(text))
     return F.when(F.length(t) == 0, F.array().cast("array<string>")) \
             .otherwise(F.split(t, SPLIT_WS))
@@ -283,68 +280,6 @@ def passage_dup_stats_sql(table: str, text_col: str, id_col: str) -> str:
 
 
 # --------------------------------------------------------------------------
-# benchmark decontamination (n-gram overlap vs a held-out eval split)
-# --------------------------------------------------------------------------
-
-def contamination_flags(
-    df: DataFrame, text_col: str, id_col: str, eval_pred: Column,
-) -> DataFrame:
-    """Flag train docs sharing any word ``CONTAM_GRAM``-gram with the
-    eval split.
-
-    The standard decontamination shape (GPT-3 App. C / PaLM §6.1-style
-    n-gram overlap): build the eval split's distinct n-gram set, mark any
-    training document containing one. ``eval_pred`` is a boolean Column
-    over ``df``'s rows selecting the eval side (derive it from
-    sampling.hash_bucket for engine-portable determinism).
-
-    Scale shape: the eval set is a benchmark suite — tiny next to 100 TB —
-    so its distinct grams broadcast, and the train side is a broadcast
-    LEFT SEMI join on the exploded grams: no shuffle of the corpus, and
-    the explode is pre-aggregated back to one row per doc. Returns
-    (id, is_contaminated) for TRAIN docs only.
-    """
-    # token array staged first: word_grams re-evaluates a non-attribute
-    # tokens expression per gram (the reused-expression trap, r6)
-    sides = df.select(
-        F.col(id_col), eval_pred.alias("is_eval"),
-        word_tokens(F.col(text_col)).alias("__toks"),
-    ).select(F.col(id_col), F.col("is_eval"),
-             F.explode(word_grams(F.col("__toks"), CONTAM_GRAM)).alias("gram"))
-    eval_grams = sides.filter("is_eval").select("gram").distinct()
-    train = sides.filter(~F.col("is_eval"))
-    hits = (
-        train.join(F.broadcast(eval_grams), "gram", "left_semi")
-        .select(id_col).distinct()
-        .withColumn("is_contaminated", F.lit(True))
-    )
-    train_ids = df.filter(~eval_pred).select(id_col)
-    return train_ids.join(hits, id_col, "left").fillna(
-        False, subset=["is_contaminated"])
-
-
-def contamination_sql(
-    table: str, text_col: str, id_col: str, eval_pred_sql: str,
-) -> str:
-    toks = word_tokens_sql(text_col)
-    return f"""
-        WITH g AS (
-            SELECT {id_col}, ({eval_pred_sql}) AS is_eval,
-                   unnest({word_grams_sql(toks, CONTAM_GRAM)}) AS gram
-            FROM {table}
-        ),
-        ev AS (SELECT DISTINCT gram FROM g WHERE is_eval),
-        hits AS (
-            SELECT DISTINCT {id_col} FROM g
-            WHERE NOT is_eval AND gram IN (SELECT gram FROM ev)
-        )
-        SELECT t.{id_col},
-               (t.{id_col} IN (SELECT {id_col} FROM hits)) AS is_contaminated
-        FROM {table} t WHERE NOT ({eval_pred_sql})
-    """
-
-
-# --------------------------------------------------------------------------
 # PII redaction (regex scrub, per row, zero shuffle)
 # --------------------------------------------------------------------------
 
@@ -379,104 +314,6 @@ def redact_sql(text: str) -> tuple[str, dict[str, str]]:
         counts[name] = f"len(regexp_extract_all({out}, '{sp}'))"
         out = f"regexp_replace({out}, '{sp}', '{sr}', 'g')"
     return out, counts
-
-
-# --------------------------------------------------------------------------
-# selection & mixing (per-group top-k, token-budget selection)
-# --------------------------------------------------------------------------
-
-def quality_topk(
-    df: DataFrame, text_col: str, id_col: str, group_col: str,
-) -> DataFrame:
-    """Top-``QUALITY_TOPK`` documents per group by quality score (ties ->
-    smaller id).
-
-    The curation "select best exemplars per domain" move: one shuffle on
-    the group key, per-partition row_number — never a global sort. At
-    100 TB the group cardinality (domains/sources) bounds state, and
-    row_number over (group) is streaming-friendly within each partition.
-    """
-    from ulp_spark.operators import textstats
-
-    q = textstats.quality_score(F.col(text_col))
-    w = Window.partitionBy(group_col).orderBy(
-        F.desc("q"), F.asc(id_col))
-    return (
-        df.select(group_col, id_col, q.alias("q"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= QUALITY_TOPK)
-    )
-
-
-def quality_topk_sql(
-    table: str, text_col: str, id_col: str, group_col: str,
-) -> str:
-    from ulp_spark.operators import textstats
-
-    q = textstats.quality_score_sql(text_col)
-    return f"""
-        WITH scored AS (
-            SELECT {group_col}, {id_col}, {q} AS q FROM {table}
-        )
-        SELECT {group_col}, {id_col}, q,
-               row_number() OVER (PARTITION BY {group_col}
-                                  ORDER BY q DESC, {id_col}) AS rank
-        FROM scored
-        QUALIFY rank <= {QUALITY_TOPK}
-    """
-
-
-def token_budget_mix(
-    df: DataFrame, text_col: str, id_col: str, group_col: str, budget: int,
-) -> DataFrame:
-    """Data mixing under a per-group token budget: walk each group in
-    ``id_col`` order, keep documents while the running token total stays
-    within ``budget``; report kept doc/token counts per group.
-
-    The prefix-sum is a per-group window (one shuffle on the group key);
-    it deliberately does NOT reuse packing.global_cumsum's two-phase
-    global form because the budget is per group — a group's prefix sum
-    is local to its partition after the shuffle. Skewed groups are the
-    risk at 100 TB; the filter (cum <= budget) prunes everything past
-    the budget, so cap-first-then-window (range-filter on a cheap doc
-    count) is the escalation.
-    """
-    from ulp_spark.operators import textstats
-
-    tok = textstats.token_count_ws(F.col(text_col))
-    w = (Window.partitionBy(group_col).orderBy(id_col)
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    cum = F.sum(tok).over(w)
-    kept = (cum <= budget).cast("int")
-    return (
-        df.select(F.col(group_col), tok.alias("n_tok"), kept.alias("kept"))
-        .groupBy(group_col)
-        .agg(F.sum("kept").cast("bigint").alias("n_kept"),
-             F.sum(F.col("kept") * F.col("n_tok")).cast("bigint")
-              .alias("tokens_kept"))
-    )
-
-
-def token_budget_mix_sql(
-    table: str, text_col: str, id_col: str, group_col: str, budget: int,
-) -> str:
-    from ulp_spark.operators import textstats
-
-    tok = textstats.token_count_ws_sql(text_col)
-    return f"""
-        WITH cum AS (
-            SELECT {group_col}, {tok} AS n_tok,
-                   (sum({tok}) OVER (PARTITION BY {group_col}
-                                     ORDER BY {id_col}
-                                     ROWS UNBOUNDED PRECEDING)
-                    <= {budget})::INT AS kept
-            FROM {table}
-        )
-        SELECT {group_col},
-               sum(kept)::BIGINT AS n_kept,
-               sum(kept * n_tok)::BIGINT AS tokens_kept
-        FROM cum GROUP BY {group_col}
-    """
 
 
 # --------------------------------------------------------------------------

@@ -3,11 +3,11 @@
 Not present in the reference (its "dedup" is at most idempotent re-ingest);
 these are the standard large-corpus techniques, each expressed Spark-first:
 
-* exact          — hash-groupBy, keep deterministic survivor (min doc_id)
 * minhash + LSH  — shingle -> 32-bit hash -> k minhashes -> b bands ->
                    bucket-join candidates -> verified Jaccard
-* simhash        — per-bit majority vote over shingle hashes
-* n-gram Jaccard — array_intersect/union on distinct shingle sets
+* winnowing      — positional k-gram hashes -> window minima ->
+                   shared-fingerprint candidates
+* clustering     — connected components over the candidate pairs
 
 Scale notes (the design constraints, not this box):
 * everything is expression-only until the LSH bucket self-join; that join
@@ -38,24 +38,10 @@ HASHES: list[tuple[int, int]] = [
     (1000003 + 2 * i, 998244353 % P + 7 * i) for i in range(16)
 ]
 BANDS, ROWS_PER_BAND = 4, 4  # 16 = BANDS * ROWS_PER_BAND
-SIMHASH_BITS = 16
 MAX_BUCKET = 1000     # skew cap: larger LSH buckets / postings form no pairs
 JACCARD_MIN = 0.8     # verified near-dup threshold on shingle sets
 WINNOW_W = 8          # winnowing window, in k-grams
 WINNOW_MIN_SHARED = 2  # fingerprints a winnow candidate pair must share
-SIMHASH_MAX_HAMMING = 3  # simhash near-dup bound, in differing bits
-
-
-# --------------------------------------------------------------------------
-# exact
-# --------------------------------------------------------------------------
-
-def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
-    """One survivor per duplicate group: the min id (deterministic)."""
-    return (
-        df.groupBy(*key_cols)
-        .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("dup_count"))
-    )
 
 
 # --------------------------------------------------------------------------
@@ -81,11 +67,10 @@ def _grams_sql(text: str) -> str:
     )
 
 
-
 def _md5_bigint(col: Column, start: int = 1) -> Column:
     """32 bits of md5 as a bigint (hex chars [start, start+8)) — THE hash
-    fold shared by shingles, simhash64 halves, and (as a SQL twin pattern)
-    sampling.hash_bucket; change it here and in every *_sql twin together."""
+    fold shared by shingles and (as a SQL twin pattern) sampling.hash_bucket;
+    change it here and in every *_sql twin together."""
     return F.conv(F.substring(F.md5(col), start, 8), 16, 10).cast("bigint")
 
 
@@ -196,9 +181,9 @@ def minhash_candidates_from_hashes(
     # `hashes` expression (md5/shingle derivation) in EVERY one of the 16
     # mh_j columns, and Catalyst does not CSE across higher-order
     # transforms — measured 54 s inline vs 5.4 s staged for 20k token
-    # sequences on local[8] (guide §4 helper-column discipline, the same
-    # rule simhash64's docstring records).  Values are identical: the
-    # permutations read the attribute instead of re-deriving it.
+    # sequences on local[8] (guide §4 helper-column discipline).  Values
+    # are identical: the permutations read the attribute instead of
+    # re-deriving it.
     hdf = df.select(F.col(id_col).alias("id"), hashes.alias("__h"))
     sig = hdf.select("id", *minhash_signature(F.col("__h")))
     sig = sig.select("id", *band_keys([F.col(f"mh_{j}") for j in range(len(HASHES))]))
@@ -255,146 +240,16 @@ def minhash_candidates_from_hashes_sql(
     """
 
 
-def jaccard(a: Column, b: Column) -> Column:
-    """|A∩B| / |A∪B| over distinct-element arrays."""
-    inter = F.size(F.array_intersect(a, b))
-    union = F.size(F.array_union(a, b))
-    return F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
-
-
 def jaccard_distinct(a: Column, b: Column) -> Column:
-    """:func:`jaccard` for arrays KNOWN to be duplicate-free (shingle-hash
-    sets are ``array_distinct``-built): |A∪B| = |A|+|B|-|A∩B| by
-    inclusion-exclusion, so the union hash-set build (the more expensive
-    half of the pair verify — it re-inserts every element of both sides)
-    is replaced by integer arithmetic.  Identical values on distinct
-    inputs; do NOT use on arrays that may carry duplicates."""
+    """Jaccard |A∩B| / |A∪B| (0.0 for two empty sets) of arrays KNOWN to
+    be duplicate-free (shingle-hash sets are ``array_distinct``-built):
+    |A∪B| = |A|+|B|-|A∩B| by inclusion-exclusion, so the union hash-set
+    build (the more expensive half of the pair verify — it re-inserts
+    every element of both sides) is replaced by integer arithmetic.  Do
+    NOT use on arrays that may carry duplicates."""
     inter = F.size(F.array_intersect(a, b))
     union = F.size(a) + F.size(b) - inter
     return F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
-
-
-# --------------------------------------------------------------------------
-# simhash
-# --------------------------------------------------------------------------
-
-def simhash(hashes: Column, bits: int = SIMHASH_BITS) -> Column:
-    """Per-bit majority vote over the shingle hash set -> int signature."""
-    total = F.size(hashes)
-    sig = F.lit(0)
-    for i in range(bits):
-        ones = F.size(F.filter(hashes, lambda h: h.bitwiseAND(F.lit(1 << i)) != 0))
-        sig = sig + F.when(ones * 2 > total, F.lit(1 << i)).otherwise(F.lit(0))
-    return sig
-
-
-def simhash_sql(hashes_expr: str, bits: int = SIMHASH_BITS) -> str:
-    terms = []
-    for i in range(bits):
-        terms.append(
-            f"CASE WHEN 2 * len(list_filter({hashes_expr}, h -> (h & {1 << i}) != 0)) "
-            f"> len({hashes_expr}) THEN {1 << i} ELSE 0 END"
-        )
-    return "(" + " + ".join(terms) + ")"
-
-
-# --------------------------------------------------------------------------
-# 64-bit simhash + Hamming-banded candidate join (production shape:
-# 64 bits, Hamming <= 3, 4 x 16-bit bands — any pair within distance 3
-# shares at least one exact band by pigeonhole)
-# --------------------------------------------------------------------------
-
-def simhash64(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """64-bit simhash as two 32-bit halves (lo = md5 hex 1-8, hi = 9-16).
-
-    Two halves instead of one 64-bit int: the hex16->int64 fold overflows
-    signed range, and two 32-bit majority votes ARE the 64-bit simhash of
-    the concatenated hash.  Hash arrays are materialized as real columns
-    before the 2x32 per-bit vote expressions so the vote cascade references
-    attributes, not re-inlined md5 transforms (casts.helper_columns rule).
-    """
-    g = df.select(F.col(id_col).alias("id"), _grams(F.col(text_col)).alias("g"))
-    h = g.select(
-        "id",
-        F.transform("g", lambda x: _md5_bigint(x, 1)).alias("lo_h"),
-        F.transform("g", lambda x: _md5_bigint(x, 9)).alias("hi_h"),
-    )
-    return h.select(
-        "id",
-        simhash(F.col("lo_h"), bits=32).alias("sim_lo"),
-        simhash(F.col("hi_h"), bits=32).alias("sim_hi"),
-    )
-
-
-def simhash64_sql(table: str, text_col: str, id_col: str) -> str:
-    """DuckDB twin of :func:`simhash64` (returns a full SELECT)."""
-    return f"""
-    WITH g AS (
-      SELECT {id_col} AS id, {_grams_sql(text_col)} AS grams FROM {table}
-    ),
-    h AS (
-      SELECT id,
-        [CAST(('0x' || substr(md5(x), 1, 8)) AS BIGINT) FOR x IN grams] AS lo_h,
-        [CAST(('0x' || substr(md5(x), 9, 8)) AS BIGINT) FOR x IN grams] AS hi_h
-      FROM g
-    )
-    SELECT id, {simhash_sql('lo_h', 32)} AS sim_lo,
-               {simhash_sql('hi_h', 32)} AS sim_hi
-    FROM h
-    """
-
-
-def simhash_candidates(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Near-dup pairs by 64-bit simhash: 4x16-bit band collision candidates
-    from :func:`_bucket_pairs`, verified with the exact Hamming distance
-    (``bit_count(xor)``).  Returns (id_a, id_b, hamming <=
-    SIMHASH_MAX_HAMMING).
-    """
-    sig = simhash64(df, text_col, id_col)
-    lo, hi = F.col("sim_lo"), F.col("sim_hi")
-    band_vals = [lo.bitwiseAND(F.lit(65535)), F.shiftright(lo, 16),
-                 hi.bitwiseAND(F.lit(65535)), F.shiftright(hi, 16)]
-    bands = sig.select(
-        "id", "sim_lo", "sim_hi",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"), v.alias("bk"))
-            for b, v in enumerate(band_vals)
-        ])).alias("e"),
-    ).select("id", "sim_lo", "sim_hi", "e.band", "e.bk")
-    ham = (F.bit_count(F.col("sim_lo_a").bitwiseXOR(F.col("sim_lo_b")))
-           + F.bit_count(F.col("sim_hi_a").bitwiseXOR(F.col("sim_hi_b"))))
-    pairs = (
-        _bucket_pairs(bands, ["band", "bk"], MAX_BUCKET,
-                      payload=("sim_lo", "sim_hi"))
-        .select("id_a", "id_b", ham.cast("int").alias("hamming"))
-        .distinct()
-    )
-    return pairs.filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
-
-
-def simhash_candidates_sql(table: str, text_col: str, id_col: str) -> str:
-    """DuckDB twin of :func:`simhash_candidates`."""
-    band_vals = ["sim_lo & 65535", "sim_lo >> 16", "sim_hi & 65535", "sim_hi >> 16"]
-    bands_sel = " UNION ALL ".join(
-        f"SELECT id, sim_lo, sim_hi, {b} AS band, {v} AS bk FROM s"
-        for b, v in enumerate(band_vals)
-    )
-    return f"""
-    WITH s AS ({simhash64_sql(table, text_col, id_col)}),
-    bands AS ({bands_sel}),
-    ok AS (
-      SELECT band, bk FROM bands GROUP BY band, bk
-      HAVING count(*) > 1 AND count(*) <= {MAX_BUCKET}
-    ),
-    pairs AS (
-      SELECT DISTINCT a.id AS id_a, b.id AS id_b,
-        CAST(bit_count(xor(a.sim_lo, b.sim_lo))
-             + bit_count(xor(a.sim_hi, b.sim_hi)) AS INTEGER) AS hamming
-      FROM bands a JOIN ok USING (band, bk)
-      JOIN bands b ON a.band = b.band AND a.bk = b.bk AND a.id < b.id
-    )
-    SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= {SIMHASH_MAX_HAMMING}
-    """
 
 
 # --------------------------------------------------------------------------
@@ -555,7 +410,7 @@ def _winnow_from_hashes(h: Column) -> Column:
     (:func:`_positional_hashes`), distinct + sorted.  The winnowing
     guarantee (SIGMOD 2003, thm 2): two documents sharing any substring
     of length >= w + k - 1 share at least one fingerprint — a
-    DETERMINISTIC recall floor, where minhash/simhash recall is
+    DETERMINISTIC recall floor, where minhash recall is
     probabilistic.  Density is ~2/(w+1) of positions, so the
     posting table is ~an order smaller than full k-gram indexing.
 

@@ -129,39 +129,6 @@ def global_cumsum(
     )
 
 
-def packing_offsets(df: DataFrame) -> DataFrame:
-    """Per document (``doc_id``, ``n_tok``), in doc_id order: global
-    start offset, first chunk id, and how many ``CHUNK``-token training
-    sequences it touches."""
-    out = global_cumsum(df, "doc_id", "n_tok", out_col="tok_offset")
-    start, length = F.col("tok_offset"), F.col("n_tok").cast("bigint")
-    first = F.floor(start / CHUNK)
-    last = F.floor((start + length - 1) / CHUNK)
-    return out.select(
-        "doc_id", "n_tok", "tok_offset",
-        first.cast("bigint").alias("first_chunk"),
-        (last - first + 1).cast("bigint").alias("n_chunks"),
-    )
-
-
-def packing_offsets_sql(table: str) -> str:
-    """DuckDB twin: plain window cumsum (single node — the point of the
-    Spark version is precisely NOT doing it this way)."""
-    return f"""
-    WITH c AS (
-      SELECT doc_id, n_tok,
-             (sum(n_tok) OVER (ORDER BY doc_id)
-              - n_tok)::BIGINT AS tok_offset
-      FROM {table}
-    )
-    SELECT doc_id, n_tok, tok_offset,
-           CAST(floor(tok_offset / {CHUNK}) AS BIGINT) AS first_chunk,
-           CAST(floor((tok_offset + n_tok - 1) / {CHUNK})
-                - floor(tok_offset / {CHUNK}) + 1 AS BIGINT) AS n_chunks
-    FROM c
-    """
-
-
 # --------------------------------------------------------------------------
 # doc-boundary-respecting bin packing (no document ever split)
 # --------------------------------------------------------------------------
@@ -171,9 +138,7 @@ def pack_bins(
 ) -> DataFrame:
     """Assign each ``(doc_id, n_tok)`` document to exactly one
     ``capacity``-token training bin WITHOUT splitting any document — the
-    sample-packing form (Megatron/T5-style) complementary to
-    packing_offsets, which packs the token STREAM and splits documents at
-    chunk boundaries.
+    sample-packing form (Megatron/T5-style).
 
     Two-level scheme: documents hash deterministically into ``buckets``
     groups (xxhash64 of the id — independent of input partitioning), and
@@ -301,13 +266,13 @@ def pack_sequences(
     invariants (flatten length == sum n_tok, starts == exclusive prefix
     sums, every doc exactly once) are pinned in pytest instead.
 
-    ``extra_array_cols`` packs ADDITIONAL per-document arrays (e.g. the
-    sft_loss_mask output) positionally alongside the tokens: each named
+    ``extra_array_cols`` packs ADDITIONAL per-document arrays (e.g. an
+    SFT loss mask) positionally alongside the tokens: each named
     column is concatenated in the SAME ascending-id order, so
     out[extra][p] annotates out[tokens][p] exactly — the packed-SFT
     recipe (mask the docs, pack once, train on the packed pair).
     Callers must guarantee each extra array is length-aligned with its
-    document's tokens (sft_loss_mask output is by construction).
+    document's tokens.
     """
     extras = list(extra_array_cols or [])
     j = seq.select("doc_id", "tokens", *extras).join(
@@ -358,7 +323,7 @@ def length_bucket_stats(df: DataFrame) -> DataFrame:
     Scale shape: one map-side bucket expression + one groupBy(bucket) —
     a dozen-row aggregate with map-side combine; no joins, no windows.
     Rows with NULL or non-positive length are excluded by contract
-    (report them via profiling, don't fold them into padding math).
+    (report them separately, don't fold them into padding math).
     """
     n = F.col("n_tok").cast("bigint")
     # double log2/pow CAN misround near exact powers of two; the two
@@ -463,28 +428,20 @@ def pack_segments(packed: DataFrame) -> DataFrame:
 
 def bucket_pack_segments_sql(
     table: str, id_col: str, tokens_col: str, buckets_expr: str,
-    extra_array_cols: list[str] | None = None,
 ) -> str:
     """DuckDB twin of the RELATIONAL packing composition the oracle
     query runs: assign bin_id = ``buckets_expr`` (a deterministic hash
     bucket), concatenate each bin's documents in ascending id order,
     derive doc_starts as the exclusive prefix sum of lengths (a plain
     window — the oracle may be single-node), then emit the same linear
-    segment_ids / pos_in_doc arrays as :func:`pack_segments`.
-    ``extra_array_cols`` mirrors pack_sequences': each extra array is
-    flattened in the same id order beside the tokens."""
-    extras = list(extra_array_cols or [])
-    ex_b = "".join(f", {c}" for c in extras)
-    ex_g = "".join(
-        f", flatten(list({c} ORDER BY {id_col})) AS {c}" for c in extras)
-    ex_o = "".join(f", {c}" for c in extras)
+    segment_ids / pos_in_doc arrays as :func:`pack_segments`."""
     return f"""
         WITH b AS (
-          SELECT {buckets_expr} AS bin_id, {id_col}, {tokens_col} AS t{ex_b}
+          SELECT {buckets_expr} AS bin_id, {id_col}, {tokens_col} AS t
           FROM {table}
         ),
         w AS (
-          SELECT bin_id, {id_col}, t{ex_b},
+          SELECT bin_id, {id_col}, t,
                  CAST(sum(len(t)) OVER (PARTITION BY bin_id
                         ORDER BY {id_col}
                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -493,13 +450,13 @@ def bucket_pack_segments_sql(
         ),
         g AS (
           SELECT bin_id,
-                 flatten(list(t ORDER BY {id_col})) AS tokens{ex_g},
+                 flatten(list(t ORDER BY {id_col})) AS tokens,
                  list(st ORDER BY {id_col}) AS doc_starts,
                  count(*)::INT AS n_docs,
                  CAST(sum(len(t)) AS INT) AS n_tok
           FROM w GROUP BY bin_id
         )
-        SELECT bin_id, tokens{ex_o}, doc_starts, n_docs, n_tok,
+        SELECT bin_id, tokens, doc_starts, n_docs, n_tok,
                flatten([[CAST(i - 1 AS INTEGER)
                          FOR x IN range(CASE WHEN i = len(doc_starts)
                                         THEN len(tokens)

@@ -2,14 +2,13 @@
 
 Two tiers, as a production ANN pipeline would stage them:
 
-* brute-force cosine top-k — the exactness baseline; one narrow pass
-  computing dot/norms via ``zip_with``/``aggregate`` (JVM-side, no Python),
-  then a global top-k (``orderBy ... limit`` = Spark's TakeOrdered, which
-  is a per-partition heap + driver merge, NOT a full sort/shuffle);
-* LSH (random-hyperplane / SRP) bucketing — the scale path: each vector
-  gets a ``NBITS``-bit signature; candidates = same-bucket rows, exact
-  cosine re-ranked within the bucket.  At 10^12 rows the bucket key is the
-  shuffle key and the per-bucket fan-in is bounded by signature length.
+* LSH (random-hyperplane / SRP) bucketing — each vector gets a
+  ``NBITS``-bit signature; candidates = same-bucket rows, exact cosine
+  (dot/norms via ``zip_with``/``aggregate``, JVM-side) re-ranked within
+  the bucket.  At 10^12 rows the bucket key is the shuffle key and the
+  per-bucket fan-in is bounded by signature length;
+* IVF — trained centroids, one cell per vector, a query probes its
+  nearest cells (:func:`ann_recall` measures it against the exact scan).
 
 Hyperplanes are deterministic integer grids ((i*31 + j*17) % 19 - 9), so
 Spark and DuckDB compute identical signatures — no RNG, no drift.
@@ -26,8 +25,6 @@ from ulp_spark.operators.dedup import MAX_BUCKET, _bucket_pairs
 from ulp_spark.session import local_frame, seam
 
 NBITS = 8
-TOPK = 10  # neighbours brute_force_topk and ivf_topk return
-N_PROBE = 2  # IVF cells ivf_topk scans
 
 
 def _py_norm(vec: list[float]) -> float:
@@ -54,26 +51,6 @@ def norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(
         a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")
     ))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    d = norm(a) * norm(b)
-    return F.when(d > 0, dot(a, b) / d).otherwise(F.lit(0.0))
-
-
-def brute_force_topk(
-    df: DataFrame, vec_col: str, id_col: str, query: list[float],
-) -> DataFrame:
-    """Exact top-``TOPK`` by cosine to a constant query vector.
-
-    Ties broken by id for determinism (and oracle parity).
-    """
-    q = F.array(*[F.lit(float(x)) for x in query])
-    scored = df.select(
-        F.col(id_col),
-        F.round(cosine(F.col(vec_col), q), 6).alias("cos_sim"),
-    )
-    return scored.orderBy(F.desc("cos_sim"), F.col(id_col)).limit(TOPK)
 
 
 # --------------------------------------------------------------------------
@@ -194,9 +171,9 @@ def ivf_train_spherical(
     Scale shape: the sample collect is the only data movement (``sample``
     rows x dim floats, bounded driver memory); training runs in numpy on
     the driver; the output is k rounded centroid literals consumed by the
-    distributed :func:`ivf_assign` / :func:`ivf_topk` exactly like the
-    other trainer.  Determinism: ordered sample (smallest ids), fixed
-    seeding and iteration count, 6-dp rounding of the result.
+    distributed :func:`ivf_assign` exactly like the other trainer.
+    Determinism: ordered sample (smallest ids), fixed seeding and
+    iteration count, 6-dp rounding of the result.
     """
     import numpy as np
 
@@ -299,38 +276,6 @@ def ivf_assign(vec: Column, centroids: list[list[float]],
             F.when(nv * s["n"] > 0, dot(vec, s["v"]) / (nv * s["n"]))
             .otherwise(F.lit(0.0)), 6))
     return (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
-
-
-def ivf_topk(
-    df: DataFrame, vec_col: str, id_col: str, query: list[float],
-    centroids: list[list[float]],
-) -> DataFrame:
-    """Approximate top-``TOPK``: exact cosine within the ``N_PROBE`` cells
-    nearest to the query.  At cluster scale the table is written
-    partitioned by cell, so probing is partition pruning; here it's a
-    cell-id filter."""
-    def cos_py(a, b):
-        num = sum(x * y for x, y in zip(a, b))
-        den = (sum(x * x for x in a) ** 0.5) * (sum(y * y for y in b) ** 0.5)
-        return round(num / den, 6) if den > 0 else 0.0
-
-    order = sorted(range(len(centroids)),
-                   key=lambda i: (-cos_py(query, centroids[i]), i))
-    probe = order[:N_PROBE]
-    q = F.array(*[F.lit(float(x)) for x in query])
-    # row norm staged once, shared by the cell assignment and the final
-    # re-rank cosine (identical rounded values — see ivf_assign)
-    nv = F.col("__nv")
-    d = nv * F.lit(_py_norm([float(x) for x in query]))
-    scored = (
-        df.withColumn("__nv", norm(F.col(vec_col)))
-        .withColumn("cell", ivf_assign(F.col(vec_col), centroids, nv))
-        .filter(F.col("cell").isin(probe))
-        .select(F.col(id_col), "cell",
-                F.round(F.when(d > 0, dot(F.col(vec_col), q) / d)
-                        .otherwise(F.lit(0.0)), 6).alias("cos_sim"))
-    )
-    return scored.orderBy(F.desc("cos_sim"), F.col(id_col)).limit(TOPK)
 
 
 # --------------------------------------------------------------------------
@@ -490,8 +435,7 @@ def ann_recall(
 
 
 def embedding_near_dup(
-    df: DataFrame, vec_col: str, id_col: str, dim: int,
-    threshold: float = 0.95,
+    df: DataFrame, vec_col: str, id_col: str, dim: int, threshold: float,
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine, SRP-bucketed.
 

@@ -1,10 +1,10 @@
-"""Text analysis for training-data pipelines: language ID, quality scoring,
-token counting, document fingerprinting.
+"""Text analysis for training-data pipelines: quality scoring, token
+counting, document fingerprinting.
 
 All pure Column expressions (regexp_count / split / md5), with DuckDB SQL
 twins — identical numbers on both engines, so every op is oracle-gated.
 The heuristics are deliberately simple and deterministic (no model files):
-n-gram/stopword evidence for language, surface statistics for quality.
+surface statistics and English stopword evidence for quality.
 """
 
 from __future__ import annotations
@@ -12,90 +12,38 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Stopword evidence per language (lowercase, matched as whole words).
-LANG_MARKERS: dict[str, list[str]] = {
-    "en": ["the", "and", "of", "to", "is", "in", "that", "it"],
-    "de": ["der", "die", "und", "das", "ist", "nicht", "ein", "zu"],
-    "fr": ["le", "la", "les", "et", "est", "une", "que", "des"],
-    "es": ["el", "los", "las", "es", "una", "que", "por", "para"],
-}
+# English stopwords (lowercase, matched as whole words).
+STOP_EN = ["the", "and", "of", "to", "is", "in", "that", "it"]
 # Whitespace written out as an explicit class: Java regex \s includes
 # vertical tab \x0B but RE2 (DuckDB) \s does not, so a bare `\s` drifts
 # between the two engines on \x0B. Both engines read this class
 # identically (backslash escapes interpreted by the regex engine).
 WS = r"\t\n\x0B\f\r "
 SPLIT_WS = rf"[{WS}]+"
-# BPE-ish pre-tokenizer: letter runs | digit runs | single non-space symbol.
-TOKEN_RE = rf"[A-Za-z]+|[0-9]+|[^A-Za-z0-9{WS}]"
 PUNCT_RE = rf"[^A-Za-z0-9{WS}]"
-STOP_EN = LANG_MARKERS["en"]
 
 
 def _marker_pattern(words: list[str]) -> str:
     return r"\b(" + "|".join(words) + r")\b"
 
 
-def lang_scores(text: Column) -> dict[str, Column]:
-    low = F.lower(text)
-    return {
-        lang: F.regexp_count(low, F.lit(_marker_pattern(words)))
-        for lang, words in LANG_MARKERS.items()
-    }
-
-
-def lang_id(text: Column) -> Column:
-    """argmax language by stopword hits; 'und' (undetermined) when no hits.
-    Ties resolve in fixed key order (en, de, fr, es)."""
-    scores = lang_scores(text)
-    best_lang, best_score = F.lit("und"), F.lit(0)
-    for lang in LANG_MARKERS:  # insertion order = tie-break order
-        s = scores[lang]
-        better = s > best_score
-        best_lang = F.when(better, F.lit(lang)).otherwise(best_lang)
-        best_score = F.when(better, s).otherwise(best_score)
-    return best_lang
-
-
-def lang_id_sql(text: str) -> str:
-    """Same sequential strictly-greater fold as :func:`lang_id`."""
-    best_lang, best_score = "'und'", "0"
-    for lang, words in LANG_MARKERS.items():
-        s = f"len(regexp_extract_all(lower({text}), '{_marker_pattern(words)}'))"
-        best_lang = f"CASE WHEN {s} > ({best_score}) THEN '{lang}' ELSE {best_lang} END"
-        best_score = f"greatest({s}, {best_score})"
-    return best_lang
-
-
-def token_count_ws(text: Column) -> Column:
-    """Whitespace tokens (0 for empty/blank)."""
-    t = F.trim(text)
-    return F.when(F.length(t) == 0, F.lit(0)).otherwise(
-        F.size(F.split(t, SPLIT_WS)))
-
-
-def token_count_bpe(text: Column) -> Column:
-    """BPE-ish pre-token count (letter runs / digit runs / symbols)."""
-    return F.regexp_count(text, F.lit(TOKEN_RE))
-
-
 def token_count_ws_sql(text: str) -> str:
+    """Whitespace tokens (0 for empty/blank); the Spark side counts them
+    as ``F.size(curation.word_tokens(text))``."""
     return (f"CASE WHEN len(trim({text})) = 0 THEN 0 "
             f"ELSE len(regexp_split_to_array(trim({text}), '{SPLIT_WS}')) END")
 
 
-def token_count_bpe_sql(text: str) -> str:
-    return f"len(regexp_extract_all({text}, '{TOKEN_RE}'))"
-
-
-def quality_features(text: Column, n_tokens: Column | None = None) -> dict[str, Column]:
+def quality_features(text: Column, n_tokens: Column) -> dict[str, Column]:
     """Surface-statistics quality signals (all deterministic doubles).
 
-    Pass ``n_tokens`` (a staged `F.size(tokens)` column) to avoid
-    re-inlining the whitespace split — Catalyst does not CSE the copies
-    (see curation.repetition_stats for the measured cost).
+    ``n_tokens`` is the whitespace token count,
+    ``F.size(curation.word_tokens(text))``; pass it as a staged column to
+    avoid re-inlining the whitespace split — Catalyst does not CSE the
+    copies (see curation.repetition_stats for the measured cost).
     """
     n_chars = F.length(text)
-    n_tok = token_count_ws(text) if n_tokens is None else n_tokens
+    n_tok = n_tokens
     n_punct = F.regexp_count(text, F.lit(PUNCT_RE))
     n_stop = F.regexp_count(F.lower(text), F.lit(_marker_pattern(STOP_EN)))
     safe_chars = F.greatest(n_chars, F.lit(1)).cast("double")
@@ -110,7 +58,7 @@ def quality_features(text: Column, n_tokens: Column | None = None) -> dict[str, 
     }
 
 
-def quality_score(text: Column, n_tokens: Column | None = None) -> Column:
+def quality_score(text: Column, n_tokens: Column) -> Column:
     """[0,1] composite: long enough, some stopwords, sane punctuation."""
     f = quality_features(text, n_tokens)
     len_ok = F.least(f["n_tokens"].cast("double") / F.lit(20.0), F.lit(1.0))

@@ -326,7 +326,7 @@ def fertility_stats(docs: DataFrame, tok: DataFrame) -> DataFrame:
     Cross-engine exactness: every aggregate is an integer sum (token,
     unk, char, word counts); the three ratios are single divisions of
     exact bigints rounded to 6 dp — identical on both engines.  Null
-    sources ride '__null__' (source_token_drift convention); ratios are
+    sources ride '__null__' (the tokens module's convention); ratios are
     NULL when their denominator is 0.
 
     Scale shape: one key-scale join (docs ids against tokenized ids —

@@ -57,9 +57,9 @@ def sequence_exact_dedup(
 ) -> DataFrame:
     """One survivor per identical token array: (fp, doc_id=min, dup_count).
 
-    The token-level twin of dedup.exact_dedup — bitwise-identical
-    sequences collapse no matter which documents produced them.  Shuffle
-    moves (fp, id) only; the arrays never leave the scan stage."""
+    Bitwise-identical sequences collapse no matter which documents
+    produced them.  Shuffle moves (fp, id) only; the arrays never leave
+    the scan stage."""
     return (
         df.select(token_fingerprint(F.col(tokens_col)).alias("fp"),
                   F.col(id_col))
@@ -109,207 +109,6 @@ def token_grams_sql(tokens: str) -> str:
     )
 
 
-def token_contamination(
-    df: DataFrame, tokens_col: str, id_col: str, eval_pred: Column,
-) -> DataFrame:
-    """Flag train sequences sharing any token ``GRAM``-gram with the eval
-    split — decontamination AFTER tokenization, where an n-gram is an
-    exact token-id window rather than a whitespace heuristic.
-
-    Same scale shape as curation.contamination_flags: the eval side is
-    tiny, its distinct gram keys broadcast, and the train corpus is never
-    shuffled — one broadcast LEFT SEMI on the exploded grams, re-collapsed
-    to one row per sequence.  Returns (id, is_contaminated) for TRAIN
-    rows only."""
-    grams = token_grams(F.col(tokens_col))
-    sides = df.select(F.col(id_col), eval_pred.alias("is_eval"),
-                      F.explode(grams).alias("gk"))
-    eval_grams = sides.filter("is_eval").select("gk").distinct()
-    train = sides.filter(~F.col("is_eval"))
-    hits = (
-        train.join(F.broadcast(eval_grams), "gk", "left_semi")
-        .select(id_col).distinct()
-        .withColumn("is_contaminated", F.lit(True))
-    )
-    train_ids = df.filter(~eval_pred).select(id_col)
-    return train_ids.join(hits, id_col, "left").fillna(
-        False, subset=["is_contaminated"])
-
-
-def token_contamination_sql(
-    table: str, tokens_col: str, id_col: str, eval_pred_sql: str,
-) -> str:
-    grams = token_grams_sql(tokens_col)
-    return f"""
-        WITH sides AS (
-          SELECT {id_col}, ({eval_pred_sql}) AS is_eval,
-                 unnest({grams}) AS gk
-          FROM {table}
-        ),
-        eval_g AS (SELECT DISTINCT gk FROM sides WHERE is_eval),
-        hits AS (
-          SELECT DISTINCT s.{id_col} FROM sides s
-          JOIN eval_g USING (gk) WHERE NOT s.is_eval
-        )
-        SELECT t.{id_col},
-               (h.{id_col} IS NOT NULL) AS is_contaminated
-        FROM (SELECT {id_col} FROM {table} WHERE NOT ({eval_pred_sql})) t
-        LEFT JOIN hits h USING ({id_col})
-    """
-
-def duplicate_gram_coverage(
-    df: DataFrame, tokens_col: str, id_col: str,
-) -> DataFrame:
-    """Per-sequence fraction of its distinct token ``GRAM``-gram windows that
-    also occur in at least one OTHER sequence — the ExactSubstr dedup
-    signal (Lee et al. 2021, "Deduplicating Training Data Makes Language
-    Models Better") at window granularity, on token ids.  Where
-    ``sequence_exact_dedup`` catches bitwise-identical sequences and
-    ``token_contamination`` catches eval overlap, this scores PARTIAL
-    cross-document duplication (boilerplate, quoted spans, template text)
-    so a curation pass can drop or de-weight high-coverage rows.
-
-    Returns (id, n_grams, n_dup_grams, dup_frac) for every sequence with
-    at least one full window (rows shorter than ``GRAM`` tokens have no
-    windows and are omitted — same rule on both engines).
-
-    Scale shape: explode to DISTINCT (id, gram-md5) pairs (map-side
-    partial distinct collapses intra-doc repeats before the shuffle),
-    seam-materialized ONCE to feed both the gram census and the per-doc
-    rollup; the census is a count aggregate on the 16-byte key, and the
-    join back is key-only (AQE broadcasts the census when it fits,
-    skew-splits otherwise).  Token arrays never leave the scan stage;
-    no posting lists, no pair materialization.
-    """
-    pairs = (
-        df.select(F.col(id_col),
-                  F.explode(token_grams(F.col(tokens_col))).alias("gk"))
-        .distinct()
-    )
-    pairs = seam(pairs)  # feeds the census AND the per-doc rollup
-    census = pairs.groupBy("gk").agg(F.count(F.lit(1)).alias("n_docs"))
-    dup = (census.filter(F.col("n_docs") > 1)
-           .select("gk", F.lit(True).alias("is_dup")))
-    n_dup = F.coalesce(F.sum(F.col("is_dup").cast("bigint")),
-                       F.lit(0).cast("bigint"))
-    return (
-        pairs.join(dup, "gk", "left")
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("n_grams"),
-             n_dup.alias("n_dup_grams"))
-        .select(id_col, "n_grams", "n_dup_grams",
-                F.round(F.col("n_dup_grams") / F.col("n_grams"), 6)
-                .alias("dup_frac"))
-    )
-
-
-def duplicate_gram_coverage_sql(
-    table: str, tokens_col: str, id_col: str,
-) -> str:
-    """DuckDB twin: same distinct-pair -> census -> rollup derivation."""
-    grams = token_grams_sql(tokens_col)
-    return f"""
-        WITH pairs AS (
-          SELECT DISTINCT {id_col}, gk FROM (
-            SELECT {id_col}, unnest({grams}) AS gk FROM {table})
-        ),
-        census AS (SELECT gk, count(*) AS n_docs FROM pairs GROUP BY gk)
-        SELECT {id_col}, count(*)::BIGINT AS n_grams,
-               sum(CASE WHEN n_docs > 1 THEN 1 ELSE 0 END)::BIGINT
-                 AS n_dup_grams,
-               round(sum(CASE WHEN n_docs > 1 THEN 1 ELSE 0 END)::DOUBLE
-                     / count(*), 6) AS dup_frac
-        FROM pairs JOIN census USING (gk)
-        GROUP BY {id_col}
-    """
-
-
-def source_token_drift(df: DataFrame) -> DataFrame:
-    """Per-source unigram-distribution drift vs the whole corpus — the
-    mixture-monitoring stat a training-data pipeline watches per ingest
-    batch (a source whose token distribution walks away from the corpus
-    is the first sign of a scraper change, encoding bug, or poisoning).
-
-    Returns one row per source: (source, n_tokens, kl_vs_corpus, tv_dist)
-    where kl = sum_t P_s(t) * ln(P_s(t) / P(t)) (nats) and tv is total
-    variation distance = 0.5 * sum_t |P_s(t) - P(t)|, both exact and
-    rounded to 6 dp for cross-engine parity.
-
-    Scale shape: ONE pass over the exploded tokens into a (source, token)
-    count aggregate — map-side combine collapses the explosion to
-    |sources| x |vocab| rows before the only full shuffle; the corpus
-    distribution is RE-AGGREGATED FROM THOSE PARTIAL COUNTS (never a
-    second scan of the corpus), and every join downstream is at vocab
-    scale.  TV needs care: summing |P_s - P| over only the tokens a
-    source HAS misses the mass of tokens it lacks; the missing mass is
-    added in closed form as (1 - sum_{t in s} P(t)) without materializing
-    the source x vocab cross product.  Null sources are kept as the
-    '__null__' bucket (a drifting null-source bucket is itself a signal;
-    a raw NULL key would silently drop out of the equi-joins on BOTH
-    engines).
-    """
-    st = (
-        df.select(F.coalesce(F.col("source"), F.lit("__null__"))
-                  .alias("source"),
-                  F.explode(F.col("tokens")).alias("t"))
-        .groupBy("source", "t")
-        .agg(F.count(F.lit(1)).alias("n_st"))
-    )
-    st = seam(st)  # feeds three vocab-scale aggregations
-    s_tot = st.groupBy("source").agg(F.sum("n_st").alias("n_s"))
-    t_tot = st.groupBy("t").agg(F.sum("n_st").alias("n_t"))
-    n_all = st.agg(F.sum("n_st")).collect()[0][0]
-    ps = F.col("n_st") / F.col("n_s")          # P_s(t)
-    p = F.col("n_t") / F.lit(float(n_all))     # P(t)
-    per_tok = (
-        st.join(s_tot, "source")
-        .join(t_tot, "t")
-        .groupBy("source")
-        .agg(
-            F.max("n_s").alias("n_tokens"),
-            F.sum(ps * F.log(ps / p)).alias("kl_raw"),
-            F.sum(F.abs(ps - p)).alias("tv_present"),
-            F.sum(p).alias("p_mass_present"),
-        )
-    )
-    return per_tok.select(
-        "source",
-        F.col("n_tokens").cast("bigint").alias("n_tokens"),
-        F.round(F.col("kl_raw"), 6).alias("kl_vs_corpus"),
-        # tokens the source never emits contribute |0 - P(t)| = the
-        # corpus mass outside the source's support
-        F.round((F.col("tv_present") + (F.lit(1.0) - F.col("p_mass_present")))
-                / 2.0, 6).alias("tv_dist"),
-    )
-
-
-def source_token_drift_sql(table: str) -> str:
-    """DuckDB twin (plain CTE re-derivation, same closed-form TV fix)."""
-    return f"""
-        WITH ex AS (
-          SELECT coalesce(source, '__null__') AS source,
-                 unnest(tokens) AS t
-          FROM {table}
-        ),
-        st AS (
-          SELECT source, t, count(*) AS n_st FROM ex GROUP BY 1, 2
-        ),
-        s_tot AS (SELECT source, sum(n_st) AS n_s FROM st GROUP BY source),
-        t_tot AS (SELECT t, sum(n_st) AS n_t FROM st GROUP BY t),
-        n_all AS (SELECT sum(n_st)::DOUBLE AS n FROM st)
-        SELECT st.source,
-               CAST(max(s_tot.n_s) AS BIGINT) AS n_tokens,
-               round(sum((st.n_st / s_tot.n_s)
-                         * ln((st.n_st / s_tot.n_s)
-                              / (t_tot.n_t / n_all.n))), 6) AS kl_vs_corpus,
-               round((sum(abs(st.n_st / s_tot.n_s - t_tot.n_t / n_all.n))
-                      + (1.0 - sum(t_tot.n_t / n_all.n))) / 2.0, 6) AS tv_dist
-        FROM st
-        JOIN s_tot USING (source) JOIN t_tot USING (t) CROSS JOIN n_all
-        GROUP BY st.source
-    """
-
-
 def source_temperature_weights(
     df: DataFrame, budget: int | None = None,
 ) -> DataFrame:
@@ -331,7 +130,7 @@ def source_temperature_weights(
     Scale shape: ONE aggregate over (source, n_tok) — map-side combine
     collapses to |sources| rows before the only exchange; the normalizer
     joins back as a single-row broadcast (BroadcastNestedLoopJoin over
-    one row).  Null sources bucket as '__null__' like source_token_drift.
+    one row).  Null sources bucket as '__null__'.
     """
     per = (
         df.select(F.coalesce(F.col("source"), F.lit("__null__"))
@@ -362,15 +161,9 @@ def source_temperature_weights(
     return per.crossJoin(F.broadcast(tot)).select(*cols)
 
 
-def source_temperature_weights_sql(
-    table: str, budget: int | None = None,
-) -> str:
-    """DuckDB twin: same cancelled-normalizer derivation."""
-    budget_col = (
-        f",\n               floor(pow(n_tokens, {MIX_ALPHA}) / t.z"
-        f" * {float(budget)})::BIGINT AS budget_tokens"
-        if budget is not None else ""
-    )
+def source_temperature_weights_sql(table: str, budget: int) -> str:
+    """DuckDB twin (with the budget column): same cancelled-normalizer
+    derivation."""
     return f"""
         WITH per AS (
           SELECT coalesce(source, '__null__') AS source,
@@ -383,7 +176,8 @@ def source_temperature_weights_sql(
                round(n_tokens / t.n, 6) AS p_natural,
                round(pow(n_tokens, {MIX_ALPHA}) / t.z, 6) AS q_temp,
                round((pow(n_tokens, {MIX_ALPHA}) / t.z)
-                     / (n_tokens / t.n), 6) AS up_weight{budget_col}
+                     / (n_tokens / t.n), 6) AS up_weight,
+               floor(pow(n_tokens, {MIX_ALPHA}) / t.z * {float(budget)})::BIGINT AS budget_tokens
         FROM per CROSS JOIN t
     """
 
@@ -923,8 +717,7 @@ def remove_duplicate_spans(
     """Remove cross- and within-corpus duplicated token spans, keeping one
     occurrence — the ExactSubstr *rewrite* (Lee et al. 2021 remove all but
     one occurrence of any duplicated >=GRAM-token substring; their suffix
-    array becomes a distributed GRAM-token-window census here).  Where
-    ``duplicate_gram_coverage`` only SCORES partial duplication, this
+    array becomes a distributed GRAM-token-window census here).  It
     rewrites the sequences: every token covered by a duplicated window
     occurrence that is not that window's designated keeper is dropped,
     and the array is rebuilt from the survivors.
@@ -1306,16 +1099,14 @@ def contamination_coverage(
     """Graded decontamination (the Llama-3 'dirty fraction' form): for
     each TRAIN sequence, the fraction of its GRAM-token windows that appear
     anywhere in the eval split — so callers threshold (e.g. drop > 0.8,
-    keep < 0.1, audit between) instead of the binary any-hit flag
-    token_contamination gives.
+    keep < 0.1, audit between) instead of a binary any-hit flag.
 
     Rows shorter than GRAM have no windows; they report n_windows = 0 and
     contamination_frac = 0.0 (nothing to leak).
 
-    Scale shape: identical to token_contamination — eval gram keys are
-    distinct-collapsed and broadcast; the train side keeps its
-    partitioning through explode -> broadcast-mark -> groupBy(id) with
-    map-side combine.  One corpus-scale shuffle (the per-id collapse).
+    Scale shape: eval gram keys are distinct-collapsed and broadcast; the
+    train side keeps its partitioning through explode -> broadcast-mark
+    -> groupBy(id) with map-side combine.  One corpus-scale shuffle (the per-id collapse).
     """
     grams = token_grams(F.col(tokens_col))
     sides = df.select(F.col(id_col), eval_pred.alias("is_eval"),
@@ -1941,17 +1732,16 @@ def span_corruption_sql(
 def source_js_divergence(df: DataFrame) -> DataFrame:
     """Pairwise Jensen-Shannon divergence between per-source token
     unigram distributions over a (tokens, source) table — the
-    mixture-design complement of source_token_drift (each source vs the
-    corpus) and
-    cross_source_dup_matrix (shared exact sequences): JS answers "how
-    far apart are two sources' token distributions", the quantity
-    mixture/temperature tuning and duplicate-domain detection read.
+    mixture-design complement of cross_source_dup_matrix (shared exact
+    sequences): JS answers "how far apart are two sources' token
+    distributions", the quantity mixture/temperature tuning and
+    duplicate-domain detection read.
     Symmetric, bounded in [0, ln 2], 0 iff identical.
 
     One row per unordered source pair (source_a < source_b):
     (source_a, source_b, n_common_types, js_micro, js_nats).  Pairs with
     NO common token types still appear (js = ln 2 exactly).  Null
-    sources ride the '__null__' bucket (source_token_drift convention).
+    sources ride the '__null__' bucket.
 
     Numeric determinism: JS decomposes per common token t into
       0.5 * [p ln(2p/(p+q)) + q ln(2q/(p+q))]
@@ -2210,22 +2000,20 @@ def gram_novelty(
     """Per-sequence NOVELTY: the fraction of its distinct token
     ``GRAM``-gram windows whose FIRST corpus occurrence (ascending
     ``id_col`` order — the deterministic ingest order) is in this
-    sequence.  The temporal complement of ``duplicate_gram_coverage``:
-    coverage says "how much of me exists elsewhere", novelty says "how
-    much did I add when I arrived".  Streaming-ingest curation uses it
-    to admit documents by marginal contribution (a doc that is 95%
-    previously-seen windows adds little signal however unique its exact
-    bytes), and memorization audits use the inverse (low-novelty,
-    high-coverage rows are the memorization-risk tail).
+    sequence: "how much did I add when I arrived".  Streaming-ingest
+    curation uses it to admit documents by marginal contribution (a doc
+    that is 95% previously-seen windows adds little signal however unique
+    its exact bytes), and memorization audits use the inverse (low-novelty
+    rows are the memorization-risk tail).
 
     Returns (id, n_grams, n_novel, novel_frac) for every sequence with
-    at least one full window (rows shorter than ``GRAM`` are omitted —
-    same rule as duplicate_gram_coverage).  Ties cannot occur: first
-    occurrence is min(id) per gram, and a gram appearing several times
-    inside one doc collapses in the distinct pair set.
+    at least one full window (rows shorter than ``GRAM`` are omitted).
+    Ties cannot occur: first occurrence is min(id) per gram, and a gram
+    appearing several times inside one doc collapses in the distinct pair
+    set.
 
-    Scale shape: identical to duplicate_gram_coverage — distinct
-    (id, gram-md5) pairs seamed ONCE feeding both the min-id census
+    Scale shape: distinct (id, gram-md5) pairs seamed ONCE feeding both
+    the min-id census
     (map-side partial min, 16-byte keys) and the per-doc rollup join;
     token arrays never leave the scan stage, nothing quadratic.
     """
@@ -2266,51 +2054,4 @@ def gram_novelty_sql(
                      / count(*), 6) AS novel_frac
         FROM pairs JOIN first USING (gk)
         GROUP BY {id_col}
-    """
-
-
-def sft_loss_mask(
-    df: DataFrame, tokens_col: str, prompt_len_col: str,
-) -> DataFrame:
-    """Instruction-tuning LOSS MASK: for rows carrying a prompt/completion
-    boundary (``prompt_len_col`` = number of leading prompt tokens), emit
-    loss_mask[p] = 0 for prompt positions and 1 for completion positions
-    — the standard SFT convention where the model is only penalized on
-    the response — plus the n_prompt/n_target token accounting a batch
-    scheduler budgets with.  Prompt lengths are CLAMPED into [0, n_tok]
-    (a malformed boundary masks everything or nothing rather than
-    corrupting array shapes; the clamped value is what's reported).
-
-    Returns the input row + (loss_mask array<int>, n_prompt, n_target).
-
-    Scale shape: two array_repeat concats per row — pure per-row JVM
-    array algebra, zero shuffle, one codegen span, partition-invariant.
-    Composes with pack_segments downstream: pack the masked rows, then
-    a trainer multiplies loss_mask into the packed cross-entropy.
-    """
-    n = F.size(F.col(tokens_col))
-    pl = F.greatest(
-        F.lit(0), F.least(F.col(prompt_len_col).cast("int"), n))
-    mask = F.concat(
-        F.array_repeat(F.lit(0).cast("int"), pl),
-        F.array_repeat(F.lit(1).cast("int"), n - pl))
-    return df.select(
-        "*", mask.alias("loss_mask"), pl.alias("n_prompt"),
-        (n - pl).alias("n_target"))
-
-
-def sft_loss_mask_sql(
-    table: str, tokens_col: str, prompt_len_col: str,
-) -> str:
-    """DuckDB twin: same clamp, same repeat-concat mask."""
-    n = f"len({tokens_col})"
-    pl = f"greatest(0, least(CAST({prompt_len_col} AS INTEGER), {n}))"
-    return f"""
-        SELECT *,
-               list_concat([CAST(0 AS INTEGER) FOR x IN range({pl})],
-                           [CAST(1 AS INTEGER) FOR x IN range({n} - {pl})])
-                 AS loss_mask,
-               CAST({pl} AS INTEGER) AS n_prompt,
-               CAST({n} - {pl} AS INTEGER) AS n_target
-        FROM {table}
     """

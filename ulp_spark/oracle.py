@@ -145,12 +145,16 @@ def decode_tree(e: Any) -> Tree:
             "children": {conv(k): decode_tree(v) for k, v in e["children"].items()}}
 
 
-def tree_to_paths(t: Tree, prefix: str = "") -> dict[str, int]:
+def tree_to_paths(t: Tree) -> dict[str, int]:
     """Flatten a tree to {dotted path: scalar code} (leaves only)."""
+    return _paths(t, "")
+
+
+def _paths(t: Tree, prefix: str) -> dict[str, int]:
     if isinstance(t, int):
         return {prefix or "$": t}
     out: dict[str, int] = {}
     for k, child in t["children"].items():
         p = f"{prefix}.{k}" if prefix else str(k)
-        out.update(tree_to_paths(child, p))
+        out.update(_paths(child, p))
     return out

@@ -31,8 +31,8 @@ _DEFAULTS = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Arrow transfer for the Python stages: the IPv6 cast UDF and the
-    # mapInPandas bodies of pack_bins, bpe_tokenize, the JSON type-tree
-    # fold and the multimodal kernels.
+    # mapInPandas bodies of pack_bins, bpe_tokenize and the JSON type-tree
+    # fold.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
     # Deterministic timestamp rendering regardless of host TZ.
