@@ -63,6 +63,19 @@ def test_srp_bucket_pref_matches_duckdb(spark):
     assert got == exp
 
 
+def test_langid_multilingual(spark):
+    df = spark.createDataFrame([
+        (1, "the cat and the dog sat in that house"),
+        (2, "der Hund und die Katze sind nicht da"),
+        (3, "le chat et la maison est une belle chose"),
+        (4, "el perro y los gatos es una cosa que pasa"),
+        (5, "xyzzy qwerty plugh"),
+    ], "id long, text string")
+    got = {r.id: r.lang for r in df.select(
+        "id", textstats.lang_id(F.col("text")).alias("lang")).collect()}
+    assert got == {1: "en", 2: "de", 3: "fr", 4: "es", 5: "und"}
+
+
 def test_token_counts():
     texts = ["hello world", "", "  a  b  ", "a,b c3d!"]
     con = duckdb.connect()
@@ -131,6 +144,28 @@ def test_embedding_near_dup_degenerate_bucket_capped(spark):
     assert "collect_list" not in plan
     got = [(r.id_a, r.id_b) for r in pairs.collect()]
     assert got == [(9001, 9002)]
+
+
+def test_hash_split_deterministic_and_complete(spark):
+    """Split membership is a pure function of the id: same label at any
+    partitioning, labels cover 100%, and the Spark/DuckDB twins agree."""
+    from ulp_spark.operators import sampling
+
+    df = spark.range(0, 2000, 1, 7).select(F.col("id").alias("doc_id"))
+    a = {r.doc_id: r.s for r in df.select(
+        "doc_id", sampling.split_label(F.col("doc_id")).alias("s")).collect()}
+    b = {r.doc_id: r.s for r in df.repartition(3).select(
+        "doc_id", sampling.split_label(F.col("doc_id")).alias("s")).collect()}
+    assert a == b and set(a.values()) == {"train", "val", "test"}
+    con = duckdb.connect()
+    got = {r[0]: r[1] for r in con.sql(
+        f"SELECT i, {sampling.split_label_sql('i')} FROM range(0, 2000) t(i)"
+    ).fetchall()}
+    assert got == a
+    # ~90/5/5 split within tolerance
+    from collections import Counter
+    c = Counter(a.values())
+    assert abs(c["train"] - 1800) < 100 and abs(c["val"] - 100) < 60
 
 
 def test_global_cumsum_partition_invariant(spark):
@@ -258,6 +293,41 @@ def test_stratified_keep_matches_duckdb(spark):
     assert got == dict(want)
     # rough rate sanity: stratum b keeps ~90%, stratum a ~10%
     assert got["b"] > got.get("a", 0)
+
+
+def test_quality_topk_ranks_and_ties(spark):
+    from ulp_spark.operators import curation
+
+    # IDENTICAL texts (tied scores) -> smaller id wins rank; group "s"
+    # holds one doc more than the QUALITY_TOPK = 3 kept
+    df = spark.createDataFrame(
+        [(1, "s", "the quick brown fox is in the den and it is fine"),
+         (2, "s", "the quick brown fox is in the den and it is fine"),
+         (3, "s", "zz"), (4, "t", "the and of to is in that it fits"),
+         (5, "s", "zz")],
+        "doc_id long, source string, text string")
+    got = {(r.source, r.rank): r.doc_id
+           for r in curation.quality_topk(
+               df, "text", "doc_id", "source").collect()}
+    assert curation.QUALITY_TOPK == 3
+    assert got[("s", 1)] == 1 and got[("s", 2)] == 2 and got[("s", 3)] == 3
+    assert ("s", 4) not in got
+    assert got[("t", 1)] == 4 and ("t", 2) not in got
+
+
+def test_token_budget_mix_prefix_rule(spark):
+    from ulp_spark.operators import curation
+
+    # budget 5: doc1 (3 tok) kept, doc2 (3 tok, cum 6) dropped, and doc3
+    # (1 tok, cum 7) STAYS dropped — prefix rule, not best-fit.
+    df = spark.createDataFrame(
+        [(1, "g", "a b c"), (2, "g", "d e f"), (3, "g", "x"),
+         (4, "h", "only one doc here")],
+        "doc_id long, source string, text string")
+    got = {r.source: (r.n_kept, r.tokens_kept)
+           for r in curation.token_budget_mix(df, "text", "doc_id", "source", 5).collect()}
+    assert got["g"] == (1, 3)
+    assert got["h"] == (1, 4)
 
 
 def test_word_tokens_whitespace_class_matches_duckdb(spark):
@@ -409,6 +479,35 @@ def test_connected_components_job_budget_per_round(spark, count_jobs):
     _, two = count_jobs(lambda: rounds(2))
     assert one <= 13, one
     assert two - one <= 10, (one, two)
+
+
+def test_bigram_coverage_edges_and_duckdb(spark):
+    """Short docs keep a (0, 0, 0.0) row; common bigrams counted per
+    OCCURRENCE; matches the DuckDB twin."""
+    from ulp_spark.operators import vocab
+
+    rows = [(1, "the cat sat on the cat mat"), (2, "the cat sat again"),
+            (3, "solo"), (4, "")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {r.doc_id: (r.n_bigrams, r.n_common, r.common_frac)
+           for r in vocab.bigram_coverage(df, "text", "doc_id").collect()}
+    assert got[3] == (0, 0, 0.0) and got[4] == (0, 0, 0.0)
+    # doc 1: bigrams [the cat, cat sat, sat on, on the, the cat, cat mat]
+    # counts: "the cat" x3 (2 here + 1 in doc 2) is common at
+    # BIGRAM_MIN_COUNT = 3, "cat sat" x2 is not -> common occurrences in
+    # doc 1 = 2 ("the cat") of 6
+    assert vocab.BIGRAM_MIN_COUNT == 3
+    assert got[1] == (6, 2, round(2 / 6, 6))
+    # doc 2: "the cat" is its one common bigram of 3
+    assert got[2] == (3, 1, round(1 / 3, 6))
+    con = duckdb.connect()
+    con.execute("CREATE VIEW d AS SELECT * FROM (VALUES "
+                "(1, 'the cat sat on the cat mat'), (2, 'the cat sat again'), "
+                "(3, 'solo'), (4, '')) t(doc_id, text)")
+    want = {r[0]: (r[1], r[2], r[3]) for r in con.sql(
+        vocab.bigram_coverage_sql("d", "text", "doc_id")
+    ).fetchall()}
+    assert got == want
 
 
 def test_ann_recall_floors(spark):
@@ -929,6 +1028,21 @@ _DEF_ALLOW = {
     "ulp_spark/oracle.py:tree_to_paths",
 }
 
+# Operators only parity and unit tests call, whose deletion is staged so
+# that one change removes a reviewable number of tests: ROADMAP's "Finish
+# deleting the test-only operators" deletes them with their tests and
+# empties this set.  Each counts as a root, like an allow-listed def.
+_DEF_DEFERRED = {
+    "ulp_spark/operators/vocab.py:vocab_topk",
+    "ulp_spark/operators/vocab.py:bigram_coverage",
+    "ulp_spark/operators/textstats.py:lang_id",
+    "ulp_spark/operators/sampling.py:split_label",
+    "ulp_spark/operators/curation.py:quality_topk",
+    "ulp_spark/operators/curation.py:token_budget_mix",
+    "ulp_spark/operators/tokens.py:duplicate_gram_coverage",
+    "ulp_spark/operators/tokens.py:sft_loss_mask",
+}
+
 # __spark_entry__.py's driver contract: its other defs count as reached
 # only through these.
 _ENTRY_ROOTS = {"entry", "queries", "oracle_sql"}
@@ -937,10 +1051,10 @@ _ENTRY_ROOTS = {"entry", "queries", "oracle_sql"}
 def test_every_package_def_is_referenced():
     """Dead-code guard: every top-level def/class in ulp_spark/ and
     __spark_entry__.py is reachable from code that runs outside tests,
-    or sits on the allow-list above.  The roots are every file of
-    ``_caller_files`` except the defs of those two, plus their
-    module-level statements, the entry module's contract functions
-    (``_ENTRY_ROOTS``) and the allow-listed defs; a def is reached once a
+    or sits on the allow-list or the deferred list above.  The roots are
+    every file of ``_caller_files`` except the defs of those two, plus
+    their module-level statements, the entry module's contract functions
+    (``_ENTRY_ROOTS``) and the listed defs; a def is reached once a
     root or a reached def names it (Name, Attribute, import alias or a
     string that parses as one), and a ``<f>_sql`` def once ``<f>`` is:
     the DuckDB twin is the reference tests compare a live operator
@@ -999,12 +1113,15 @@ def test_every_package_def_is_referenced():
                       if name not in reached for tag, _ in tagged)
 
     dead = unreached(roots | _ENTRY_ROOTS)
+    kept = _DEF_ALLOW | _DEF_DEFERRED
     print(f"{sum(map(len, defs.values()))} package defs, "
-          f"{len(dead)} unreached, {len(_DEF_ALLOW)} allow-listed")
-    # an allow-list entry must still name a def nothing else reaches
-    assert sorted(_DEF_ALLOW - set(dead)) == []
+          f"{len(dead)} unreached, {len(_DEF_ALLOW)} allow-listed, "
+          f"{len(_DEF_DEFERRED)} deferred")
+    # an allow-list or deferred entry must still name a def nothing else
+    # reaches
+    assert sorted(kept - set(dead)) == []
     offenders = unreached(roots | _ENTRY_ROOTS
-                          | {tag.split(":")[1] for tag in _DEF_ALLOW})
+                          | {tag.split(":")[1] for tag in kept})
     assert offenders == [], "\n".join(offenders)
 
 
@@ -1215,6 +1332,36 @@ def test_clustered_embeddings_deterministic_and_clustered(spark):
     )
     mc = {r.same: r.mc for r in pairs.collect()}
     assert mc[True] > 0.6 and mc[False] < 0.4
+
+
+def test_duplicate_gram_coverage_hand_computed(spark):
+    """Constructed corpus, GRAM=8 windows: shared windows count, unique
+    ones don't, intra-doc repeats collapse to one distinct gram, short
+    rows vanish."""
+    from ulp_spark.operators import tokens
+
+    assert tokens.GRAM == 8
+    rows = [
+        # doc 1: windows (1..8),(2..9),(3..10) — (1..8) shared w/ doc 2
+        (1, list(range(1, 11))),
+        # doc 2: intra-doc repeat (9 x8) twice collapses; (1..8) shared
+        (2, [9] * 9 + list(range(1, 9))),
+        # doc 3: all-unique windows
+        (3, list(range(100, 110))),
+        # doc 4: shorter than GRAM -> no windows, omitted from output
+        (4, [1, 2]),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, tokens array<int>")
+    got = {r.doc_id: r for r in
+           tokens.duplicate_gram_coverage(df, "tokens", "doc_id").collect()}
+    assert set(got) == {1, 2, 3}
+    assert (got[1].n_grams, got[1].n_dup_grams) == (3, 1)
+    assert got[1].dup_frac == round(1 / 3, 6)
+    # doc 2: 10 windows, (9 x8) twice -> 9 distinct, only (1..8)
+    # crosses documents
+    assert (got[2].n_grams, got[2].n_dup_grams) == (9, 1)
+    assert (got[3].n_grams, got[3].n_dup_grams) == (3, 0)
+    assert got[3].dup_frac == 0.0
 
 
 def test_source_temperature_weights_hand_computed(spark):
@@ -3303,6 +3450,22 @@ def test_gopher_rules_alpha_counts_unicode_letters(spark):
     want = {r[0]: tuple(r) for r in con.sql(
         curation.gopher_rules_sql("d", "text", "doc_id")).fetchall()}
     assert {k: tuple(r) for k, r in got.items()} == want
+
+
+def test_sft_loss_mask_clamps_and_counts(spark):
+    from ulp_spark.operators import tokens
+
+    df = spark.createDataFrame(
+        [("a", [1, 2, 3], -5), ("b", [1, 2, 3], 99),
+         ("c", [1, 2, 3], 2), ("d", [], 1)],
+        "doc_id string, tokens array<int>, prompt_len int")
+    got = {r.doc_id: r for r in
+           tokens.sft_loss_mask(df, "tokens", "prompt_len").collect()}
+    assert got["a"].loss_mask == [1, 1, 1] and got["a"].n_prompt == 0
+    assert got["b"].loss_mask == [0, 0, 0] and got["b"].n_target == 0
+    assert got["c"].loss_mask == [0, 0, 1]
+    assert got["c"].n_prompt == 2 and got["c"].n_target == 1
+    assert got["d"].loss_mask == [] and got["d"].n_prompt == 0
 
 
 def test_pack_sequences_extra_arrays_align(spark):

@@ -6,15 +6,20 @@ so membership derives from a content-stable hash of the id, never from
 ``rand()``/``TABLESAMPLE`` (both partition-layout-dependent in Spark).
 
 ``hash_bucket`` maps an id to [0, buckets) via the first 8 md5 hex chars —
-the same fold the dedup shingles use, identical in DuckDB.  Filtering by
-bucket is a pure codegen'd predicate: at 100 TB a 1%% sample is a
-scan-time filter (no shuffle, combine-friendly).
+the same fold the dedup shingles use, identical in DuckDB — and
+``split_label`` turns cumulative percentage weights into named splits.
+Filtering by bucket is a pure codegen'd predicate: at 100 TB a 1%% sample
+is a scan-time filter (no shuffle, combine-friendly), and the split
+column is broadcast-free.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+# (name, percent) in bucket order; the percents sum to 100
+SPLITS: list[tuple[str, int]] = [("train", 90), ("val", 5), ("test", 5)]
 
 
 def hash_bucket(id_col: Column, buckets: int = 100) -> Column:
@@ -28,6 +33,27 @@ def hash_bucket_sql(id_expr: str, buckets: int = 100) -> str:
         f"CAST(CAST(('0x' || substr(md5(CAST({id_expr} AS VARCHAR)), 1, 8)) "
         f"AS BIGINT) % {buckets} AS INTEGER)"
     )
+
+
+def split_label(id_col: Column) -> Column:
+    """Named split from the cumulative percentage weights of ``SPLITS``."""
+    b = hash_bucket(id_col, 100)
+    out = None
+    hi = 0
+    for name, w in SPLITS:
+        hi += w
+        out = F.when(b < hi, F.lit(name)) if out is None else out.when(
+            b < hi, F.lit(name))
+    return out
+
+
+def split_label_sql(id_expr: str) -> str:
+    b = hash_bucket_sql(id_expr, 100)
+    hi, cases = 0, []
+    for name, w in SPLITS:
+        hi += w
+        cases.append(f"WHEN ({b}) < {hi} THEN '{name}'")
+    return "CASE " + " ".join(cases) + " END"
 
 
 def stratified_keep(
