@@ -1,10 +1,6 @@
-"""Parity cases for operators that no driver query covers: each query
-runs against its DuckDB twin in test_entry_parity.py, with the same rows +
-schema + values compare as the driver queries.  Most subjects run in
-production; the cases after ``_q_doc_stratified_sample`` check operators
-that only these tests call, kept until their staged deletion (ROADMAP,
-"Finish deleting the test-only operators"), and doc_length_quantiles
-checks Spark's ``percentile`` against DuckDB's ``quantile_cont``.
+"""Parity cases for operators that production runs but no driver query
+covers: each query runs against its DuckDB twin in test_entry_parity.py,
+with the same rows + schema + values compare as the driver queries.
 Table-backed queries read the sf parquet tables; fixture-backed ones
 regenerate their rows inside the oracle SQL, as in __spark_entry__.py."""
 
@@ -18,13 +14,11 @@ from pyspark.sql import functions as F
 from __spark_entry__ import _STRAT_RATES, N_FIXTURE, _docs, _routed_cte
 from ulp_spark import fixtures
 from ulp_spark.functions import sanitize, sniff, sqltext
-from ulp_spark.operators import (curation, dedup, lattice, sampling,
-                                 similarity, textstats, tokens)
+from ulp_spark.operators import (curation, dedup, lattice, similarity,
+                                 textstats, tokens)
 from ulp_spark.operators import vocab as _vocab
 from ulp_spark.plans import pipeline
 from ulp_spark.session import local_frame
-
-_TOKEN_BUDGET = 300  # per-source token budget for the mixing query
 
 
 def _embs(spark, sf_dir):
@@ -144,7 +138,9 @@ def _q_emb_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _embs(spark, sf_dir)
     cents = similarity.ivf_centroids(e, "embedding", "vec_id", k=8)
     return (
-        e.select(similarity.ivf_assign(F.col("embedding"), cents).alias("cell"))
+        e.select(similarity.ivf_assign(F.col("embedding"), cents,
+                                       similarity.norm(F.col("embedding")))
+                 .alias("cell"))
         .groupBy("cell").agg(F.count(F.lit(1)).alias("n_rows"))
     )
 
@@ -156,7 +152,9 @@ def _q_emb_ivf_cells_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = similarity.ivf_centroids_trained(
         e, "embedding", "vec_id", k=8, rounds=1)
     return (
-        e.select(similarity.ivf_assign(F.col("embedding"), cents).alias("cell"))
+        e.select(similarity.ivf_assign(F.col("embedding"), cents,
+                                       similarity.norm(F.col("embedding")))
+                 .alias("cell"))
         .groupBy("cell").agg(F.count(F.lit(1)).alias("n_rows"))
     )
 
@@ -228,88 +226,6 @@ def _q_doc_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus vocabulary top-50: explode+count collapses the corpus to
-    vocabulary scale with map-side combine; top-k is
-    TakeOrderedAndProject (per-partition heaps, no global sort)."""
-    return _vocab.vocab_topk(_docs(spark, sf_dir), "text")
-
-
-def _q_doc_bigram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style fluency proxy: per-doc fraction of word-bigram
-    occurrences whose corpus count >= 3 (exact integer statistics in
-    place of an LM; one shuffle join against the vocab-scale bigram
-    model)."""
-    return _vocab.bigram_coverage(_docs(spark, sf_dir), "text", "doc_id")
-
-
-def _q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
-    return d.select("doc_id", textstats.lang_id(F.col("text")).alias("lang_pred"))
-
-
-def _q_doc_split_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reproducible train/val/test split (hash-bucket membership, never
-    rand()/TABLESAMPLE — identical on any engine, cluster size, or run)."""
-    d = _docs(spark, sf_dir)
-    return (
-        d.select(sampling.split_label(F.col("doc_id")).alias("split"), "source",
-                 "n_chars")
-        .groupBy("split", "source")
-        .agg(F.count(F.lit(1)).alias("n_docs"),
-             F.sum("n_chars").alias("sum_chars"))
-    )
-
-
-def _q_doc_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact linear-interpolation percentiles of document length per source
-    (Spark `percentile` == DuckDB `quantile_cont`; at 100 TB swap for
-    percentile_approx/t-digest and drop the oracle to rows-only)."""
-    d = _docs(spark, sf_dir)
-    pct = F.percentile(F.col("n_chars"), F.lit([0.5, 0.9, 0.99]))
-    return (
-        d.groupBy("source")
-        .agg(*[F.round(F.element_at(pct, i + 1), 6).alias(n)
-               for i, n in enumerate(["p50", "p90", "p99"])])
-    )
-
-
-def _q_doc_quality_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 docs per source by quality score (one group-key shuffle)."""
-    return curation.quality_topk(_docs(spark, sf_dir), "text", "doc_id",
-                                 "source")
-
-
-def _q_doc_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source token-budget selection (data mixing prefix-sum)."""
-    return curation.token_budget_mix(_docs(spark, sf_dir), "text", "doc_id",
-                                     "source", budget=_TOKEN_BUDGET)
-
-
-def _q_seq_dup_gram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-sequence duplicated-window coverage (ExactSubstr signal on
-    token ids): fraction of each sequence's distinct 8-token windows that
-    occur in another sequence.  Distinct (id, gram) pairs seamed once;
-    census + rollup both read the seam; no pair materialization."""
-    # 2,500 rows, not N_FIXTURE: ~640k distinct (id, gram) pairs is plenty
-    # to exercise census + rollup on both engines; at 10k the DuckDB twin
-    # alone costs ~80 s of suite time for no extra coverage
-    seq = fixtures.sequences(spark, 2_500)
-    return tokens.duplicate_gram_coverage(seq, "tokens", "doc_id")
-
-
-def _q_seq_sft_loss_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Instruction-tuning loss masks: 0 over prompt positions, 1 over the
-    completion, prompt lengths clamped into [0, n_tok].  Prompt boundary
-    derived deterministically in-query (seq_no*13 mod n_tok+5 — exercises
-    the beyond-length clamp on real rows).  Pure per-row array algebra."""
-    seq = fixtures.sequences(spark, 2_500).select(
-        "doc_id", "tokens",
-        (F.col("seq_no") * 13 % (F.col("n_tok") + 5)).cast("int")
-        .alias("prompt_len"))
-    return tokens.sft_loss_mask(seq, "tokens", "prompt_len")
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "pipeline_routed_tokens_proof": _q_routed_tokens_proof,
@@ -331,15 +247,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_passage_dedup": _q_doc_passage_dedup,
         "events_pii_redact": _q_events_pii_redact,
         "doc_stratified_sample": _q_doc_stratified_sample,
-        "vocab_topk": _q_vocab_topk,
-        "doc_bigram_coverage": _q_doc_bigram_coverage,
-        "text_langid": _q_text_langid,
-        "doc_split_counts": _q_doc_split_counts,
-        "doc_length_quantiles": _q_doc_length_quantiles,
-        "doc_quality_topk": _q_doc_quality_topk,
-        "doc_token_budget_mix": _q_doc_token_budget_mix,
-        "seq_dup_gram_coverage": _q_seq_dup_gram_coverage,
-        "seq_sft_loss_mask": _q_seq_sft_loss_mask,
     }
 
 
@@ -437,15 +344,6 @@ def _stratified_sample_oracle() -> str:
     return (f"SELECT lang, count(*)::BIGINT AS n_total, "
             f"sum(({keep})::INT)::BIGINT AS n_kept "
             f"FROM documents GROUP BY lang")
-
-
-def _split_counts_sql() -> str:
-    return f"""
-        SELECT {sampling.split_label_sql('doc_id')} AS split, source,
-               count(*)::BIGINT AS n_docs,
-               sum(n_chars)::BIGINT AS sum_chars
-        FROM documents GROUP BY split, source
-    """
 
 
 def oracle_sql() -> dict[str, str]:
@@ -588,31 +486,4 @@ def oracle_sql() -> dict[str, str]:
         "doc_passage_dedup": _curation_passage_oracle(),
         "events_pii_redact": _curation_pii_oracle(),
         "doc_stratified_sample": _stratified_sample_oracle(),
-        "vocab_topk": _vocab.vocab_topk_sql("documents", "text"),
-        "doc_bigram_coverage": _vocab.bigram_coverage_sql(
-            "documents", "text", "doc_id"),
-        "text_langid": f"""
-            SELECT doc_id, {textstats.lang_id_sql('text')} AS lang_pred
-            FROM documents
-        """,
-        "doc_split_counts": _split_counts_sql(),
-        "doc_length_quantiles": """
-            SELECT source,
-                   round(quantile_cont(n_chars, 0.5), 6) AS p50,
-                   round(quantile_cont(n_chars, 0.9), 6) AS p90,
-                   round(quantile_cont(n_chars, 0.99), 6) AS p99
-            FROM documents GROUP BY source
-        """,
-        "doc_quality_topk": curation.quality_topk_sql(
-            "documents", "text", "doc_id", "source"),
-        "doc_token_budget_mix": curation.token_budget_mix_sql(
-            "documents", "text", "doc_id", "source", budget=_TOKEN_BUDGET),
-        # 2,500 rows to mirror _q_seq_dup_gram_coverage (suite-time trade)
-        "seq_dup_gram_coverage": tokens.duplicate_gram_coverage_sql(
-            f"({fixtures.sequences_sql(2_500)})", "tokens", "doc_id"),
-        "seq_sft_loss_mask": tokens.sft_loss_mask_sql(
-            f"(SELECT doc_id, tokens, "
-            f"CAST(seq_no * 13 % (n_tok + 5) AS INTEGER) AS prompt_len "
-            f"FROM ({fixtures.sequences_sql(2_500)}))",
-            "tokens", "prompt_len"),
     }

@@ -188,7 +188,9 @@ def test_ivf_trained_fewer_rows_than_k(spark):
     cents = similarity.ivf_centroids_trained(df, "embedding", "vec_id", k=8)
     assert 0 < len(cents) <= 8
     cells = [r.c for r in df.select(
-        similarity.ivf_assign(F.col("embedding"), cents).alias("c")).collect()]
+        similarity.ivf_assign(F.col("embedding"), cents,
+                              similarity.norm(F.col("embedding")))
+        .alias("c")).collect()]
     assert all(0 <= c < len(cents) for c in cells)
 
 

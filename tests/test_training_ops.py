@@ -1,5 +1,7 @@
-"""Unit tests for the training-data operators: dedup, similarity,
-textstats, multimodal — edge cases the sf0.01 corpus doesn't hit."""
+"""Unit tests for the training-data operators (dedup, similarity,
+textstats, curation, tokens, packing, sharding, ...) — edge cases the
+sf0.01 corpus doesn't hit — and the repo guards: dead defs, unused
+options, benchmark call binding."""
 
 from __future__ import annotations
 
@@ -61,19 +63,6 @@ def test_srp_bucket_pref_matches_duckdb(spark):
     con.executemany("INSERT INTO t VALUES (?, ?)", list(enumerate(vecs)))
     exp = dict(con.sql(f"SELECT id, {sql} FROM t").fetchall())
     assert got == exp
-
-
-def test_langid_multilingual(spark):
-    df = spark.createDataFrame([
-        (1, "the cat and the dog sat in that house"),
-        (2, "der Hund und die Katze sind nicht da"),
-        (3, "le chat et la maison est une belle chose"),
-        (4, "el perro y los gatos es una cosa que pasa"),
-        (5, "xyzzy qwerty plugh"),
-    ], "id long, text string")
-    got = {r.id: r.lang for r in df.select(
-        "id", textstats.lang_id(F.col("text")).alias("lang")).collect()}
-    assert got == {1: "en", 2: "de", 3: "fr", 4: "es", 5: "und"}
 
 
 def test_token_counts():
@@ -144,28 +133,6 @@ def test_embedding_near_dup_degenerate_bucket_capped(spark):
     assert "collect_list" not in plan
     got = [(r.id_a, r.id_b) for r in pairs.collect()]
     assert got == [(9001, 9002)]
-
-
-def test_hash_split_deterministic_and_complete(spark):
-    """Split membership is a pure function of the id: same label at any
-    partitioning, labels cover 100%, and the Spark/DuckDB twins agree."""
-    from ulp_spark.operators import sampling
-
-    df = spark.range(0, 2000, 1, 7).select(F.col("id").alias("doc_id"))
-    a = {r.doc_id: r.s for r in df.select(
-        "doc_id", sampling.split_label(F.col("doc_id")).alias("s")).collect()}
-    b = {r.doc_id: r.s for r in df.repartition(3).select(
-        "doc_id", sampling.split_label(F.col("doc_id")).alias("s")).collect()}
-    assert a == b and set(a.values()) == {"train", "val", "test"}
-    con = duckdb.connect()
-    got = {r[0]: r[1] for r in con.sql(
-        f"SELECT i, {sampling.split_label_sql('i')} FROM range(0, 2000) t(i)"
-    ).fetchall()}
-    assert got == a
-    # ~90/5/5 split within tolerance
-    from collections import Counter
-    c = Counter(a.values())
-    assert abs(c["train"] - 1800) < 100 and abs(c["val"] - 100) < 60
 
 
 def test_global_cumsum_partition_invariant(spark):
@@ -295,41 +262,6 @@ def test_stratified_keep_matches_duckdb(spark):
     assert got["b"] > got.get("a", 0)
 
 
-def test_quality_topk_ranks_and_ties(spark):
-    from ulp_spark.operators import curation
-
-    # IDENTICAL texts (tied scores) -> smaller id wins rank; group "s"
-    # holds one doc more than the QUALITY_TOPK = 3 kept
-    df = spark.createDataFrame(
-        [(1, "s", "the quick brown fox is in the den and it is fine"),
-         (2, "s", "the quick brown fox is in the den and it is fine"),
-         (3, "s", "zz"), (4, "t", "the and of to is in that it fits"),
-         (5, "s", "zz")],
-        "doc_id long, source string, text string")
-    got = {(r.source, r.rank): r.doc_id
-           for r in curation.quality_topk(
-               df, "text", "doc_id", "source").collect()}
-    assert curation.QUALITY_TOPK == 3
-    assert got[("s", 1)] == 1 and got[("s", 2)] == 2 and got[("s", 3)] == 3
-    assert ("s", 4) not in got
-    assert got[("t", 1)] == 4 and ("t", 2) not in got
-
-
-def test_token_budget_mix_prefix_rule(spark):
-    from ulp_spark.operators import curation
-
-    # budget 5: doc1 (3 tok) kept, doc2 (3 tok, cum 6) dropped, and doc3
-    # (1 tok, cum 7) STAYS dropped — prefix rule, not best-fit.
-    df = spark.createDataFrame(
-        [(1, "g", "a b c"), (2, "g", "d e f"), (3, "g", "x"),
-         (4, "h", "only one doc here")],
-        "doc_id long, source string, text string")
-    got = {r.source: (r.n_kept, r.tokens_kept)
-           for r in curation.token_budget_mix(df, "text", "doc_id", "source", 5).collect()}
-    assert got["g"] == (1, 3)
-    assert got["h"] == (1, 4)
-
-
 def test_word_tokens_whitespace_class_matches_duckdb(spark):
     """Java \\s includes \\x0B (vertical tab); RE2's does not. word_tokens
     uses an explicit class so both engines split identically."""
@@ -406,7 +338,8 @@ def test_connected_components_chain_and_islands(spark, monkeypatch):
     con = duckdb.connect()
     vals = ", ".join(f"({a}, {b})" for a, b in edges)
     want = dict(con.sql(dedup.connected_components_sql(
-        f"SELECT * FROM (VALUES {vals}) t(id_a, id_b)")).fetchall())
+        f"SELECT * FROM (VALUES {vals}) t(id_a, id_b)", id_alias="id"))
+        .fetchall())
     assert got == want
 
 
@@ -479,35 +412,6 @@ def test_connected_components_job_budget_per_round(spark, count_jobs):
     _, two = count_jobs(lambda: rounds(2))
     assert one <= 13, one
     assert two - one <= 10, (one, two)
-
-
-def test_bigram_coverage_edges_and_duckdb(spark):
-    """Short docs keep a (0, 0, 0.0) row; common bigrams counted per
-    OCCURRENCE; matches the DuckDB twin."""
-    from ulp_spark.operators import vocab
-
-    rows = [(1, "the cat sat on the cat mat"), (2, "the cat sat again"),
-            (3, "solo"), (4, "")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: (r.n_bigrams, r.n_common, r.common_frac)
-           for r in vocab.bigram_coverage(df, "text", "doc_id").collect()}
-    assert got[3] == (0, 0, 0.0) and got[4] == (0, 0, 0.0)
-    # doc 1: bigrams [the cat, cat sat, sat on, on the, the cat, cat mat]
-    # counts: "the cat" x3 (2 here + 1 in doc 2) is common at
-    # BIGRAM_MIN_COUNT = 3, "cat sat" x2 is not -> common occurrences in
-    # doc 1 = 2 ("the cat") of 6
-    assert vocab.BIGRAM_MIN_COUNT == 3
-    assert got[1] == (6, 2, round(2 / 6, 6))
-    # doc 2: "the cat" is its one common bigram of 3
-    assert got[2] == (3, 1, round(1 / 3, 6))
-    con = duckdb.connect()
-    con.execute("CREATE VIEW d AS SELECT * FROM (VALUES "
-                "(1, 'the cat sat on the cat mat'), (2, 'the cat sat again'), "
-                "(3, 'solo'), (4, '')) t(doc_id, text)")
-    want = {r[0]: (r[1], r[2], r[3]) for r in con.sql(
-        vocab.bigram_coverage_sql("d", "text", "doc_id")
-    ).fetchall()}
-    assert got == want
 
 
 def test_ann_recall_floors(spark):
@@ -1028,21 +932,6 @@ _DEF_ALLOW = {
     "ulp_spark/oracle.py:tree_to_paths",
 }
 
-# Operators only parity and unit tests call, whose deletion is staged so
-# that one change removes a reviewable number of tests: ROADMAP's "Finish
-# deleting the test-only operators" deletes them with their tests and
-# empties this set.  Each counts as a root, like an allow-listed def.
-_DEF_DEFERRED = {
-    "ulp_spark/operators/vocab.py:vocab_topk",
-    "ulp_spark/operators/vocab.py:bigram_coverage",
-    "ulp_spark/operators/textstats.py:lang_id",
-    "ulp_spark/operators/sampling.py:split_label",
-    "ulp_spark/operators/curation.py:quality_topk",
-    "ulp_spark/operators/curation.py:token_budget_mix",
-    "ulp_spark/operators/tokens.py:duplicate_gram_coverage",
-    "ulp_spark/operators/tokens.py:sft_loss_mask",
-}
-
 # __spark_entry__.py's driver contract: its other defs count as reached
 # only through these.
 _ENTRY_ROOTS = {"entry", "queries", "oracle_sql"}
@@ -1051,10 +940,10 @@ _ENTRY_ROOTS = {"entry", "queries", "oracle_sql"}
 def test_every_package_def_is_referenced():
     """Dead-code guard: every top-level def/class in ulp_spark/ and
     __spark_entry__.py is reachable from code that runs outside tests,
-    or sits on the allow-list or the deferred list above.  The roots are
-    every file of ``_caller_files`` except the defs of those two, plus
+    or sits on the allow-list above.  The roots are every file of
+    ``_caller_files`` except the defs of those two, plus
     their module-level statements, the entry module's contract functions
-    (``_ENTRY_ROOTS``) and the listed defs; a def is reached once a
+    (``_ENTRY_ROOTS``) and the allow-listed defs; a def is reached once a
     root or a reached def names it (Name, Attribute, import alias or a
     string that parses as one), and a ``<f>_sql`` def once ``<f>`` is:
     the DuckDB twin is the reference tests compare a live operator
@@ -1113,15 +1002,12 @@ def test_every_package_def_is_referenced():
                       if name not in reached for tag, _ in tagged)
 
     dead = unreached(roots | _ENTRY_ROOTS)
-    kept = _DEF_ALLOW | _DEF_DEFERRED
     print(f"{sum(map(len, defs.values()))} package defs, "
-          f"{len(dead)} unreached, {len(_DEF_ALLOW)} allow-listed, "
-          f"{len(_DEF_DEFERRED)} deferred")
-    # an allow-list or deferred entry must still name a def nothing else
-    # reaches
-    assert sorted(kept - set(dead)) == []
+          f"{len(dead)} unreached, {len(_DEF_ALLOW)} allow-listed")
+    # an allow-list entry must still name a def nothing else reaches
+    assert sorted(_DEF_ALLOW - set(dead)) == []
     offenders = unreached(roots | _ENTRY_ROOTS
-                          | {tag.split(":")[1] for tag in kept})
+                          | {tag.split(":")[1] for tag in _DEF_ALLOW})
     assert offenders == [], "\n".join(offenders)
 
 
@@ -1136,24 +1022,24 @@ _OPTION_ALLOW = {
     "ulp_spark/fixtures.py:lined_docs(partitions)",
     # the cap and its coverage report only bite past 200k distinct words
     "ulp_spark/operators/vocab.py:bpe_train(max_words)",
-    # packed SFT: a per-token loss mask rides the packed rows; no
-    # production stage packs one yet
-    "ulp_spark/operators/packing.py:pack_sequences(extra_array_cols)",
 }
 
 
 def test_every_option_has_a_non_test_caller():
     """Knob guard: non-test callers give every optional parameter of a
     public top-level function in ulp_spark/ at least two distinct values,
-    or it is exempt or on the allow-list above.  With one value in use,
-    the option is a constant.  The callers are the calls in
-    ``_caller_files`` (child scripts included) that ``_Calls`` resolves.
-    A call that leaves an option out passes its default; a literal or a
-    module-level constant is its value; a bare name that is an option of
-    the enclosing public package function passes that option's values
-    (and its exemption); any other expression, and any ``*``/``**``
-    expansion, is a value of its own.  An option bench.py or a perfbench/
-    file passes explicitly is exempt: those files pin the benchmark."""
+    and at least one of those calls leaves it out, or it is exempt or on
+    the allow-list above.  With one value in use, the option is a
+    constant; with its default unused, it is a required parameter.  The
+    callers are the calls in ``_caller_files`` (child scripts included)
+    that ``_Calls`` resolves.  A call that leaves an option out passes
+    its default; a literal or a module-level constant is its value; a
+    bare name that is an option of the enclosing public package function
+    passes that option's values (and its exemption); any other
+    expression, and any ``*``/``**`` expansion, is a value of its own (an
+    expansion may also leave the option out).  An option bench.py or a
+    perfbench/ file passes explicitly is exempt: those files pin the
+    benchmark."""
     import ast
     import pathlib
 
@@ -1199,6 +1085,7 @@ def test_every_option_has_a_non_test_caller():
 
     values = {key: set() for key in options}
     exempt = set()
+    defaulted = set()   # options some call leaves out (or may, via * / **)
     for path, call, fkey, enclosing in calls:
         pinned = path.name == "bench.py" or repo / "perfbench" in path.parents
         star = next((i for i, x in enumerate(call.args)
@@ -1217,8 +1104,10 @@ def test_every_option_has_a_non_test_caller():
             elif (star is not None and i is not None and i >= star) \
                     or double_star:
                 values[key].add(("own", call, key))
+                defaulted.add(key)
             else:
                 values[key].add(value(default, fkey[0], None))
+                defaulted.add(key)
 
     # a passed-through option takes the values and exemption it passes
     while True:
@@ -1234,15 +1123,16 @@ def test_every_option_has_a_non_test_caller():
     n_values = {key: len({v for v in vals if v[0] != "ref"})
                 for key, vals in values.items()}
     single = sorted(tag(key) for key in options
-                    if key not in exempt and n_values[key] < 2)
+                    if key not in exempt
+                    and (n_values[key] < 2 or key not in defaulted))
     print(f"{len(options)} optional parameters, "
           f"{sum(n >= 2 for n in n_values.values())} given two or more "
           f"values by non-test callers, {len(exempt)} exempt (passed by "
           f"bench.py or perfbench/), {len(_OPTION_ALLOW)} allow-listed")
     offenders = [t for t in single if t not in _OPTION_ALLOW]
-    assert offenders == [], f"{len(offenders)} options with one value:\n" \
-        + "\n".join(offenders)
-    # an allow-list entry must still name an option with one value
+    assert offenders == [], (f"{len(offenders)} options with one value "
+                             f"or an unused default:\n" + "\n".join(offenders))
+    # an allow-list entry must still name an option the rule flags
     assert sorted(_OPTION_ALLOW - set(single)) == []
 
 
@@ -1332,36 +1222,6 @@ def test_clustered_embeddings_deterministic_and_clustered(spark):
     )
     mc = {r.same: r.mc for r in pairs.collect()}
     assert mc[True] > 0.6 and mc[False] < 0.4
-
-
-def test_duplicate_gram_coverage_hand_computed(spark):
-    """Constructed corpus, GRAM=8 windows: shared windows count, unique
-    ones don't, intra-doc repeats collapse to one distinct gram, short
-    rows vanish."""
-    from ulp_spark.operators import tokens
-
-    assert tokens.GRAM == 8
-    rows = [
-        # doc 1: windows (1..8),(2..9),(3..10) — (1..8) shared w/ doc 2
-        (1, list(range(1, 11))),
-        # doc 2: intra-doc repeat (9 x8) twice collapses; (1..8) shared
-        (2, [9] * 9 + list(range(1, 9))),
-        # doc 3: all-unique windows
-        (3, list(range(100, 110))),
-        # doc 4: shorter than GRAM -> no windows, omitted from output
-        (4, [1, 2]),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, tokens array<int>")
-    got = {r.doc_id: r for r in
-           tokens.duplicate_gram_coverage(df, "tokens", "doc_id").collect()}
-    assert set(got) == {1, 2, 3}
-    assert (got[1].n_grams, got[1].n_dup_grams) == (3, 1)
-    assert got[1].dup_frac == round(1 / 3, 6)
-    # doc 2: 10 windows, (9 x8) twice -> 9 distinct, only (1..8)
-    # crosses documents
-    assert (got[2].n_grams, got[2].n_dup_grams) == (9, 1)
-    assert (got[3].n_grams, got[3].n_dup_grams) == (3, 0)
-    assert got[3].dup_frac == 0.0
 
 
 def test_source_temperature_weights_hand_computed(spark):
@@ -1652,7 +1512,8 @@ def test_pack_sequences_boundaries_and_conservation(spark):
     packed = packing.pack_bins(seq.select("doc_id", "n_tok"),
                                capacity=512, buckets=8)
     rows = packing.pack_sequences(seq, packed).collect()
-    n_tok_by_id = {r.doc_id: r.n_tok for r in seq.collect()}
+    docs = {r.doc_id: r for r in seq.collect()}
+    n_tok_by_id = {d: r.n_tok for d, r in docs.items()}
     assigned = {r.doc_id: r.bin_id for r in packed.collect()}
     seen_docs = 0
     for r in rows:
@@ -1668,6 +1529,8 @@ def test_pack_sequences_boundaries_and_conservation(spark):
             off += n_tok_by_id[d]
         assert list(r.doc_starts) == exp_starts
         assert off == r.n_tok
+        # tokens are the member docs' tokens concatenated in id order
+        assert list(r.tokens) == [t for d in members for t in docs[d].tokens]
         seen_docs += r.n_docs
     assert seen_docs == 300                      # every doc packed exactly once
 
@@ -2125,13 +1988,13 @@ def test_weighted_sample_topk_plan_and_validation(spark):
     from ulp_spark.operators import sampling
 
     seq = fixtures.sequences(spark, 1000)
-    out = sampling.weighted_sample(seq, "n_tok", "doc_id", k=20)
+    out = sampling.weighted_sample(seq, "n_tok", "doc_id", k=20, seed="ws0")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
     assert "Exchange" not in plan
     import pytest as _pytest
     with _pytest.raises(ValueError):
-        sampling.weighted_sample(seq, "n_tok", "doc_id", k=0)
+        sampling.weighted_sample(seq, "n_tok", "doc_id", k=0, seed="ws0")
 
 
 def test_length_bucket_stats_hand_computed(spark):
@@ -3450,46 +3313,6 @@ def test_gopher_rules_alpha_counts_unicode_letters(spark):
     want = {r[0]: tuple(r) for r in con.sql(
         curation.gopher_rules_sql("d", "text", "doc_id")).fetchall()}
     assert {k: tuple(r) for k, r in got.items()} == want
-
-
-def test_sft_loss_mask_clamps_and_counts(spark):
-    from ulp_spark.operators import tokens
-
-    df = spark.createDataFrame(
-        [("a", [1, 2, 3], -5), ("b", [1, 2, 3], 99),
-         ("c", [1, 2, 3], 2), ("d", [], 1)],
-        "doc_id string, tokens array<int>, prompt_len int")
-    got = {r.doc_id: r for r in
-           tokens.sft_loss_mask(df, "tokens", "prompt_len").collect()}
-    assert got["a"].loss_mask == [1, 1, 1] and got["a"].n_prompt == 0
-    assert got["b"].loss_mask == [0, 0, 0] and got["b"].n_target == 0
-    assert got["c"].loss_mask == [0, 0, 1]
-    assert got["c"].n_prompt == 2 and got["c"].n_target == 1
-    assert got["d"].loss_mask == [] and got["d"].n_prompt == 0
-
-
-def test_pack_sequences_extra_arrays_align(spark):
-    from ulp_spark import fixtures
-    from ulp_spark.operators import packing
-    from ulp_spark.operators.sampling import hash_bucket
-
-    # a 0/1 loss mask per token: 0 over the first prompt_len positions
-    prompt_len = (F.col("seq_no") * 7 % (F.col("n_tok") + 3)).cast("int")
-    masked = fixtures.sequences(spark, 120).select(
-        "doc_id", "tokens",
-        F.transform("tokens", lambda t, i: F.when(i < prompt_len, 0)
-                    .otherwise(1)).alias("loss_mask"))
-    pk = masked.select("doc_id", hash_bucket(F.col("doc_id"), 6).alias("bin_id"))
-    out = packing.pack_sequences(masked, pk, extra_array_cols=["loss_mask"])
-    docs = {r.doc_id: r for r in masked.collect()}
-    assign = {r.doc_id: r.bin_id for r in pk.collect()}
-    for r in out.collect():
-        ids = sorted(d for d, b in assign.items() if b == r.bin_id)
-        exp_mask = [m for d in ids for m in docs[d].loss_mask]
-        exp_toks = [t for d in ids for t in docs[d].tokens]
-        assert r.tokens == exp_toks
-        assert r.loss_mask == exp_mask
-        assert len(r.loss_mask) == len(r.tokens)
 
 
 def test_connected_components_scrambled_path(spark, monkeypatch):

@@ -1,6 +1,6 @@
 """Corpus-curation operators for training-data pipelines: Gopher-style
-repetition signals, passage-level dedup, PII redaction, per-group
-selection, token-budget mixing and boilerplate removal.
+repetition signals, passage-level dedup, PII redaction and boilerplate
+removal.
 
 These are the filters an LLM data pipeline runs AFTER parsing and BEFORE
 tokenization (reference analog: the per-record enrich/filter stage of the
@@ -31,7 +31,6 @@ from ulp_spark.session import seam
 PASSAGE_WORDS = 8          # words per dedup passage
 BOILER_MIN_DOCS = 2        # distinct docs that make a passage boilerplate
 ROUND = 6                  # decimal places for ratio outputs
-QUALITY_TOPK = 3           # documents quality_topk keeps per group
 
 
 # --------------------------------------------------------------------------
@@ -315,103 +314,6 @@ def redact_sql(text: str) -> tuple[str, dict[str, str]]:
         counts[name] = f"len(regexp_extract_all({out}, '{sp}'))"
         out = f"regexp_replace({out}, '{sp}', '{sr}', 'g')"
     return out, counts
-
-
-# --------------------------------------------------------------------------
-# selection & mixing (per-group top-k, token-budget selection)
-# --------------------------------------------------------------------------
-
-def quality_topk(
-    df: DataFrame, text_col: str, id_col: str, group_col: str,
-) -> DataFrame:
-    """Top-``QUALITY_TOPK`` documents per group by quality score (ties ->
-    smaller id).
-
-    The curation "select best exemplars per domain" move: one shuffle on
-    the group key, per-partition row_number — never a global sort. At
-    100 TB the group cardinality (domains/sources) bounds state, and
-    row_number over (group) is streaming-friendly within each partition.
-    """
-    from ulp_spark.operators import textstats
-
-    q = textstats.quality_score(F.col(text_col),
-                                F.size(word_tokens(F.col(text_col))))
-    w = Window.partitionBy(group_col).orderBy(
-        F.desc("q"), F.asc(id_col))
-    return (
-        df.select(group_col, id_col, q.alias("q"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= QUALITY_TOPK)
-    )
-
-
-def quality_topk_sql(
-    table: str, text_col: str, id_col: str, group_col: str,
-) -> str:
-    from ulp_spark.operators import textstats
-
-    q = textstats.quality_score_sql(text_col)
-    return f"""
-        WITH scored AS (
-            SELECT {group_col}, {id_col}, {q} AS q FROM {table}
-        )
-        SELECT {group_col}, {id_col}, q,
-               row_number() OVER (PARTITION BY {group_col}
-                                  ORDER BY q DESC, {id_col}) AS rank
-        FROM scored
-        QUALIFY rank <= {QUALITY_TOPK}
-    """
-
-
-def token_budget_mix(
-    df: DataFrame, text_col: str, id_col: str, group_col: str, budget: int,
-) -> DataFrame:
-    """Data mixing under a per-group token budget: walk each group in
-    ``id_col`` order, keep documents while the running token total stays
-    within ``budget``; report kept doc/token counts per group.
-
-    The prefix-sum is a per-group window (one shuffle on the group key);
-    it deliberately does NOT reuse packing.global_cumsum's two-phase
-    global form because the budget is per group — a group's prefix sum
-    is local to its partition after the shuffle. Skewed groups are the
-    risk at 100 TB; the filter (cum <= budget) prunes everything past
-    the budget, so cap-first-then-window (range-filter on a cheap doc
-    count) is the escalation.
-    """
-    tok = F.size(word_tokens(F.col(text_col)))
-    w = (Window.partitionBy(group_col).orderBy(id_col)
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    cum = F.sum(tok).over(w)
-    kept = (cum <= budget).cast("int")
-    return (
-        df.select(F.col(group_col), tok.alias("n_tok"), kept.alias("kept"))
-        .groupBy(group_col)
-        .agg(F.sum("kept").cast("bigint").alias("n_kept"),
-             F.sum(F.col("kept") * F.col("n_tok")).cast("bigint")
-              .alias("tokens_kept"))
-    )
-
-
-def token_budget_mix_sql(
-    table: str, text_col: str, id_col: str, group_col: str, budget: int,
-) -> str:
-    from ulp_spark.operators import textstats
-
-    tok = textstats.token_count_ws_sql(text_col)
-    return f"""
-        WITH cum AS (
-            SELECT {group_col}, {tok} AS n_tok,
-                   (sum({tok}) OVER (PARTITION BY {group_col}
-                                     ORDER BY {id_col}
-                                     ROWS UNBOUNDED PRECEDING)
-                    <= {budget})::INT AS kept
-            FROM {table}
-        )
-        SELECT {group_col},
-               sum(kept)::BIGINT AS n_kept,
-               sum(kept * n_tok)::BIGINT AS tokens_kept
-        FROM cum GROUP BY {group_col}
-    """
 
 
 # --------------------------------------------------------------------------

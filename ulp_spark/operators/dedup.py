@@ -364,7 +364,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     )
 
 
-def connected_components_sql(pairs_sql: str, id_alias: str = "id") -> str:
+def connected_components_sql(pairs_sql: str, id_alias: str) -> str:
     """DuckDB twin: exact transitive closure by recursive CTE (small-scale
     oracle only — the closure is quadratic in cluster size).
 

@@ -244,10 +244,7 @@ def bin_stats(packed: DataFrame, capacity: int = CHUNK) -> DataFrame:
     )
 
 
-def pack_sequences(
-    seq: DataFrame, packed: DataFrame,
-    extra_array_cols: list[str] | None = None,
-) -> DataFrame:
+def pack_sequences(seq: DataFrame, packed: DataFrame) -> DataFrame:
     """Materialize the training rows for a pack_bins assignment: one row
     per bin — (bin_id, tokens, doc_starts, n_docs, n_tok) where tokens is
     the bin's documents concatenated (ascending id order — deterministic,
@@ -265,20 +262,11 @@ def pack_sequences(
     No SQL twin: the upstream FFD assignment is itself non-relational;
     invariants (flatten length == sum n_tok, starts == exclusive prefix
     sums, every doc exactly once) are pinned in pytest instead.
-
-    ``extra_array_cols`` packs ADDITIONAL per-document arrays (e.g. an
-    SFT loss mask) positionally alongside the tokens: each named
-    column is concatenated in the SAME ascending-id order, so
-    out[extra][p] annotates out[tokens][p] exactly — the packed-SFT
-    recipe (mask the docs, pack once, train on the packed pair).
-    Callers must guarantee each extra array is length-aligned with its
-    document's tokens.
     """
-    extras = list(extra_array_cols or [])
-    j = seq.select("doc_id", "tokens", *extras).join(
+    j = seq.select("doc_id", "tokens").join(
         packed.select("doc_id", "bin_id"), "doc_id")
     grouped = j.groupBy("bin_id").agg(
-        F.array_sort(F.collect_list(F.struct("doc_id", "tokens", *extras)))
+        F.array_sort(F.collect_list(F.struct("doc_id", "tokens")))
         .alias("__arr"))
     arr = F.col("__arr")
     toks = F.flatten(F.transform(arr, lambda s: s["tokens"]))
@@ -291,18 +279,9 @@ def pack_sequences(
             (acc["off"] + F.size(s["tokens"])).alias("off")),
         lambda acc: acc["st"],
     )
-    def _field(c):
-        # closure, not a default arg: a 2-parameter lambda would make
-        # F.transform pass the element INDEX as the second argument
-        return lambda s: s[c]
-
-    extra_out = [
-        F.flatten(F.transform(arr, _field(c))).alias(c) for c in extras
-    ]
     return grouped.select(
         "bin_id",
         toks.alias("tokens"),
-        *extra_out,
         starts.alias("doc_starts"),
         F.size(arr).alias("n_docs"),
         F.size(toks).alias("n_tok"),

@@ -6,11 +6,9 @@ so membership derives from a content-stable hash of the id, never from
 ``rand()``/``TABLESAMPLE`` (both partition-layout-dependent in Spark).
 
 ``hash_bucket`` maps an id to [0, buckets) via the first 8 md5 hex chars —
-the same fold the dedup shingles use, identical in DuckDB — and
-``split_label`` turns cumulative percentage weights into named splits.
-Filtering by bucket is a pure codegen'd predicate: at 100 TB a 1%% sample
-is a scan-time filter (no shuffle, combine-friendly), and the split
-column is broadcast-free.
+the same fold the dedup shingles use, identical in DuckDB.  Filtering by
+bucket is a pure codegen'd predicate: at 100 TB a 1%% sample is a
+scan-time filter (no shuffle, combine-friendly).
 """
 
 from __future__ import annotations
@@ -18,42 +16,17 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# (name, percent) in bucket order; the percents sum to 100
-SPLITS: list[tuple[str, int]] = [("train", 90), ("val", 5), ("test", 5)]
-
-
-def hash_bucket(id_col: Column, buckets: int = 100) -> Column:
+def hash_bucket(id_col: Column, buckets: int) -> Column:
     """Deterministic bucket in [0, buckets) from md5 of the id's string."""
     h = F.conv(F.substring(F.md5(id_col.cast("string")), 1, 8), 16, 10)
     return (h.cast("bigint") % buckets).cast("int")
 
 
-def hash_bucket_sql(id_expr: str, buckets: int = 100) -> str:
+def hash_bucket_sql(id_expr: str, buckets: int) -> str:
     return (
         f"CAST(CAST(('0x' || substr(md5(CAST({id_expr} AS VARCHAR)), 1, 8)) "
         f"AS BIGINT) % {buckets} AS INTEGER)"
     )
-
-
-def split_label(id_col: Column) -> Column:
-    """Named split from the cumulative percentage weights of ``SPLITS``."""
-    b = hash_bucket(id_col, 100)
-    out = None
-    hi = 0
-    for name, w in SPLITS:
-        hi += w
-        out = F.when(b < hi, F.lit(name)) if out is None else out.when(
-            b < hi, F.lit(name))
-    return out
-
-
-def split_label_sql(id_expr: str) -> str:
-    b = hash_bucket_sql(id_expr, 100)
-    hi, cases = 0, []
-    for name, w in SPLITS:
-        hi += w
-        cases.append(f"WHEN ({b}) < {hi} THEN '{name}'")
-    return "CASE " + " ".join(cases) + " END"
 
 
 def stratified_keep(
@@ -104,7 +77,7 @@ def _uniform01_sql(id_expr: str, seed: str) -> str:
 
 
 def weighted_sample(
-    df, weight_col: str, id_col: str, k: int, seed: str = "ws0",
+    df, weight_col: str, id_col: str, k: int, seed: str,
 ) -> "DataFrame":
     """Weighted sampling WITHOUT replacement: k rows, inclusion odds
     proportional to ``weight_col`` (e.g. n_tok => token-proportional doc
@@ -139,7 +112,7 @@ def weighted_sample(
 
 
 def weighted_sample_sql(
-    table: str, weight_col: str, id_col: str, k: int, seed: str = "ws0",
+    table: str, weight_col: str, id_col: str, k: int, seed: str,
     cols: str = "*",
 ) -> str:
     u = _uniform01_sql(id_col, seed)

@@ -49,7 +49,7 @@ def shard_manifest(
                          "doc_id", "n_tok")
 
 
-def shard_manifest_sql(table: str, shard_tokens: int = SHARD_TOKENS) -> str:
+def shard_manifest_sql(table: str, shard_tokens: int) -> str:
     """DuckDB twin (plain window cumsum — single node by design)."""
     return f"""
     WITH c AS (

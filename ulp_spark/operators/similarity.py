@@ -240,7 +240,7 @@ def tune_n_probe(
 
 
 def ivf_assign(vec: Column, centroids: list[list[float]],
-               vec_norm: Column | None = None) -> Column:
+               vec_norm: Column) -> Column:
     """Nearest-centroid cell id by cosine; first centroid wins ties
     (``array_position`` returns the FIRST index of the max — identical to
     a strictly-greater sequential fold, on both engines).
@@ -254,9 +254,9 @@ def ivf_assign(vec: Column, centroids: list[list[float]],
     Per-row cost is ONE dot product per centroid: each centroid's norm is
     a driver-computed literal (``_py_norm`` — bit-identical to the JVM
     fold it replaces, so the rounded cosines and hence the cell ids are
-    unchanged), and callers that already staged ``norm(vec)`` as a column
-    pass it via ``vec_norm`` so the row norm is not re-folded k times
-    (the r6 measurement: 3x on the assignment pass at k=32, dim=64).
+    unchanged), and ``vec_norm`` is the row's ``norm(vec)``, staged as a
+    column by the caller so it is not re-folded k times (the r6
+    measurement: 3x on the assignment pass at k=32, dim=64).
 
     The centroids ride as ONE array-of-(vector, norm)-structs literal and
     the cosines come from a ``transform`` over it, instead of k unrolled
@@ -265,7 +265,6 @@ def ivf_assign(vec: Column, centroids: list[list[float]],
     0.31 s per fresh plan at k=8 — the trainer re-plans every Lloyd
     round with fresh literals).  Same arithmetic per element — cell ids
     bit-identical (pinned by the oracle-gated emb_ivf_* queries)."""
-    nv = vec_norm if vec_norm is not None else norm(vec)
     packed = F.array(*[
         F.struct(F.array(*[F.lit(float(x)) for x in c]).alias("v"),
                  F.lit(_py_norm([float(x) for x in c])).alias("n"))
@@ -273,7 +272,8 @@ def ivf_assign(vec: Column, centroids: list[list[float]],
     sims = F.transform(
         packed,
         lambda s: F.round(
-            F.when(nv * s["n"] > 0, dot(vec, s["v"]) / (nv * s["n"]))
+            F.when(vec_norm * s["n"] > 0,
+                   dot(vec, s["v"]) / (vec_norm * s["n"]))
             .otherwise(F.lit(0.0)), 6))
     return (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
 

@@ -1,10 +1,10 @@
-"""Text analysis for training-data pipelines: language ID, quality scoring,
-token counting, document fingerprinting.
+"""Text analysis for training-data pipelines: quality scoring, token
+counting, document fingerprinting.
 
 All pure Column expressions (regexp_count / split / md5), with DuckDB SQL
 twins — identical numbers on both engines, so every op is oracle-gated.
 The heuristics are deliberately simple and deterministic (no model files):
-n-gram/stopword evidence for language, surface statistics for quality.
+surface statistics and English stopword evidence for quality.
 """
 
 from __future__ import annotations
@@ -12,13 +12,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Stopword evidence per language (lowercase, matched as whole words).
-LANG_MARKERS: dict[str, list[str]] = {
-    "en": ["the", "and", "of", "to", "is", "in", "that", "it"],
-    "de": ["der", "die", "und", "das", "ist", "nicht", "ein", "zu"],
-    "fr": ["le", "la", "les", "et", "est", "une", "que", "des"],
-    "es": ["el", "los", "las", "es", "una", "que", "por", "para"],
-}
 # Whitespace written out as an explicit class: Java regex \s includes
 # vertical tab \x0B but RE2 (DuckDB) \s does not, so a bare `\s` drifts
 # between the two engines on \x0B. Both engines read this class
@@ -26,42 +19,9 @@ LANG_MARKERS: dict[str, list[str]] = {
 WS = r"\t\n\x0B\f\r "
 SPLIT_WS = rf"[{WS}]+"
 PUNCT_RE = rf"[^A-Za-z0-9{WS}]"
-STOP_EN = LANG_MARKERS["en"]
-
-
-def _marker_pattern(words: list[str]) -> str:
-    return r"\b(" + "|".join(words) + r")\b"
-
-
-def lang_scores(text: Column) -> dict[str, Column]:
-    low = F.lower(text)
-    return {
-        lang: F.regexp_count(low, F.lit(_marker_pattern(words)))
-        for lang, words in LANG_MARKERS.items()
-    }
-
-
-def lang_id(text: Column) -> Column:
-    """argmax language by stopword hits; 'und' (undetermined) when no hits.
-    Ties resolve in fixed key order (en, de, fr, es)."""
-    scores = lang_scores(text)
-    best_lang, best_score = F.lit("und"), F.lit(0)
-    for lang in LANG_MARKERS:  # insertion order = tie-break order
-        s = scores[lang]
-        better = s > best_score
-        best_lang = F.when(better, F.lit(lang)).otherwise(best_lang)
-        best_score = F.when(better, s).otherwise(best_score)
-    return best_lang
-
-
-def lang_id_sql(text: str) -> str:
-    """Same sequential strictly-greater fold as :func:`lang_id`."""
-    best_lang, best_score = "'und'", "0"
-    for lang, words in LANG_MARKERS.items():
-        s = f"len(regexp_extract_all(lower({text}), '{_marker_pattern(words)}'))"
-        best_lang = f"CASE WHEN {s} > ({best_score}) THEN '{lang}' ELSE {best_lang} END"
-        best_score = f"greatest({s}, {best_score})"
-    return best_lang
+# English stopwords (lowercase, matched as whole words)
+STOP_EN = ["the", "and", "of", "to", "is", "in", "that", "it"]
+STOP_EN_RE = r"\b(" + "|".join(STOP_EN) + r")\b"
 
 
 def token_count_ws_sql(text: str) -> str:
@@ -82,7 +42,7 @@ def quality_features(text: Column, n_tokens: Column) -> dict[str, Column]:
     n_chars = F.length(text)
     n_tok = n_tokens
     n_punct = F.regexp_count(text, F.lit(PUNCT_RE))
-    n_stop = F.regexp_count(F.lower(text), F.lit(_marker_pattern(STOP_EN)))
+    n_stop = F.regexp_count(F.lower(text), F.lit(STOP_EN_RE))
     safe_chars = F.greatest(n_chars, F.lit(1)).cast("double")
     safe_tok = F.greatest(n_tok, F.lit(1)).cast("double")
     return {
@@ -108,7 +68,7 @@ def quality_features_sql(text: str) -> dict[str, str]:
     n_chars = f"len({text})"
     n_tok = token_count_ws_sql(text)
     n_punct = f"len(regexp_extract_all({text}, '{PUNCT_RE}'))"
-    n_stop = f"len(regexp_extract_all(lower({text}), '{_marker_pattern(STOP_EN)}'))"
+    n_stop = f"len(regexp_extract_all(lower({text}), '{STOP_EN_RE}'))"
     return {
         "n_chars": n_chars,
         "n_tokens": n_tok,

@@ -109,76 +109,7 @@ def token_grams_sql(tokens: str) -> str:
     )
 
 
-def duplicate_gram_coverage(
-    df: DataFrame, tokens_col: str, id_col: str,
-) -> DataFrame:
-    """Per-sequence fraction of its distinct token ``GRAM``-gram windows that
-    also occur in at least one OTHER sequence — the ExactSubstr dedup
-    signal (Lee et al. 2021, "Deduplicating Training Data Makes Language
-    Models Better") at window granularity, on token ids.  Where
-    ``sequence_exact_dedup`` catches bitwise-identical sequences and
-    ``contamination_coverage`` measures eval overlap, this scores PARTIAL
-    cross-document duplication (boilerplate, quoted spans, template text)
-    so a curation pass can drop or de-weight high-coverage rows.
-
-    Returns (id, n_grams, n_dup_grams, dup_frac) for every sequence with
-    at least one full window (rows shorter than ``GRAM`` tokens have no
-    windows and are omitted — same rule on both engines).
-
-    Scale shape: explode to DISTINCT (id, gram-md5) pairs (map-side
-    partial distinct collapses intra-doc repeats before the shuffle),
-    seam-materialized ONCE to feed both the gram census and the per-doc
-    rollup; the census is a count aggregate on the 16-byte key, and the
-    join back is key-only (AQE broadcasts the census when it fits,
-    skew-splits otherwise).  Token arrays never leave the scan stage;
-    no posting lists, no pair materialization.
-    """
-    pairs = (
-        df.select(F.col(id_col),
-                  F.explode(token_grams(F.col(tokens_col))).alias("gk"))
-        .distinct()
-    )
-    pairs = seam(pairs)  # feeds the census AND the per-doc rollup
-    census = pairs.groupBy("gk").agg(F.count(F.lit(1)).alias("n_docs"))
-    dup = (census.filter(F.col("n_docs") > 1)
-           .select("gk", F.lit(True).alias("is_dup")))
-    n_dup = F.coalesce(F.sum(F.col("is_dup").cast("bigint")),
-                       F.lit(0).cast("bigint"))
-    return (
-        pairs.join(dup, "gk", "left")
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("n_grams"),
-             n_dup.alias("n_dup_grams"))
-        .select(id_col, "n_grams", "n_dup_grams",
-                F.round(F.col("n_dup_grams") / F.col("n_grams"), 6)
-                .alias("dup_frac"))
-    )
-
-
-def duplicate_gram_coverage_sql(
-    table: str, tokens_col: str, id_col: str,
-) -> str:
-    """DuckDB twin: same distinct-pair -> census -> rollup derivation."""
-    grams = token_grams_sql(tokens_col)
-    return f"""
-        WITH pairs AS (
-          SELECT DISTINCT {id_col}, gk FROM (
-            SELECT {id_col}, unnest({grams}) AS gk FROM {table})
-        ),
-        census AS (SELECT gk, count(*) AS n_docs FROM pairs GROUP BY gk)
-        SELECT {id_col}, count(*)::BIGINT AS n_grams,
-               sum(CASE WHEN n_docs > 1 THEN 1 ELSE 0 END)::BIGINT
-                 AS n_dup_grams,
-               round(sum(CASE WHEN n_docs > 1 THEN 1 ELSE 0 END)::DOUBLE
-                     / count(*), 6) AS dup_frac
-        FROM pairs JOIN census USING (gk)
-        GROUP BY {id_col}
-    """
-
-
-def source_temperature_weights(
-    df: DataFrame, budget: int | None = None,
-) -> DataFrame:
+def source_temperature_weights(df: DataFrame, budget: int) -> DataFrame:
     """Temperature-based source mixing weights — the multilingual /
     multi-corpus reweighting scheme (XLM-R's exponentiated sampling,
     alpha = ``MIX_ALPHA``): a source holding share p of the corpus tokens
@@ -186,12 +117,12 @@ def source_temperature_weights(
     low-resource sources without discarding anything.
 
     Returns one row per source: (source, n_tokens, p_natural, q_temp,
-    up_weight, budget_tokens?) where q_temp = n_s**alpha / sum_t
+    up_weight, budget_tokens) where q_temp = n_s**alpha / sum_t
     n_t**alpha (the corpus total cancels algebraically, so no second
     normalization pass is needed), up_weight = q/p is the per-token
     sampling multiplier a downstream sampler applies, and budget_tokens =
-    floor(q * budget) when a token budget is given (floor, not round —
-    identical banker's-vs-half-up behavior on both engines).  All ratios
+    floor(q * budget), the source's share of the token budget (floor, not
+    round — identical banker's-vs-half-up behavior on both engines).  All ratios
     rounded to 6 dp for cross-engine parity.
 
     Scale shape: ONE aggregate over (source, n_tok) — map-side combine
@@ -215,22 +146,18 @@ def source_temperature_weights(
     )
     p = F.col("n_tokens") / F.col("__N")
     q = F.pow("n_tokens", F.lit(MIX_ALPHA)) / F.col("__Z")
-    cols = [
+    return per.crossJoin(F.broadcast(tot)).select(
         F.col("source"), F.col("n_tokens"),
         F.round(p, 6).alias("p_natural"),
         F.round(q, 6).alias("q_temp"),
         F.round(q / p, 6).alias("up_weight"),
-    ]
-    if budget is not None:
-        cols.append(
-            F.floor(q * F.lit(float(budget))).cast("bigint")
-            .alias("budget_tokens"))
-    return per.crossJoin(F.broadcast(tot)).select(*cols)
+        F.floor(q * F.lit(float(budget))).cast("bigint")
+        .alias("budget_tokens"),
+    )
 
 
 def source_temperature_weights_sql(table: str, budget: int) -> str:
-    """DuckDB twin (with the budget column): same cancelled-normalizer
-    derivation."""
+    """DuckDB twin: same cancelled-normalizer derivation."""
     return f"""
         WITH per AS (
           SELECT coalesce(source, '__null__') AS source,
@@ -376,9 +303,7 @@ def balanced_writer_loads_sql(
     """
 
 
-def source_mixing_plan(
-    df: DataFrame, budget: int = 1_000_000_000,
-) -> DataFrame:
+def source_mixing_plan(df: DataFrame, budget: int) -> DataFrame:
     """Executable form of source_temperature_weights: per source, how
     many FULL passes over its data to take plus the fractional tail —
     (source, n_tokens, budget_tokens, n_epochs, tail_frac), where
@@ -1758,7 +1683,7 @@ def span_corruption(
 
 
 def span_corruption_sql(
-    table: str, rate: float = 0.15, span_len: int = 3, seed: str = "sc0",
+    table: str, rate: float, span_len: int, seed: str = "sc0",
 ) -> str:
     from ulp_spark.operators.sampling import _uniform01_sql
 
@@ -2121,51 +2046,4 @@ def gram_novelty_sql(
                      / count(*), 6) AS novel_frac
         FROM pairs JOIN first USING (gk)
         GROUP BY {id_col}
-    """
-
-
-def sft_loss_mask(
-    df: DataFrame, tokens_col: str, prompt_len_col: str,
-) -> DataFrame:
-    """Instruction-tuning LOSS MASK: for rows carrying a prompt/completion
-    boundary (``prompt_len_col`` = number of leading prompt tokens), emit
-    loss_mask[p] = 0 for prompt positions and 1 for completion positions
-    — the standard SFT convention where the model is only penalized on
-    the response — plus the n_prompt/n_target token accounting a batch
-    scheduler budgets with.  Prompt lengths are CLAMPED into [0, n_tok]
-    (a malformed boundary masks everything or nothing rather than
-    corrupting array shapes; the clamped value is what's reported).
-
-    Returns the input row + (loss_mask array<int>, n_prompt, n_target).
-
-    Scale shape: two array_repeat concats per row — pure per-row JVM
-    array algebra, zero shuffle, one codegen span, partition-invariant.
-    Composes with pack_segments downstream: pack the masked rows, then
-    a trainer multiplies loss_mask into the packed cross-entropy.
-    """
-    n = F.size(F.col(tokens_col))
-    pl = F.greatest(
-        F.lit(0), F.least(F.col(prompt_len_col).cast("int"), n))
-    mask = F.concat(
-        F.array_repeat(F.lit(0).cast("int"), pl),
-        F.array_repeat(F.lit(1).cast("int"), n - pl))
-    return df.select(
-        "*", mask.alias("loss_mask"), pl.alias("n_prompt"),
-        (n - pl).alias("n_target"))
-
-
-def sft_loss_mask_sql(
-    table: str, tokens_col: str, prompt_len_col: str,
-) -> str:
-    """DuckDB twin: same clamp, same repeat-concat mask."""
-    n = f"len({tokens_col})"
-    pl = f"greatest(0, least(CAST({prompt_len_col} AS INTEGER), {n}))"
-    return f"""
-        SELECT *,
-               list_concat([CAST(0 AS INTEGER) FOR x IN range({pl})],
-                           [CAST(1 AS INTEGER) FOR x IN range({n} - {pl})])
-                 AS loss_mask,
-               CAST({pl} AS INTEGER) AS n_prompt,
-               CAST({n} - {pl} AS INTEGER) AS n_target
-        FROM {table}
     """

@@ -1,5 +1,5 @@
 """Vocabulary / tokenizer-training statistics over a document corpus:
-word-frequency top-k and BPE-style adjacent-character-pair counts.
+word frequencies and BPE-style adjacent-character-pair counts.
 
 These are the aggregations a tokenizer-training pipeline runs over the
 full corpus before BPE merges can be chosen (Sennrich et al. 2016,
@@ -26,13 +26,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ulp_spark.operators.curation import (word_grams, word_tokens,
-                                          word_tokens_sql)
+from ulp_spark.operators.curation import word_tokens, word_tokens_sql
 
 BPE_MIN_COUNT = 2  # a pair seen fewer times than this ends bpe training
-VOCAB_TOPK = 50  # words vocab_topk returns
 BPE_TOP_MERGES = 20  # merges bpe_top_merges returns by default
-BIGRAM_MIN_COUNT = 3  # corpus count that makes a bigram "covered"
 
 
 def word_counts(df: DataFrame, text_col: str) -> DataFrame:
@@ -49,21 +46,6 @@ def word_counts_sql(table: str, text_col: str) -> str:
     FROM (SELECT unnest({word_tokens_sql(text_col)}) AS w FROM {table})
     GROUP BY w
     """
-
-
-def vocab_topk(df: DataFrame, text_col: str) -> DataFrame:
-    """Top-``VOCAB_TOPK`` words by frequency (ties -> lexicographically
-    smaller)."""
-    return (
-        word_counts(df, text_col)
-        .orderBy(F.col("n").desc(), F.col("word"))
-        .limit(VOCAB_TOPK)
-    )
-
-
-def vocab_topk_sql(table: str, text_col: str) -> str:
-    return (f"SELECT word, n FROM ({word_counts_sql(table, text_col)}) "
-            f"ORDER BY n DESC, word LIMIT {VOCAB_TOPK}")
 
 
 def _char_pairs(word: Column) -> Column:
@@ -118,90 +100,6 @@ def bpe_top_merges_sql(table: str, text_col: str) -> str:
     return (f"SELECT pair, n FROM ({bpe_pair_counts_sql(table, text_col)}) "
             f"ORDER BY n DESC, pair LIMIT {BPE_TOP_MERGES}")
 
-
-# --------------------------------------------------------------------------
-# bigram LM coverage (CCNet-style fluency signal, exact arithmetic)
-# --------------------------------------------------------------------------
-
-def bigram_counts(df: DataFrame, text_col: str) -> DataFrame:
-    """(gram, n) corpus word-bigram counts ("w1 w2" keys) — the model side
-    of coverage scoring.  Same collapse-to-vocab-scale shape as
-    word_counts."""
-    # token array staged first: word_grams re-evaluates a non-attribute
-    # tokens expression per gram (the reused-expression trap, r6)
-    return (
-        df.select(word_tokens(F.col(text_col)).alias("__toks"))
-        .select(F.explode(word_grams(F.col("__toks"), 2)).alias("gram"))
-        .groupBy("gram").agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def bigram_coverage(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Per-doc fluency signal: fraction of word-bigram OCCURRENCES whose
-    corpus count is >= ``BIGRAM_MIN_COUNT`` (CCNet-style LM filtering with
-    the perplexity model replaced by exact corpus statistics, so the score
-    is integer-ratio-exact and oracle-gated; a real KenLM swap would only
-    change the scoring UDF).
-
-    Shape: docs explode to (doc_id, gram) -> ONE shuffle join against the
-    vocab-scale bigram model on the gram key -> per-doc aggregate.  Docs
-    with < 2 tokens keep a row (0 bigrams, 0.0 coverage) via the final
-    left join.  Rounding: ratio of two bigints rounded to 6 dp — no
-    float summation anywhere.
-    """
-    grams = df.select(
-        F.col(id_col), word_tokens(F.col(text_col)).alias("__toks"),
-    ).select(F.col(id_col), F.explode(word_grams(F.col("__toks"), 2))
-             .alias("gram"))
-    model = bigram_counts(df, text_col)
-    per_doc = (
-        grams.join(model, "gram")
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("n_bigrams"),
-             F.sum((F.col("n") >= BIGRAM_MIN_COUNT).cast("bigint"))
-              .alias("n_common"))
-    )
-    base = df.select(F.col(id_col))
-    out = base.join(per_doc, id_col, "left")
-    n_bi = F.coalesce("n_bigrams", F.lit(0)).cast("bigint")
-    n_co = F.coalesce("n_common", F.lit(0)).cast("bigint")
-    frac = F.when(n_bi == 0, F.lit(0.0)).otherwise(
-        F.round(n_co.cast("double") / n_bi, 6))
-    return out.select(id_col, n_bi.alias("n_bigrams"),
-                      n_co.alias("n_common"), frac.alias("common_frac"))
-
-
-def bigram_coverage_sql(table: str, text_col: str, id_col: str) -> str:
-    from ulp_spark.operators.curation import word_grams_sql
-    toks = word_tokens_sql(text_col)
-    return f"""
-    WITH grams AS (
-      SELECT {id_col}, unnest({word_grams_sql(toks, 2)}) AS gram
-      FROM {table}
-    ),
-    model AS (
-      SELECT gram, count(*)::BIGINT AS n FROM grams GROUP BY gram
-    ),
-    per_doc AS (
-      SELECT g.{id_col}, count(*)::BIGINT AS n_bigrams,
-             sum(CASE WHEN m.n >= {BIGRAM_MIN_COUNT} THEN 1 ELSE 0 END)::BIGINT
-               AS n_common
-      FROM grams g JOIN model m USING (gram)
-      GROUP BY g.{id_col}
-    )
-    SELECT t.{id_col},
-           coalesce(p.n_bigrams, 0)::BIGINT AS n_bigrams,
-           coalesce(p.n_common, 0)::BIGINT AS n_common,
-           CASE WHEN coalesce(p.n_bigrams, 0) = 0 THEN 0.0
-                ELSE round(coalesce(p.n_common, 0)::DOUBLE
-                           / p.n_bigrams, 6) END AS common_frac
-    FROM {table} t LEFT JOIN per_doc p USING ({id_col})
-    """
-
-
-# --------------------------------------------------------------------------
-# BPE TRAINING (Sennrich et al. 2016) — the full iterative merge loop
-# --------------------------------------------------------------------------
 
 def bpe_train(
     df: DataFrame, text_col: str, n_merges: int, max_words: int = 200_000,
