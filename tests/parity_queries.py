@@ -99,9 +99,7 @@ def _q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_bpe_top_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First 20 greedy BPE merge candidates: adjacent-char-pair counts
     weighted by word frequency, computed at vocabulary scale."""
-    from ulp_spark.operators import vocab
-
-    return vocab.bpe_top_merges(_docs(spark, sf_dir), "text", k=20)
+    return _vocab.bpe_top_merges(_docs(spark, sf_dir), "text", k=20)
 
 
 def _q_events_json_path(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -181,8 +179,6 @@ def _q_seq_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style duplicate-n-gram signals, per doc (zero shuffle;
     staged projections — see curation.repetition_stats docstring)."""
-    from ulp_spark.operators import curation
-
     return curation.repetition_stats(_docs(spark, sf_dir), "text", "doc_id")
 
 
@@ -190,16 +186,12 @@ def _q_doc_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style passage dedup: per-doc duplicated-chunk fraction vs the
     whole corpus (default ``via="join"``: the seamed passage table's
     count > 1 hash set joined back, then a per-doc aggregate)."""
-    from ulp_spark.operators import curation
-
     return curation.passage_dup_stats(_docs(spark, sf_dir), "text", "doc_id")
 
 
 def _q_events_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrub over a derived per-event log line (email + IPv4 rules,
     pure regexp_replace — the enrich stage's redaction pass)."""
-    from ulp_spark.operators import curation
-
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     line = F.concat(
         F.col("event_type"), F.lit(" u"), F.col("user_id").cast("string"),
@@ -313,22 +305,16 @@ def _nested_schema_oracle() -> str:
 
 
 def _curation_repetition_oracle() -> str:
-    from ulp_spark.operators import curation
-
     sig = curation.repetition_signals_sql("text")
     cols = ", ".join(f"{v} AS {k}" for k, v in sig.items())
     return f"SELECT doc_id, {cols} FROM documents"
 
 
 def _curation_passage_oracle() -> str:
-    from ulp_spark.operators import curation
-
     return curation.passage_dup_stats_sql("documents", "text", "doc_id")
 
 
 def _curation_pii_oracle() -> str:
-    from ulp_spark.operators import curation
-
     line = ("(event_type || ' u' || CAST(user_id AS VARCHAR) "
             "|| '@example.com from 10.' || CAST(user_id % 256 AS VARCHAR) "
             "|| '.' || CAST(event_id % 256 AS VARCHAR) || '.7')")

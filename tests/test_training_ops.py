@@ -135,9 +135,19 @@ def test_embedding_near_dup_degenerate_bucket_capped(spark):
     assert got == [(9001, 9002)]
 
 
-def test_global_cumsum_partition_invariant(spark):
+def _patch_parallelism(monkeypatch, n):
+    """Make ``SparkContext.defaultParallelism`` (a property) read ``n``:
+    the bucket count of ``global_cumsum`` and the partition count of
+    ``spark.range`` without an explicit one."""
+    from pyspark import SparkContext
+
+    monkeypatch.setattr(SparkContext, "defaultParallelism",
+                        property(lambda self: n))
+
+
+def test_global_cumsum_partition_invariant(spark, monkeypatch):
     """The two-phase prefix sum must equal the single-node cumsum at any
-    partition count, and the plan must never collapse to one task (no
+    bucket count, and the plan must never collapse to one task (no
     partition-less Window over the whole frame)."""
     from ulp_spark.operators import packing
 
@@ -149,35 +159,38 @@ def test_global_cumsum_partition_invariant(spark):
         exp[f"d-{i:05d}"] = acc
         acc += (i * 7) % 100 + 1
     for parts in (1, 3, 16):
+        _patch_parallelism(monkeypatch, parts)
         got = {r.k: r.tok_offset for r in packing.global_cumsum(
-            df, "k", "v", partitions=parts).collect()}
-        assert got == exp, f"partitions={parts}"
+            df, "k", "v").collect()}
+        assert got == exp, f"buckets={parts}"
     # INPUT-partitioning invariance: same answer from a reshuffled input
-    # (the r4 data-derived __pid must not depend on physical layout)
+    # (the data-derived __pid must not depend on physical layout)
+    _patch_parallelism(monkeypatch, 5)
     got = {r.k: r.tok_offset for r in packing.global_cumsum(
-        df.repartition(11), "k", "v", partitions=5).collect()}
+        df.repartition(11), "k", "v").collect()}
     assert got == exp
     # edge inputs of the boundary sampler: an empty frame, and fewer rows
     # (50) than the sample size (8 buckets x 100 keys) — taken whole
-    assert packing.global_cumsum(
-        df.limit(0), "k", "v", partitions=8).collect() == []
+    _patch_parallelism(monkeypatch, 8)
+    assert packing.global_cumsum(df.limit(0), "k", "v").collect() == []
     small = df.filter(F.col("id") < 50)
     got = {r.k: r.tok_offset for r in packing.global_cumsum(
-        small, "k", "v", partitions=8).collect()}
+        small, "k", "v").collect()}
     assert got == {k: v for k, v in exp.items() if int(k[2:]) < 50}
 
 
-def test_global_cumsum_single_full_data_exchange(spark):
-    """VERDICT r3 #7: the prefix sum's plan must contain exactly ONE
-    exchange over the full data — the window's hash partition by the
-    data-derived bucket id.  (The old localCheckpoint design paid a range
-    shuffle AND a pid re-shuffle.)"""
+def test_global_cumsum_single_full_data_exchange(spark, monkeypatch):
+    """The prefix sum's plan contains exactly ONE exchange over the full
+    data, the window's hash partition by the data-derived bucket id, and
+    no checkpoint or RDD scan: the bucket id is a pure expression over
+    the key, so the totals pass and the window agree without one."""
     from ulp_spark.operators import packing
 
     df = spark.range(0, 5000).select(
         F.format_string("d-%05d", F.col("id")).alias("k"),
         (F.col("id") % 97 + 1).alias("v"))
-    out = packing.global_cumsum(df, "k", "v", partitions=8)
+    _patch_parallelism(monkeypatch, 8)
+    out = packing.global_cumsum(df, "k", "v")
     plan = out._jdf.queryExecution().executedPlan().toString()
     exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
     assert len(exchanges) == 1, exchanges
@@ -369,8 +382,9 @@ def test_connected_components_raises_without_convergence(spark, monkeypatch):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "id_a long, id_b long")
     _forbid_conf_writes(monkeypatch)
+    monkeypatch.setattr(dedup, "MAX_ROUNDS", 1)
     with _pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(pairs, max_iter=1)
+        dedup.connected_components(pairs)
 
 
 def test_connected_components_evaluates_pairs_once(spark):
@@ -394,7 +408,8 @@ def test_connected_components_evaluates_pairs_once(spark):
     assert evaluated.value == len(edges)
 
 
-def test_connected_components_job_budget_per_round(spark, count_jobs):
+def test_connected_components_job_budget_per_round(spark, count_jobs,
+                                                   monkeypatch):
     """Jobs per star round, pinned on a small chain graph that one or two
     rounds cannot contract: the difference between stopping after two
     rounds and after one is one round's jobs.  Today a round runs 10, and
@@ -405,8 +420,9 @@ def test_connected_components_job_budget_per_round(spark, count_jobs):
         [(i, i + 1) for i in range(40)], "id_a long, id_b long")
 
     def rounds(k):
+        monkeypatch.setattr(dedup, "MAX_ROUNDS", k)
         with pytest.raises(RuntimeError, match="did not converge"):
-            dedup.connected_components(pairs, max_iter=k)
+            dedup.connected_components(pairs)
 
     _, one = count_jobs(lambda: rounds(1))
     _, two = count_jobs(lambda: rounds(2))
@@ -475,28 +491,23 @@ def test_passage_dedup_skew_paths_agree_on_degenerate_corpus(spark):
 
 
 def test_shard_writer_roundtrip(spark, tmp_path):
-    """write_shards: shard-partitioned parquet whose re-read manifest
-    matches the planned one; every shard's token span starts inside its
-    budget window (straddle rule: a sequence belongs to the shard of its
-    FIRST token)."""
+    """write_shards: shard-partitioned parquet whose manifest, read back
+    from the written files, equals the planned one row for row, with
+    ``shard`` a bigint; every shard's token span starts inside its budget
+    window (straddle rule: a sequence belongs to the shard of its FIRST
+    token)."""
     from ulp_spark import fixtures
     from ulp_spark.operators import sharding
 
     seq = fixtures.sequences(spark, 2_000).select("doc_id", "n_tok")
     path = str(tmp_path / "shards")
     st = 64 * 1024
-    # verify=True exercises the post-write audit path (manifest derived
-    # from `assigned` must equal the one aggregated from the re-read
-    # output, shard dtype included) — raises on any mismatch
-    mdf = sharding.write_shards(seq, path, shard_tokens=st, verify=True)
+    mdf = sharding.write_shards(seq, path, shard_tokens=st)
+    planned = sharding.shard_manifest(seq, shard_tokens=st)
     assert dict(mdf.dtypes)["shard"] == "bigint"
-    manifest = {r.shard: r for r in mdf.collect()}
-    planned = {r.shard: r for r in sharding.shard_manifest(
-        seq, shard_tokens=st).collect()}
-    assert set(manifest) == set(planned)
-    for s in manifest:
-        assert manifest[s].n_seqs == planned[s].n_seqs
-        assert manifest[s].n_tokens == planned[s].n_tokens
+    assert mdf.dtypes == planned.dtypes
+    manifest = sorted(tuple(r) for r in mdf.collect())
+    assert manifest == sorted(tuple(r) for r in planned.collect())
     # straddle rule: total tokens of shard s, excluding its last sequence,
     # stays under the budget (only the final sequence may overhang)
     assigned = sharding.shard_assign(seq, shard_tokens=st)
@@ -507,6 +518,19 @@ def test_shard_writer_roundtrip(spark, tmp_path):
     import os
     dirs = [d for d in os.listdir(path) if d.startswith("shard=")]
     assert len(dirs) == len(manifest)
+
+
+def test_write_shards_empty_input(spark, tmp_path):
+    """Zero rows in: the write succeeds and the manifest read back from
+    the output holds no rows, with ``shard`` still a bigint."""
+    from ulp_spark import fixtures
+    from ulp_spark.operators import sharding
+
+    seq = fixtures.sequences(spark, 10).select("doc_id", "n_tok").limit(0)
+    mdf = sharding.write_shards(seq, str(tmp_path / "shards"),
+                                shard_tokens=1000)
+    assert dict(mdf.dtypes)["shard"] == "bigint"
+    assert mdf.collect() == []
 
 
 def test_write_shards_evaluates_input_once(spark, tmp_path):
@@ -534,12 +558,10 @@ def test_write_shards_evaluates_input_once(spark, tmp_path):
 def test_write_shards_job_budget(spark, tmp_path, count_jobs):
     """Jobs for one write_shards call over pack_sequences output (a join
     and a groupBy(bin_id) upstream), and for collecting its manifest.
-    With the input pinned the call runs 8 jobs (10 while the prefix sum
-    placed its range boundaries with a count and a separate sample job);
-    seaming the output instead ran 19, because each prefix-sum pass
-    re-ran the upstream shuffles.  The manifest reads 3 (2 when the
-    output was pinned): it re-runs the window's narrow projection over
-    the pin."""
+    The call pins its input, so the upstream shuffles run once, and runs
+    8 jobs (each shuffle map stage counts as one) for the pin, the prefix
+    sum's sample and totals, and the write.  Collecting the manifest runs
+    2: it aggregates the (order, length) columns of the written files."""
     from ulp_spark import fixtures
     from ulp_spark.operators import packing, sharding
 
@@ -553,7 +575,7 @@ def test_write_shards_job_budget(spark, tmp_path, count_jobs):
     got, collect = count_jobs(manifest.collect)
     assert sum(r.n_seqs for r in got) == rows.count()
     assert call <= 8, call
-    assert call + collect <= 11, (call, collect)
+    assert call + collect <= 10, (call, collect)
 
 
 def test_run_training_data_script_writes_token_shards(tmp_path):
@@ -1011,35 +1033,21 @@ def test_every_package_def_is_referenced():
     assert offenders == [], "\n".join(offenders)
 
 
-# Options a non-test caller never sets, kept on purpose (reason each).
-_OPTION_ALLOW = {
-    # safety audit: re-reads the written shards against the manifest
-    "ulp_spark/operators/sharding.py:write_shards(verify)",
-    # test seams that reach a production path at test scale
-    "ulp_spark/operators/dedup.py:connected_components(max_iter)",
-    "ulp_spark/operators/packing.py:global_cumsum(partitions)",
-    "ulp_spark/fixtures.py:clustered_embeddings(partitions)",
-    "ulp_spark/fixtures.py:lined_docs(partitions)",
-    # the cap and its coverage report only bite past 200k distinct words
-    "ulp_spark/operators/vocab.py:bpe_train(max_words)",
-}
-
-
 def test_every_option_has_a_non_test_caller():
     """Knob guard: non-test callers give every optional parameter of a
     public top-level function in ulp_spark/ at least two distinct values,
-    and at least one of those calls leaves it out, or it is exempt or on
-    the allow-list above.  With one value in use, the option is a
-    constant; with its default unused, it is a required parameter.  The
-    callers are the calls in ``_caller_files`` (child scripts included)
-    that ``_Calls`` resolves.  A call that leaves an option out passes
-    its default; a literal or a module-level constant is its value; a
-    bare name that is an option of the enclosing public package function
-    passes that option's values (and its exemption); any other
-    expression, and any ``*``/``**`` expansion, is a value of its own (an
-    expansion may also leave the option out).  An option bench.py or a
-    perfbench/ file passes explicitly is exempt: those files pin the
-    benchmark."""
+    and at least one of those calls leaves it out, or it is exempt.  With
+    one value in use, the option is a constant; with its default unused,
+    it is a required parameter.  The callers are the calls in
+    ``_caller_files`` (child scripts included) that ``_Calls`` resolves.
+    A call that leaves an option out passes its default; a literal or a
+    module-level constant is its value; a bare name that is an option of
+    the enclosing public package function passes that option's values
+    (and its exemption); any other expression, and any ``*``/``**``
+    expansion, is a value of its own (an expansion may also leave the
+    option out).  An option bench.py or a perfbench/ file passes
+    explicitly is exempt: those files pin the benchmark, and nothing
+    else is."""
     import ast
     import pathlib
 
@@ -1128,12 +1136,9 @@ def test_every_option_has_a_non_test_caller():
     print(f"{len(options)} optional parameters, "
           f"{sum(n >= 2 for n in n_values.values())} given two or more "
           f"values by non-test callers, {len(exempt)} exempt (passed by "
-          f"bench.py or perfbench/), {len(_OPTION_ALLOW)} allow-listed")
-    offenders = [t for t in single if t not in _OPTION_ALLOW]
-    assert offenders == [], (f"{len(offenders)} options with one value "
-                             f"or an unused default:\n" + "\n".join(offenders))
-    # an allow-list entry must still name an option the rule flags
-    assert sorted(_OPTION_ALLOW - set(single)) == []
+          f"bench.py or perfbench/)")
+    assert single == [], (f"{len(single)} options with one value "
+                          f"or an unused default:\n" + "\n".join(single))
 
 
 def test_benchmark_calls_still_bind():
@@ -1197,16 +1202,18 @@ def test_ivf_tuned_recall_meets_target_on_clusterable_fixture(spark):
     assert res["n_probe"] <= 4, res
 
 
-def test_clustered_embeddings_deterministic_and_clustered(spark):
+def test_clustered_embeddings_deterministic_and_clustered(spark,
+                                                          monkeypatch):
     """The T4 fixture: partition-invariant bits; same-cluster vectors are
     geometrically close (cos > 0.6) and cross-cluster far (cos < 0.4)."""
     from ulp_spark import fixtures
     from ulp_spark.operators import similarity as S
 
-    a = fixtures.clustered_embeddings(spark, 200, dim=16, clusters=5,
-                                      partitions=3)
-    b = fixtures.clustered_embeddings(spark, 200, dim=16, clusters=5,
-                                      partitions=7)
+    _patch_parallelism(monkeypatch, 3)
+    a = fixtures.clustered_embeddings(spark, 200, dim=16, clusters=5)
+    _patch_parallelism(monkeypatch, 7)
+    b = fixtures.clustered_embeddings(spark, 200, dim=16, clusters=5)
+    assert (a.rdd.getNumPartitions(), b.rdd.getNumPartitions()) == (3, 7)
     ra = {r.vec_id: (r.label, tuple(r.embedding)) for r in a.collect()}
     rb = {r.vec_id: (r.label, tuple(r.embedding)) for r in b.collect()}
     assert ra == rb
@@ -2431,7 +2438,7 @@ def test_lined_docs_fixture_bitwise_twin(spark):
     from ulp_spark import fixtures
 
     got = {r.doc_id: r.text for r in
-           fixtures.lined_docs(spark, 300, partitions=7).collect()}
+           fixtures.lined_docs(spark, 300).collect()}
     con = duckdb.connect()
     exp = dict(con.sql(fixtures.lined_docs_sql(300)).fetchall())
     assert got == exp
@@ -2529,13 +2536,14 @@ def test_bpe_train_apply_roundtrip(spark):
         assert "".join(pieces[t] for t in r.tokens) == r.doc_id
 
 
-def test_bpe_train_max_words_cap_is_loud(spark):
+def test_bpe_train_max_words_cap_is_loud(spark, monkeypatch):
     """Capping the trained vocabulary reports exactly what was dropped."""
     from ulp_spark import fixtures
     from ulp_spark.operators import vocab
 
     d = fixtures.lined_docs(spark, 300)
-    trained = vocab.bpe_train(d, "text", n_merges=3, max_words=2)
+    monkeypatch.setattr(vocab, "BPE_MAX_WORDS", 2)
+    trained = vocab.bpe_train(d, "text", n_merges=3)
     assert trained["n_words_trained"] == 2
     assert trained["n_words_total"] > 2
     assert 0.0 < trained["freq_mass_kept"] < 1.0
@@ -3319,7 +3327,7 @@ def test_connected_components_scrambled_path(spark, monkeypatch):
     """Region-chain regression: a PATH whose ids are md5-scrambled has
     ~n/3 local-min regions, the structure where min-label propagation
     moves the global min one region per round; the alternating-star
-    algorithm must close it within max_iter.  Every pin carries real
+    algorithm must close it within MAX_ROUNDS.  Every pin carries real
     size stats: a pin's estimated size multiplying round over round
     (19 to 25 digits here without the persist) is what once wedged
     Catalyst's stats arithmetic."""

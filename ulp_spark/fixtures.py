@@ -75,7 +75,6 @@ def sequences(spark: SparkSession, n: int, partitions: int | None = None) -> Dat
 def clustered_embeddings(
     spark: SparkSession, n: int, dim: int = EMB_DIM,
     clusters: int = EMB_CLUSTERS,
-    partitions: int | None = None,
 ) -> DataFrame:
     """T4: deterministic CLUSTERABLE embeddings (vec_id, embedding, label).
 
@@ -94,8 +93,7 @@ def clustered_embeddings(
     scale or partitioning.  The centroid grid uses mod 23 (not 19) so no
     two of the first 20 clusters share a centroid.
     """
-    df = spark.range(0, n, 1,
-                     partitions or spark.sparkContext.defaultParallelism)
+    df = spark.range(0, n)
     return df.select(
         F.col("id").alias("vec_id"),
         F.expr(
@@ -282,8 +280,7 @@ def pattern_dict_sql() -> str:
 _LINE_WORDS = ["alpha", "beta", "gamma", "delta", "epsilon"]
 
 
-def lined_docs(spark: SparkSession, n: int,
-               partitions: int | None = None) -> DataFrame:
+def lined_docs(spark: SparkSession, n: int) -> DataFrame:
     """(doc_id, text) where text has newline-separated LINES — the unit the
     C4 line-level rules operate on (the sf documents tables are single-line
     by construction, so they cannot exercise a line filter).
@@ -295,8 +292,7 @@ def lined_docs(spark: SparkSession, n: int,
     disjoint-but-overlapping line subsets.  Pure column expressions:
     same bits at any scale or partitioning."""
     words_arr = ", ".join(f"'{w}'" for w in _LINE_WORDS)
-    df = spark.range(0, n, 1,
-                     partitions or spark.sparkContext.defaultParallelism)
+    df = spark.range(0, n)
     # gate the 0-word case: sequence(1, 0) is DESCENDING [1, 0] in Spark
     # (the recorded trap), where DuckDB's range(1, 1) is empty
     nw = "(id*3 + j*5) % 8"

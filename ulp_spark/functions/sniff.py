@@ -161,7 +161,7 @@ def sniff_code(e: str) -> str:
     digit_start = f"(instr({lit('0123456789')}, substring({e}, 1, 1)) > 0)"
     # every dotted-quad contains '.', so digit-start non-dotted values
     # (timestamps, plain ints) skip the IPv4 regex — same superset-gate
-    # rule as the other gates, classification unchanged (r6)
+    # rule as the other gates, classification unchanged
     has_dot = f"(instr({e}, {lit('.')}) > 0)"
     # '-' is not in the IPv6 alphabet, so RFC3339 timestamps (very common in
     # log fields, always colon-bearing) must not reach the 11-alternation

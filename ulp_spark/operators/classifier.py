@@ -65,7 +65,7 @@ def _feature_rows(
     ``id_col`` is None — over hashed word uni+bigrams, with the token
     array STAGED as a real column so the bigram lambda reads an attribute
     instead of re-splitting the text per gram (measured 14.7 s -> ~4 s
-    on the dsir bench corpus, r6).  Empty/null text yields one row with a
+    on the dsir bench corpus).  Empty/null text yields one row with a
     NULL bucket (explode_outer)."""
     keep = [id_col] if id_col is not None else []
     staged = frame.select(

@@ -57,7 +57,7 @@ def word_grams(tokens: Column, k: int) -> Column:
     Windows are built from k ``element_at`` reads instead of
     ``slice``+join: slice allocates a fresh array per gram, and the
     per-gram allocation dominated the whole repetition battery (measured
-    24 s -> 2 s building g2+g3 over the 500k-doc bench corpus, r6).
+    24 s -> 2 s building g2+g3 over the 500k-doc bench corpus).
     Every window is full (the sequence bound stops at n-k+1), so the
     joined strings are identical.  Pass an ATTRIBUTE for ``tokens`` on
     corpus-scale data (the reused-expression trap)."""
@@ -227,7 +227,7 @@ def passage_dup_stats(
     path has one consumer and needs no seam.
     """
     # stage the token array (one split/lower pass), THEN chunk-hash over
-    # the attribute — the inline form re-splits the text per chunk (r6)
+    # the attribute — the inline form re-splits the text per chunk
     exploded = df.select(
         F.col(id_col),
         word_tokens(F.col(text_col)).alias("__toks"),

@@ -42,6 +42,7 @@ MAX_BUCKET = 1000     # skew cap: larger LSH buckets / postings form no pairs
 JACCARD_MIN = 0.8     # verified near-dup threshold on shingle sets
 WINNOW_W = 8          # winnowing window, in k-grams
 WINNOW_MIN_SHARED = 2  # fingerprints a winnow candidate pair must share
+MAX_ROUNDS = 25       # star rounds connected_components runs before it raises
 
 
 # --------------------------------------------------------------------------
@@ -256,7 +257,7 @@ def jaccard_distinct(a: Column, b: Column) -> Column:
 # dedup clustering: connected components over candidate pairs
 # --------------------------------------------------------------------------
 
-def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """``(id, comp_id)`` for every node in ``pairs``, where ``comp_id`` is
     the minimum node id in the node's connected component — the canonical
     document of a near-duplicate cluster.
@@ -338,7 +339,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
                 .filter(u != v)
                 .distinct())
 
-    for _ in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         new, n_new = _pin(_small_star(_large_star(edges)))
         # exact fixed-point probe: same edge count AND nothing in the
         # difference (stops at the first row; runs only when counts agree)
@@ -348,10 +349,10 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
         edges, n_edges = new, n_new
     else:
         # Kiveris et al. bound rounds by O(log^2 n) and observe single
-        # digits in practice; hitting max_iter means the star fixpoint was
+        # digits in practice; hitting MAX_ROUNDS means the star fixpoint was
         # NOT reached — fail loudly rather than under-merging groups.
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds")
+            f"connected_components did not converge in {MAX_ROUNDS} rounds")
     # nodes come from the raw pin (self-pairs included), so a node whose
     # only pair is reflexive still gets a (node, node) row — the
     # contract is a label for EVERY node in `pairs`.  At the star fixpoint
@@ -424,7 +425,7 @@ def _winnow_from_hashes(h: Column) -> Column:
     w = WINNOW_W
     n = F.size(h)
     # least(element_at...) instead of array_min(slice...): slice allocates
-    # a w-element array per window (the word_grams allocation win, r6);
+    # a w-element array per window (see curation.word_grams);
     # windows are full by the sequence bound, so the minima are identical
     wins = F.when(
         n >= w,

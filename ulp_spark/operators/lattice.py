@@ -143,8 +143,8 @@ def json_runtime_code(v: str) -> str:
     re-stringified and sniffed (JSON number ``0`` is Int, not the
     ``"0"``-string Null quirk; ``1`` is Int, not Bool).  Only actual JSON
     strings run the content battery.  Variant preserves quotedness, which
-    ``from_json(map<string,string>)`` destroyed (the round-1 bias this
-    replaces)."""
+    ``from_json(map<string,string>)`` destroys: a string map cannot tell
+    JSON ``0`` from ``"0"``."""
     st = f"schema_of_variant({v})"
     # serde_json Number rule (the reference's runtime): Int iff the value
     # fits i64 OR u64, else f64 -> Float.  Spark variant types u64-range

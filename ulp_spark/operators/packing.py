@@ -17,16 +17,17 @@ the two-phase prefix sum every parallel-scan paper uses:
     3. per-bucket totals (tiny aggregate) -> driver prefix -> joined
        back as a broadcast base offset.
 
-Round-4 redesign (VERDICT r3 #7): the previous version stamped
-``spark_partition_id()`` on a ``repartitionByRange`` + localCheckpoint,
-which cost TWO full-data exchanges — the range shuffle, then a second
-hash exchange for the window because the checkpointed RDD reports
-UnknownPartitioning.  Deriving ``__pid`` from the DATA (like Spark's own
-RangePartitioner: sample keys, pick boundaries, bucket by comparison)
-makes the id deterministic across actions with no checkpoint and no
-range shuffle: the totals pass is a map-side-combined aggregate whose
-exchange carries ``n_part`` rows, and the final pass pays the ONE
-full-data exchange the window genuinely needs.  Boundary quality only
+The bucket id is derived from the data, not stamped as
+``spark_partition_id()`` on a ``repartitionByRange``: a stamped id needs
+a localCheckpoint to stay stable across actions and costs TWO full-data
+exchanges — the range shuffle, then a second hash exchange for the
+window because the checkpointed RDD reports UnknownPartitioning.
+Deriving ``__pid`` from the DATA (like Spark's own RangePartitioner:
+sample keys, pick boundaries, bucket by comparison) makes the id
+deterministic across actions with no checkpoint and no range shuffle:
+the totals pass is a map-side-combined aggregate whose exchange carries
+``n_part`` rows, and the final pass pays the ONE full-data exchange the
+window genuinely needs.  Boundary quality only
 affects load balance, never correctness — any monotone bucketing yields
 the exact prefix sum.  Driver memory is O(n_part * 100) sampled keys.
 
@@ -73,19 +74,19 @@ def _range_boundaries(df: DataFrame, order_col: str, n_part: int) -> list:
 
 def global_cumsum(
     df: DataFrame, order_col: str, val_col: str,
-    out_col: str = "tok_offset", partitions: int | None = None,
+    out_col: str = "tok_offset",
 ) -> DataFrame:
     """Adds ``out_col`` = exclusive prefix sum of ``val_col`` in
     ``order_col`` order (i.e. the global offset where this row starts).
 
     ``__pid`` is a pure expression over ``order_col`` (bucket index
     against broadcast sorted boundaries), so the totals aggregate and the
-    final window agree by construction — the AQE re-plan hazard that
-    forced the old localCheckpoint cannot occur, and the plan's only
+    final window agree by construction — no checkpoint is needed to keep
+    them in step across AQE re-plans, and the plan's only
     full-data exchange is the window's hash partition by ``__pid``."""
     from pyspark.sql import Window
 
-    n_part = partitions or df.sparkSession.sparkContext.defaultParallelism
+    n_part = df.sparkSession.sparkContext.defaultParallelism
     bounds = _range_boundaries(df, order_col, n_part)
     if bounds:
         barr = F.array(*[F.lit(b) for b in bounds])
@@ -197,7 +198,7 @@ def pack_bins(
                     # own bin, never co-packed; flagged for the caller.
                     # remaining = -1 (not 0) sentinels the bin as closed
                     # so a zero-token document's `rem >= t` probe can
-                    # never land in it (ADVICE r4)
+                    # never land in it
                     remaining.append(-1)
                     slot = len(remaining) - 1
                 else:
@@ -236,7 +237,7 @@ def bin_stats(packed: DataFrame, capacity: int = CHUNK) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_bins"),
         F.sum("over").cast("bigint").alias("n_oversize"),
         # every-bin-oversize -> 0.0 by definition, not a NULL that reads
-        # as missing data downstream (ADVICE r4)
+        # as missing data downstream
         F.when(n_reg > 0,
                F.round(F.sum(F.when(reg, F.col("toks")).otherwise(0))
                        / (n_reg * capacity), 6))

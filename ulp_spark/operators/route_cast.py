@@ -89,8 +89,7 @@ def cast_single_pass(
     # so e.g. a DATE-only field — typically the timestamp, whose
     # digit-leading values pay the full numeric battery — skips all three
     # eager columns.  Identical outputs: unused columns never reached the
-    # plan's cast branches anyway (r6; guide §2.3 "don't compute what you
-    # throw away").
+    # plan's cast branches anyway, so computing them was pure waste.
     _HELPER_TARGETS = {sniff.BOOL, sniff.INT, sniff.FLOAT, sniff.STR}
     field_targets = {
         f: sorted({s[f] for s in route_schemas.values()

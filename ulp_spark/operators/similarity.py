@@ -107,7 +107,7 @@ def ivf_centroids_trained(
 ) -> list[list[float]]:
     """IVF training: deterministic seeds + ``rounds`` Lloyd iterations.
 
-    Default ``rounds`` is 5 (VERDICT r3 #4: measured +0.06 recall@10 over
+    Default ``rounds`` is 5 (measured +0.06 recall@10 over
     one round at identical scan cost); pass ``rounds=1`` for the cheap
     single-pass form (the driver-gated fixture queries pin that variant
     explicitly so their DuckDB oracles stay one CTE deep).  For
@@ -156,8 +156,7 @@ def ivf_train_spherical(
     production quantizer-training pattern (FAISS trains its coarse
     quantizer on a bounded sample, then assignment is the distributed
     step).  Two quality upgrades over :func:`ivf_centroids_trained`'s
-    first-k-ids + mean-update Lloyd, both aimed at recall-per-cell-probed
-    (VERDICT r3 #4):
+    first-k-ids + mean-update Lloyd, both aimed at recall-per-cell-probed:
 
     * farthest-point seeding: seeds spread across the data instead of
       whatever the k smallest ids happen to be (first seed = smallest id,
@@ -255,8 +254,8 @@ def ivf_assign(vec: Column, centroids: list[list[float]],
     a driver-computed literal (``_py_norm`` — bit-identical to the JVM
     fold it replaces, so the rounded cosines and hence the cell ids are
     unchanged), and ``vec_norm`` is the row's ``norm(vec)``, staged as a
-    column by the caller so it is not re-folded k times (the r6
-    measurement: 3x on the assignment pass at k=32, dim=64).
+    column by the caller so it is not re-folded k times (measured 3x
+    faster on the assignment pass at k=32, dim=64).
 
     The centroids ride as ONE array-of-(vector, norm)-structs literal and
     the cosines come from a ``transform`` over it, instead of k unrolled
@@ -321,11 +320,11 @@ def ann_recall(
     Methods: ``ivf_p{n}`` (n_probe cells by centroid cosine), ``srp``
     (the query's SRP bucket) and ``srp_mp1`` (multi-probe: every bucket
     within Hamming 1 of the query signature — recall@10 0.15 -> 0.26 at
-    1.4% -> 7.8% of the table scanned, BENCH.md round 3).  Reference
+    1.4% -> 7.8% of the table scanned, recorded in BENCH.md).  Reference
     analog: none (engine breadth, SURVEY §2.6); this is the evidence the
     ANN stack is useful, not just self-consistent.
 
-    Physical shape (r6): the whole evaluation reads ONE seamed feature
+    Physical shape: the whole evaluation reads ONE seamed feature
     table (id, vec, row norm, ivf cell, srp bucket) — before the seam the
     final union's single collect re-evaluated the cell assignment / SRP
     signature / brute-force truth subtrees once per method branch (the

@@ -87,8 +87,9 @@ def token_grams(tokens: Column) -> Column:
     engines."""
     k = GRAM
     n = F.size(tokens)
-    # element_at instead of slice+transform (the word_grams allocation
-    # win, r6): windows are full by the sequence bound, identical md5 keys
+    # element_at instead of slice+transform (slice allocates an array per
+    # window, see curation.word_grams): windows are full by the sequence
+    # bound, identical md5 keys
     windows = F.when(
         n >= k,
         F.transform(
@@ -1233,8 +1234,9 @@ def token_shingle_hashes(tokens: Column) -> Column:
 
     k = GRAM
     n = F.size(tokens)
-    # element_at instead of slice+transform (the word_grams allocation
-    # win, r6): every window is full by the sequence bound, so the CSV
+    # element_at instead of slice+transform (slice allocates an array per
+    # window, see curation.word_grams): every window is full by the
+    # sequence bound, so the CSV
     # strings — and hence the md5 values — are identical
     csvs = F.when(
         n >= k,

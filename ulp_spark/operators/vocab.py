@@ -30,6 +30,7 @@ from ulp_spark.operators.curation import word_tokens, word_tokens_sql
 
 BPE_MIN_COUNT = 2  # a pair seen fewer times than this ends bpe training
 BPE_TOP_MERGES = 20  # merges bpe_top_merges returns by default
+BPE_MAX_WORDS = 200_000  # most frequent words bpe_train learns merges on
 
 
 def word_counts(df: DataFrame, text_col: str) -> DataFrame:
@@ -102,7 +103,7 @@ def bpe_top_merges_sql(table: str, text_col: str) -> str:
 
 
 def bpe_train(
-    df: DataFrame, text_col: str, n_merges: int, max_words: int = 200_000,
+    df: DataFrame, text_col: str, n_merges: int,
 ) -> dict:
     """Learn an ordered BPE merge list from the corpus — the full
     iterative loop, closing the learn -> apply chain: ``bpe_top_merges``
@@ -115,7 +116,7 @@ def bpe_train(
     corpus-scale work is ONE distributed word-count aggregate — map-side
     partial combine collapses 100 TB of text to its vocabulary on the
     first exchange — plus a TakeOrderedAndProject keeping the
-    ``max_words`` most frequent words; the merge recurrence then runs on
+    ``BPE_MAX_WORDS`` most frequent words; the merge recurrence then runs on
     that bounded driver table (pair counts updated incrementally, only
     words containing the merged pair are revisited).  The recurrence is
     inherently sequential (merge i+1's statistics depend on merge i
@@ -132,7 +133,7 @@ def bpe_train(
     "n_words_trained", "n_words_total", "freq_mass_kept"}`` — ``vocab``
     is base characters (sorted) then merged symbols in rank order,
     first-occurrence deduplicated, ready for ``bpe_tokenize``; the two
-    coverage numbers make the ``max_words`` cap loud, never silent.
+    coverage numbers make the ``BPE_MAX_WORDS`` cap loud, never silent.
     """
     if n_merges < 0:
         raise ValueError("n_merges must be >= 0")
@@ -141,7 +142,7 @@ def bpe_train(
                  F.sum("n").alias("m")).collect()[0]
     n_words_total, mass_total = tot["w"] or 0, tot["m"] or 0
     rows = [(r["word"], r["n"]) for r in
-            wc.orderBy(F.col("n").desc(), "word").limit(max_words)
+            wc.orderBy(F.col("n").desc(), "word").limit(BPE_MAX_WORDS)
             .collect()]
     mass_kept = sum(n for _, n in rows)
     merges, vocab = bpe_merge_loop(rows, n_merges)
